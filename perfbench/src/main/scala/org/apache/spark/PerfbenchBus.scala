@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Lets the benchmark wait until Spark's listener bus has delivered every
+  * event posted so far, so counters read at a boundary are complete. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
