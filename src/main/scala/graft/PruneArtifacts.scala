@@ -81,7 +81,7 @@ object PruneArtifacts {
         try {
           // the live format keys come from THE SAME BUILD this reaper
           // ships in, so "current" can never drift from what writers
-          // record (Pipeline.artifactMeta reads the same map)
+          // record (Artifacts.model / frame read the same map)
           val liveKeys =
             if (keepDeadKeys) Map.empty[String, String]
             else graft.queries.Pipeline.liveArtifactKeys

@@ -96,6 +96,14 @@ object Verify {
         s"(runMain graft.PruneArtifacts $aRoot --apply to reap)")
     } catch { case e if scala.util.control.NonFatal(e) =>
       System.err.println(s"[verify] prune dry-run failed: ${e.getMessage}") }
+    // which artifact path actually ran: per-family entry-point outcomes
+    // (hit / build / commit_failed / read_fallback:<class> / unstamped)
+    val outcomes = graft.operators.Artifacts.outcomeCounts.groupBy(_._1._1)
+      .toSeq.sortBy(_._1).map { case (family, counts) =>
+        family + " " + counts.toSeq.sortBy(_._1._2)
+          .map { case ((_, outcome), n) => s"$outcome=$n" }.mkString(" ")
+      }
+    System.err.println(s"[verify] artifact outcomes: ${outcomes.mkString("; ")}")
     spark.stop()
     // Exit HARD: round 7's driver compare hit transient OOMs (1–2 MB
     // mallocs failing) on 4 queries while this JVM's heap could still be

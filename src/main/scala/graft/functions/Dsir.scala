@@ -63,8 +63,6 @@ final class DsirModel(val lrFx: Array[Long], val buckets: Int)
 }
 
 object DsirModel {
-  private val HexDigits = "0123456789abcdef"
-
   /** `conv(substring(md5(gram), 1, 15), 16, 10) % buckets` in JVM bytes:
     * fold the first 15 hex nibbles of the UTF-8 md5 into a 60-bit long.
     * `md` is reset by `digest`; reused across grams of one row. */
@@ -80,14 +78,6 @@ object DsirModel {
       i += 1
     }
     v % buckets
-  }
-
-  /** Self-check helper for specs: the hex the fold consumes. */
-  private[graft] def md5Hex15(gram: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(gram.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(8).flatMap(b => Seq(HexDigits((b >> 4) & 0xf), HexDigits(b & 0xf)))
-      .mkString.take(15)
   }
 }
 

@@ -1,25 +1,44 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The parquet job-success-marker protocol shared by every persisted
-  * artifact (IVF centroids, int8 vector indexes, BPE merge tables, the
-  * dataset-artifact tokenization tables): the `_SUCCESS` file a completed
-  * parquet job writes is the artifact's completeness CERTIFICATE —
-  * probing it (never the bare directory) makes a half-written artifact
-  * read as "missing", so overwrite-mode retrains heal crashes instead of
-  * later readers choking on a husk. Resolved through Hadoop's FileSystem
-  * so hdfs:///s3:// artifact locations behave exactly like local disk.
+/** Persisted, stamp-keyed artifacts: derived tables and trained models a
+  * query builds once per dataset and later runs read back. Every
+  * artifact family goes through one entry point, in two shapes:
+  * [[model]] for a driver-side value and [[frame]] for a DataFrame.
+  * Given a family, a dataset dir and the table the artifact derives
+  * from, plus the family's `build` / `write(value, tmp)` /
+  * `read(path)`, it owns the whole protocol:
+  *   - the stamp: [[tableStamp]] of `dir/table`, so a rewritten table
+  *     re-derives instead of serving stale data;
+  *   - the path: `root/family/md5(($root,$dir,$stamp):$key)`, where
+  *     `root` is [[Ivf.indexRoot]] and `key` the family's format key
+  *     from the caller's registry — the same map [[prune]] takes as
+  *     `liveKeys`, so the key a writer records can never drift from the
+  *     one the reaper treats as live;
+  *   - the in-JVM memo, with builds serialized per path;
+  *   - the commit ([[atomicCommit]], with a [[MetaFile]] provenance
+  *     record) and the read-back.
   *
-  * Since round 15 writes COMMIT ATOMICALLY ([[atomicCommit]]): the build
-  * lands in a dot-prefixed sibling temp directory and is renamed into
-  * place only once its own certificate exists, so two fleet JVMs racing
-  * the same uncertified path can no longer interleave delete-then-write
-  * and certify a mixed directory — exactly one writer's rename wins and
-  * the loser discards its temp. Each committed artifact also carries a
-  * [[MetaFile]] provenance record (family, dataset dir, stamped table,
-  * stamp, format key) that [[prune]] uses to tell live stamps from dead
-  * ones when garbage-collecting an artifact root. */
+  * Policy. An artifact is never the reason a query fails:
+  *   - stamp 0 (the table can't be fingerprinted): never persisted or
+  *     read back — a model is memoized in-JVM only, a frame re-builds
+  *     per call;
+  *   - a failed commit (e.g. an unwritable root) serves the inline
+  *     build, and a frame family remembers the failure for the JVM;
+  *   - a committed artifact that fails to read serves the inline build.
+  * Every build is deterministic and round-trips parquet bit-exactly, so
+  * each fallback is value-identical to the artifact it replaces — and
+  * each is counted, per family, in [[outcomeCounts]], so a degraded run
+  * is visible rather than only slower.
+  *
+  * The parquet job-success marker `_SUCCESS` is an artifact's
+  * completeness CERTIFICATE: probing it (never the bare directory) makes
+  * a half-written artifact read as "missing". Writes commit atomically —
+  * into a dot-prefixed sibling temp, renamed into place only once
+  * certified — so two fleet JVMs racing one path never certify a mix.
+  * Everything resolves through Hadoop's FileSystem, so hdfs:/s3a:
+  * artifact roots behave like local disk. */
 object Artifacts {
 
   /** True when `dir/_SUCCESS` exists. A probe must never fail its
@@ -88,7 +107,7 @@ object Artifacts {
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
   /** One Hadoop Configuration per session for [[tableStamp]] — the stamp
-    * runs on every datasetArtifact call of every query, and
+    * runs on every [[model]]/[[frame]] call of every query, and
     * `newHadoopConf()` copies the full Spark conf each time (~10ms: a
     * measurable per-query tax across 160 bench queries). The cached copy
     * is keyed by session IDENTITY so a new session (new fs settings)
@@ -226,10 +245,9 @@ object Artifacts {
         // the SAME deterministic table, so the final state is a
         // certified, equivalent artifact. A reader PLANNING its scan in
         // that one-flap instant catches the FileNotFound and falls back
-        // to its inline build (every caller wraps the DataFrame
-        // CONSTRUCTION in NonFatal → rebuild — footer/listing reads are
-        // eager, so plan-time coverage is what the callers actually
-        // have). A reader already past planning and mid-action would
+        // to its inline build (the entry point's read-back — footer and
+        // listing reads are eager, so plan-time coverage is what it
+        // has). A reader already past planning and mid-action would
         // fail the task instead; that window requires the file set to
         // change between plan and action, which only a concurrent
         // `prune --apply` (not this husk-delete of a dir no certified
@@ -254,6 +272,134 @@ object Artifacts {
           certified(spark, path)
       }
     } catch { case scala.util.control.NonFatal(_) => certified(spark, path) }
+  }
+
+  /** A driver-side model artifact of `family`, derived from
+    * `dir/table`: memoized per path in this JVM, else read back from a
+    * committed artifact (`certified` probes its marker — pass the
+    * family's probe when the marker sits in a subdirectory), else built,
+    * committed through `write(value, tmp)` and returned. See the object
+    * doc for the stamp-0 and fallback policy. */
+  def model[V](spark: SparkSession, keys: Map[String, String], family: String,
+      dir: String, table: String,
+      certified: (SparkSession, String) => Boolean = markerExists)(
+      build: => V)(write: (V, String) => Unit, read: String => V): V = {
+    val site = new Site(spark, family, keys(family), dir, table)
+    var built = false
+    def inline = { built = true; build }
+    val v = site.once[V] {
+      if (site.stamp == 0L) inline
+      else if (certified(spark, site.path)) site.readBack(read, inline)
+      else { val m = inline; site.commit(certified)(write(m, _)); m }
+    }
+    if (site.stamp == 0L) site.note("unstamped")
+    else if (!built) site.note("hit")
+    v
+  }
+
+  /** A DataFrame artifact of `family`, derived from `dir/table`. A
+    * DataFrame is bound to the session that planned it, so the memo
+    * records only that the path committed (or failed to), and every call
+    * re-creates the read. By default the build itself is written and
+    * read back through [[readCachedSchema]]. The default write is
+    * deliberately NOT rebalanced: a multi-file artifact was measured a
+    * net loss at bench scale (32 tiny files → 32-map-task consumer
+    * stages each paying ~150ms of fixed scan cost, q_winnow_pairs 0.77s
+    * → 1.1s+); consumer parallelism comes from the consumers' own
+    * exchanges, and at fleet scale the build's shuffle already writes
+    * many byte-sized files. */
+  def frame(spark: SparkSession, keys: Map[String, String], family: String,
+      dir: String, table: String,
+      write: (DataFrame, String) => Unit =
+        (df, tmp) => df.write.mode("overwrite").parquet(tmp),
+      read: (SparkSession, String) => DataFrame = readCachedSchema)(
+      build: => DataFrame): DataFrame = {
+    val site = new Site(spark, family, keys(family), dir, table)
+    if (site.stamp == 0L) { site.note("unstamped"); return build }
+    var built = false
+    def inline = { built = true; build }
+    val committed = site.once[Boolean](
+      markerExists(spark, site.path) || site.commit(markerExists)(write(inline, _)))
+    val df =
+      if (committed) site.readBack(read(spark, _), inline)
+      else { if (!built) site.note("commit_failed"); inline }
+    if (!built) site.note("hit")
+    df
+  }
+
+  /** Where `family`'s artifact derived from `dir/table` lives under the
+    * session's artifact root. */
+  def path(spark: SparkSession, keys: Map[String, String], family: String,
+      dir: String, table: String): String =
+    pathFor(Ivf.indexRoot(spark), family, keys(family), dir,
+      tableStamp(dir, table))
+
+  // the one path derivation
+  private def pathFor(root: String, family: String, key: String, dir: String,
+      stamp: Long): String = {
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"($root,$dir,$stamp):$key".getBytes("UTF-8"))
+    s"$root/$family/${md5.map("%02x".format(_)).mkString}"
+  }
+
+  /** Calls per (family, outcome) in this JVM. A call records:
+    *   - `hit`: served from the memo or a committed artifact, no build;
+    *   - `build`: built and committed;
+    *   - `commit_failed`: served the inline build because the commit
+    *     failed (a frame family records it on every later call too);
+    *   - `read_fallback:<exception class>`: a committed artifact failed
+    *     to read, so the inline build served;
+    *   - `unstamped`: the table has stamp 0, so nothing persisted. */
+  def outcomeCounts: Map[(String, String), Long] = {
+    import scala.jdk.CollectionConverters._
+    outcomes.asScala.map { case (k, n) => k -> n.sum() }.toMap
+  }
+
+  private val outcomes = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), java.util.concurrent.atomic.LongAdder]()
+  // per path: a model's value, or whether a frame's artifact committed
+  private val memo = scala.collection.concurrent.TrieMap.empty[String, Any]
+  private val buildLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** One entry-point call: the stamp, the one path derivation, and the
+    * memo, commit, read-back and counting around it. */
+  private final class Site(spark: SparkSession, family: String, key: String,
+      dir: String, table: String) {
+    val stamp: Long = tableStamp(dir, table)
+    val path: String = pathFor(Ivf.indexRoot(spark), family, key, dir, stamp)
+
+    def note(outcome: String): Unit =
+      outcomes.computeIfAbsent((family, outcome),
+        _ => new java.util.concurrent.atomic.LongAdder()).increment()
+
+    /** `compute` at most once per path in this JVM. Builds are serialized
+      * per path (TrieMap.getOrElseUpdate only makes the INSERT atomic —
+      * two first callers would both run an expensive build); the monitor
+      * is dropped once the entry exists, so the lock map stays bounded
+      * by in-flight builds. A build that throws memoizes nothing. */
+    def once[A](compute: => A): A = {
+      val lock = buildLocks.computeIfAbsent(path, _ => new Object)
+      val v = lock.synchronized(memo.getOrElseUpdate(path, compute))
+      buildLocks.remove(path)
+      v.asInstanceOf[A]
+    }
+
+    def commit(certified: (SparkSession, String) => Boolean)(
+        write: String => Unit): Boolean = {
+      val ok = atomicCommit(spark, path,
+        Map("family" -> family, "dataset_dir" -> dir, "table" -> table,
+          "stamp" -> stamp.toString, "key" -> key), certified)(write)
+      note(if (ok) "build" else "commit_failed")
+      ok
+    }
+
+    /** Reading plans eagerly (footers, listings), so a corrupt or
+      * vanished artifact throws here and the inline build serves. */
+    def readBack[V](read: String => V, inline: => V): V =
+      try read(path)
+      catch { case scala.util.control.NonFatal(e) =>
+        note(s"read_fallback:${e.getClass.getName}"); inline }
   }
 
   /** One [[prune]] decision: `action` is "delete" (or "would-delete"
@@ -293,7 +439,7 @@ object Artifacts {
     *
     * Operational constraint: do NOT run `--apply` concurrently with
     * readers from an OLDER build whose keys this build's `liveKeys`
-    * would reap. The dataset-artifact read fallback covers PLAN-time
+    * would reap. The entry point's read fallback covers PLAN-time
     * failures (DataFrame construction reads footers eagerly); a reader
     * already mid-action when its dead-key artifact is deleted fails the
     * task with a FileNotFound instead of rebuilding inline. Same-build

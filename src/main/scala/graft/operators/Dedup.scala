@@ -136,18 +136,11 @@ object Dedup {
   def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
     graft.functions.MinHashBandKeys.bandKeys(signature, bands, rowsPerBand)
 
-  /** Candidate pairs from LSH bucket collisions: explode band keys, shuffle
-    * on (band index, band hash), pair up within buckets. Output is distinct
+  /** Candidate pairs from LSH bucket collisions over a precomputed (and
+    * possibly persisted) [[shingleTable]]: explode band keys, shuffle on
+    * (band index, band hash), pair up within buckets. Output is distinct
     * (da < db) pairs — the ONLY pairs that ever see an exact-Jaccard
-    * verification at scale. The whole shingles→signature→band-keys build is
-    * one codegen'd projection, cheap enough to recompute on each self-join
-    * side — no cache barriers (they predated the native expressions). */
-  def lshCandidatePairs(docs: DataFrame, textCol: String, idCol: String,
-      n: Int, k: Int, bands: Int): DataFrame =
-    lshCandidatePairsFrom(shingleTable(docs, textCol, idCol, n), k, bands)
-
-  /** Candidate pairs from a precomputed (and possibly persisted)
-    * [[shingleTable]]. */
+    * verification at scale. */
   def lshCandidatePairsFrom(sh: DataFrame, k: Int, bands: Int): DataFrame = {
     val rowsPerBand = k / bands
     val banded = minhashSignaturesFrom(sh, k)

@@ -59,7 +59,7 @@ object Similarity {
     // repartition does not, and a key that matches the consumer's
     // partitioning requirement satisfies it outright (no second
     // exchange). Same guard: a no-op at scale.
-    val maxPart = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
+    val maxPart = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
     val leafBytes = df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
     if (leafBytes >= BigInt(maxPart) * target) df

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.operators.{Dedup, Ivf, Similarity, TextAnalysis => TA}
+import graft.operators.{Artifacts, Dedup, Ivf, Similarity, TextAnalysis => TA}
 
 /** LLM-training-data pipeline operators (dedup / similarity / text
   * analysis) as driver-checkable queries over the `documents` and
@@ -278,8 +278,8 @@ object Pipeline {
     * collects the pair list for driver union-find), so the persist can be
     * released before returning. */
   private def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_dup_clusters",
-        "lsh-n3k64b16-t0.8:fmt1", Seq("doc_id", "canonical_id")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_dup_clusters", dir,
+        "documents") {
       // the (doc_id, canonical_id) component map is THE dedup artifact a
       // production pipeline persists: five declared queries (clusters /
       // weights / best / clean_corpus / leakage_safe_split) consume it,
@@ -1065,8 +1065,9 @@ object Pipeline {
   /** Bump when [[graft.operators.Ivf.centroids]]' arithmetic changes:
     * versions the persisted-index location so stale disk indexes retrain.
     * fmt4 = DuckDB-cast-faithful toDec (double-multiply + half-away) and
-    * decimal→double via unscaled-int / 10^18. */
-  private val IvfTrainFormat = 4
+    * decimal→double via unscaled-int / 10^18; fmt5 = the shared
+    * [[Artifacts]] path layout (IVF and PQ). */
+  private val IvfTrainFormat = 5
   private val IvfNq = 50; private val IvfK = 5; private val IvfNprobe = 5
   private val SemDedupThreshold = 0.35
   // q_lm_gate keep-threshold: the corpus-median lm_score (~0.0345 on the
@@ -1100,161 +1101,56 @@ object Pipeline {
       .orderBy("qid", "rank")
   }
 
-  /** The trained PQ codebooks as a once-per-dataset artifact — the full
-    * [[sharedCentroids]] treatment (in-JVM cache in front of
-    * `_SUCCESS`-certified parquet keyed by dir + data stamp + geometry +
-    * training format): training is m deterministic k-means runs and
-    * doubles round-trip parquet bit-exactly, so a re-read codebook
-    * reconstructs bit-identically to a retrain, and "train once, deploy"
-    * survives JVM restarts, not just JVM lifetime. A read-only root or a
-    * corrupt artifact degrades to the (bit-identical) retrain; stamp 0 ⇒
-    * in-JVM only (the sharedPcaModel rule). IvfTrainFormat busts
-    * persisted books when the shared k-means arithmetic changes. */
-  private val codebookCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, String, Long, Int, Int, Int), Seq[Seq[Seq[Double]]]]
+  /** The trained PQ codebooks as a once-per-dataset model artifact:
+    * training is m deterministic k-means runs and doubles round-trip
+    * parquet bit-exactly, so a re-read codebook reconstructs
+    * bit-identically to a retrain, and "train once, deploy" survives JVM
+    * restarts. IvfTrainFormat busts persisted books when the shared
+    * k-means arithmetic changes. */
   private def sharedCodebooks(b: DataFrame, dir: String): Seq[Seq[Seq[Double]]] = {
     val spark = b.sparkSession
-    val root = Ivf.indexRoot(spark)
-    val stamp = embStamp(dir)
-    val key = (root, dir, stamp, PqM, PqK, PqIters)
-    val canPersist = stamp != 0L
-    onceBy(codebookCache, key, {
-      val path = s"$root/graft_pq_books/${md5Hex(s"$key:fmt$IvfTrainFormat")}"
-      val persisted =
-        if (canPersist && graft.operators.Pq.booksExist(spark, path))
-          try Some(graft.operators.Pq.readBooks(spark, path))
-          catch { case scala.util.control.NonFatal(_) => None }
-        else None
-      persisted.getOrElse {
-        val books = graft.operators.Pq.trainCodebooks(b, PqM, PqK, PqIters)
-        if (canPersist)
-          graft.operators.Artifacts.atomicCommit(spark, path,
-              artifactMeta("graft_pq_books", dir, "embeddings", stamp),
-              certified = graft.operators.Pq.booksExist) { tmp =>
-            graft.operators.Pq.writeBooks(spark, books, tmp)
-          }
-        books
-      }
-    })
+    Artifacts.model(spark, liveArtifactKeys, "graft_pq_books", dir,
+        "embeddings", graft.operators.Pq.booksExist)(
+        graft.operators.Pq.trainCodebooks(b, PqM, PqK, PqIters))(
+      graft.operators.Pq.writeBooks(spark, _, _),
+      graft.operators.Pq.readBooks(spark, _))
   }
 
   /** Train-once, reuse-forever: the ANN query and the SemDeDup query run
     * the same deterministic k-means over the same table, so the trained
-    * index is PERSISTED as parquet ([[Ivf.writeIndex]] — the
-    * [[graft.operators.Dedup.signatureIndex]] treatment) keyed by
-    * (dir, data stamp, nlist, iters), and every later run — including
-    * after a JVM restart — reads the centroids back instead of
-    * retraining. Training is deterministic and doubles round-trip parquet
-    * bit-exactly, so a re-read index is bit-identical to a retrain. The
-    * stamp is the embeddings table's max file mtime + file count, so a
-    * rewritten table at the same path retrains instead of silently
-    * reusing stale centroids; a TrieMap L1 avoids re-reading the (tiny)
-    * centroid parquet within one JVM. */
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long, Int, Int), Seq[Seq[Double]]]
-  private def embStamp(dir: String): Long = tableStamp(dir, "embeddings")
-  // delegated so the stamp arithmetic and the artifact reaper's
-  // (Artifacts.prune) re-fingerprint can never drift apart
-  private def tableStamp(dir: String, table: String): Long =
-    graft.operators.Artifacts.tableStamp(dir, table)
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
+    * centroids are a model artifact ([[Ivf.writeCentroids]]) and every
+    * later run — including after a JVM restart — reads them back instead
+    * of retraining. Doubles round-trip parquet bit-exactly, so a re-read
+    * index is bit-identical to a retrain. Centroids ONLY: assignment
+    * from baked-in centroids is a narrow projection, so persisting the
+    * assignment map would buy nothing for a corpus scan + write. */
   private def sharedCentroids(b: DataFrame, dir: String): Seq[Seq[Double]] = {
     val spark = b.sparkSession
-    // root resolved from spark conf ([[Ivf.indexRoot]]) so a deployment
-    // holds its restart-safe indexes on shared storage, not a local tmpdir
-    val root = Ivf.indexRoot(spark)
-    val stamp = embStamp(dir)
-    val key = (root, dir, stamp, IvfNlist, IvfIters)
-    // stamp 0 = the data could not be fingerprinted (non-local dir,
-    // walk error): persisting under an unknown stamp would serve a
-    // stale index FOREVER after a data rewrite — in-JVM cache only
-    // then (the sharedPcaModel rule, applied fleet-wide)
-    val canPersist = stamp != 0L
-    onceBy(centroidCache, key, {
-      // IvfTrainFormat busts PERSISTED indexes when the training
-      // arithmetic itself changes (fmt2: exact-binary toDec) — the data
-      // stamp can't see a code change, and a stale on-disk index would
-      // silently override the fix for every later JVM
-      val idxPath = s"$root/graft_ivf_index/${md5Hex(s"$key:fmt$IvfTrainFormat")}"
-      // a corrupt persisted index must degrade to a retrain, not fail the
-      // query — training is deterministic, so the fallback is bit-identical
-      val persisted =
-        if (canPersist && Ivf.indexExists(spark, idxPath))
-          try Some(Ivf.readCentroids(spark, idxPath))
-          catch { case scala.util.control.NonFatal(_) => None }
-        else None
-      persisted.getOrElse {
-        val cents = Ivf.centroids(b, IvfNlist, IvfIters)
-        // centroids ONLY: this cache never reads the assignment map back,
-        // and assignment from baked-in centroids is a narrow projection —
-        // persisting it here would buy nothing for a corpus scan + write.
-        // Best-effort: a read-only index root must not fail the query.
-        // Atomic temp-dir+rename commit, certified by the centroid
-        // subdir's marker (the Ivf.indexExists probe).
-        if (canPersist)
-          graft.operators.Artifacts.atomicCommit(spark, idxPath,
-              artifactMeta("graft_ivf_index", dir, "embeddings", stamp),
-              certified = Ivf.indexExists) { tmp =>
-            Ivf.writeCentroids(spark, cents, tmp)
-          }
-        cents
-      }
-    })
+    Artifacts.model(spark, liveArtifactKeys, "graft_ivf_index", dir,
+        "embeddings", Ivf.indexExists)(Ivf.centroids(b, IvfNlist, IvfIters))(
+      Ivf.writeCentroids(spark, _, _), Ivf.readCentroids(spark, _))
   }
 
-  /** The corpus tokenizer as a once-per-dataset artifact — the
-    * [[sharedCentroids]] treatment applied to the BPE merge table: the
-    * first run trains ([[TA.bpeMergesModel]] — one corpus pass + a
-    * vocabulary-sized driver loop), persists via [[TA.writeBpeModel]]
-    * (`_SUCCESS`-certified parquet), and every later run — including
-    * after a JVM restart — reads the artifact back instead of paying
-    * the corpus pass again. Training is deterministic and strings
-    * round-trip parquet exactly, so a re-read model segments
-    * bit-identically (BpeTrainSpec pins this). Keyed by the documents
-    * table's data stamp so a rewritten corpus retrains; a TrieMap L1
-    * skips even the artifact read within one JVM. */
-  private val bpeModelCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, String, Long, Int, Int), graft.functions.BpeMerges]
-  private val BpeTrainFormat = 1
+  // fmt2 = the shared [[Artifacts]] path layout
+  private val BpeTrainFormat = 2
+
+  /** The corpus tokenizer as a once-per-dataset model artifact: the
+    * first run trains ([[TA.bpeTrain]] — one corpus pass + a
+    * vocabulary-sized driver loop) and persists the merge table via
+    * [[TA.writeBpeModel]]; every later run — including after a JVM
+    * restart — reads it back instead of paying the corpus pass again.
+    * Strings round-trip parquet exactly, so a re-read model segments
+    * bit-identically (BpeTrainSpec pins this). */
   private[graft] def sharedBpeModel(spark: SparkSession,
       dir: String): graft.functions.BpeMerges = {
-    val root = Ivf.indexRoot(spark)
-    val stamp = tableStamp(dir, "documents")
-    val key = (root, dir, stamp, BpeNumMerges, BpeMaxWords)
-    // unknown (0) stamp ⇒ in-JVM cache only (the sharedPcaModel rule):
-    // a model persisted under an unfingerprintable dataset would be
-    // served stale forever after a data rewrite
-    val canPersist = stamp != 0L
-    onceBy(bpeModelCache, key, {
-      val path = s"$root/graft_bpe_model/${md5Hex(s"$key:fmt$BpeTrainFormat")}"
-      val persisted =
-        if (canPersist && TA.bpeModelExists(spark, path))
-          try Some(TA.readBpeModel(spark, path))
-          catch { case scala.util.control.NonFatal(_) => None }
-        else None
-      persisted.getOrElse {
-        val docs = Tables.documents(spark, dir)
-        val merges = TA.bpeTrain(docs, "text",
-          numMerges = BpeNumMerges, maxWords = BpeMaxWords)
-        // best-effort persist: a read-only artifact root must not fail
-        // the query — the fresh model is used either way. Atomic
-        // temp-dir+rename commit so racing JVMs can't certify a mix.
-        if (canPersist)
-          graft.operators.Artifacts.atomicCommit(spark, path,
-              artifactMeta("graft_bpe_model", dir, "documents", stamp),
-              certified = TA.bpeModelExists) { tmp =>
-            TA.writeBpeModel(merges, tmp)
-          }
+    lazy val merges = TA.bpeTrain(Tables.documents(spark, dir), "text",
+      numMerges = BpeNumMerges, maxWords = BpeMaxWords)
+    Artifacts.model(spark, liveArtifactKeys, "graft_bpe_model", dir,
+        "documents", TA.bpeModelExists)(
         new graft.functions.BpeMerges(merges.orderBy("rank")
           .select("lhs", "rhs").collect()
-          .map(r => (r.getString(0), r.getString(1))))
-      }
-    })
+          .map(r => (r.getString(0), r.getString(1)))))(
+      (_, tmp) => TA.writeBpeModel(merges, tmp), TA.readBpeModel(spark, _))
   }
 
   /** Busts PERSISTED int8 indexes when the quantization arithmetic itself
@@ -1263,83 +1159,22 @@ object Pipeline {
   private val Int8Format = 1
 
   /** The (id, dq) dequantized view of the PERSISTED int8 index for the
-    * embeddings table at `dir` — the [[sharedCentroids]] treatment applied
-    * to [[graft.operators.Quantize.writeIndex]]: written once per
-    * (root, dir, data stamp), read back (byte-packed parquet, ¼ the float
-    * bytes) on every later run including after a JVM restart. Quantization
-    * is deterministic and scale/bin round-trip parquet bit-exactly, so the
-    * unwritable-root fallback to the inline native round-trip is
+    * embeddings table at `dir` ([[graft.operators.Quantize.writeIndex]]):
+    * written once per dataset, read back (byte-packed parquet, ¼ the
+    * float bytes) on every later run including after a JVM restart.
+    * Quantization is deterministic and scale/bin round-trip parquet
+    * bit-exactly, so the inline native round-trip the fallbacks serve is
     * bit-identical to the persisted read path. */
   private def int8IndexVectors(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Quantize
-    val root = Ivf.indexRoot(spark)
-    val stamp = embStamp(dir)
-    // the registered key (carrying Int8Format) is part of the md5 path
-    // input, mirroring graft_ivf_index/graft_pq_books: a quantization
-    // format bump re-keys the PATH, so atomicCommit can never serve an
-    // old-format artifact as certified — without it, correctness after a
-    // bump would depend on an operator running the prune reaper
-    val path = s"$root/graft_int8_index/${md5Hex(
-      s"($root,$dir,$stamp):${liveArtifactKeys("graft_int8_index")}")}"
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id").cast(LongType).as("id"), col("embedding"))
-    val inline = emb.select(col("id"), Quantize.roundTrip(col("embedding")).as("dq"))
-    // unknown (0) stamp ⇒ never persist or read back (the sharedPcaModel
-    // rule): the inline round-trip is bit-identical anyway
-    if (stamp == 0L) return inline
-    // atomic temp-dir+rename commit (probes the job-success marker,
-    // never the bare directory): a write that died mid-job leaves only
-    // an invisible temp and the commit simply runs again and heals it;
-    // racing JVMs can't certify a mixed directory
-    val ok = graft.operators.Artifacts.atomicCommit(spark, path,
-        artifactMeta("graft_int8_index", dir, "embeddings", stamp)) { tmp =>
-      Quantize.writeIndex(emb, "id", "embedding", tmp)
+    Artifacts.frame(spark, liveArtifactKeys, "graft_int8_index", dir,
+        "embeddings",
+        write = (_, tmp) => Quantize.writeIndex(emb, "id", "embedding", tmp),
+        read = Quantize.readIndexVectors) {
+      emb.select(col("id"), Quantize.roundTrip(col("embedding")).as("dq"))
     }
-    if (ok)
-      try Quantize.readIndexVectors(spark, path)
-      catch { case scala.util.control.NonFatal(_) => inline }
-    else inline
-  }
-
-  /** In-JVM once-only guard for tokenization-artifact writes: builds are
-    * SERIALIZED per path under a per-path monitor (TrieMap.getOrElseUpdate
-    * only makes the insert atomic — two first-callers could evaluate the
-    * build thunk concurrently, the round-14 advice case), and the result
-    * is memoized so later calls skip even the marker probe. Cross-JVM
-    * the `_SUCCESS` probe + [[graft.operators.Artifacts.atomicCommit]]'s
-    * temp-dir+rename keep the protocol crash- and race-safe. Per-path
-    * monitors (not one global lock) let independent families build
-    * concurrently; family dependencies are acyclic (derived tables lock
-    * in dependency order), so no deadlock. */
-  private val tokenArtifact =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  private val tokenArtifactLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Serialize model-cache builds per key: TrieMap.getOrElseUpdate only
-    * makes the INSERT atomic — two first-callers would both evaluate an
-    * expensive training thunk (the round-14 advice case, fixed for
-    * tokenArtifact with per-path monitors; this is the same treatment
-    * for the in-JVM model caches). Monitors are per cache key, so
-    * independent models still build concurrently; build thunks never
-    * nest into the same cache, so no deadlock. */
-  private val modelBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[Any, Object]()
-  private def onceBy[K, V](cache: scala.collection.concurrent.TrieMap[K, V],
-      key: K, build: => V): V = {
-    // the lock-map key must hash the cache by IDENTITY: a Scala Map
-    // hashes by CONTENT, so keying on the mutable TrieMap itself would
-    // re-hash every time any entry lands — an in-flight builder's lock
-    // would stop being findable (re-opening the duplicate-build race)
-    // and every stranded entry would leak in modelBuildLocks forever
-    val lockKey = (System.identityHashCode(cache), key)
-    val lock = modelBuildLocks.computeIfAbsent(lockKey, _ => new Object)
-    val v = lock.synchronized(cache.getOrElseUpdate(key, build))
-    // entry populated ⇒ the hit path never needs the monitor again; evict
-    // it so the lock map stays bounded by in-flight builds, not by every
-    // (cache, key) the JVM ever saw (the tokenArtifactLocks treatment)
-    modelBuildLocks.remove(lockKey)
-    v
   }
 
   /** Single source of truth for every persisted-artifact family's
@@ -1348,12 +1183,11 @@ object Pipeline {
     * [[graft.PruneArtifacts]]) treats as live: a format bump re-keys the
     * artifact path, so the old-format artifact keeps a live data stamp
     * forever while nothing can ever read it — only this map lets the
-    * reaper see those dead-key orphans. Kept in lockstep with the call
-    * sites by construction: [[artifactMeta]] reads the key FROM this map
-    * (a family missing here fails loudly at first write), and
-    * [[datasetArtifact]] requires its caller's path key to equal the
-    * registered one. Lazy: it references format constants declared
-    * later in this object. */
+    * reaper see those dead-key orphans. Each family's key is written
+    * only here: call sites name the family and [[Artifacts.model]] /
+    * [[Artifacts.frame]] look the key up for both the path and the meta
+    * (a family missing here fails loudly at first use). Lazy: it
+    * references format constants declared later in this object. */
   private[graft] lazy val liveArtifactKeys: Map[String, String] = Map(
     "graft_shingle_table" -> s"n$ShingleN:fmt$ShingleFormat",
     "graft_winnow_fps" -> "n3w4:fmt1",
@@ -1376,107 +1210,30 @@ object Pipeline {
     "graft_pca_model" -> s"d$IvfDims:i$PcaIters:fmt$PcaTrainFormat",
     "graft_bpe_model" -> s"m$BpeNumMerges:w$BpeMaxWords:fmt$BpeTrainFormat")
 
-  /** The `_GRAFT_META` provenance record every artifact commit carries —
-    * the key ALWAYS comes from [[liveArtifactKeys]], so the reaper's
-    * notion of "current" can never drift from what writers record. */
-  private def artifactMeta(family: String, dir: String, table: String,
-      stamp: Long): Map[String, String] =
-    Map("family" -> family, "dataset_dir" -> dir, "table" -> table,
-      "stamp" -> stamp.toString, "key" -> liveArtifactKeys(family))
-
-  /** A DETERMINISTIC derived table of the documents table at `dir` as a
-    * once-per-dataset parquet artifact — the generalized
-    * [[sharedCentroids]] treatment for tokenization products whose every
-    * column round-trips parquet bit-exactly (longs / strings / sorted
-    * arrays thereof): the first run builds and persists
-    * `_SUCCESS`-certified parquet keyed by the documents table's data
-    * stamp + the caller's `key` (which must version both the parameters
-    * AND the arithmetic — the ShingleFormat doctrine); every later run,
-    * including later JVMs, reads the artifact back. Unknown (0) stamp ⇒
-    * never persist or read back (the sharedPcaModel rule): a
-    * tokenization persisted under an unfingerprintable corpus would be
-    * served stale forever after a data rewrite. `cols` re-projects the
-    * read in the builder's column order so both paths expose one
-    * schema. */
-  private def datasetArtifact(spark: SparkSession, dir: String,
-      family: String, key: String, cols: Seq[String])(
-      build: => DataFrame): DataFrame = {
-    val stamp = tableStamp(dir, "documents")
-    if (stamp == 0L) return build
-    require(liveArtifactKeys.get(family).contains(key),
-      s"artifact family $family writes key '$key' but liveArtifactKeys " +
-        s"registers '${liveArtifactKeys.get(family)}' — the reaper would " +
-        "treat this artifact as a dead-key orphan; register the key")
-    val root = Ivf.indexRoot(spark)
-    val path = s"$root/$family/${md5Hex(s"($root,$dir,$stamp):$key")}"
-    val lock = tokenArtifactLocks.computeIfAbsent(path, _ => new Object)
-    val ok = lock.synchronized {
-      tokenArtifact.getOrElseUpdate(path, {
-        // probe the job-success marker, not the bare directory (the
-        // int8IndexVectors rule): a write that died mid-job leaves a
-        // husk, and the atomic commit below simply runs again and heals
-        // it. The commit itself is temp-dir + rename (atomicCommit), so
-        // a concurrent writer in ANOTHER JVM can never interleave with
-        // this one at the final path; the provenance meta is what the
-        // artifact-root reaper (Artifacts.prune) attributes stamps by.
-        graft.operators.Artifacts.atomicCommit(spark, path,
-            artifactMeta(family, dir, "documents", stamp)) { tmp =>
-          // deliberately NOT rebalanced before the write: a multi-file
-          // artifact was measured a net LOSS at bench scale (32 tiny
-          // files → 32-map-task consumer stages each paying ~150ms of
-          // fixed scan+shuffle-writer cost, q_winnow_pairs 0.77s → 1.1s+)
-          // — consumer parallelism comes from the consumers' own
-          // exchanges. At fleet scale the build's own shuffle already
-          // writes many byte-sized files.
-          build.write.mode("overwrite").parquet(tmp)
-        }
-      })
-    }
-    // the monitor is only needed while the TrieMap entry is unpopulated;
-    // once it is, the hit path above never blocks, so evict the lock —
-    // otherwise one Object per artifact path accumulates for the JVM
-    // lifetime in a fleet JVM that iterates many datasets/stamps. (On the
-    // build-threw path the entry is unpopulated and the lock survives for
-    // the next caller; a racing fresh caller after eviction could at worst
-    // duplicate a build, which atomicCommit makes safe cross-writer.)
-    tokenArtifactLocks.remove(path)
-    if (ok)
-      try graft.operators.Artifacts.readCachedSchema(spark, path)
-        .select(cols.map(col): _*)
-      catch { case scala.util.control.NonFatal(_) => build }
-    else build
-  }
-
   /** Busts PERSISTED shingle artifacts when the tokenization arithmetic
     * itself changes — the data stamp can't see a code change. */
   private val ShingleFormat = 1
   private val ShingleN = 3
 
   /** The (doc, shh) trigram shingle table as a once-per-dataset artifact
-    * — the [[sharedCentroids]] treatment applied to the dedup-audit
-    * tokenization: six declared query families (ngram_jaccard,
+    * of the dedup-audit tokenization: six declared query families (ngram_jaccard,
     * minhash_dedup, dedup_sweep, dup_sources, winnow_pairs, and the
     * nearDupClusters consumers dedup_clusters / dedup_weights /
     * cluster_best / clean_corpus / leakage_safe_split) consume the same
     * (doc_id, shingle-hash array) relation; previously each re-tokenized
-    * the corpus per query. The first run tokenizes and persists
-    * `_SUCCESS`-certified parquet keyed by the documents table's data
-    * stamp; every later run — including later JVMs — reads the artifact
-    * back. [[graft.functions.ShingleHashes]] is deterministic and longs
-    * round-trip parquet bit-exactly, so a read-back equals a
-    * retokenization (DedupCapSpec compares query outputs across both
-    * paths implicitly: first call writes, later calls read). Unknown (0)
-    * stamp ⇒ never persist or read back (the sharedPcaModel rule): a
-    * tokenization persisted under an unfingerprintable corpus would be
-    * served stale forever after a data rewrite. Callers do NOT persist
+    * the corpus per query. [[graft.functions.ShingleHashes]] is
+    * deterministic and longs round-trip parquet bit-exactly, so a
+    * read-back equals a retokenization (DedupCapSpec compares query
+    * outputs across both paths implicitly: first call writes, later
+    * calls read). Callers do NOT persist
     * the returned frame (r16 measured the persist/localCheckpoint
     * scaffolding a net loss against cheap columnar artifact re-scans);
     * the accepted cost is that on the stamp-0 fallback each self-join
     * consumer re-tokenizes — correct, just slower in that degraded
     * environment (the sweepPairs thunk documents the same trade). */
   private[graft] def sharedShingles(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_shingle_table",
-        s"n$ShingleN:fmt$ShingleFormat", Seq("doc", "shh")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_shingle_table", dir,
+        "documents") {
       Dedup.shingleTable(Tables.documents(spark, dir), "text", "doc_id",
         n = ShingleN)
     }
@@ -1489,9 +1246,8 @@ object Pipeline {
     * bit-exactly; the key versions the shingle arithmetic, the df cap,
     * and the floor (a changed cap or floor re-derives, never re-reads). */
   private[graft] def sweepPairs(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_sweep_pairs",
-        s"n$ShingleN:fmt$ShingleFormat:cap${Dedup.AuditDfCap}" +
-          s":floor${SweepThresholds.min}", Seq("da", "db", "jaccard")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_sweep_pairs", dir,
+        "documents") {
       // no localCheckpoint here: on the stamp-0 / unwritable-root
       // fallback this thunk is re-evaluated PER CALL and an eager
       // checkpoint would pin block-manager state until the GC-driven
@@ -1502,7 +1258,7 @@ object Pipeline {
       // root, not this plan)
       Dedup.allPairsJaccard(sharedShingles(spark, dir),
         threshold = SweepThresholds.min)
-    }
+    }.select("da", "db", "jaccard") // the artifact also carries `inter`
 
   /** The sweep's [[Dedup.hotShingleStats]] honesty ledger (1 row) as a
     * once-per-dataset artifact — the df aggregate over the full shingle
@@ -1510,9 +1266,8 @@ object Pipeline {
     * hot_share is one IEEE division of exact longs, so it round-trips
     * parquet bit-exactly. */
   private def sweepHotStats(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_hot_stats",
-        s"n$ShingleN:fmt$ShingleFormat:cap${Dedup.AuditDfCap}",
-        Seq("hot_rows", "total_rows", "hot_share")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_hot_stats", dir,
+        "documents") {
       Dedup.hotShingleStats(sharedShingles(spark, dir))
     }
 
@@ -1522,8 +1277,8 @@ object Pipeline {
     * stores PERSISTENTLY by construction, so the artifact IS the
     * production shape, not a cache. */
   private[graft] def sharedWinnowFps(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_winnow_fps", "n3w4:fmt1",
-        Seq("doc_id", "fp")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_winnow_fps", dir,
+        "documents") {
       TA.winnowFingerprints(Tables.documents(spark, dir), "text", "doc_id",
         n = 3, w = 4)
     }
@@ -1534,8 +1289,8 @@ object Pipeline {
     * cross-source audits re-read instead of re-tokenizing the corpus
     * per audit. */
   private[graft] def sharedSourceGrams(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_source_grams", "n5:fmt1",
-        Seq("h", "srcs")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_source_grams", dir,
+        "documents") {
       sourceGrams(Tables.documents(spark, dir))
     }
 
@@ -1547,8 +1302,8 @@ object Pipeline {
     * per-doc sum, the final division is one IEEE op, and doubles
     * round-trip parquet bit-exactly. */
   private def sharedLmScores(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_lm_scores", "fmt1",
-        Seq("doc_id", "n_bigrams", "lm_score")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_lm_scores", dir,
+        "documents") {
       TA.lmScore(Tables.documents(spark, dir), "text", "doc_id")
     }
 
@@ -1558,46 +1313,40 @@ object Pipeline {
     * q_nb_eval). Deterministic: all log-probabilities floor-quantize to
     * fixed point before summation (predictions are integer argmaxes). */
   private def sharedNbHoldout(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_nb_holdout", s"b$NbBuckets:fmt1",
-        Seq("doc_id", "label", "predicted", "correct", "nb_score")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_nb_holdout", dir,
+        "documents") {
       TA.nbClassify(Tables.documents(spark, dir), "text", "doc_id", "lang",
         isTrain = col("doc_id") % 10 < 8, buckets = NbBuckets)
     }
 
-  private val lmModelCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), graft.functions.BigramLmModel]
   private val LmTopK = 1 << 20
 
-  /** The deployed bigram-LM gate model as a once-per-dataset artifact —
-    * the [[sharedBpeModel]] treatment for the CCNet-family filter's
-    * count tables: the 4 sorted long arrays + V encode as (kind, k, c)
-    * parquet rows through [[datasetArtifact]], and the decode rebuilds
-    * the binary-search arrays in sorted order, so a re-read model probes
-    * bit-identically to a retrain (training itself is deterministic:
-    * exact counts, count-desc/key-asc prune). The TrieMap L1 skips even
-    * the artifact read within one JVM. */
+  /** The deployed bigram-LM gate model as a once-per-dataset model
+    * artifact for the CCNet-family filter's count tables: the 4 sorted
+    * long arrays + V persist as (kind, k, c) parquet rows, and the read
+    * rebuilds the binary-search arrays in sorted order, so a re-read
+    * model probes bit-identically to a retrain (training itself is
+    * deterministic: exact counts, count-desc/key-asc prune). */
   private[graft] def sharedLmModel(spark: SparkSession,
-      dir: String): graft.functions.BigramLmModel =
-    onceBy(lmModelCache, (dir, tableStamp(dir, "documents")), {
-      import spark.implicits._
-      val enc = datasetArtifact(spark, dir, "graft_lm_model",
-          s"topk$LmTopK:fmt1", Seq("kind", "k", "c")) {
-        val m = graft.functions.BigramLmScore.train(
-          Tables.documents(spark, dir), "text", topK = LmTopK)
-        val rows =
-          m.c2Keys.indices.map(i => (0, m.c2Keys(i), m.c2Counts(i))) ++
-            m.c1Keys.indices.map(i => (1, m.c1Keys(i), m.c1Counts(i))) :+
-            ((2, 0L, m.v))
-        rows.toDF("kind", "k", "c")
-      }
-      val rows = enc.collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      val c2 = rows.filter(_._1 == 0).sortBy(_._2)
-      val c1 = rows.filter(_._1 == 1).sortBy(_._2)
-      val v = rows.find(_._1 == 2).map(_._3).getOrElse(1L)
-      new graft.functions.BigramLmModel(
-        c2.map(_._2), c2.map(_._3), c1.map(_._2), c1.map(_._3), v)
-    })
+      dir: String): graft.functions.BigramLmModel = {
+    import spark.implicits._
+    Artifacts.model(spark, liveArtifactKeys, "graft_lm_model", dir,
+        "documents")(graft.functions.BigramLmScore.train(
+        Tables.documents(spark, dir), "text", topK = LmTopK))(
+      (m, tmp) => (m.c2Keys.indices.map(i => (0, m.c2Keys(i), m.c2Counts(i))) ++
+          m.c1Keys.indices.map(i => (1, m.c1Keys(i), m.c1Counts(i))) :+
+          ((2, 0L, m.v)))
+        .toDF("kind", "k", "c").write.mode("overwrite").parquet(tmp),
+      path => {
+        val rows = spark.read.parquet(path).select("kind", "k", "c").collect()
+          .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+        val c2 = rows.filter(_._1 == 0).sortBy(_._2)
+        val c1 = rows.filter(_._1 == 1).sortBy(_._2)
+        val v = rows.find(_._1 == 2).map(_._3).getOrElse(1L)
+        new graft.functions.BigramLmModel(
+          c2.map(_._2), c2.map(_._3), c1.map(_._2), c1.map(_._3), v)
+      })
+  }
 
   /** The per-document DSIR importance scores as a once-per-dataset
     * artifact — the signal column the DSIR recipe (Xie et al. 2023)
@@ -1605,8 +1354,8 @@ object Pipeline {
     * deterministic (per-bucket ln ratios floor-quantize to fixed point
     * before summation). */
   private def sharedDsirScores(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_dsir_scores", s"b$DsirBuckets:fmt1",
-        Seq("doc_id", "n_grams", "dsir_score")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_dsir_scores", dir,
+        "documents") {
       TA.dsirScores(Tables.documents(spark, dir), "text", "doc_id",
         isTarget = col("lang") === "en", buckets = DsirBuckets)
     }
@@ -1616,8 +1365,8 @@ object Pipeline {
     * are ever signed (the q_dedup_incremental scaladoc's own framing);
     * the artifact makes the declared query read exactly that shape. */
   private[graft] def sharedSignatureIndex(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_minhash_index", "n3k64b16:fmt1",
-        Seq("doc", "shh", "bandkeys")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_minhash_index", dir,
+        "documents") {
       Dedup.signatureIndex(Tables.documents(spark, dir), "text", "doc_id",
         n = 3, k = 64, bands = 16)
     }
@@ -1626,8 +1375,8 @@ object Pipeline {
     * once-per-dataset artifact (the [[sharedSignatureIndex]] story with
     * winnow recall). */
   private[graft] def sharedWinnowIndex(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_winnow_index", "n3w4:fmt1",
-        Seq("doc", "shh", "fps")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_winnow_index", dir,
+        "documents") {
       Dedup.winnowIndex(Tables.documents(spark, dir), "text", "doc_id",
         n = 3, w = 4)
     }
@@ -1637,8 +1386,8 @@ object Pipeline {
     * the one most obviously persisted in production. Serves q_simhash,
     * q_simhash_pairs and q_simhash_incremental. */
   private[graft] def sharedSimhash(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_simhash", "b60:fmt1",
-        Seq("doc", "simhash")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_simhash", dir,
+        "documents") {
       Dedup.simhashAgg(Tables.documents(spark, dir), "text", "doc_id",
         bits = 60)
     }
@@ -1648,8 +1397,8 @@ object Pipeline {
     * serving both the duplicated-span diagnostic (q_span_dedup) and the
     * scrub (q_span_scrub). */
   private[graft] def sharedSpanRows(spark: SparkSession, dir: String): DataFrame =
-    datasetArtifact(spark, dir, "graft_span_rows", "n5:fmt1",
-        Seq("doc_id", "pos", "h")) {
+    Artifacts.frame(spark, liveArtifactKeys, "graft_span_rows", dir,
+        "documents") {
       Dedup.spanPositionRows(Tables.documents(spark, dir), "text", "doc_id",
         n = 5)
     }
@@ -2273,64 +2022,22 @@ object Pipeline {
   private val PcaIters = 3
   private val PcaOutlierSigmas = 3.0
 
-  private val pcaCache =
-    scala.collection.concurrent.TrieMap[(String, Long, Int),
-      graft.operators.Pca.PcaModel]()
-
   /** Bust PERSISTED models when the training arithmetic itself changes
     * (the IvfTrainFormat doctrine): fmt2 = the corpus-size-safe
-    * normalize-by-n-then-1e-12-norm iteration. */
-  private val PcaTrainFormat = 2
+    * normalize-by-n-then-1e-12-norm iteration; fmt3 = the shared
+    * [[Artifacts]] path layout. */
+  private val PcaTrainFormat = 3
 
-  /** The trained PCA model as a once-per-DATASET artifact — the full
-    * [[sharedCentroids]] treatment: in-JVM cache in front of a
-    * `_SUCCESS`-certified parquet model keyed by (dir, data stamp,
-    * config, training format), because the expensive part at 100 TB is
-    * the `iters + 1` training scans, not the 2·dims+1-double model. A
-    * corrupt artifact degrades to a (deterministic, bit-identical)
-    * retrain; a read-only index root must not fail the query. */
-  /** Artifact path the shared PCA model persists under — `private[graft]`
-    * so the StreamOpsSpec parity test can assert the projection gate's
-    * model IS the `_SUCCESS`-certified artifact the batch audits read. */
-  private[graft] def pcaModelPath(spark: SparkSession, dir: String): String =
-    pcaModelPathFor(spark, dir, embStamp(dir))
-  private def pcaModelPathFor(spark: SparkSession, dir: String,
-      stamp: Long): String = {
-    val root = Ivf.indexRoot(spark)
-    s"$root/graft_pca_model/${
-      md5Hex(s"$dir:$stamp:$IvfDims:$PcaIters:fmt$PcaTrainFormat")}"
-  }
-
+  /** The trained PCA model as a once-per-DATASET model artifact: the
+    * expensive part at 100 TB is the `iters + 1` training scans, not the
+    * 2·dims+1-double model, and doubles round-trip parquet bit-exactly. */
   private[graft] def sharedPcaModel(spark: SparkSession,
-      dir: String): graft.operators.Pca.PcaModel = {
-    val stamp = embStamp(dir) // ONCE: the cache key and the artifact
-    // path must agree, and the walk is not free
-    onceBy(pcaCache, (dir, stamp, PcaIters), {
-      val path = pcaModelPathFor(spark, dir, stamp)
-      // stamp 0 = the data could not be fingerprinted (non-local dir,
-      // walk error): persisting under an unknown stamp would pin a
-      // stale model across restarts FOREVER after a data rewrite — in
-      // that case the model stays in-JVM only (a retrain per restart
-      // is honest; serving stale statistics silently is not)
-      val canPersist = stamp != 0L
-      val persisted =
-        if (canPersist && graft.operators.Pca.modelExists(spark, path))
-          try Some(graft.operators.Pca.readModel(spark, path, IvfDims))
-          catch { case scala.util.control.NonFatal(_) => None }
-        else None
-      persisted.getOrElse {
-        val m = graft.operators.Pca.fit(Tables.embeddings(spark, dir),
-          "vec_id", "embedding", dims = IvfDims, iters = PcaIters)
-        if (canPersist)
-          graft.operators.Artifacts.atomicCommit(spark, path,
-              artifactMeta("graft_pca_model", dir, "embeddings", stamp),
-              certified = graft.operators.Pca.modelExists) { tmp =>
-            graft.operators.Pca.writeModel(spark, m, tmp)
-          }
-        m
-      }
-    })
-  }
+      dir: String): graft.operators.Pca.PcaModel =
+    Artifacts.model(spark, liveArtifactKeys, "graft_pca_model", dir,
+        "embeddings")(graft.operators.Pca.fit(Tables.embeddings(spark, dir),
+        "vec_id", "embedding", dims = IvfDims, iters = PcaIters))(
+      graft.operators.Pca.writeModel(spark, _, _),
+      graft.operators.Pca.readModel(spark, _, IvfDims))
 
   /** Top principal component of the embeddings via deterministic
     * fixed-point power iteration ([[graft.operators.Pca.fit]]) — the

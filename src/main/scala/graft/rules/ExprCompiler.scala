@@ -160,18 +160,6 @@ object ExprCompiler {
     case _ => parse_json(jsonFragment(ce.valueOrNull, ce.tpe))
   }
 
-  def variantCE(v: Column): CE = CE.present(v, VariantType)
-
-  /** An array-typed view of a CE: typed arrays pass through; a variant
-    * holding a JSON array casts to array<variant>. */
-  def asArrayCE(e: CE): CE = e.tpe match {
-    case ArrayType(_, _) => e
-    case VariantType =>
-      val arr = e.value.cast(ArrayType(VariantType))
-      CE(arr, e.missing || arr.isNull, ArrayType(VariantType))
-    case t => throw CompileError(s"expected array, got $t")
-  }
-
   // ---- reference-faithful scalar coercions ----
 
   /** value_to_string semantics (reference transform.rs:5903-5923): numbers

@@ -104,8 +104,4 @@ object Sources {
   /** NDJSON (one JSON record per line) — splittable, the scalable shape. */
   def ndjson(spark: SparkSession, path: String): DataFrame =
     spark.read.json(path)
-
-  /** NDJSON sink from the engine's exact-JSON record column. */
-  def writeNdjson(jsonRecords: DataFrame, path: String): Unit =
-    jsonRecords.write.mode("overwrite").text(path)
 }

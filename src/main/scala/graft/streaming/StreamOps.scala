@@ -78,12 +78,6 @@ object StreamOps {
       .select(col("window.start").as("window_start"), col(keyCol),
         col("n"), col("total_value"))
 
-  /** Streaming exact dedup on a key set within the watermark horizon —
-    * dropDuplicates keyed state is Spark's built-in streaming dedup. */
-  def streamingDedup(events: DataFrame, tsCol: String, keys: Seq[String],
-      watermark: String): DataFrame =
-    events.withWatermark(tsCol, watermark).dropDuplicates(keys :+ tsCol)
-
   /** Streaming near-dedup for a document stream: the SimHash signature
     * (native one-pass expression) keys the built-in streaming dedup, so
     * bag-of-words-identical / near-identical documents collapse to their

@@ -303,6 +303,21 @@ class TextOpsSpec extends AnyFunSuite {
       (3L, "removed"), (4L, "added")))
   }
 
+  test("snapshotDiff: a value moving between columns or across a separator reads as changed") {
+    import spark.implicits._
+    def status(a: (String, String), b: (String, String)): String =
+      graft.operators.Diff.snapshotDiff(Seq((1L, a._1, a._2)).toDF("doc_id", "text", "lang"),
+          Seq((1L, b._1, b._2)).toDF("doc_id", "text", "lang"), "doc_id", Seq("text", "lang"))
+        .collect().head.getString(1)
+    // nulls must not be skipped: ("a", null) and (null, "a") differ
+    assert(status(("a", null), (null, "a")) == "changed")
+    assert(status(("", "x"), (null, "x")) == "changed")
+    // separator-bearing values must not re-split across columns
+    assert(status(("a b", "c"), ("a", "b c")) == "changed")
+    assert(status(("a\u0000b", "c"), ("a", "b\u0000c")) == "changed")
+    assert(status(("a", null), ("a", null)) == "unchanged")
+  }
+
   test("chunkTokens: overlapped windows, short final chunk, sub-size doc whole") {
     val d = docs(
       1L -> (1 to 10).map(i => s"t$i").mkString(" "), // 10 tokens

@@ -3,11 +3,12 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The dataset-artifact protocol behind the shared tokenization tables
-  * (shingles / winnow fps / source grams / span rows / LM scores / NB
-  * holdout): certified writes, bit-identical read-back, corrupt-artifact
-  * degradation to the inline build, and the unknown-stamp rule (never
-  * persist what can't be fingerprinted). These are the failure modes a
+/** The persisted-artifact protocol behind every shared table and model
+  * ([[graft.operators.Artifacts.model]] / `frame`): certified writes,
+  * bit-identical read-back, corrupt-artifact degradation to the inline
+  * build, the unknown-stamp rule (never persist what can't be
+  * fingerprinted), and the outcome counts that make each fallback
+  * visible. These are the failure modes a
   * 100 TB deployment actually hits — a writer OOM-killed mid-job, a
   * truncated file, an object-store path the stat walk can't see. */
 class ArtifactProtocolSpec extends AnyFunSuite {
@@ -47,6 +48,17 @@ class ArtifactProtocolSpec extends AnyFunSuite {
     finally w.close()
   }
 
+  /** `f`'s result and the entry point's outcome counts it added, summed
+    * over families; `read_fallback:<class>` counts as `read_fallback`. */
+  private def outcomes[A](f: => A): (A, Map[String, Long]) = {
+    def byOutcome = graft.operators.Artifacts.outcomeCounts.toSeq
+      .groupMapReduce(_._1._2.takeWhile(_ != ':'))(_._2)(_ + _)
+    val before = byOutcome
+    val a = f
+    (a, byOutcome.map { case (o, n) => o -> (n - before.getOrElse(o, 0L)) }
+      .filter(_._2 != 0L))
+  }
+
   private def shingleSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Seq[Long])] =
     df.collect().map(r => (r.getLong(0), r.getSeq[Long](1).sorted)).toSet
 
@@ -62,8 +74,12 @@ class ArtifactProtocolSpec extends AnyFunSuite {
       assert(java.nio.file.Files.exists(arts.head.resolve("_SUCCESS")),
         "artifact must carry the job-success certificate")
       // a second call (artifact-read path) returns the identical relation
-      val second = shingleSet(Pipeline.sharedShingles(spark, dir))
+      // and is counted as a hit, with no fallback of either kind
+      val (second, counted) = outcomes(shingleSet(Pipeline.sharedShingles(spark, dir)))
       assert(second == first, "read-back must equal the built table")
+      assert(counted.getOrElse("hit", 0L) > 0L &&
+        !counted.contains("read_fallback") && !counted.contains("commit_failed"),
+        s"a second call on a writable root must be a clean hit, counted $counted")
       assert(first.nonEmpty)
     }
   }
@@ -274,6 +290,40 @@ class ArtifactProtocolSpec extends AnyFunSuite {
       // the current-key artifact survives and still serves
       assert(dec.exists(d => d.action == "keep" && d.reason == "live stamp"))
       assert(shingleSet(Pipeline.sharedShingles(spark, dir)) == live)
+    }
+  }
+
+  test("prune --apply reaps an IVF index committed under the pre-unification path and key") {
+    withTempRoot { root =>
+      val live = Pipeline.queries("q_cluster_sizes")(spark, dir).collect().toSeq
+      import scala.jdk.CollectionConverters._
+      val fam = root.resolve("graft_ivf_index")
+      val current = java.nio.file.Files.list(fam).iterator().asScala.toSeq.head
+      val m = graft.operators.Artifacts.readMeta(spark, current.toString).get
+      // the old layout: md5 of the (root, dir, stamp, nlist, iters) cache
+      // key plus the training format, certified by its centroids subdir,
+      // with the format-4 key in its provenance meta
+      val oldName = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"($root,$dir,${m("stamp")},10,2):fmt4".getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+      val old = fam.resolve(oldName)
+      spark.range(10).coalesce(1).write.parquet(old.resolve("centroids").toString)
+      java.nio.file.Files.writeString(old.resolve("_GRAFT_META"),
+        s"dataset_dir=$dir\nfamily=graft_ivf_index\nkey=nlist10:iters2:fmt4\n" +
+          s"stamp=${m("stamp")}\ntable=embeddings\n")
+      assert(m("key") != "nlist10:iters2:fmt4" && current.getFileName.toString != oldName)
+      ageRecursively(old, System.currentTimeMillis() - 2L * 60 * 60 * 1000)
+      val bos = new java.io.ByteArrayOutputStream()
+      val ps = new java.io.PrintStream(bos)
+      val code = graft.PruneArtifacts.run(Seq(root.toString, "--apply"), ps, ps)
+      ps.flush()
+      val out = bos.toString("UTF-8")
+      assert(code == 0 && !java.nio.file.Files.exists(old),
+        s"the old-layout IVF index must be reaped:\n$out")
+      assert(out.contains("dead format key"), out)
+      assert(java.nio.file.Files.exists(current.resolve("centroids").resolve("_SUCCESS")),
+        s"the current-key index must be kept:\n$out")
+      assert(Pipeline.queries("q_cluster_sizes")(spark, dir).collect().toSeq == live)
     }
   }
 
@@ -530,8 +580,8 @@ class ArtifactProtocolSpec extends AnyFunSuite {
 
   test("an unwritable artifact root degrades to the inline build with IDENTICAL results") {
     // the artifact families are all DETERMINISTIC derived tables, so the
-    // fallback (atomicCommit returns false, datasetArtifact serves the
-    // inline plan) must be value-identical to the artifact-backed path —
+    // fallback (the commit fails, the entry point serves the inline
+    // build) must be value-identical to the artifact-backed path —
     // the exact claim every shared* scaladoc makes
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().toSeq.map(_.toString).sorted
@@ -544,10 +594,14 @@ class ArtifactProtocolSpec extends AnyFunSuite {
     // chmod-400 dir which the sandbox's uid-0 user writes through
     spark.conf.set("spark.graft.index.root", "/dev/null/graft_broken_root")
     try {
-      assert(rows(Pipeline.dedupSweep(spark, dir)) == viaArtifact._1,
-        "sweep fallback must equal the artifact-backed sweep")
-      assert(rows(Pipeline.queries("q_pq_rerank")(spark, dir)) == viaArtifact._2,
-        "PQ fallback must equal the artifact-backed rerank")
+      val (_, counted) = outcomes {
+        assert(rows(Pipeline.dedupSweep(spark, dir)) == viaArtifact._1,
+          "sweep fallback must equal the artifact-backed sweep")
+        assert(rows(Pipeline.queries("q_pq_rerank")(spark, dir)) == viaArtifact._2,
+          "PQ fallback must equal the artifact-backed rerank")
+      }
+      assert(counted.getOrElse("commit_failed", 0L) > 0L,
+        s"the fallback must be counted, counted $counted")
     } finally prev match {
       case Some(v) => spark.conf.set("spark.graft.index.root", v)
       case None => spark.conf.unset("spark.graft.index.root")
@@ -558,9 +612,11 @@ class ArtifactProtocolSpec extends AnyFunSuite {
     withTempRoot { root =>
       // a dir whose table files can't be walked fingerprints as stamp 0
       val ghost = "/nonexistent/graft_spec_ghost"
-      val e = intercept[Exception] {
+      val (e, counted) = outcomes(intercept[Exception] {
         Pipeline.sharedShingles(spark, ghost).collect()
-      }
+      })
+      assert(counted.getOrElse("unstamped", 0L) > 0L,
+        s"a stamp-0 call must be counted, counted $counted")
       // the inline path fails on the missing parquet (correct — the DATA
       // is absent), but the artifact root must stay untouched: nothing
       // may be persisted under an unfingerprintable dataset

@@ -829,7 +829,8 @@ class StreamOpsSpec extends AnyFunSuite {
     // the shared model IS the certified on-disk artifact (local testdata
     // always fingerprints, so the persist path is active), and the
     // artifact round-trips to the exact model the gate scores with
-    val path = graft.queries.Pipeline.pcaModelPath(spark, dir)
+    val path = graft.operators.Artifacts.path(spark,
+      graft.queries.Pipeline.liveArtifactKeys, "graft_pca_model", dir, "embeddings")
     assert(graft.operators.Pca.modelExists(spark, path),
       s"shared PCA artifact must be certified on disk at $path")
     val reread = graft.operators.Pca.readModel(spark, path, model.dims)
