@@ -301,9 +301,10 @@ object Bench {
     val noisyHeadJson = noisy.take(5).map("\"" + _ + "\"").mkString("[", ",", "]")
     val minRegHeadJson =
       minRegressed.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Per-query MINs ride the summary line for the shown queries whose
-    // median exceeds their min by >20% (and for every min_regressed one):
-    // a burst only ever ADDS time, so median >> min means contention, not
+    // Per-query MINs ride the summary line only for SHOWN queries: those
+    // whose median exceeds their min by >20%, or that are min_regressed.
+    // A min_regressed query outside the shown set carries no min here.
+    // A burst only ever ADDS time, so median >> min means contention, not
     // regression — the r16 driver run read q_sessionize's 2.4s median as a
     // 4x regression that its own min column exonerated. Carrying exactly
     // the adjudication-relevant mins (capped at 30; the full artifact has

@@ -51,10 +51,9 @@ object Cli {
     * [--api-mode rules|ui-only] [--no-ui] [--no-trace-detail]` — the
     * reference's UI server (main.rs run_ui): the /api rules surface + the
     * /internal trace/graph API + static UI assets. `--no-trace-detail`
-    * turns off rich per-request trace capture (probe re-executions —
-    * see EndpointEngine.defaultTraceDetail's cost note) without JVM
-    * flags. Exit 1 on config/server errors, 2 when the rules dir fails
-    * validation. */
+    * turns off rich per-request trace capture (records/nodes recorded
+    * in each rule's own plan) and keeps the flat trace. Exit 1 on
+    * config/server errors, 2 when the rules dir fails validation. */
   private def runUi(f: Flags, out: PrintStream, err: PrintStream): Int = {
     val apiMode = f.opts.getOrElse("--api-mode", "rules")
     val uiEnabled = !f.bools.contains("--no-ui")
@@ -78,8 +77,7 @@ object Cli {
       rulesDir = Some(rulesDir),
       apiMode = apiMode,
       uiEnabled = uiEnabled,
-      traceDetail = !f.bools.contains("--no-trace-detail") &&
-        graft.endpoint.EndpointEngine.defaultTraceDetail)
+      traceDetail = !f.bools.contains("--no-trace-detail"))
     try {
       val server = graft.endpoint.UiServer.start(session, config)
       out.println(s"rulemorph server listening on http://127.0.0.1:${server.getAddress.getPort}")
@@ -107,8 +105,8 @@ object Cli {
 
   /** `serve -r endpoints.yaml [--port N] [--no-trace-detail]` — run the
     * endpoint engine over the JDK HttpServer until interrupted.
-    * `--no-trace-detail` disables rich per-request trace capture (probe
-    * re-executions — see EndpointEngine.defaultTraceDetail's cost note). */
+    * `--no-trace-detail` disables rich per-request trace capture and
+    * keeps the flat trace. */
   private def runServe(f: Flags, out: PrintStream, err: PrintStream): Int = {
     val rules = f.opts.get("--rules") match {
       case Some(p) => p
@@ -117,8 +115,7 @@ object Cli {
     val port = f.opts.get("--port").flatMap(_.toIntOption).getOrElse(8080)
     try {
       val server = graft.endpoint.Server.start(session, rules, port,
-        traceDetail = !f.bools.contains("--no-trace-detail") &&
-          graft.endpoint.EndpointEngine.defaultTraceDetail)
+        traceDetail = !f.bools.contains("--no-trace-detail"))
       out.println(s"listening on http://127.0.0.1:${server.getAddress.getPort}")
       Thread.currentThread.join() // serve until killed
       0

@@ -37,11 +37,12 @@ class EndpointEngine(
     endpointYamlPath: String,
     internalBase: String = "",
     val traces: TraceStore = new TraceStore(),
-    // rich trace capture costs probe re-executions per request (see
-    // [[EndpointEngine.defaultTraceDetail]]'s cost note); Server/UiServer
-    // and the CLI plumb the flag explicitly (--no-trace-detail), with the
-    // -Dgraft.trace.detail property as the default
-    traceDetail: Boolean = EndpointEngine.defaultTraceDetail) {
+    // rich trace capture (records/nodes/op children): the traced rules run
+    // in the same number of jobs, with the trace values recorded beside
+    // their output (see [[TraceDetail]]); false keeps the flat steps[]
+    // trace and the untraced plans. Server/UiServer and the CLI
+    // (--no-trace-detail) plumb it through.
+    traceDetail: Boolean = true) {
 
   private val mapper = new ObjectMapper()
   private val baseDir: Path =
@@ -57,28 +58,9 @@ class EndpointEngine(
   // loaded rule files by resolved path (plans compile once per rule)
   private val ruleCache = scala.collection.concurrent.TrieMap.empty[String, RuleKind]
 
-  /** Rich trace capture (records/nodes/op children, reference-shaped) —
-    * best-effort probes beside the real execution; see [[TraceDetail]].
-    * Branch rules parse once per resolved path (the same plans-compile-once
-    * doctrine as ruleCache), not once per traced request. */
-  private val branchRuleCache =
-    scala.collection.concurrent.TrieMap.empty[Path, RuleFile]
-  private lazy val detail = new TraceDetail(spark, { resolved =>
-    // only SUCCESSFUL parses cache (the ruleCache doctrine — its body
-    // throws and retries): a transient read failure must not disable
-    // child traces for this path until restart
-    branchRuleCache.get(resolved).orElse {
-      val parsed =
-        try EndpointModel.parseRuleKind(Files.readString(resolved)) match {
-          case NormalRule(rule) => Some(rule)
-          case _ => None
-        } catch { case NonFatal(_) => None }
-      parsed.foreach(r => branchRuleCache.put(resolved, r))
-      parsed
-    }
-  })
+  private val detail = new TraceDetail
 
-  import EndpointEngine.{EndpointError, EndpointFailure, HttpResult}
+  import EndpointEngine.{EndpointError, EndpointFailure, HttpResult, Ran}
 
   // -- request handling ---------------------------------------------------
 
@@ -117,15 +99,14 @@ class EndpointEngine(
     var failed: Option[EndpointError] = inputEither.left.toOption
     trace.input(current)
 
-    // reference-shaped record nodes (one per pipeline stage) captured
-    // beside the flat steps[] — best-effort: a probe failure degrades to a
-    // plain node, never fails the request
+    // reference-shaped record nodes (one per pipeline stage) beside the
+    // flat steps[], rendered from the traced runs' recorded values
     val rnodes = mapper.createArrayNode()
     val origInput = current.deepCopy[JsonNode]()
     def addNode(id: String, label: String, rulePath: Option[String],
         stepIndex: Option[Int], status: String, before: JsonNode,
         durationUs: Long)(enrich: ObjectNode => Unit): Unit =
-      if (traceDetail) try {
+      if (traceDetail) {
         val n = mapper.createObjectNode()
         n.put("id", id)
         n.put("kind", "endpoint")
@@ -139,28 +120,34 @@ class EndpointEngine(
         rulePath.foreach(p => meta.put("rule_ref", p))
         stepIndex.foreach(i => meta.put("step_index", i))
         if (meta.size() > 0) n.set[JsonNode]("meta", meta)
-        // a probe failure degrades to a PLAIN node, never a missing one —
-        // records[0].nodes must stay in sync with the executed stages
+        // a rendering failure degrades to a PLAIN node, never a missing
+        // one — records[0].nodes must stay in sync with the executed stages
         try enrich(n) catch { case NonFatal(_) => () }
         rnodes.add(n)
-      } catch { case NonFatal(_) => () }
+      }
 
     // input mappings reshape @input; their output REPLACES it
     if (failed.isEmpty && endpoint.input.nonEmpty) {
       val inputRule = RuleFile(version = 2, mappings = endpoint.input)
       val before = current.deepCopy[JsonNode]()
       val t0 = System.nanoTime()
-      try current = transformValue(inputRule, current, configContext(None, None), baseDir)
-      catch {
+      var inputRun: Option[Engine.Traced] = None
+      try {
+        val ran = transformValue(inputRule, current, configContext(None, None), baseDir,
+          traceDetail)
+        current = ran.value
+        inputRun = ran.traced
+      } catch {
         case EndpointFailure(e) => failed = Some(e)
         case NonFatal(e) => failed = Some(EndpointError.transform(rootMessage(e)))
       }
       addNode("input", "input", None, None,
           if (failed.isEmpty) "ok" else "error", before,
           (System.nanoTime() - t0) / 1000) { n =>
-        val ops = detail.mappingOps(endpoint.input, before,
-          mapper.createObjectNode(), configContext(None, None), 0)
-        if (ops.size() > 0) n.set[JsonNode]("children", ops)
+        inputRun.foreach { run =>
+          val ops = detail.mappingOps(endpoint.input, run, "mappings", 0)
+          if (ops.size() > 0) n.set[JsonNode]("children", ops)
+        }
       }
     }
     failed.foreach { err =>
@@ -182,23 +169,19 @@ class EndpointEngine(
         val before = current.deepCopy[JsonNode]()
         val stepStarted = System.nanoTime()
         def stepDurUs = (System.nanoTime() - stepStarted) / 1000
-        // a NormalRule step's child_trace: the rule re-run step-by-step
-        // through the trace prefix protocol (TraceDetail.ruleTrace)
-        def withChildTrace(n: ObjectNode): Unit = {
-          val resolved = baseDir.resolve(step.rulePath).normalize()
+        // a step's child_trace, rendered from the values its traced run
+        // recorded (TraceDetail.ruleTrace / networkTrace)
+        def withChildTrace(ran: Ran)(n: ObjectNode): Unit = {
+          val name = baseDir.resolve(step.rulePath).normalize().getFileName.toString
           loadRule(step.rulePath) match {
             case NormalRule(rule) =>
-              val childBase = Option(resolved.getParent).getOrElse(baseDir)
-              n.set[JsonNode]("child_trace", detail.ruleTrace(
-                resolved.getFileName.toString, step.rulePath, rule, before,
-                configContext(step.withParams, None), childBase,
-                Some(current)))
-              ()
+              ran.traced.foreach { run =>
+                n.set[JsonNode]("child_trace", detail.ruleTrace(name, step.rulePath,
+                  rule, before, Some(current), run, Some(stepDurUs)))
+              }
             case NetworkRule(spec) =>
-              n.set[JsonNode]("child_trace", detail.networkTrace(
-                resolved.getFileName.toString, step.rulePath, spec, before,
-                Some(current), configContext(step.withParams, None),
-                stepDurUs))
+              n.set[JsonNode]("child_trace", detail.networkTrace(name, step.rulePath,
+                spec, before, Some(current), ran.traced, stepDurUs))
               ()
             case _ => ()
           }
@@ -212,10 +195,11 @@ class EndpointEngine(
             "skipped", before, stepDurUs)(_ => ())
         } else {
           try {
-            current = executeRule(step.rulePath, current, step.withParams)
+            val ran = executeRule(step.rulePath, current, step.withParams, traceDetail)
+            current = ran.value
             trace.step(step.rulePath, "ok", stepDurUs)
             addNode(s"step-$idx", step.rulePath, Some(step.rulePath), Some(idx),
-              "ok", before, stepDurUs)(withChildTrace)
+              "ok", before, stepDurUs)(withChildTrace(ran))
           } catch {
             case NonFatal(e) =>
               val err = e match {
@@ -337,26 +321,33 @@ class EndpointEngine(
     })
 
   private def executeRule(rulePath: String, input: JsonNode,
-      withParams: Option[JValue]): JsonNode =
+      withParams: Option[JValue], traced: Boolean = false): Ran =
     loadRule(rulePath) match {
       case NormalRule(rule) =>
         transformValue(rule, input, configContext(withParams, None),
-          Option(baseDir.resolve(rulePath).normalize().getParent).getOrElse(baseDir))
+          Option(baseDir.resolve(rulePath).normalize().getParent).getOrElse(baseDir),
+          traced)
       case NetworkRule(spec) =>
-        executeNetwork(spec, input, configContext(withParams, None))
+        executeNetwork(spec, input, configContext(withParams, None), traced)
       case EndpointRule(_) =>
         throw EndpointFailure(EndpointError.invalid("step rule must be normal or network"))
     }
 
   /** Run a normal rule over the running record (object = one record,
-    * array = the record set); finalize makes the output an array. */
+    * array = the record set); finalize makes the output an array.
+    * `traced` runs it through [[Engine.toJsonRecordsTraced]]: the same
+    * output from one job, plus the values its plan recorded. */
   private def transformValue(rule: RuleFile, value: JsonNode, context: JValue,
-      ruleBaseDir: Path): JsonNode = {
-    val outputs =
-      try Engine.toJsonRecords(rule, recordDf(value), context,
-          nullAsMissing = true, Engine.fileLoader(ruleBaseDir.toString))
-        .collect().map(r => mapper.readTree(r.getString(0)))
-      catch {
+      ruleBaseDir: Path, traced: Boolean = false): Ran = {
+    val (json, run) =
+      try {
+        val (df, loader) = (recordDf(value), Engine.fileLoader(ruleBaseDir.toString))
+        if (traced) {
+          val run = Engine.toJsonRecordsTraced(rule, df, context, nullAsMissing = true, loader)
+          (run.output, Some(run))
+        } else (Engine.toJsonRecords(rule, df, context, nullAsMissing = true, loader)
+          .collect().toSeq.map(_.getString(0)), None)
+      } catch {
         case e: ExprCompiler.RmError =>
           throw EndpointFailure(EndpointError.transform(e.getMessage))
         case NonFatal(e) =>
@@ -364,13 +355,16 @@ class EndpointEngine(
           throw EndpointFailure(EndpointError.transform(
             rm.map(_.getMessage).getOrElse(rootMessage(e))))
       }
-    if (rule.finalizeSpec.exists(_.wrap.nonEmpty))
-      outputs.headOption.getOrElse(mapper.createObjectNode())
-    else if (rule.finalizeSpec.isDefined || value.isArray) {
-      val arr = mapper.createArrayNode()
-      outputs.foreach(arr.add)
-      arr
-    } else outputs.headOption.getOrElse(mapper.createObjectNode())
+    val outputs = json.map(mapper.readTree)
+    val result =
+      if (rule.finalizeSpec.exists(_.wrap.nonEmpty))
+        outputs.headOption.getOrElse(mapper.createObjectNode())
+      else if (rule.finalizeSpec.isDefined || value.isArray) {
+        val arr = mapper.createArrayNode()
+        outputs.foreach(arr.add)
+        arr
+      } else outputs.headOption.getOrElse(mapper.createObjectNode())
+    Ran(result, run)
   }
 
   /** One-record (or record-array) DataFrame through the standard JSON
@@ -417,7 +411,7 @@ class EndpointEngine(
       loadRule(target) match {
         case NormalRule(rule) =>
           transformValue(rule, input, configContext(params, Some(err)),
-            Option(baseDir.resolve(target).normalize().getParent).getOrElse(baseDir))
+            Option(baseDir.resolve(target).normalize().getParent).getOrElse(baseDir)).value
         case _ => throw EndpointFailure(EndpointError.invalid("catch rule must be normal"))
       }
     }
@@ -425,10 +419,10 @@ class EndpointEngine(
   // -- network ------------------------------------------------------------
 
   private def executeNetwork(spec: NetworkSpec, input: JsonNode,
-      context: JValue): JsonNode = {
-    def catchOr(err: EndpointError): JsonNode =
-      runCatch(spec.catchSpec, err, input, None)
-        .getOrElse(throw EndpointFailure(err))
+      context: JValue, traced: Boolean): Ran = {
+    def catchOr(err: EndpointError): Ran =
+      Ran(runCatch(spec.catchSpec, err, input, None)
+        .getOrElse(throw EndpointFailure(err)))
 
     val url =
       try evalJson(spec.url, input, context) match {
@@ -441,15 +435,18 @@ class EndpointEngine(
       }
       catch { case NonFatal(e) => return catchOr(EndpointError.invalid(rootMessage(e))) }
 
+    var bodyMapRun: Option[Engine.Traced] = None
     val body: Option[String] =
       try {
         if (spec.body.isDefined)
           evalJson(spec.body.get, input, context) // missing ⇒ no body
-        else if (spec.bodyMap.nonEmpty)
-          Some(mapper.writeValueAsString(
-            transformValue(RuleFile(version = 2, mappings = spec.bodyMap), input, context, baseDir)))
-        else spec.bodyRule.map { rp =>
-          mapper.writeValueAsString(executeRule(rp, input, None))
+        else if (spec.bodyMap.nonEmpty) {
+          val ran = transformValue(RuleFile(version = 2, mappings = spec.bodyMap), input,
+            context, baseDir, traced)
+          bodyMapRun = ran.traced
+          Some(mapper.writeValueAsString(ran.value))
+        } else spec.bodyRule.map { rp =>
+          mapper.writeValueAsString(executeRule(rp, input, None).value)
         }
       } catch {
         case EndpointFailure(e) => return catchOr(e)
@@ -471,8 +468,8 @@ class EndpointEngine(
               }
               if (cur == null)
                 return catchOr(EndpointError.invalid("select path not found"))
-              return cur
-            case None => return value
+              return Ran(cur, bodyMapRun)
+            case None => return Ran(value, bodyMapRun)
           }
         case Left(err) =>
           val retryable = err.kind == "Timeout" || err.kind == "Network"
@@ -560,17 +557,9 @@ class EndpointEngine(
 }
 
 object EndpointEngine {
-  /** Default for rich trace capture: ON (the reference is always rich)
-    * unless -Dgraft.trace.detail=false. Server / UiServer / the CLI also
-    * take the flag explicitly (`--no-trace-detail`), so a deployment can
-    * disable capture without JVM flags. COST: each richly-traced request
-    * runs one one-row Spark probe job per mapping/condition plus
-    * O(steps²) rule-prefix re-executions for child traces — orders of
-    * magnitude over the bare transform; latency-sensitive serving should
-    * turn it off and keep the flat trace. Safe parse: only an explicit
-    * "false" disables — a malformed value must never crash construction. */
-  def defaultTraceDetail: Boolean =
-    !sys.props.get("graft.trace.detail").exists(_.equalsIgnoreCase("false"))
+  /** A stage's result value plus, for a traced run, what its plan recorded
+    * (for a network rule: its body_map run). */
+  private final case class Ran(value: JsonNode, traced: Option[Engine.Traced] = None)
 
   final case class HttpResult(status: Int, headers: Seq[(String, String)], body: String)
 

@@ -16,10 +16,10 @@ object Server {
 
   def start(spark: SparkSession, endpointYaml: String, port: Int,
       internalBase: String = "",
-      // rich trace capture: expensive per request (probe jobs — see
-      // EndpointEngine.defaultTraceDetail); deployments disable it here
-      // or via the CLI's --no-trace-detail without touching JVM props
-      traceDetail: Boolean = EndpointEngine.defaultTraceDetail): HttpServer = {
+      // rich trace capture: the same jobs per request, with the trace
+      // values recorded in the rule's own plan; false (the CLI's
+      // --no-trace-detail) keeps the flat trace and the untraced plans
+      traceDetail: Boolean = true): HttpServer = {
     val engine = new EndpointEngine(spark, endpointYaml,
       if (internalBase.nonEmpty) internalBase else s"http://127.0.0.1:$port",
       traceDetail = traceDetail)

@@ -1,245 +1,150 @@
 package graft.endpoint
 
-import java.nio.file.Path
+import java.nio.file.Paths
 
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.rules.{Engine, Model}
+import graft.rules.Engine
 import graft.rules.Model._
 
-/** Reference-shaped rich trace capture for the endpoint engine (reference
+/** Reference-shaped rich trace for the endpoint engine (reference
   * `endpoint_engine.rs`: build_rule_nodes_from_rule:2355, the per-mapping
   * op capture build_mapping_ops_with_values:2975 and build_pipe_steps:3160):
   * per-step nodes with record_when/asserts_ok/branch_taken meta, a
-  * recursive `child_trace` for branch targets, and per-mapping op children
-  * carrying `input` / `pipe_value` / `args` / `output` plus the per-stage
-  * `pipe_steps` transition the UI's OP-result view renders.
+  * recursive `child_trace` for the branch target the plan compiled, and
+  * per-mapping op children carrying `input` / `pipe_value` / `args` /
+  * `output` plus the per-stage `pipe_steps` transition the UI's OP-result
+  * view renders.
   *
-  * Everything here is BEST-EFFORT observation: probes re-evaluate rule
-  * prefixes against one-row DataFrames through the same compiled plans the
-  * real execution used, and any probe failure degrades to an absent field,
-  * never to a failed request — and never to an affirmative wrong claim
-  * (an unresolved probe omits its meta rather than defaulting it). All
-  * pipe prefixes of one mapping evaluate in a single job
-  * ([[Engine.evalExprsJsonTrace]]), so an n-step pipe costs one collect,
-  * not n.
-  *
-  * Cost: like the reference (whose build_rule_nodes_from_rule re-runs
-  * rule prefixes per request), capture is O(steps²) rule re-executions
-  * plus one probe job per mapping/condition — debugging-surface pricing,
-  * not data-path pricing. Latency-sensitive serving sets
-  * `traceDetail = false` on [[EndpointEngine]] and keeps the flat
-  * steps[] traces. */
-private[endpoint] final class TraceDetail(
-    spark: SparkSession,
-    parseNormalRule: Path => Option[RuleFile]) {
+  * The trace comes from the one execution that produced the reply: the
+  * engine runs the rule through [[Engine.toJsonRecordsTraced]], whose plan
+  * records every pipe stage, `when` gate, condition outcome and cumulative
+  * `@out` in the same job as the output. This class only renders those
+  * values. A value the plan did not record — it raised, or its step never
+  * ran — is an absent field, never a guess. Inner nodes carry no
+  * `duration_us`: one job has no per-step timing. */
+private[endpoint] final class TraceDetail {
 
   private val mapper = new ObjectMapper()
   private val traceSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The recorded value at `key`, parsed. */
+  private def recorded(run: Engine.Traced, key: String): Option[JsonNode] =
+    run.values.get(key).flatMap { s =>
+      try Some(mapper.readTree(s)) catch { case NonFatal(_) => None }
+    }
 
   // -- entry points --------------------------------------------------------
 
   /** The `child_trace` document of one normal-rule execution: rule header,
     * a single record with per-step nodes, and the reference's summary
-    * block. `fullOutput` = the real execution's result when the caller
-    * already has it (saves re-running the rule for the record output). */
+    * block. `scope` selects a branch sub-rule's values inside `run`. */
   def ruleTrace(name: String, refPath: String, rule: RuleFile, input: JsonNode,
-      context: JValue, ruleBaseDir: Path,
-      fullOutput: Option[JsonNode]): ObjectNode = {
-    val (nodes, status, lastOut) = ruleNodes(rule, input, context, ruleBaseDir)
-    val durationUs = sumNodeDurations(nodes)
-    val record = mapper.createObjectNode()
-    record.put("index", 0)
-    record.put("status", status)
-    record.put("duration_us", durationUs)
-    record.set[JsonNode]("input", input.deepCopy[JsonNode]())
-    record.set[JsonNode]("output",
-      fullOutput.orElse(lastOut).map(_.deepCopy[JsonNode]())
-        .getOrElse(mapper.nullNode()))
-    record.set[JsonNode]("nodes", nodes)
-    val t = mapper.createObjectNode()
-    t.put("trace_id", s"child-${traceSeq.incrementAndGet()}")
-    val ruleObj = mapper.createObjectNode()
-    ruleObj.put("type", "normal")
-    ruleObj.put("name", name)
-    ruleObj.put("path", refPath)
-    ruleObj.put("version", rule.version)
-    t.set[JsonNode]("rule", ruleObj)
-    val records = mapper.createArrayNode(); records.add(record)
-    t.set[JsonNode]("records", records)
-    val summary = mapper.createObjectNode()
-    summary.put("record_total", 1)
-    summary.put("record_success", if (status == "ok") 1 else 0)
-    summary.put("record_failed", if (status == "ok") 0 else 1)
-    summary.put("duration_us", durationUs)
-    t.set[JsonNode]("summary", summary)
-    t
+      output: Option[JsonNode], run: Engine.Traced, durationUs: Option[Long],
+      scope: String = ""): ObjectNode = {
+    val (nodes, status) = ruleNodes(rule, input, run, scope)
+    traceDoc("normal", name, refPath, rule.version, status, input, output, nodes,
+      durationUs)
   }
 
-  /** Per-step nodes of one rule execution over one record, mirroring the
-    * reference's prefix-execution protocol: step i's cumulative output is
-    * the rule truncated to steps[0..i] (finalize off) re-run through the
-    * batch engine, so a skip/halt/error lands on exactly the step that
-    * caused it. Returns (nodes, overall status, last cumulative output). */
-  def ruleNodes(rule: RuleFile, input: JsonNode, context: JValue,
-      ruleBaseDir: Path): (ArrayNode, String, Option[JsonNode]) = {
+  /** Per-step nodes of one traced rule execution over its first record:
+    * each step's cumulative output and keep state as the plan recorded
+    * them, so a drop lands on exactly the step that caused it. Returns
+    * (nodes, record status: "ok", or "skipped" when the record was
+    * dropped). */
+  def ruleNodes(rule: RuleFile, input: JsonNode, run: Engine.Traced,
+      scope: String = ""): (ArrayNode, String) = {
+    def value(key: String): Option[JsonNode] = recorded(run, scope + key)
+    def flag(key: String): Option[Boolean] = value(key).map(_.asBoolean)
     val nodes = mapper.createArrayNode()
-    var overall = "ok"
-    var lastOut: Option[JsonNode] = None
-    if (rule.steps.nonEmpty) {
-      // the engine applies TOP-LEVEL mappings before steps, so step 0's
-      // @out scope (and its displayed input) is the mappings' output, not
-      // {} — probe it with the zero-step prefix and surface it as its own
-      // node, mirroring the no-steps branch. If the PROBE fails, emit
-      // nothing and suppress step-0's condition meta too: an unknown base
-      // scope must degrade to absent fields, never to conditions probed
-      // against the wrong record state.
-      var prevOutput: JsonNode = mapper.createObjectNode()
-      var baseKnown = rule.mappings.isEmpty
-      if (rule.mappings.nonEmpty) {
-        val started = System.nanoTime()
-        runPrefix(rule.copy(steps = Nil), -1, input, context, ruleBaseDir) match {
-          case Right(Some(out)) =>
-            prevOutput = out; lastOut = Some(out); baseKnown = true
-          case _ => ()
-        }
-        if (baseKnown) {
-          // op ids use one-past-the-last step index — unique against every
-          // real step's "op-<step>-<i>" children in the same record tree
-          val ops = mappingOps(rule.mappings, input,
-            mapper.createObjectNode(), context, rule.steps.length)
-          val node = mapper.createObjectNode()
-          node.put("id", "mappings")
-          node.put("kind", "mapping")
-          node.put("label", "mappings")
-          node.put("status", "ok")
-          node.set[JsonNode]("input", input.deepCopy[JsonNode]())
-          node.set[JsonNode]("output", prevOutput.deepCopy[JsonNode]())
-          node.put("duration_us", (System.nanoTime() - started) / 1000)
-          if (ops.size() > 0) node.set[JsonNode]("children", ops)
-          nodes.add(node)
-        }
-      }
-      var halted = false
-      rule.steps.zipWithIndex.foreach { case (step, i) =>
-        val started = System.nanoTime()
-        val stepInput = prevOutput
-        var status = "ok"
-        var error: Option[String] = None
-        var output: Option[JsonNode] = None
-        if (halted) status = "skipped"
-        else runPrefix(rule, i, input, context, ruleBaseDir) match {
-          case Right(Some(out)) => prevOutput = out; output = Some(out); lastOut = Some(out)
-          case Right(None) => status = "skipped"; halted = true
-          case Left(msg) =>
-            status = "error"; error = Some(msg); halted = true; overall = "error"
-        }
-        val durationUs = (System.nanoTime() - started) / 1000
-        val kind = step match {
-          case _: StepBranch => "branch"
-          case _: StepRecordWhen => "record_when"
-          case _: StepAsserts => "asserts"
-          case _: StepMappings => "mappings"
-        }
-        val node = mapper.createObjectNode()
-        node.put("id", s"step-$i")
-        node.put("kind", kind)
-        node.put("label", s"step-${i + 1}")
-        node.put("status", status)
-        node.set[JsonNode]("input", stepInput.deepCopy[JsonNode]())
-        node.set[JsonNode]("output",
-          output.map(_.deepCopy[JsonNode]()).getOrElse(mapper.nullNode()))
-        node.put("duration_us", durationUs)
-        error.foreach { msg =>
-          val e = mapper.createObjectNode()
-          e.put("message", msg)
-          node.set[JsonNode]("error", e)
-        }
-        val meta = mapper.createObjectNode()
-        // step 0's cond probes need the top-level-mappings base scope; if
-        // that probe failed, omit them (i > 0 inputs are self-contained)
-        val probeable = status != "skipped" && (i > 0 || baseKnown)
-        step match {
-          case StepRecordWhen(cond) if probeable =>
-            condProbe(cond, input, stepInput, context)
-              .foreach(f => meta.put("record_when", f))
-          case StepAsserts(asserts) if probeable =>
-            val flags = asserts.map(a => condProbe(a.when, input, stepInput, context))
-            // a failed PROBE must degrade to an absent field, never to a
-            // false red: only report asserts_ok when every probe resolved
-            if (flags.forall(_.isDefined))
-              meta.put("asserts_ok", flags.forall(_.contains(true)))
-          case StepBranch(when, thenPath, elsePath, _) if probeable =>
-            val probed = condProbe(when, input, stepInput, context)
-            val taken = probed.map {
-              case true => "then"
-              case false => if (elsePath.isDefined) "else" else "none"
-            }
-            // probe failure (None) omits branch_taken entirely — "none"
-            // would affirmatively claim an untaken branch
-            taken.foreach(t => meta.put("branch_taken", t))
-            val refs = mapper.createArrayNode()
-            refs.add(thenPath); elsePath.foreach(refs.add)
-            meta.set[JsonNode]("rule_refs", refs)
-            val labels = mapper.createArrayNode()
-            labels.add("branch: then"); elsePath.foreach(_ => labels.add("branch: else"))
-            meta.set[JsonNode]("rule_ref_labels", labels)
-            val takenPath = taken match {
-              case Some("then") => Some(thenPath)
-              case Some("else") => elsePath
-              case _ => None
-            }
-            takenPath.foreach { p =>
-              meta.put("rule_ref", p)
-              meta.put("rule_ref_label", s"branch: ${taken.getOrElse("")}")
-              try {
-                val resolved = ruleBaseDir.resolve(p).normalize()
-                parseNormalRule(resolved).foreach { child =>
-                  val childBase =
-                    Option(resolved.getParent).getOrElse(ruleBaseDir)
-                  node.set[JsonNode]("child_trace",
-                    ruleTrace(resolved.getFileName.toString, p, child,
-                      stepInput, context, childBase, None))
-                }
-              } catch { case NonFatal(_) => () }
-            }
-          case _ => ()
-        }
-        if (meta.size() > 0) node.set[JsonNode]("meta", meta)
-        step match {
-          case StepMappings(mappings) if status == "ok" =>
-            // the out scope a step's mappings see starts from the step
-            // input (reference: mapping_out = step_input.clone())
-            val outStart = stepInput match {
-              case o: ObjectNode => o.deepCopy[ObjectNode]()
-              case _ => mapper.createObjectNode()
-            }
-            val ops = mappingOps(mappings, input, outStart, context, i)
-            if (ops.size() > 0) node.set[JsonNode]("children", ops)
-          case _ => ()
-        }
-        nodes.add(node)
-      }
-    } else {
-      val started = System.nanoTime()
-      val out = mapper.createObjectNode()
-      val ops = mappingOps(rule.mappings, input, out, context, 0)
-      val durationUs = (System.nanoTime() - started) / 1000
+    def stageNode(id: String, kind: String, label: String, status: String,
+        stageInput: JsonNode, output: Option[JsonNode], ops: => ArrayNode): ObjectNode = {
       val node = mapper.createObjectNode()
-      node.put("id", "step-0")
-      node.put("kind", "mapping")
-      node.put("label", "mappings")
-      node.put("status", "ok")
-      node.set[JsonNode]("input", input.deepCopy[JsonNode]())
-      node.set[JsonNode]("output", out)
-      node.put("duration_us", durationUs)
-      if (ops.size() > 0) node.set[JsonNode]("children", ops)
+      node.put("id", id)
+      node.put("kind", kind)
+      node.put("label", label)
+      node.put("status", status)
+      node.set[JsonNode]("input", stageInput.deepCopy[JsonNode]())
+      node.set[JsonNode]("output", output.getOrElse(mapper.nullNode()))
+      if (status == "ok") {
+        val children = ops
+        if (children.size() > 0) node.set[JsonNode]("children", children)
+      }
       nodes.add(node)
-      lastOut = Some(out)
+      node
+    }
+    // the engine applies TOP-LEVEL mappings before steps, so they surface
+    // as their own node and their output is step 0's input
+    val base = value("mappings")
+    var alive = flag("mappings.kept").contains(true)
+    if (rule.steps.isEmpty)
+      stageNode("step-0", "mapping", "mappings", if (alive) "ok" else "skipped",
+        input, base, mappingOps(rule.mappings, run, s"${scope}mappings", 0))
+    else if (rule.mappings.nonEmpty)
+      // op ids use one-past-the-last step index — unique against every
+      // real step's "op-<step>-<i>" children in the same record tree
+      stageNode("mappings", "mapping", "mappings", if (alive) "ok" else "skipped",
+        input, base, mappingOps(rule.mappings, run, s"${scope}mappings", rule.steps.length))
+    var stepInput = base.getOrElse(mapper.createObjectNode())
+    rule.steps.zipWithIndex.foreach { case (step, i) =>
+      val at = s"steps[$i]"
+      // a step ran when the record reached it (after a return:true branch
+      // the plan compiles no further steps, so nothing is recorded)
+      val kept = flag(s"$at.kept")
+      val ran = alive && kept.isDefined
+      if (ran) alive = kept.contains(true)
+      val output = if (ran && alive) value(at) else None
+      val kind = step match {
+        case _: StepBranch => "branch"
+        case _: StepRecordWhen => "record_when"
+        case _: StepAsserts => "asserts"
+        case _: StepMappings => "mappings"
+      }
+      val node = stageNode(s"step-$i", kind, s"step-${i + 1}",
+        if (output.isDefined) "ok" else "skipped", stepInput, output, step match {
+          case StepMappings(ms) => mappingOps(ms, run, s"$scope$at.mappings", i)
+          case _ => mapper.createArrayNode()
+        })
+      val meta = mapper.createObjectNode()
+      if (ran) step match {
+        case StepRecordWhen(_) =>
+          flag(s"$at.record_when").foreach(f => meta.put("record_when", f))
+        case StepAsserts(asserts) =>
+          val flags = asserts.indices.map(a => flag(s"$at.asserts[$a]"))
+          if (flags.forall(_.isDefined))
+            meta.put("asserts_ok", flags.forall(_.contains(true)))
+        case StepBranch(_, thenPath, elsePath, _) =>
+          // an errored condition records no outcome: branch_taken is
+          // omitted rather than claimed
+          val taken = flag(s"$at.when").map {
+            case true => "then"
+            case false => if (elsePath.isDefined) "else" else "none"
+          }
+          taken.foreach(t => meta.put("branch_taken", t))
+          val refs = mapper.createArrayNode()
+          refs.add(thenPath); elsePath.foreach(refs.add)
+          meta.set[JsonNode]("rule_refs", refs)
+          val labels = mapper.createArrayNode()
+          labels.add("branch: then"); elsePath.foreach(_ => labels.add("branch: else"))
+          meta.set[JsonNode]("rule_ref_labels", labels)
+          taken.filter(_ != "none").foreach { side =>
+            val p = if (side == "then") thenPath else elsePath.get
+            meta.put("rule_ref", p)
+            meta.put("rule_ref_label", s"branch: $side")
+            val subScope = s"$scope$at.$side/"
+            run.subRules.get(subScope).foreach { sub =>
+              node.set[JsonNode]("child_trace", ruleTrace(
+                Option(Paths.get(p).getFileName).map(_.toString).getOrElse(p), p, sub,
+                stepInput, value(s"$at.$side/out"), run, None, subScope))
+            }
+          }
+        case _ => ()
+      }
+      if (meta.size() > 0) node.set[JsonNode]("meta", meta)
+      output.foreach(stepInput = _)
     }
     rule.finalizeSpec.foreach { fin =>
       val node = mapper.createObjectNode()
@@ -285,19 +190,22 @@ private[endpoint] final class TraceDetail(
       if (ops.size() > 0) node.set[JsonNode]("children", ops)
       nodes.add(node)
     }
-    (nodes, overall, lastOut)
+    (nodes, if (alive) "ok" else "skipped")
   }
 
-  /** Per-mapping op nodes (reference build_mapping_ops_with_values): each
-    * op carries its evaluated `input` (pipe start), full `output`, the
-    * rendered `pipe_value`/`args`, and the per-stage `pipe_steps`
-    * transition; outputs accumulate into `out` so later mappings see the
-    * `@out` state the real execution gave them. */
-  def mappingOps(mappings: Seq[Mapping], record: JsonNode, out: ObjectNode,
-      context: JValue, stepIndex: Int): ArrayNode = {
+  /** Per-mapping op nodes (reference build_mapping_ops_with_values) for
+    * the mappings recorded at `path` (`mappings`, `steps[1].mappings`):
+    * each op carries its pipe-start `input`, the rendered
+    * `pipe_value`/`args`, the per-stage `pipe_steps` transition, and as
+    * `output` the value the mapping writes — null when its `when` gate
+    * closed. A gate that raised records no outcome: no `when` claim, and
+    * the computed value stays beside the skipped write. */
+  def mappingOps(mappings: Seq[Mapping], run: Engine.Traced, path: String,
+      stepIndex: Int): ArrayNode = {
     val ops = mapper.createArrayNode()
     mappings.zipWithIndex.foreach { case (m, i) =>
-      val started = System.nanoTime()
+      def value(what: String): JsonNode =
+        recorded(run, s"$path[$i].$what").getOrElse(mapper.nullNode())
       val op = mapper.createObjectNode()
       op.put("id", s"op-$stepIndex-$i")
       op.put("kind", "op")
@@ -311,76 +219,30 @@ private[endpoint] final class TraceDetail(
       if (m.required) args.put("required", true)
       m.default.foreach(d => args.set[JsonNode]("default", jvalueToNode(d)))
       op.set[JsonNode]("args", args)
-      // pipe prefixes: start, start|s1, ..., full — ONE evaluation job
-      val (prefixes, labels) = m.expr match {
+      val labels = m.expr match {
         case EPipe(start, steps) =>
-          val ps = start +: steps.indices.map(k => EPipe(start, steps.take(k + 1)))
-          (ps, startLabel(start) +: steps.map(stepLabel))
-        case e => (Seq(e), Seq(soloLabel(e)))
+          op.set[JsonNode]("pipe_value", renderExpr(m.expr))
+          startLabel(start) +: steps.map(stepLabel)
+        case e => Seq(soloLabel(e))
       }
-      // a FAILED probe run (collect threw) must not be conflated with a
-      // genuinely missing value: missing triggers the default-write below,
-      // failure must degrade to absent fields only
-      var probeRan = true
-      val evals =
-        try Engine.evalExprsJsonTrace(prefixes, traceRow(record, out), context)
-        catch { case NonFatal(_) =>
-          probeRan = false; Vector.fill(prefixes.size)(None) }
-      def parsed(i: Int): Option[JsonNode] =
-        evals.lift(i).flatten.flatMap { s =>
-          try Some(mapper.readTree(s)) catch { case NonFatal(_) => None }
-        }
-      m.expr match {
-        case EPipe(_, _) => op.set[JsonNode]("pipe_value", renderExpr(m.expr)); ()
-        case _ => ()
-      }
-      op.set[JsonNode]("input", parsed(0).getOrElse(mapper.nullNode()))
-      val full = parsed(prefixes.size - 1)
-      op.set[JsonNode]("output", full.getOrElse(mapper.nullNode()))
+      op.set[JsonNode]("input", value("pipe[0]"))
+      val gate = recorded(run, s"$path[$i].when").map(_.asBoolean)
+      op.set[JsonNode]("output",
+        if (gate.contains(false)) mapper.nullNode() else value("out"))
       val pipeSteps = mapper.createArrayNode()
       labels.zipWithIndex.foreach { case (label, k) =>
         val ps = mapper.createObjectNode()
         ps.put("index", k)
         ps.put("label", label)
         ps.set[JsonNode]("input",
-          (if (k == 0) None else parsed(k - 1)).getOrElse(mapper.nullNode()))
-        ps.set[JsonNode]("output", parsed(k).getOrElse(mapper.nullNode()))
+          if (k == 0) mapper.nullNode() else value(s"pipe[${k - 1}]"))
+        ps.set[JsonNode]("output", value(s"pipe[$k]"))
         pipeSteps.add(ps)
       }
       op.set[JsonNode]("pipe_steps", pipeSteps)
-      op.put("duration_us", (System.nanoTime() - started) / 1000)
       val meta = mapper.createObjectNode(); meta.put("op", "mapping")
-      // mirror the engine's write semantics so LATER op probes see the
-      // same @out the real execution gave them: a false `when` skips the
-      // write (and the op reports when=false with a null output — the
-      // value was never produced), a missing expr falls to `default`.
-      // A FAILED when-probe (None) skips the write conservatively but
-      // reports nothing — never an affirmative claim.
-      val whenProbe = m.when.map(c =>
-        try Engine.evalCondTrace(c, traceRow(record, out), context)
-        catch { case NonFatal(_) => None })
-      whenProbe.flatten.foreach(f => meta.put("when", f))
+      gate.foreach(f => meta.put("when", f))
       op.set[JsonNode]("meta", meta)
-      // three when states, three renderings: Some(Some(true)) opens the
-      // gate; Some(Some(false)) CLOSED it — output null, the value was
-      // never produced; Some(None) means the PROBE failed — the real
-      // execution may well have written the value, so the op keeps the
-      // probed full output (or null if that probe failed too) and simply
-      // skips the @out write: degradation is absent fields, never the
-      // affirmative output:null a closed gate renders
-      val gateOpen = whenProbe.forall(_.contains(true))
-      val gateClosed = whenProbe.exists(_.contains(false))
-      if (gateOpen && probeRan) {
-        // default applies only to a PROBED missing value — after a probe
-        // failure the real value is unknown, so nothing is written or
-        // claimed (the best-effort contract)
-        val written = full.orElse(m.default.map(jvalueToNode))
-        written.foreach(v => setPath(out, m.target, v))
-        if (full.isEmpty)
-          op.set[JsonNode]("output",
-            written.map(_.deepCopy[JsonNode]()).getOrElse(mapper.nullNode()))
-      } else if (gateClosed)
-        op.set[JsonNode]("output", mapper.nullNode())
       ops.add(op)
     }
     ops
@@ -389,13 +251,13 @@ private[endpoint] final class TraceDetail(
   /** The `child_trace` of a NETWORK rule step (reference
     * build_network_nodes_with_timing: endpoint_engine.rs:2870): one
     * "network" node whose op children describe the declared call —
-    * request (method/url/headers), body expr or body_map ops or
-    * body_rule ref, select path, retry policy. These are the RULE's
-    * declared shapes, not live wire captures — the reference renders the
-    * same static view. */
+    * request (method/url/headers), body expr or body_map ops (from the
+    * traced body_map run) or body_rule ref, select path, retry policy.
+    * These are the RULE's declared shapes, not live wire captures — the
+    * reference renders the same static view. */
   def networkTrace(name: String, refPath: String,
       spec: EndpointModel.NetworkSpec, input: JsonNode,
-      output: Option[JsonNode], context: JValue,
+      output: Option[JsonNode], bodyMapRun: Option[Engine.Traced],
       durationUs: Long): ObjectNode = {
     val children = mapper.createArrayNode()
     def op(id: String, label: String)(fill: ObjectNode => Unit): Unit = {
@@ -427,9 +289,8 @@ private[endpoint] final class TraceDetail(
         ()
       }
     }
-    if (spec.bodyMap.nonEmpty)
-      mappingOps(spec.bodyMap, input, mapper.createObjectNode(), context, 0)
-        .forEach(n => { children.add(n); () })
+    bodyMapRun.foreach(run =>
+      mappingOps(spec.bodyMap, run, "mappings", 0).forEach(n => { children.add(n); () }))
     spec.bodyRule.foreach(_ => op("op-body-rule", "body_rule")(_ => ()))
     spec.select.foreach { tokens =>
       op("op-select", "select") { o =>
@@ -465,88 +326,40 @@ private[endpoint] final class TraceDetail(
       node.set[JsonNode]("meta", meta)
     }
     node.set[JsonNode]("children", children)
+    val nodes = mapper.createArrayNode(); nodes.add(node)
+    traceDoc("network", name, refPath, 2, "ok", input, output, nodes, Some(durationUs))
+  }
+
+  /** A `child_trace` document: rule header, one record, summary. */
+  private def traceDoc(kind: String, name: String, refPath: String,
+      version: Int, status: String, input: JsonNode, output: Option[JsonNode],
+      nodes: ArrayNode, durationUs: Option[Long]): ObjectNode = {
     val record = mapper.createObjectNode()
     record.put("index", 0)
-    record.put("status", "ok")
-    record.put("duration_us", durationUs)
+    record.put("status", status)
+    durationUs.foreach(d => record.put("duration_us", d))
     record.set[JsonNode]("input", input.deepCopy[JsonNode]())
     record.set[JsonNode]("output",
       output.map(_.deepCopy[JsonNode]()).getOrElse(mapper.nullNode()))
-    val nodes = mapper.createArrayNode(); nodes.add(node)
     record.set[JsonNode]("nodes", nodes)
     val t = mapper.createObjectNode()
     t.put("trace_id", s"child-${traceSeq.incrementAndGet()}")
     val ruleObj = mapper.createObjectNode()
-    ruleObj.put("type", "network")
+    ruleObj.put("type", kind)
     ruleObj.put("name", name)
     ruleObj.put("path", refPath)
-    ruleObj.put("version", 2)
+    ruleObj.put("version", version)
     t.set[JsonNode]("rule", ruleObj)
     val records = mapper.createArrayNode(); records.add(record)
     t.set[JsonNode]("records", records)
     val summary = mapper.createObjectNode()
     summary.put("record_total", 1)
-    summary.put("record_success", 1)
+    summary.put("record_success", if (status == "ok") 1 else 0)
+    // a run that failed leaves no child trace, so no record here failed
     summary.put("record_failed", 0)
-    summary.put("duration_us", durationUs)
+    durationUs.foreach(d => summary.put("duration_us", d))
     t.set[JsonNode]("summary", summary)
     t
-  }
-
-  // -- evaluation plumbing -------------------------------------------------
-
-  /** `{__rec, __out}` one-row frame for [[Engine.evalExprsJsonTrace]]. */
-  private def traceRow(record: JsonNode, out: JsonNode): DataFrame = {
-    val obj = mapper.createObjectNode()
-    obj.set[JsonNode]("__rec", record)
-    obj.set[JsonNode]("__out", out)
-    graft.sources.Sources.jsonNode(spark, obj, Nil)
-  }
-
-  private def condProbe(c: Cond, record: JsonNode, stepInput: JsonNode,
-      context: JValue): Option[Boolean] =
-    try Engine.evalCondTrace(c, traceRow(record, stepInput), context)
-    catch { case NonFatal(_) => None }
-
-  /** Run the rule truncated to steps[0..i] (finalize off) over the record:
-    * Right(Some(out)) = cumulative output, Right(None) = record dropped
-    * (skip), Left(message) = step error. */
-  private def runPrefix(rule: RuleFile, i: Int, input: JsonNode,
-      context: JValue, ruleBaseDir: Path): Either[String, Option[JsonNode]] =
-    try {
-      val partial = rule.copy(steps = rule.steps.take(i + 1), finalizeSpec = None)
-      val rows = Engine.toJsonRecords(partial,
-          graft.sources.Sources.jsonNode(spark, input, Nil), context,
-          nullAsMissing = true, Engine.fileLoader(ruleBaseDir.toString))
-        .collect()
-      if (rows.isEmpty) Right(None)
-      else Right(Some(mapper.readTree(rows(0).getString(0))))
-    } catch { case NonFatal(e) =>
-      Left(Option(e.getMessage).getOrElse(e.getClass.getSimpleName)) }
-
-  private def sumNodeDurations(nodes: ArrayNode): Long = {
-    var total = 0L
-    nodes.forEach { n =>
-      val d = n.path("duration_us")
-      if (d.isNumber) total += d.asLong()
-    }
-    total
-  }
-
-  /** Write `value` at the dot-path `target` inside `out`, creating
-    * intermediate objects (the trace-side mirror of the engine's nest). */
-  private def setPath(out: ObjectNode, target: Seq[String], value: JsonNode): Unit = {
-    var cur = out
-    target.dropRight(1).foreach { seg =>
-      cur = cur.get(seg) match {
-        case o: ObjectNode => o
-        case _ =>
-          val next = mapper.createObjectNode()
-          cur.set[JsonNode](seg, next)
-          next
-      }
-    }
-    target.lastOption.foreach(seg => cur.set[JsonNode](seg, value.deepCopy[JsonNode]()))
   }
 
   // -- expr rendering (trace display form, v2-flavored) --------------------

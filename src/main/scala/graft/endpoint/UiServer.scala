@@ -34,10 +34,10 @@ object UiServer {
       rulesDir: Option[Path] = None,
       apiMode: String = "rules", // rules | ui-only
       uiEnabled: Boolean = true,
-      // rich trace capture for the /api engines: expensive per request
-      // (probe jobs — see EndpointEngine.defaultTraceDetail); the CLI
-      // exposes it as --no-trace-detail
-      traceDetail: Boolean = EndpointEngine.defaultTraceDetail)
+      // rich trace capture for the /api engines: the same jobs per
+      // request, trace values recorded in the rule's own plan (see
+      // EndpointEngine); the CLI exposes it as --no-trace-detail
+      traceDetail: Boolean = true)
 
   private val mapper = new ObjectMapper()
 

@@ -38,7 +38,13 @@ object Similarity {
     * cost. Self-disabling at scale: a real corpus scans as ≥ cores
     * partitions, the guard never fires, and no payload is shuffled. The
     * target derives from `defaultParallelism`, so lower-core driver runs
-    * fan out to THEIR core count. */
+    * fan out to THEIR core count.
+    *
+    * Precondition: `df`'s leaves are file scans (parquet) that carry
+    * file-size statistics. A stat-less leaf — a `LogicalRDD`, as a
+    * `localCheckpoint` produces — reports `defaultSizeInBytes`, so the
+    * guard never fires there and the side silently stays under-partitioned.
+    * Every current caller feeds a parquet scan. */
   private[graft] def fanOutToCores(df: DataFrame, keys: Column*): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     // "Would this side scan as fewer than `target` partitions?" is

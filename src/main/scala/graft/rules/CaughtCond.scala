@@ -70,6 +70,9 @@ object CaughtCond {
   def apply(keep: Column, defaultPath: String): Column =
     Bridge.column(CaughtCond(Bridge.expression(keep), defaultPath))
 
+  /** Wrap a trace-only value: null where evaluating it raises. */
+  def value(c: Column): Column = Bridge.column(CaughtValue(Bridge.expression(c)))
+
   /** Does evaluating this column potentially raise an engine error? All
     * data-dependent raises go through RmError.raiseCol, whose marker
     * literal ("RMERR|") is visible in the column's expression tree — a
@@ -77,4 +80,21 @@ object CaughtCond {
     * contains the marker in a LITERAL, which rules cannot express). */
   def canRaise(c: Column): Boolean =
     Bridge.expression(c).toString.contains("RMERR|")
+}
+
+/** The value-side sibling of [[CaughtCond]] for values the engine only
+  * records (the endpoint's rich trace): the child's value, or null when
+  * evaluating it raises. A CodegenFallback, so subexpression elimination
+  * never hoists the guarded child out of the catch. */
+case class CaughtValue(child: Expression) extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = true
+  override def prettyName: String = "rm_caught_value"
+
+  override def eval(input: InternalRow): Any =
+    try child.eval(input)
+    catch { case t: Throwable if scala.util.control.NonFatal(t) => null }
+
+  override protected def withNewChildInternal(newChild: Expression): CaughtValue =
+    copy(child = newChild)
 }

@@ -47,11 +47,41 @@ object Engine {
     * plus the per-row warning struct columns in reference emission order. */
   private case class Compiled(df: DataFrame,
       out: scala.collection.immutable.ListMap[String, CE], env: Env,
-      keep: Column = lit(true), warns: Seq[Column] = Nil)
+      keep: Column, warns: Seq[Column], rec: Recorder)
+
+  /** Trace-mode side channel of [[compilePlan]]: (key, JSON text) columns
+    * evaluated in the same plan as the output, keyed by the rule's error
+    * paths (`mappings[0].pipe[1]`, `steps[2].when`, a branch sub-rule's keys
+    * under `steps[2].then/`), plus the branch sub-rules as compiled. Every
+    * recorded column goes through [[CaughtCond.value]]: a value that raises
+    * records null, so recording never fails a record the output keeps.
+    * Inert outside trace mode. */
+  private final class Recorder(on: Boolean, prefix: String,
+      columns: scala.collection.mutable.ArrayBuffer[(String, Column)],
+      subRules: scala.collection.mutable.LinkedHashMap[String, RuleFile]) {
+    def json(key: String, c: => Column): Unit =
+      if (on) columns += (prefix + key) -> CaughtCond.value(c)
+    def apply(key: String, ce: CE): Unit =
+      json(key, when(!ce.missing, jsonEncode(ce.valueOrNull, ce.tpe)))
+    def flag(key: String, c: Column): Unit = apply(key, CE.present(c, BooleanType))
+    /** A [[CaughtCond]] outcome: absent when the condition raised. */
+    def caught(key: String, cc: Column): Unit =
+      apply(key, CE(cc.getField("ok"), cc.getField("kind").isNotNull, BooleanType))
+    def subRule(scope: String, rule: RuleFile): Recorder = {
+      if (on) subRules += (prefix + scope) -> rule
+      new Recorder(on, prefix + scope, columns, subRules)
+    }
+    def recorded: Seq[(String, Column)] = columns.toSeq
+    def compiledSubRules: Map[String, RuleFile] = subRules.toMap
+  }
+  private object Recorder {
+    def apply(on: Boolean): Recorder = new Recorder(on, "",
+      scala.collection.mutable.ArrayBuffer.empty, scala.collection.mutable.LinkedHashMap.empty)
+  }
 
   private def compilePlan(rule: RuleFile, input: DataFrame, context: JValue,
       nullAsMissing: Boolean, ruleLoader: RuleLoader,
-      collectWarnings: Boolean = false): Compiled = {
+      collectWarnings: Boolean = false, trace: Boolean = false): Compiled = {
     // stable input order for finalize's stable sort: monotonically
     // increasing id encodes (partition, offset) = scan order, captured
     // before any shuffle. Only attached when a finalize sort will consume
@@ -60,7 +90,7 @@ object Engine {
     // cannot host monotonically_increasing_id, and the streaming warnings
     // shape is per-row anyway, no cross-row ordering needed)
     val needsOrder = (rule.finalizeSpec.exists(_.sort.isDefined) ||
-      collectWarnings) && !input.isStreaming
+      collectWarnings || trace) && !input.isStreaming
     val ordered = input.withColumn("__order",
       if (needsOrder) monotonically_increasing_id() else lit(0L))
     val baseResolver = resolveFromSchema(
@@ -85,6 +115,7 @@ object Engine {
     // warning vec even when apply_rule_to_record returns None)
     var keepCol: Column = lit(true)
     val warns = scala.collection.mutable.ArrayBuffer.empty[Column]
+    val rec = Recorder(trace)
 
     /** Apply a record-level keep predicate. A predicate that can raise is
       * wrapped in [[CaughtCond]] so an eval error drops the record (plus a
@@ -95,18 +126,19 @@ object Engine {
       * drop: a record dropped by a pure predicate carries no warning of
       * its own, so filtering it away is only wrong if it might already
       * hold earlier warnings (then the drop must become keep-state so
-      * those warnings still reach the side channel). */
+      * those warnings still reach the side channel). Trace mode keeps
+      * every drop as keep-state: a dropped record is traced too. */
     def applyRecordPred(raw: Column, path: String): Unit =
       if (CaughtCond.canRaise(raw)) {
         val cc = CaughtCond(raw, path)
-        if (collectWarnings) {
-          warns += when(keepCol && cc.getField("kind").isNotNull,
-            struct(cc.getField("kind").as("kind"), cc.getField("path").as("path"),
-              cc.getField("message").as("message")))
-          keepCol = keepCol && cc.getField("ok")
-        } else df = df.filter(cc.getField("ok"))
+        rec.caught(path, cc)
+        if (collectWarnings)
+          warns += when(keepCol && cc.getField("kind").isNotNull, caughtWarning(cc))
+        if (collectWarnings || trace) keepCol = keepCol && cc.getField("ok")
+        else df = df.filter(cc.getField("ok"))
       } else {
-        if (collectWarnings && warns.nonEmpty)
+        rec.flag(path, coalesce(raw, lit(false)))
+        if (trace || (collectWarnings && warns.nonEmpty))
           keepCol = keepCol && coalesce(raw, lit(false))
         else df = df.filter(raw) // filter drops null = false; no coalesce (it blocks pushdown)
       }
@@ -130,7 +162,7 @@ object Engine {
       for ((m, mi) <- ms.zipWithIndex) {
         val onWarn: Column => Unit =
           if (collectWarnings) w => warns += when(alive, w) else _ => ()
-        val mapped = compileMapping(m, env.copy(out = out), s"$pathPrefix[$mi]", onWarn)
+        val mapped = compileMapping(m, env.copy(out = out), s"$pathPrefix[$mi]", onWarn, rec)
         val key = m.target.head
         val merged = if (m.target.size == 1) mapped
           else nest(out.get(key), m.target.tail, mapped)
@@ -138,66 +170,75 @@ object Engine {
       }
     }
     applyMappings(rule.mappings, "mappings")
+    // each stage's cumulative @out and whether the record is still alive
+    def recordStage(stage: String): Unit = {
+      rec.json(stage, objectJson(out))
+      rec.flag(s"$stage.kept", keepCol)
+    }
+    recordStage("mappings")
 
     var replaced = false // branch return:true ends step processing
-    for ((s, si) <- rule.steps.zipWithIndex if !replaced) s match {
-      case StepMappings(ms) => applyMappings(ms, s"steps[$si].mappings")
-      case StepRecordWhen(cond) =>
-        val c = compileCond(cond,
-          env.copy(out = out, errPath = s"steps[$si].record_when"))
-        applyRecordPred(c.value && !c.missing, s"steps[$si].record_when")
-      case StepAsserts(asserts) =>
-        // asserts are hard errors (AssertionFailed aborts the transform),
-        // but only for records still alive — in warnings mode dead rows
-        // ride along in df, so the raise must be gated on the keep state
-        val alive = keepCol
-        for ((a, ai) <- asserts.zipWithIndex) {
-          val c = compileCond(a.when, env.copy(out = out))
-          df = df.filter(
-            when(alive && !coalesce(c.value, lit(false)),
-              RmError.raiseCol("AssertionFailed", s"steps[$si].asserts[$ai]",
-                s"${a.code}: ${a.message}").cast(BooleanType))
-              .otherwise(lit(true)))
-        }
-      case StepBranch(cond, thenPath, elsePath, ret) =>
-        val c = compileCond(cond, env.copy(out = out, errPath = s"steps[$si].when"))
-        val rawKeep = coalesce(c.value, lit(false)) && !c.missing
-        // a branch condition that errors routes to the else side plus a
-        // warning, like any other when (eval_when, transform.rs:1041-1063)
-        val keep =
-          if (CaughtCond.canRaise(rawKeep)) {
-            val cc = CaughtCond(rawKeep, s"steps[$si].when")
-            if (collectWarnings) {
-              val alive = keepCol
-              warns += when(alive && cc.getField("kind").isNotNull,
-                struct(cc.getField("kind").as("kind"), cc.getField("path").as("path"),
-                  cc.getField("message").as("message")))
-            }
-            cc.getField("ok")
-          } else rawKeep
-        val alive = keepCol
-        val onThenWarn: Column => Unit =
-          if (collectWarnings) w => warns += when(alive && keep, w) else _ => ()
-        val onElseWarn: Column => Unit =
-          if (collectWarnings) w => warns += when(alive && !keep, w) else _ => ()
-        val thenC = compileSubRule(ruleLoader(thenPath), out, env, onThenWarn)
-        val elseC = elsePath.map(p => compileSubRule(ruleLoader(p), out, env, onElseWarn))
-        // sub-rule record_when / per-record finalize drops apply only to
-        // the records routed to that side
-        val rowKeep = when(keep, thenC.keep.getOrElse(lit(true)))
-          .otherwise(elseC.flatMap(_.keep).getOrElse(lit(true)))
-        // same pure-drop rule as applyRecordPred: only records that might
-        // already carry warnings must survive their drop
-        if (collectWarnings && warns.nonEmpty)
-          keepCol = keepCol && coalesce(rowKeep, lit(false))
-        else df = df.filter(rowKeep)
-        val branchOut = mergeBranchOutputs(keep, thenC.out,
-          elseC.map(_.out).getOrElse(scala.collection.immutable.ListMap.empty[String, CE]))
-        if (ret) { out = branchOut; replaced = true } // output replaced, stop
-        else out = deepMergeOut(out, branchOut)
+    for ((s, si) <- rule.steps.zipWithIndex if !replaced) {
+      s match {
+        case StepMappings(ms) => applyMappings(ms, s"steps[$si].mappings")
+        case StepRecordWhen(cond) =>
+          val c = compileCond(cond,
+            env.copy(out = out, errPath = s"steps[$si].record_when"))
+          applyRecordPred(c.value && !c.missing, s"steps[$si].record_when")
+        case StepAsserts(asserts) =>
+          // asserts are hard errors (AssertionFailed aborts the transform),
+          // but only for records still alive — in warnings mode dead rows
+          // ride along in df, so the raise must be gated on the keep state
+          val alive = keepCol
+          for ((a, ai) <- asserts.zipWithIndex) {
+            val c = compileCond(a.when, env.copy(out = out))
+            rec.flag(s"steps[$si].asserts[$ai]", coalesce(c.value, lit(false)))
+            df = df.filter(
+              when(alive && !coalesce(c.value, lit(false)),
+                RmError.raiseCol("AssertionFailed", s"steps[$si].asserts[$ai]",
+                  s"${a.code}: ${a.message}").cast(BooleanType))
+                .otherwise(lit(true)))
+          }
+        case StepBranch(cond, thenPath, elsePath, ret) =>
+          val c = compileCond(cond, env.copy(out = out, errPath = s"steps[$si].when"))
+          val rawKeep = coalesce(c.value, lit(false)) && !c.missing
+          // a branch condition that errors routes to the else side plus a
+          // warning, like any other when (eval_when, transform.rs:1041-1063)
+          val keep =
+            if (CaughtCond.canRaise(rawKeep)) {
+              val cc = CaughtCond(rawKeep, s"steps[$si].when")
+              rec.caught(s"steps[$si].when", cc)
+              if (collectWarnings)
+                warns += when(keepCol && cc.getField("kind").isNotNull, caughtWarning(cc))
+              cc.getField("ok")
+            } else { rec.flag(s"steps[$si].when", rawKeep); rawKeep }
+          val alive = keepCol
+          val onThenWarn: Column => Unit =
+            if (collectWarnings) w => warns += when(alive && keep, w) else _ => ()
+          val onElseWarn: Column => Unit =
+            if (collectWarnings) w => warns += when(alive && !keep, w) else _ => ()
+          val thenC = compileSubRule(ruleLoader(thenPath), out, env, onThenWarn,
+            rec, s"steps[$si].then/")
+          val elseC = elsePath.map(p => compileSubRule(ruleLoader(p), out, env, onElseWarn,
+            rec, s"steps[$si].else/"))
+          // sub-rule record_when / per-record finalize drops apply only to
+          // the records routed to that side
+          val rowKeep = when(keep, thenC.keep.getOrElse(lit(true)))
+            .otherwise(elseC.flatMap(_.keep).getOrElse(lit(true)))
+          // same pure-drop rule as applyRecordPred: only records that might
+          // already carry warnings (or are traced) must survive their drop
+          if (trace || (collectWarnings && warns.nonEmpty))
+            keepCol = keepCol && coalesce(rowKeep, lit(false))
+          else df = df.filter(rowKeep)
+          val branchOut = mergeBranchOutputs(keep, thenC.out,
+            elseC.map(_.out).getOrElse(scala.collection.immutable.ListMap.empty[String, CE]))
+          if (ret) { out = branchOut; replaced = true } // output replaced, stop
+          else out = deepMergeOut(out, branchOut)
+      }
+      recordStage(s"steps[$si]")
     }
     env = env.copy(out = out)
-    Compiled(df, out, env, keepCol, warns.toSeq)
+    Compiled(df, out, env, keepCol, warns.toSeq, rec)
   }
 
   /** A compiled branch sub-rule: its output fields plus an optional
@@ -214,7 +255,11 @@ object Engine {
     * no-op, and wrap sees @out as the one-record array (tv40/tv41). */
   private def compileSubRule(sub: RuleFile,
       out: scala.collection.immutable.ListMap[String, CE], outer: Env,
-      onWarn: Column => Unit = _ => ()): SubCompiled = {
+      onWarn: Column => Unit, outerRec: Recorder, scope: String): SubCompiled = {
+    val ms = sub.mappings ++ sub.steps.collect { case StepMappings(m) => m }.flatten
+    // the trace renders the sub-rule as compiled: steps other than
+    // mappings are not part of a branch target's plan
+    val rec = outerRec.subRule(scope, sub.copy(mappings = ms, steps = Nil))
     val subInput: Seq[String] => CE = {
       case Seq() =>
         CE.present(struct(out.map { case (n, ce) => ce.valueOrNull.as(n) }.toSeq: _*),
@@ -228,25 +273,25 @@ object Engine {
       val raw = coalesce(c.value, lit(false)) && !c.missing
       if (CaughtCond.canRaise(raw)) {
         val cc = CaughtCond(raw, "record_when")
-        onWarn(when(cc.getField("kind").isNotNull,
-          struct(cc.getField("kind").as("kind"), cc.getField("path").as("path"),
-            cc.getField("message").as("message"))))
+        rec.caught("record_when", cc)
+        onWarn(when(cc.getField("kind").isNotNull, caughtWarning(cc)))
         cc.getField("ok")
-      } else raw
+      } else { rec.flag("record_when", raw); raw }
     }
     // a record the sub-rule's record_when dropped never evaluates the
     // sub-rule's mappings, so its when-warnings are gated on the keep
     val subAlive = keep.getOrElse(lit(true))
     val onSubWarn: Column => Unit = w => onWarn(when(subAlive, w))
     var subOut = scala.collection.immutable.ListMap.empty[String, CE]
-    val ms = sub.mappings ++ sub.steps.collect { case StepMappings(m) => m }.flatten
     for ((m, mi) <- ms.zipWithIndex) {
-      val mapped = compileMapping(m, subEnv.copy(out = subOut), s"mappings[$mi]", onSubWarn)
+      val mapped = compileMapping(m, subEnv.copy(out = subOut), s"mappings[$mi]",
+        onSubWarn, rec)
       val key = m.target.head
       val merged = if (m.target.size == 1) mapped
         else nest(subOut.get(key), m.target.tail, mapped)
       subOut = subOut + (key -> merged)
     }
+    rec.json("mappings", objectJson(subOut))
     sub.finalizeSpec.foreach { fin =>
       val recType = StructType(subOut.map { case (n, ce) => StructField(n, ce.tpe) }.toSeq)
       val rec = struct(subOut.map { case (n, ce) => ce.valueOrNull.as(n) }.toSeq: _*)
@@ -273,6 +318,9 @@ object Engine {
           fin.wrap.map { case (n, wv) => n -> compileWrap(wv, wenv) }: _*)
       }
     }
+    val kept = keep.getOrElse(lit(true))
+    rec.flag("mappings.kept", kept)
+    rec.json("out", when(kept, objectJson(subOut)))
     SubCompiled(subOut, keep)
   }
 
@@ -418,6 +466,40 @@ object Engine {
   def collectWarnings(warnings: DataFrame): Seq[Warning] =
     warnings.collect().toSeq.map(r => Warning(r.getString(0), r.getString(1), r.getString(2)))
 
+  /** [[toJsonRecords]]'s output plus what its plan recorded on the way
+    * (see [[Recorder]]): each mapping's pipe stages, `when` gate and
+    * written value, each stage's cumulative `@out` and keep state, the
+    * record_when / assert / branch outcomes, and the branch sub-rules the
+    * plan compiled. `values` holds the first input record's recorded JSON
+    * by key; a value that was missing or raised has no key. */
+  final case class Traced(output: Seq[String], values: Map[String, String],
+      subRules: Map[String, RuleFile])
+
+  /** The serving edge's traced run: ONE job. Record drops stay keep-state,
+    * so the recorded columns ride the job as an observed metric taken below
+    * the output's keep filter — a dropped record is traced too, and the
+    * output plan above it is the JSON sink of [[toJsonRecordsWithWarnings]]. */
+  def toJsonRecordsTraced(rule: RuleFile, input: DataFrame,
+      context: JValue = JNull, nullAsMissing: Boolean = false,
+      ruleLoader: RuleLoader = noLoader): Traced = {
+    val c = compilePlan(rule, input, context, nullAsMissing, ruleLoader, trace = true)
+    val (keys, cols) = c.rec.recorded.unzip
+    val observed =
+      if (cols.isEmpty) c.df
+      else c.df.observe("trace", min_by(struct(cols.zipWithIndex.map { case (v, i) =>
+        v.as(s"v$i") }: _*), col("__order")).as("first"))
+    val out = jsonSink(rule, c.copy(df = observed.filter(c.keep)), context)
+    val output = out.collect().toSeq.map(_.getString(0))
+    val first = out.queryExecution.observedMetrics.get("trace")
+      .map(_.getStruct(0)).orNull
+    val values =
+      if (first == null) Map.empty[String, String]
+      else keys.zipWithIndex.collect {
+        case (k, i) if !first.isNullAt(i) => k -> first.getString(i)
+      }.toMap
+    Traced(output, values, c.rec.compiledSubRules)
+  }
+
   /** Streaming-compatible warnings shape: ONE DataFrame carrying the
     * typed output columns plus `_kept` (record survived) and `_warnings`
     * (array<struct<kind,path,message>>, the record's own warnings in
@@ -456,11 +538,7 @@ object Engine {
     require(rule.finalizeSpec.isEmpty, "finalize is not supported in stream mode")
     val c = compilePlan(rule, input, context, nullAsMissing, ruleLoader,
       collectWarnings = true)
-    val frags = c.out.toSeq.map { case (name, ce) =>
-      when(ce.missing, lit(null).cast(StringType))
-        .otherwise(concat(lit("\"" + name + "\":"), jsonEncode(ce.valueOrNull, ce.tpe)))
-    }
-    val recordJson = concat(lit("{"), concat_ws(",", frags: _*), lit("}"))
+    val recordJson = objectJson(c.out)
     val warnsCol =
       if (c.warns.isEmpty) array().cast(ArrayType(CaughtCond.warningSchema))
       else filter(array(c.warns: _*), w => w.isNotNull)
@@ -519,6 +597,18 @@ object Engine {
   private def jsonEncode(c: Column, t: DataType): Column =
     ExprCompiler.jsonFragment(c, t)
 
+  /** One JSON object from (field, value) pairs: missing fields are absent. */
+  private def objectJson(out: scala.collection.immutable.ListMap[String, CE]): Column =
+    concat(lit("{"), concat_ws(",", out.toSeq.map { case (name, ce) =>
+      when(ce.missing, lit(null).cast(StringType))
+        .otherwise(concat(lit("\"" + name + "\":"), jsonEncode(ce.valueOrNull, ce.tpe)))
+    }: _*), lit("}"))
+
+  /** The (kind, path, message) warning of a [[CaughtCond]] outcome. */
+  private def caughtWarning(cc: Column): Column =
+    struct(cc.getField("kind").as("kind"), cc.getField("path").as("path"),
+      cc.getField("message").as("message"))
+
   // finalize (transform.rs:603-714): filter → stable sort → offset → limit
   private def applyFinalize(rule: RuleFile, dfIn: DataFrame, context: JValue): DataFrame = {
     var result = dfIn
@@ -567,8 +657,18 @@ object Engine {
     * that errors at eval time skips the mapping and reports through
     * `onWarn` (eval_when, transform.rs:1041-1063) instead of aborting. */
   private def compileMapping(m: Mapping, env: Env, pathBase: String,
-      onWarn: Column => Unit = _ => ()): CE = {
-    val base = ExprCompiler.compile(m.expr, env.copy(errPath = s"$pathBase.expr"))
+      onWarn: Column => Unit, rec: Recorder): CE = {
+    // every pipe stage is a sub-Column of the mapping's value; the trace
+    // records each one (a bare expr is its own single stage)
+    val exprEnv = env.copy(errPath = s"$pathBase.expr")
+    val base = m.expr match {
+      case EPipe(start, steps) => ExprCompiler.compilePipe(start, steps, exprEnv,
+        (k, ce) => rec(s"$pathBase.pipe[$k]", ce))
+      case e =>
+        val ce = ExprCompiler.compile(e, exprEnv)
+        rec(s"$pathBase.pipe[0]", ce)
+        ce
+    }
 
     // when gate FIRST (eval_when, transform.rs:1041-1063): a skipped mapping
     // never evaluates default/required — the required-error below must be
@@ -579,11 +679,10 @@ object Engine {
         val raw = coalesce(c.value, lit(false)) && !c.missing
         if (CaughtCond.canRaise(raw)) {
           val cc = CaughtCond(raw, s"$pathBase.when")
-          onWarn(when(cc.getField("kind").isNotNull,
-            struct(cc.getField("kind").as("kind"), cc.getField("path").as("path"),
-              cc.getField("message").as("message"))))
+          rec.caught(s"$pathBase.when", cc)
+          onWarn(when(cc.getField("kind").isNotNull, caughtWarning(cc)))
           cc.getField("ok")
-        } else raw
+        } else { rec.flag(s"$pathBase.when", raw); raw }
       case None => lit(true)
     }
 
@@ -612,6 +711,8 @@ object Engine {
       case Some(t) => ExprCompiler.strictCast(withDefault, t, s"$pathBase.type")
       case None => withDefault
     }
+    // the value the mapping writes when its gate is open
+    rec(s"$pathBase.out", casted)
 
     // when false ⇒ skipped ⇒ missing (field absent)
     if (m.when.isEmpty) casted
@@ -683,61 +784,6 @@ object Engine {
       .select((coalesce(ce.value, lit(false)) && !ce.missing).as("v")).collect()(0)
     row.getBoolean(0)
   }
-
-  /** Env over a trace-builder row `{__rec: <record>, __out: <out-so-far>}`:
-    * `@input` resolves below __rec, `@out` below __out — the environment a
-    * mapping sees mid-rule, reconstructed for per-op trace capture. */
-  private def traceRowEnv(input: DataFrame, context: JValue): ExprCompiler.Env = {
-    val base = resolveFromSchema(
-      input.schema.fields.map(f => f.name -> f.dataType).toSeq, col(_))
-    val outFields: Seq[String] = input.schema.fields.find(_.name == "__out")
-      .map(_.dataType) match {
-        case Some(st: StructType) => st.fieldNames.toSeq
-        case _ => Nil
-      }
-    ExprCompiler.Env(
-      input = path => base(Seq("__rec") ++ path),
-      context = context,
-      out = outFields.map(n => n -> base(Seq("__out", n))).toMap)
-  }
-
-  /** Batch single-record evaluation of MANY expressions in ONE job over a
-    * `{__rec, __out}` trace row — the endpoint trace builder evaluates
-    * every pipe prefix of a mapping this way (k+1 prefixes = one collect,
-    * not k+1). Per-expression: Some(json) when present, None when missing
-    * or failing to compile (trace capture is best-effort — a probe must
-    * never fail the request it describes). */
-  def evalExprsJsonTrace(exprs: Seq[Expr], input: DataFrame,
-      context: JValue): IndexedSeq[Option[String]] = {
-    if (exprs.isEmpty) return Vector.empty
-    val env = traceRowEnv(input, context)
-    val cols = exprs.map { e =>
-      try {
-        val ce = ExprCompiler.compile(e, env)
-        Seq(ExprCompiler.jsonFragment(ce.valueOrNull, ce.tpe),
-          coalesce(ce.missing, lit(false)))
-      } catch { case scala.util.control.NonFatal(_) =>
-        Seq(lit(null).cast(StringType), lit(true)) }
-    }
-    val row =
-      try input.limit(1).select(cols.flatten: _*).collect()(0)
-      catch { case scala.util.control.NonFatal(_) =>
-        return Vector.fill(exprs.size)(None) }
-    exprs.indices.map { i =>
-      val (v, m) = (i * 2, i * 2 + 1)
-      if (row.getBoolean(m) || row.isNullAt(v)) None else Some(row.getString(v))
-    }
-  }
-
-  /** Single-record condition over a `{__rec, __out}` trace row; None when
-    * the condition fails to evaluate (best-effort, like the exprs). */
-  def evalCondTrace(c: Cond, input: DataFrame, context: JValue): Option[Boolean] =
-    try {
-      val ce = compileCond(c, traceRowEnv(input, context))
-      val row = input.limit(1)
-        .select((coalesce(ce.value, lit(false)) && !ce.missing).as("v")).collect()(0)
-      Some(row.getBoolean(0))
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Resolver over an ordered (name, type) schema; deeper path segments
     * descend through structs/arrays; unknown head ⇒ missing; the EMPTY path

@@ -269,38 +269,45 @@ object ExprCompiler {
       }
     }
 
-  def compilePipe(start: Expr, steps: Seq[PipeStep], env: Env): CE = {
+  /** `onStage(k, value)` sees the pipe's value after its k-th stage (0 =
+    * the start) — the sub-Columns the final value is built from. */
+  def compilePipe(start: Expr, steps: Seq[PipeStep], env: Env,
+      onStage: (Int, CE) => Unit = (_, _) => ()): CE = {
     // a pipe may start AT an op step (mapping-level `- lookup_first: [...]`):
     // then there is no injected pipe value and the first op's args stand alone
     var curOpt: Option[CE] = start match {
       case ERef(RPipe, Seq()) if env.pipeValue.isEmpty => None
       case s => Some(compile(s, env))
     }
+    curOpt.foreach(onStage(0, _))
     def cur: CE = curOpt.getOrElse(throw CompileError("pipe has no current value"))
     var e = env
-    for (step <- steps) step match {
-      case SOp(op, argExprs) =>
-        val scoped = curOpt.map(e.withPipe).getOrElse(e)
-        curOpt = Some(compileOp(op, curOpt, scoped, argExprs))
-      case SLet(bindings) =>
-        val scoped = e.withPipe(cur)
-        e = bindings.foldLeft(e) { case (envAcc, (name, be)) =>
-          envAcc.copy(vars = envAcc.vars + (name -> compile(be, scoped.copy(vars = envAcc.vars))))
-        }
-      case SIf(cond, thenP, elseP) =>
-        val scoped = e.withPipe(cur)
-        val c = compileCond(cond, scoped)
-        val t = thenP.map(compile(_, scoped)).getOrElse(cur)
-        val f = elseP.map(compile(_, scoped)).getOrElse(cur)
-        val tpe = if (t.tpe == NullType) f.tpe else t.tpe
-        curOpt = Some(CE(
-          when(c.value && !c.missing, t.value).otherwise(f.value),
-          when(c.value && !c.missing, t.missing).otherwise(f.missing),
-          tpe))
-      case SMap(body) =>
-        curOpt = Some(mapArray(cur, body, e))
-      case SValue(expr) =>
-        curOpt = Some(compile(expr, e.withPipe(cur)))
+    for ((step, k) <- steps.zipWithIndex) {
+      step match {
+        case SOp(op, argExprs) =>
+          val scoped = curOpt.map(e.withPipe).getOrElse(e)
+          curOpt = Some(compileOp(op, curOpt, scoped, argExprs))
+        case SLet(bindings) =>
+          val scoped = e.withPipe(cur)
+          e = bindings.foldLeft(e) { case (envAcc, (name, be)) =>
+            envAcc.copy(vars = envAcc.vars + (name -> compile(be, scoped.copy(vars = envAcc.vars))))
+          }
+        case SIf(cond, thenP, elseP) =>
+          val scoped = e.withPipe(cur)
+          val c = compileCond(cond, scoped)
+          val t = thenP.map(compile(_, scoped)).getOrElse(cur)
+          val f = elseP.map(compile(_, scoped)).getOrElse(cur)
+          val tpe = if (t.tpe == NullType) f.tpe else t.tpe
+          curOpt = Some(CE(
+            when(c.value && !c.missing, t.value).otherwise(f.value),
+            when(c.value && !c.missing, t.missing).otherwise(f.missing),
+            tpe))
+        case SMap(body) =>
+          curOpt = Some(mapArray(cur, body, e))
+        case SValue(expr) =>
+          curOpt = Some(compile(expr, e.withPipe(cur)))
+      }
+      curOpt.foreach(onStage(k + 1, _))
     }
     cur
   }

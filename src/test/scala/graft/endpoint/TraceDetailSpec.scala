@@ -7,6 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.rules.Engine
+import graft.sources.Sources
 import EndpointModel.NormalRule
 
 /** Reference-shaped rich traces from the endpoint engine (reference
@@ -91,11 +93,36 @@ class TraceDetailSpec extends AnyFunSuite with BeforeAndAfterAll {
         |    reply:
         |      status: [lit:200]
         |      body: ["@input"]
+        |  - method: POST
+        |    path: /checked
+        |    input:
+        |      - target: n
+        |        expr: ["@input.body.n"]
+        |    steps:
+        |      - rule: ./checked.yaml
+        |    reply:
+        |      status: [lit:200]
+        |      body: ["@input"]
+        |""".stripMargin)
+    Files.writeString(dir.resolve("checked.yaml"),
+      """version: 2
+        |steps:
+        |  - mappings:
+        |      - target: n
+        |        expr: ["@input.n"]
+        |  - asserts:
+        |      - when: { gt: ["@out.n", 10] }
+        |        error: { code: N_TOO_SMALL, message: n must exceed 10 }
         |""".stripMargin)
   }
 
   private def lastTrace(engine: EndpointEngine): JsonNode =
     engine.traces.list().last
+
+  /** One traced run of `rule` over `input` — the values TraceDetail renders. */
+  private def traced(rule: graft.rules.Model.RuleFile, input: JsonNode): Engine.Traced =
+    Engine.toJsonRecordsTraced(rule, Sources.jsonNode(spark, input, Nil),
+      graft.rules.Model.JNull, nullAsMissing = true, Engine.fileLoader(dir.toString))
 
   test("request trace carries records[0].nodes beside the flat steps[]") {
     val engine = new EndpointEngine(spark, dir.resolve("endpoint.yaml").toString)
@@ -250,18 +277,13 @@ class TraceDetailSpec extends AnyFunSuite with BeforeAndAfterAll {
         |      then: ./big.yaml
         |      else: ./small.yaml
         |""".stripMargin)
-    val detail = new TraceDetail(spark, { p =>
-      EndpointModel.parseRuleKind(Files.readString(p)) match {
-        case NormalRule(r) => Some(r); case _ => None
-      }
-    })
+    val detail = new TraceDetail
     val rule = EndpointModel.parseRuleKind(
       Files.readString(dir.resolve("mixed.yaml"))) match {
       case NormalRule(r) => r; case _ => fail("not a normal rule")
     }
     val input = mapper.readTree("""{"n": 9}""")
-    val (nodes, status, _) = detail.ruleNodes(rule, input,
-      graft.rules.Model.JNull, dir)
+    val (nodes, status) = detail.ruleNodes(rule, input, traced(rule, input))
     assert(status == "ok")
     // the top-level mappings surface as their own node, BEFORE the steps
     assert(nodes.get(0).get("kind").asText == "mapping")
@@ -285,15 +307,13 @@ class TraceDetailSpec extends AnyFunSuite with BeforeAndAfterAll {
         |  - target: y
         |    expr: ["@out.x"]
         |""".stripMargin)
-    val detail = new TraceDetail(spark, _ => None)
+    val detail = new TraceDetail
     val rule = EndpointModel.parseRuleKind(
       Files.readString(dir.resolve("gated.yaml"))) match {
       case NormalRule(r) => r; case _ => fail("not a normal rule")
     }
     val input = mapper.readTree("""{"mode": "b"}""")
-    val ops = detail.mappingOps(rule.mappings, input,
-      mapper.readTree("{}").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode],
-      graft.rules.Model.JNull, 0)
+    val ops = detail.mappingOps(rule.mappings, traced(rule, input), "mappings", 0)
     val op0 = ops.get(0)
     assert(!op0.get("meta").get("when").asBoolean)   // gate reported closed
     assert(op0.get("output").isNull)                 // value never produced
@@ -302,28 +322,27 @@ class TraceDetailSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a FAILED when-probe keeps the probed output — never a false output:null claim") {
-    // the when divides by zero (ANSI mode throws), so the probe returns
-    // Some(None): unknown, NOT false. The op must keep the expr's probed
-    // value and make no when claim — only a probe that RESOLVED false may
-    // render the affirmative output:null
+    // the when raises (a number does not cast to bool), which the engine
+    // catches: the mapping is skipped with a warning and the gate's outcome
+    // is unknown, NOT false. The op must keep the expr's computed value and
+    // make no when claim — only a gate that RESOLVED false may render the
+    // affirmative output:null
     Files.writeString(dir.resolve("failgate.yaml"),
       """version: 2
         |mappings:
         |  - target: x
-        |    when: { eq: [["@input.n", {divide: [0]}], 1] }
+        |    when: { eq: [["@input.n", bool], true] }
         |    expr: [lit:xx]
         |  - target: y
         |    expr: ["@out.x"]
         |""".stripMargin)
-    val detail = new TraceDetail(spark, _ => None)
+    val detail = new TraceDetail
     val rule = EndpointModel.parseRuleKind(
       Files.readString(dir.resolve("failgate.yaml"))) match {
       case NormalRule(r) => r; case _ => fail("not a normal rule")
     }
     val input = mapper.readTree("""{"n": 4}""")
-    val ops = detail.mappingOps(rule.mappings, input,
-      mapper.readTree("{}").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode],
-      graft.rules.Model.JNull, 0)
+    val ops = detail.mappingOps(rule.mappings, traced(rule, input), "mappings", 0)
     val op0 = ops.get(0)
     assert(!op0.get("meta").has("when"),
       "a failed probe must not claim a gate state")
@@ -332,6 +351,51 @@ class TraceDetailSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the write is still skipped conservatively: the NEXT op's @out.x
     // reads as missing, matching the real engine's skip-and-warn
     assert(ops.get(1).get("output").isNull)
+  }
+
+  test("a detail-on request runs the same Spark jobs as detail off, same reply") {
+    // the trace values ride the rule's own plans: capture adds no job
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val yaml = dir.resolve("endpoint.yaml").toString
+    val on = new EndpointEngine(spark, yaml)
+    val off = new EndpointEngine(spark, yaml, traceDetail = false)
+    def counted(engine: EndpointEngine, path: String, body: String)
+        : (EndpointEngine.HttpResult, Int) = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      val before = jobs.get()
+      val res = engine.handle("POST", path, "", Nil, Some(body))
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (res, jobs.get() - before)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for ((path, body) <- Seq("/shape" -> """{"name":"  ada  ","n":1}""",
+          "/staged" -> """{"n":4}""")) {
+        val (resOn, jobsOn) = counted(on, path, body)
+        val (resOff, jobsOff) = counted(off, path, body)
+        assert(resOn.status == 200 && resOn == resOff, s"$path: $resOn vs $resOff")
+        assert(jobsOn == jobsOff, s"$path: detail on ran $jobsOn jobs, off $jobsOff")
+        assert(lastTrace(on).has("records") && !lastTrace(off).has("records"))
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a failing assert: the step node is an error without a child_trace") {
+    val on = new EndpointEngine(spark, dir.resolve("endpoint.yaml").toString)
+    val off = new EndpointEngine(spark, dir.resolve("endpoint.yaml").toString,
+      traceDetail = false)
+    val res = on.handle("POST", "/checked", "", Nil, Some("""{"n":4}"""))
+    assert(res.status == 500)
+    assert(res == off.handle("POST", "/checked", "", Nil, Some("""{"n":4}""")))
+    val stepNode = lastTrace(on).get("records").get(0).get("nodes").get(1)
+    assert(stepNode.get("meta").get("rule_ref").asText == "./checked.yaml")
+    assert(stepNode.get("status").asText == "error")
+    assert(stepNode.get("error").get("message").asText.contains("N_TOO_SMALL"))
+    assert(!stepNode.has("child_trace"))
   }
 
   test("traceDetail=false keeps the flat trace only") {

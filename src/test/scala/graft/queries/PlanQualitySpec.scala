@@ -20,6 +20,14 @@ class PlanQualitySpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** The artifact entry points' outcome counts summed over families
+    * (`read_fallback:<class>` counts as `read_fallback`); the suite's own
+    * outcomes are the delta over the value at construction. */
+  private def artifactOutcomes: Map[String, Long] =
+    graft.operators.Artifacts.outcomeCounts.toSeq
+      .groupMapReduce(_._1._2.takeWhile(_ != ':'))(_._2)(_ + _)
+  private val outcomesAtStart = artifactOutcomes
+
   private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
@@ -971,5 +979,16 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"partition-less Window operators found (add to the justified map " +
         s"ONLY with a boundedness argument):\n${offenders.mkString("\n")}")
+  }
+
+  // registered last: FunSuite runs tests in order, so every query above has
+  // been built by now
+  test("artifact outcomes: no read_fallback and no commit_failed on the writable root") {
+    val counted = artifactOutcomes.map { case (o, n) =>
+      o -> (n - outcomesAtStart.getOrElse(o, 0L)) }.filter(_._2 != 0L)
+    assert(counted.values.sum > 0, "the suite's queries never reached an artifact entry point")
+    assert(counted.getOrElse("read_fallback", 0L) == 0L &&
+      counted.getOrElse("commit_failed", 0L) == 0L,
+      s"degraded artifact paths during this suite: $counted")
   }
 }
