@@ -1,5 +1,12 @@
 package graft
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.rmbridge.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.operators.Artifacts
 object Bench {
   /** Median of a non-empty sequence (mean of the middle pair for even n). */
   private def median(xs: Seq[Double]): Double = {
@@ -13,14 +20,182 @@ object Bench {
     * report needs to describe it: the kept per-query runs (retry batch
     * where it won), the kept batch's failure counts, and EVERY raw run
     * of both batches for the min column. */
-  private final case class Pass(
+  private[graft] final case class Pass(
       runs: Map[String, Vector[Double]],
       fails: Map[String, Int],
       allRuns: Map[String, Vector[Double]],
       firstNoisy: Seq[String],
       retried: Seq[String])
 
-  private def measurePass(spark: SparkSession, sfDir: String,
+  /** One stage a profiled rep ran, from its StageCompleted event: wall
+    * (submission to completion), summed task run, CPU and GC time, task
+    * count, input and shuffle bytes, and the stage's callsite. */
+  private[graft] final case class StageRow(job: Int, stage: Int, wallMs: Long,
+      taskMs: Long, cpuMs: Long, gcMs: Long, tasks: Int, inputBytes: Long,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long, callsite: String)
+
+  /** A query's last timed rep, split into fixed driver cost and data work.
+    * `constructionMs` (`fn(spark, sfDir)`: analysis plus any eager job, such
+    * as an artifact build) and `executionMs` (the `count()`) are the two
+    * halves of the timed region. `phasesMs` are the count plan's
+    * QueryPlanningTracker phases (inside `executionMs`); `jobs` and `stages`
+    * cover the whole rep; `artifacts` is the rep's
+    * `Artifacts.outcomeCounts` delta; `plan` is the count's final adaptive
+    * plan, `explain formatted`. */
+  private[graft] final case class Profile(constructionMs: Double,
+      executionMs: Double, phasesMs: Map[String, Long], jobs: Int,
+      stages: Seq[StageRow], artifacts: Map[(String, String), Long], plan: String)
+
+  /** Times reps and keeps each query's last successful one as its
+    * [[Profile]]. Its listeners stay registered while it is open; every rep
+    * drains the listener bus before and after itself, so a record holds
+    * exactly its own rep's events (no late stage event is dropped, none of
+    * the prior rep's leaks in). */
+  private[graft] final class Profiler(spark: SparkSession)
+      extends SparkListener with QueryExecutionListener {
+    private val stageJob = scala.collection.concurrent.TrieMap.empty[Int, Int]
+    private val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
+    private val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile private var lastCount: Option[QueryExecution] = None
+    val records = scala.collection.mutable.Map[String, Profile]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      e.stageIds.foreach(stageJob.put(_, e.jobId))
+      jobs.incrementAndGet()
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      val m = si.taskMetrics
+      stages.add(StageRow(stageJob.getOrElse(si.stageId, -1), si.stageId,
+        (for (a <- si.completionTime; b <- si.submissionTime) yield a - b).getOrElse(-1L),
+        m.executorRunTime, m.executorCpuTime / 1000000, m.jvmGCTime, si.numTasks,
+        m.inputMetrics.bytesRead, m.shuffleReadMetrics.totalBytesRead,
+        m.shuffleWriteMetrics.bytesWritten, si.name.linesIterator.nextOption().getOrElse("")))
+    }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      if (funcName == "count") lastCount = Some(qe)
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+
+    spark.sparkContext.addSparkListener(this)
+    spark.listenerManager.register(this)
+    def close(): Unit = {
+      spark.sparkContext.removeSparkListener(this)
+      spark.listenerManager.unregister(this)
+    }
+
+    /** One timed rep of `name`: its wall seconds. Throws what the query
+      * throws, and then keeps the query's earlier record. */
+    def rep(name: String, sfDir: String): Double = {
+      val fn = SparkEntry.queries(name)
+      Bridge.drainListenerBus(spark.sparkContext)
+      stages.clear(); jobs.set(0); lastCount = None
+      val before = Artifacts.outcomeCounts
+      val t0 = System.nanoTime()
+      val df = fn(spark, sfDir)
+      val t1 = System.nanoTime()
+      df.count()
+      val t2 = System.nanoTime()
+      Bridge.drainListenerBus(spark.sparkContext)
+      val artifacts = Artifacts.outcomeCounts.map { case (k, n) =>
+        k -> (n - before.getOrElse(k, 0L)) }.filter(_._2 > 0)
+      records(name) = Profile((t1 - t0) / 1e6, (t2 - t1) / 1e6,
+        lastCount.fold(Map.empty[String, Long])(_.tracker.phases.map {
+          case (phase, p) => phase -> p.durationMs }),
+        jobs.get, stages.asScala.toSeq.sortBy(r => (r.job, r.stage)), artifacts,
+        lastCount.fold("")(_.explainString(FormattedMode)))
+      (t2 - t0) / 1e9
+    }
+  }
+
+  /** Writes `dir/bench_profile.json` (one record per query) and each
+    * query's plan to `dir/bench_plans/<query>.txt`. */
+  private[graft] def writeProfile(dir: Path, sfDir: String,
+      records: Map[String, Profile]): Unit = {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = json.createObjectNode().put("sf", sfDir)
+    val queries = root.putObject("queries")
+    val plans = Files.createDirectories(dir.resolve("bench_plans"))
+    def ms(v: Double) = math.round(v * 1000) / 1000.0
+    records.toSeq.sortBy(_._1).foreach { case (name, p) =>
+      val q = queries.putObject(name).put("construction_ms", ms(p.constructionMs))
+        .put("execution_ms", ms(p.executionMs)).put("jobs", p.jobs)
+      val phases = q.putObject("phases_ms")
+      p.phasesMs.toSeq.sorted.foreach { case (k, v) => phases.put(k, v) }
+      val stages = q.putArray("stages")
+      p.stages.foreach { r =>
+        stages.addObject().put("job", r.job).put("stage", r.stage)
+          .put("wall_ms", r.wallMs).put("task_ms", r.taskMs).put("cpu_ms", r.cpuMs)
+          .put("gc_ms", r.gcMs).put("tasks", r.tasks).put("input_bytes", r.inputBytes)
+          .put("shuffle_read_bytes", r.shuffleReadBytes)
+          .put("shuffle_write_bytes", r.shuffleWriteBytes).put("callsite", r.callsite)
+      }
+      val artifacts = q.putObject("artifacts")
+      p.artifacts.toSeq.sorted.foreach { case ((family, outcome), n) =>
+        artifacts.withObjectProperty(family).put(outcome, n) }
+      Files.writeString(plans.resolve(s"$name.txt"), p.plan)
+    }
+    Files.writeString(dir.resolve("bench_profile.json"),
+      json.writerWithDefaultPrettyPrinter().writeValueAsString(root) + "\n")
+  }
+
+  // BigDecimal, not printf %f: %f is locale-sensitive (a comma decimal
+  // separator would corrupt the JSON line)
+  private def fmtN(scale: Int)(v: Double): String =
+    new java.math.BigDecimal(v)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).toPlainString
+  private def jmap(m: Iterable[(String, Double)]): String =
+    m.map { case (k, v) => "\"" + k + "\":" + fmtN(3)(v) }
+      .mkString("{", ",", "}")
+  private def jlist(xs: Iterable[String]): String =
+    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+  private def jints(m: Iterable[(String, Int)]): String =
+    m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** What the stdout summary line reports: the run's totals and lists,
+    * per-query medians and mins, and the name of the full artifact. */
+  private[graft] final case class Summary(total: Double,
+      medians: Seq[(String, Double)], mins: Map[String, Double],
+      maxSpreadRatio: Double, noisy: Seq[String], minRegressed: Seq[String],
+      failed: Seq[String], partial: Seq[(String, Int)], full: String,
+      fullPasses: Int, reps: Int, sf: String)
+
+  /** The stdout summary line. It self-limits to 1800 bytes so it ALWAYS
+    * survives the driver's tail window intact: keep the SLOWEST queries
+    * (the ones a perf review needs) up to the budget and count the omitted
+    * fast ones. The total still covers every query; the full map is in the
+    * full artifact. The noisy/min_regressed lists are capped (a storm could
+    * name every query and blow the byte budget); the _count fields and the
+    * full artifact carry the truth.
+    *
+    * Per-query MINs ride the line for every min_regressed query it names,
+    * shown or not, and for SHOWN queries whose median exceeds their min by
+    * >20% (capped at 30). A burst only ever ADDS time, so median >> min
+    * means contention, not regression — the r16 driver run read
+    * q_sessionize's 2.4s median as a 4x regression that its own min column
+    * exonerated. Carrying exactly the adjudication-relevant mins lets a PERF
+    * comparison self-adjudicate noise from the stdout line alone.
+    * Additions-only; the 1800-byte self-limit governs. */
+  private[graft] def summaryLine(s: Summary): String = {
+    val bySlowest = s.medians.sortBy(-_._2)
+    val minRegHead = s.minRegressed.take(10)
+    val minRegSet = s.minRegressed.toSet
+    def line(keep: Int): String = {
+      val shown = bySlowest.take(keep)
+      val minsShown = (shown.flatMap { case (k, med) =>
+        s.mins.get(k).filter(mn => med > mn * 1.2 || minRegSet.contains(k)).map(k -> _)
+      }.take(30) ++ minRegHead.flatMap(k => s.mins.get(k).map(k -> _))).distinctBy(_._1)
+      s"""{"metric":"total","value":${fmtN(3)(s.total)},"unit":"sec","queries":${
+        jmap(shown)
+      },"min":${jmap(minsShown)
+      },"omitted_fast":${s.medians.size - keep},"max_spread_ratio":${fmtN(3)(s.maxSpreadRatio)
+      },"noisy_count":${s.noisy.size},"noisy":${jlist(s.noisy.take(5))},"min_regressed_count":${
+        s.minRegressed.size},"min_regressed":${jlist(minRegHead)},"failed":${jlist(s.failed)
+      },"partial":${jints(s.partial)},"full":"${s.full}","full_passes":${s.fullPasses},"n":${s.reps},"sf":"${s.sf}"}"""
+    }
+    line((s.medians.size to 0 by -1).find(k => line(k).length <= 1800).getOrElse(0))
+  }
+
+  private[graft] def measurePass(profiler: Profiler, sfDir: String,
       names: Seq[String], reps: Int): Pass = {
     // Measure: `reps` timed runs per query, report the MEDIAN plus the
     // spread (max-min) so the JSON itself shows whether a number can be
@@ -30,19 +205,20 @@ object Bench {
     // ALL reps of whichever queries it straddled, so even the median lied.
     // Round-robin reps spread any burst across one rep of MANY queries,
     // and the per-query median survives it.
-    val runsByName = scala.collection.mutable.Map[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
-    val failCount = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
-    // every query gets ALL its reps even after a failure — a transient
-    // rep-1 throw must not erase the timings reps 2..n would have given
-    for (_ <- 1 to reps; name <- names) {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); runsByName(name) :+= (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"bench: $name failed: ${e.getMessage}")
-        failCount(name) += 1 }
+    // Every query gets ALL its reps even after a failure — a transient
+    // rep-1 throw must not erase the timings reps 2..n would have given.
+    def batch(qs: Seq[String], what: String) = {
+      val runs = scala.collection.mutable.Map[String, Vector[Double]]()
+        .withDefaultValue(Vector.empty)
+      val fails = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+      for (_ <- 1 to reps; name <- qs)
+        try runs(name) :+= profiler.rep(name, sfDir)
+        catch { case e: Throwable =>
+          System.err.println(s"bench: $what$name failed: ${e.getMessage}")
+          fails(name) += 1 }
+      (runs, fails)
     }
+    val (runsByName, failCount) = batch(names, "")
     // Noise retry (one extra interleaved batch, once): a query whose
     // spread exceeds its median was contention-poisoned — its median
     // cannot certify a regression either way (the r12 artifact had 31/111
@@ -55,17 +231,7 @@ object Bench {
       val runs = runsByName(n)
       runs.nonEmpty && (runs.max - runs.min) > median(runs)
     }
-    val retryRuns = scala.collection.mutable.Map[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
-    val retryFail = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
-    for (_ <- 1 to reps; name <- firstNoisy) {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); retryRuns(name) :+= (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"bench: retry $name failed: ${e.getMessage}")
-        retryFail(name) += 1 }
-    }
+    val (retryRuns, retryFail) = batch(firstNoisy, "retry ")
     val retried = firstNoisy.filter(n => retryRuns(n).nonEmpty &&
       median(retryRuns(n)) < median(runsByName(n)))
     val allRuns = names.map(n => n -> (runsByName(n) ++ retryRuns(n))).toMap
@@ -108,27 +274,8 @@ object Bench {
     // gate's question is "regression or contention?", and a full-suite run's
     // own load is contention). Unset = the full declared suite.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // A typo'd (or since-renamed) name would silently shrink the focused
-    // run and still write a clean-looking bench_focused.json adjudication
-    // artifact — fail loudly instead.
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-      // a whitespace/comma-only filter would otherwise measure zero
-      // queries and still overwrite bench_focused.json with a
-      // clean-looking empty adjudication artifact
-      require(names.nonEmpty, "SPARK_GRAFT_BENCH_ONLY names no queries")
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val names = SparkEntry.queries.keys.toSeq
-      .filter(n => only.forall(_.contains(n)))
+    val names = SparkEntry.selectQueries(only, "SPARK_GRAFT_BENCH_ONLY")
+    val spark = Sessions.local(cpus.toInt)
     val nameSet = names.toSet
     // Warm-up pass, mirroring criterion's warm-up-then-measure protocol
     // (the reference's own benchmark harness): run the full query suite
@@ -143,9 +290,9 @@ object Bench {
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
     val warmDir = {
-      val p = java.nio.file.Paths.get(sfDir)
+      val p = Paths.get(sfDir)
       val sibling = p.resolveSibling("sf0.001")
-      if (java.nio.file.Files.isDirectory(sibling) &&
+      if (Files.isDirectory(sibling) &&
           sibling.toString != p.toString) Some(sibling.toString)
       else None
     }
@@ -155,7 +302,10 @@ object Bench {
           try fn(spark, wd).count() catch { case _: Throwable => () }
       }
     }
-    val pass1 = measurePass(spark, sfDir, names, reps)
+    // Every timed rep is profiled (Profiler): the last one of each query
+    // lands in bench_profile.json and bench_plans/ after the passes.
+    val profiler = new Profiler(spark)
+    val pass1 = measurePass(profiler, sfDir, names, reps)
     // Whole-run rerun (once): when even the retry-repaired pass keeps a
     // worst spread ratio above ~3, the box was loaded for a large slice of
     // the run and NO median in it can certify a regression (the r13 close
@@ -171,7 +321,7 @@ object Bench {
         System.err.println(
           f"bench: max spread ratio ${maxSpreadOf(pass1.runs)}%.2f > " +
             f"$MaxCertifiableSpread%.1f — rerunning the full pass once")
-        val pass2 = measurePass(spark, sfDir, names, reps)
+        val pass2 = measurePass(profiler, sfDir, names, reps)
         val keep =
           if (passTotal(pass2.runs) < passTotal(pass1.runs)) pass2 else pass1
         val mergedAll = names.map(n => n ->
@@ -198,21 +348,6 @@ object Bench {
       case (name, runs) if runs.nonEmpty => name -> median(runs)
     }
     val total = medians.map(_._2).sum
-    def fmtN(scale: Int)(v: Double): String =
-      // BigDecimal, not printf %f: %f is locale-sensitive (a comma
-      // decimal separator would corrupt the JSON line)
-      new java.math.BigDecimal(v)
-        .setScale(scale, java.math.RoundingMode.HALF_UP).toPlainString
-    // The FULL artifact — every median at ms precision plus the spread
-    // (max-min over the reps) — goes to a dedicated file, not stdout:
-    // the driver captures only the LAST 2000 BYTES of stdout (measured
-    // from BENCH_r07/r08.json), sbt's "[success] Total time" trailer
-    // costs ~75 of those, and 80+ queries x ~25 bytes cannot fit in
-    // what remains no matter the precision. Rounds 6-8 each lost the
-    // head of the medians line to that window.
-    def jmap(m: Iterable[(String, Double)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + fmtN(3)(v) }
-        .mkString("{", ",", "}")
     // Failures are an explicit name list, NEVER a -1.0 sentinel inside the
     // timing maps: a tool summing or diffing per-query medians across
     // rounds would silently treat -1.0 as a real (negative) timing.
@@ -237,20 +372,17 @@ object Bench {
     // bench run left in the repo root (absent → empty list).
     val priorMins: Map[String, Double] =
       try {
-        val f = java.nio.file.Paths.get("bench_full.json")
-        if (java.nio.file.Files.isRegularFile(f)) {
+        val f = Paths.get("bench_full.json")
+        if (Files.isRegularFile(f)) {
           val root = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(java.nio.file.Files.readString(f))
+            .readTree(Files.readString(f))
           val node = root.get("min")
           // a baseline from a DIFFERENT scale factor is not comparable —
           // treat it as absent rather than flag everything as regressed
           val sameSf = Option(root.get("sf")).exists(_.asText() == sfDir)
           if (node == null || !sameSf) Map.empty
-          else {
-            import scala.jdk.CollectionConverters._
-            node.properties().asScala
-              .map(e => e.getKey -> e.getValue.asDouble()).toMap
-          }
+          else node.properties().asScala
+            .map(e => e.getKey -> e.getValue.asDouble()).toMap
         } else Map.empty
       } catch { case scala.util.control.NonFatal(_) => Map.empty }
     val minRegressed = mins.collect {
@@ -265,92 +397,52 @@ object Bench {
     val maxSpreadRatio =
       if (spreadRatios.nonEmpty) spreadRatios.map(_._2).max else 0.0
     val noisy = spreadRatios.collect { case (k, r) if r > 1.0 => k }.sorted
-    val noisyJson = noisy.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val partialJson = partial
-      .map { case (n, ok) => "\"" + n + "\":" + ok }.mkString("{", ",", "}")
-    val minRegressedJson =
-      minRegressed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // The FULL artifact — every median at ms precision plus the spread
+    // (max-min over the reps) — goes to a dedicated file, not stdout:
+    // the driver captures only the LAST 2000 BYTES of stdout (measured
+    // from BENCH_r07/r08.json), sbt's "[success] Total time" trailer
+    // costs ~75 of those, and 80+ queries x ~25 bytes cannot fit in
+    // what remains no matter the precision. Rounds 6-8 each lost the
+    // head of the medians line to that window.
     // `retried` = queries whose RETRY batch was kept (the medians in this
     // artifact came from it); `retry_attempted` = every noisy query that
     // got a retry batch, kept or not; `full_passes` = 2 when the
     // whole-run contention rerun fired (the artifact is the better pass)
-    val retriedJson = retried.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val attemptedJson =
-      firstNoisy.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullJson =
       s"""{"metric":"total","value":${fmtN(3)(total)},"unit":"sec","queries":${
         jmap(medians)},"min":${jmap(mins)},"spread":${jmap(spreads)
-        },"max_spread_ratio":${fmtN(3)(maxSpreadRatio)},"noisy":$noisyJson,"retried":$retriedJson,"retry_attempted":$attemptedJson,"min_regressed":$minRegressedJson,"failed":$failedJson,"partial":$partialJson,"full_passes":$fullPasses,"n":$reps,"sf":"$sfDir"}"""
+        },"max_spread_ratio":${fmtN(3)(maxSpreadRatio)},"noisy":${jlist(noisy)},"retried":${
+        jlist(retried.sorted)},"retry_attempted":${jlist(firstNoisy.sorted)
+        },"min_regressed":${jlist(minRegressed)},"failed":${jlist(failed)},"partial":${
+        jints(partial)},"full_passes":$fullPasses,"n":$reps,"sf":"$sfDir"}"""
     // A focused (SPARK_GRAFT_BENCH_ONLY) run never overwrites the full
     // artifact: bench_full.json is the round-over-round min baseline, and
     // a 4-query adjudication run replacing the 154-query record would
     // erase the very baseline the next round's gate compares against.
-    val fullPath = java.nio.file.Paths.get(
+    val fullPath = Paths.get(
       if (only.isEmpty) "bench_full.json" else "bench_focused.json")
-    java.nio.file.Files.write(fullPath, (fullJson + "\n").getBytes("UTF-8"))
+    Files.write(fullPath, (fullJson + "\n").getBytes("UTF-8"))
     System.err.println(s"bench: full per-query medians -> ${fullPath.toAbsolutePath}")
-    // The stdout line self-limits to 1800 bytes so it ALWAYS survives the
-    // tail window intact: keep the SLOWEST queries (the ones a perf review
-    // needs) up to the budget and count the omitted fast ones. The total
-    // still covers every query; the full map is in bench_full.json.
-    val bySlowest = medians.toSeq.sortBy(-_._2)
-    // the summary's noisy/min_regressed lists are capped (a storm could
-    // name every query and blow the byte budget); the _count fields and
-    // the full artifact carry the truth
-    val noisyHeadJson = noisy.take(5).map("\"" + _ + "\"").mkString("[", ",", "]")
-    val minRegHeadJson =
-      minRegressed.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Per-query MINs ride the summary line only for SHOWN queries: those
-    // whose median exceeds their min by >20%, or that are min_regressed.
-    // A min_regressed query outside the shown set carries no min here.
-    // A burst only ever ADDS time, so median >> min means contention, not
-    // regression — the r16 driver run read q_sessionize's 2.4s median as a
-    // 4x regression that its own min column exonerated. Carrying exactly
-    // the adjudication-relevant mins (capped at 30; the full artifact has
-    // all of them) lets a PERF comparison self-adjudicate noise from the
-    // stdout line alone. Additions-only; the 1800-byte self-limit governs.
-    val minByName = mins.toMap
-    val minRegSet = minRegressed.toSet
-    def line(keep: Int): String = {
-      val omitted = medians.size - keep
-      val shown = bySlowest.take(keep)
-      val minsShown = shown.flatMap { case (k, med) =>
-        minByName.get(k)
-          .filter(mn => med > mn * 1.2 || minRegSet.contains(k))
-          .map(k -> _)
-      }.take(30)
-      s"""{"metric":"total","value":${fmtN(3)(total)},"unit":"sec","queries":${
-        jmap(bySlowest.take(keep))
-      },"min":${jmap(minsShown)
-      },"omitted_fast":$omitted,"max_spread_ratio":${fmtN(3)(maxSpreadRatio)
-      },"noisy_count":${noisy.size},"noisy":$noisyHeadJson,"min_regressed_count":${
-        minRegressed.size},"min_regressed":$minRegHeadJson,"failed":$failedJson,"partial":$partialJson,"full":"${fullPath.getFileName}","full_passes":$fullPasses,"n":$reps,"sf":"$sfDir"}"""
-    }
-    val keep = (medians.size to 0 by -1).find(k => line(k).length <= 1800).getOrElse(0)
-    // Artifact-root growth ledger (stderr, print-only): every testdata
-    // regeneration strands the previous stamp's artifacts, so each
-    // round's bench log records what a `PruneArtifacts --apply` would
-    // reap. Dry-run — this driver never deletes; the --apply cadence is
-    // an operator decision (README).
-    try {
-      val aRoot = graft.operators.Ivf.indexRoot(spark)
-      val dec = graft.operators.Artifacts.prune(spark, aRoot,
-        graceMs = 60L * 60 * 1000, dryRun = true,
-        liveKeys = graft.queries.Pipeline.liveArtifactKeys)
-      System.err.println(s"bench: artifact-root prune dry-run at $aRoot: " +
-        s"${dec.count(_.action == "keep")} kept, " +
-        s"${dec.count(_.action == "would-delete")} would-delete " +
-        s"(runMain graft.PruneArtifacts $aRoot --apply to reap)")
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"bench: prune dry-run failed: ${e.getMessage}") }
+    val summary = summaryLine(Summary(total, medians, mins.toMap,
+      maxSpreadRatio, noisy, minRegressed, failed, partial,
+      fullPath.getFileName.toString, fullPasses, reps, sfDir))
+    // bench_profile.json and bench_plans/ describe the latest run, focused
+    // or full: no later run reads them as a baseline
+    profiler.close()
+    writeProfile(Paths.get(""), sfDir, profiler.records.toMap)
+    System.err.println("bench: per-query profile -> " +
+      s"${Paths.get("bench_profile.json").toAbsolutePath}, plans -> bench_plans/")
+    // Artifact-root growth ledger and per-family outcomes (stderr,
+    // print-only): this driver never deletes; the --apply cadence is an
+    // operator decision (README).
+    PruneArtifacts.ledger(spark, "bench: ")
     // Stop Spark BEFORE printing so the summary is the bare FINAL stdout
     // line — no executor-shutdown chatter can land after it (the r9 driver
     // parse failed on a wrapped/trailed line; bench_full.json was the only
     // recoverable copy). stderr carries all logs; stdout carries this line.
     spark.stop()
     System.out.flush()
-    println(line(keep))
+    println(summary)
     System.out.flush()
   }
 }

@@ -201,16 +201,8 @@ object Cli {
   /** One lazily-built local session shared by all CLI invocations in this
     * JVM (tests); a real deployment would spark-submit against a cluster
     * with the same code path. */
-  private lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val session: SparkSession =
+    Sessions.local(4, "ERROR", sys.env.get("SPARK_GRAFT_MASTER"))
 
   private def readInput(rule: RuleFile, inputPath: String) =
     if (rule.input.format == "csv") sources.Sources.csv(session, inputPath, rule.input)

@@ -31,6 +31,32 @@ object PruneArtifacts {
   def main(args: Array[String]): Unit =
     sys.exit(run(args.toIndexedSeq, Console.out, Console.err))
 
+  /** The end-of-run artifact ledger on stderr, print-only, each line
+    * prefixed with `prefix`: what a dry-run prune of the session's
+    * artifact root would reap (every testdata regeneration strands the
+    * previous stamp's artifacts), then which entry-point path each family
+    * took in this JVM (`Artifacts.outcomeCounts`: hit / build /
+    * commit_failed / read_fallback:<class> / unstamped). */
+  def ledger(spark: SparkSession, prefix: String): Unit = {
+    try {
+      val aRoot = graft.operators.Ivf.indexRoot(spark)
+      val dec = graft.operators.Artifacts.prune(spark, aRoot,
+        graceMs = 60L * 60 * 1000, dryRun = true,
+        liveKeys = graft.queries.Pipeline.liveArtifactKeys)
+      System.err.println(s"${prefix}artifact-root prune dry-run at $aRoot: " +
+        s"${dec.count(_.action == "keep")} kept, " +
+        s"${dec.count(_.action == "would-delete")} would-delete " +
+        s"(runMain graft.PruneArtifacts $aRoot --apply to reap)")
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"${prefix}prune dry-run failed: ${e.getMessage}") }
+    val outcomes = graft.operators.Artifacts.outcomeCounts.groupBy(_._1._1)
+      .toSeq.sortBy(_._1).map { case (family, counts) =>
+        family + " " + counts.toSeq.sortBy(_._1._2)
+          .map { case ((_, outcome), n) => s"$outcome=$n" }.mkString(" ")
+      }
+    System.err.println(s"${prefix}artifact outcomes: ${outcomes.mkString("; ")}")
+  }
+
   /** Testable entry: returns the exit code instead of exiting. */
   def run(args: Seq[String], out: java.io.PrintStream,
       err: java.io.PrintStream): Int = {
@@ -73,11 +99,7 @@ object PruneArtifacts {
         // stopping that would take down every later suite
         val preExisting = SparkSession.getActiveSession
           .orElse(SparkSession.getDefaultSession).isDefined
-        val spark = SparkSession.builder()
-          .master("local[2]")
-          .config("spark.sql.shuffle.partitions", "2")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
+        val spark = Sessions.local(2)
         try {
           // the live format keys come from THE SAME BUILD this reaper
           // ships in, so "current" can never drift from what writers

@@ -15,4 +15,22 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     Relational.oracles ++ Scalar.oracles ++ HigherOrder.oracles ++
       Pipeline.oracles ++ EngineQueries.oracles ++ Extensions.oracles
+
+  /** The query names a focused run measures: every query when `list` is
+    * absent, else the comma list's trimmed names, in [[queries]] order. An
+    * unknown name or a list naming nothing fails loudly — a typo would
+    * otherwise shrink the run silently and still leave a clean-looking
+    * artifact (a focused bench record, an empty oracle file). `source`
+    * names where the list came from in the error. */
+  def selectQueries(list: Option[String], source: String): Seq[String] = {
+    val all = queries.keys.toSeq
+    list.fold(all) { l =>
+      val names = l.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.diff(all.toSet)
+      require(unknown.isEmpty,
+        s"$source names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      require(names.nonEmpty, s"$source names no queries")
+      all.filter(names)
+    }
+  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,32 +16,16 @@ object Verify {
         "denominator silently; bump ExpectedQueryCount only with an " +
         "intentional add/remove")
     // optional 3rd arg: comma-separated query names (local iteration only;
-    // the driver always invokes with exactly two args = full run). Names
-    // are trimmed and VALIDATED: a typo would otherwise dump nothing and
-    // write an empty oracle file, and the checker would print a
-    // clean-looking "0 pass, 0 fail" for a run that checked nothing —
-    // the same silent-shrink failure Bench's filter guards against.
-    val only: Option[Set[String]] =
-      if (args.length > 2)
-        Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      else None
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"unknown query names in the focused-run filter: ${unknown.toSeq.sorted.mkString(", ")}")
-      require(names.nonEmpty, "the focused-run filter names no queries")
-    }
+    // the driver always invokes with exactly two args = full run), validated
+    // like Bench's filter: a typo would otherwise dump nothing, write an
+    // empty oracle file, and the checker would print a clean-looking
+    // "0 pass, 0 fail" for a run that checked nothing.
+    val names = SparkEntry.selectQueries(args.lift(2), "the focused-run filter").toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // driver contract: local[32]
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => names(name) }
       .foreach { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -80,30 +63,11 @@ object Verify {
     // checker's denominator equals the dumped set — the full driver run
     // (two args) still writes every oracle
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // artifact-root growth ledger (stderr, print-only — the Bench tail's
-    // twin): record what a PruneArtifacts --apply would reap this round
-    try {
-      val aRoot = graft.operators.Ivf.indexRoot(spark)
-      val dec = graft.operators.Artifacts.prune(spark, aRoot,
-        graceMs = 60L * 60 * 1000, dryRun = true,
-        liveKeys = graft.queries.Pipeline.liveArtifactKeys)
-      System.err.println(s"[verify] artifact-root prune dry-run at $aRoot: " +
-        s"${dec.count(_.action == "keep")} kept, " +
-        s"${dec.count(_.action == "would-delete")} would-delete " +
-        s"(runMain graft.PruneArtifacts $aRoot --apply to reap)")
-    } catch { case e if scala.util.control.NonFatal(e) =>
-      System.err.println(s"[verify] prune dry-run failed: ${e.getMessage}") }
-    // which artifact path actually ran: per-family entry-point outcomes
-    // (hit / build / commit_failed / read_fallback:<class> / unstamped)
-    val outcomes = graft.operators.Artifacts.outcomeCounts.groupBy(_._1._1)
-      .toSeq.sortBy(_._1).map { case (family, counts) =>
-        family + " " + counts.toSeq.sortBy(_._1._2)
-          .map { case ((_, outcome), n) => s"$outcome=$n" }.mkString(" ")
-      }
-    System.err.println(s"[verify] artifact outcomes: ${outcomes.mkString("; ")}")
+    // artifact ledger (stderr, print-only — Bench prints the same)
+    PruneArtifacts.ledger(spark, "[verify] ")
     spark.stop()
     // Exit HARD: round 7's driver compare hit transient OOMs (1–2 MB
     // mallocs failing) on 4 queries while this JVM's heap could still be

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.functions.GraftExtensions …
-  *   // or: SparkSession.builder().withExtensions(new GraftExtensions)…
+  *   // or: .withExtensions(new GraftExtensions) on a SparkSession builder
   *   spark.sql("SELECT rm_simhash(text, 60) FROM docs")
   * }}}
   *

@@ -100,16 +100,8 @@ object Mcp {
     new String(buf.toByteArray, "UTF-8")
   }
 
-  private lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val session: SparkSession =
+    graft.Sessions.local(4, "ERROR", sys.env.get("SPARK_GRAFT_MASTER"))
 
   // -- protocol -----------------------------------------------------------
 

@@ -19,11 +19,7 @@ class EndpointSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val mapper = new ObjectMapper()
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private var dir: Path = _
   private var api: HttpServer = _

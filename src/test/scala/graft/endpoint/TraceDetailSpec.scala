@@ -24,11 +24,7 @@ class TraceDetailSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val mapper = new ObjectMapper()
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private var dir: Path = _
 
@@ -365,10 +361,10 @@ class TraceDetailSpec extends AnyFunSuite with BeforeAndAfterAll {
     val off = new EndpointEngine(spark, yaml, traceDetail = false)
     def counted(engine: EndpointEngine, path: String, body: String)
         : (EndpointEngine.HttpResult, Int) = {
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      org.apache.spark.sql.rmbridge.Bridge.drainListenerBus(spark.sparkContext)
       val before = jobs.get()
       val res = engine.handle("POST", path, "", Nil, Some(body))
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      org.apache.spark.sql.rmbridge.Bridge.drainListenerBus(spark.sparkContext)
       (res, jobs.get() - before)
     }
     spark.sparkContext.addSparkListener(listener)

@@ -15,11 +15,7 @@ class UiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val mapper = new ObjectMapper()
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private var dataDir: Path = _
   private var uiDir: Path = _

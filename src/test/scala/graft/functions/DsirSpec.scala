@@ -13,11 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * grams take the smoothing default rather than 0. */
 class DsirSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private val B = 512
 

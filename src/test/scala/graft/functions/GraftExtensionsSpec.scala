@@ -18,11 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftExtensionsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.Sessions.local(4)
     GraftExtensions.registrations.foreach { case (id, inf, builder) =>
       s.sessionState.functionRegistry.registerFunction(id, inf, builder)
     }

@@ -73,11 +73,7 @@ class LexiconSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](new LexiconAutomaton(Array("a", "a")))
   }
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   test("Column forms survive serialization through a real plan") {
     import spark.implicits._

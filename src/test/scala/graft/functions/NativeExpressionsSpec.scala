@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * family or accumulation order. */
 class NativeExpressionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   test("ShingleHashes equals the split+window+distinct+xxhash64 combinator form") {
     import spark.implicits._

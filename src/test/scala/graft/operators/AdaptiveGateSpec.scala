@@ -13,11 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * error the symmetric difference is a sliver, never a different gate. */
 class AdaptiveGateSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private val dir = "/root/testdata/sf0.01"
 

@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * degradation), and determinism under repartitioning. */
 class BpeTrainSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def docs(rows: (Long, String)*) = {
     import spark.implicits._

@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (fixpoint min-label over an adjacency map). Seeded, 30 random graphs. */
 class ClusterPropertySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def referenceCC(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     val adj = scala.collection.mutable.HashMap.empty[Long, Set[Long]]

@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fixpoint (component minimum as canonical id). */
 class DedupClustersSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   test("union-find and label propagation agree on chained and disjoint clusters") {
     import spark.implicits._

@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * still dropped (its pair exists regardless of the partner's fate). */
 class IncrementalDedupSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private val N = 3; private val K = 64; private val B = 16
   private val T = 0.8

@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * timestamps). */
 class JoinPropertySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def randRows(seed: Long, n: Int, keys: Int, tMax: Int) = {
     val rnd = new scala.util.Random(seed)

@@ -7,11 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * feature extraction (deterministic, normalized), frame sampling. */
 class MultimodalSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   test("payload + metadata + stub features + frame sampling") {
     import spark.implicits._

@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * unseen-class edges, and partitioning determinism. */
 class NbClassifySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def docs(rows: (Long, String, String)*): DataFrame = {
     import spark.implicits._

@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * partitioning stability. */
 class PackingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def docs() = {
     import spark.implicits._

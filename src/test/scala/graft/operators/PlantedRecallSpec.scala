@@ -26,11 +26,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlantedRecallSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private val Dims = 64
   private val Clusters = 20

@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * shape (no cartesian / nested-loop product). */
 class RangeJoinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def sides() = {
     import spark.implicits._

@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * for any partition count and any input distribution. */
 class SamplingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def mix(z0: Long): Long = {
     var z = z0 * 0x9E3779B97F4A7C15L

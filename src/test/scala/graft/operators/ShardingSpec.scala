@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * of the corpus in the manifest, and the one-file-per-shard write. */
 class ShardingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private val dir = "/root/testdata/sf0.001"
 

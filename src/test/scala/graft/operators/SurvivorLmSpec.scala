@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * score ([[TextAnalysis.lmScore]]). */
 class SurvivorLmSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   test("keepRepresentatives labels every universe id; component min survives") {
     import spark.implicits._

@@ -19,11 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TemperatureResampleSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def corpus(sizes: Map[String, Int]) = {
     import spark.implicits._

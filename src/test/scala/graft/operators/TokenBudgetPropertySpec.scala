@@ -14,11 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * probing the exactly-at-a-prefix-sum and beyond-total edges. */
 class TokenBudgetPropertySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   test("distributed prefix sum equals the naive cumulative sum across partitionings, ties, and budget edges") {
     import spark.implicits._

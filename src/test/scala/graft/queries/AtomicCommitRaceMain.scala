@@ -15,11 +15,7 @@ package graft.queries
 object AtomicCommitRaceMain {
   def main(args: Array[String]): Unit = {
     val Array(path, syncDir, id) = args
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(2)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(syncDir, s"ready-$id"), "ready")
     val deadline = System.currentTimeMillis() + 60000

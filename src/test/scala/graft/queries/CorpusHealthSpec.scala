@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * wrong join/aggregate shape cannot agree by accident. */
 class CorpusHealthSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private val dir = "/root/testdata/sf0.001"
 

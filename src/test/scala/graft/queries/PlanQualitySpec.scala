@@ -11,12 +11,7 @@ import graft.rules.{Engine, YamlParser}
   * join is a broadcast hash join (no fact-side shuffle). */
 class PlanQualitySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -16,11 +16,7 @@ import graft.operators.{TextAnalysis => TA}
   * ensemble must agree with a direct window-function restatement. */
 class QualityEnsembleSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -22,12 +22,7 @@ class FixtureCompatSpec extends AnyFunSuite {
   private val fixtureRoot = "/root/reference/crates/rulemorph/tests/fixtures"
   private val mapper = new ObjectMapper()
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def jsonNodeToJValue(n: JsonNode): JValue = {
     import scala.jdk.CollectionConverters._

@@ -11,12 +11,7 @@ import Model._
   * stringified keys, and the chrono-pattern date cascade. */
 class ObjectOpsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def run(yaml: String, input: DataFrame, context: JValue = JNull): DataFrame =
     Engine.transform(YamlParser.parse(yaml), input, context)

@@ -14,11 +14,7 @@ class PreflightSpec extends AnyFunSuite {
   private val fixtureRoot = "/root/reference/crates/rulemorph/tests/fixtures"
   private val mapper = new ObjectMapper()
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def preflight(fixture: String): Unit = {
     val dir = s"$fixtureRoot/$fixture"

@@ -14,11 +14,7 @@ import Model._
   */
 class WarningsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def runWithWarnings(yaml: String, input: org.apache.spark.sql.DataFrame)
       : (Seq[String], Seq[Engine.Warning]) = {

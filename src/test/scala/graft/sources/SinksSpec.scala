@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * shuffle. */
 class SinksSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   test("writePartitioned: partition filter prunes the scan") {
     import spark.implicits._

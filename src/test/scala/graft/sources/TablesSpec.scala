@@ -18,12 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (this spec pins both directions). */
 class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
 

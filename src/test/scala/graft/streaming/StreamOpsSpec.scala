@@ -15,12 +15,7 @@ import graft.rules.YamlParser
   * processAllAvailable = synchronous local smoke). */
 class StreamOpsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   test("rule transform runs on a stream; finalize is rejected (reference NDJSON-mode rule)") {
     import spark.implicits._
