@@ -95,16 +95,14 @@ object Engine {
       if (needsOrder) monotonically_increasing_id() else lit(0L))
     val baseResolver = resolveFromSchema(
       input.schema.fields.map(f => f.name -> f.dataType).toSeq, col(_))
-    // Spark's JSON reader conflates absent fields with explicit nulls; for
-    // such sources the faithful reading of a null input ref is MISSING
+    // JSON ingest (Sources.json) gives every field that holds an explicit
+    // null a variant type, so for such sources a SQL null input ref is an
+    // ABSENT field, i.e. MISSING, and an explicit null is a variant null
     // (the reference's JSON ingest distinguishes them, transform.rs:902-941)
     val inputResolver: Seq[String] => CE =
       if (nullAsMissing) baseResolver.andThen(ce =>
-        // identity of the static-missing CE is preserved (ops test it);
-        // variant fields already distinguish absent (SQL null) from
-        // explicit JSON null (variant null), so they pass through
-        if ((ce eq CE.missing) || ce.tpe == org.apache.spark.sql.types.VariantType) ce
-        else CE(ce.value, ce.missing || ce.value.isNull, ce.tpe))
+        // identity of the static-missing CE is preserved (ops test it)
+        if (ce eq CE.missing) ce else CE(ce.value, ce.missing || ce.value.isNull, ce.tpe))
       else baseResolver
     var env = Env(input = inputResolver, context = context)
 
@@ -405,7 +403,7 @@ object Engine {
       out: scala.collection.immutable.ListMap[String, CE], context: JValue)
       : (DataFrame, Env) = {
     val recType = StructType(out.map { case (n, ce) => StructField(n, ce.tpe) }.toSeq)
-    val rec = struct(out.keys.map(col).toSeq: _*)
+    val rec = struct(out.keys.map(column).toSeq: _*)
     // coalesce(1) after the finalize sort keeps global order in the single
     // partition, so collect_list preserves the output array order
     val single = projected.coalesce(1).agg(collect_list(rec).as("__all"))
@@ -556,8 +554,8 @@ object Engine {
       c.out.map { case (name, ce) => ce.missing.as(s"__miss_$name") }.toSeq
     val projected = applyFinalize(rule, c.df.select(cols :+ col("__order"): _*), context)
     val frags = c.out.keys.toSeq.map { name =>
-      val enc = jsonEncode(col(name), projected.schema(name).dataType)
-      when(col(s"__miss_$name"), lit(null).cast(StringType))
+      val enc = jsonEncode(column(name), projected.schema(name).dataType)
+      when(column(s"__miss_$name"), lit(null).cast(StringType))
         .otherwise(concat(lit("\"" + name + "\":"), enc))
     }
     val recordJson = concat(lit("{"), concat_ws(",", frags: _*), lit("}"))
@@ -567,7 +565,7 @@ object Engine {
         // `@out` renders the pre-built per-record JSON (missing fields stay
         // absent inside records); other exprs evaluate over the value array.
         val recType = StructType(c.out.map { case (n, ce) => StructField(n, ce.tpe) }.toSeq)
-        val rec = struct(c.out.keys.map(col).toSeq: _*)
+        val rec = struct(c.out.keys.map(column).toSeq: _*)
         val single = projected.coalesce(1).agg(
           collect_list(rec).as("__all"), collect_list(recordJson).as("__alljson"))
         val wenv = Env(input = _ => CE.missing, context = context,
@@ -591,6 +589,10 @@ object Engine {
       case None => projected.select(recordJson.as("json"))
     }
   }
+
+  /** A top-level column by its exact name: backtick-quoted, since `col`
+    * reads a dotted name (t08 escaped keys) as a nested field path. */
+  private def column(name: String): Column = col(s"`${name.replace("`", "``")}`")
 
   /** JSON-encode one value column (variant-aware; ExprCompiler owns the
     * encoding so op-level fragments and the sink agree byte-for-byte). */
@@ -621,7 +623,7 @@ object Engine {
       val fields = result.schema.fields
         .filterNot(f => f.name == "__order" || f.name.startsWith("__miss_"))
       val itemCE = CE.present(
-        struct(fields.map(f => col(f.name)).toSeq: _*),
+        struct(fields.map(f => column(f.name)).toSeq: _*),
         StructType(fields.toSeq))
       fin.filter.foreach { cond =>
         // @item.index = 0-based output-record index (tv39): a window over
@@ -699,7 +701,7 @@ object Engine {
         // encoding is a constant — widen so the raising column is actually
         // read by the sink and the error fires per kept record (p02)
         val tpe = if (base.tpe == NullType) StringType else base.tpe
-        CE(when(keep && (base.missing || base.value.isNull),
+        CE(when(keep && (base.missing || ExprCompiler.isJsonNull(base)),
           RmError.raiseCol("MissingRequired", pathBase, "required value is missing")
             .cast(tpe)).otherwise(base.value.cast(tpe)), lit(false), tpe)
       case None => base

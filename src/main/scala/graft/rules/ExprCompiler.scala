@@ -187,14 +187,25 @@ object ExprCompiler {
     CE(s, e.missing, StringType)
   }
 
+  /** A present value that is JSON null: SQL null, or a variant holding an
+    * explicit JSON null. */
+  def isJsonNull(e: CE): Column =
+    if (e.tpe == VariantType) e.value.isNull || is_variant_null(e.value)
+    else e.value.isNull
+
   /** value_to_number semantics (transform.rs:5804-5817): numbers pass,
-    * numeric strings coerce (ANSI cast errors on garbage — matching the
-    * reference's error-on-non-numeric). */
+    * numeric strings coerce, any other string raises ExprError (the
+    * reference's error-on-non-numeric) — an engine error, not a Spark cast
+    * failure, so a `when` / `record_when` catches it per record. */
   def rmToNumber(e: CE): CE = e.tpe match {
     case DoubleType => e
     case LongType | IntegerType | FloatType | ShortType | NullType =>
       CE(e.value.cast(DoubleType), e.missing, DoubleType)
-    case StringType => CE(e.value.cast(DoubleType), e.missing, DoubleType)
+    case StringType =>
+      val d = e.value.try_cast(DoubleType)
+      CE(when(e.value.isNotNull && d.isNull,
+        RmError.raiseCol("ExprError", "", "value is not a number").cast(DoubleType))
+        .otherwise(d), e.missing, DoubleType)
     case VariantType => CE(e.value.cast(DoubleType), e.missing, DoubleType)
     case t => throw CompileError(s"numeric op: unsupported type $t")
   }
@@ -570,7 +581,7 @@ object ExprCompiler {
         val args = allArgs
         val tpe = args.map(_.tpe).find(_ != NullType).getOrElse(NullType)
         val v = args.foldRight(lit(null).cast(tpe)) { (e, rest) =>
-          when(!e.missing && e.value.isNotNull, e.value.cast(tpe)).otherwise(rest)
+          when(!e.missing && !isJsonNull(e), e.value.cast(tpe)).otherwise(rest)
         }
         CE(v, lit(false), tpe)
 
@@ -581,6 +592,7 @@ object ExprCompiler {
         descend(a0, path)
 
       // -- arrays
+      case "len" if a0 eq CE.missing => CE.missing
       case "len" =>
         val v = a0.tpe match {
           case StringType => length(a0.value)
@@ -720,17 +732,25 @@ object ExprCompiler {
         val et = elemTypeOf(a0)
         val bodyIdx = if (op == "fold") 2 else 1
         val body = rawAt(bodyIdx)
+        def step(acc: CE, x: Column): CE = compile(body, env.copy(
+          acc = Some(acc), item = Some(CE.present(x, et)), pipeValue = Some(CE.present(x, et))))
+        // reduce seeds with the first element; its accumulator keeps the
+        // element type unless the body yields another one (numbers widen
+        // to the f64 of the arithmetic ops)
+        def reduceType: DataType = {
+          val bodyT = step(CE.present(lit(null).cast(et), et), lit(null).cast(et)).tpe
+          if (bodyT == et || bodyT == NullType) et
+          else if (Seq(et, bodyT).forall(_.isInstanceOf[NumericType])) DoubleType
+          else throw CompileError(s"reduce over $et yields $bodyT")
+        }
         val (init, rest, initT) =
           if (op == "fold") (arg(1).value, a0.value, arg(1).tpe)
-          else (rmToNumber(CE.present(element_at(a0.value, 1), et)).value,
-            slice(a0.value, lit(2), greatest(size(a0.value) - 1, lit(0))), DoubleType)
-        val v = aggregate(rest, init, (acc, x) => {
-          val r = compile(body, env.copy(
-            acc = Some(CE.present(acc, initT)),
-            item = Some(CE.present(x, et)),
-            pipeValue = Some(CE.present(x, et))))
-          r.value.cast(initT)
-        })
+          else {
+            val t = reduceType
+            (element_at(a0.value, 1).cast(t),
+              slice(a0.value, lit(2), greatest(size(a0.value) - 1, lit(0))), t)
+          }
+        val v = aggregate(rest, init, (acc, x) => step(CE.present(acc, initT), x).value.cast(initT))
         CE(when(size(a0.value) === 0, lit(null).cast(initT)).otherwise(v),
           a0.missing, initT)
       case "sort_by" =>
@@ -1007,8 +1027,12 @@ object ExprCompiler {
             lastWinMap(a0, e => rmToString(CE.present(e.getField("key"), st("key").dataType)).value,
               e => e.getField("value"), st("value").dataType)
           case ArrayType(ArrayType(et, _), _) =>
-            lastWinMap(a0, p => rmToString(CE.present(element_at(p, 1), et)).value,
-              p => element_at(p, 2), et)
+            val badPair = RmError.raiseCol("ExprError", s"${argPathStr(0)}[0]",
+              "expr arg must be an entry pair")
+            lastWinMap(a0,
+              p => when(size(p) =!= 2, badPair.cast(StringType))
+                .otherwise(rmToString(CE.present(element_at(p, 1), et)).value),
+              p => when(size(p) === 2, element_at(p, 2)), et)
           case ArrayType(VariantType, _) =>
             // variant elements must each be a [k, v] pair array; a direct
             // cast throws under ANSI, so gate on the variant's own schema
@@ -1365,9 +1389,12 @@ object ExprCompiler {
                 d === Double.NegativeInfinity, fail("failed to cast to float").cast(DoubleType))
               .otherwise(d)
           case StringType | VariantType =>
+            // a numeric string out of f64 range parses to infinity, which
+            // is as non-finite as any other
             val s = e.value.cast(StringType)
+            val d = s.cast(DoubleType)
             when(s.isNull, lit(null).cast(DoubleType))
-              .when(s.rlike(numRe), s.cast(DoubleType))
+              .when(s.rlike(numRe) && !d.isin(Double.PositiveInfinity, Double.NegativeInfinity), d)
               .otherwise(fail("failed to cast to float").cast(DoubleType))
           case NullType => lit(null).cast(DoubleType)
           case BooleanType => fail("failed to cast to float").cast(DoubleType)

@@ -104,8 +104,10 @@ object Validator {
           checkExpr(e, s"$base.expr", inItemScope = false, definedOut, errors,
             asPipe = v2))
 
+        // an invalid target was reported above and defines nothing
         mm.get("target").map(_.toString).foreach { t =>
-          definedOut += PathParser.parse(t).headOption.getOrElse(t)
+          try definedOut += PathParser.parse(t).headOption.getOrElse(t)
+          catch { case _: PathParser.PathError => () }
         }
       case _ => ()
     }

@@ -37,12 +37,13 @@ object Sources {
 
   /** JSON documents ingest with a Jackson-driven schema instead of Spark's
     * inference: field order is preserved, empty objects survive as
-    * zero-field structs, and fields whose values mix types (or are
-    * all-null) become VariantType — which also preserves the reference's
-    * absent-vs-null distinction on those fields (absent → SQL null,
-    * explicit null → variant null). Document-mode JSON is a driver-side
-    * whole-file parse in the reference too; NDJSON stays the scalable
-    * splittable path. */
+    * zero-field structs, and object fields whose values mix types, or that
+    * hold an explicit null in any record, become VariantType — which
+    * preserves the reference's absent-vs-null distinction on those fields
+    * (absent → SQL null, explicit null → variant null), so a SQL null in a
+    * typed field always means the field is absent. Document-mode JSON is a
+    * driver-side whole-file parse in the reference too; NDJSON stays the
+    * scalable splittable path. */
   def json(spark: SparkSession, path: String, recordsPath: Seq[String]): DataFrame = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     jsonNode(spark,
@@ -75,7 +76,10 @@ object Sources {
       else if (nn.forall(_.isObject)) {
         val names = scala.collection.mutable.LinkedHashSet.empty[String]
         nn.foreach(_.fieldNames.asScala.foreach(names += _))
-        StructType(names.toSeq.map(k => StructField(k, infer(nn.map(_.get(k))))))
+        StructType(names.toSeq.map { k =>
+          val vs = nn.map(_.get(k))
+          StructField(k, if (vs.exists(v => v != null && v.isNull)) VariantType else infer(vs))
+        })
       } else if (nn.forall(_.isArray))
         ArrayType(infer(nn.flatMap(_.elements.asScala)))
       else if (nn.forall(_.isTextual)) StringType

@@ -5,12 +5,16 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.rules.Fixtures
+
 /** CLI contract tests against the reference exit codes (main.rs:152-165):
   * 0 ok, 1 I/O failure, 2 validation errors, 3 transform errors — driven
-  * over the reference's own fixtures. */
+  * over the rules fixture set (see [[graft.rules.Fixtures]]). */
 class CliSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/reference/crates/rulemorph/tests/fixtures"
+  /** Each case of fixture `name`, as a function of a file name → path. */
+  private def fixture(name: String)(body: (String => String) => Unit): Unit =
+    Fixtures.cases(name).foreach(c => body(f => c.path(f).toString))
 
   private case class R(code: Int, out: String, err: String)
 
@@ -21,8 +25,10 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("validate: clean rule file exits 0") {
-    val r = cli("validate", "-r", s"$fixtures/t01_csv_basic/rules.yaml")
-    assert(r.code == 0, r.err)
+    fixture("t01_csv_basic") { f =>
+      val r = cli("validate", "-r", f("rules.yaml"))
+      assert(r.code == 0, r.err)
+    }
   }
 
   test("ui: ui-only with --no-ui exits 1; invalid rules dir exits 2") {
@@ -48,9 +54,11 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("validate: invalid rule exits 2 with E line on stderr") {
-    val r = cli("validate", "-r", s"$fixtures/v02_duplicate_target/rules.yaml")
-    assert(r.code == 2)
-    assert(r.err.startsWith("E "), r.err)
+    fixture("v02_duplicate_target") { f =>
+      val r = cli("validate", "-r", f("rules.yaml"))
+      assert(r.code == 2)
+      assert(r.err.startsWith("E "), r.err)
+    }
   }
 
   test("validate: missing file exits 1") {
@@ -60,86 +68,90 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("transform: t01 csv fixture round-trips to the golden output") {
-    val r = cli("transform",
-      "-r", s"$fixtures/t01_csv_basic/rules.yaml",
-      "-i", s"$fixtures/t01_csv_basic/input.csv")
-    assert(r.code == 0, r.err)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val got = mapper.readTree(r.out)
-    val want = mapper.readTree(
-      Files.readString(Paths.get(s"$fixtures/t01_csv_basic/expected.json")))
-    assert(got == want, s"got ${r.out}")
+    fixture("t01_csv_basic") { f =>
+      val r = cli("transform", "-r", f("rules.yaml"), "-i", f("input.csv"))
+      assert(r.code == 0, r.err)
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val got = mapper.readTree(r.out)
+      val want = mapper.readTree(Files.readString(Paths.get(f("expected.json"))))
+      assert(got == want, s"got ${r.out}")
+    }
   }
 
   test("transform: --ndjson emits one record per line (t12 golden)") {
-    val r = cli("transform",
-      "-r", s"$fixtures/t12_ndjson_csv/rules.yaml",
-      "-i", s"$fixtures/t12_ndjson_csv/input.csv", "--ndjson")
-    assert(r.code == 0, r.err)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val got = r.out.trim.split("\n").map(mapper.readTree)
-    val want = Files.readString(Paths.get(s"$fixtures/t12_ndjson_csv/expected.ndjson"))
-      .trim.split("\n").map(mapper.readTree)
-    assert(got.toSeq == want.toSeq, r.out)
+    fixture("t12_ndjson_csv") { f =>
+      val r = cli("transform", "-r", f("rules.yaml"), "-i", f("input.csv"), "--ndjson")
+      assert(r.code == 0, r.err)
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val got = r.out.trim.split("\n").map(mapper.readTree)
+      val want = Files.readString(Paths.get(f("expected.ndjson")))
+        .trim.split("\n").map(mapper.readTree)
+      assert(got.toSeq == want.toSeq, r.out)
+    }
   }
 
   test("transform: runtime error exits 3 with kind on stderr") {
-    val r = cli("transform",
-      "-r", s"$fixtures/r09_asserts_failed/rules.yaml",
-      "-i", s"$fixtures/r09_asserts_failed/input.json")
-    assert(r.code == 3, s"code=${r.code} out=${r.out}")
-    assert(r.err.contains("AssertionFailed"), r.err)
+    fixture("r09_asserts_failed") { f =>
+      val r = cli("transform", "-r", f("rules.yaml"), "-i", f("input.json"))
+      assert(r.code == 3, s"code=${r.code} out=${r.out}")
+      assert(r.err.contains("AssertionFailed"), r.err)
+    }
   }
 
   test("transform: -e json emits a structured error array") {
-    val r = cli("transform",
-      "-r", s"$fixtures/r09_asserts_failed/rules.yaml",
-      "-i", s"$fixtures/r09_asserts_failed/input.json", "-e", "json")
-    assert(r.code == 3)
-    assert(r.err.contains("\"type\":\"transform\""), r.err)
-    assert(r.err.contains("\"kind\":\"AssertionFailed\""), r.err)
+    fixture("r09_asserts_failed") { f =>
+      val r = cli("transform", "-r", f("rules.yaml"), "-i", f("input.json"), "-e", "json")
+      assert(r.code == 3)
+      assert(r.err.contains("\"type\":\"transform\""), r.err)
+      assert(r.err.contains("\"kind\":\"AssertionFailed\""), r.err)
+    }
   }
 
   test("preflight: ok fixture exits 0, error fixture exits 3") {
-    val ok = cli("preflight",
-      "-r", s"$fixtures/p01_preflight_ok/rules.yaml",
-      "-i", s"$fixtures/p01_preflight_ok/input.json")
-    assert(ok.code == 0, ok.err)
-    val bad = cli("preflight",
-      "-r", s"$fixtures/p02_preflight_missing_required/rules.yaml",
-      "-i", s"$fixtures/p02_preflight_missing_required/input.json")
-    assert(bad.code == 3, s"code=${bad.code}")
-    assert(bad.err.contains("MissingRequired"), bad.err)
+    fixture("p01_preflight_ok") { f =>
+      val ok = cli("preflight", "-r", f("rules.yaml"), "-i", f("input.json"))
+      assert(ok.code == 0, ok.err)
+    }
+    fixture("p02_preflight_missing_required") { f =>
+      val bad = cli("preflight", "-r", f("rules.yaml"), "-i", f("input.json"))
+      assert(bad.code == 3, s"code=${bad.code}")
+      assert(bad.err.contains("MissingRequired"), bad.err)
+    }
   }
 
   test("preflight: missing input file exits 1") {
-    val r = cli("preflight",
-      "-r", s"$fixtures/p01_preflight_ok/rules.yaml",
-      "-i", "/nonexistent/input.json")
-    assert(r.code == 1)
+    // the rules file exists, so the exit code is the missing input's
+    fixture("p01_preflight_ok") { f =>
+      val r = cli("preflight", "-r", f("rules.yaml"), "-i", "/nonexistent/input.json")
+      assert(r.code == 1)
+      assert(r.err.contains("failed to read input"), r.err)
+    }
   }
 
   test("generate: rust dto to stdout matches the golden file") {
-    val r = cli("generate", "-r", s"$fixtures/dto01_basic/rules.yaml", "-l", "rust")
-    assert(r.code == 0, r.err)
-    val want = Files.readString(Paths.get(s"$fixtures/dto01_basic/expected_rust.rs"))
-      .replaceAll("\\s+$", "")
-    assert(r.out.trim == want)
+    fixture("dto01_basic") { f =>
+      val r = cli("generate", "-r", f("rules.yaml"), "-l", "rust")
+      assert(r.code == 0, r.err)
+      val want = Files.readString(Paths.get(f("expected_rust.rs"))).replaceAll("\\s+$", "")
+      assert(r.out.trim == want)
+    }
   }
 
   test("generate: ts alias works; unknown language exits 1") {
-    assert(cli("generate", "-r", s"$fixtures/dto01_basic/rules.yaml", "-l", "ts").code == 0)
-    assert(cli("generate", "-r", s"$fixtures/dto01_basic/rules.yaml", "-l", "cobol").code == 1)
+    fixture("dto01_basic") { f =>
+      assert(cli("generate", "-r", f("rules.yaml"), "-l", "ts").code == 0)
+      assert(cli("generate", "-r", f("rules.yaml"), "-l", "cobol").code == 1)
+    }
   }
 
   test("generate: -o writes the file") {
-    val tmp = Files.createTempDirectory("cli").resolve("dto.rs")
-    val r = cli("generate", "-r", s"$fixtures/dto02_steps/rules.yaml",
-      "-l", "rust", "-o", tmp.toString)
-    assert(r.code == 0, r.err)
-    val want = Files.readString(Paths.get(s"$fixtures/dto02_steps/expected_rust.rs"))
-      .replaceAll("\\s+$", "")
-    assert(Files.readString(tmp).trim == want)
+    fixture("dto02_steps") { f =>
+      val tmp = Files.createTempDirectory("cli").resolve("dto.rs")
+      val r = cli("generate", "-r", f("rules.yaml"), "-l", "rust", "-o", tmp.toString)
+      assert(r.code == 0, r.err)
+      val want = Files.readString(Paths.get(f("expected_rust.rs"))).replaceAll("\\s+$", "")
+      assert(Files.readString(tmp).trim == want)
+    }
   }
 
   test("transform/preflight: when-eval error emits W lines on stderr, exit 0") {

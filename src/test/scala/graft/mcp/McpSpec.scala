@@ -103,16 +103,14 @@ class McpSpec extends AnyFunSuite {
   }
 
   test("generate_dto tool matches the DtoGenerator output") {
-    val rules = java.nio.file.Paths.get(
-      "/root/reference/crates/rulemorph/tests/fixtures/dto02_steps/rules.yaml")
-    val rulesText = Files.readString(rules).replace("\"", "\\\"").replace("\n", "\\n")
-    val result = toolCall("generate_dto",
-      s"""{"rules_text": "$rulesText", "language": "rust"}""")
-    val want = Files.readString(java.nio.file.Paths.get(
-      "/root/reference/crates/rulemorph/tests/fixtures/dto02_steps/expected_rust.rs"))
-      .replaceAll("\\s+$", "")
-    assert(result.path("content").get(0).path("text").asText == want)
-    assert(result.path("meta").path("language").asText == "rust")
+    for (c <- graft.rules.Fixtures.cases("dto02_steps")) {
+      val rulesText = c.read("rules.yaml").replace("\"", "\\\"").replace("\n", "\\n")
+      val result = toolCall("generate_dto",
+        s"""{"rules_text": "$rulesText", "language": "rust"}""")
+      val want = c.read("expected_rust.rs").replaceAll("\\s+$", "")
+      assert(result.path("content").get(0).path("text").asText == want, c.label)
+      assert(result.path("meta").path("language").asText == "rust")
+    }
   }
 
   test("list_ops reports ops, comparisons, and casts") {

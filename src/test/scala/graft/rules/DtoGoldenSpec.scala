@@ -1,24 +1,19 @@
 package graft.rules
 
-import java.nio.file.{Files, Paths}
-
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The reference's DTO golden suite (crates/rulemorph/tests/dto_golden.rs)
-  * run verbatim: generated text must equal each expected_* file exactly
-  * (both sides trim trailing whitespace, dto_golden.rs:19-32). */
+/** The DTO golden suite (the reference's crates/rulemorph/tests/dto_golden.rs)
+  * over the fixture set (see [[Fixtures]]): generated text must equal each
+  * expected_* file exactly (both sides trim trailing whitespace,
+  * dto_golden.rs:19-32). */
 class DtoGoldenSpec extends AnyFunSuite {
 
-  private val fixtureRoot = "/root/reference/crates/rulemorph/tests/fixtures"
-
-  private def check(fixture: String, lang: DtoGenerator.Language, expected: String): Unit = {
-    val rule = YamlParser.parse(
-      Files.readString(Paths.get(s"$fixtureRoot/$fixture/rules.yaml")))
-    val got = DtoGenerator.generate(rule, lang)
-    val want = Files.readString(Paths.get(s"$fixtureRoot/$fixture/$expected"))
-      .replaceAll("\\s+$", "")
-    assert(got == want, s"\n--- got ---\n$got\n--- want ---\n$want")
-  }
+  private def check(fixture: String, lang: DtoGenerator.Language, expected: String): Unit =
+    for (c <- Fixtures.cases(fixture)) {
+      val got = DtoGenerator.generate(YamlParser.parse(c.read("rules.yaml")), lang)
+      val want = c.read(expected).replaceAll("\\s+$", "")
+      assert(got == want, s"${c.label}\n--- got ---\n$got\n--- want ---\n$want")
+    }
 
   test("dto01 rust") { check("dto01_basic", DtoGenerator.Rust, "expected_rust.rs") }
   test("dto01 typescript") { check("dto01_basic", DtoGenerator.TypeScript, "expected_typescript.ts") }

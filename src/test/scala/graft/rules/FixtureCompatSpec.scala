@@ -1,25 +1,20 @@
 package graft.rules
 
-import java.nio.file.{Files, Paths}
-
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import Model._
 
-/** Compatibility oracle: run the REFERENCE's own golden fixtures
-  * (read directly from /root/reference at test time — never copied) through
-  * the engine and compare JSON output trees against each expected.json.
-  *
-  * Covered here: the fixtures whose inputs survive Spark's JSON/CSV ingest
-  * (Spark's JSON reader conflates absent-vs-null at the SOURCE, so fixtures
-  * that depend on per-record missing fields in JSON input are exercised via
-  * the in-memory tests in EngineSpec instead).
+/** Compatibility oracle: run the golden transform and runtime-error
+  * fixtures through the engine and compare JSON output trees against each
+  * expected output. Every case runs from the in-repo fixture set (see
+  * [[Fixtures]]), and also from the reference's own tree when one is
+  * configured. Inputs are read from disk exactly as the CLI reads them, so
+  * absent fields and explicit nulls in JSON input keep their distinction.
   */
 class FixtureCompatSpec extends AnyFunSuite {
 
-  private val fixtureRoot = "/root/reference/crates/rulemorph/tests/fixtures"
   private val mapper = new ObjectMapper()
 
   lazy val spark: SparkSession = graft.Sessions.local(4)
@@ -51,38 +46,29 @@ class FixtureCompatSpec extends AnyFunSuite {
     } else a == b
   }
 
-  private def loadFixture(name: String): (graft.rules.Model.RuleFile, DataFrame, JValue) = {
-    val dir = s"$fixtureRoot/$name"
-    val rule = YamlParser.parse(Files.readString(Paths.get(s"$dir/rules.yaml")))
+  private def loadFixture(c: Fixtures.Case): (graft.rules.Model.RuleFile, DataFrame, JValue) = {
+    val rule = YamlParser.parse(c.read("rules.yaml"))
     val context: JValue =
-      if (Files.exists(Paths.get(s"$dir/context.json")))
-        jsonNodeToJValue(mapper.readTree(Files.readString(Paths.get(s"$dir/context.json"))))
+      if (c.has("context.json")) jsonNodeToJValue(mapper.readTree(c.read("context.json")))
       else JNull
-    val input: DataFrame =
-      if (rule.input.format == "csv") graft.sources.Sources.csv(spark, s"$dir/input.csv", rule.input)
-      else graft.sources.Sources.json(spark, s"$dir/input.json", rule.input.recordsPath)
-    (rule, input, context)
+    (rule, c.input(spark, rule), context)
   }
 
-  private def runFixture(name: String): Unit = {
-    val dir = s"$fixtureRoot/$name"
-    val (rule, input, context) = loadFixture(name)
-    // JSON-sourced fixtures: absent-vs-null is conflated by the reader for
-    // typed fields, so null input refs are read as missing (variant-typed
-    // fields keep the true distinction). Branch sub-rule paths resolve
-    // against the reference crate root.
+  private def runFixture(c: Fixtures.Case): Unit = {
+    val name = c.label
+    val (rule, input, context) = loadFixture(c)
+    // JSON-sourced fixtures: a SQL null in a typed input field is an
+    // absent field (explicit nulls ingest as variant nulls)
     val nullAsMissing = rule.input.format != "csv"
-    val loader = Engine.fileLoader("/root/reference/crates/rulemorph")
-    val got = Engine.toJsonRecords(rule, input, context, nullAsMissing, loader)
+    val got = Engine.toJsonRecords(rule, input, context, nullAsMissing, c.loader)
       .collect().map(r => mapper.readTree(r.getString(0)))
     // golden output: expected.json (array / wrapped object) or
     // expected.ndjson (one record per line, the streaming CSV fixtures)
     val expected =
-      if (Files.exists(Paths.get(s"$dir/expected.json")))
-        mapper.readTree(Files.readString(Paths.get(s"$dir/expected.json")))
+      if (c.has("expected.json")) mapper.readTree(c.read("expected.json"))
       else {
         val arr = mapper.createArrayNode()
-        Files.readString(Paths.get(s"$dir/expected.ndjson")).split("\n")
+        c.read("expected.ndjson").split("\n")
           .filter(_.nonEmpty).foreach(l => arr.add(mapper.readTree(l)))
         arr
       }
@@ -104,15 +90,15 @@ class FixtureCompatSpec extends AnyFunSuite {
   /** Error fixtures: the transform must fail with the expected
     * TransformErrorKind and path — either a compile-time RmError (schema-
     * static errors) or a raised executor error recovered from the marker. */
-  private def runErrorFixture(name: String): Unit = {
-    val dir = s"$fixtureRoot/$name"
-    val expected = mapper.readTree(Files.readString(Paths.get(s"$dir/expected_error.json")))
+  private def runErrorFixture(c: Fixtures.Case): Unit = {
+    val name = c.label
+    val expected = mapper.readTree(c.read("expected_error.json"))
     val err =
       try {
-        val (rule, input, context) = loadFixture(name)
+        val (rule, input, context) = loadFixture(c)
         val nullAsMissing = rule.input.format != "csv"
-        val got = Engine.toJsonRecords(rule, input, context, nullAsMissing,
-          Engine.fileLoader("/root/reference/crates/rulemorph")).collect()
+        val got = Engine.toJsonRecords(rule, input, context, nullAsMissing, c.loader)
+          .collect()
         fail(s"$name: expected an error, got ${got.length} records: ${got.mkString(" ")}")
       } catch {
         case e: ExprCompiler.RmError => e
@@ -189,9 +175,9 @@ class FixtureCompatSpec extends AnyFunSuite {
     "r09_asserts_failed")
 
   fixtures.foreach { f =>
-    test(s"reference golden fixture: $f") { runFixture(f) }
+    test(s"reference golden fixture: $f") { Fixtures.cases(f).foreach(runFixture) }
   }
   errorFixtures.foreach { f =>
-    test(s"reference error fixture: $f") { runErrorFixture(f) }
+    test(s"reference error fixture: $f") { Fixtures.cases(f).foreach(runErrorFixture) }
   }
 }

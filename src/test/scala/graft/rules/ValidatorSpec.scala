@@ -1,16 +1,14 @@
 package graft.rules
 
-import java.nio.file.{Files, Paths}
-
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Validation fixtures v01–v11: run the reference's invalid rule files
+/** Validation fixtures v01–v11, tv26 and tv43: run invalid rule files
   * through the validator and compare (code, path) pairs against each
-  * expected_errors.json. */
+  * expected_errors.json; valid rule files must produce no errors. Every
+  * case runs from the in-repo fixture set (see [[Fixtures]]). */
 class ValidatorSpec extends AnyFunSuite {
 
-  private val fixtureRoot = "/root/reference/crates/rulemorph/tests/fixtures"
   private val mapper = new ObjectMapper()
 
   val fixtures = Seq(
@@ -34,26 +32,23 @@ class ValidatorSpec extends AnyFunSuite {
 
   fixtures.foreach { name =>
     test(s"validation fixture: $name") {
-      val dir = s"$fixtureRoot/$name"
-      val got = Validator
-        .validate(Files.readString(Paths.get(s"$dir/rules.yaml")))
-        .map(e => (e.code, e.path)).toSet
-      import scala.jdk.CollectionConverters._
-      val expected = mapper
-        .readTree(Files.readString(Paths.get(s"$dir/expected_errors.json")))
-        .elements.asScala
-        .map(n => (n.get("code").asText, n.get("path").asText)).toSet
-      assert(got == expected, s"$name:\n  got      $got\n  expected $expected")
+      for (c <- Fixtures.cases(name)) {
+        val got = Validator.validate(c.read("rules.yaml")).map(e => (e.code, e.path)).toSet
+        import scala.jdk.CollectionConverters._
+        val expected = mapper.readTree(c.read("expected_errors.json"))
+          .elements.asScala
+          .map(n => (n.get("code").asText, n.get("path").asText)).toSet
+        assert(got == expected, s"${c.label}:\n  got      $got\n  expected $expected")
+      }
     }
   }
 
   test("valid rule files produce no errors") {
     for (f <- Seq("t01_csv_basic", "t03_json_out_context", "t14_expr_chain",
         "tv25_lookup", "tv29_v2_out_sibling_ok", "tv39_finalize_filter_index",
-        "tv41_branch_return_out_update")) {
-      val errs = Validator.validate(
-        Files.readString(Paths.get(s"$fixtureRoot/$f/rules.yaml")))
-      assert(errs.isEmpty, s"$f should validate clean, got $errs")
+        "tv41_branch_return_out_update"); c <- Fixtures.cases(f)) {
+      val errs = Validator.validate(c.read("rules.yaml"))
+      assert(errs.isEmpty, s"${c.label} should validate clean, got $errs")
     }
   }
 }
