@@ -93,18 +93,12 @@ object Engine {
       collectWarnings || trace) && !input.isStreaming
     val ordered = input.withColumn("__order",
       if (needsOrder) monotonically_increasing_id() else lit(0L))
-    val baseResolver = resolveFromSchema(
-      input.schema.fields.map(f => f.name -> f.dataType).toSeq, col(_))
-    // JSON ingest (Sources.json) gives every field that holds an explicit
-    // null a variant type, so for such sources a SQL null input ref is an
-    // ABSENT field, i.e. MISSING, and an explicit null is a variant null
-    // (the reference's JSON ingest distinguishes them, transform.rs:902-941)
-    val inputResolver: Seq[String] => CE =
-      if (nullAsMissing) baseResolver.andThen(ce =>
-        // identity of the static-missing CE is preserved (ops test it)
-        if (ce eq CE.missing) ce else CE(ce.value, ce.missing || ce.value.isNull, ce.tpe))
-      else baseResolver
-    var env = Env(input = inputResolver, context = context)
+    // JSON ingest (Sources.json) tags every object field that holds an
+    // explicit null (ExprCompiler.Absentable), so for such sources a SQL
+    // null in a plain field is an ABSENT field, i.e. MISSING (the
+    // reference's JSON ingest distinguishes them, transform.rs:902-941)
+    var env = Env(input = resolveFromSchema(input.schema.fields.toSeq, nullAsMissing),
+      context = context)
 
     var df = ordered
     // record-level keep state: in warnings mode, record drops accumulate
@@ -386,8 +380,8 @@ object Engine {
       nullAsMissing: Boolean = false, ruleLoader: RuleLoader = noLoader): DataFrame = {
     val c = compilePlan(rule, input, context, nullAsMissing, ruleLoader)
     val outCols = c.out.map { case (name, ce) => ce.valueOrNull.as(name) }.toSeq
-    val projected = applyFinalize(rule, c.df.select(outCols :+ col("__order"): _*), context)
-      .drop("__order")
+    val projected = applyFinalize(rule, c.df.select(outCols :+ col("__order"): _*), c.out,
+      context).drop("__order")
     rule.finalizeSpec.filter(_.wrap.nonEmpty) match {
       case Some(fin) =>
         val (single, wenv) = wrapScope(projected, c.out, context)
@@ -552,9 +546,9 @@ object Engine {
   private def jsonSink(rule: RuleFile, c: Compiled, context: JValue): DataFrame = {
     val cols = c.out.map { case (name, ce) => ce.valueOrNull.as(name) }.toSeq ++
       c.out.map { case (name, ce) => ce.missing.as(s"__miss_$name") }.toSeq
-    val projected = applyFinalize(rule, c.df.select(cols :+ col("__order"): _*), context)
-    val frags = c.out.keys.toSeq.map { name =>
-      val enc = jsonEncode(column(name), projected.schema(name).dataType)
+    val projected = applyFinalize(rule, c.df.select(cols :+ col("__order"): _*), c.out, context)
+    val frags = c.out.toSeq.map { case (name, ce) =>
+      val enc = jsonEncode(column(name), ce.tpe)
       when(column(s"__miss_$name"), lit(null).cast(StringType))
         .otherwise(concat(lit("\"" + name + "\":"), enc))
     }
@@ -612,19 +606,16 @@ object Engine {
       cc.getField("message").as("message"))
 
   // finalize (transform.rs:603-714): filter → stable sort → offset → limit
-  private def applyFinalize(rule: RuleFile, dfIn: DataFrame, context: JValue): DataFrame = {
+  private def applyFinalize(rule: RuleFile, dfIn: DataFrame,
+      out: scala.collection.immutable.ListMap[String, CE], context: JValue): DataFrame = {
     var result = dfIn
     rule.finalizeSpec.foreach { fin =>
-      val outSchema = result.schema.fields
-        .filterNot(f => f.name == "__order" || f.name.startsWith("__miss_"))
-        .map(f => f.name -> f.dataType).toSeq
+      // the output fields with their compiled types (the frame's own schema
+      // does not keep the tags of Absentable fields inside values)
+      val outSchema = out.toSeq.map { case (n, ce) => StructField(n, ce.tpe) }
       // @item in finalize = the whole output record (docs/rules_spec: the
       // finalize filter runs over each output record)
-      val fields = result.schema.fields
-        .filterNot(f => f.name == "__order" || f.name.startsWith("__miss_"))
-      val itemCE = CE.present(
-        struct(fields.map(f => column(f.name)).toSeq: _*),
-        StructType(fields.toSeq))
+      val itemCE = resolveFromSchema(outSchema)(Nil)
       fin.filter.foreach { cond =>
         // @item.index = 0-based output-record index (tv39): a window over
         // the stable __order — materialized as a column since window
@@ -632,13 +623,13 @@ object Engine {
         val w = org.apache.spark.sql.expressions.Window.orderBy(col("__order"))
         val withIdx = result.withColumn("__idx",
           row_number().over(w).cast(org.apache.spark.sql.types.LongType) - 1L)
-        val finEnv = Env(input = resolveFromSchema(outSchema, col(_)), context = context,
+        val finEnv = Env(input = resolveFromSchema(outSchema), context = context,
           item = Some(itemCE), itemIndex = Some(col("__idx")))
         val c = compileCond(cond, finEnv)
         result = withIdx.filter(c.value && !c.missing).drop("__idx")
       }
       fin.sort.foreach { s =>
-        val key = resolveFromSchema(outSchema, col(_))(s.by)
+        val key = resolveFromSchema(outSchema)(s.by)
         // a sort key no mapping produces is a rule error, not an empty sort
         // (apply_finalize rejects unknown keys — transform.rs:636-650)
         if (key eq CE.missing)
@@ -724,33 +715,48 @@ object Engine {
 
   /** Merge a value into a nested struct target path (set_path semantics,
     * transform.rs:6075-6138 — objects only, conflicts are validation
-    * errors). */
+    * errors). A mapping whose value is missing sets nothing (SURVEY §2.2:
+    * a skipped mapping is absent, not null), so a child that can be
+    * missing is an [[ExprCompiler.Absentable]] field, and an object no
+    * mapping has set a child of is missing itself. */
   private def nest(existing: Option[CE], path: Seq[String], value: CE): CE = {
     if (path.isEmpty) value
     else {
-      val childExisting = existing.flatMap { e =>
-        e.tpe match {
-          case st: StructType if st.fieldNames.contains(path.head) =>
-            Some(CE(e.value.getField(path.head), e.missing, st(path.head).dataType))
-          case _ => None
-        }
-      }
-      val child = nest(childExisting, path.tail, value)
-      val siblings: Seq[(String, CE)] = existing match {
+      val (siblings, childExisting) = existing match {
         case Some(e) => e.tpe match {
           case st: StructType =>
-            st.fields.filterNot(_.name == path.head).map(f =>
-              f.name -> CE(e.value.getField(f.name), e.missing, f.dataType)).toSeq
-          case _ => Nil
+            val sibs = st.fields.toSeq.filterNot(_.name == path.head).map { f =>
+              val raw = e.value.getField(f.name)
+              // the fields of an object that may be missing are absent with it
+              if (isStaticFalse(e.missing)) raw -> f
+              else if (Absentable.valueType(f).isDefined) when(!e.missing, raw) -> f
+              else Absentable.wrap(CE(raw, e.missing, f.dataType)) ->
+                Absentable.field(f.name, f.dataType)
+            }
+            (sibs, st.fields.find(_.name == path.head).map(ExprCompiler.field(e, _)))
+          case _ => (Nil, None)
         }
-        case None => Nil
+        case None => (Nil, None)
       }
-      val all = siblings :+ (path.head -> child)
-      CE(struct(all.map { case (n, ce) => ce.valueOrNull.as(n) }: _*),
-        lit(false),
-        StructType(all.map { case (n, ce) => StructField(n, ce.tpe) }))
+      val child = nest(childExisting, path.tail, value)
+      val childMember =
+        if (isStaticFalse(child.missing)) child.value -> StructField(path.head, child.tpe)
+        else Absentable.wrap(child) -> Absentable.field(path.head, child.tpe)
+      val all = siblings :+ childMember
+      val missing = existing match {
+        case Some(e) if !isStaticFalse(e.missing) && !isStaticFalse(child.missing) =>
+          e.missing && child.missing
+        case Some(_) => lit(false)
+        case None => child.missing
+      }
+      CE(struct(all.map { case (v, f) => v.as(f.name, f.metadata) }: _*), missing,
+        StructType(all.map(_._2)))
     }
   }
+
+  /** A missing flag that is the literal `false`: the value is always there. */
+  private def isStaticFalse(c: Column): Boolean =
+    org.apache.spark.sql.rmbridge.Bridge.isLiteral(c, false)
 
   /** Single-record expression evaluation for the serving edge (endpoint
     * reply status/body, network url/body): the SAME compiled Column the
@@ -761,8 +767,7 @@ object Engine {
     * same schema-driven resolver applies. */
   private def singleRecordEnv(input: DataFrame, context: JValue,
       prefix: Seq[String]): ExprCompiler.Env = {
-    val base = resolveFromSchema(
-      input.schema.fields.map(f => f.name -> f.dataType).toSeq, col(_))
+    val base = resolveFromSchema(input.schema.fields.toSeq)
     ExprCompiler.Env(
       input = if (prefix.isEmpty) base else (path => base(prefix ++ path)),
       context = context)
@@ -787,24 +792,21 @@ object Engine {
     row.getBoolean(0)
   }
 
-  /** Resolver over an ordered (name, type) schema; deeper path segments
-    * descend through structs/arrays; unknown head ⇒ missing; the EMPTY path
-    * is the whole record as a struct (`@input` bare ref). */
-  def resolveFromSchema(fields: Seq[(String, DataType)], colFn: String => Column)
+  /** Resolver over a record's ordered top-level fields; deeper path
+    * segments descend through structs/arrays; unknown head ⇒ missing; the
+    * EMPTY path is the whole record as a struct (`@input` bare ref).
+    * `nullIsAbsent` as in [[ExprCompiler.field]]. */
+  def resolveFromSchema(fields: Seq[StructField], nullIsAbsent: Boolean = false)
       : Seq[String] => CE = { path =>
     path match {
       case Seq() =>
-        CE.present(
-          struct(fields.map { case (n, _) => colFn(n).as(n) }: _*),
-          StructType(fields.map { case (n, t) => StructField(n, t) }))
+        CE.present(struct(fields.map(f => column(f.name).as(f.name, f.metadata)): _*),
+          StructType(fields))
       case Seq(head, rest @ _*) =>
-        fields.find(_._1 == head) match {
-          case Some((_, t)) =>
-            // a column whose NAME contains a dot (t08 escaped keys) must be
-            // backtick-quoted or col() reads it as a nested field path
-            val ref = if (head.exists(c => c == '.' || c == '`'))
-              s"`${head.replace("`", "``")}`" else head
-            descend(CE.present(colFn(ref), t), rest)
+        fields.find(_.name == head) match {
+          case Some(f) =>
+            descend(ExprCompiler.fieldOf(column(head), lit(false), f, nullIsAbsent), rest,
+              nullIsAbsent)
           case None => CE.missing
         }
     }

@@ -135,22 +135,90 @@ object ExprCompiler {
     jvalueCE(cur)
   }
 
+  // ---- object fields that may be absent ----
+
+  /** A struct field cannot hold "absent" apart from JSON null: both would
+    * be SQL null. An object field that is absent in some records and may be
+    * null (or set) in others is therefore a VariantType field tagged, in its
+    * StructField metadata, with the type of its values: SQL null means the
+    * field is absent, a variant null is an explicit JSON null, and any other
+    * value converts to the tagged type. JSON ingest tags every object field
+    * that holds an explicit null (Sources.jsonNode), and a nested mapping
+    * target tags a child that can be missing (Engine.nest). Descent unwraps
+    * a tagged field to its typed value, so ops see the same types whether or
+    * not some record holds a null, and JSON encoding leaves an absent tagged
+    * field out of its object. */
+  object Absentable {
+    private val key = "graft.value_type"
+
+    def field(name: String, valueType: DataType): StructField =
+      StructField(name, VariantType, nullable = true, new MetadataBuilder()
+        .putString(key, (if (valueType == NullType) VariantType else valueType).json).build())
+
+    def valueType(f: StructField): Option[DataType] =
+      if (f.dataType == VariantType && f.metadata.contains(key))
+        Some(DataType.fromJson(f.metadata.getString(key)))
+      else None
+
+    /** Whether a value of type `t` holds a tagged field at any depth. */
+    def within(t: DataType): Boolean = t match {
+      case st: StructType => st.fields.exists(f => valueType(f).isDefined || within(f.dataType))
+      case ArrayType(et, _) => within(et)
+      case _ => false
+    }
+
+    /** The raw column of a tagged field that holds `ce`: a missing value
+      * leaves the field absent, and a SQL null lifts to JSON null. */
+    def wrap(ce: CE): Column = when(!ce.missing, toVariant(ce))
+  }
+
+  /** Step into field `f` of an object whose value is `parent`. A tagged
+    * field unwraps to its typed value and is missing when absent. A plain
+    * field is missing when its parent is; with `nullIsAbsent` (JSON sources,
+    * where every field that holds a null is tagged) its SQL null is an
+    * absent field too. */
+  def field(parent: CE, f: StructField, nullIsAbsent: Boolean = false): CE =
+    fieldOf(parent.value.getField(f.name), parent.missing, f, nullIsAbsent)
+
+  def fieldOf(raw: Column, parentMissing: Column, f: StructField, nullIsAbsent: Boolean): CE =
+    Absentable.valueType(f) match {
+      case Some(VariantType) => CE(raw, parentMissing || raw.isNull, VariantType)
+      case Some(t) => CE(try_variant_get(raw, "$", t.sql), parentMissing || raw.isNull, t)
+      case None => CE(raw, if (nullIsAbsent) parentMissing || raw.isNull else parentMissing,
+        f.dataType)
+    }
+
   // ---- JSON fragments and variants ----
 
   /** JSON-encode one typed value column to a fragment string. Non-variant
     * types ride the to_json(struct) wrapper with a fixed 1-char key so the
     * envelope offsets are constant (`{"v":X}` ⇒ X = substr(6, len-6));
     * variants serialize natively. ignoreNullFields=false keeps explicit
-    * nulls inside structs. */
+    * nulls inside structs. Objects that hold [[Absentable]] fields are
+    * assembled field by field, leaving the absent ones out. */
   def jsonFragment(c: Column, t: DataType): Column = t match {
     case VariantType => when(c.isNull, lit("null")).otherwise(to_json(c))
     case NullType => lit("null")
+    case st: StructType if Absentable.within(st) =>
+      val members = st.fields.toSeq.map { f =>
+        val v = c.getField(f.name)
+        val member = concat(lit(jsonKey.writeValueAsString(f.name) + ":"),
+          jsonFragment(v, f.dataType))
+        if (Absentable.valueType(f).isDefined) when(v.isNotNull, member) else member
+      }
+      when(c.isNull, lit("null"))
+        .otherwise(concat(lit("{"), concat_ws(",", members: _*), lit("}")))
+    case ArrayType(et, _) if Absentable.within(et) =>
+      when(c.isNull, lit("null")).otherwise(
+        concat(lit("["), array_join(transform(c, x => jsonFragment(x, et)), ","), lit("]")))
     case _ =>
       val opts = new java.util.HashMap[String, String]()
       opts.put("ignoreNullFields", "false")
       val wrapped = to_json(struct(c.as("v")), opts)
       wrapped.substr(lit(6), length(wrapped) - 6)
   }
+
+  private val jsonKey = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Lift any typed value into a Variant — the engine's representation for
     * heterogeneous JSON values (mixed arrays, values/entries of objects with
@@ -250,19 +318,21 @@ object ExprCompiler {
 
   /** Structural descent through struct fields / array indexes; absent
     * fields or out-of-range indexes are missing. */
-  def descend(base: CE, path: Seq[String]): CE =
+  def descend(base: CE, path: Seq[String], nullIsAbsent: Boolean = false): CE =
     path.foldLeft(base) { (cur, seg) =>
       cur.tpe match {
         case st: StructType =>
           st.fields.find(_.name == seg) match {
-            case Some(f) => CE(cur.value.getField(seg), cur.missing, f.dataType)
+            case Some(f) => field(cur, f, nullIsAbsent)
             case None => CE.missing
           }
         case ArrayType(et, _) if seg.forall(_.isDigit) =>
           val idx = seg.toInt
-          // get() is null-on-out-of-range (no ANSI error); out-of-range is
-          // missing, so fold the bound check into the flag
-          CE(get(cur.value, lit(idx)), cur.missing || (size(cur.value) <= idx), et)
+          // get() is null-on-out-of-range (no ANSI error); out-of-range and
+          // indexing into null are missing, so fold both into the flag (a
+          // null element is a present null)
+          CE(get(cur.value, lit(idx)),
+            cur.missing || cur.value.isNull || (size(cur.value) <= idx), et)
         case MapType(StringType, vt, _) =>
           // dynamic-keyed objects (group_by/key_by/from_entries results):
           // absent key = missing (getItem is null-safe, no ANSI error)
@@ -472,8 +542,6 @@ object ExprCompiler {
         RmError.raiseCol("ExprError", argPathStr(i), "expr arg must not be null").cast(t))
         .otherwise(result)
     }
-    def fieldCE(base: CE, f: StructField): CE =
-      CE(base.value.getField(f.name), base.missing, f.dataType)
 
     op match {
       // -- strings
@@ -735,19 +803,21 @@ object ExprCompiler {
         def step(acc: CE, x: Column): CE = compile(body, env.copy(
           acc = Some(acc), item = Some(CE.present(x, et)), pipeValue = Some(CE.present(x, et))))
         // reduce seeds with the first element; its accumulator keeps the
-        // element type unless the body yields another one (numbers widen
-        // to the f64 of the arithmetic ops)
+        // element type when the body yields that type, and a body that
+        // yields a number makes it the f64 of the arithmetic ops, the seed
+        // coerced as they coerce it (numeric strings of a split CSV cell)
         def reduceType: DataType = {
           val bodyT = step(CE.present(lit(null).cast(et), et), lit(null).cast(et)).tpe
           if (bodyT == et || bodyT == NullType) et
-          else if (Seq(et, bodyT).forall(_.isInstanceOf[NumericType])) DoubleType
+          else if (bodyT.isInstanceOf[NumericType]) DoubleType
           else throw CompileError(s"reduce over $et yields $bodyT")
         }
         val (init, rest, initT) =
           if (op == "fold") (arg(1).value, a0.value, arg(1).tpe)
           else {
             val t = reduceType
-            (element_at(a0.value, 1).cast(t),
+            val first = CE.present(element_at(a0.value, 1), et)
+            (if (t == et) first.value else rmToNumber(first).value,
               slice(a0.value, lit(2), greatest(size(a0.value) - 1, lit(0))), t)
           }
         val v = aggregate(rest, init, (acc, x) => step(CE.present(acc, initT), x).value.cast(initT))
@@ -983,7 +1053,7 @@ object ExprCompiler {
                 (array(sorted.map(f => a0.value.getField(f.name)): _*),
                   ts.headOption.getOrElse(StringType))
               else // mixed-typed fields → heterogeneous JSON array (variants)
-                (array(sorted.map(f => toVariant(fieldCE(CE.present(a0.value, st), f))): _*),
+                (array(sorted.map(f => toVariant(field(CE.present(a0.value, st), f))): _*),
                   VariantType)
             CE(nullGuard(0, arrCol, ArrayType(et)), a0.missing, ArrayType(et))
         }
@@ -1002,7 +1072,7 @@ object ExprCompiler {
             val vt = if (ts.size <= 1 && ts.headOption.forall(_ != VariantType))
               ts.headOption.getOrElse(StringType) else VariantType
             val entriesCol = array(sorted.map { f =>
-              val v = if (vt == VariantType) toVariant(fieldCE(CE.present(a0.value, st), f))
+              val v = if (vt == VariantType) toVariant(field(CE.present(a0.value, st), f))
                 else a0.value.getField(f.name)
               struct(lit(f.name).as("key"), v.as("value"))
             }: _*)
@@ -1191,7 +1261,7 @@ object ExprCompiler {
       case (None, _) => None
       case (Some(cur), PKey(k)) => cur.tpe match {
         case st: StructType =>
-          st.fields.find(_.name == k).map(f => CE(cur.value.getField(k), cur.missing, f.dataType))
+          st.fields.find(_.name == k).map(field(cur, _))
         case VariantType => Some(descend(cur, Seq(k)))
         case _ => None
       }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.rules.ExprCompiler.Absentable
 import graft.rules.Model.InputSpec
 
 /** Input sources with the reference's ingest semantics (SURVEY §2.1).
@@ -37,11 +38,13 @@ object Sources {
 
   /** JSON documents ingest with a Jackson-driven schema instead of Spark's
     * inference: field order is preserved, empty objects survive as
-    * zero-field structs, and object fields whose values mix types, or that
-    * hold an explicit null in any record, become VariantType — which
-    * preserves the reference's absent-vs-null distinction on those fields
-    * (absent → SQL null, explicit null → variant null), so a SQL null in a
-    * typed field always means the field is absent. Document-mode JSON is a
+    * zero-field structs, fields whose values mix types become VariantType,
+    * and object fields that hold an explicit null in any record become
+    * [[graft.rules.ExprCompiler.Absentable]] fields tagged with the type of
+    * their values — which preserves the reference's absent-vs-null
+    * distinction (absent → SQL null, explicit null → variant null) while
+    * rules still see the typed value, so a SQL null in a plain field always
+    * means the field is absent. Document-mode JSON is a
     * driver-side whole-file parse in the reference too; NDJSON stays the
     * scalable splittable path. */
   def json(spark: SparkSession, path: String, recordsPath: Seq[String]): DataFrame = {
@@ -78,7 +81,8 @@ object Sources {
         nn.foreach(_.fieldNames.asScala.foreach(names += _))
         StructType(names.toSeq.map { k =>
           val vs = nn.map(_.get(k))
-          StructField(k, if (vs.exists(v => v != null && v.isNull)) VariantType else infer(vs))
+          if (vs.exists(v => v != null && v.isNull)) Absentable.field(k, infer(vs))
+          else StructField(k, infer(vs))
         })
       } else if (nn.forall(_.isArray))
         ArrayType(infer(nn.flatMap(_.elements.asScala)))

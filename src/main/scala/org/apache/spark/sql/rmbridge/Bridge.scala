@@ -14,6 +14,12 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Whether `c` is the literal `v`, as `lit(v)` builds it. */
+  def isLiteral(c: Column, v: Any): Boolean = c.node match {
+    case org.apache.spark.sql.internal.Literal(x, _, _) => x == v
+    case _ => false
+  }
+
   /** Block until every event posted so far has reached its listeners, so
     * counts a listener keeps are complete when read. Listener events are
     * delivered asynchronously; without this, a reader that stops right

@@ -57,8 +57,9 @@ class FixtureCompatSpec extends AnyFunSuite {
   private def runFixture(c: Fixtures.Case): Unit = {
     val name = c.label
     val (rule, input, context) = loadFixture(c)
-    // JSON-sourced fixtures: a SQL null in a typed input field is an
-    // absent field (explicit nulls ingest as variant nulls)
+    // JSON-sourced fixtures: a SQL null in a plain input field is an
+    // absent field (fields that hold explicit nulls ingest tagged, see
+    // ExprCompiler.Absentable)
     val nullAsMissing = rule.input.format != "csv"
     val got = Engine.toJsonRecords(rule, input, context, nullAsMissing, c.loader)
       .collect().map(r => mapper.readTree(r.getString(0)))
