@@ -369,7 +369,12 @@ class EndpointEngine(
 
   /** One-record (or record-array) DataFrame through the standard JSON
     * source, so ingestion semantics match the batch engine exactly —
-    * straight from the in-memory node, no per-request temp file. */
+    * straight from the in-memory node, no per-request temp file. A record
+    * set of at most `Sources.LocalMaxRecords` (256) records is a driver-local
+    * frame: the rule folds into it while Catalyst optimizes, so a step,
+    * `evalJson` or `evalCond` costs planning and starts no Spark job, where
+    * a job's fixed cost would dominate a request's few records. A larger
+    * array (a finalized record set) is scanned by tasks, as a CLI input is. */
   private def recordDf(value: JsonNode): DataFrame =
     graft.sources.Sources.jsonNode(spark, value, Nil)
 

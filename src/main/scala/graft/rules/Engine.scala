@@ -467,28 +467,45 @@ object Engine {
   final case class Traced(output: Seq[String], values: Map[String, String],
       subRules: Map[String, RuleFile])
 
-  /** The serving edge's traced run: ONE job. Record drops stay keep-state,
-    * so the recorded columns ride the job as an observed metric taken below
-    * the output's keep filter — a dropped record is traced too, and the
-    * output plan above it is the JSON sink of [[toJsonRecordsWithWarnings]]. */
+  /** The serving edge's traced run: the jobs of the untraced run, and none
+    * on a driver-local input. Record drops stay keep-state, so the first
+    * input record is traced even when the output drops it. Where the values
+    * come from depends on the input ([[graft.sources.Sources.isLocal]]):
+    *  - local, no finalize: the record JSON, its keep flag and the first
+    *    record's values are columns of one plan, which folds into a
+    *    `LocalRelation`; the keep filter runs on the collected rows.
+    *  - local with finalize: the finalized output is the untraced plan, and
+    *    the first record's values are a second plan over the same compiled
+    *    records; both fold where the untraced plan does (finalize reorders,
+    *    drops and wraps records, so it cannot carry the values).
+    *  - distributed: the values ride the output's job as an observed metric
+    *    taken below the keep filter (an observation blocks the fold, so only
+    *    this side uses one). */
   def toJsonRecordsTraced(rule: RuleFile, input: DataFrame,
       context: JValue = JNull, nullAsMissing: Boolean = false,
       ruleLoader: RuleLoader = noLoader): Traced = {
     val c = compilePlan(rule, input, context, nullAsMissing, ruleLoader, trace = true)
     val (keys, cols) = c.rec.recorded.unzip
-    val observed =
-      if (cols.isEmpty) c.df
-      else c.df.observe("trace", min_by(struct(cols.zipWithIndex.map { case (v, i) =>
-        v.as(s"v$i") }: _*), col("__order")).as("first"))
-    val out = jsonSink(rule, c.copy(df = observed.filter(c.keep)), context)
-    val output = out.collect().toSeq.map(_.getString(0))
-    val first = out.queryExecution.observedMetrics.get("trace")
-      .map(_.getStruct(0)).orNull
-    val values =
-      if (first == null) Map.empty[String, String]
-      else keys.zipWithIndex.collect {
-        case (k, i) if !first.isNullAt(i) => k -> first.getString(i)
-      }.toMap
+    val recorded = struct(cols.zipWithIndex.map { case (v, i) => v.as(s"v$i") }: _*)
+    def jsonOf(out: DataFrame): Seq[String] = out.collect().toSeq.map(_.getString(0))
+    val (output, first) =
+      if (!graft.sources.Sources.isLocal(input)) {
+        val observed = c.df.observe("trace", min_by(recorded, col("__order")).as("first"))
+        val out = jsonSink(rule, c.copy(df = observed.filter(c.keep)), context)
+        (jsonOf(out), out.queryExecution.observedMetrics.get("trace").map(_.getStruct(0)))
+      } else if (rule.finalizeSpec.isEmpty) {
+        // a local frame's first record has __order 0
+        val withRec = c.df.select(col("*"), c.keep.as("__kept"),
+          when(col("__order") === 0L, recorded).as("__rec"))
+        val rows = jsonSink(rule, c.copy(df = withRec), context, carry = Seq("__kept", "__rec"))
+          .collect().toSeq
+        (rows.collect { case r if !r.isNullAt(1) && r.getBoolean(1) => r.getString(0) },
+          rows.headOption.map(_.getStruct(2)))
+      } else (jsonOf(jsonSink(rule, c.copy(df = c.df.filter(c.keep)), context)),
+        c.df.limit(1).select(recorded).collect().headOption.map(_.getStruct(0)))
+    val values = first.filter(_ != null).map(f => keys.zipWithIndex.collect {
+      case (k, i) if !f.isNullAt(i) => k -> f.getString(i)
+    }.toMap).getOrElse(Map.empty[String, String])
     Traced(output, values, c.rec.compiledSubRules)
   }
 
@@ -543,9 +560,14 @@ object Engine {
       .select("json", "warnings")
   }
 
-  private def jsonSink(rule: RuleFile, c: Compiled, context: JValue): DataFrame = {
+  /** `carry` names columns of `c.df` returned beside `json`, for rules
+    * without finalize (finalize may reorder, drop or fold the rows). */
+  private def jsonSink(rule: RuleFile, c: Compiled, context: JValue,
+      carry: Seq[String] = Nil): DataFrame = {
+    require(carry.isEmpty || rule.finalizeSpec.isEmpty, "carried columns need a row-wise rule")
     val cols = c.out.map { case (name, ce) => ce.valueOrNull.as(name) }.toSeq ++
-      c.out.map { case (name, ce) => ce.missing.as(s"__miss_$name") }.toSeq
+      c.out.map { case (name, ce) => ce.missing.as(s"__miss_$name") }.toSeq ++
+      carry.map(col)
     val projected = applyFinalize(rule, c.df.select(cols :+ col("__order"): _*), c.out, context)
     val frags = c.out.toSeq.map { case (name, ce) =>
       val enc = jsonEncode(column(name), ce.tpe)
@@ -580,7 +602,7 @@ object Engine {
         }
         single.select(
           concat(lit("{"), concat_ws(",", objFrags: _*), lit("}")).as("json"))
-      case None => projected.select(recordJson.as("json"))
+      case None => projected.select(recordJson.as("json") +: carry.map(col): _*)
     }
   }
 

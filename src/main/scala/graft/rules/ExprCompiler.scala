@@ -188,6 +188,18 @@ object ExprCompiler {
         f.dataType)
     }
 
+  /** `c` where field `f` of object `obj` is present, else SQL null; only a
+    * tagged field can be absent. */
+  private def ifPresent(obj: Column, f: StructField, c: Column): Column =
+    if (Absentable.valueType(f).isDefined) when(obj.getField(f.name).isNotNull, c) else c
+
+  /** The names of the fields of object `obj` (of type `st`) that are
+    * present, in `st`'s order: an absent tagged field is not a key. */
+  private def presentKeys(obj: Column, st: StructType): Column = {
+    val names = array(st.fields.toSeq.map(f => ifPresent(obj, f, lit(f.name))): _*)
+    if (st.fields.exists(Absentable.valueType(_).isDefined)) array_compact(names) else names
+  }
+
   // ---- JSON fragments and variants ----
 
   /** JSON-encode one typed value column to a fragment string. Non-variant
@@ -665,7 +677,7 @@ object ExprCompiler {
         val v = a0.tpe match {
           case StringType => length(a0.value)
           case ArrayType(_, _) => size(a0.value)
-          case st: StructType => lit(st.size)
+          case st: StructType => size(presentKeys(a0.value, st))
           case t => throw CompileError(s"len of $t")
         }
         CE(v.cast(LongType), a0.missing, LongType)
@@ -1035,8 +1047,8 @@ object ExprCompiler {
             CE(sort_array(map_keys(a0.value)), a0.missing, ArrayType(StringType))
           case _ =>
             val st = structArg(0)
-            CE(nullGuard(0, array(st.fieldNames.sorted.map(lit).toSeq: _*), ArrayType(StringType)),
-              a0.missing, ArrayType(StringType))
+            CE(nullGuard(0, presentKeys(a0.value, StructType(st.fields.sortBy(_.name))),
+              ArrayType(StringType)), a0.missing, ArrayType(StringType))
         }
       case "values" =>
         if (a0 eq CE.missing) CE.missing
@@ -1053,7 +1065,8 @@ object ExprCompiler {
                 (array(sorted.map(f => a0.value.getField(f.name)): _*),
                   ts.headOption.getOrElse(StringType))
               else // mixed-typed fields → heterogeneous JSON array (variants)
-                (array(sorted.map(f => toVariant(field(CE.present(a0.value, st), f))): _*),
+                (array_compact(array(sorted.map(f =>
+                  ifPresent(a0.value, f, toVariant(field(CE.present(a0.value, st), f)))): _*)),
                   VariantType)
             CE(nullGuard(0, arrCol, ArrayType(et)), a0.missing, ArrayType(et))
         }
@@ -1071,11 +1084,11 @@ object ExprCompiler {
             val ts = st.fields.map(_.dataType).distinct.toSeq
             val vt = if (ts.size <= 1 && ts.headOption.forall(_ != VariantType))
               ts.headOption.getOrElse(StringType) else VariantType
-            val entriesCol = array(sorted.map { f =>
+            val entriesCol = array_compact(array(sorted.map { f =>
               val v = if (vt == VariantType) toVariant(field(CE.present(a0.value, st), f))
                 else a0.value.getField(f.name)
-              struct(lit(f.name).as("key"), v.as("value"))
-            }: _*)
+              ifPresent(a0.value, f, struct(lit(f.name).as("key"), v.as("value")))
+            }: _*))
             val et = StructType(Seq(StructField("key", StringType), StructField("value", vt)))
             CE(nullGuard(0, entriesCol, ArrayType(et)), a0.missing, ArrayType(et))
         }

@@ -81,6 +81,35 @@ class PlanQualitySpec extends AnyFunSuite {
       s"warnings-mode plan lost the pushed record_when filter:\n$plan")
   }
 
+  test("a served single-record rule folds into a bare LocalRelation: no job to run") {
+    val rule = YamlParser.parse(
+      """version: 2
+        |record_when: { gt: ["@input.qty", 0] }
+        |mappings:
+        |  - target: label
+        |    expr:
+        |      - "@input.qty"
+        |      - if:
+        |          cond: { gte: ["$", 10] }
+        |          then: "bulk"
+        |          else: "retail"
+        |steps:
+        |  - branch:
+        |      when: { eq: ["@out.label", "bulk"] }
+        |      then: ./big.yaml
+        |      else: ./small.yaml
+        |""".stripMargin)
+    val loader: Engine.RuleLoader = p => YamlParser.parse(
+      s"version: 2\nmappings:\n  - target: size\n    expr: [lit:${p.stripPrefix("./").stripSuffix(".yaml")}]\n")
+    val input = graft.sources.Sources.jsonNode(spark,
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree("""{"qty": 12}"""), Nil)
+    val out = Engine.toJsonRecords(rule, input, nullAsMissing = true, ruleLoader = loader)
+    val optimized = out.queryExecution.optimizedPlan
+    assert(optimized.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      s"expected a bare LocalRelation:\n$optimized")
+    assert(out.collect().map(_.getString(0)).toSeq == Seq("""{"label":"bulk","size":"big"}"""))
+  }
+
   test("sampling and token stats are narrow: no Exchange, pruned scans") {
     val docs = graft.Tables.documents(spark, dir)
     val splitPlan = planOf(graft.operators.Sampling.trainTestSplit(

@@ -175,10 +175,16 @@ class FixtureCompatSpec extends AnyFunSuite {
     "r08_json_ops_from_entries_single_pair",
     "r09_asserts_failed")
 
+  /** In-repo cases the reference has no fixture of. */
+  val inRepoFixtures = Seq("g01_json_object_absent_keys")
+
   fixtures.foreach { f =>
     test(s"reference golden fixture: $f") { Fixtures.cases(f).foreach(runFixture) }
   }
   errorFixtures.foreach { f =>
     test(s"reference error fixture: $f") { Fixtures.cases(f).foreach(runErrorFixture) }
+  }
+  inRepoFixtures.foreach { f =>
+    test(s"in-repo golden fixture: $f") { runFixture(Fixtures.inRepo(f)) }
   }
 }

@@ -38,6 +38,10 @@ object Fixtures {
     .map(Paths.get(_).resolve("crates/rulemorph"))
     .filter(Files.isDirectory(_))
 
+  /** The in-repo case of `name` alone, for a case the reference has no
+    * fixture of (the `g` family). */
+  def inRepo(name: String): Case = cases(name).head
+
   /** The in-repo case of `name`, then the reference case if configured. */
   def cases(name: String): Seq[Case] = {
     val dir = inRepoRoot.resolve(name)
