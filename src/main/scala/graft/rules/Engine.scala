@@ -354,15 +354,12 @@ object Engine {
         case Some(old) if old.tpe.isInstanceOf[StructType] && b.tpe.isInstanceOf[StructType] =>
           // differently-shaped objects DEEP-merge (tv42: branch adds
           // user.name next to the existing user.id); rows where the branch
-          // produced nothing keep the old object padded to the merged shape
+          // produced nothing keep the old object in the merged shape: its
+          // merge with a missing one
           val m = ExprCompiler.mergeStructs(old, b, deep = true)
-          val mt = m.tpe.asInstanceOf[StructType]
-          val oldNames = old.tpe.asInstanceOf[StructType].fieldNames.toSet
-          val oldPadded = struct(mt.fields.toSeq.map { f =>
-            (if (oldNames.contains(f.name)) old.value.getField(f.name)
-             else lit(null).cast(f.dataType)).as(f.name)
-          }: _*)
-          CE(when(!b.missing, m.value).otherwise(oldPadded),
+          val kept = ExprCompiler.mergeStructs(old,
+            CE(lit(null).cast(b.tpe), lit(true), b.tpe), deep = true)
+          CE(when(!b.missing, m.value).otherwise(kept.value),
             b.missing && old.missing, m.tpe)
         case _ => b // new field, or scalar type change ⇒ overwrite
       }
@@ -469,15 +466,11 @@ object Engine {
 
   /** The serving edge's traced run: the jobs of the untraced run, and none
     * on a driver-local input. Record drops stay keep-state, so the first
-    * input record is traced even when the output drops it. Where the values
+    * input record is traced even when the output drops it. Where its values
     * come from depends on the input ([[graft.sources.Sources.isLocal]]):
-    *  - local, no finalize: the record JSON, its keep flag and the first
-    *    record's values are columns of one plan, which folds into a
-    *    `LocalRelation`; the keep filter runs on the collected rows.
-    *  - local with finalize: the finalized output is the untraced plan, and
-    *    the first record's values are a second plan over the same compiled
-    *    records; both fold where the untraced plan does (finalize reorders,
-    *    drops and wraps records, so it cannot carry the values).
+    *  - local: a second plan over the same compiled records selects the
+    *    first one (`__order` 0); it folds into a `LocalRelation` wherever
+    *    the output's plan does, so neither starts a job.
     *  - distributed: the values ride the output's job as an observed metric
     *    taken below the keep filter (an observation blocks the fold, so only
     *    this side uses one). */
@@ -487,26 +480,20 @@ object Engine {
     val c = compilePlan(rule, input, context, nullAsMissing, ruleLoader, trace = true)
     val (keys, cols) = c.rec.recorded.unzip
     val recorded = struct(cols.zipWithIndex.map { case (v, i) => v.as(s"v$i") }: _*)
-    def jsonOf(out: DataFrame): Seq[String] = out.collect().toSeq.map(_.getString(0))
-    val (output, first) =
-      if (!graft.sources.Sources.isLocal(input)) {
-        val observed = c.df.observe("trace", min_by(recorded, col("__order")).as("first"))
-        val out = jsonSink(rule, c.copy(df = observed.filter(c.keep)), context)
-        (jsonOf(out), out.queryExecution.observedMetrics.get("trace").map(_.getStruct(0)))
-      } else if (rule.finalizeSpec.isEmpty) {
-        // a local frame's first record has __order 0
-        val withRec = c.df.select(col("*"), c.keep.as("__kept"),
-          when(col("__order") === 0L, recorded).as("__rec"))
-        val rows = jsonSink(rule, c.copy(df = withRec), context, carry = Seq("__kept", "__rec"))
-          .collect().toSeq
-        (rows.collect { case r if !r.isNullAt(1) && r.getBoolean(1) => r.getString(0) },
-          rows.headOption.map(_.getStruct(2)))
-      } else (jsonOf(jsonSink(rule, c.copy(df = c.df.filter(c.keep)), context)),
-        c.df.limit(1).select(recorded).collect().headOption.map(_.getStruct(0)))
+    def sink(df: DataFrame): DataFrame = jsonSink(rule, c.copy(df = df.filter(c.keep)), context)
+    val (out, first) =
+      if (graft.sources.Sources.isLocal(input))
+        (sink(c.df).collect(), c.df.filter(col("__order") === 0L).select(recorded)
+          .collect().headOption.map(_.getStruct(0)))
+      else {
+        val observed = sink(c.df.observe("trace", min_by(recorded, col("__order")).as("first")))
+        (observed.collect(),
+          observed.queryExecution.observedMetrics.get("trace").map(_.getStruct(0)))
+      }
     val values = first.filter(_ != null).map(f => keys.zipWithIndex.collect {
       case (k, i) if !f.isNullAt(i) => k -> f.getString(i)
     }.toMap).getOrElse(Map.empty[String, String])
-    Traced(output, values, c.rec.compiledSubRules)
+    Traced(out.toSeq.map(_.getString(0)), values, c.rec.compiledSubRules)
   }
 
   /** Streaming-compatible warnings shape: ONE DataFrame carrying the
@@ -560,14 +547,9 @@ object Engine {
       .select("json", "warnings")
   }
 
-  /** `carry` names columns of `c.df` returned beside `json`, for rules
-    * without finalize (finalize may reorder, drop or fold the rows). */
-  private def jsonSink(rule: RuleFile, c: Compiled, context: JValue,
-      carry: Seq[String] = Nil): DataFrame = {
-    require(carry.isEmpty || rule.finalizeSpec.isEmpty, "carried columns need a row-wise rule")
+  private def jsonSink(rule: RuleFile, c: Compiled, context: JValue): DataFrame = {
     val cols = c.out.map { case (name, ce) => ce.valueOrNull.as(name) }.toSeq ++
-      c.out.map { case (name, ce) => ce.missing.as(s"__miss_$name") }.toSeq ++
-      carry.map(col)
+      c.out.map { case (name, ce) => ce.missing.as(s"__miss_$name") }.toSeq
     val projected = applyFinalize(rule, c.df.select(cols :+ col("__order"): _*), c.out, context)
     val frags = c.out.toSeq.map { case (name, ce) =>
       val enc = jsonEncode(column(name), ce.tpe)
@@ -602,7 +584,7 @@ object Engine {
         }
         single.select(
           concat(lit("{"), concat_ws(",", objFrags: _*), lit("}")).as("json"))
-      case None => projected.select(recordJson.as("json") +: carry.map(col): _*)
+      case None => projected.select(recordJson.as("json"))
     }
   }
 

@@ -188,6 +188,16 @@ object ExprCompiler {
         f.dataType)
     }
 
+  /** The field `name` of a rebuilt object and its raw column, holding `ce`:
+    * tagged when it may be absent, so a missing `ce` leaves it out. */
+  private def member(name: String, ce: CE, absentable: Boolean): (StructField, Column) =
+    if (absentable) Absentable.field(name, ce.tpe) -> Absentable.wrap(ce)
+    else StructField(name, ce.tpe) -> ce.value
+
+  /** Object `(value, type)` of rebuilt members. */
+  private def objectOf(members: Seq[(StructField, Column)]): (Column, StructType) =
+    struct(members.map { case (f, v) => v.as(f.name) }: _*) -> StructType(members.map(_._1))
+
   /** `c` where field `f` of object `obj` is present, else SQL null; only a
     * tagged field can be absent. */
   private def ifPresent(obj: Column, f: StructField, c: Column): Column =
@@ -1140,8 +1150,9 @@ object ExprCompiler {
         if (a0 eq CE.missing) CE.missing
         else a0.tpe match {
           case st: StructType =>
-            def walk(curV: Column, t: StructType, prefix: Vector[PathParser.PToken])
-                : Seq[(String, CE)] =
+            // a leaf under a tagged field stays tagged: absent with it
+            def walk(cur: CE, t: StructType, prefix: Vector[PathParser.PToken],
+                absentable: Boolean): Seq[(StructField, Column)] =
               t.fields.toSeq.flatMap { f =>
                 if (f.name.isEmpty)
                   throw RmError("ExprError", argPathStr(0),
@@ -1150,17 +1161,14 @@ object ExprCompiler {
                   throw RmError("ExprError", argPathStr(0),
                     "object_flatten does not support keys with '[' or ']'")
                 val toks = prefix :+ PathParser.PKey(f.name)
-                f.dataType match {
-                  case cst: StructType if cst.fields.nonEmpty =>
-                    walk(curV.getField(f.name), cst, toks)
-                  case other =>
-                    Seq(PathParser.formatTokens(toks) ->
-                      CE(curV.getField(f.name), lit(false), other))
+                val v = field(cur, f)
+                val abs = absentable || Absentable.valueType(f).isDefined
+                v.tpe match {
+                  case cst: StructType if cst.fields.nonEmpty => walk(v, cst, toks, abs)
+                  case _ => Seq(member(PathParser.formatTokens(toks), v, abs))
                 }
               }
-            val flat = walk(a0.value, st, Vector())
-            val resT = StructType(flat.map { case (n, ce) => StructField(n, ce.tpe) })
-            val resV = struct(flat.map { case (n, ce) => ce.value.as(n) }: _*)
+            val (resV, resT) = objectOf(walk(a0, st, Vector(), absentable = false))
             CE(nullGuard(0, resV, resT), a0.missing, resT)
           case NullType =>
             throw RmError("ExprError", argPathStr(0), "expr arg must not be null")
@@ -1345,13 +1353,14 @@ object ExprCompiler {
         if (dropWhole(f.name)) None
         else subPaths.get(f.name) match {
           case Some(sub) =>
-            Some(f.name -> removePaths(CE(base.value.getField(f.name), base.missing, f.dataType), sub))
+            val v = removePaths(field(base, f), sub)
+            Some(member(f.name, v.copy(value = v.valueOrNull), Absentable.valueType(f).isDefined))
           case None =>
-            Some(f.name -> CE(base.value.getField(f.name), base.missing, f.dataType))
+            Some(f -> CE(base.value.getField(f.name), base.missing, f.dataType).valueOrNull)
         }
       }
-      CE(struct(fs.map { case (k, ce) => ce.valueOrNull.as(k) }: _*), base.missing,
-        StructType(fs.map { case (k, ce) => StructField(k, ce.tpe) }))
+      val (v, t) = objectOf(fs)
+      CE(v, base.missing, t)
     case ArrayType(et, _) =>
       val idxPaths = paths.collect { case PIdx(i) +: rest if rest.nonEmpty => (i, rest) }
       if (idxPaths.isEmpty) base
@@ -1502,29 +1511,34 @@ object ExprCompiler {
   }
 
   /** Shallow/recursive struct merge, right wins (merge_object,
-    * transform.rs:5059-5076). */
+    * transform.rs:5059-5076). A key the right object lacks in a record —
+    * a missing right object, or an absent tagged field — keeps the left
+    * value there; fields taken from one side keep their tags, and a merged
+    * field is tagged where both sides' are. */
   private[rules] def mergeStructs(l: CE, r: CE, deep: Boolean): CE = (l.tpe, r.tpe) match {
     case (ls: StructType, rs: StructType) =>
       val names = (ls.fieldNames ++ rs.fieldNames.filterNot(ls.fieldNames.contains)).toSeq
-      val fields = names.map { n =>
-        val inL = ls.fieldNames.contains(n)
-        val inR = rs.fieldNames.contains(n)
-        val ce =
-          if (inL && inR && deep) {
-            (ls(n).dataType, rs(n).dataType) match {
-              case (_: StructType, _: StructType) =>
-                mergeStructs(
-                  CE(l.value.getField(n), l.missing, ls(n).dataType),
-                  CE(r.value.getField(n), r.missing, rs(n).dataType), deep = true)
-              case _ => CE(r.value.getField(n), r.missing, rs(n).dataType)
+      val members = names.map { n =>
+        (ls.find(_.name == n), rs.find(_.name == n)) match {
+          case (Some(lf), Some(rf)) =>
+            val (lv, rv) = (field(l, lf), field(r, rf))
+            val rTagged = Absentable.valueType(rf).isDefined
+            val ce = (lv.tpe, rv.tpe) match {
+              case (_: StructType, _: StructType) if deep => mergeStructs(lv, rv, deep = true)
+              case (lt, rt) if lt == rt =>
+                CE(when(!rv.missing, rv.value).otherwise(lv.value), lv.missing && rv.missing, rt)
+              case _ if rTagged =>
+                CE(when(!rv.missing, toVariant(rv)).otherwise(toVariant(lv)),
+                  lv.missing && rv.missing, VariantType)
+              case _ => rv
             }
-          } else if (inR) CE(r.value.getField(n), r.missing, rs(n).dataType)
-          else CE(l.value.getField(n), l.missing, ls(n).dataType)
-        n -> ce
+            member(n, ce, rTagged && Absentable.valueType(lf).isDefined)
+          case (_, Some(rf)) => rf -> r.value.getField(n)
+          case (lf, None) => lf.get -> l.value.getField(n)
+        }
       }
-      CE(struct(fields.map { case (n, ce) => ce.value.as(n) }: _*),
-        l.missing && r.missing,
-        StructType(fields.map { case (n, ce) => StructField(n, ce.tpe) }))
+      val (v, t) = objectOf(members)
+      CE(v, l.missing && r.missing, t)
     case (lt, rt) => throw CompileError(s"merge of non-objects: $lt, $rt")
   }
 }

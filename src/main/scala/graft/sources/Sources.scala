@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -29,14 +29,18 @@ object Sources {
 
   /** The most records [[jsonNode]] ingests as a driver-local frame. At or
     * below it a rule runs as a `LocalRelation` that Catalyst folds on the
-    * driver, starting no Spark job; above it the fold's interpreted,
-    * one-thread evaluation costs more than a job's fixed cost saves, and
-    * tasks run the rule's generated code in parallel instead. Measured at
-    * `local[4]` with the client compiler, per transform from document to
-    * collected output: at 256 records the local side took about a third
-    * less CPU and wall time than the scan for a plain and for a
-    * string/date-heavy rule; at 1,024 the heavier rule was already slower
-    * on the wall clock, and at 2,048 both were. */
+    * driver, starting no Spark job; above it tasks run the rule's generated
+    * code in parallel, while the fold evaluates it interpreted on one
+    * thread, so the local side's lead shrinks as records grow. Measured by
+    * `graft.sources.LocalCutover` (test sources) at `local[4]` with the
+    * client compiler, per transform from document to collected output, for
+    * a plain and a string/date-heavy rule: 256 is the largest measured size
+    * at which the local side took at least a third less wall time and CPU
+    * than the scan for both rules. At 512 it still led by 18–27% in wall
+    * time; at 1,024 the heavier rule was slower on the wall clock, and at
+    * 2,048 both were. The margin leaves room for rules costlier per record
+    * than the measured ones, whose interpreted evaluation grows with the
+    * record count while a job's fixed cost does not. */
   val LocalMaxRecords: Int = 256
 
   def csv(spark: SparkSession, path: String, spec: InputSpec): DataFrame = {
@@ -132,17 +136,21 @@ object Sources {
     }
     import spark.implicits._
     val lines = spark.createDataset(records.map(mapper.writeValueAsString))
-    if (records.size > LocalMaxRecords) spark.read.schema(schema).json(lines)
-    else {
-      // the parser expression itself, since `functions.from_json` drops the
-      // tags of nested fields from the schema it is given; two projections,
-      // so each line is parsed once, and the top-level tags ride the aliases
-      val parsed = lines.select(Bridge.column(
-        JsonToStructs(schema, Map.empty, Bridge.expression(col("value")))).as("r"))
-      parsed.select(schema.fields.toSeq.map(f =>
-        col("r").getField(f.name).as(f.name, f.metadata)): _*)
-    }
+    if (records.size > LocalMaxRecords) scanned(lines, schema) else local(lines, schema)
   }
+
+  /** [[jsonNode]]'s distributed side: tasks scan the record lines. */
+  private[sources] def scanned(lines: Dataset[String], schema: StructType): DataFrame =
+    lines.sparkSession.read.schema(schema).json(lines)
+
+  /** [[jsonNode]]'s driver-local side: the record lines parsed by the
+    * parser expression itself, since `functions.from_json` drops the tags
+    * of nested fields from the schema it is given; two projections, so each
+    * line is parsed once, and the top-level tags ride the aliases. */
+  private[sources] def local(lines: Dataset[String], schema: StructType): DataFrame =
+    lines.select(Bridge.column(
+      JsonToStructs(schema, Map.empty, Bridge.expression(col("value")))).as("r"))
+      .select(schema.fields.toSeq.map(f => col("r").getField(f.name).as(f.name, f.metadata)): _*)
 
   /** Whether `df` reads only driver-local rows: [[jsonNode]]'s choice for a
     * record set at or below [[LocalMaxRecords]], read back from the plan. */

@@ -176,7 +176,7 @@ class FixtureCompatSpec extends AnyFunSuite {
     "r09_asserts_failed")
 
   /** In-repo cases the reference has no fixture of. */
-  val inRepoFixtures = Seq("g01_json_object_absent_keys")
+  val inRepoFixtures = Seq("g01_json_object_absent_keys", "g02_json_object_ops_absent_keys")
 
   fixtures.foreach { f =>
     test(s"reference golden fixture: $f") { Fixtures.cases(f).foreach(runFixture) }

@@ -92,6 +92,42 @@ class SourcesParitySpec extends AnyFunSuite {
       """"user_keys":["a"],"big":2.0}""", lo(1))
   }
 
+  test("the traced run gives the same output and values on the local and distributed sides") {
+    val staged =
+      """version: 2
+        |steps:
+        |  - mappings:
+        |      - target: id
+        |        source: id
+        |      - target: user_len
+        |        expr: ["@input.user", len]
+        |      - target: dot
+        |        source: "[\"a.b\"]"
+        |  - record_when:
+        |      gt: ["@out.id", 1]
+        |""".stripMargin
+    val plain = YamlParser.parse(staged)
+    val sorted = YamlParser.parse(staged + "finalize:\n  sort:\n    by: id\n    order: desc\n")
+    val many = replicated(records)
+    val copies = many.size / records.size
+    val local = Sources.jsonNode(spark, doc(records), Nil)
+    val distributed = Sources.jsonNode(spark, doc(many), Nil)
+    def traced(rule: graft.rules.Model.RuleFile, df: DataFrame) =
+      Engine.toJsonRecordsTraced(rule, df, graft.rules.Model.JNull, nullAsMissing = true)
+    val (lp, ls) = (traced(plain, local), traced(sorted, local))
+    val (dp, ds) = (traced(plain, distributed), traced(sorted, distributed))
+    // the first record is dropped from the output and traced all the same
+    assert(lp.output == Seq("""{"id":2,"user_len":1,"dot":"dot2"}""", """{"id":3,"user_len":2,"dot":null}"""),
+      lp.output)
+    assert(lp.output ==
+      Engine.toJsonRecords(plain, local, nullAsMissing = true).collect().toSeq.map(_.getString(0)))
+    assert(ls.output == lp.output.reverse)
+    assert(dp.output == Seq.fill(copies)(lp.output).flatten)
+    assert(ds.output == ls.output.flatMap(Seq.fill(copies)(_)))
+    assert(lp.values.nonEmpty)
+    assert(Seq(ls, dp, ds).forall(_.values == lp.values), Seq(lp, ls, dp, ds).map(_.values))
+  }
+
   test("records_path at an object is one record; [] is no record; on both sides alike") {
     val one = records.head
     val local = Sources.jsonNode(spark,
