@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   * nothing); `--apply` performs the deletes. Dead-KEY artifacts (format
   * bumps re-key the path, orphaning the old-format parquet under a
   * still-live data stamp) are reaped against
-  * [[graft.queries.Pipeline.liveArtifactKeys]] — the map shipped in
+  * [[graft.queries.SharedArtifacts.liveArtifactKeys]] — the map shipped in
   * this very build — unless `--keep-dead-keys` is passed. Exit 0 on
   * success, 1 on bad usage. */
 object PruneArtifacts {
@@ -42,7 +42,7 @@ object PruneArtifacts {
       val aRoot = graft.operators.Ivf.indexRoot(spark)
       val dec = graft.operators.Artifacts.prune(spark, aRoot,
         graceMs = 60L * 60 * 1000, dryRun = true,
-        liveKeys = graft.queries.Pipeline.liveArtifactKeys)
+        liveKeys = graft.queries.SharedArtifacts.liveArtifactKeys)
       System.err.println(s"${prefix}artifact-root prune dry-run at $aRoot: " +
         s"${dec.count(_.action == "keep")} kept, " +
         s"${dec.count(_.action == "would-delete")} would-delete " +
@@ -106,7 +106,7 @@ object PruneArtifacts {
           // record (Artifacts.model / frame read the same map)
           val liveKeys =
             if (keepDeadKeys) Map.empty[String, String]
-            else graft.queries.Pipeline.liveArtifactKeys
+            else graft.queries.SharedArtifacts.liveArtifactKeys
           val decisions = graft.operators.Artifacts
             .prune(spark, r, graceMs, dryRun = !apply, liveKeys = liveKeys)
           decisions.foreach(d =>

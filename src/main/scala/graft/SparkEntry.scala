@@ -6,15 +6,14 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.agg(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Scalar.queries ++ HigherOrder.queries ++
-      Pipeline.queries ++ EngineQueries.queries ++ Extensions.queries
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ Scalar.oracles ++ HigherOrder.oracles ++
-      Pipeline.oracles ++ EngineQueries.oracles ++ Extensions.oracles
+  /** Every driver query's builder by name, derived from the one
+    * declaration of each query in [[graft.queries.Registry]]. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.all.map(q => q.name -> q.build).toMap
+  /** For each oracle-checked query, equivalent ANSI SQL runnable by DuckDB
+    * on the same parquet tables. The property-checked queries have none. */
+  val oracleSql: Map[String, String] =
+    Registry.all.collect { case Query(name, _, Oracle(sql)) => name -> sql }.toMap
 
   /** The query names a focused run measures: every query when `list` is
     * absent, else the comma list's trimmed names, in [[queries]] order. An

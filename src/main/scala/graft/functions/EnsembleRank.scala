@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 
 /** Compact, broadcastable percent-rank table for ONE integer-valued
   * quality signal — the deployment form of
-  * [[graft.queries.Pipeline.rankBySignal]]'s histogram ranking: the
+  * [[graft.queries.QualityQueries.rankBySignal]]'s histogram ranking: the
   * batch corpus's sorted distinct signal values with inclusive
   * cumulative counts. A stream row's rank is
   * count(batch values strictly below v) / (N−1) — exactly the batch
@@ -109,7 +109,7 @@ object RankLookup {
 
   /** One [[RankTable]] PER GROUP of a string key column — the
     * deployment artifact of
-    * [[graft.queries.Pipeline.qualityCalibrated]]'s per-source
+    * [[graft.queries.QualityQueries.qualityCalibrated]]'s per-source
     * histograms. One aggregation collects every group's histogram
     * together (collect bound: Σ per-group distinct values — the same
     * quantization bound as [[train]], summed over groups). */

@@ -460,7 +460,7 @@ object TextAnalysis {
     *
     * Returns (idCol, n_grams, dsir_score); documents with < 2 tokens
     * score 0. Selection (top-k / threshold / Gumbel resampling) composes
-    * downstream — see [[graft.queries.Pipeline.dsirSelect]] and the
+    * downstream — see [[graft.queries.QualityQueries.dsirSelect]] and the
     * streaming gate [[graft.streaming.StreamOps.dsirGate]]. */
   def dsirScores(docs: org.apache.spark.sql.DataFrame, textCol: String,
       idCol: String, isTarget: Column,

@@ -12,9 +12,7 @@ import graft.rules.{Engine, YamlParser}
   * (string), parsed → compiled to a Catalyst plan → executed, and its
   * output hash-compared against plain DuckDB SQL by the driver.
   */
-object EngineQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object EngineQueries extends QueryFamily {
   /** record_when + mapping chain (@out refs) + casts — the reference's
     * bread-and-butter transform, over lineitem. */
   private val filterProjectRule =
@@ -41,6 +39,15 @@ object EngineQueries {
   def ruleFilterProject(spark: SparkSession, dir: String): DataFrame =
     Engine.transform(YamlParser.parse(filterProjectRule), Tables.lineitem(spark, dir))
       .orderBy("orderkey", "linenumber", "gross")
+  query("q_rule_filter_project", Oracle(
+      """SELECT l_orderkey AS orderkey,
+        |       CAST(l_linenumber AS BIGINT) AS linenumber,
+        |       CAST(l_quantity AS BIGINT) AS qty,
+        |       l_extendedprice * l_quantity AS gross,
+        |       'R-' || l_orderkey AS label
+        |FROM lineitem
+        |WHERE l_quantity >= 30 AND l_returnflag = 'R'
+        |ORDER BY orderkey, linenumber, gross""".stripMargin))(ruleFilterProject)
 
   /** lookup_first against an injected context (the nation dimension played
     * back as the reference's in-memory context array). */
@@ -76,6 +83,12 @@ object EngineQueries {
     Engine.transform(YamlParser.parse(lookupRule), Tables.customer(spark, dir), ctx)
       .orderBy("custkey")
   }
+  query("q_rule_lookup", Oracle(
+      """SELECT c_custkey AS custkey,
+        |       n_name AS nation_name,
+        |       CASE WHEN c_acctbal >= 0 THEN 'ok' ELSE 'negative' END AS balance_label
+        |FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
+        |ORDER BY custkey""".stripMargin))(ruleLookup)
 
   /** steps + step-level record_when + finalize sort/offset/limit. */
   private val finalizeRule =
@@ -99,30 +112,8 @@ object EngineQueries {
 
   def ruleFinalize(spark: SparkSession, dir: String): DataFrame =
     Engine.transform(YamlParser.parse(finalizeRule), Tables.orders(spark, dir))
-
-  val queries: Map[String, Q] = Map(
-    "q_rule_filter_project" -> (ruleFilterProject _),
-    "q_rule_lookup"         -> (ruleLookup _),
-    "q_rule_finalize"       -> (ruleFinalize _))
-
-  val oracles: Map[String, String] = Map(
-    "q_rule_filter_project" ->
-      """SELECT l_orderkey AS orderkey,
-        |       CAST(l_linenumber AS BIGINT) AS linenumber,
-        |       CAST(l_quantity AS BIGINT) AS qty,
-        |       l_extendedprice * l_quantity AS gross,
-        |       'R-' || l_orderkey AS label
-        |FROM lineitem
-        |WHERE l_quantity >= 30 AND l_returnflag = 'R'
-        |ORDER BY orderkey, linenumber, gross""".stripMargin,
-    "q_rule_lookup" ->
-      """SELECT c_custkey AS custkey,
-        |       n_name AS nation_name,
-        |       CASE WHEN c_acctbal >= 0 THEN 'ok' ELSE 'negative' END AS balance_label
-        |FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY custkey""".stripMargin,
-    "q_rule_finalize" ->
+  query("q_rule_finalize", Oracle(
       """SELECT o_orderkey AS orderkey, o_totalprice AS total, o_orderstatus AS status
         |FROM orders WHERE o_orderstatus <> 'X' AND o_totalprice > 1000
-        |ORDER BY orderkey DESC LIMIT 10 OFFSET 5""".stripMargin)
+        |ORDER BY orderkey DESC LIMIT 10 OFFSET 5""".stripMargin))(ruleFinalize)
 }

@@ -11,9 +11,7 @@ import graft.streaming.StreamOps
 /** Event-time windows and multimodal-column queries. The windowed
   * aggregation is the same plan StreamOps runs under Structured Streaming —
   * batch here so the driver can oracle it. */
-object Extensions {
-  type Q = (SparkSession, String) => DataFrame
-
+object Extensions extends QueryFamily {
   /** Tumbling 1-hour windows over events: window().start aligns with
     * date_trunc('hour') so DuckDB can oracle it. Decimal-exact sum. */
   def windowEvents(spark: SparkSession, dir: String): DataFrame =
@@ -25,6 +23,11 @@ object Extensions {
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("n"), col("total_value"))
       .orderBy("window_start", "event_type")
+  query("q_window_events", Oracle(
+      """SELECT STRFTIME(DATE_TRUNC('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
+        |       event_type, COUNT(*) AS n,
+        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin))(windowEvents)
 
   /** Batch inactivity-gap sessionization — the oracle-checked sibling of
     * the streaming [[StreamOps.sessionize]]: a new session starts when a
@@ -49,6 +52,19 @@ object Extensions {
         min(col("sec")).as("start_sec"), max(col("sec")).as("end_sec"))
       .orderBy("user_id", "session_id")
   }
+  query("q_sessionize", Oracle(
+      """WITH e AS (SELECT user_id, event_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) sec FROM events),
+        |g AS (SELECT user_id, event_id, sec,
+        |        CASE WHEN LAG(sec) OVER w IS NULL OR sec - LAG(sec) OVER w > 1800
+        |             THEN 1 ELSE 0 END is_new
+        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)),
+        |s AS (SELECT user_id, sec,
+        |        SUM(is_new) OVER (PARTITION BY user_id ORDER BY sec, event_id
+        |                          ROWS UNBOUNDED PRECEDING) session_id
+        |      FROM g)
+        |SELECT user_id, CAST(session_id AS BIGINT) session_id,
+        |       COUNT(*) n_events, MIN(sec) start_sec, MAX(sec) end_sec
+        |FROM s GROUP BY 1, 2 ORDER BY user_id, session_id""".stripMargin))(sessionizeBatch)
 
   /** Binary payload + metadata projection — metadata-only access never
     * deserializes payload bytes at scan time (parquet column pruning). */
@@ -62,6 +78,13 @@ object Extensions {
         md5(col("payload")).as("digest"),
         col("n_frames_sampled"))
       .orderBy("doc_id")
+  query("q_multimodal_meta", Oracle(
+      """SELECT doc_id,
+        |       CAST(OCTET_LENGTH(ENCODE(text)) AS BIGINT) AS n_bytes,
+        |       'application/octet-stream' AS mime,
+        |       MD5(text) AS digest,
+        |       CAST(CEIL(CEIL(OCTET_LENGTH(ENCODE(text)) / 64.0) / 4.0) AS BIGINT) AS n_frames_sampled
+        |FROM documents ORDER BY doc_id""".stripMargin))(multimodalMeta)
 
   /** Partition-level stubbed decode → deterministic feature vectors, one
     * row per (doc, dimension) so every cell is a scalar the driver's
@@ -73,6 +96,19 @@ object Extensions {
       .select(col("doc_id"), posexplode(col("features")).as(Seq("dim", "feature")))
       .select(col("doc_id"), col("dim").cast(LongType).as("dim"), col("feature"))
       .orderBy("doc_id", "dim")
+  query("q_multimodal_features", Oracle(
+      s"""WITH dims AS (
+         |  SELECT doc_id, OCTET_LENGTH(ENCODE(text)) AS n, UNNEST(RANGE(${Multimodal.featureDim})) AS dim
+         |  FROM documents),
+         |bytes AS (
+         |  SELECT doc_id,
+         |         UNNEST(LIST_TRANSFORM(RANGE(LENGTH(text)), i -> ORD(SUBSTR(text, CAST(i + 1 AS INT), 1)) % ${Multimodal.featureDim})) AS dim
+         |  FROM documents),
+         |hist AS (SELECT doc_id, dim, COUNT(*) AS k FROM bytes GROUP BY doc_id, dim)
+         |SELECT d.doc_id, CAST(d.dim AS BIGINT) AS dim,
+         |       CAST(COALESCE(h.k, 0) AS DOUBLE) / GREATEST(d.n, 1) AS feature
+         |FROM dims d LEFT JOIN hist h ON h.doc_id = d.doc_id AND h.dim = d.dim
+         |ORDER BY d.doc_id, d.dim""".stripMargin))(multimodalFeatures)
 
   /** Event-time AS-OF enrichment: every click picks up the user's most
     * recent purchase at or before it ([[graft.operators.AsofJoin]] —
@@ -97,6 +133,20 @@ object Extensions {
       .withColumnRenamed("asof_value", "p_value")
       .orderBy("event_id")
   }
+  // as-of restated as a LEFT LATERAL "latest at-or-before" pick — the
+  // declarative spelling of exactly the union-window carry semantics
+  // (inclusive at equal second, max event_id inside one second)
+  query("q_asof_join", Oracle(
+      """WITH e AS (SELECT event_id, user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) sec,
+        |                  event_type, value FROM events),
+        |l AS (SELECT event_id, user_id, sec FROM e WHERE event_type = 'click'),
+        |r AS (SELECT event_id, user_id, sec, value FROM e WHERE event_type = 'purchase')
+        |SELECT l.event_id, l.user_id, l.sec, p.event_id AS p_event_id, p.value AS p_value
+        |FROM l LEFT JOIN LATERAL (
+        |  SELECT r.event_id, r.value FROM r
+        |  WHERE r.user_id = l.user_id AND r.sec <= l.sec
+        |  ORDER BY r.sec DESC, r.event_id DESC LIMIT 1) p ON TRUE
+        |ORDER BY l.event_id""".stripMargin))(asofJoin)
 
   /** Banded range join ([[graft.operators.RangeJoin]]): every (click,
     * error) pair by the same user within 30 minutes — "did an error
@@ -119,6 +169,14 @@ object Extensions {
         col("r_event_id"), col("r_sec"))
       .orderBy("event_id", "r_event_id")
   }
+  query("q_range_join", Oracle(
+      """WITH e AS (SELECT event_id, user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) sec,
+        |                  event_type FROM events),
+        |l AS (SELECT event_id, user_id, sec FROM e WHERE event_type = 'click'),
+        |r AS (SELECT event_id, user_id, sec FROM e WHERE event_type = 'error')
+        |SELECT l.event_id, l.user_id, l.sec, r.event_id AS r_event_id, r.sec AS r_sec
+        |FROM l JOIN r ON l.user_id = r.user_id AND ABS(l.sec - r.sec) <= 1800
+        |ORDER BY l.event_id, r_event_id""".stripMargin))(rangeJoin)
 
   /** First-touch conversion funnel view → click → purchase: a user
     * reaches a stage when their FIRST event of that type comes at or
@@ -152,6 +210,38 @@ object Extensions {
           col("t_purchase") >= col("t_click"), 1L).otherwise(0L)).as("n3"))
     funnelReport(counts)
   }
+  query("q_event_funnel", Oracle(
+      """WITH e AS (SELECT user_id, event_type,
+        |                  CAST(FLOOR(EPOCH(ts)) AS BIGINT) sec FROM events),
+        |f AS (SELECT user_id,
+        |        MIN(CASE WHEN event_type = 'view' THEN sec END) t_view,
+        |        MIN(CASE WHEN event_type = 'click' THEN sec END) t_click,
+        |        MIN(CASE WHEN event_type = 'purchase' THEN sec END) t_purchase
+        |      FROM e GROUP BY user_id),
+        |c AS (SELECT
+        |        CAST(SUM(CASE WHEN t_view IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) n1,
+        |        CAST(SUM(CASE WHEN t_view IS NOT NULL AND t_click >= t_view
+        |                      THEN 1 ELSE 0 END) AS BIGINT) n2,
+        |        CAST(SUM(CASE WHEN t_view IS NOT NULL AND t_click >= t_view
+        |                       AND t_purchase >= t_click
+        |                      THEN 1 ELSE 0 END) AS BIGINT) n3
+        |      FROM f)
+        |SELECT * FROM (
+        |  SELECT CAST(1 AS BIGINT) stage_idx, 'view' stage, n1 n_users,
+        |         CASE WHEN n1 > 0 THEN CAST(n1 AS DOUBLE) / n1 END pct_of_first,
+        |         CASE WHEN n1 > 0 THEN CAST(n1 AS DOUBLE) / n1 END pct_of_prev
+        |  FROM c
+        |  UNION ALL
+        |  SELECT CAST(2 AS BIGINT), 'click', n2,
+        |         CASE WHEN n1 > 0 THEN CAST(n2 AS DOUBLE) / n1 END,
+        |         CASE WHEN n1 > 0 THEN CAST(n2 AS DOUBLE) / n1 END
+        |  FROM c
+        |  UNION ALL
+        |  SELECT CAST(3 AS BIGINT), 'purchase', n3,
+        |         CASE WHEN n1 > 0 THEN CAST(n3 AS DOUBLE) / n1 END,
+        |         CASE WHEN n2 > 0 THEN CAST(n3 AS DOUBLE) / n2 END
+        |  FROM c)
+        |ORDER BY stage_idx""".stripMargin))(eventFunnel)
 
   /** The 3-row funnel report from a 1-row (n1, n2, n3) stage-count
     * frame — shared by both funnel forms; all ratio math runs on the
@@ -205,6 +295,36 @@ object Extensions {
       .crossJoin(t3.agg(count(lit(1)).as("n3")))
     funnelReport(counts)
   }
+  query("q_event_funnel_strict", Oracle(
+      """WITH e AS (SELECT user_id, event_type,
+        |                  CAST(FLOOR(EPOCH(ts)) AS BIGINT) sec FROM events),
+        |v AS (SELECT user_id, MIN(sec) t1 FROM e
+        |      WHERE event_type = 'view' GROUP BY user_id),
+        |c2 AS (SELECT e.user_id, MIN(e.sec) t2 FROM e JOIN v USING (user_id)
+        |       WHERE e.event_type = 'click' AND e.sec >= v.t1
+        |       GROUP BY e.user_id),
+        |p3 AS (SELECT e.user_id, MIN(e.sec) t3 FROM e JOIN c2 USING (user_id)
+        |       WHERE e.event_type = 'purchase' AND e.sec >= c2.t2
+        |       GROUP BY e.user_id),
+        |c AS (SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM v) n1,
+        |             (SELECT CAST(COUNT(*) AS BIGINT) FROM c2) n2,
+        |             (SELECT CAST(COUNT(*) AS BIGINT) FROM p3) n3)
+        |SELECT * FROM (
+        |  SELECT CAST(1 AS BIGINT) stage_idx, 'view' stage, n1 n_users,
+        |         CASE WHEN n1 > 0 THEN CAST(n1 AS DOUBLE) / n1 END pct_of_first,
+        |         CASE WHEN n1 > 0 THEN CAST(n1 AS DOUBLE) / n1 END pct_of_prev
+        |  FROM c
+        |  UNION ALL
+        |  SELECT CAST(2 AS BIGINT), 'click', n2,
+        |         CASE WHEN n1 > 0 THEN CAST(n2 AS DOUBLE) / n1 END,
+        |         CASE WHEN n1 > 0 THEN CAST(n2 AS DOUBLE) / n1 END
+        |  FROM c
+        |  UNION ALL
+        |  SELECT CAST(3 AS BIGINT), 'purchase', n3,
+        |         CASE WHEN n1 > 0 THEN CAST(n3 AS DOUBLE) / n1 END,
+        |         CASE WHEN n2 > 0 THEN CAST(n3 AS DOUBLE) / n2 END
+        |  FROM c)
+        |ORDER BY stage_idx""".stripMargin))(eventFunnelStrict)
 
   /** Weekly retention cohort table: users grouped by their first-activity
     * day (the cohort), counted in each later activity week — the
@@ -230,6 +350,17 @@ object Extensions {
       .agg(countDistinct("user_id").cast(LongType).as("n_users"))
       .orderBy("cohort_day", "week_offset")
   }
+  query("q_retention_cohorts", Oracle(
+      """WITH e AS (SELECT user_id,
+        |                  CAST(FLOOR(FLOOR(EPOCH(ts)) / 86400) AS BIGINT) d
+        |           FROM events),
+        |ud AS (SELECT DISTINCT user_id, d FROM e),
+        |c AS (SELECT user_id, d,
+        |        MIN(d) OVER (PARTITION BY user_id) cohort_day FROM ud)
+        |SELECT cohort_day,
+        |       CAST(FLOOR((d - cohort_day) / 7) AS BIGINT) week_offset,
+        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) n_users
+        |FROM c GROUP BY 1, 2 ORDER BY cohort_day, week_offset""".stripMargin))(retentionCohorts)
 
   /** Hourly event-rate anomaly score: each (event_type, hour) bucket's
     * count against the trailing 24 ACTIVE hours' mean and sample
@@ -267,6 +398,33 @@ object Extensions {
       .select("event_type", "hour_bucket", "n", "trailing_cnt", "trailing_mean", "z_score")
       .orderBy("event_type", "hour_bucket")
   }
+  // mean/variance/z from exact BIGINT trailing sums in a fixed double-op
+  // order — NOT the engines' windowed stddev builtins, whose internal
+  // accumulation order is not a cross-engine contract
+  query("q_event_anomaly", Oracle(
+      """WITH e AS (SELECT event_type,
+        |                  CAST(FLOOR(FLOOR(EPOCH(ts)) / 3600) AS BIGINT) hour_bucket
+        |           FROM events),
+        |h AS (SELECT event_type, hour_bucket, CAST(COUNT(*) AS BIGINT) n
+        |      FROM e GROUP BY 1, 2),
+        |t AS (SELECT event_type, hour_bucket, n,
+        |        CAST(COUNT(n) OVER w AS BIGINT) trailing_cnt,
+        |        CAST(SUM(n) OVER w AS BIGINT) s1,
+        |        CAST(SUM(n * n) OVER w AS BIGINT) s2
+        |      FROM h
+        |      WINDOW w AS (PARTITION BY event_type ORDER BY hour_bucket
+        |                   ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)),
+        |v AS (SELECT event_type, hour_bucket, n, trailing_cnt,
+        |        CASE WHEN trailing_cnt >= 2
+        |             THEN CAST(s1 AS DOUBLE) / trailing_cnt END trailing_mean,
+        |        CASE WHEN trailing_cnt >= 2
+        |             THEN (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / trailing_cnt)
+        |                  / (trailing_cnt - 1) END varr
+        |      FROM t)
+        |SELECT event_type, hour_bucket, n, trailing_cnt, trailing_mean,
+        |       CASE WHEN trailing_cnt >= 2 AND varr > 0
+        |            THEN (n - trailing_mean) / SQRT(varr) END z_score
+        |FROM v ORDER BY event_type, hour_bucket""".stripMargin))(eventAnomaly)
 
   /** Declarative data-quality constraint report — the deequ pattern
     * Spark-native: each table's checks (non-null, uniqueness, domain
@@ -285,6 +443,32 @@ object Extensions {
       .unionAll(lineitemConstraints(Tables.lineitem(spark, dir),
         Tables.orders(spark, dir)))
       .orderBy("constraint_name")
+  // the Spark side's null-safe equality (<=>) is IS NOT DISTINCT FROM;
+  // count-distinct ignores nulls identically on both engines
+  query("q_constraint_report", Oracle(
+      """WITH d AS (SELECT CAST(COUNT(*) AS BIGINT) n,
+        |  CAST(COALESCE(SUM(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) v_null,
+        |  CAST(COUNT(*) - COUNT(DISTINCT doc_id) AS BIGINT) v_uniq,
+        |  CAST(COALESCE(SUM(CASE WHEN n_chars IS DISTINCT FROM LENGTH(text) THEN 1 ELSE 0 END), 0) AS BIGINT) v_chars,
+        |  CAST(CASE WHEN COUNT(*) = 0 THEN 1 ELSE 0 END AS BIGINT) v_empty
+        |  FROM documents),
+        |l AS (SELECT CAST(COUNT(*) AS BIGINT) n,
+        |  CAST(COALESCE(SUM(CASE WHEN l_quantity IS NULL OR l_quantity < 1 OR l_quantity > 50
+        |                THEN 1 ELSE 0 END), 0) AS BIGINT) v_qty
+        |  FROM lineitem),
+        |fk AS (SELECT CAST(COUNT(*) AS BIGINT) n,
+        |  CAST(COALESCE(SUM(CASE WHEN o.o_orderkey IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) v_fk
+        |  FROM lineitem li LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o
+        |    ON li.l_orderkey = o.o_orderkey)
+        |SELECT * FROM (
+        |  SELECT 'docs_not_empty' AS constraint_name, n AS n_checked,
+        |         v_empty AS n_violations, v_empty = 0 AS pass FROM d
+        |  UNION ALL SELECT 'docs_doc_id_not_null', n, v_null, v_null = 0 FROM d
+        |  UNION ALL SELECT 'docs_doc_id_unique', n, v_uniq, v_uniq = 0 FROM d
+        |  UNION ALL SELECT 'docs_n_chars_matches_text', n, v_chars, v_chars = 0 FROM d
+        |  UNION ALL SELECT 'lineitem_quantity_in_1_50', n, v_qty, v_qty = 0 FROM l
+        |  UNION ALL SELECT 'lineitem_orderkey_fk_orders', n, v_fk, v_fk = 0 FROM fk)
+        |ORDER BY constraint_name""".stripMargin))(constraintReport)
 
   private def report(src: DataFrame, name: String, v: String): DataFrame =
     src.select(lit(name).as("constraint_name"), col("n").as("n_checked"),
@@ -332,205 +516,4 @@ object Extensions {
     report(l, "lineitem_quantity_in_1_50", "v_qty")
       .unionAll(report(fk, "lineitem_orderkey_fk_orders", "v_fk"))
   }
-
-  val queries: Map[String, Q] = Map(
-    "q_constraint_report"   -> (constraintReport _),
-    "q_event_funnel"        -> (eventFunnel _),
-    "q_event_funnel_strict" -> (eventFunnelStrict _),
-    "q_retention_cohorts"   -> (retentionCohorts _),
-    "q_event_anomaly"       -> (eventAnomaly _),
-    "q_window_events"       -> (windowEvents _),
-    "q_sessionize"          -> (sessionizeBatch _),
-    "q_asof_join"           -> (asofJoin _),
-    "q_range_join"          -> (rangeJoin _),
-    "q_multimodal_meta"     -> (multimodalMeta _),
-    "q_multimodal_features" -> (multimodalFeatures _))
-
-  val oracles: Map[String, String] = Map(
-    // the Spark side's null-safe equality (<=>) is IS NOT DISTINCT FROM;
-    // count-distinct ignores nulls identically on both engines
-    "q_constraint_report" ->
-      """WITH d AS (SELECT CAST(COUNT(*) AS BIGINT) n,
-        |  CAST(COALESCE(SUM(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) v_null,
-        |  CAST(COUNT(*) - COUNT(DISTINCT doc_id) AS BIGINT) v_uniq,
-        |  CAST(COALESCE(SUM(CASE WHEN n_chars IS DISTINCT FROM LENGTH(text) THEN 1 ELSE 0 END), 0) AS BIGINT) v_chars,
-        |  CAST(CASE WHEN COUNT(*) = 0 THEN 1 ELSE 0 END AS BIGINT) v_empty
-        |  FROM documents),
-        |l AS (SELECT CAST(COUNT(*) AS BIGINT) n,
-        |  CAST(COALESCE(SUM(CASE WHEN l_quantity IS NULL OR l_quantity < 1 OR l_quantity > 50
-        |                THEN 1 ELSE 0 END), 0) AS BIGINT) v_qty
-        |  FROM lineitem),
-        |fk AS (SELECT CAST(COUNT(*) AS BIGINT) n,
-        |  CAST(COALESCE(SUM(CASE WHEN o.o_orderkey IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) v_fk
-        |  FROM lineitem li LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o
-        |    ON li.l_orderkey = o.o_orderkey)
-        |SELECT * FROM (
-        |  SELECT 'docs_not_empty' AS constraint_name, n AS n_checked,
-        |         v_empty AS n_violations, v_empty = 0 AS pass FROM d
-        |  UNION ALL SELECT 'docs_doc_id_not_null', n, v_null, v_null = 0 FROM d
-        |  UNION ALL SELECT 'docs_doc_id_unique', n, v_uniq, v_uniq = 0 FROM d
-        |  UNION ALL SELECT 'docs_n_chars_matches_text', n, v_chars, v_chars = 0 FROM d
-        |  UNION ALL SELECT 'lineitem_quantity_in_1_50', n, v_qty, v_qty = 0 FROM l
-        |  UNION ALL SELECT 'lineitem_orderkey_fk_orders', n, v_fk, v_fk = 0 FROM fk)
-        |ORDER BY constraint_name""".stripMargin,
-    "q_event_funnel" ->
-      """WITH e AS (SELECT user_id, event_type,
-        |                  CAST(FLOOR(EPOCH(ts)) AS BIGINT) sec FROM events),
-        |f AS (SELECT user_id,
-        |        MIN(CASE WHEN event_type = 'view' THEN sec END) t_view,
-        |        MIN(CASE WHEN event_type = 'click' THEN sec END) t_click,
-        |        MIN(CASE WHEN event_type = 'purchase' THEN sec END) t_purchase
-        |      FROM e GROUP BY user_id),
-        |c AS (SELECT
-        |        CAST(SUM(CASE WHEN t_view IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) n1,
-        |        CAST(SUM(CASE WHEN t_view IS NOT NULL AND t_click >= t_view
-        |                      THEN 1 ELSE 0 END) AS BIGINT) n2,
-        |        CAST(SUM(CASE WHEN t_view IS NOT NULL AND t_click >= t_view
-        |                       AND t_purchase >= t_click
-        |                      THEN 1 ELSE 0 END) AS BIGINT) n3
-        |      FROM f)
-        |SELECT * FROM (
-        |  SELECT CAST(1 AS BIGINT) stage_idx, 'view' stage, n1 n_users,
-        |         CASE WHEN n1 > 0 THEN CAST(n1 AS DOUBLE) / n1 END pct_of_first,
-        |         CASE WHEN n1 > 0 THEN CAST(n1 AS DOUBLE) / n1 END pct_of_prev
-        |  FROM c
-        |  UNION ALL
-        |  SELECT CAST(2 AS BIGINT), 'click', n2,
-        |         CASE WHEN n1 > 0 THEN CAST(n2 AS DOUBLE) / n1 END,
-        |         CASE WHEN n1 > 0 THEN CAST(n2 AS DOUBLE) / n1 END
-        |  FROM c
-        |  UNION ALL
-        |  SELECT CAST(3 AS BIGINT), 'purchase', n3,
-        |         CASE WHEN n1 > 0 THEN CAST(n3 AS DOUBLE) / n1 END,
-        |         CASE WHEN n2 > 0 THEN CAST(n3 AS DOUBLE) / n2 END
-        |  FROM c)
-        |ORDER BY stage_idx""".stripMargin,
-    "q_event_funnel_strict" ->
-      """WITH e AS (SELECT user_id, event_type,
-        |                  CAST(FLOOR(EPOCH(ts)) AS BIGINT) sec FROM events),
-        |v AS (SELECT user_id, MIN(sec) t1 FROM e
-        |      WHERE event_type = 'view' GROUP BY user_id),
-        |c2 AS (SELECT e.user_id, MIN(e.sec) t2 FROM e JOIN v USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.sec >= v.t1
-        |       GROUP BY e.user_id),
-        |p3 AS (SELECT e.user_id, MIN(e.sec) t3 FROM e JOIN c2 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.sec >= c2.t2
-        |       GROUP BY e.user_id),
-        |c AS (SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM v) n1,
-        |             (SELECT CAST(COUNT(*) AS BIGINT) FROM c2) n2,
-        |             (SELECT CAST(COUNT(*) AS BIGINT) FROM p3) n3)
-        |SELECT * FROM (
-        |  SELECT CAST(1 AS BIGINT) stage_idx, 'view' stage, n1 n_users,
-        |         CASE WHEN n1 > 0 THEN CAST(n1 AS DOUBLE) / n1 END pct_of_first,
-        |         CASE WHEN n1 > 0 THEN CAST(n1 AS DOUBLE) / n1 END pct_of_prev
-        |  FROM c
-        |  UNION ALL
-        |  SELECT CAST(2 AS BIGINT), 'click', n2,
-        |         CASE WHEN n1 > 0 THEN CAST(n2 AS DOUBLE) / n1 END,
-        |         CASE WHEN n1 > 0 THEN CAST(n2 AS DOUBLE) / n1 END
-        |  FROM c
-        |  UNION ALL
-        |  SELECT CAST(3 AS BIGINT), 'purchase', n3,
-        |         CASE WHEN n1 > 0 THEN CAST(n3 AS DOUBLE) / n1 END,
-        |         CASE WHEN n2 > 0 THEN CAST(n3 AS DOUBLE) / n2 END
-        |  FROM c)
-        |ORDER BY stage_idx""".stripMargin,
-    "q_retention_cohorts" ->
-      """WITH e AS (SELECT user_id,
-        |                  CAST(FLOOR(FLOOR(EPOCH(ts)) / 86400) AS BIGINT) d
-        |           FROM events),
-        |ud AS (SELECT DISTINCT user_id, d FROM e),
-        |c AS (SELECT user_id, d,
-        |        MIN(d) OVER (PARTITION BY user_id) cohort_day FROM ud)
-        |SELECT cohort_day,
-        |       CAST(FLOOR((d - cohort_day) / 7) AS BIGINT) week_offset,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) n_users
-        |FROM c GROUP BY 1, 2 ORDER BY cohort_day, week_offset""".stripMargin,
-    // mean/variance/z from exact BIGINT trailing sums in a fixed double-op
-    // order — NOT the engines' windowed stddev builtins, whose internal
-    // accumulation order is not a cross-engine contract
-    "q_event_anomaly" ->
-      """WITH e AS (SELECT event_type,
-        |                  CAST(FLOOR(FLOOR(EPOCH(ts)) / 3600) AS BIGINT) hour_bucket
-        |           FROM events),
-        |h AS (SELECT event_type, hour_bucket, CAST(COUNT(*) AS BIGINT) n
-        |      FROM e GROUP BY 1, 2),
-        |t AS (SELECT event_type, hour_bucket, n,
-        |        CAST(COUNT(n) OVER w AS BIGINT) trailing_cnt,
-        |        CAST(SUM(n) OVER w AS BIGINT) s1,
-        |        CAST(SUM(n * n) OVER w AS BIGINT) s2
-        |      FROM h
-        |      WINDOW w AS (PARTITION BY event_type ORDER BY hour_bucket
-        |                   ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)),
-        |v AS (SELECT event_type, hour_bucket, n, trailing_cnt,
-        |        CASE WHEN trailing_cnt >= 2
-        |             THEN CAST(s1 AS DOUBLE) / trailing_cnt END trailing_mean,
-        |        CASE WHEN trailing_cnt >= 2
-        |             THEN (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / trailing_cnt)
-        |                  / (trailing_cnt - 1) END varr
-        |      FROM t)
-        |SELECT event_type, hour_bucket, n, trailing_cnt, trailing_mean,
-        |       CASE WHEN trailing_cnt >= 2 AND varr > 0
-        |            THEN (n - trailing_mean) / SQRT(varr) END z_score
-        |FROM v ORDER BY event_type, hour_bucket""".stripMargin,
-    "q_window_events" ->
-      """SELECT STRFTIME(DATE_TRUNC('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |       event_type, COUNT(*) AS n,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    "q_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) sec FROM events),
-        |g AS (SELECT user_id, event_id, sec,
-        |        CASE WHEN LAG(sec) OVER w IS NULL OR sec - LAG(sec) OVER w > 1800
-        |             THEN 1 ELSE 0 END is_new
-        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)),
-        |s AS (SELECT user_id, sec,
-        |        SUM(is_new) OVER (PARTITION BY user_id ORDER BY sec, event_id
-        |                          ROWS UNBOUNDED PRECEDING) session_id
-        |      FROM g)
-        |SELECT user_id, CAST(session_id AS BIGINT) session_id,
-        |       COUNT(*) n_events, MIN(sec) start_sec, MAX(sec) end_sec
-        |FROM s GROUP BY 1, 2 ORDER BY user_id, session_id""".stripMargin,
-    // as-of restated as a LEFT LATERAL "latest at-or-before" pick — the
-    // declarative spelling of exactly the union-window carry semantics
-    // (inclusive at equal second, max event_id inside one second)
-    "q_asof_join" ->
-      """WITH e AS (SELECT event_id, user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) sec,
-        |                  event_type, value FROM events),
-        |l AS (SELECT event_id, user_id, sec FROM e WHERE event_type = 'click'),
-        |r AS (SELECT event_id, user_id, sec, value FROM e WHERE event_type = 'purchase')
-        |SELECT l.event_id, l.user_id, l.sec, p.event_id AS p_event_id, p.value AS p_value
-        |FROM l LEFT JOIN LATERAL (
-        |  SELECT r.event_id, r.value FROM r
-        |  WHERE r.user_id = l.user_id AND r.sec <= l.sec
-        |  ORDER BY r.sec DESC, r.event_id DESC LIMIT 1) p ON TRUE
-        |ORDER BY l.event_id""".stripMargin,
-    "q_range_join" ->
-      """WITH e AS (SELECT event_id, user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) sec,
-        |                  event_type FROM events),
-        |l AS (SELECT event_id, user_id, sec FROM e WHERE event_type = 'click'),
-        |r AS (SELECT event_id, user_id, sec FROM e WHERE event_type = 'error')
-        |SELECT l.event_id, l.user_id, l.sec, r.event_id AS r_event_id, r.sec AS r_sec
-        |FROM l JOIN r ON l.user_id = r.user_id AND ABS(l.sec - r.sec) <= 1800
-        |ORDER BY l.event_id, r_event_id""".stripMargin,
-    "q_multimodal_meta" ->
-      """SELECT doc_id,
-        |       CAST(OCTET_LENGTH(ENCODE(text)) AS BIGINT) AS n_bytes,
-        |       'application/octet-stream' AS mime,
-        |       MD5(text) AS digest,
-        |       CAST(CEIL(CEIL(OCTET_LENGTH(ENCODE(text)) / 64.0) / 4.0) AS BIGINT) AS n_frames_sampled
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_multimodal_features" ->
-      s"""WITH dims AS (
-         |  SELECT doc_id, OCTET_LENGTH(ENCODE(text)) AS n, UNNEST(RANGE(${Multimodal.featureDim})) AS dim
-         |  FROM documents),
-         |bytes AS (
-         |  SELECT doc_id,
-         |         UNNEST(LIST_TRANSFORM(RANGE(LENGTH(text)), i -> ORD(SUBSTR(text, CAST(i + 1 AS INT), 1)) % ${Multimodal.featureDim})) AS dim
-         |  FROM documents),
-         |hist AS (SELECT doc_id, dim, COUNT(*) AS k FROM bytes GROUP BY doc_id, dim)
-         |SELECT d.doc_id, CAST(d.dim AS BIGINT) AS dim,
-         |       CAST(COALESCE(h.k, 0) AS DOUBLE) / GREATEST(d.n, 1) AS feature
-         |FROM dims d LEFT JOIN hist h ON h.doc_id = d.doc_id AND h.dim = d.dim
-         |ORDER BY d.doc_id, d.dim""".stripMargin)
 }

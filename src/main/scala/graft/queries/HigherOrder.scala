@@ -16,9 +16,7 @@ import graft.Tables
   * deterministic on both engines, and array arithmetic stays on LONGs so the
   * fold result is order-independent and exact.
   */
-object HigherOrder {
-  type Q = (SparkSession, String) => DataFrame
-
+object HigherOrder extends QueryFamily {
   /** One row per order: the quantity array and the §2.4/§2.6 ops over it.
     * `aggregate(...)` is the reference's `fold` (explicit seed) — with the
     * first element as seed it is `reduce` (v2_eval.rs:2303-2375). */
@@ -42,34 +40,7 @@ object HigherOrder {
         array_max(col("arr")).as("max_qty"))
       .orderBy("l_orderkey")
   }
-
-  /** flat_map / explode: one row per token (the inverse of collect) — at
-    * scale this is a narrow map-side transform, no shuffle before the sort. */
-  def explodeTokens(spark: SparkSession, dir: String): DataFrame =
-    Tables.part(spark, dir)
-      .select(col("p_partkey"), explode(split(col("p_name"), " ")).as("word"))
-      .orderBy("p_partkey", "word")
-
-  /** group_by/key_by/unique (§2.4) at cross-record scale: per return flag,
-    * the distinct sorted status list + distinct count. The list is emitted
-    * joined to one string so the driver's comparator (pandas, no array
-    * hashing) can canonicalize it. */
-  def groupCollect(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        array_join(sort_array(collect_set(col("l_linestatus"))), ",").as("statuses"),
-        countDistinct(col("l_linestatus")).as("n_statuses"),
-        count(lit(1)).as("n_rows"))
-      .orderBy("l_returnflag")
-
-  val queries: Map[String, Q] = Map(
-    "q_array_hof"     -> (arrayHof _),
-    "q_explode_tokens" -> (explodeTokens _),
-    "q_group_collect" -> (groupCollect _))
-
-  val oracles: Map[String, String] = Map(
-    "q_array_hof" ->
+  query("q_array_hof", Oracle(
       """WITH per_order AS (
         |  SELECT l_orderkey, LIST_SORT(LIST(CAST(l_quantity AS BIGINT))) AS arr
         |  FROM lineitem GROUP BY l_orderkey)
@@ -83,14 +54,34 @@ object HigherOrder {
         |       CAST(LEN(LIST_DISTINCT(arr)) AS BIGINT) AS uniq_n,
         |       LIST_CONTAINS(arr, 50) AS has_fifty,
         |       LIST_MAX(arr) AS max_qty
-        |FROM per_order ORDER BY l_orderkey""".stripMargin,
-    "q_explode_tokens" ->
+        |FROM per_order ORDER BY l_orderkey""".stripMargin))(arrayHof)
+
+  /** flat_map / explode: one row per token (the inverse of collect) — at
+    * scale this is a narrow map-side transform, no shuffle before the sort. */
+  def explodeTokens(spark: SparkSession, dir: String): DataFrame =
+    Tables.part(spark, dir)
+      .select(col("p_partkey"), explode(split(col("p_name"), " ")).as("word"))
+      .orderBy("p_partkey", "word")
+  query("q_explode_tokens", Oracle(
       """SELECT p_partkey, UNNEST(STRING_SPLIT(p_name, ' ')) AS word
-        |FROM part ORDER BY p_partkey, word""".stripMargin,
-    "q_group_collect" ->
+        |FROM part ORDER BY p_partkey, word""".stripMargin))(explodeTokens)
+
+  /** group_by/key_by/unique (§2.4) at cross-record scale: per return flag,
+    * the distinct sorted status list + distinct count. The list is emitted
+    * joined to one string so the driver's comparator (pandas, no array
+    * hashing) can canonicalize it. */
+  def groupCollect(spark: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(spark, dir)
+      .groupBy(col("l_returnflag"))
+      .agg(
+        array_join(sort_array(collect_set(col("l_linestatus"))), ",").as("statuses"),
+        countDistinct(col("l_linestatus")).as("n_statuses"),
+        count(lit(1)).as("n_rows"))
+      .orderBy("l_returnflag")
+  query("q_group_collect", Oracle(
       """SELECT l_returnflag,
         |       ARRAY_TO_STRING(LIST_SORT(LIST(DISTINCT l_linestatus)), ',') AS statuses,
         |       COUNT(DISTINCT l_linestatus) AS n_statuses,
         |       COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin))(groupCollect)
 }

@@ -21,9 +21,7 @@ import graft.Tables
   *     decimals, whose parquet encodings differ between engines).
   *   - every query ends in a deterministic total ORDER BY.
   */
-object Relational {
-  type Q = (SparkSession, String) => DataFrame
-
+object Relational extends QueryFamily {
   /** `record_when` per-record predicate + projection + strict int cast.
     * Reference: filter before mappings (transform.rs:1065-1091). The filter
     * sits directly on the scan → Catalyst pushes it into parquet. */
@@ -35,6 +33,11 @@ object Relational {
         col("l_linenumber").cast(LongType).as("linenumber"),
         col("l_quantity").cast(LongType).as("qty"))
       .orderBy("l_orderkey", "linenumber")
+  query("q_record_when", Oracle(
+      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS linenumber,
+        |       CAST(l_quantity AS BIGINT) AS qty
+        |FROM lineitem WHERE l_quantity > 30 AND l_returnflag = 'R'
+        |ORDER BY l_orderkey, linenumber""".stripMargin))(recordWhen)
 
   /** Ordered mapping chain: later mappings read earlier results (`@out`
     * visibility, transform.rs:382-410) — here as a projection chain Catalyst
@@ -54,6 +57,13 @@ object Relational {
       .select("l_orderkey", "linenumber", "gross", "net", "margin")
       .orderBy("l_orderkey", "linenumber")
   }
+  query("q_mapping_chain", Oracle(
+      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS linenumber,
+        |       l_extendedprice * (1.0 - l_discount) AS gross,
+        |       (l_extendedprice * (1.0 - l_discount)) * (1.0 + l_tax) AS net,
+        |       (l_extendedprice * (1.0 - l_discount)) * (1.0 + l_tax) - l_extendedprice AS margin
+        |FROM lineitem WHERE l_orderkey % 7 = 1
+        |ORDER BY l_orderkey, linenumber""".stripMargin))(mappingChain)
 
   /** Conditional mapping (`when`, transform.rs:1041-1063) + default handling
     * (`required`/`default`, transform.rs:1006-1032) as when/otherwise +
@@ -69,6 +79,14 @@ object Relational {
           .as("prio_or_default"),
         when(col("o_totalprice") > 100000.0, col("o_totalprice")).as("big_price"))
       .orderBy("o_orderkey")
+  query("q_when_default", Oracle(
+      """SELECT o_orderkey,
+        |       CASE WHEN o_orderstatus = 'O' THEN 'open'
+        |            WHEN o_orderstatus = 'F' THEN 'finished'
+        |            ELSE 'other' END AS status_label,
+        |       COALESCE(NULLIF(o_orderpriority, '3-MEDIUM'), 'default-prio') AS prio_or_default,
+        |       CASE WHEN o_totalprice > 100000.0 THEN o_totalprice END AS big_price
+        |FROM orders ORDER BY o_orderkey""".stripMargin))(whenDefault)
 
   /** Cross-record aggregation (TPC-H Q1 shape): map-side partial aggregation,
     * one shuffle on the (low-cardinality) group keys. Decimal-exact sums. */
@@ -85,6 +103,15 @@ object Relational {
         count(lit(1)).as("count_order"))
       .orderBy("l_returnflag", "l_linestatus")
   }
+  query("q_agg", Oracle(
+      """SELECT l_returnflag, l_linestatus,
+        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
+        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
+        |       COUNT(*) AS count_order
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin))(agg)
 
   /** `lookup` (SURVEY §2.3): equi-join against a small dimension — the
     * reference scans a broadcast-style in-memory context (O(n·m)); here it is
@@ -101,6 +128,12 @@ object Relational {
         col("p_name"), col("p_brand"), col("l_quantity").cast(LongType).as("qty"))
       .orderBy("l_orderkey", "linenumber")
   }
+  query("q_lookup", Oracle(
+      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS linenumber,
+        |       p_name, p_brand, CAST(l_quantity AS BIGINT) AS qty
+        |FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
+        |WHERE l_orderkey % 7 = 1
+        |ORDER BY l_orderkey, linenumber""".stripMargin))(lookup)
 
   /** `lookup_first` (first match only, transform.rs:2871-2873): first
     * lineitem per order — row_number over a window, keep rank 1. */
@@ -120,6 +153,13 @@ object Relational {
         col("l_extendedprice").as("first_price"))
       .orderBy("l_orderkey")
   }
+  query("q_lookup_first", Oracle(
+      """SELECT l_orderkey, first_partkey, first_price FROM (
+        |  SELECT l_orderkey, l_partkey AS first_partkey, l_extendedprice AS first_price,
+        |         ROW_NUMBER() OVER (PARTITION BY l_orderkey
+        |           ORDER BY l_linenumber, l_partkey, l_extendedprice) AS rn
+        |  FROM lineitem WHERE l_orderkey % 7 = 1)
+        |WHERE rn = 1 ORDER BY l_orderkey""".stripMargin))(lookupFirst)
 
   /** finalize.sort + offset + limit (transform.rs:646-705): global total
     * order with a deterministic tie-break, then pagination. */
@@ -128,6 +168,9 @@ object Relational {
       .select(col("o_orderkey"), col("o_totalprice"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       .offset(10).limit(20)
+  query("q_sort_limit_offset", Oracle(
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 20 OFFSET 10""".stripMargin))(sortLimitOffset)
 
   /** finalize sort+limit = top-k, per group: the scalable form of the
     * reference's sort_by+take (rank within partition, no global sort). */
@@ -156,6 +199,12 @@ object Relational {
         col("l_orderkey"), col("l_extendedprice"))
       .orderBy("l_suppkey", "rank")
   }
+  query("q_topk_per_group", Oracle(
+      """SELECT l_suppkey, CAST(rank AS BIGINT) AS rank, l_orderkey, l_extendedprice FROM (
+        |  SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice,
+        |         ROW_NUMBER() OVER (PARTITION BY l_suppkey
+        |           ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC, l_partkey ASC) AS rank
+        |  FROM lineitem) WHERE rank <= 3 ORDER BY l_suppkey, rank""".stripMargin))(topkPerGroup)
 
   /** `unique` at cross-record scale: distinct over the group keys (the
     * reference's unique is O(n²) string-coerced, transform.rs:3791-3828;
@@ -165,6 +214,9 @@ object Relational {
       .select(col("l_returnflag"), col("l_linestatus"))
       .distinct()
       .orderBy("l_returnflag", "l_linestatus")
+  query("q_distinct", Oracle(
+      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin))(distinctPairs)
 
   /** The [[graft.operators.Skew.saltedJoin]] skew path on a real plan: the
     * orders fact joins a status dimension on o_orderstatus — three distinct
@@ -187,6 +239,12 @@ object Relational {
       .select(col("o_orderkey"), col("o_orderstatus"), col("status_name"))
       .orderBy("o_orderkey")
   }
+  query("q_salted_join", Oracle(
+      """SELECT o_orderkey, o_orderstatus, status_name
+        |FROM orders
+        |JOIN (VALUES ('O', 'open'), ('F', 'finished'), ('P', 'pending'))
+        |  AS d(o_orderstatus, status_name) USING (o_orderstatus)
+        |ORDER BY o_orderkey""".stripMargin))(saltedJoin)
 
   /** Co-located (bucketed) fact-to-fact join — TPC-H Q4 shape: per-order
     * lineitem revenue joined back to the order's priority, both sides
@@ -228,6 +286,14 @@ object Relational {
           .cast(DoubleType).as("revenue"))
       .orderBy("o_orderpriority")
   }
+  query("q_bucket_join", Oracle(
+      """SELECT o_orderpriority,
+        |       CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS n_orders,
+        |       COUNT(*) AS n_lines,
+        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin))(bucketJoin)
 
   /** Pivot (long→wide reshape): per-source token counts spread across one
     * column per language — the dataset-card cross-tab. The value set is
@@ -249,6 +315,12 @@ object Relational {
       .na.fill(0L, langs)
       .orderBy("source")
   }
+  query("q_pivot_langs", Oracle(
+      Seq("de", "en", "es", "fr", "zh").map { l =>
+        s"CAST(COALESCE(SUM(CASE WHEN lang = '$l' THEN LEN(STRING_SPLIT(text, ' ')) END), 0) AS BIGINT) AS $l"
+      }.mkString(
+        "SELECT source, ", ", ",
+        " FROM documents GROUP BY source ORDER BY source")))(pivotLangs)
 
   /** ROLLUP (hierarchical subtotals in one pass): per-(returnflag,
     * linestatus) decimal-exact quantity sums plus per-returnflag
@@ -267,6 +339,13 @@ object Relational {
         grouping_id().as("gid"))
       .orderBy(col("gid"), col("l_returnflag"), col("l_linestatus"))
   }
+  query("q_rollup_qty", Oracle(
+      """SELECT l_returnflag, l_linestatus,
+        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |       COUNT(*) AS n_lines,
+        |       CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
+        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin))(rollupQty)
 
   /** Single-pass column profiling — the ANALYZE-style stats report an
     * engine produces before planning ingestion: per numeric column,
@@ -307,106 +386,7 @@ object Relational {
           .cast(DoubleType).as("sum_v"))
       .orderBy("column_name")
   }
-
-  val queries: Map[String, Q] = Map(
-    "q_record_when"      -> (recordWhen _),
-    "q_mapping_chain"    -> (mappingChain _),
-    "q_when_default"     -> (whenDefault _),
-    "q_agg"              -> (agg _),
-    "q_lookup"           -> (lookup _),
-    "q_lookup_first"     -> (lookupFirst _),
-    "q_sort_limit_offset" -> (sortLimitOffset _),
-    "q_topk_per_group"   -> (topkPerGroup _),
-    "q_distinct"         -> (distinctPairs _),
-    "q_salted_join"      -> (saltedJoin _),
-    "q_bucket_join"      -> (bucketJoin _),
-    "q_pivot_langs"      -> (pivotLangs _),
-    "q_rollup_qty"       -> (rollupQty _),
-    "q_table_profile"    -> (tableProfile _))
-
-  val oracles: Map[String, String] = Map(
-    "q_record_when" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS linenumber,
-        |       CAST(l_quantity AS BIGINT) AS qty
-        |FROM lineitem WHERE l_quantity > 30 AND l_returnflag = 'R'
-        |ORDER BY l_orderkey, linenumber""".stripMargin,
-    "q_mapping_chain" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS linenumber,
-        |       l_extendedprice * (1.0 - l_discount) AS gross,
-        |       (l_extendedprice * (1.0 - l_discount)) * (1.0 + l_tax) AS net,
-        |       (l_extendedprice * (1.0 - l_discount)) * (1.0 + l_tax) - l_extendedprice AS margin
-        |FROM lineitem WHERE l_orderkey % 7 = 1
-        |ORDER BY l_orderkey, linenumber""".stripMargin,
-    "q_when_default" ->
-      """SELECT o_orderkey,
-        |       CASE WHEN o_orderstatus = 'O' THEN 'open'
-        |            WHEN o_orderstatus = 'F' THEN 'finished'
-        |            ELSE 'other' END AS status_label,
-        |       COALESCE(NULLIF(o_orderpriority, '3-MEDIUM'), 'default-prio') AS prio_or_default,
-        |       CASE WHEN o_totalprice > 100000.0 THEN o_totalprice END AS big_price
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
-        |       COUNT(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_lookup" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS linenumber,
-        |       p_name, p_brand, CAST(l_quantity AS BIGINT) AS qty
-        |FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
-        |WHERE l_orderkey % 7 = 1
-        |ORDER BY l_orderkey, linenumber""".stripMargin,
-    "q_lookup_first" ->
-      """SELECT l_orderkey, first_partkey, first_price FROM (
-        |  SELECT l_orderkey, l_partkey AS first_partkey, l_extendedprice AS first_price,
-        |         ROW_NUMBER() OVER (PARTITION BY l_orderkey
-        |           ORDER BY l_linenumber, l_partkey, l_extendedprice) AS rn
-        |  FROM lineitem WHERE l_orderkey % 7 = 1)
-        |WHERE rn = 1 ORDER BY l_orderkey""".stripMargin,
-    "q_sort_limit_offset" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 20 OFFSET 10""".stripMargin,
-    "q_topk_per_group" ->
-      """SELECT l_suppkey, CAST(rank AS BIGINT) AS rank, l_orderkey, l_extendedprice FROM (
-        |  SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice,
-        |         ROW_NUMBER() OVER (PARTITION BY l_suppkey
-        |           ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC, l_partkey ASC) AS rank
-        |  FROM lineitem) WHERE rank <= 3 ORDER BY l_suppkey, rank""".stripMargin,
-    "q_distinct" ->
-      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_salted_join" ->
-      """SELECT o_orderkey, o_orderstatus, status_name
-        |FROM orders
-        |JOIN (VALUES ('O', 'open'), ('F', 'finished'), ('P', 'pending'))
-        |  AS d(o_orderstatus, status_name) USING (o_orderstatus)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_bucket_join" ->
-      """SELECT o_orderpriority,
-        |       CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS n_orders,
-        |       COUNT(*) AS n_lines,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q_pivot_langs" ->
-      Seq("de", "en", "es", "fr", "zh").map { l =>
-        s"CAST(COALESCE(SUM(CASE WHEN lang = '$l' THEN LEN(STRING_SPLIT(text, ' ')) END), 0) AS BIGINT) AS $l"
-      }.mkString(
-        "SELECT source, ", ", ",
-        " FROM documents GROUP BY source ORDER BY source"),
-    "q_rollup_qty" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       COUNT(*) AS n_lines,
-        |       CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin,
-    "q_table_profile" ->
+  query("q_table_profile", Oracle(
       Seq("l_discount", "l_linenumber", "l_quantity", "l_tax").map { c =>
         s"""SELECT '$c' AS column_name,
            |  CAST(COUNT($c) AS BIGINT) AS n_rows,
@@ -416,5 +396,5 @@ object Relational {
            |  CAST(MAX($c) AS DOUBLE) AS max_v,
            |  CAST(SUM(CAST($c AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
            |FROM lineitem""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY column_name"))
+      }.mkString("", "\nUNION ALL\n", "\nORDER BY column_name")))(tableProfile)
 }

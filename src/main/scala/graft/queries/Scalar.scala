@@ -19,9 +19,7 @@ import graft.Tables
   *   - `conv` uppercases hex; reference `to_base` is lowercase
   *     (transform.rs:5861-5888) → `lower(conv(...))`.
   */
-object Scalar {
-  type Q = (SparkSession, String) => DataFrame
-
+object Scalar extends QueryFamily {
   /** concat / case / trim / replace modes / split / pad / substring over part
     * names — the reference's string pipeline (transform.rs:1996-2373). */
   def stringOps(spark: SparkSession, dir: String): DataFrame =
@@ -40,6 +38,20 @@ object Scalar {
         substring(col("p_type"), 1, 5).as("type_prefix"),
         length(col("p_name")).cast(LongType).as("name_len"))
       .orderBy("p_partkey")
+  query("q_string_ops", Oracle(
+      """SELECT p_partkey,
+        |       p_brand || '|' || p_type AS brand_type,
+        |       UPPER(p_name) AS name_upper,
+        |       LOWER(p_type) AS type_lower,
+        |       TRIM(p_name) AS name_trim,
+        |       REPLACE(p_name, ' ', '_') AS name_underscored,
+        |       REGEXP_REPLACE(p_name, '[aeiou]', '*', 'g') AS name_devoweled,
+        |       STRING_SPLIT(p_name, ' ')[1] AS first_word,
+        |       LPAD(p_brand, 12, '0') AS brand_padded,
+        |       RPAD(p_brand, 12, '.') AS brand_rpadded,
+        |       SUBSTRING(p_type, 1, 5) AS type_prefix,
+        |       CAST(LENGTH(p_name) AS BIGINT) AS name_len
+        |FROM part ORDER BY p_partkey""".stripMargin))(stringOps)
 
   /** + - * / round to_base abs mod sqrt — arithmetic per the reference's
     * numeric ops (transform.rs:2375-2574). Per-row double math is IEEE-exact;
@@ -68,6 +80,19 @@ object Scalar {
         sqrt(col("l_extendedprice")).as("sqrt_res"))
       .orderBy("l_orderkey", "linenumber", "add_res", "sub_res")
   }
+  query("q_math_ops", Oracle(
+      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS linenumber,
+        |       l_quantity + l_discount AS add_res,
+        |       l_extendedprice - l_quantity AS sub_res,
+        |       l_quantity * l_discount AS mul_res,
+        |       l_extendedprice / l_quantity AS div_res,
+        |       CAST(ROUND(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(l_discount AS DECIMAL(18,4)), 2) AS DOUBLE) AS round_res,
+        |       LOWER(TO_BASE(l_partkey, 16)) AS hex_partkey,
+        |       ABS(l_quantity - 25.0) AS abs_res,
+        |       l_orderkey % 7 AS mod_res,
+        |       SQRT(l_extendedprice) AS sqrt_res
+        |FROM lineitem WHERE l_orderkey % 4 = 1
+        |ORDER BY l_orderkey, linenumber, add_res, sub_res""".stripMargin))(mathOps)
 
   /** date_format / to_unixtime / extract / date_trunc / datediff over event
     * timestamps — the reference's chrono pipeline (transform.rs:2576-2731)
@@ -86,6 +111,18 @@ object Scalar {
         unix_timestamp(col("ts").cast(TimestampType)).as("unix_s"),
         unix_millis(col("ts").cast(TimestampType)).as("unix_ms"))
       .orderBy("event_id")
+  query("q_date_ops", Oracle(
+      """SELECT event_id,
+        |       STRFTIME(ts, '%Y-%m-%d %H:%M:%S') AS ts_formatted,
+        |       STRFTIME(ts, '%Y/%m/%d') AS ts_slash,
+        |       CAST(YEAR(ts) AS BIGINT) AS ts_year,
+        |       CAST(MONTH(ts) AS BIGINT) AS ts_month,
+        |       CAST(DAY(ts) AS BIGINT) AS ts_day,
+        |       CAST(HOUR(ts) AS BIGINT) AS ts_hour,
+        |       STRFTIME(DATE_TRUNC('hour', ts), '%Y-%m-%d %H:%M:%S') AS ts_hour_bucket,
+        |       EPOCH_MS(ts) // 1000 AS unix_s,
+        |       EPOCH_MS(ts) AS unix_ms
+        |FROM events ORDER BY event_id""".stripMargin))(dateOps)
 
   /** JSON path extraction (`get`, get_json_object ↔ json_extract_string) over
     * the events.props JSON column. */
@@ -97,57 +134,10 @@ object Scalar {
         when(get_json_object(col("props"), "$.k").cast(LongType) > 50, "high")
           .otherwise("low").as("k_bucket"))
       .orderBy("event_id")
-
-  val queries: Map[String, Q] = Map(
-    "q_string_ops" -> (stringOps _),
-    "q_math_ops"   -> (mathOps _),
-    "q_date_ops"   -> (dateOps _),
-    "q_json_ops"   -> (jsonOps _))
-
-  val oracles: Map[String, String] = Map(
-    "q_string_ops" ->
-      """SELECT p_partkey,
-        |       p_brand || '|' || p_type AS brand_type,
-        |       UPPER(p_name) AS name_upper,
-        |       LOWER(p_type) AS type_lower,
-        |       TRIM(p_name) AS name_trim,
-        |       REPLACE(p_name, ' ', '_') AS name_underscored,
-        |       REGEXP_REPLACE(p_name, '[aeiou]', '*', 'g') AS name_devoweled,
-        |       STRING_SPLIT(p_name, ' ')[1] AS first_word,
-        |       LPAD(p_brand, 12, '0') AS brand_padded,
-        |       RPAD(p_brand, 12, '.') AS brand_rpadded,
-        |       SUBSTRING(p_type, 1, 5) AS type_prefix,
-        |       CAST(LENGTH(p_name) AS BIGINT) AS name_len
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_math_ops" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS linenumber,
-        |       l_quantity + l_discount AS add_res,
-        |       l_extendedprice - l_quantity AS sub_res,
-        |       l_quantity * l_discount AS mul_res,
-        |       l_extendedprice / l_quantity AS div_res,
-        |       CAST(ROUND(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(l_discount AS DECIMAL(18,4)), 2) AS DOUBLE) AS round_res,
-        |       LOWER(TO_BASE(l_partkey, 16)) AS hex_partkey,
-        |       ABS(l_quantity - 25.0) AS abs_res,
-        |       l_orderkey % 7 AS mod_res,
-        |       SQRT(l_extendedprice) AS sqrt_res
-        |FROM lineitem WHERE l_orderkey % 4 = 1
-        |ORDER BY l_orderkey, linenumber, add_res, sub_res""".stripMargin,
-    "q_date_ops" ->
-      """SELECT event_id,
-        |       STRFTIME(ts, '%Y-%m-%d %H:%M:%S') AS ts_formatted,
-        |       STRFTIME(ts, '%Y/%m/%d') AS ts_slash,
-        |       CAST(YEAR(ts) AS BIGINT) AS ts_year,
-        |       CAST(MONTH(ts) AS BIGINT) AS ts_month,
-        |       CAST(DAY(ts) AS BIGINT) AS ts_day,
-        |       CAST(HOUR(ts) AS BIGINT) AS ts_hour,
-        |       STRFTIME(DATE_TRUNC('hour', ts), '%Y-%m-%d %H:%M:%S') AS ts_hour_bucket,
-        |       EPOCH_MS(ts) // 1000 AS unix_s,
-        |       EPOCH_MS(ts) AS unix_ms
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_json_ops" ->
+  query("q_json_ops", Oracle(
       """SELECT event_id,
         |       CAST(JSON_EXTRACT_STRING(props, '$.k') AS BIGINT) AS k_value,
         |       CASE WHEN CAST(JSON_EXTRACT_STRING(props, '$.k') AS BIGINT) > 50
         |            THEN 'high' ELSE 'low' END AS k_bucket
-        |FROM events ORDER BY event_id""".stripMargin)
+        |FROM events ORDER BY event_id""".stripMargin))(jsonOps)
 }

@@ -1252,14 +1252,21 @@ object ExprCompiler {
     val items = scala.collection.mutable.LinkedHashMap.empty[Int, PNode]
     var max: Int = -1
   }
-  private final case class PLeaf(ce: CE) extends PNode
+  /** `absentable`: an object member holding `ce` is left out where `ce` is
+    * missing, not written as null. */
+  private final case class PLeaf(ce: CE, absentable: Boolean = false) extends PNode
 
   private def materializeNode(n: PNode): CE = n match {
-    case PLeaf(ce) => ce
+    case PLeaf(ce, _) => ce
     case o: ONode =>
-      val fs = o.fields.toSeq.map { case (k, c) => k -> materializeNode(c) }
-      CE(struct(fs.map { case (k, ce) => ce.valueOrNull.as(k) }: _*), lit(false),
-        StructType(fs.map { case (k, ce) => StructField(k, ce.tpe) }))
+      val (v, t) = objectOf(o.fields.toSeq.map { case (k, c) =>
+        val ce = materializeNode(c)
+        member(k, ce.copy(value = ce.valueOrNull), c match {
+          case PLeaf(_, absentable) => absentable
+          case _ => false
+        })
+      })
+      CE(v, lit(false), t)
     case a: ANode =>
       val items = (0 to a.max).map(i => a.items.get(i).map(materializeNode))
       val ts = items.flatten.map(_.tpe).distinct
@@ -1302,7 +1309,10 @@ object ExprCompiler {
       throw RmError("ExprError", errPath, "path conflicts with non-object value")
     def insert(node: PNode, toks: Seq[PToken], ce: CE): Unit = (node, toks.head) match {
       case (o: ONode, PKey(k)) =>
-        if (toks.size == 1) o.fields(k) = PLeaf(ce)
+        // a picked value that can be missing where the base object is
+        // present (a tagged field, an array index, a variant key) is an
+        // absentable member: the key is left out where it is missing
+        if (toks.size == 1) o.fields(k) = PLeaf(ce, absentable = !(ce.missing eq base.missing))
         else {
           val wantArr = toks(1).isInstanceOf[PIdx]
           val entry = o.fields.getOrElseUpdate(k, if (wantArr) new ANode else new ONode)

@@ -285,7 +285,7 @@ object StreamOps {
       .filter(col("lm_score") >= minScore)
 
   /** Streaming DSIR gate — the deployment form of
-    * [[graft.queries.Pipeline.dsirSelect]]'s scoring (Xie et al. 2023):
+    * [[graft.queries.QualityQueries.dsirSelect]]'s scoring (Xie et al. 2023):
     * each incoming document scores its hashed-bigram log importance
     * weight against the batch-trained [[graft.functions.DsirModel]]
     * (one native tokenize-md5-lookup pass per row, model in the plan)
@@ -316,7 +316,7 @@ object StreamOps {
       .filter(col("keep"))
 
   /** Streaming learned-BPE token-budget gate — the deployment form of
-    * [[graft.queries.Pipeline.bpeEncode]]: each incoming document is
+    * [[graft.queries.TokenQueries.bpeEncode]]: each incoming document is
     * counted with the batch-trained merge table (one
     * [[graft.functions.BpeEncodeCount]] codegen pass, the model a
     * plan-borne broadcast object — load it with
@@ -331,7 +331,7 @@ object StreamOps {
       .filter(col("n_bpe") <= maxTokens)
 
   /** Streaming character-entropy gate — the deployment form of
-    * [[graft.queries.Pipeline.charEntropy]]: per row, one native
+    * [[graft.queries.QualityQueries.charEntropy]]: per row, one native
     * histogram pass ([[graft.functions.CharEntropyFx]]) derives the
     * Shannon entropy in nats and rows below `minEntropy` drop — the
     * cheap repeated-character/padding/junk filter. Empty documents
@@ -341,11 +341,11 @@ object StreamOps {
   def entropyGate(docs: DataFrame, textCol: String,
       minEntropy: Double): DataFrame =
     docs.withColumn("entropy",
-        graft.queries.Pipeline.entropyNats(col(textCol)))
+        graft.queries.QualityQueries.entropyNats(col(textCol)))
       .filter(col("entropy") >= minEntropy)
 
   /** Streaming embedding-drift gate — the deployment form of
-    * [[graft.queries.Pipeline.pcaOutliers]]: the batch-trained
+    * [[graft.queries.AnnQueries.pcaOutliers]]: the batch-trained
     * [[graft.operators.Pca.PcaModel]] (2·dims+1 doubles) bakes into the
     * plan, each incoming vector's fixed-point projection onto the
     * corpus's dominant direction is a narrow integer-chain column, and
@@ -372,7 +372,7 @@ object StreamOps {
   }
 
   /** Streaming lexicon (badword/topic) gate — the deployment form of
-    * [[graft.queries.Pipeline.lexiconHits]]: one Aho–Corasick pass per
+    * [[graft.queries.QualityQueries.lexiconHits]]: one Aho–Corasick pass per
     * incoming document ([[graft.functions.LexiconHits]], the automaton a
     * plan-borne broadcast object) counts total lexicon occurrences and
     * rows over the `maxHits` budget drop (0 = the strict C4 rule: any
@@ -386,7 +386,7 @@ object StreamOps {
       .filter(col("lex_hits") <= maxHits)
 
   /** Streaming curation gate — the deployment form of the per-document
-    * stages of [[graft.queries.Pipeline.curationPipeline]], composed as
+    * stages of [[graft.queries.QualityQueries.curationPipeline]], composed as
     * ONE stateless chain: strict lexicon gate (any hit rejects — the C4
     * badword rule, one Aho–Corasick pass) → character-entropy gate
     * (rows below `minEntropy` nats drop) → within-document
@@ -407,7 +407,7 @@ object StreamOps {
       chunkW: Int, merges: graft.functions.BpeMerges): DataFrame =
     docs
       .filter(graft.functions.LexiconHits.total(col(textCol), lexicon) === 0L)
-      .filter(graft.queries.Pipeline.entropyNats(col(textCol)) >= lit(minEntropy))
+      .filter(graft.queries.QualityQueries.entropyNats(col(textCol)) >= lit(minEntropy))
       .withColumn("text_clean",
         graft.functions.SelfDedupChunks.dedup(col(textCol), chunkW))
       .withColumn("n_words_clean",
@@ -416,7 +416,7 @@ object StreamOps {
         graft.functions.BpeEncodeCount.count(col("text_clean"), merges))
 
   /** Streaming Naive-Bayes classifier gate — the deployment form of
-    * [[graft.queries.Pipeline.nbClassify]] (the classifier-based
+    * [[graft.queries.QualityQueries.nbClassify]] (the classifier-based
     * data-selection family): each incoming document is argmax-scored
     * against the batch-trained dense [[graft.functions.NbModel]] (one
     * native tokenize-md5-argmax pass per row, the C·B fixed-point model
@@ -439,9 +439,9 @@ object StreamOps {
   }
 
   /** Streaming quality-ensemble gate — the deployment form of
-    * [[graft.queries.Pipeline.qualityEnsemble]]: each incoming document
+    * [[graft.queries.QualityQueries.qualityEnsemble]]: each incoming document
     * computes the SAME three integer signals as the batch query (the
-    * shared [[graft.queries.Pipeline.ensembleSignals]] Column trees),
+    * shared [[graft.queries.QualityQueries.ensembleSignals]] Column trees),
     * ranks each against its batch-trained [[graft.functions.RankTable]]
     * (one native binary search per row, the histogram riding in the
     * plan), fuses ranks in the batch's pinned order, and drops rows
@@ -457,7 +457,7 @@ object StreamOps {
     require(Set("s_tokens", "s_ttr", "s_mwl").subsetOf(tables.keySet),
       s"ensembleGate needs rank tables keyed s_tokens, s_ttr, s_mwl " +
         s"(the ensembleSignals names); got ${tables.keySet.mkString(", ")}")
-    val sigs = graft.queries.Pipeline
+    val sigs = graft.queries.QualityQueries
       .ensembleSignals(col(textCol), col(nCharsCol))
     val ranked = sigs.foldLeft(docs) { case (d, (n, c)) =>
       d.withColumn("r_" + n.stripPrefix("s_"),
@@ -469,9 +469,9 @@ object StreamOps {
   }
 
   /** Streaming Gopher repetition gate — the deployment form of
-    * [[graft.queries.Pipeline.repetitionProfile]]: each incoming
+    * [[graft.queries.QualityQueries.repetitionProfile]]: each incoming
     * document computes the SAME nine repetition fractions (the shared
-    * [[graft.queries.Pipeline.repetitionSignals]] Column trees — all
+    * [[graft.queries.QualityQueries.repetitionSignals]] Column trees — all
     * doc-local [[graft.functions.GramStats]] natives) and drops when
     * ANY signal exceeds its threshold, the MassiveText §A1.1 rule with
     * the paper's published limits as defaults. Stateless, shuffle-free,
@@ -480,7 +480,7 @@ object StreamOps {
     * columns for the survivor rows. */
   def repetitionGate(docs: DataFrame, textCol: String, nCharsCol: String,
       maxFracs: Map[String, Double] = RepetitionLimits): DataFrame = {
-    val sigs = graft.queries.Pipeline
+    val sigs = graft.queries.QualityQueries
       .repetitionSignals(col(textCol), col(nCharsCol))
     val sigNames = sigs.map(_._1).toSet
     require(maxFracs.keySet.subsetOf(sigNames),
@@ -504,7 +504,7 @@ object StreamOps {
     "dup_9gram_frac" -> 0.11, "dup_10gram_frac" -> 0.10)
 
   /** Streaming per-source calibrated-quality gate — the deployment form
-    * of [[graft.queries.Pipeline.qualityCalibrated]]: each incoming
+    * of [[graft.queries.QualityQueries.qualityCalibrated]]: each incoming
     * document quantizes its quality score to the batch's 1e-6 fixed
     * point and ranks it against ITS SOURCE's batch-trained
     * [[graft.functions.RankTable]] ([[graft.functions.RankLookup
@@ -534,7 +534,7 @@ object StreamOps {
   }
 
   /** Streaming CCNet perplexity bucketing — the deployment form of
-    * [[graft.queries.Pipeline.perplexityBuckets]]: score each incoming
+    * [[graft.queries.QualityQueries.perplexityBuckets]]: score each incoming
     * document with the batch-trained pruned model (the [[lmGate]] native
     * probe) and assign head/middle/tail against PER-LANGUAGE thresholds
     * computed once from the batch profile ((lang → (q25, q75)) — a

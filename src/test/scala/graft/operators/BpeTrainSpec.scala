@@ -158,7 +158,7 @@ class BpeTrainSpec extends AnyFunSuite {
       .toFile.getAbsolutePath
     spark.conf.set("spark.graft.index.root", root)
     try {
-      val shared = graft.queries.Pipeline.sharedBpeModel(spark, dir)
+      val shared = graft.queries.SharedArtifacts.sharedBpeModel(spark, dir)
       // exactly one artifact written under the root, marker-certified
       val modelDirs = new java.io.File(s"$root/graft_bpe_model").listFiles()
       assert(modelDirs != null && modelDirs.length == 1,

@@ -81,9 +81,9 @@ class DedupCapSpec extends AnyFunSuite {
   }
 
   test("capped winnow pair query equals uncapped at test SF") {
-    val capped = graft.queries.Pipeline.winnowPairs(spark, dir)
+    val capped = graft.SparkEntry.queries("q_winnow_pairs")(spark, dir)
       .collect().map(_.toSeq).toSet
-    val uncapped = graft.queries.Pipeline.winnowPairsWith(spark, dir,
+    val uncapped = graft.queries.DedupQueries.winnowPairsWith(spark, dir,
         dfCap = Long.MaxValue)
       .collect().map(_.toSeq).toSet
     assert(capped == uncapped, "fp df cap must not change the verified pair set")

@@ -150,7 +150,7 @@ class IvfSpec extends AnyFunSuite {
       assert(!new java.io.File(s"$path/assignments").exists())
       // the shared-index queries follow the conf end to end: ivfRerank
       // trains + persists BOTH its indexes under the custom root
-      assert(graft.queries.Pipeline.ivfRerank(spark, dir).count() > 0)
+      assert(graft.queries.AnnQueries.ivfRerank(spark, dir).count() > 0)
       val ivfIdx = new java.io.File(s"$root/graft_ivf_index").listFiles()
       assert(ivfIdx != null && ivfIdx.nonEmpty, "centroids not under custom root")
       val int8Idx = new java.io.File(s"$root/graft_int8_index").listFiles()
@@ -159,7 +159,7 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("protoPrune drops exactly the ceil-fraction most-prototypical prefix per cluster") {
-    val rows = graft.queries.Pipeline.protoPrune(spark, dir).collect()
+    val rows = graft.queries.AnnQueries.protoPrune(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3),
         r.getBoolean(4)))
     assert(rows.length == emb.count())
@@ -193,7 +193,7 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("ivfSweep: recall monotone in nprobe; last row = ivfRecall micro-average") {
-    val sweep = graft.queries.Pipeline.ivfSweep(spark, dir).collect()
+    val sweep = graft.queries.AnnQueries.ivfSweep(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4)))
     assert(sweep.length == 3 && sweep.map(_._1).toSeq == sweep.map(_._1).sorted.toSeq)
@@ -204,7 +204,7 @@ class IvfSpec extends AnyFunSuite {
     assert(sweep.forall(r => r._4 <= r._3 && r._5 >= 0.0 && r._5 <= 1.0))
     // the sweep's served setting (its max nprobe) must agree with the
     // per-query q_ivf_recall audit micro-averaged
-    val rec = graft.queries.Pipeline.ivfRecall(spark, dir).collect()
+    val rec = graft.queries.AnnQueries.ivfRecall(spark, dir).collect()
       .map(r => (r.getLong(1), r.getLong(2)))
     val micro = rec.map(_._2).sum.toDouble / rec.map(_._1).sum
     assert(sweep.last._5 == micro,

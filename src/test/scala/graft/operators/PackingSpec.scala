@@ -75,7 +75,7 @@ class PackingSpec extends AnyFunSuite {
   }
 
   test("curriculum pack: the (block, offset) walk is a monotone quality schedule per shard") {
-    val out = graft.queries.Pipeline
+    val out = graft.queries.TokenQueries
       .curriculumPack(spark, "/root/testdata/sf0.001").collect()
       .map(r => (r.getString(1), r.getLong(4), r.getLong(5),
         r.getLong(2), r.getLong(0)))
@@ -91,7 +91,7 @@ class PackingSpec extends AnyFunSuite {
     }
     // determinism under order-key ties: composite (q_fx, doc_id) order
     // makes re-runs bit-identical row-for-row
-    val again = graft.queries.Pipeline
+    val again = graft.queries.TokenQueries
       .curriculumPack(spark, "/root/testdata/sf0.001").collect()
       .map(r => (r.getString(1), r.getLong(4), r.getLong(5),
         r.getLong(2), r.getLong(0)))

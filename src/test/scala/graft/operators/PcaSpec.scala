@@ -69,7 +69,7 @@ class PcaSpec extends AnyFunSuite {
   }
 
   test("pcaResidual: explained ratio is consistent with pcaPower and embeddingMoments") {
-    val res = graft.queries.Pipeline.pcaResidual(spark, dir).collect().head
+    val res = graft.queries.AnnQueries.pcaResidual(spark, dir).collect().head
     val (eig, trace, ratio) = (res.getDouble(0), res.getDouble(1), res.getDouble(2))
     assert(trace > 0.0 && eig > 0.0)
     // the top eigenvalue estimate can never exceed the total variance,
@@ -77,12 +77,12 @@ class PcaSpec extends AnyFunSuite {
     assert(ratio > 0.0 && ratio <= 1.0 + 1e-9, s"ratio $ratio")
     assert(ratio == eig / trace)
     // eigval agrees with the q_pca_power report column
-    val eigFromPower = graft.queries.Pipeline.pcaPower(spark, dir)
+    val eigFromPower = graft.queries.AnnQueries.pcaPower(spark, dir)
       .select("eigval").collect().head.getDouble(0)
     assert(eig == eigFromPower)
     // trace agrees with the moments variances re-summed via the same
     // fixed-point quantization
-    val trBrute = graft.queries.Pipeline.embeddingMoments(spark, dir)
+    val trBrute = graft.queries.AnnQueries.embeddingMoments(spark, dir)
       .select("variance").collect()
       .map(r => math.floor(r.getDouble(0) * 1e12).toLong).sum.toDouble / 1e12
     assert(trace == trBrute)

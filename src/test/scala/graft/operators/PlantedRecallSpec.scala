@@ -167,7 +167,7 @@ class PlantedRecallSpec extends AnyFunSuite {
     // audit itself, not in the index.
     val b = Ivf.base(planted, "vec_id", "embedding")
     val cents = Ivf.centroids(b, nlist = Clusters, iters = 2)
-    val rows = graft.queries.Pipeline
+    val rows = graft.queries.AnnQueries
       .ivfRecallWith(b, cents, NQueries, K, nprobe = Clusters)
       .collect()
     assert(rows.length == NQueries)
@@ -186,7 +186,7 @@ class PlantedRecallSpec extends AnyFunSuite {
     // index it claims to measure.
     val b = Ivf.base(planted, "vec_id", "embedding")
     val cents = Ivf.centroids(b, nlist = Clusters, iters = 2)
-    val rows = graft.queries.Pipeline
+    val rows = graft.queries.AnnQueries
       .ivfRecallWith(b, cents, NQueries, K, nprobe = 4)
       .collect()
     assert(rows.length == NQueries)

@@ -60,7 +60,7 @@ class ArtifactProtocolSpec extends AnyFunSuite {
 
   test("first call writes a certified artifact; read-back is bit-identical") {
     withTempRoot { root =>
-      val first = shingleSet(Pipeline.sharedShingles(spark, dir))
+      val first = shingleSet(SharedArtifacts.sharedShingles(spark, dir))
       // the artifact landed under the fresh root with its certificate
       val fam = root.resolve("graft_shingle_table")
       assert(java.nio.file.Files.isDirectory(fam), "artifact family dir must exist")
@@ -71,7 +71,7 @@ class ArtifactProtocolSpec extends AnyFunSuite {
         "artifact must carry the job-success certificate")
       // a second call (artifact-read path) returns the identical relation
       // and is counted as a hit, with no fallback of either kind
-      val (second, counted) = outcomes(shingleSet(Pipeline.sharedShingles(spark, dir)))
+      val (second, counted) = outcomes(shingleSet(SharedArtifacts.sharedShingles(spark, dir)))
       assert(second == first, "read-back must equal the built table")
       assert(counted.getOrElse("hit", 0L) > 0L &&
         !counted.contains("read_fallback") && !counted.contains("commit_failed"),
@@ -82,7 +82,7 @@ class ArtifactProtocolSpec extends AnyFunSuite {
 
   test("a decertified artifact is rebuilt, not read as a husk") {
     withTempRoot { root =>
-      val first = shingleSet(Pipeline.sharedShingles(spark, dir))
+      val first = shingleSet(SharedArtifacts.sharedShingles(spark, dir))
       import scala.jdk.CollectionConverters._
       val art = java.nio.file.Files
         .list(root.resolve("graft_shingle_table")).iterator().asScala.toSeq.head
@@ -185,7 +185,7 @@ class ArtifactProtocolSpec extends AnyFunSuite {
       val orphan = fam.resolve(".deadbeef.inprogress-999-1")
       spark.range(3).coalesce(1).write.parquet(orphan.toString)
       // the real protocol is unaffected — the final path commits fresh
-      val first = shingleSet(Pipeline.sharedShingles(spark, dir))
+      val first = shingleSet(SharedArtifacts.sharedShingles(spark, dir))
       assert(first.nonEmpty)
       // within the grace window the orphan is kept (it could be a live
       // in-flight writer)
@@ -205,13 +205,13 @@ class ArtifactProtocolSpec extends AnyFunSuite {
         s"aged temp must be deleted, got $late")
       assert(!java.nio.file.Files.exists(orphan))
       // the committed artifact survived both prunes (live stamp)
-      assert(shingleSet(Pipeline.sharedShingles(spark, dir)) == first)
+      assert(shingleSet(SharedArtifacts.sharedShingles(spark, dir)) == first)
     }
   }
 
   test("prune sweeps a temp nested inside a committed artifact by a rename race, leaving the artifact intact") {
     withTempRoot { root =>
-      val first = shingleSet(Pipeline.sharedShingles(spark, dir))
+      val first = shingleSet(SharedArtifacts.sharedShingles(spark, dir))
       import scala.jdk.CollectionConverters._
       val art = java.nio.file.Files
         .list(root.resolve("graft_shingle_table")).iterator().asScala.toSeq.head
@@ -230,7 +230,7 @@ class ArtifactProtocolSpec extends AnyFunSuite {
       assert(dec.exists(d => d.path.endsWith(art.getFileName.toString) &&
         d.action == "keep"))
       assert(graft.operators.Artifacts.markerExists(spark, art.toString))
-      assert(shingleSet(Pipeline.sharedShingles(spark, dir)) == first)
+      assert(shingleSet(SharedArtifacts.sharedShingles(spark, dir)) == first)
     }
   }
 
@@ -239,8 +239,8 @@ class ArtifactProtocolSpec extends AnyFunSuite {
       // touch a representative set of families: documents-table ones via
       // the sweep (shingles + sweep pairs + hot stats), embeddings ones
       // via the PQ serving path (ivf centroids + int8 index + pq books)
-      Pipeline.dedupSweep(spark, dir).collect()
-      Pipeline.queries("q_pq_rerank")(spark, dir).collect()
+      DedupQueries.dedupSweep(spark, dir).collect()
+      graft.SparkEntry.queries("q_pq_rerank")(spark, dir).collect()
       import scala.jdk.CollectionConverters._
       val metas = for {
         fam <- java.nio.file.Files.list(root).iterator().asScala.toSeq
@@ -251,16 +251,41 @@ class ArtifactProtocolSpec extends AnyFunSuite {
       assert(metas.size >= 5, s"expected several committed artifacts, got ${metas.size}")
       metas.foreach { m =>
         val fam = m("family")
-        assert(Pipeline.liveArtifactKeys.get(fam).contains(m("key")),
+        assert(SharedArtifacts.liveArtifactKeys.get(fam).contains(m("key")),
           s"family $fam wrote key ${m("key")} but liveArtifactKeys says " +
-            s"${Pipeline.liveArtifactKeys.get(fam)} — writer and reaper drifted")
+            s"${SharedArtifacts.liveArtifactKeys.get(fam)} — writer and reaper drifted")
       }
     }
   }
 
+  test("liveArtifactKeys names all 19 families with their exact key strings") {
+    // A moved or renamed format constant must not re-key an artifact: the
+    // old-key artifacts would be orphaned, rebuilt, and reaped by prune.
+    assert(SharedArtifacts.liveArtifactKeys == Map(
+      "graft_shingle_table" -> "n3:fmt1",
+      "graft_winnow_fps" -> "n3w4:fmt1",
+      "graft_source_grams" -> "n5:fmt1",
+      "graft_lm_scores" -> "fmt1",
+      "graft_nb_holdout" -> "b1024:fmt1",
+      "graft_lm_model" -> "topk1048576:fmt1",
+      "graft_dsir_scores" -> "b4096:fmt1",
+      "graft_minhash_index" -> "n3k64b16:fmt1",
+      "graft_winnow_index" -> "n3w4:fmt1",
+      "graft_simhash" -> "b60:fmt1",
+      "graft_span_rows" -> "n5:fmt1",
+      "graft_dup_clusters" -> "lsh-n3k64b16-t0.8:fmt1",
+      "graft_sweep_pairs" -> "n3:fmt1:cap1000:floor0.5",
+      "graft_hot_stats" -> "n3:fmt1:cap1000",
+      "graft_ivf_index" -> "nlist10:iters2:fmt5",
+      "graft_int8_index" -> "int8:fmt1",
+      "graft_pq_books" -> "m8:k16:i1:fmt5",
+      "graft_pca_model" -> "d64:i3:fmt3",
+      "graft_bpe_model" -> "m40:w4096:fmt2"))
+  }
+
   test("prune reaps a dead-KEY artifact (format bump) and keeps the current-key one") {
     withTempRoot { root =>
-      val live = shingleSet(Pipeline.sharedShingles(spark, dir))
+      val live = shingleSet(SharedArtifacts.sharedShingles(spark, dir))
       // simulate the pre-bump orphan: a certified artifact whose meta
       // carries a stale format key under the same live data stamp
       val fam = root.resolve("graft_shingle_table")
@@ -278,20 +303,20 @@ class ArtifactProtocolSpec extends AnyFunSuite {
       ageRecursively(stale, System.currentTimeMillis() - 2L * 60 * 60 * 1000)
       val dec = graft.operators.Artifacts.prune(spark, root.toString,
         graceMs = 60L * 60 * 1000, dryRun = false,
-        liveKeys = Pipeline.liveArtifactKeys)
+        liveKeys = SharedArtifacts.liveArtifactKeys)
       assert(dec.exists(d => d.path.endsWith("00staleformat00") &&
         d.action == "delete" && d.reason.contains("dead format key")),
         s"stale-format artifact must be reaped, got $dec")
       assert(!java.nio.file.Files.exists(stale))
       // the current-key artifact survives and still serves
       assert(dec.exists(d => d.action == "keep" && d.reason == "live stamp"))
-      assert(shingleSet(Pipeline.sharedShingles(spark, dir)) == live)
+      assert(shingleSet(SharedArtifacts.sharedShingles(spark, dir)) == live)
     }
   }
 
   test("prune --apply reaps an IVF index committed under the pre-unification path and key") {
     withTempRoot { root =>
-      val live = Pipeline.queries("q_cluster_sizes")(spark, dir).collect().toSeq
+      val live = graft.SparkEntry.queries("q_cluster_sizes")(spark, dir).collect().toSeq
       import scala.jdk.CollectionConverters._
       val fam = root.resolve("graft_ivf_index")
       val current = java.nio.file.Files.list(fam).iterator().asScala.toSeq.head
@@ -319,14 +344,14 @@ class ArtifactProtocolSpec extends AnyFunSuite {
       assert(out.contains("dead format key"), out)
       assert(java.nio.file.Files.exists(current.resolve("centroids").resolve("_SUCCESS")),
         s"the current-key index must be kept:\n$out")
-      assert(Pipeline.queries("q_cluster_sizes")(spark, dir).collect().toSeq == live)
+      assert(graft.SparkEntry.queries("q_cluster_sizes")(spark, dir).collect().toSeq == live)
     }
   }
 
   test("PruneArtifacts --keep-dead-keys retains a stale-format artifact; tableStamp tracks rewrites") {
     withTempRoot { root =>
       spark.range(1).count()
-      Pipeline.sharedShingles(spark, dir).collect()
+      SharedArtifacts.sharedShingles(spark, dir).collect()
       import scala.jdk.CollectionConverters._
       val fam = root.resolve("graft_shingle_table")
       val art = java.nio.file.Files.list(fam).iterator().asScala.toSeq.head
@@ -348,7 +373,7 @@ class ArtifactProtocolSpec extends AnyFunSuite {
       assert(c1 == 0 && java.nio.file.Files.exists(stale),
         s"--keep-dead-keys must retain the stale-key artifact:\n$o1")
       // without the opt-out the reaper takes it (the default CLI path
-      // feeds Pipeline.liveArtifactKeys)
+      // feeds SharedArtifacts.liveArtifactKeys)
       val (c2, o2) = run(root.toString, "--apply")
       assert(c2 == 0 && !java.nio.file.Files.exists(stale),
         s"default prune must reap the stale-key artifact:\n$o2")
@@ -445,7 +470,7 @@ class ArtifactProtocolSpec extends AnyFunSuite {
             java.nio.file.Files.createDirectories(t)
           else java.nio.file.Files.copy(p, t)
         } finally walk.close()
-        val expected = shingleSet(Pipeline.sharedShingles(spark, ds.toString))
+        val expected = shingleSet(SharedArtifacts.sharedShingles(spark, ds.toString))
         // rewrite: same bytes, bumped mtime ⇒ a NEW data stamp
         val files = {
           val w = java.nio.file.Files.walk(dst)
@@ -456,7 +481,7 @@ class ArtifactProtocolSpec extends AnyFunSuite {
         files.foreach(f => java.nio.file.Files.setLastModifiedTime(f,
           java.nio.file.attribute.FileTime.fromMillis(
             java.nio.file.Files.getLastModifiedTime(f).toMillis + 7000)))
-        assert(shingleSet(Pipeline.sharedShingles(spark, ds.toString)) == expected)
+        assert(shingleSet(SharedArtifacts.sharedShingles(spark, ds.toString)) == expected)
         val fam = root.resolve("graft_shingle_table")
         def children = java.nio.file.Files.list(fam).iterator().asScala.toSeq
         assert(children.size == 2, s"two stamped artifacts expected, got $children")
@@ -471,7 +496,7 @@ class ArtifactProtocolSpec extends AnyFunSuite {
         assert(applied.count(_.action == "delete") == 1, s"got $applied")
         assert(applied.count(_.action == "keep") == 1, s"got $applied")
         assert(children.size == 1, "exactly the live artifact must remain")
-        assert(shingleSet(Pipeline.sharedShingles(spark, ds.toString)) == expected)
+        assert(shingleSet(SharedArtifacts.sharedShingles(spark, ds.toString)) == expected)
       } finally {
         val w = java.nio.file.Files.walk(ds)
         try w.iterator().asScala.toSeq.reverse
@@ -500,13 +525,13 @@ class ArtifactProtocolSpec extends AnyFunSuite {
       // first call commits the artifact; the compared call reads it back
       val families: Seq[(String, () => org.apache.spark.sql.DataFrame,
           () => org.apache.spark.sql.DataFrame)] = Seq(
-        ("shingles", () => Pipeline.sharedShingles(spark, dir),
+        ("shingles", () => SharedArtifacts.sharedShingles(spark, dir),
           () => Dedup.shingleTable(docs, "text", "doc_id", n = 3)),
-        ("winnow fps", () => Pipeline.sharedWinnowFps(spark, dir),
+        ("winnow fps", () => SharedArtifacts.sharedWinnowFps(spark, dir),
           () => TA.winnowFingerprints(docs, "text", "doc_id", n = 3, w = 4)),
-        ("source grams", () => Pipeline.sharedSourceGrams(spark, dir),
-          () => Pipeline.sourceGrams(docs)),
-        ("span rows", () => Pipeline.sharedSpanRows(spark, dir),
+        ("source grams", () => SharedArtifacts.sharedSourceGrams(spark, dir),
+          () => SharedArtifacts.sourceGrams(docs)),
+        ("span rows", () => SharedArtifacts.sharedSpanRows(spark, dir),
           () => Dedup.spanPositionRows(docs, "text", "doc_id", n = 5)))
       families.foreach { case (name, shared, fresh) =>
         shared() // ensure committed
@@ -559,13 +584,13 @@ class ArtifactProtocolSpec extends AnyFunSuite {
   test("artifact-backed sweep: later calls read the persisted pair table, never retokenize") {
     withTempRoot { _ =>
       // first call builds + commits graft_sweep_pairs / graft_hot_stats
-      assert(Pipeline.dedupSweep(spark, dir).collect().nonEmpty)
+      assert(DedupQueries.dedupSweep(spark, dir).collect().nonEmpty)
       // the second call's pair table must be a parquet scan of the
       // artifact with NO shingle tokenization or candidate self-join —
       // the whole point of persisting the sweep's dominant cost.
       // (dedupSweep itself localCheckpoints the pair table, which
       // truncates the visible lineage, so pin the pre-checkpoint read.)
-      val plan = Pipeline.sweepPairs(spark, dir)
+      val plan = SharedArtifacts.sweepPairs(spark, dir)
         .queryExecution.executedPlan.toString
       assert(plan.contains("graft_sweep_pairs"),
         s"expected a parquet scan of the pair artifact in:\n$plan")
@@ -582,8 +607,8 @@ class ArtifactProtocolSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().toSeq.map(_.toString).sorted
     val viaArtifact = withTempRoot { _ =>
-      (rows(Pipeline.dedupSweep(spark, dir)),
-        rows(Pipeline.queries("q_pq_rerank")(spark, dir)))
+      (rows(DedupQueries.dedupSweep(spark, dir)),
+        rows(graft.SparkEntry.queries("q_pq_rerank")(spark, dir)))
     }
     val prev = spark.conf.getOption("spark.graft.index.root")
     // /dev/null/... fails every create/mkdir even for root, unlike a
@@ -591,9 +616,9 @@ class ArtifactProtocolSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.index.root", "/dev/null/graft_broken_root")
     try {
       val (_, counted) = outcomes {
-        assert(rows(Pipeline.dedupSweep(spark, dir)) == viaArtifact._1,
+        assert(rows(DedupQueries.dedupSweep(spark, dir)) == viaArtifact._1,
           "sweep fallback must equal the artifact-backed sweep")
-        assert(rows(Pipeline.queries("q_pq_rerank")(spark, dir)) == viaArtifact._2,
+        assert(rows(graft.SparkEntry.queries("q_pq_rerank")(spark, dir)) == viaArtifact._2,
           "PQ fallback must equal the artifact-backed rerank")
       }
       assert(counted.getOrElse("commit_failed", 0L) > 0L,
@@ -609,7 +634,7 @@ class ArtifactProtocolSpec extends AnyFunSuite {
       // a dir whose table files can't be walked fingerprints as stamp 0
       val ghost = "/nonexistent/graft_spec_ghost"
       val (e, counted) = outcomes(intercept[Exception] {
-        Pipeline.sharedShingles(spark, ghost).collect()
+        SharedArtifacts.sharedShingles(spark, ghost).collect()
       })
       assert(counted.getOrElse("unstamped", 0L) > 0L,
         s"a stamp-0 call must be counted, counted $counted")

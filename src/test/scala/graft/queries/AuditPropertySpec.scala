@@ -15,7 +15,7 @@ class AuditPropertySpec extends AnyFunSuite {
 
   test("vocab growth: conservation, monotonicity, and mass totals") {
     import org.apache.spark.sql.functions._
-    val rows = Pipeline.vocabGrowth(spark, dir)
+    val rows = TokenQueries.vocabGrowth(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
     assert(rows.nonEmpty &&
@@ -46,7 +46,7 @@ class AuditPropertySpec extends AnyFunSuite {
 
   test("zipf slope: negative on the real corpus, exact on a planted power law") {
     import spark.implicits._
-    val row = Pipeline.zipfSlope(spark, dir).collect().head
+    val row = TokenQueries.zipfSlope(spark, dir).collect().head
     assert(row.getLong(0) > 1, "needs at least two ranked words")
     assert(row.getDouble(1) < 0.0,
       s"word frequencies must decay with rank (slope ${row.getDouble(1)})")
@@ -63,7 +63,7 @@ class AuditPropertySpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("zipf_spec")
     try {
       docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val fit = Pipeline.zipfSlope(spark, tmp.toString).collect().head
+      val fit = TokenQueries.zipfSlope(spark, tmp.toString).collect().head
       assert(fit.getLong(0) == n)
       assert(math.abs(fit.getDouble(1) - (-1.0)) < 0.01,
         s"planted 1/r law must fit slope ~ -1, got ${fit.getDouble(1)}")
@@ -77,9 +77,9 @@ class AuditPropertySpec extends AnyFunSuite {
   }
 
   test("reliability diagram: buckets partition the holdout; counts conserve") {
-    val rows = Pipeline.nbReliability(spark, dir)
+    val rows = QualityQueries.nbReliability(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val cls = Pipeline.nbClassify(spark, dir).collect()
+    val cls = QualityQueries.nbClassify(spark, dir).collect()
     assert(rows.map(_._2).sum == cls.length,
       "decile buckets must partition the scored holdout exactly")
     assert(rows.map(_._3).sum == cls.count(_.getBoolean(3)),
@@ -88,7 +88,7 @@ class AuditPropertySpec extends AnyFunSuite {
   }
 
   test("quality agreement: shares sum to 1, kappa = 1 on self-agreement") {
-    val rows = Pipeline.qualityAgreement(spark, dir).collect()
+    val rows = QualityQueries.qualityAgreement(spark, dir).collect()
     val shareSum = rows.map(_.getDouble(3)).sum
     assert(math.abs(shareSum - 1.0) < 1e-9,
       s"cell shares must partition the corpus (got $shareSum)")
@@ -99,7 +99,7 @@ class AuditPropertySpec extends AnyFunSuite {
   }
 
   test("label separation: symmetric-complete pair table, positive margins") {
-    val rows = Pipeline.labelSeparation(spark, dir).collect()
+    val rows = AnnQueries.labelSeparation(spark, dir).collect()
     val labels = rows.flatMap(r => Seq(r.getInt(0), r.getInt(1))).distinct
     val k = labels.length
     assert(rows.length == k * (k - 1) / 2,
@@ -113,9 +113,9 @@ class AuditPropertySpec extends AnyFunSuite {
   }
 
   test("cluster histogram: document mass equals the cluster map's membership") {
-    val hist = Pipeline.clusterHistogram(spark, dir)
+    val hist = DedupQueries.clusterHistogram(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val members = Pipeline.dedupClusters(spark, dir).count()
+    val members = DedupQueries.dedupClusters(spark, dir).count()
     assert(hist.map(_._3).sum == members,
       "histogram doc mass must equal the cluster map's member count")
     assert(hist.forall(h => h._1 >= 2),

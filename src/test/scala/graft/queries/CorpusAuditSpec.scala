@@ -53,7 +53,7 @@ class CorpusAuditSpec extends AnyFunSuite {
   }
 
   test("q_gram_novelty equals the driver-side brute force on sf0.001") {
-    val got = Pipeline.gramNovelty(spark, dir).collect()
+    val got = TokenQueries.gramNovelty(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val raw = graft.Tables.documents(spark, dir)
       .select("doc_id", "text").collect()
@@ -72,7 +72,7 @@ class CorpusAuditSpec extends AnyFunSuite {
   }
 
   test("q_source_overlap equals the driver-side brute force on sf0.001") {
-    val got = Pipeline.sourceOverlap(spark, dir).collect()
+    val got = AuditQueries.sourceOverlap(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(5)))
     val raw = graft.Tables.documents(spark, dir)
@@ -96,7 +96,7 @@ class CorpusAuditSpec extends AnyFunSuite {
   }
 
   test("q_oov_rate equals the driver-side brute force on sf0.001") {
-    val got = Pipeline.oovRate(spark, dir).collect()
+    val got = TokenQueries.oovRate(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val raw = graft.Tables.documents(spark, dir)
       .select("doc_id", "text").collect()
@@ -104,7 +104,7 @@ class CorpusAuditSpec extends AnyFunSuite {
     val counts = raw.flatMap(_._2).groupBy(identity)
       .map { case (t, xs) => t -> xs.size }
     val vocab = counts.toSeq.sortBy { case (t, c) => (-c, t) }
-      .take(Pipeline.OovVocabSize).map(_._1).toSet
+      .take(TokenQueries.OovVocabSize).map(_._1).toSet
     val expected = raw.map { case (id, toks) =>
       val oov = toks.count(!vocab(_))
       (id, toks.size.toLong, oov.toLong, oov.toDouble / toks.size)
@@ -228,7 +228,7 @@ class CorpusAuditSpec extends AnyFunSuite {
   }
 
   test("q_source_drift: equals the driver-side fixed-point brute force; zero iff one source") {
-    val got = Pipeline.sourceDrift(spark, dir).collect()
+    val got = AuditQueries.sourceDrift(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     val sources = graft.Tables.documents(spark, dir)
       .select("doc_id", "source").collect()
@@ -258,7 +258,7 @@ class CorpusAuditSpec extends AnyFunSuite {
   }
 
   test("q_label_centroids: fixed-point sums are exact and partitioning-invariant") {
-    val got = Pipeline.labelCentroids(spark, dir).collect()
+    val got = AnnQueries.labelCentroids(spark, dir).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     // brute force over the same rows with the same fixed-point quantization
     val raw = graft.Tables.embeddings(spark, dir)
@@ -275,7 +275,7 @@ class CorpusAuditSpec extends AnyFunSuite {
     assert(got.toSeq == expected)
     // partitioning invariance: the integer sums make the result bit-equal
     // under a different physical layout
-    val got2 = Pipeline.labelCentroids(spark, dir)
+    val got2 = AnnQueries.labelCentroids(spark, dir)
     assert(got2.count() == 10 * 64)
     val reOrdered = graft.Tables.embeddings(spark, dir).repartition(7)
       .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
@@ -290,7 +290,7 @@ class CorpusAuditSpec extends AnyFunSuite {
   }
 
   test("q_source_kl equals the driver-side brute force on sf0.001") {
-    val got = Pipeline.sourceKl(spark, dir).collect()
+    val got = AuditQueries.sourceKl(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val words = graft.Tables.documents(spark, dir)
       .select("source", "text").collect()
@@ -316,13 +316,13 @@ class CorpusAuditSpec extends AnyFunSuite {
   }
 
   test("q_signal_corr equals the driver-side exact-moment Pearson on sf0.001") {
-    val got = Pipeline.signalCorr(spark, dir).collect()
+    val got = QualityQueries.signalCorr(spark, dir).collect()
       .map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getDouble(3))))
       .toMap
     // collect the SAME integer signals the query computes, brute-force
     // the moments in BigInt, and apply the identical final expression
     val sigs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id") +: Pipeline.ensembleSignals(col("text"), col("n_chars"))
+      .select(col("doc_id") +: QualityQueries.ensembleSignals(col("text"), col("n_chars"))
         .map { case (n, c) => c.as(n) }: _*)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
     val n = BigInt(sigs.length)
@@ -386,7 +386,7 @@ class CorpusAuditSpec extends AnyFunSuite {
   }
 
   test("q_rare_tokens equals the driver-side brute force on sf0.001") {
-    val got = Pipeline.rareTokens(spark, dir).collect()
+    val got = TokenQueries.rareTokens(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4)))
     val docWords = graft.Tables.documents(spark, dir)
@@ -408,7 +408,7 @@ class CorpusAuditSpec extends AnyFunSuite {
   }
 
   test("q_dataset_card equals the driver-side brute force on sf0.001") {
-    val got = Pipeline.datasetCard(spark, dir).collect().head
+    val got = AuditQueries.datasetCard(spark, dir).collect().head
     val rows = graft.Tables.documents(spark, dir)
       .select("lang", "source", "text").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))
@@ -416,7 +416,7 @@ class CorpusAuditSpec extends AnyFunSuite {
     val toks = rows.flatMap(r => Option(r._3).map(_.split(" ", -1).length.toLong))
     // per-doc quality from the already-proven textStats column, so the
     // card's mean is checked against the SAME fixed-point quantization
-    val qFx = Pipeline.textStats(spark, dir).select("quality").collect()
+    val qFx = QualityQueries.textStats(spark, dir).select("quality").collect()
       .map(r => math.floor(r.getDouble(0) * 1e6).toLong)
     assert(got.getLong(0) == n)
     assert(got.getLong(1) == toks.sum)
@@ -433,7 +433,7 @@ class CorpusAuditSpec extends AnyFunSuite {
     val text = graft.Tables.documents(spark, dir)
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val clus = Pipeline.dedupClusters(spark, dir).collect()
+    val clus = DedupQueries.dedupClusters(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     def quality(t: String): Double = {
       val a = t.split(" ", -1)
@@ -444,7 +444,7 @@ class CorpusAuditSpec extends AnyFunSuite {
       val best = mem.minBy { case (id, q) => (-q, id) }._1
       mem.map { case (id, q) => (id, canon, ms.length.toLong, q, id == best) }
     }.sortBy(_._1)
-    val got = Pipeline.clusterBest(spark, dir).collect()
+    val got = DedupQueries.clusterBest(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getBoolean(4)))
     assert(got.toSeq == expected)

@@ -23,7 +23,7 @@ class CorpusHealthSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(1), r.getString(2), r.getBoolean(3)))
     val byTrue = cls.groupBy(_._1)
     val byPred = cls.groupBy(_._2).map { case (p, xs) => p -> xs.length }
-    val got = Pipeline.nbEval(spark, dir).collect()
+    val got = QualityQueries.nbEval(spark, dir).collect()
     assert(got.map(_.getString(0)).toSeq == byTrue.keys.toSeq.sorted)
     got.foreach { r =>
       val label = r.getString(0)
@@ -52,7 +52,7 @@ class CorpusHealthSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1)))
     val cells = guesses.groupBy(identity).map { case (k, xs) => k -> xs.length.toLong }
     val totals = guesses.groupBy(_._1).map { case (l, xs) => l -> xs.length.toLong }
-    val got = Pipeline.langIdConfusion(spark, dir).collect()
+    val got = QualityQueries.langIdConfusion(spark, dir).collect()
       .map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getDouble(3),
         r.getBoolean(4))))
     assert(got.map(_._1).toSet == cells.keySet)
@@ -68,7 +68,7 @@ class CorpusHealthSpec extends AnyFunSuite {
   }
 
   test("repetitionProfile: equals the driver-side brute force on sf0.001") {
-    val got = Pipeline.repetitionProfile(spark, dir).collect()
+    val got = QualityQueries.repetitionProfile(spark, dir).collect()
       .map(r => r.getLong(0) -> (1 to 9).map(r.getDouble).toSeq).toMap
     val raw = graft.Tables.documents(spark, dir)
       .select("doc_id", "text", "n_chars").collect()
@@ -80,7 +80,7 @@ class CorpusHealthSpec extends AnyFunSuite {
     raw.foreach { case (id, text, chars) =>
       val toks = text.split(" ", -1)
       val expected =
-        Pipeline.RepetitionTopNs.map { n =>
+        QualityQueries.RepetitionTopNs.map { n =>
           val cs = gramCounts(toks, n)
           if (chars == 0 || cs.isEmpty) 0.0
           else {
@@ -88,7 +88,7 @@ class CorpusHealthSpec extends AnyFunSuite {
             (c.toLong * g.length).toDouble / chars
           }
         } ++
-        Pipeline.RepetitionDupNs.map { n =>
+        QualityQueries.RepetitionDupNs.map { n =>
           val cs = gramCounts(toks, n)
           if (chars == 0) 0.0
           else cs.collect { case (g, c) if c > 1 => c.toLong * g.length }
@@ -101,8 +101,8 @@ class CorpusHealthSpec extends AnyFunSuite {
   }
 
   test("dedupSweep: counts are monotone non-increasing in the threshold") {
-    val rows = Pipeline.dedupSweep(spark, dir).collect()
-    assert(rows.map(_.getDouble(0)).toSeq == Pipeline.SweepThresholds)
+    val rows = DedupQueries.dedupSweep(spark, dir).collect()
+    assert(rows.map(_.getDouble(0)).toSeq == SharedArtifacts.SweepThresholds)
     val pairs = rows.map(_.getLong(1)).toSeq
     val docsN = rows.map(_.getLong(2)).toSeq
     assert(pairs == pairs.sorted.reverse, s"n_pairs not monotone: $pairs")
@@ -113,14 +113,14 @@ class CorpusHealthSpec extends AnyFunSuite {
     // two independent candidate mechanisms (complete shared-shingle join
     // vs MinHash-LSH bands) verifying with the same exact Jaccard must
     // find the same >= 0.8 pair set on this corpus
-    val sweep08 = Pipeline.dedupSweep(spark, dir).collect()
+    val sweep08 = DedupQueries.dedupSweep(spark, dir).collect()
       .find(_.getDouble(0) == 0.8).get.getLong(1)
-    val banded = Pipeline.minhashDedup(spark, dir).count()
+    val banded = DedupQueries.minhashDedup(spark, dir).count()
     assert(sweep08 == banded, s"sweep says $sweep08 pairs, LSH says $banded")
   }
 
   test("ivfOccupancy: members sum to the corpus, shares to 1, load = share*nlist") {
-    val rows = Pipeline.ivfOccupancy(spark, dir).collect()
+    val rows = AnnQueries.ivfOccupancy(spark, dir).collect()
     val total = spark.read.parquet(s"$dir/embeddings.parquet").count()
     assert(rows.map(_.getLong(1)).sum == total)
     val shareSum = rows.map(_.getDouble(2)).sum
@@ -136,7 +136,7 @@ class CorpusHealthSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "lang", "text").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    val split = Pipeline.trainSplit(spark, dir).collect()
+    val split = SamplingQueries.trainSplit(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getString(3)).toMap
     def bucketOf(text: String): String = {
       val n = text.split(" ", -1).length
@@ -155,7 +155,7 @@ class CorpusHealthSpec extends AnyFunSuite {
     val tots = expected.groupBy(_._1._1).map { case (feat, m) =>
       feat -> (m.values.map(_._1).sum, m.values.map(_._2).sum)
     }
-    val got = Pipeline.splitPsi(spark, dir).collect()
+    val got = SamplingQueries.splitPsi(spark, dir).collect()
     assert(got.length == expected.size)
     got.foreach { r =>
       val key = (r.getString(0), r.getString(1))
@@ -173,7 +173,7 @@ class CorpusHealthSpec extends AnyFunSuite {
   }
 
   test("bpeFertility totals equal bpeEncode re-aggregated per language") {
-    val perDoc = Pipeline.bpeEncode(spark, dir).collect()
+    val perDoc = TokenQueries.bpeEncode(spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val langOf = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "lang").collect()
@@ -182,7 +182,7 @@ class CorpusHealthSpec extends AnyFunSuite {
       .map { case (lang, m) =>
         lang -> (m.size.toLong, m.values.map(_._1).sum, m.values.map(_._2).sum)
       }
-    val got = Pipeline.bpeFertility(spark, dir).collect()
+    val got = TokenQueries.bpeFertility(spark, dir).collect()
     assert(got.length == expected.size)
     got.foreach { r =>
       val (nDocs, nWords, nBpe) = expected(r.getString(0))

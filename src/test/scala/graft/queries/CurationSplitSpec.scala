@@ -18,11 +18,11 @@ class CurationSplitSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("leakageSafeSplit: no near-dup pair straddles train/test; singletons match the doc split") {
-    val split = Pipeline.leakageSafeSplit(spark, dir)
+    val split = SamplingQueries.leakageSafeSplit(spark, dir)
       .select("doc_id", "unit_id", "bucket", "split").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getString(3)))
       .toMap
-    val clusters = Pipeline.dedupClusters(spark, dir).collect()
+    val clusters = DedupQueries.dedupClusters(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(clusters.nonEmpty, "fixture corpus must contain near-dup clusters")
     // every cluster member carries the canonical as unit and ONE split
@@ -34,7 +34,7 @@ class CurationSplitSpec extends AnyFunSuite {
     // documents outside any cluster key the hash on their own id — the
     // same bucket q_train_split assigns them
     val dupDocs = clusters.map(_._1).toSet
-    val docBuckets = Pipeline.trainSplit(spark, dir).collect()
+    val docBuckets = SamplingQueries.trainSplit(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toMap
     split.foreach { case (d, (unit, bucket, _)) =>
       if (!dupDocs.contains(d)) {
@@ -54,7 +54,7 @@ class CurationSplitSpec extends AnyFunSuite {
         Window.partitionBy(col("source")).orderBy(col("q_fx"))))
       .select("doc_id", "q_rank").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val got = Pipeline.qualityCalibrated(spark, dir)
+    val got = QualityQueries.qualityCalibrated(spark, dir)
       .select("doc_id", "q_rank").collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
     assert(got.nonEmpty)
@@ -62,7 +62,7 @@ class CurationSplitSpec extends AnyFunSuite {
   }
 
   test("cardinalityAudit: HLL estimate within its 2% rsd envelope and partitioning-invariant") {
-    val out = Pipeline.cardinalityAudit(spark, dir).collect()
+    val out = AuditQueries.cardinalityAudit(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(out.nonEmpty)
     out.foreach { case (s, exact, approx, err) =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Exact/approx parity for the two corpus-sized percentile sites in
-  * [[Pipeline]] — the AdaptiveGateSpec contract extended to the quartile
+  * [[QualityQueries]] and [[AuditQueries]] — the AdaptiveGateSpec contract extended to the quartile
   * bucketing family. The exact paths are what the oracle hash-checks
   * (q_perplexity_buckets, q_doc_percentiles); the approx paths
   * (`percentile_approx`, bounded memory per group, map-side combinable)
@@ -26,9 +26,9 @@ class PercentileParitySpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.01"
 
   test("approx perplexityBuckets flips only rank-epsilon docs at a shared boundary") {
-    val exact = Pipeline.perplexityBuckets(spark, dir, exact = true)
+    val exact = QualityQueries.perplexityBuckets(spark, dir, exact = true)
       .select("doc_id", "lang", "lm_score", "bucket").cache()
-    val approx = Pipeline.perplexityBuckets(spark, dir, exact = false,
+    val approx = QualityQueries.perplexityBuckets(spark, dir, exact = false,
       accuracy = 10000)
       .select(col("doc_id"), col("bucket").as("bucket_a"))
 
@@ -92,9 +92,9 @@ class PercentileParitySpec extends AnyFunSuite {
   }
 
   test("approx docPercentiles stays within the per-language value span at the cut") {
-    val exact = Pipeline.docPercentiles(spark, dir, exact = true).collect()
+    val exact = AuditQueries.docPercentiles(spark, dir, exact = true).collect()
       .map(r => r.getString(0) -> r).toMap
-    val approx = Pipeline.docPercentiles(spark, dir, exact = false,
+    val approx = AuditQueries.docPercentiles(spark, dir, exact = false,
       accuracy = 10000).collect()
       .map(r => r.getString(0) -> r).toMap
     assert(exact.keySet == approx.keySet)

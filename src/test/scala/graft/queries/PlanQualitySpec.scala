@@ -116,7 +116,7 @@ class PlanQualitySpec extends AnyFunSuite {
       docs.select("doc_id", "lang"), "doc_id", 90))
     assert(!splitPlan.contains("Exchange"),
       s"hash-bucket split must not shuffle:\n$splitPlan")
-    val tokPlan = planOf(Pipeline.tokenStats(spark, dir).limit(1))
+    val tokPlan = planOf(TokenQueries.tokenStats(spark, dir).limit(1))
     val readSchema = tokPlan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(!readSchema.contains("source") && !readSchema.contains("n_chars"),
       s"token stats must scan only doc_id+text: $readSchema")
@@ -153,7 +153,7 @@ class PlanQualitySpec extends AnyFunSuite {
       "text", "doc_id", n = 3))
     assert(decon.contains("BroadcastHashJoin"),
       s"benchmark shingles must broadcast:\n$decon")
-    val vocab = planOf(Pipeline.vocabTopK(spark, dir).limit(1))
+    val vocab = planOf(TokenQueries.vocabTopK(spark, dir).limit(1))
     // explode + partial agg are narrow; the count and the window share the
     // (lang, token)→lang shuffles — anything beyond 3 exchanges (partial
     // agg, window repartition, final order) signals a regression
@@ -209,7 +209,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("int8 quantization is a narrow native projection inside WholeStageCodegen") {
     import org.apache.spark.sql.functions.col
-    val plan = planOf(Pipeline.embeddingQuantize(spark, dir).limit(1))
+    val plan = planOf(AnnQueries.embeddingQuantize(spark, dir).limit(1))
     assert(plan.contains("rm_int8_quantize"),
       s"expected native quantize expression in:\n$plan")
     // the "*(n)" codegen-stage marker sits after the "+-" tree prefix here
@@ -238,7 +238,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("quantized rerank: one broadcast-NL approx baseline, equi-join exact stage") {
-    val plan = planOf(Pipeline.quantizedRerank(spark, dir).limit(1))
+    val plan = planOf(AnnQueries.quantizedRerank(spark, dir).limit(1))
     assert(plan.contains("rm_int8_quantize") && plan.contains("rm_cosine_similarity"),
       s"expected native quantize + cosine in:\n$plan")
     // the approximate shortlist stage is the documented broadcast-nested-loop
@@ -250,7 +250,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("IVF-SQ8 rerank: cluster-id equi-join shortlist, no corpus-wide NL scan") {
-    val plan = planOf(Pipeline.ivfRerank(spark, dir).limit(1))
+    val plan = planOf(AnnQueries.ivfRerank(spark, dir).limit(1))
     // the whole point vs the flat quantizedRerank baseline: NO stage may
     // scan the entire corpus per query batch
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
@@ -274,7 +274,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // stream is never SORTED by token — the optimizer prunes the df
     // branch into its own (cheap, overlapping) tokenization scan, which
     // is the accepted trade for dropping that full-stream sort.
-    val tfidf = planOf(Pipeline.tfidfTopK(spark, dir).limit(1))
+    val tfidf = planOf(TokenQueries.tfidfTopK(spark, dir).limit(1))
     val scans = tfidf.linesIterator.count(l =>
       l.contains("parquet") && l.contains("documents"))
     assert(scans <= 2, s"tf-idf scans documents at most twice, saw $scans:\n$tfidf")
@@ -292,7 +292,7 @@ class PlanQualitySpec extends AnyFunSuite {
         !range.contains("BroadcastNestedLoopJoin"),
       s"banded range join must stay equi:\n$range")
 
-    val winnow = planOf(Pipeline.winnowPairs(spark, dir).limit(1))
+    val winnow = planOf(graft.SparkEntry.queries("q_winnow_pairs")(spark, dir).limit(1))
     assert(!winnow.contains("CartesianProduct") &&
         !winnow.contains("BroadcastNestedLoopJoin"),
       s"winnow candidates must equi-join on the fingerprint:\n$winnow")
@@ -302,7 +302,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // the cumulative token sum must run WITHIN each range partition
     // (offset added from the driver-side subtotals) — a Window with no
     // partition spec would collapse the corpus onto one task
-    val tb = planOf(Pipeline.tokenBudget(spark, dir).limit(1))
+    val tb = planOf(TokenQueries.tokenBudget(spark, dir).limit(1))
     val winLine = tb.linesIterator.find(_.contains("Window")).getOrElse("")
     assert(winLine.contains("__pid"),
       s"prefix-sum window must partition by __pid:\n$tb")
@@ -442,7 +442,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("simhash pairs: banded equi-join candidates — no cartesian, popcount in codegen") {
-    val plan = planOf(Pipeline.simhashPairs(spark, dir).limit(1))
+    val plan = planOf(DedupQueries.simhashPairs(spark, dir).limit(1))
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
       s"simhash pair generation must never go all-pairs:\n$plan")
     assert(plan.contains("bit_count"),
@@ -537,7 +537,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("temperature mixture: rates baked as literals, zero-shuffle filter") {
-    val plan = planOf(Pipeline.queries("q_temperature_mixture")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_temperature_mixture")(spark, dir))
     // the per-language counts collapse to a CASE literal on the driver;
     // the resample itself must be scan+filter — the ONLY Exchange is the
     // final orderBy's range partitioning
@@ -550,7 +550,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("kNN label propagation: partial top-k before the shuffle, broadcast label join") {
-    val plan = planOf(Pipeline.queries("q_knn_labels")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_knn_labels")(spark, dir))
     // WindowGroupLimit prunes each partition to k rows per query BEFORE
     // the rank shuffle — without it every scored pair shuffles
     assert(plan.contains("WindowGroupLimit"),
@@ -563,7 +563,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("IVF kNN label propagation: cluster-id equi-join neighbors, no all-pairs") {
-    val plan = planOf(Pipeline.queries("q_knn_labels_ivf")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_knn_labels_ivf")(spark, dir))
     // the 100 TB point vs q_knn_labels' exhaustive knnJoin: the neighbor
     // stage must NEVER pair every query with every labeled vector
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
@@ -637,7 +637,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_bpe_encode: one native codegen scan — only the orderBy exchanges") {
-    val plan = planOf(Pipeline.queries("q_bpe_encode")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_bpe_encode")(spark, dir))
     assert(plan.contains("rm_bpe_encode_count"),
       s"expected the native encoder in:\n$plan")
     val exchanges = plan.linesIterator.count(_.contains("Exchange"))
@@ -648,7 +648,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_lexicon_hits: one automaton pass feeds the generator — no lexicon join") {
-    val plan = planOf(Pipeline.queries("q_lexicon_hits")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_lexicon_hits")(spark, dir))
     assert(plan.contains("rm_lexicon_counts"),
       s"expected the native automaton pass in:\n$plan")
     assert(plan.contains("Generate"),
@@ -661,7 +661,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_pack_bpe: narrow token counting, then one shard shuffle plus the output sort") {
-    val plan = planOf(Pipeline.queries("q_pack_bpe")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_pack_bpe")(spark, dir))
     assert(plan.contains("rm_bpe_encode_count"),
       s"expected the native encoder in:\n$plan")
     assert(!plan.contains("Join"),
@@ -672,7 +672,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_bm25_topk: one scoring scan into a partial top-k — no global sort, no join") {
-    val plan = planOf(Pipeline.queries("q_bm25_topk")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_bm25_topk")(spark, dir))
     assert(plan.contains("rm_lexicon_counts"),
       s"term frequencies must come from the one-pass automaton:\n$plan")
     assert(plan.contains("TakeOrderedAndProject"),
@@ -682,7 +682,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_char_entropy: one narrow native projection — only the orderBy exchanges") {
-    val plan = planOf(Pipeline.queries("q_char_entropy")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_char_entropy")(spark, dir))
     assert(plan.contains("rm_char_entropy_fx"),
       s"expected the native entropy pass in:\n$plan")
     val exchanges = plan.linesIterator.count(_.contains("Exchange"))
@@ -693,7 +693,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_hybrid_rrf: both legs native, every join input a bounded candidate list") {
-    val plan = planOf(Pipeline.queries("q_hybrid_rrf")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_hybrid_rrf")(spark, dir))
     assert(plan.contains("rm_lexicon_counts") &&
         plan.contains("rm_cosine_similarity"),
       s"both retrieval legs must run their native passes in:\n$plan")
@@ -711,7 +711,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_curation_pipeline: all four natives in one narrow chain — only the dedup window and sort shuffle") {
-    val plan = planOf(Pipeline.queries("q_curation_pipeline")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_curation_pipeline")(spark, dir))
     for (fn <- Seq("rm_lexicon_hits", "rm_char_entropy_fx",
         "rm_self_dedup_chunks", "rm_bpe_encode_count"))
       assert(plan.contains(fn), s"expected $fn in the composed chain:\n$plan")
@@ -723,7 +723,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_dedup_stats: distinct counts aggregate digests — one scan, digest-keyed shuffle") {
-    val plan = planOf(Pipeline.queries("q_dedup_stats")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_dedup_stats")(spark, dir))
     val scans = plan.linesIterator.count(_.contains("FileScan parquet"))
     assert(scans == 1, s"one corpus scan expected, found $scans:\n$plan")
     // the partial aggregate keys on (source, md5(text)) BEFORE the
@@ -735,14 +735,14 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_gate_sweep: the corpus is scanned exactly once — sweep math runs on the 20-row table") {
-    val plan = planOf(Pipeline.queries("q_gate_sweep")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_gate_sweep")(spark, dir))
     val scans = plan.linesIterator.count(_.contains("FileScan parquet"))
     assert(scans == 1,
       s"the threshold sweep must histogram the corpus in ONE scan, found $scans:\n$plan")
   }
 
   test("q_self_dedup: one narrow native scrub — only the orderBy exchanges") {
-    val plan = planOf(Pipeline.queries("q_self_dedup")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_self_dedup")(spark, dir))
     assert(plan.contains("rm_self_dedup_chunks"),
       s"expected the native chunk scrub in:\n$plan")
     val exchanges = plan.linesIterator.count(_.contains("Exchange"))
@@ -753,7 +753,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("gopher rules: one narrow projection — only the orderBy exchanges") {
-    val plan = planOf(Pipeline.queries("q_gopher_rules")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_gopher_rules")(spark, dir))
     val exchanges = plan.linesIterator.count(_.contains("Exchange"))
     assert(exchanges == 1,
       s"expected exactly the orderBy Exchange, found $exchanges:\n$plan")
@@ -776,11 +776,11 @@ class PlanQualitySpec extends AnyFunSuite {
       floor((col("n_chars") - (nTok - lit(1))).cast(DoubleType) /
           nTok.cast(DoubleType) * lit(1e6)).cast(LongType).as("s_mwl"))
     val ranked = sigs
-      .join(broadcast(Pipeline.rankBySignal(sigs, "s_tokens", "r_tokens")),
+      .join(broadcast(QualityQueries.rankBySignal(sigs, "s_tokens", "r_tokens")),
         Seq("s_tokens"))
-      .join(broadcast(Pipeline.rankBySignal(sigs, "s_ttr", "r_ttr")),
+      .join(broadcast(QualityQueries.rankBySignal(sigs, "s_ttr", "r_ttr")),
         Seq("s_ttr"))
-      .join(broadcast(Pipeline.rankBySignal(sigs, "s_mwl", "r_mwl")),
+      .join(broadcast(QualityQueries.rankBySignal(sigs, "s_mwl", "r_mwl")),
         Seq("s_mwl"))
     val rankedPlan = planOf(ranked)
     // every rank attaches as a broadcast hash join of a histogram frame
@@ -795,7 +795,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_dedup_weights: cluster sizes attach to the corpus spine by broadcast") {
-    val plan = planOf(Pipeline.queries("q_dedup_weights")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_dedup_weights")(spark, dir))
     // the component/size tables are dup-docs-sized — the corpus-side
     // left join must broadcast them, never shuffle the universe
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftOuter"),
@@ -805,7 +805,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_curation_funnel: one scan, three natives, one aggregation — nothing corpus-sized moves") {
-    val plan = planOf(Pipeline.queries("q_curation_funnel")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_curation_funnel")(spark, dir))
     val scans = plan.linesIterator.count(l =>
       l.contains("parquet") && l.contains("documents"))
     assert(scans == 1, s"funnel must scan documents once, saw $scans:\n$plan")
@@ -818,7 +818,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_dsir_select: top-100 is a partial TakeOrderedAndProject, never a global window") {
-    val plan = planOf(Pipeline.queries("q_dsir_select")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_dsir_select")(spark, dir))
     assert(plan.contains("TakeOrderedAndProject"),
       s"selection must be the partial top-k, not a global sort:\n$plan")
     assert(!plan.contains("Window"),
@@ -830,11 +830,11 @@ class PlanQualitySpec extends AnyFunSuite {
     // plan), so assert on the un-checkpointed selection plan directly
     val sigs = graft.Tables.documents(spark, dir).select(
       org.apache.spark.sql.functions.col("doc_id") +:
-        Pipeline.ensembleSignals(
+        QualityQueries.ensembleSignals(
           org.apache.spark.sql.functions.col("text"),
           org.apache.spark.sql.functions.col("n_chars"))
           .map { case (n, c) => c.as(n) }: _*)
-    val plan = planOf(Pipeline.qualityEnsembleSelected(sigs))
+    val plan = planOf(QualityQueries.qualityEnsembleSelected(sigs))
     assert(plan.contains("TakeOrderedAndProject"),
       s"selection must be the partial top-k, not a global sort:\n$plan")
     // the only Windows are the cum_below windows over the histogram
@@ -842,7 +842,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // HashAggregate; the corpus-sized ranked frame reaches the top-k
     // without any Window of its own
     val windows = collectWindows(
-      Pipeline.qualityEnsembleSelected(sigs).queryExecution.executedPlan)
+      QualityQueries.qualityEnsembleSelected(sigs).queryExecution.executedPlan)
     assert(windows.nonEmpty, "expected the histogram cum_below windows")
     windows.foreach { w =>
       assert(w.toString.contains("HashAggregate"),
@@ -851,20 +851,20 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_oov_rate: vocab is a partial top-k that broadcasts onto the token stream") {
-    val plan = planOf(Pipeline.queries("q_oov_rate")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_oov_rate")(spark, dir))
     assert(plan.contains("TakeOrderedAndProject"),
       s"vocab cut must be the partial top-k, not a global sort:\n$plan")
     assert(plan.contains("BroadcastHashJoin"),
       s"the vocab must broadcast onto the token stream:\n$plan")
     assert(!plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"),
-      s"no shuffle join for a ${Pipeline.OovVocabSize}-row vocab:\n$plan")
+      s"no shuffle join for a ${TokenQueries.OovVocabSize}-row vocab:\n$plan")
   }
 
   test("source overlap: pairs explode from per-gram source sets — no gram self-join") {
     // the declared query localCheckpoints (truncating its observable
     // plan); assert on the un-checkpointed matrix plan directly
-    val gs = Pipeline.sourceGrams(graft.Tables.documents(spark, dir))
-    val plan = planOf(Pipeline.sourceOverlapFrom(gs))
+    val gs = SharedArtifacts.sourceGrams(graft.Tables.documents(spark, dir))
+    val plan = planOf(AuditQueries.sourceOverlapFrom(gs))
     assert(!plan.contains("CartesianProduct") &&
         !plan.contains("BroadcastNestedLoopJoin") &&
         !plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
@@ -877,7 +877,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_event_funnel: one user-keyed aggregate, no windows, no joins") {
-    val plan = planOf(Extensions.queries("q_event_funnel")(spark, dir))
+    val plan = planOf(graft.SparkEntry.queries("q_event_funnel")(spark, dir))
     assert(!plan.contains("Window"),
       s"the funnel is conditional aggregation, never a window:\n$plan")
     assert(!plan.contains("Join"), s"no joins in the funnel:\n$plan")
@@ -935,7 +935,7 @@ class PlanQualitySpec extends AnyFunSuite {
     "q_quality_ensemble" -> "rank windows over cardinality-bounded value histograms")
 
   test("q_quality_calibrated: calibration attaches as a broadcast, never a corpus sort-merge") {
-    val plan = planOf(Pipeline.qualityCalibrated(spark, dir))
+    val plan = planOf(QualityQueries.qualityCalibrated(spark, dir))
     assert(plan.contains("BroadcastHashJoin"),
       s"expected broadcast calibration attach in:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
@@ -943,7 +943,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_leakage_safe_split: the component table attaches as a broadcast LEFT join") {
-    val plan = planOf(Pipeline.leakageSafeSplit(spark, dir))
+    val plan = planOf(SamplingQueries.leakageSafeSplit(spark, dir))
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftOuter"),
       s"expected broadcast left-outer unit attach in:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
@@ -951,7 +951,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_cardinality_audit: one corpus scan, no join; the sketch aggregates map-side") {
-    val plan = planOf(Pipeline.cardinalityAudit(spark, dir))
+    val plan = planOf(AuditQueries.cardinalityAudit(spark, dir))
     assert(plan.linesIterator.count(_.contains("FileScan parquet")) == 1,
       s"expected exactly one documents scan in:\n$plan")
     assert(!plan.contains("Join"), s"unexpected join in:\n$plan")
@@ -963,7 +963,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_repetition_profile: all nine signals ride one narrow projection — no join, no window, one scan") {
-    val plan = planOf(Pipeline.repetitionProfile(spark, dir))
+    val plan = planOf(QualityQueries.repetitionProfile(spark, dir))
     assert(plan.linesIterator.count(_.contains("FileScan parquet")) == 1,
       s"expected exactly one documents scan in:\n$plan")
     assert(!plan.contains("Join") && !plan.contains("Window"),
@@ -973,7 +973,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_normalize_text: a narrow native projection — no join, no aggregate") {
-    val plan = planOf(Pipeline.normalizeText(spark, dir))
+    val plan = planOf(QualityQueries.normalizeText(spark, dir))
     assert(plan.linesIterator.count(_.contains("FileScan parquet")) == 1,
       s"expected exactly one documents scan in:\n$plan")
     assert(!plan.contains("Join") && !plan.contains("HashAggregate"),
@@ -983,7 +983,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_source_drift: one modality-pairing join; the global centroid attaches broadcast") {
-    val plan = planOf(Pipeline.sourceDrift(spark, dir))
+    val plan = planOf(AuditQueries.sourceDrift(spark, dir))
     assert(plan.contains("BroadcastHashJoin"),
       s"expected broadcast global-centroid attach in:\n$plan")
     // the only non-broadcast join allowed is the id-keyed modality pairing

@@ -44,7 +44,7 @@ class QualityEnsembleSpec extends AnyFunSuite {
       .select(col("doc_id"), col("s_tokens").as("n_tokens"),
         col("r_tokens"), col("r_ttr"), col("r_mwl"), col("ens"))
       .orderBy("doc_id").collect()
-    val got = Pipeline.qualityEnsemble(spark, dir).collect()
+    val got = QualityQueries.qualityEnsemble(spark, dir).collect()
     assert(got.length == naiveTop.length)
     got.zip(naiveTop).foreach { case (a, b) =>
       assert(a == b, s"histogram rank row $a != window rank row $b")
@@ -57,7 +57,7 @@ class QualityEnsembleSpec extends AnyFunSuite {
       .map { case (v, i) => (i.toLong, v) }.toDF("doc_id", "s")
     val table = graft.functions.RankLookup.train(sigs, "s")
     // on-profile values: exactly the batch histogram rank
-    val expected = Pipeline.rankBySignal(sigs, "s", "r")
+    val expected = QualityQueries.rankBySignal(sigs, "s", "r")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     expected.foreach { case (v, r) =>
       assert(table.rank(v) == r, s"value $v: table ${table.rank(v)} != batch $r")
@@ -97,7 +97,7 @@ class QualityEnsembleSpec extends AnyFunSuite {
     // rank (and so the ensemble) must be 0.0 under N == 1
     val sigs = one.select(col("doc_id"),
       TA.tokenCount(col("text")).as("s_tokens"))
-    val r = Pipeline.rankBySignal(sigs, "s_tokens", "r").collect()
+    val r = QualityQueries.rankBySignal(sigs, "s_tokens", "r").collect()
     assert(r.map(_.getDouble(1)).toSeq == Seq(0.0))
   }
 }

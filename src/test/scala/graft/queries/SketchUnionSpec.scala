@@ -19,7 +19,7 @@ class SketchUnionSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("union drift stays in the 2% band and estimates sit in the error envelope") {
-    val out = Pipeline.sketchUnion(spark, dir).collect()
+    val out = AuditQueries.sketchUnion(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6),
         r.getBoolean(7)))

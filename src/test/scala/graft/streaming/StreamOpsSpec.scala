@@ -820,12 +820,12 @@ class StreamOpsSpec extends AnyFunSuite {
     // batch audits (q_pca_power / q_pca_outliers / q_pca_residual) read,
     // so one corpus gets identical survivors however it is driven
     val dir = "/root/testdata/sf0.001"
-    val model = graft.queries.Pipeline.sharedPcaModel(spark, dir)
+    val model = graft.queries.SharedArtifacts.sharedPcaModel(spark, dir)
     // the shared model IS the certified on-disk artifact (local testdata
     // always fingerprints, so the persist path is active), and the
     // artifact round-trips to the exact model the gate scores with
     val path = graft.operators.Artifacts.path(spark,
-      graft.queries.Pipeline.liveArtifactKeys, "graft_pca_model", dir, "embeddings")
+      graft.queries.SharedArtifacts.liveArtifactKeys, "graft_pca_model", dir, "embeddings")
     assert(graft.operators.Pca.modelExists(spark, path),
       s"shared PCA artifact must be certified on disk at $path")
     val reread = graft.operators.Pca.readModel(spark, path, model.dims)
@@ -863,16 +863,16 @@ class StreamOpsSpec extends AnyFunSuite {
       .select("doc_id", "text", "n_chars")
     // batch side: the query's own signal frame + histogram ranks
     val sigs = docs.select(col("doc_id") +:
-      graft.queries.Pipeline.ensembleSignals(col("text"), col("n_chars"))
+      graft.queries.QualityQueries.ensembleSignals(col("text"), col("n_chars"))
         .map { case (n, c) => c.as(n) }: _*)
     val tables = Seq("s_tokens", "s_ttr", "s_mwl")
       .map(n => n -> graft.functions.RankLookup.train(sigs, n)).toMap
     val batchEns = sigs
-      .join(graft.queries.Pipeline.rankBySignal(sigs, "s_tokens", "r_tokens"),
+      .join(graft.queries.QualityQueries.rankBySignal(sigs, "s_tokens", "r_tokens"),
         Seq("s_tokens"))
-      .join(graft.queries.Pipeline.rankBySignal(sigs, "s_ttr", "r_ttr"),
+      .join(graft.queries.QualityQueries.rankBySignal(sigs, "s_ttr", "r_ttr"),
         Seq("s_ttr"))
-      .join(graft.queries.Pipeline.rankBySignal(sigs, "s_mwl", "r_mwl"),
+      .join(graft.queries.QualityQueries.rankBySignal(sigs, "s_mwl", "r_mwl"),
         Seq("s_mwl"))
       .withColumn("ens",
         (col("r_tokens") + col("r_ttr") + col("r_mwl")) / lit(3.0))
@@ -910,10 +910,10 @@ class StreamOpsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
-    val batch = graft.queries.Pipeline.repetitionProfile(spark, dir)
+    val batch = graft.queries.QualityQueries.repetitionProfile(spark, dir)
       .collect().map(r => r.getLong(0) -> (1 to 9).map(r.getDouble).toSeq).toMap
     val limits = StreamOps.RepetitionLimits
-    val names = graft.queries.Pipeline
+    val names = graft.queries.QualityQueries
       .repetitionSignals(col("text"), col("n_chars")).map(_._1)
     val expectedKept = batch.filter { case (_, fr) =>
       names.zip(fr).forall { case (n, v) => v <= limits(n) }
@@ -962,7 +962,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val tables = graft.functions.RankLookup.trainPerGroup(sigs, "source", "q_fx")
     assert(tables.size > 1, "fixture corpus must have several sources")
     // batch side: the declared query's own ranks
-    val batchRank = graft.queries.Pipeline.qualityCalibrated(spark, dir)
+    val batchRank = graft.queries.QualityQueries.qualityCalibrated(spark, dir)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("q_rank"))
       .toMap
 
@@ -1069,7 +1069,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val batch = docsSeq.toDF("doc_id", "lang", "text")
 
     // the batch profile: an UNPRUNED model (scores are lmScore-exact) and
-    // per-language quartiles of the batch scores — Pipeline.perplexityBuckets'
+    // per-language quartiles of the batch scores — QualityQueries.perplexityBuckets'
     // threshold recipe, excluding the unknown language
     val model = graft.functions.BigramLmScore.train(batch, "text", topK = 1 << 20)
     val scored = batch.withColumn("lm_score",
@@ -1330,12 +1330,12 @@ class StreamOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val P = graft.queries.Pipeline
+    val P = graft.queries.QualityQueries
     val dir = "/root/testdata/sf0.001"
     val docs = graft.Tables.documents(spark, dir)
     // the SAME model artifacts the batch pipeline uses: its persisted
     // shared BPE model and its lexicon
-    val model = P.sharedBpeModel(spark, dir)
+    val model = graft.queries.SharedArtifacts.sharedBpeModel(spark, dir)
     val lex = new graft.functions.LexiconAutomaton(P.CurationLex)
     val rows = docs.select("doc_id", "lang", "text").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))

@@ -7,9 +7,16 @@ Usage: after `sbt "runMain graft.Verify <sfDir> <outDir>"`, run
 For each query result parquet in <outDir>, runs the matching SQL from
 oracle_sql.json in DuckDB over the same tables, canonicalizes both sides
 (sort columns by name, sort rows), and compares values cell-by-cell.
+
+    python3 tools/check_correctness.py --against <otherOutDir> <outDir>
+
+compares two Verify dumps result by result instead — every dumped query,
+the property-checked ones included — with the same canonicalization, and
+prints `N equal, M differ` and the names that differ.
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -32,6 +39,18 @@ def cells_equal(a, b):
             return True
         return a == b
     return a == b
+
+
+def mismatch(got_cols, got, exp_cols, exp):
+    """None when both canonical results are equal, else why they differ."""
+    if got_cols != exp_cols:
+        return f"columns {got_cols} != {exp_cols}"
+    if len(got) != len(exp):
+        return f"rows {len(got)} != {len(exp)}"
+    for i, (g, e) in enumerate(zip(got, exp)):
+        if not all(cells_equal(x, y) for x, y in zip(g, e)):
+            return f"row {i}\n  got {g}\n  exp {e}"
+    return None
 
 
 def connect(sf_dir):
@@ -83,21 +102,9 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: exception {e}", flush=True)
             n_fail += 1
             continue
-        if got_cols != exp_cols:
-            print(f"FAIL {name}: columns {got_cols} != {exp_cols}", flush=True)
-            n_fail += 1
-            continue
-        if len(got) != len(exp):
-            print(f"FAIL {name}: rows {len(got)} != {len(exp)}", flush=True)
-            n_fail += 1
-            continue
-        bad = None
-        for i, (g, e) in enumerate(zip(got, exp)):
-            if not all(cells_equal(x, y) for x, y in zip(g, e)):
-                bad = (i, g, e)
-                break
+        bad = mismatch(got_cols, got, exp_cols, exp)
         if bad:
-            print(f"FAIL {name}: row {bad[0]}\n  got {bad[1]}\n  exp {bad[2]}", flush=True)
+            print(f"FAIL {name}: {bad}", flush=True)
             n_fail += 1
         else:
             print(f"PASS {name} ({len(got)} rows)", flush=True)
@@ -106,5 +113,40 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 
+def results(out_dir):
+    """query name -> its result parquet dir, or None for an .error marker"""
+    found = {}
+    for entry in os.listdir(out_dir):
+        path = os.path.join(out_dir, entry)
+        if entry.endswith(".error"):
+            found.setdefault(entry[:-len(".error")], None)
+        elif os.path.isdir(path):
+            found[entry] = path
+    return found
+
+
+def against(other_dir, out_dir):
+    con = duckdb.connect()
+    mine, theirs = results(out_dir), results(other_dir)
+    differ = []
+    for name in sorted(set(mine) | set(theirs)):
+        a, b = mine.get(name), theirs.get(name)
+        if a is None or b is None:
+            bad = f"no result in {out_dir if a is None else other_dir}"
+        else:
+            bad = mismatch(*canon(con, f"SELECT * FROM '{a}/*.parquet'"),
+                           *canon(con, f"SELECT * FROM '{b}/*.parquet'"))
+        if bad:
+            print(f"DIFFER {name}: {bad}", flush=True)
+            differ.append(name)
+    n_equal = len(set(mine) | set(theirs)) - len(differ)
+    print(f"\n{n_equal} equal, {len(differ)} differ")
+    if differ:
+        print("differ: " + ", ".join(differ))
+    return 1 if differ else 0
+
+
 if __name__ == "__main__":
+    if sys.argv[1] == "--against":
+        sys.exit(against(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))
