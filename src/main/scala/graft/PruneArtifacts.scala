@@ -22,7 +22,9 @@ import org.apache.spark.sql.SparkSession
   * [--keep-dead-keys]` — DRY-RUN by default (prints decisions, deletes
   * nothing); `--apply` performs the deletes. Dead-KEY artifacts (format
   * bumps re-key the path, orphaning the old-format parquet under a
-  * still-live data stamp) are reaped against
+  * still-live data stamp) and stray names (a directory not named by the
+  * derivation of its own provenance meta, such as the earlier root-hashed
+  * layout) are reaped against
   * [[graft.queries.SharedArtifacts.liveArtifactKeys]] — the map shipped in
   * this very build — unless `--keep-dead-keys` is passed. Exit 0 on
   * success, 1 on bad usage. */

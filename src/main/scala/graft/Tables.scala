@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
@@ -15,17 +16,10 @@ object Tables {
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    // Schema-inference cache: a bare `read.parquet(path)` runs a footer
-    // read as a driver-side job at every DataFrame CONSTRUCTION — ~25-30
-    // ms per table per call, and the bench constructs every query fresh
-    // per rep, so the suite paid hundreds of these (measured: the 1-2
-    // "parquet at Tables.scala" jobs heading every query profile).
-    // Caching the inferred StructType per (session, path) removes every
-    // repeat; the data path itself is still read fresh at execution (no
-    // result caching — the file listing/footers for column chunks are
-    // re-resolved per query as before). Keyed by session identity like
-    // Artifacts.stampConf; a table whose SCHEMA mutates in place
-    // mid-session is not a supported pattern anywhere in this repo.
+    // Schema-inference cache (Artifacts.readCachedSchema, one map for
+    // tables and artifacts): the bench constructs every query fresh per
+    // rep, and a bare `read.parquet` was measured as the 1-2 "parquet at
+    // Tables.scala" jobs heading every query profile.
     // `events` is cached only AFTER a successful NATIVE-generation load
     // (see [[events]], which populates the entry): its legacy
     // TIMESTAMP(NANOS) generation is detected by an inference-time
@@ -35,34 +29,12 @@ object Tables {
     // failure to execution, past the catch. With the entry present the
     // generation is proven native and the ~90 ms per-construction
     // inference job is skipped like every other table's (r17).
-    if (name == "events") {
-      schemaFor(spark, path) match {
-        case Some(s) => spark.read.schema(s).parquet(path)
-        case None    => spark.read.parquet(path)
-      }
-    } else {
-      val schema = perSessionSchemas(spark)
-        .getOrElseUpdate(path, spark.read.parquet(path).schema)
-      spark.read.schema(schema).parquet(path)
+    if (name != "events") Artifacts.readCachedSchema(spark, path)
+    else Artifacts.cachedSchemas(spark).get(path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None    => spark.read.parquet(path)
     }
   }
-
-  // Weak-keyed by the SESSION (not its identity hash): entries for
-  // stopped sessions are GC-evicted with the session, and a reused
-  // identity hash can never serve a schema another session inferred.
-  // Values are StructTypes only — nothing in a value pins its key alive.
-  private val schemaCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        org.apache.spark.sql.types.StructType]]()
-  private def perSessionSchemas(spark: SparkSession) =
-    schemaCache.synchronized {
-      schemaCache.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap
-          .empty[String, org.apache.spark.sql.types.StructType])
-    }
-  private def schemaFor(spark: SparkSession, path: String) =
-    perSessionSchemas(spark).get(path)
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")
@@ -84,8 +56,8 @@ object Tables {
     * The legacy retry is SCOPED: the parquet scan re-checks the
     * session-global nanosAsLong conf at EXECUTION time, so simply
     * restoring it after schema inference would break the returned frame —
-    * instead [[legacyEvents]] materializes the normalized frame via
-    * `localCheckpoint` WHILE the conf is on, then restores it, so another
+    * instead [[legacyEvents]] pins the normalized frame
+    * ([[Materialize.pin]]) WHILE the conf is on, then restores it, so another
     * table's unexpected TIMESTAMP(NANOS) column still fails loudly rather
     * than silently loading as raw longs (TablesSpec pins both). The
     * materialization is the legacy generation's price — one events-table
@@ -105,7 +77,7 @@ object Tables {
       // detection logic reasons about.
       import org.apache.spark.sql.types.LongType
       if (raw.schema("ts").dataType != LongType)
-        perSessionSchemas(s).putIfAbsent(s"$d/events.parquet", raw.schema)
+        Artifacts.cachedSchemas(s).putIfAbsent(s"$d/events.parquet", raw.schema)
       df
     } catch {
       // Pre-regeneration files are TIMESTAMP(NANOS): the plain read throws
@@ -133,9 +105,9 @@ object Tables {
     scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
 
   /** Legacy-generation load, conf-scoped: flip nanosAsLong, read AND
-    * eagerly materialize the normalized frame (localCheckpoint truncates
-    * the lineage, so later actions never re-touch the parquet scan that
-    * needs the conf), restore the conf in a finally. Cached per
+    * pin the normalized frame (the pin cuts the lineage, so later actions
+    * never re-touch the parquet scan that needs the conf), restore the
+    * conf in a finally. Cached per
     * (session, dir) so each query over a legacy dir pays the
     * materialization once, not per call. */
   private def legacyEvents(s: SparkSession, d: String): DataFrame = {
@@ -147,9 +119,9 @@ object Tables {
         try {
           System.err.println(s"[graft.Tables] events at $d is a legacy " +
             "TIMESTAMP(NANOS) generation: loading under nanosAsLong and " +
-            "materializing via localCheckpoint; the conf is restored after — " +
+            "materializing it eagerly; the conf is restored after — " +
             "other tables are unaffected")
-          normalizeTs(apply(s, d, "events")).localCheckpoint()
+          Materialize.pin(normalizeTs(apply(s, d, "events")))
         } finally prev match {
           case Some(v) => s.conf.set(nanosKey, v)
           case None    => s.conf.unset(nanosKey)

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -130,13 +131,13 @@ object BigramLmScore {
   def train(docs: DataFrame, textCol: String, topK: Int): BigramLmModel = {
     val arr = docs.select(split(col(textCol), " ").as("a"))
       .filter(size(col("a")) >= 2)
-    val g = arr.select(explode(expr(
+    val grams = arr.select(explode(expr(
         "transform(sequence(0, size(a)-2), i -> struct(" +
           "xxhash64(a[i]) AS h1, " +
           "xxhash64(concat(a[i], ' ', a[i+1])) AS h2))")).as("g"))
       .select(col("g.h1").as("h1"), col("g.h2").as("h2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // held for the vocabulary count and both top-k tables
+    Materialize.during(grams) { g =>
       val v = g.agg(count_distinct(col("h1"))).collect()(0).getLong(0)
       def top(keyCol: String): (Array[Long], Array[Long]) = {
         val rows = g.groupBy(col(keyCol).as("k")).agg(count(lit(1)).as("c"))
@@ -148,6 +149,6 @@ object BigramLmScore {
       val (c2k, c2c) = top("h2")
       val (c1k, c1c) = top("h1")
       new BigramLmModel(c2k, c2c, c1k, c1c, math.max(v, 1L))
-    } finally g.unpersist(blocking = false)
+    }
   }
 }

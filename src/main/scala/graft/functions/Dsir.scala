@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -130,10 +131,9 @@ object DsirScoreFx {
   def train(docs: DataFrame, textCol: String, idCol: String,
       isTarget: Column, buckets: Int): DsirModel = {
     import graft.operators.TextAnalysis
-    val grams = TextAnalysis.dsirGrams(docs, textCol, idCol, isTarget, buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val counts = TextAnalysis.dsirBucketCounts(grams).localCheckpoint()
+    Materialize.during(
+        TextAnalysis.dsirGrams(docs, textCol, idCol, isTarget, buckets)) { grams =>
+      val counts = Materialize.pin(TextAnalysis.dsirBucketCounts(grams))
       val (nrTot, ntTot) = TextAnalysis.dsirTotals(counts)
       val spark = docs.sparkSession
       val default = spark.range(1)
@@ -144,6 +144,6 @@ object DsirScoreFx {
         arr(r.getLong(0).toInt) = r.getLong(1)
       }
       new DsirModel(arr, buckets)
-    } finally grams.unpersist(blocking = false)
+    }
   }
 }

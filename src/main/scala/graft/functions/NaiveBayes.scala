@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -173,11 +174,10 @@ object NbPredict {
   def train(docs: DataFrame, textCol: String, idCol: String,
       labelCol: String, isTrain: Column, buckets: Int): NbModel = {
     import graft.operators.{TextAnalysis => TA}
-    val tk = TA.nbTokenStream(docs, textCol, idCol, labelCol, isTrain, buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cb = TA.nbCounts(tk).localCheckpoint()
-      val priors = TA.nbPriors(docs, labelCol, isTrain).localCheckpoint()
+    Materialize.during(
+        TA.nbTokenStream(docs, textCol, idCol, labelCol, isTrain, buckets)) { tk =>
+      val cb = Materialize.pin(TA.nbCounts(tk))
+      val priors = Materialize.pin(TA.nbPriors(docs, labelCol, isTrain))
       val priorRows = priors.collect()
         .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
       val labels = priorRows.map(_._1)
@@ -187,6 +187,6 @@ object NbPredict {
         lp(idx(r.getString(0)))(r.getLong(1).toInt) = r.getLong(2)
       }
       new NbModel(labels, priorRows.map(_._2), lp, buckets)
-    } finally tk.unpersist(blocking = false)
+    }
   }
 }

@@ -11,11 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `read(path)`, it owns the whole protocol:
   *   - the stamp: [[tableStamp]] of `dir/table`, so a rewritten table
   *     re-derives instead of serving stale data;
-  *   - the path: `root/family/md5(($root,$dir,$stamp):$key)`, where
+  *   - the path: `root/family/md5(($dir,$stamp):$key)`, where
   *     `root` is [[Ivf.indexRoot]] and `key` the family's format key
   *     from the caller's registry — the same map [[prune]] takes as
   *     `liveKeys`, so the key a writer records can never drift from the
-  *     one the reaper treats as live;
+  *     one the reaper treats as live. The root itself is not hashed, so
+  *     a copied or moved root is still hit;
   *   - the in-JVM memo, with builds serialized per path;
   *   - the commit ([[atomicCommit]], with a [[MetaFile]] provenance
   *     record) and the read-back.
@@ -131,26 +132,34 @@ object Artifacts {
     }
   }
 
-  /** Read a committed artifact with a per-(session, path) cached schema:
-    * a bare `read.parquet` re-runs footer schema inference as a driver
-    * job on every DataFrame construction, and artifact-backed queries
-    * construct fresh per bench rep. A certified artifact directory is
-    * IMMUTABLE (atomicCommit renames a complete table into place and
-    * never rewrites it — a new stamp/format is a new path), so the
-    * cached schema can never go stale. Data is still read fresh at
-    * execution; only the inference job is skipped. */
-  def readCachedSchema(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
-    val perSession = schemaCache.synchronized {
+  /** Read a parquet path with a per-(session, path) cached schema: a
+    * bare `read.parquet` re-runs footer schema inference as a driver job
+    * on every DataFrame construction (~25-30 ms per path), and queries
+    * construct fresh per bench rep. Serves both the committed artifacts
+    * and the dataset tables ([[graft.Tables]]). A certified artifact
+    * directory is IMMUTABLE (atomicCommit renames a complete table into
+    * place and never rewrites it — a new stamp/format is a new path), and
+    * a dataset table whose SCHEMA mutates in place mid-session is not a
+    * supported pattern, so a cached schema never goes stale. Data is
+    * still read fresh at execution; only the inference job is skipped. */
+  def readCachedSchema(spark: SparkSession, path: String): DataFrame = {
+    val schema =
+      cachedSchemas(spark).getOrElseUpdate(path, spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The path → schema map behind [[readCachedSchema]] for `spark`;
+    * `Tables.events` reads and fills it directly. */
+  private[graft] def cachedSchemas(spark: SparkSession) =
+    schemaCache.synchronized {
       schemaCache.computeIfAbsent(spark,
         _ => scala.collection.concurrent.TrieMap
           .empty[String, org.apache.spark.sql.types.StructType])
     }
-    val schema =
-      perSession.getOrElseUpdate(path, spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
-  }
-  // Weak-keyed by the session (see Tables.schemaCache): stopped sessions
-  // GC-evict their entries, and identity-hash reuse cannot cross sessions.
+  // Weak-keyed by the SESSION (not its identity hash): entries for
+  // stopped sessions are GC-evicted with the session, and a reused
+  // identity hash can never serve a schema another session inferred.
+  // Values are StructTypes only — nothing in a value pins its key alive.
   private val schemaCache =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String,
@@ -336,11 +345,14 @@ object Artifacts {
 
   // the one path derivation
   private def pathFor(root: String, family: String, key: String, dir: String,
-      stamp: Long): String = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"($root,$dir,$stamp):$key".getBytes("UTF-8"))
-    s"$root/$family/${md5.map("%02x".format(_)).mkString}"
-  }
+      stamp: Long): String =
+    s"$root/$family/${dirName(dir, stamp.toString, key)}"
+
+  // an artifact directory's name, from what its [[MetaFile]] records
+  private def dirName(dir: String, stamp: String, key: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s"($dir,$stamp):$key".getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
 
   /** Calls per (family, outcome) in this JVM. A call records:
     *   - `hit`: served from the memo or a committed artifact, no build;
@@ -425,8 +437,11 @@ object Artifacts {
     *     what lets the reaper see those dead-key orphans. Dead-key
     *     deletes are grace-windowed like temps/husks (a mixed-version
     *     fleet's other build writes keys this build doesn't know), and
-    *     a meta with NO key line is incomplete provenance → kept. A
-    *     recomputed
+    *     a meta with NO key line is incomplete provenance → kept. Under
+    *     the same `liveKeys` and grace rule a directory whose name is not
+    *     the derivation of its own meta (`dataset_dir`, `stamp`, `key`)
+    *     is a stray name nothing can reach — e.g. the earlier layout
+    *     that hashed the root into the name. A recomputed
     *     stamp of 0 (the table can no longer be fingerprinted from
     *     here) always KEEPS — never delete what can't be attributed.
     *   - certified dirs WITHOUT meta (pre-round-15 artifacts): kept.
@@ -505,26 +520,24 @@ object Artifacts {
               // the never-delete-what-can't-be-attributed doctrine
               val deadKey = m.get("key").exists(k0 =>
                 liveKeys.get(family).exists(_ != k0))
+              val strayName = liveKeys.contains(family) &&
+                m.get("key").exists(k0 => name != dirName(d, s, k0))
+              // dead keys and stray names are grace-windowed like
+              // temps/husks: in a MIXED-VERSION fleet (rolling
+              // upgrade/rollback) another build's reaper sees this
+              // build's fresh artifacts as unrecognized keys or names — a
+              // just-written artifact must not be destroyed by the other
+              // version's reaper. Operators should size --grace-ms to at
+              // least the upgrade window.
               if (cur == 0L)
                 PruneDecision(p.toString, "keep",
                   s"cannot re-fingerprint $d/$t from here")
-              else if (deadKey) {
-                // grace-windowed like temps/husks: in a MIXED-VERSION
-                // fleet (rolling upgrade/rollback) another build's
-                // reaper sees this build's fresh artifacts as
-                // unrecognized keys — a just-written artifact must not
-                // be destroyed by the other version's reaper. Operators
-                // should size --grace-ms to at least the upgrade window.
-                val idle = now - newestMtime(child)
-                if (idle > graceMs)
-                  del(s"dead format key ${m("key")} " +
-                    s"(live is ${liveKeys(family)}, idle ${idle}ms)")
-                else PruneDecision(p.toString, "keep",
-                  "key mismatch but within grace window (possible mixed-version fleet)")
-              }
-              else if (s == cur.toString)
-                PruneDecision(p.toString, "keep", "live stamp")
-              else del(s"dead stamp $s (live is $cur)")
+              else if (deadKey)
+                agedDel(s"dead format key ${m("key")}, live is ${liveKeys(family)}")
+              else if (s != cur.toString) del(s"dead stamp $s (live is $cur)")
+              else if (strayName)
+                agedDel(s"stray name, its meta derives ${dirName(d, s, m("key"))}")
+              else PruneDecision(p.toString, "keep", "live stamp")
             case _ =>
               PruneDecision(p.toString, "keep", "incomplete provenance meta")
           }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -77,7 +78,7 @@ object Dedup {
     * prunes inside the join, and the exact intersection is ONE native
     * `array_intersect` per surviving candidate pair. Still exact, still
     * worst-case quadratic on adversarial data — at extreme scale run it
-    * behind LSH candidates ([[minhashDupPairs]]). */
+    * behind LSH candidates ([[minhashDupPairsFrom]]). */
   def jaccardPairs(docs: DataFrame, textCol: String, idCol: String,
       n: Int, threshold: Double): DataFrame =
     jaccardPairsFrom(shingleTable(docs, textCol, idCol, n), threshold)
@@ -153,20 +154,13 @@ object Dedup {
       .distinct()
   }
 
-  /** MinHash-LSH near-dup detection, end to end: LSH candidates, then exact
-    * Jaccard verification restricted to those candidates. At 100 TB the
-    * candidate set is orders of magnitude smaller than all-pairs.
-    * Tokenizes on the fly (fine for one-shot use); composed pipelines
-    * should build a [[shingleTable]], persist it, and call
-    * [[minhashDupPairsFrom]] so the corpus is tokenized exactly once. */
-  def minhashDupPairs(docs: DataFrame, textCol: String, idCol: String,
-      n: Int, k: Int, bands: Int, threshold: Double): DataFrame =
-    minhashDupPairsFrom(shingleTable(docs, textCol, idCol, n), k, bands, threshold)
-
-  /** [[minhashDupPairs]] over a precomputed [[shingleTable]]. When `sh` is
-    * persisted by the caller, every consumer (both candidate-join sides and
-    * both verify-join sides) reads the cached hash arrays — one
-    * tokenization scan total instead of four. */
+  /** MinHash-LSH near-dup detection, end to end, over a precomputed
+    * [[shingleTable]]: LSH candidates, then exact Jaccard verification
+    * restricted to those candidates. At 100 TB the candidate set is orders
+    * of magnitude smaller than all-pairs. When `sh` is held or persisted by
+    * the caller, every consumer (both candidate-join sides and both
+    * verify-join sides) reads the stored hash arrays — one tokenization
+    * scan total instead of four. */
   def minhashDupPairsFrom(sh: DataFrame, k: Int, bands: Int,
       threshold: Double): DataFrame =
     jaccardVerifiedPairs(lshCandidatePairsFrom(sh, k, bands), sh, threshold)
@@ -497,14 +491,12 @@ object Dedup {
     * artifact-backed form. */
   def contaminatedDocsBloomFrom(corpusSh: DataFrame, benchSh0: DataFrame,
       fpp: Double = 0.01): DataFrame = {
-    // localCheckpoint: the distinct benchmark gram set has THREE consumers
-    // (the count that sizes the bitset, the bloom aggregation, the exact
-    // verify join) — on the path whose whole point is large benchmark
-    // sets, recomputing that explode+distinct shuffle per consumer is the
-    // first thing to cut. Eager checkpoint materializes it once; its
-    // storage is released with the frame, no persist pin to hand-release.
-    val benchSh = benchSh0.select(col("h")).distinct()
-      .localCheckpoint()
+    // pinned: the distinct benchmark gram set has THREE consumers (the
+    // count that sizes the bitset, the bloom aggregation, the exact verify
+    // join) — on the path whose whole point is large benchmark sets,
+    // recomputing that explode+distinct shuffle per consumer is the first
+    // thing to cut
+    val benchSh = Materialize.pin(benchSh0.select(col("h")).distinct())
     val expected = math.max(benchSh.count(), 1L)
     val bloom = benchSh.stat.bloomFilter("h", expected, fpp)
     val hits = corpusSh
@@ -533,27 +525,19 @@ object Dedup {
       n: Int, materialize: Boolean = true): DataFrame = {
     val gramsRaw = spanHashRows(docs, textCol, idCol, n)
     // materialize=false returns the raw plan (plan-quality assertions);
-    // the default persists the one tokenization for its two consumers and
-    // checkpoints the (tiny, per-doc) result before releasing it
+    // the default holds the one tokenization for its two consumers and
+    // pins the (tiny, per-doc) result. Pinning the corpus-sized instance
+    // rows instead was measured slower (r17: span_dedup 0.49 → 0.53 s,
+    // span_scrub 0.55 → 0.56 s).
     if (!materialize) spanDupStatsFrom(gramsRaw)
-    else {
-      // the qualityEnsemble-style input-checkpoint was tried here (r17)
-      // and measured a small LOSS (isolated mins: span_dedup 0.49 → 0.53,
-      // span_scrub 0.55 → 0.56): the instance-row frame is corpus-sized,
-      // so materializing IT costs more than the persist + eager
-      // result-checkpoint dance it would replace. Kept as-is.
-      val grams =
-        gramsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try spanDupStatsFrom(grams).localCheckpoint()
-      finally grams.unpersist(blocking = false)
-    }
+    else Materialize.during(gramsRaw)(g => Materialize.pin(spanDupStatsFrom(g)))
   }
 
   /** [[spanDupStats]] over precomputed (and persistable) span-hash
     * instance rows — any frame carrying (doc_id, h) one row per span
     * OCCURRENCE works, including the positional [[spanPositionRows]]
     * (extra columns are projected away). The caller owns
-    * persist/checkpoint. */
+    * materialization. */
   def spanDupStatsFrom(spanRows: DataFrame): DataFrame = {
     val grams = spanRows.select("doc_id", "h")
     // only the "in ≥ 2 distinct docs" FLAG is consumed, and that is
@@ -624,13 +608,10 @@ object Dedup {
     val spansRaw = spanPositionRows(docs, textCol, idCol, n)
     // materialize=false returns the raw plan (plan-quality assertions)
     if (!materialize) return spanScrubStages(docs, textCol, idCol, n, spansRaw)
-    // input-checkpoint variant measured a small loss here too (see
-    // spanDupStats) — the positional instance frame is corpus-sized.
-    val spans =
-      spansRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try spanScrubStages(docs, textCol, idCol, n, spans)
-      .localCheckpoint() // per-doc rows; frees the persist safely
-    finally spans.unpersist(blocking = false)
+    // pinning the positional instance frame was measured slower here too
+    // (see spanDupStats); the pinned result is per-doc rows
+    Materialize.during(spansRaw)(spans =>
+      Materialize.pin(spanScrubStages(docs, textCol, idCol, n, spans)))
   }
 
   /** (doc_id, pos, h) POSITIONAL span-hash rows — every `n`-token span
@@ -803,41 +784,38 @@ object Dedup {
     * converge to the per-component minimum; the driver only ever sees a
     * changed-count per iteration. */
   private def distributedClusters(pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("da").as("a"), col("db").as("b"))
+    val edgesRaw = pairs.select(col("da").as("a"), col("db").as("b"))
       .union(pairs.select(col("db").as("a"), col("da").as("b")))
-      .cache() // reused every iteration
-    // Eager localCheckpoint EVERY iteration, not cache(): each iteration's
-    // plan references `labels` twice (the union arm and the neighbor
-    // join), so a cached formulation nests the previous InMemoryRelation
-    // twice per level and the logical tree DOUBLES per iteration — AQE's
-    // plan-change logging then renders an exponentially-sized explain
-    // string and OOMs the driver near diameter 40. A checkpointed
-    // iteration is a flat LogicalRDD: plan size stays O(1) at any
-    // diameter, and the checkpoint stores one (node, lbl) row per
-    // duplicated doc in executor-local storage — the same footprint the
-    // cache held. Superseded checkpoints are freed by the ContextCleaner
-    // once unreferenced.
-    var labels = edges.select(col("a").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint()
-    var converged = false
-    while (!converged) {
-      // min over self + neighbors' labels
-      val viaNeighbor = edges
-        .join(labels.select(col("node").as("b"), col("lbl")), "b")
-        .select(col("a").as("node"), col("lbl"))
-      val next = labels.union(viaNeighbor)
-        .groupBy("node").agg(min("lbl").as("lbl"))
-        .localCheckpoint()
-      val changed = next.join(labels.withColumnRenamed("lbl", "old"), "node")
-        .filter(col("lbl") =!= col("old")).limit(1).count()
-      labels = next
-      converged = changed == 0
+    // edges are held for the whole loop (read every iteration). The labels
+    // are pinned EVERY iteration, not held: each iteration's plan
+    // references `labels` twice (the union arm and the neighbor join), so
+    // a held formulation nests the previous InMemoryRelation twice per
+    // level and the logical tree DOUBLES per iteration — AQE's plan-change
+    // logging then renders an exponentially-sized explain string and OOMs
+    // the driver near diameter 40. A pinned iteration is a flat
+    // LogicalRDD: plan size stays O(1) at any diameter, one (node, lbl)
+    // row per duplicated doc. Superseded pins are freed by the
+    // ContextCleaner once unreferenced.
+    Materialize.during(edgesRaw) { edges =>
+      var labels = Materialize.pin(edges.select(col("a").as("node")).distinct()
+        .withColumn("lbl", col("node")))
+      var converged = false
+      while (!converged) {
+        // min over self + neighbors' labels
+        val viaNeighbor = edges
+          .join(labels.select(col("node").as("b"), col("lbl")), "b")
+          .select(col("a").as("node"), col("lbl"))
+        val next = Materialize.pin(labels.union(viaNeighbor)
+          .groupBy("node").agg(min("lbl").as("lbl")))
+        val changed = next.join(labels.withColumnRenamed("lbl", "old"), "node")
+          .filter(col("lbl") =!= col("old")).limit(1).count()
+        labels = next
+        converged = changed == 0
+      }
+      // the final label table is pinned, so the caller's consumption does
+      // not re-run the iterative lineage
+      labels.select(col("node").as("doc_id"), col("lbl").as("canonical_id"))
     }
-    edges.unpersist()
-    // the final label table is checkpointed (already materialized), so the
-    // caller's consumption does not re-run the iterative lineage
-    labels.select(col("node").as("doc_id"), col("lbl").as("canonical_id"))
   }
 
   /** Oracle-reproducible SimHash: each token hashed to 60 bits of its md5

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -59,12 +60,12 @@ object Pca {
       s"Pca.fit: dims ($dims) and iters ($iters) must be positive — " +
         "0 iterations would return the uniform seed with eigval 0 and " +
         "every downstream sigma-threshold collapses to 0")
-    val base = emb
+    val rows = emb
       .select(col(idCol).cast(LongType).as("id"),
         col(vecCol).cast(ArrayType(DoubleType)).as("raw"))
       .filter(col("raw").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // held for the moments pass and every power iteration
+    Materialize.during(rows) { base =>
       // per-dim fixed-point means — the embeddingMoments recipe, the
       // doubles derived with Spark's own cast semantics IN the frame so
       // the collected literals are bit-identical to the SQL oracle's
@@ -138,7 +139,7 @@ object Pca {
         v = w.map(_ / nrm)
       }
       PcaModel(means, v, nrm)
-    } finally { base.unpersist(blocking = false); () }
+    }
   }
 
   /** [[fit]] rendered as the (dim, mean, loading, eigval) report. */

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -43,14 +44,14 @@ object Pq {
     // one materialization of (id, e) serves all m blocks' training jobs
     // (each Ivf.centroids run is a count + dims probe + collect) instead
     // of re-reading and re-normalizing the corpus ~3m times
-    val cached = b.select(col("id"), col("e"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try (0 until m).map { j =>
-      // id + j decorrelates the deterministic id-seeded init per block
-      val sub = cached.select((col("id") + lit(j.toLong)).as("id"),
-        slice(col("e"), j * len + 1, len).as("e"))
-      Ivf.centroids(sub, k, iters)
-    } finally cached.unpersist(blocking = false)
+    Materialize.during(b.select(col("id"), col("e"))) { held =>
+      (0 until m).map { j =>
+        // id + j decorrelates the deterministic id-seeded init per block
+        val sub = held.select((col("id") + lit(j.toLong)).as("id"),
+          slice(col("e"), j * len + 1, len).as("e"))
+        Ivf.centroids(sub, k, iters)
+      }
+    }
   }
 
   /** The m codeword ids of a vector — array<bigint>, each in [0, k). */

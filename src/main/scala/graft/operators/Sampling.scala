@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -241,7 +242,7 @@ object Sampling {
     * `Window.orderBy` with no partition spec collapses the corpus onto
     * one task, the classic 100 TB scale-killer. Instead: range-
     * repartition on the priority order (a parallel sort),
-    * `localCheckpoint` to pin the materialized partitions, per-partition
+    * [[graft.Materialize.pin]] the materialized partitions, per-partition
     * subtotals to the driver (one row per partition — bounded by the
     * shuffle-partition count, not the data), then a window WITHIN each
     * partition plus the broadcast partition offset. Every stage is
@@ -250,7 +251,7 @@ object Sampling {
       scoreCol: String, budget: Long): DataFrame = {
     val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val order = Seq(col(scoreCol).desc, col(idCol).asc)
-    // materialize the scored input ONCE before the range exchange (r17):
+    // pin the scored input ONCE before the range exchange (r17):
     // repartitionByRange runs a SAMPLING job over its child to pick the
     // range bounds, then the exchange's map pass executes the child
     // again — with an expensive input (tokenBudget's quality+token text
@@ -258,14 +259,13 @@ object Sampling {
     // serial stages. The input rows here are narrow (id, tokens, score)
     // triples; the sampler and the map pass then read blocks. Isolated
     // A/B (7-rep min, same box): q_token_budget 0.927 → 0.576 s.
-    val once = df.localCheckpoint()
+    val once = Materialize.pin(df)
     // pin the range partitioning: the subtotal pass and the final window
     // must read the SAME partitions, not a resampled recompute
-    val ordered = once
+    val ordered = Materialize.pin(once
       .repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("__pid", spark_partition_id()))
     val sums = ordered.groupBy("__pid").agg(sum(col(tokensCol)).as("t"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets = (0 until parts).scanLeft(0L)((acc, p) => acc + sums.getOrElse(p, 0L))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -180,12 +181,8 @@ object TextAnalysis {
     val gramsRaw = ngramRows(docs, textCol, idCol, n, distinct = true)
       .select(col(idCol), xxhash64(col("gram")).as("h"))
     if (!materialize) gramNoveltyFrom(gramsRaw, idCol)
-    else {
-      val grams =
-        gramsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try gramNoveltyFrom(grams, idCol).localCheckpoint()
-      finally grams.unpersist(blocking = false)
-    }
+    else Materialize.during(gramsRaw)(g =>
+      Materialize.pin(gramNoveltyFrom(g, idCol)))
   }
 
   /** [[gramNovelty]] over precomputed per-document-DISTINCT (id, h) gram
@@ -233,11 +230,10 @@ object TextAnalysis {
         transform(graft.functions.ShingleText.shingleText(col(textCol), 2),
           s => struct(lit("b").as("kind"), s.as("gram"))))).as("kg"))
       .select(col("kg.kind").as("kind"), col("kg.gram").as("gram"))
-    // vocabulary-sized after the one shuffle; localCheckpoint so the four
+    // vocabulary-sized after the one shuffle; pinned so the four
     // consumers below (two totals, two sides) don't re-run the corpus scan
-    val counts = tagged.groupBy("kind", "gram")
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val counts = Materialize.pin(tagged.groupBy("kind", "gram")
+      .agg(count(lit(1)).as("c")))
     val uni = counts.filter(col("kind") === "u").select(col("gram"), col("c"))
     val bi = counts.filter(col("kind") === "b")
       .select(col("gram").as("bigram"), col("c").as("cb"))
@@ -398,21 +394,19 @@ object TextAnalysis {
         "transform(sequence(0, size(a)-2), i -> " +
           "struct(a[i] AS w1, concat(a[i], ' ', a[i+1]) AS g2))")).as("g"))
       .select(col(idCol), col("g.w1").as("w1"), col("g.g2").as("g2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // eager: the scored table materializes before the gram persist
-      // is released, so nothing downstream re-tokenizes
-      val perDoc = lmPerDocScores(grams, idCol).localCheckpoint()
-      docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-        .select(col(idCol),
-          coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-          coalesce(col("lm_score"), lit(0.0)).as("lm_score"))
-    } finally grams.unpersist(blocking = false)
+    // the scored table is pinned while the gram stream is held, so
+    // nothing downstream re-tokenizes
+    val perDoc = Materialize.during(grams)(g =>
+      Materialize.pin(lmPerDocScores(g, idCol)))
+    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
+        coalesce(col("lm_score"), lit(0.0)).as("lm_score"))
   }
 
   /** The window-free scoring pipeline over a (id, w1, g2) gram-occurrence
     * frame, un-checkpointed — split out so PlanQualitySpec can assert the
-    * plan shape (the public [[lmScore]] localCheckpoints it, which
+    * plan shape (the public [[lmScore]] pins it, which
     * truncates the observable physical plan). */
   private[graft] def lmPerDocScores(grams: org.apache.spark.sql.DataFrame,
       idCol: String): org.apache.spark.sql.DataFrame = {
@@ -465,21 +459,20 @@ object TextAnalysis {
   def dsirScores(docs: org.apache.spark.sql.DataFrame, textCol: String,
       idCol: String, isTarget: Column,
       buckets: Int = 4096): org.apache.spark.sql.DataFrame = {
-    val grams = dsirGrams(docs, textCol, idCol, isTarget, buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the B-row count table materializes ONCE (so the totals reduction
-      // and the ratio projection never re-scan the gram stream), totals
-      // bake in as literals, and the scored frame checkpoints before the
-      // gram persist is released
-      val counts = dsirBucketCounts(grams).localCheckpoint()
+    // the B-row count table is pinned ONCE (so the totals reduction and
+    // the ratio projection never re-scan the gram stream), totals bake in
+    // as literals, and the scored frame is pinned while the gram stream
+    // is held
+    val perDoc = Materialize.during(
+        dsirGrams(docs, textCol, idCol, isTarget, buckets)) { grams =>
+      val counts = Materialize.pin(dsirBucketCounts(grams))
       val table = dsirLrTable(counts, buckets)
-      val perDoc = dsirPerDocScores(grams, table, idCol).localCheckpoint()
-      docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-        .select(col(idCol),
-          coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-          coalesce(col("dsir_score"), lit(0.0)).as("dsir_score"))
-    } finally grams.unpersist(blocking = false)
+      Materialize.pin(dsirPerDocScores(grams, table, idCol))
+    }
+    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
+        coalesce(col("dsir_score"), lit(0.0)).as("dsir_score"))
   }
 
   /** The (id, is_target, b) bucketed-bigram occurrence stream. */
@@ -767,17 +760,15 @@ object TextAnalysis {
   def nbClassify(docs: org.apache.spark.sql.DataFrame, textCol: String,
       idCol: String, labelCol: String, isTrain: Column,
       buckets: Int = 1024): org.apache.spark.sql.DataFrame = {
-    val tk = nbTokenStream(docs, textCol, idCol, labelCol, isTrain, buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // counts and priors materialize once (tiny frames) so the dense
+    Materialize.during(
+        nbTokenStream(docs, textCol, idCol, labelCol, isTrain, buckets)) { tk =>
+      // counts and priors are pinned once (tiny frames) so the dense
       // model and the scoring never re-run their aggregations
-      val cb = nbCounts(tk).localCheckpoint()
-      val priors = nbPriors(docs, labelCol, isTrain).localCheckpoint()
+      val cb = Materialize.pin(nbCounts(tk))
+      val priors = Materialize.pin(nbPriors(docs, labelCol, isTrain))
       val model = nbModelTable(cb, priors, buckets)
-      nbScore(tk, docs, priors, model, idCol, labelCol, isTrain)
-        .localCheckpoint()
-    } finally tk.unpersist(blocking = false)
+      Materialize.pin(nbScore(tk, docs, priors, model, idCol, labelCol, isTrain))
+    }
   }
 
   /** (idCol, label, is_train, b) — one exploded bucketed-token stream

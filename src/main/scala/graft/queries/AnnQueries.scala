@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators.{Dedup, Ivf, Similarity}
 import SharedArtifacts.{IvfDims, IvfIters, IvfNlist, PcaIters, PqIters, PqK, PqM,
   int8IndexVectors, sharedCentroids, sharedCodebooks, sharedPcaModel}
@@ -430,15 +430,14 @@ object AnnQueries extends QueryFamily {
       .select(col("id").as("qid"), col("raw").as("qvec")))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("cid").asc)
-    b.select(col("id").as("cid"), col("raw").as("cvec"))
+    Materialize.pin(b.select(col("id").as("cid"), col("raw").as("cvec"))
       .crossJoin(queries)
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         VectorOps.cosineSimilarity(col("qvec"), col("cvec")).as("sim"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
-      .select("qid", "cid")
-      .localCheckpoint()
+      .select("qid", "cid"))
   }
 
   /** [[ivfRecall]] against caller-supplied centroids/config — the form
@@ -514,7 +513,7 @@ object AnnQueries extends QueryFamily {
         VectorOps.cosineSimilarity(col("qvec"), col("cvec")).as("sim"))
     // each pair is scored ONCE either way: the single consumer below
     // replicates rows per swept threshold via the crossJoin, so the
-    // former eager localCheckpoint only added a materialization job (r16)
+    // former eager pin only added a materialization job (r16)
     val thresholds = spark.createDataFrame(IvfSweepProbes.map(Tuple1(_)))
       .toDF("nprobe")
     val w = org.apache.spark.sql.expressions.Window
@@ -589,7 +588,7 @@ object AnnQueries extends QueryFamily {
   def ivfOccupancy(spark: SparkSession, dir: String): DataFrame = {
     val b = Ivf.base(Tables.embeddings(spark, dir), "vec_id", "embedding")
     // the total rides a window over the ≤nlist post-agg frame (the
-    // q_cluster_sizes shape) instead of the former localCheckpoint +
+    // q_cluster_sizes shape) instead of the former pin +
     // crossJoin against the aggregate's own total — same result, two
     // fewer jobs, and the corpus-sized assignment scan still runs once
     val w = org.apache.spark.sql.expressions.Window.partitionBy()
@@ -1252,19 +1251,17 @@ object AnnQueries extends QueryFamily {
     // the posexplode feeds a (label, dim)-keyed decimal hash aggregate,
     // and 32 fanned tasks each allocate a labels×dims BigDecimal agg
     // table — the collocationsTopK lesson; left on the 1-task scan
-    val x = Tables.embeddings(spark, dir)
+    val exploded = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         posexplode(col("embedding")).as(Seq("dim", "v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cent = x.groupBy("label", "dim")
+    Materialize.during(exploded) { x =>
+      // labels x dims; feeds the pair join AND the member-distance broadcast
+      val cent = Materialize.pin(x.groupBy("label", "dim")
         .agg(count(lit(1)).as("n"),
           sum(floor(col("v").cast(DoubleType) * lit(1e6)).cast(LongType)
             .cast(DecimalType(38, 0))).as("s_fx"))
         .select(col("label"), col("dim"),
-          (col("s_fx").cast(DoubleType) / col("n") / lit(1e6)).as("c"))
-        .localCheckpoint() // labels x dims; feeds the pair join AND the
-                           // member-distance broadcast
+          (col("s_fx").cast(DoubleType) / col("n") / lit(1e6)).as("c")))
       val pairD = cent.as("a").join(cent.as("b"),
           col("a.dim") === col("b.dim") && col("a.label") < col("b.label"))
         .select(col("a.label").as("label_a"), col("b.label").as("label_b"),
@@ -1273,7 +1270,8 @@ object AnnQueries extends QueryFamily {
         .groupBy("label_a", "label_b")
         .agg(sqrt(sum(col("d2fx")).cast(DoubleType) / lit(1e12))
           .as("centroid_dist"))
-      val intra = x.join(broadcast(cent), Seq("label", "dim"))
+      // labels-sized; joined twice below
+      val intra = Materialize.pin(x.join(broadcast(cent), Seq("label", "dim"))
         .groupBy(col("vec_id"), col("label"))
         .agg(sum(floor((col("v").cast(DoubleType) - col("c")) *
           (col("v").cast(DoubleType) - col("c")) * lit(1e12))
@@ -1284,8 +1282,7 @@ object AnnQueries extends QueryFamily {
         .groupBy("label")
         .agg(count(lit(1)).as("n_vecs"),
           (sum(col("dfx")).cast(DoubleType) / count(lit(1)) / lit(1e6))
-            .as("intra"))
-        .localCheckpoint() // labels-sized; joined twice below
+            .as("intra")))
       pairD
         .join(broadcast(intra.select(col("label").as("label_a"),
           col("n_vecs").as("n_a"), col("intra").as("intra_a"))), Seq("label_a"))
@@ -1298,7 +1295,7 @@ object AnnQueries extends QueryFamily {
             .otherwise(col("centroid_dist") * lit(2.0) /
               (col("intra_a") + col("intra_b"))).as("separation"))
         .orderBy("label_a", "label_b")
-    } finally x.unpersist(blocking = false)
+    }
   }
   // label separation: the q_label_centroids fixed-point sums, pair
   // distances and per-member distances floor-quantized before any

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators.{TextAnalysis => TA}
 import QualityQueries.qualitySql
 import SharedArtifacts.sharedSourceGrams
@@ -438,12 +438,11 @@ object AuditQueries extends QueryFamily {
     * equi-join of the (source, word) frame with the per-word table,
     * while source totals and the corpus total attach as broadcasts. */
   def sourceKl(spark: SparkSession, dir: String): DataFrame = {
-    val sw = Tables.documents(spark, dir)
+    // one tokenization scan feeding THREE re-aggregations below
+    val sw = Materialize.pin(Tables.documents(spark, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("word"))
       .groupBy("source", "word")
-      .agg(count(lit(1)).as("c_sw"))
-      // one tokenization scan feeding THREE re-aggregations below
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c_sw")))
     val byWord = sw.groupBy("word").agg(sum(col("c_sw")).as("c_w"))
     val bySrc = sw.groupBy("source")
       .agg(sum(col("c_sw")).as("n_s"), count(lit(1)).cast(LongType).as("vocab"))

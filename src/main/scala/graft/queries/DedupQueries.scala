@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators.{Dedup, TextAnalysis => TA}
 import QualityQueries.{SelfDedupW, scrubAggCtes, stopList}
 import SharedArtifacts.{SweepThresholds, nearDupClusters, sharedShingles,
@@ -112,11 +112,11 @@ object DedupQueries extends QueryFamily {
   def dedupSweep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
-    // localCheckpoint so nPairs and nDocs evaluate the pair table ONCE:
+    // pinned so nPairs and nDocs evaluate the pair table ONCE:
     // negligible on the artifact path (the pair list is tiny), and on
     // the stamp-0 / unwritable-root FALLBACK it is what keeps the
     // dominant candidate self-join from running twice in one query
-    val pj = sweepPairs(spark, dir).localCheckpoint()
+    val pj = Materialize.pin(sweepPairs(spark, dir))
     val hot = sweepHotStats(spark, dir)
     val th = SweepThresholds.toDF("threshold")
     val sel = pj.crossJoin(broadcast(th))
@@ -454,13 +454,12 @@ object DedupQueries extends QueryFamily {
   def clusterBest(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val clusters = nearDupClusters(spark, dir)
-    // dup-docs-sized; checkpoint so the scan feeding BOTH consumers
-    // below (the argmax and the output join) runs once
-    val members = docs
+    // dup-docs-sized; pinned so the scan feeding BOTH consumers below
+    // (the argmax and the output join) runs once
+    val members = Materialize.pin(docs
       .join(broadcast(clusters), Seq("doc_id"))
       .select(col("doc_id"), col("canonical_id"),
-        TA.distinctTokenRatio(col("text")).as("quality"))
-      .localCheckpoint()
+        TA.distinctTokenRatio(col("text")).as("quality")))
     // max of (quality, -doc_id) = highest quality, lowest id on ties —
     // doc_id is unique, so the argmax is total and deterministic
     val best = members.groupBy("canonical_id")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators.{Dedup, TextAnalysis => TA}
 import AuditQueries.pctl
 import SharedArtifacts.{DsirBuckets, NbBuckets, sharedBpeModel, sharedDsirScores,
@@ -75,12 +75,11 @@ object QualityQueries extends QueryFamily {
     * exact/approx parity contract); the oracle hash-check needs the exact
     * form, so that is what this query runs. */
   def adaptiveQualityGate(spark: SparkSession, dir: String): DataFrame = {
-    val scored = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), TA.qualityScore(col("text")).as("quality"))
-      // materialized once (r17, the qualityAgreement rule): adaptiveGate
-      // consumes this twice (threshold aggregate + join-back), and each
-      // consumption re-ran the qualityScore text pass. Narrow rows.
-      .localCheckpoint()
+    // pinned once (r17, the qualityAgreement rule): adaptiveGate
+    // consumes this twice (threshold aggregate + join-back), and each
+    // consumption re-ran the qualityScore text pass. Narrow rows.
+    val scored = Materialize.pin(Tables.documents(spark, dir)
+      .select(col("doc_id"), col("lang"), TA.qualityScore(col("text")).as("quality")))
     graft.operators.Sampling.adaptiveGate(scored, "lang", "quality",
         quantile = 0.25, exact = true)
       .withColumnRenamed("q_thr", "q25")
@@ -218,10 +217,10 @@ object QualityQueries extends QueryFamily {
     * set is broadcast back — the corpus side never shuffles for the
     * membership test, the same shape as benchmark decontamination. */
   def boilerplate(spark: SparkSession, dir: String, minDf: Int = 5): DataFrame =
-    // checkpoint BEFORE the orderBy: the global sort's range-partitioner
+    // pinned BEFORE the orderBy: the global sort's range-partitioner
     // sampling would otherwise execute the df-count + membership join twice
-    TA.boilerplateStats(Tables.documents(spark, dir), "text", "doc_id", minDf)
-      .localCheckpoint()
+    Materialize.pin(
+        TA.boilerplateStats(Tables.documents(spark, dir), "text", "doc_id", minDf))
       .orderBy("doc_id")
   query("q_boilerplate", Oracle(
       """WITH arr AS (SELECT doc_id, STRING_SPLIT(text, ' ') a FROM documents),
@@ -564,13 +563,12 @@ object QualityQueries extends QueryFamily {
     * (classes-sized frames) and a broadcast join — the expensive part
     * is the classify chain itself, already plan-proven. */
   def nbEval(spark: SparkSession, dir: String): DataFrame = {
-    val cls = sharedNbHoldout(spark, dir)
-      // the classify chain (train aggregation + scoring scan) is the
-      // audit's dominant cost and feeds BOTH aggregations below —
-      // checkpoint the holdout-sized result so it runs once, not twice
-      // (artifact-backed reads make this a cheap parquet re-read either
-      // way; the checkpoint covers the stamp-0 inline fallback)
-      .localCheckpoint()
+    // the classify chain (train aggregation + scoring scan) is the
+    // audit's dominant cost and feeds BOTH aggregations below — pin the
+    // holdout-sized result so it runs once, not twice (artifact-backed
+    // reads make this a cheap parquet re-read either way; the pin covers
+    // the stamp-0 inline fallback)
+    val cls = Materialize.pin(sharedNbHoldout(spark, dir))
     val byTrue = cls.groupBy("label")
       .agg(count(lit(1)).as("n_true"),
         sum(when(col("correct"), 1L).otherwise(0L)).as("n_correct"))
@@ -1139,15 +1137,14 @@ object QualityQueries extends QueryFamily {
     * with DuckDB's native PERCENT_RANK — cross-validating the
     * histogram formulation against the engine-native one. */
   def qualityEnsemble(spark: SparkSession, dir: String): DataFrame = {
-    // one checkpoint of the narrow signal frame instead of the former
-    // persist + eager result-checkpoint + unpersist dance (r17): the
-    // four consumers (three rank branches + the ranked join) read the
-    // materialized blocks, the selection itself executes lazily in the
-    // caller's action, and the profiled job count drops 16 → ~8.
-    val sigs = Tables.documents(spark, dir).select(col("doc_id") +:
+    // one pin of the narrow signal frame instead of the former held
+    // input plus pinned result (r17): the four consumers (three rank
+    // branches + the ranked join) read the stored blocks, the selection
+    // itself executes lazily in the caller's action, and the profiled
+    // job count drops 16 → ~8.
+    val sigs = Materialize.pin(Tables.documents(spark, dir).select(col("doc_id") +:
         ensembleSignals(col("text"), col("n_chars"))
-          .map { case (n, c) => c.as(n) }: _*)
-      .localCheckpoint()
+          .map { case (n, c) => c.as(n) }: _*))
     qualityEnsembleSelected(sigs)
   }
   query("q_quality_ensemble", Oracle(
@@ -1163,8 +1160,8 @@ object QualityQueries extends QueryFamily {
         |SELECT doc_id, n_tokens, r_tokens, r_ttr, r_mwl, ens
         |FROM rk WHERE rr <= 100 ORDER BY doc_id""".stripMargin))(qualityEnsemble)
 
-  /** The un-checkpointed selection plan over a signal frame — split out so
-    * PlanQualitySpec can assert the physical shape (localCheckpoint above
+  /** The unpinned selection plan over a signal frame — split out so
+    * PlanQualitySpec can assert the physical shape (the pin above
     * truncates the observable plan to an RDD scan). */
   private[queries] def qualityEnsembleSelected(sigs: DataFrame): DataFrame = {
     val ranked = sigs
@@ -1216,9 +1213,9 @@ object QualityQueries extends QueryFamily {
       names.map(n => sum(col(n)).as(s"sx_$n")) ++
         names.map(n => sum(col(n) * col(n)).as(s"sq_$n")) ++
         corrPairs.map { case (a, b) => sum(col(a) * col(b)).as(s"sp_${a}_$b") }
-    val m = sigs
-      .agg(count(lit(1)).cast(DecimalType(38, 0)).as("n"), aggs: _*)
-      .localCheckpoint() // 1 row, consumed once per pair below
+    // 1 row, consumed once per pair below
+    val m = Materialize.pin(sigs
+      .agg(count(lit(1)).cast(DecimalType(38, 0)).as("n"), aggs: _*))
     def corrRow(a: String, b: String): DataFrame = {
       val num = col("n") * col(s"sp_${a}_$b") - col(s"sx_$a") * col(s"sx_$b")
       def den(s: String) = col("n") * col(s"sq_$s") - col(s"sx_$s") * col(s"sx_$s")
@@ -1339,15 +1336,15 @@ object QualityQueries extends QueryFamily {
     * cells/source), which only coarsens rank resolution, never
     * correctness. */
   def qualityCalibrated(spark: SparkSession, dir: String): DataFrame = {
-    val sig = Tables.documents(spark, dir).select(col("doc_id"), col("source"),
-      floor(TA.qualityScore(col("text")) * lit(1000000.0))
-        .cast(LongType).as("q_fx"))
-      // materialized once (r17, the qualityAgreement rule): the histogram
-      // branch and the broadcast-join-back branch each re-ran the
-      // qualityScore text pass without the barrier — profiled as two
-      // ~300 ms single-task corpus stages. The checkpointed rows are
-      // narrow (doc_id, source, q_fx) triples. Isolated A/B below.
-      .localCheckpoint()
+    // pinned once (r17, the qualityAgreement rule): the histogram
+    // branch and the broadcast-join-back branch each re-ran the
+    // qualityScore text pass without the barrier — profiled as two
+    // ~300 ms single-task corpus stages. The pinned rows are narrow
+    // (doc_id, source, q_fx) triples. Isolated A/B below.
+    val sig = Materialize.pin(Tables.documents(spark, dir)
+      .select(col("doc_id"), col("source"),
+        floor(TA.qualityScore(col("text")) * lit(1000000.0))
+          .cast(LongType).as("q_fx")))
     val wCum = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("q_fx"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -1444,29 +1441,27 @@ object QualityQueries extends QueryFamily {
     * percentile aggregate broadcast back, then everything is 3×3. */
   def qualityAgreement(spark: SparkSession, dir: String): DataFrame = {
     val thirds = lit(Array(1.0 / 3.0, 2.0 / 3.0))
-    val scored = Tables.documents(spark, dir)
+    // pinned once (r17): both the percentile-cut aggregate and the
+    // bucket-cell pass consume this frame, and without the barrier each
+    // re-runs the qualityScore text pass over the corpus — the query's
+    // dominant compute, profiled as two ~160 ms corpus stages. The pinned
+    // rows are 24-byte (doc_id, q, lm_score) triples. Isolated A/B (7-rep
+    // min, back-to-back): 0.665 → 0.511 s.
+    val scored = Materialize.pin(Tables.documents(spark, dir)
       .select(col("doc_id"), TA.qualityScore(col("text")).as("q"))
       .join(sharedLmScores(spark, dir).select(col("doc_id"), col("lm_score")),
-        Seq("doc_id"))
-      // materialized once (r17): both the percentile-cut aggregate and
-      // the bucket-cell pass consume this frame, and without the barrier
-      // each re-runs the qualityScore text pass over the corpus — the
-      // query's dominant compute, profiled as two ~160 ms corpus stages.
-      // The checkpointed rows are 24-byte (doc_id, q, lm_score) triples —
-      // ~1000x narrower than the text they summarize, the exactTopKPairs
-      // rule. Isolated A/B (7-rep min, back-to-back): 0.665 → 0.511 s.
-      .localCheckpoint()
+        Seq("doc_id")))
     val cuts = scored.agg(
       percentile(col("q"), thirds).as("qc"),
       percentile(col("lm_score"), thirds).as("lc"))
-    val cells = scored.crossJoin(broadcast(cuts))
+    // <= 9 rows; feeds the kappa scalars + output rows
+    val cells = Materialize.pin(scored.crossJoin(broadcast(cuts))
       .select(
         size(filter(col("qc"), c => col("q") >= c)).cast(LongType)
           .as("q_bucket"),
         size(filter(col("lc"), c => col("lm_score") >= c)).cast(LongType)
           .as("lm_bucket"))
-      .groupBy("q_bucket", "lm_bucket").agg(count(lit(1)).as("n_docs"))
-      .localCheckpoint() // <= 9 rows; feeds the kappa scalars + output rows
+      .groupBy("q_bucket", "lm_bucket").agg(count(lit(1)).as("n_docs")))
     // kappa from the <= 9 checkpointed cells DRIVER-SIDE (r17): the former
     // total/diag/rowM/colM/chance frame chain ran as ~10 serial one-row
     // Spark jobs plus three broadcast builds — ~0.3 s of pure job overhead

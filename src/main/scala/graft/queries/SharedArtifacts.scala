@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators.{Artifacts, Dedup, Ivf, TextAnalysis => TA}
 
 /** The persisted artifacts that several query families read — shingle
@@ -33,12 +33,10 @@ object SharedArtifacts {
       // weights / best / clean_corpus / leakage_safe_split) consume it,
       // and the component-minimum fixpoint is deterministic under any
       // execution schedule, so the artifact read equals a recompute
-      val sh = sharedShingles(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try Dedup.duplicateClusters(
-        Dedup.minhashDupPairsFrom(sh, k = 64, bands = 16, threshold = 0.8)
-          .select("da", "db"))
-      finally sh.unpersist(blocking = false)
+      Materialize.during(sharedShingles(spark, dir))(sh =>
+        Dedup.duplicateClusters(
+          Dedup.minhashDupPairsFrom(sh, k = 64, bands = 16, threshold = 0.8)
+            .select("da", "db")))
     }
 
   // IVF configuration shared by the query, the SemDeDup query, and the
@@ -180,8 +178,8 @@ object SharedArtifacts {
     * read-back equals a retokenization (DedupCapSpec compares query
     * outputs across both paths implicitly: first call writes, later
     * calls read). Callers do NOT persist
-    * the returned frame (r16 measured the persist/localCheckpoint
-    * scaffolding a net loss against cheap columnar artifact re-scans);
+    * the returned frame (r16 measured holding or pinning it a net
+    * loss against cheap columnar artifact re-scans);
     * the accepted cost is that on the stamp-0 fallback each self-join
     * consumer re-tokenizes — correct, just slower in that degraded
     * environment (the sweepPairs thunk documents the same trade). */
@@ -202,7 +200,7 @@ object SharedArtifacts {
   private[graft] def sweepPairs(spark: SparkSession, dir: String): DataFrame =
     Artifacts.frame(spark, liveArtifactKeys, "graft_sweep_pairs", dir,
         "documents") {
-      // no localCheckpoint here: on the stamp-0 / unwritable-root
+      // no pin here: on the stamp-0 / unwritable-root
       // fallback this thunk is re-evaluated PER CALL and an eager
       // checkpoint would pin block-manager state until the GC-driven
       // ContextCleaner gets to it; the self-join reads the shingle

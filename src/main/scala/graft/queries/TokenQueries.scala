@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators.{TextAnalysis => TA}
 import QualityQueries.qualitySql
 import SharedArtifacts.{BpeMaxWords, BpeNumMerges, sharedBpeModel, sharedShingles}
@@ -80,9 +80,8 @@ object TokenQueries extends QueryFamily {
   def rareTokens(spark: SparkSession, dir: String): DataFrame = {
     val words = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-    val byWord = words.groupBy("word").agg(count(lit(1)).as("c_w"))
-      // word counts feed the totals AND the join back — one scan
-      .localCheckpoint()
+    // word counts feed the totals AND the join back — one scan
+    val byWord = Materialize.pin(words.groupBy("word").agg(count(lit(1)).as("c_w")))
     val totals = byWord.agg(sum(col("c_w")).as("total"),
       count(lit(1)).cast(LongType).as("vocab"))
     words.join(byWord, Seq("word"))
@@ -664,15 +663,15 @@ object TokenQueries extends QueryFamily {
       .select(bucketOf(col("fd")).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("new_words"))
     val docTok = words.groupBy("doc_id").agg(count(lit(1)).as("n_tok"))
-    val base = docs.select(col("doc_id")).join(docTok, Seq("doc_id"))
+    // <= 10 rows; feeds the triangular join twice
+    val base = Materialize.pin(docs.select(col("doc_id")).join(docTok, Seq("doc_id"))
       .crossJoin(broadcast(maxDoc))
       .select(bucketOf(col("doc_id")).as("bucket"), col("n_tok"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
       .join(newWords, Seq("bucket"), "left")
       .select(col("bucket"), col("n_docs"), col("n_tokens"),
-        coalesce(col("new_words"), lit(0L)).as("new_words"))
-      .localCheckpoint() // <= 10 rows; feeds the triangular join twice
+        coalesce(col("new_words"), lit(0L)).as("new_words")))
     base.as("b").join(base.as("p"), col("p.bucket") <= col("b.bucket"))
       .groupBy(col("b.bucket").as("bucket"))
       .agg(sum(col("p.n_docs")).as("prefix_docs"),
@@ -725,11 +724,11 @@ object TokenQueries extends QueryFamily {
     * aggregate. The degenerate all-equal-counts corpus reports NULL
     * slope (zero denominator) rather than an ANSI division error. */
   def zipfSlope(spark: SparkSession, dir: String): DataFrame = {
-    val top = Tables.documents(spark, dir)
+    // <= k rows; feeds the triangular join twice
+    val top = Materialize.pin(Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("word").asc).limit(ZipfTopK)
-      .localCheckpoint() // <= k rows; feeds the triangular join twice
+      .orderBy(col("n").desc, col("word").asc).limit(ZipfTopK))
     // (n desc, word asc) is a total order, so rank = 1 + #{better rows}
     val ranked = top.as("a").join(top.as("b"),
         col("b.n") > col("a.n") ||

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.Materialize
 import graft.rules.Model.RuleFile
 import graft.rules.Engine
 
@@ -657,10 +658,9 @@ object StreamOps {
       if (idxExists)
         readIndexMigrated(spark, indexPath).filter(col("batch_id") =!= batchId)
       else sig.filter(lit(false))
-    // survivors come back in index shape; localCheckpoint before the
-    // write so it does not re-read the index it modifies
-    val survivors = Dedup.dedupAgainstIndex(sig, index, threshold)
-      .localCheckpoint()
+    // survivors come back in index shape; pinned before the write so it
+    // does not re-read the index it modifies
+    val survivors = Materialize.pin(Dedup.dedupAgainstIndex(sig, index, threshold))
     survivors.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -738,9 +738,9 @@ object StreamOps {
           .filter(col("batch_id") =!= batchId)
           .select("doc", "simhash")
       else sig.filter(lit(false))
-    val survivors = Dedup.dedupAgainstSimhashIndex(
-        sig, index, maxHamming, bits, bands)
-      .localCheckpoint()
+    // pinned before the write so it does not re-read the index it modifies
+    val survivors = Materialize.pin(Dedup.dedupAgainstSimhashIndex(
+        sig, index, maxHamming, bits, bands))
     survivors.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -829,9 +829,9 @@ object StreamOps {
       .join(oldVecs, Seq("oid"))
       .filter(VectorOps.cosineSimilarity(col("nv"), col("ov")) >= threshold)
       .select(col("nid").as("id")).distinct()
-    b.join(dropped, Seq("id"), "left_anti")
-      .select("id", "scale", "bin", "buckets")
-      .localCheckpoint() // do not re-read the index the write modifies
+    // do not re-read the index the write modifies
+    Materialize.pin(b.join(dropped, Seq("id"), "left_anti")
+        .select("id", "scale", "bin", "buckets"))
       .withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

@@ -348,6 +348,65 @@ class ArtifactProtocolSpec extends AnyFunSuite {
     }
   }
 
+  // the source listing is taken before copying, so `dst` may lie inside `src`
+  private def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    val w = java.nio.file.Files.walk(src)
+    try w.iterator().asScala.toList.foreach { p =>
+      val t = dst.resolve(src.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t)
+    } finally w.close()
+  }
+
+  test("an entry-point call on a copy of a committed root records a hit, not a build") {
+    withTempRoot { root =>
+      val first = shingleSet(SharedArtifacts.sharedShingles(spark, dir))
+      val copy = root.resolve("copy")
+      copyTree(root, copy)
+      spark.conf.set("spark.graft.index.root", copy.toString)
+      val (second, counted) =
+        outcomes(shingleSet(SharedArtifacts.sharedShingles(spark, dir)))
+      assert(second == first, "the copied artifact must serve the same rows")
+      assert(counted.getOrElse("hit", 0L) > 0L && !counted.contains("build") &&
+        !counted.contains("read_fallback"),
+        s"a copied root must be hit, not rebuilt: counted $counted")
+    }
+  }
+
+  test("prune --apply with grace 0 reaps an artifact committed under the root-hashed name and keeps the current one") {
+    withTempRoot { root =>
+      val live = shingleSet(SharedArtifacts.sharedShingles(spark, dir))
+      import scala.jdk.CollectionConverters._
+      val fam = root.resolve("graft_shingle_table")
+      val current = java.nio.file.Files.list(fam).iterator().asScala.toSeq.head
+      val m = graft.operators.Artifacts.readMeta(spark, current.toString).get
+      // the earlier layout hashed the root into the name; the same
+      // committed files and meta under that name
+      val oldName = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"($root,${m("dataset_dir")},${m("stamp")}):${m("key")}"
+          .getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+      assert(current.getFileName.toString != oldName,
+        "the current name must not hash the root")
+      val old = fam.resolve(oldName)
+      copyTree(current, old)
+      ageRecursively(old, System.currentTimeMillis() - 10L * 1000)
+      val bos = new java.io.ByteArrayOutputStream()
+      val ps = new java.io.PrintStream(bos)
+      val code = graft.PruneArtifacts.run(
+        Seq(root.toString, "--apply", "--grace-ms", "0"), ps, ps)
+      ps.flush()
+      val out = bos.toString("UTF-8")
+      assert(code == 0 && !java.nio.file.Files.exists(old),
+        s"the root-hashed artifact must be reaped:\n$out")
+      assert(out.contains("stray name"), out)
+      assert(java.nio.file.Files.exists(current.resolve("_SUCCESS")),
+        s"the current artifact must be kept:\n$out")
+      assert(shingleSet(SharedArtifacts.sharedShingles(spark, dir)) == live)
+    }
+  }
+
   test("PruneArtifacts --keep-dead-keys retains a stale-format artifact; tableStamp tracks rewrites") {
     withTempRoot { root =>
       spark.range(1).count()
