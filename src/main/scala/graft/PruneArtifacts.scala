@@ -26,8 +26,13 @@ import org.apache.spark.sql.SparkSession
   * derivation of its own provenance meta, such as the earlier root-hashed
   * layout) are reaped against
   * [[graft.queries.SharedArtifacts.liveArtifactKeys]] — the map shipped in
-  * this very build — unless `--keep-dead-keys` is passed. Exit 0 on
-  * success, 1 on bad usage. */
+  * this very build — unless `--keep-dead-keys` is passed. Do not run
+  * `--apply` while readers from an older build are still running: a
+  * reader mid-action on a reaped directory fails instead of rebuilding,
+  * and after the upgrade that stopped hashing the root into directory
+  * names every directory an older build reads is a stray name (see
+  * [[graft.operators.Artifacts.prune]]). Exit 0 on success, 1 on bad
+  * usage. */
 object PruneArtifacts {
 
   def main(args: Array[String]): Unit =

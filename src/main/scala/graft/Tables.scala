@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.Artifacts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
@@ -16,10 +15,6 @@ object Tables {
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    // Schema-inference cache (Artifacts.readCachedSchema, one map for
-    // tables and artifacts): the bench constructs every query fresh per
-    // rep, and a bare `read.parquet` was measured as the 1-2 "parquet at
-    // Tables.scala" jobs heading every query profile.
     // `events` is cached only AFTER a successful NATIVE-generation load
     // (see [[events]], which populates the entry): its legacy
     // TIMESTAMP(NANOS) generation is detected by an inference-time
@@ -29,12 +24,46 @@ object Tables {
     // failure to execution, past the catch. With the entry present the
     // generation is proven native and the ~90 ms per-construction
     // inference job is skipped like every other table's (r17).
-    if (name != "events") Artifacts.readCachedSchema(spark, path)
-    else Artifacts.cachedSchemas(spark).get(path) match {
+    if (name != "events") readCachedSchema(spark, path)
+    else cachedSchemas(spark).get(path) match {
       case Some(s) => spark.read.schema(s).parquet(path)
       case None    => spark.read.parquet(path)
     }
   }
+
+  /** Read a parquet path with a per-(session, path) cached schema: a
+    * bare `read.parquet` re-runs footer schema inference as a driver job
+    * on every DataFrame construction (~25-30 ms per path), and queries
+    * construct fresh per bench rep. Serves both the dataset tables and
+    * the committed artifacts ([[graft.operators.Artifacts.frame]]). A
+    * certified artifact directory is IMMUTABLE (a new stamp or format is
+    * a new path), and a dataset table whose SCHEMA mutates in place
+    * mid-session is not a supported pattern, so a cached schema never
+    * goes stale. Data is still read fresh at execution; only the
+    * inference job is skipped, and the one it runs per (session, path)
+    * is labelled `parquet at Tables.scala` whichever caller asked. */
+  def readCachedSchema(spark: SparkSession, path: String): DataFrame = {
+    val schema =
+      cachedSchemas(spark).getOrElseUpdate(path, spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  // The path → schema map behind readCachedSchema; `events` reads and
+  // fills it directly. Weak-keyed by the SESSION (not its identity hash):
+  // entries for stopped sessions are GC-evicted with the session, and a
+  // reused identity hash can never serve a schema another session
+  // inferred. Values are StructTypes only — nothing in a value pins its
+  // key alive.
+  private def cachedSchemas(spark: SparkSession) =
+    schemaCache.synchronized {
+      schemaCache.computeIfAbsent(spark,
+        _ => scala.collection.concurrent.TrieMap
+          .empty[String, org.apache.spark.sql.types.StructType])
+    }
+  private val schemaCache =
+    new java.util.WeakHashMap[SparkSession,
+      scala.collection.concurrent.TrieMap[String,
+        org.apache.spark.sql.types.StructType]]()
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")
@@ -77,7 +106,7 @@ object Tables {
       // detection logic reasons about.
       import org.apache.spark.sql.types.LongType
       if (raw.schema("ts").dataType != LongType)
-        Artifacts.cachedSchemas(s).putIfAbsent(s"$d/events.parquet", raw.schema)
+        cachedSchemas(s).putIfAbsent(s"$d/events.parquet", raw.schema)
       df
     } catch {
       // Pre-regeneration files are TIMESTAMP(NANOS): the plain read throws

@@ -132,39 +132,6 @@ object Artifacts {
     }
   }
 
-  /** Read a parquet path with a per-(session, path) cached schema: a
-    * bare `read.parquet` re-runs footer schema inference as a driver job
-    * on every DataFrame construction (~25-30 ms per path), and queries
-    * construct fresh per bench rep. Serves both the committed artifacts
-    * and the dataset tables ([[graft.Tables]]). A certified artifact
-    * directory is IMMUTABLE (atomicCommit renames a complete table into
-    * place and never rewrites it — a new stamp/format is a new path), and
-    * a dataset table whose SCHEMA mutates in place mid-session is not a
-    * supported pattern, so a cached schema never goes stale. Data is
-    * still read fresh at execution; only the inference job is skipped. */
-  def readCachedSchema(spark: SparkSession, path: String): DataFrame = {
-    val schema =
-      cachedSchemas(spark).getOrElseUpdate(path, spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
-  }
-
-  /** The path → schema map behind [[readCachedSchema]] for `spark`;
-    * `Tables.events` reads and fills it directly. */
-  private[graft] def cachedSchemas(spark: SparkSession) =
-    schemaCache.synchronized {
-      schemaCache.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap
-          .empty[String, org.apache.spark.sql.types.StructType])
-    }
-  // Weak-keyed by the SESSION (not its identity hash): entries for
-  // stopped sessions are GC-evicted with the session, and a reused
-  // identity hash can never serve a schema another session inferred.
-  // Values are StructTypes only — nothing in a value pins its key alive.
-  private val schemaCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        org.apache.spark.sql.types.StructType]]()
-
   private def writeMetaFile(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, meta: Map[String, String]): Unit = {
     val out = fs.create(new org.apache.hadoop.fs.Path(dir, MetaFile), true)
@@ -310,8 +277,8 @@ object Artifacts {
     * DataFrame is bound to the session that planned it, so the memo
     * records only that the path committed (or failed to), and every call
     * re-creates the read. By default the build itself is written and
-    * read back through [[readCachedSchema]]. The default write is
-    * deliberately NOT rebalanced: a multi-file artifact was measured a
+    * read back through [[graft.Tables.readCachedSchema]]. The default
+    * write is deliberately NOT rebalanced: a multi-file artifact was measured a
     * net loss at bench scale (32 tiny files → 32-map-task consumer
     * stages each paying ~150ms of fixed scan cost, q_winnow_pairs 0.77s
     * → 1.1s+); consumer parallelism comes from the consumers' own
@@ -321,7 +288,7 @@ object Artifacts {
       dir: String, table: String,
       write: (DataFrame, String) => Unit =
         (df, tmp) => df.write.mode("overwrite").parquet(tmp),
-      read: (SparkSession, String) => DataFrame = readCachedSchema)(
+      read: (SparkSession, String) => DataFrame = graft.Tables.readCachedSchema)(
       build: => DataFrame): DataFrame = {
     val site = new Site(spark, family, keys(family), dir, table)
     if (site.stamp == 0L) { site.note("unstamped"); return build }
@@ -453,14 +420,17 @@ object Artifacts {
     * returns the decisions without deleting anything.
     *
     * Operational constraint: do NOT run `--apply` concurrently with
-    * readers from an OLDER build whose keys this build's `liveKeys`
-    * would reap. The entry point's read fallback covers PLAN-time
-    * failures (DataFrame construction reads footers eagerly); a reader
-    * already mid-action when its dead-key artifact is deleted fails the
-    * task with a FileNotFound instead of rebuilding inline. Same-build
-    * readers are safe (their keys are live by construction); the grace
-    * window protects in-flight writers, not in-flight reads of
-    * dead-key artifacts. */
+    * readers from an OLDER build whose directories this build would
+    * reap: those whose keys `liveKeys` does not name, and every
+    * stray-named one — after the upgrade that stopped hashing the root
+    * into the name, that is EVERY directory the older build reads. The
+    * entry point's read fallback covers PLAN-time failures (DataFrame
+    * construction reads footers eagerly); a reader already mid-action
+    * when its directory is deleted fails the task with a FileNotFound
+    * instead of rebuilding inline. Same-build readers are safe (their
+    * keys are live and their names derived by construction); the grace
+    * window protects in-flight writers, not in-flight reads of dead-key
+    * or stray-named artifacts. */
   def prune(spark: SparkSession, root: String, graceMs: Long,
       dryRun: Boolean,
       liveKeys: Map[String, String] = Map.empty): Seq[PruneDecision] = {

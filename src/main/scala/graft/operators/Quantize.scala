@@ -95,6 +95,6 @@ object Quantize {
     * pass per row, bit-identical to the write side's [[roundTrip]]. */
   def readIndexVectors(spark: org.apache.spark.sql.SparkSession,
       path: String): org.apache.spark.sql.DataFrame =
-    Artifacts.readCachedSchema(spark, path).select(col("id"),
+    graft.Tables.readCachedSchema(spark, path).select(col("id"),
       graft.functions.Int8Dequantize.int8Dequantize(col("bin"), col("scale")).as("dq"))
 }

@@ -511,9 +511,8 @@ object AnnQueries extends QueryFamily {
       .join(qvecs, Seq("qid"))
       .select(col("qid"), col("cid"), col("first_probe"),
         VectorOps.cosineSimilarity(col("qvec"), col("cvec")).as("sim"))
-    // each pair is scored ONCE either way: the single consumer below
-    // replicates rows per swept threshold via the crossJoin, so the
-    // former eager pin only added a materialization job (r16)
+    // not pinned: each pair is scored once, and the single consumer
+    // below replicates rows per swept threshold via the crossJoin
     val thresholds = spark.createDataFrame(IvfSweepProbes.map(Tuple1(_)))
       .toDF("nprobe")
     val w = org.apache.spark.sql.expressions.Window
@@ -588,9 +587,8 @@ object AnnQueries extends QueryFamily {
   def ivfOccupancy(spark: SparkSession, dir: String): DataFrame = {
     val b = Ivf.base(Tables.embeddings(spark, dir), "vec_id", "embedding")
     // the total rides a window over the ≤nlist post-agg frame (the
-    // q_cluster_sizes shape) instead of the former pin +
-    // crossJoin against the aggregate's own total — same result, two
-    // fewer jobs, and the corpus-sized assignment scan still runs once
+    // q_cluster_sizes shape), so the corpus-sized assignment scan runs
+    // once
     val w = org.apache.spark.sql.expressions.Window.partitionBy()
     val share = col("n_vecs").cast(DoubleType) /
       sum(col("n_vecs")).over(w).cast(DoubleType)

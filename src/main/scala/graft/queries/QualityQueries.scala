@@ -1137,11 +1137,9 @@ object QualityQueries extends QueryFamily {
     * with DuckDB's native PERCENT_RANK — cross-validating the
     * histogram formulation against the engine-native one. */
   def qualityEnsemble(spark: SparkSession, dir: String): DataFrame = {
-    // one pin of the narrow signal frame instead of the former held
-    // input plus pinned result (r17): the four consumers (three rank
-    // branches + the ranked join) read the stored blocks, the selection
-    // itself executes lazily in the caller's action, and the profiled
-    // job count drops 16 → ~8.
+    // one pin of the narrow signal frame: its four consumers (three rank
+    // branches + the ranked join) read the stored blocks, and the
+    // selection itself executes lazily in the caller's action
     val sigs = Materialize.pin(Tables.documents(spark, dir).select(col("doc_id") +:
         ensembleSignals(col("text"), col("n_chars"))
           .map { case (n, c) => c.as(n) }: _*))

@@ -177,9 +177,8 @@ object SharedArtifacts {
     * deterministic and longs round-trip parquet bit-exactly, so a
     * read-back equals a retokenization (DedupCapSpec compares query
     * outputs across both paths implicitly: first call writes, later
-    * calls read). Callers do NOT persist
-    * the returned frame (r16 measured holding or pinning it a net
-    * loss against cheap columnar artifact re-scans);
+    * calls read). Callers do NOT hold the returned frame: a re-scan of
+    * the columnar artifact is cheaper than storing it (r16);
     * the accepted cost is that on the stamp-0 fallback each self-join
     * consumer re-tokenizes — correct, just slower in that degraded
     * environment (the sweepPairs thunk documents the same trade). */

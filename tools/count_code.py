@@ -7,8 +7,7 @@ in a comment counts; a comment line counts nowhere. Prints one
 `<count>\t<path>` line per file (sorted by path, relative to the tree),
 then `<total>\ttotal`.
 
-Usage: python3 tools/count_code.py [--total] <tree>
-  --total   print only the total
+Usage: python3 tools/count_code.py <tree>
 """
 import os
 import sys
@@ -35,14 +34,12 @@ def count_tree(tree):
 
 
 def main(argv):
-    args = [a for a in argv if a != "--total"]
-    if len(args) != 1 or not os.path.isdir(args[0]):
+    if len(argv) != 1 or not os.path.isdir(argv[0]):
         print(__doc__.strip(), file=sys.stderr)
         return 1
-    counts = count_tree(args[0])
-    if "--total" not in argv:
-        for p in sorted(counts):
-            print(f"{counts[p]}\t{p}")
+    counts = count_tree(argv[0])
+    for p in sorted(counts):
+        print(f"{counts[p]}\t{p}")
     print(f"{sum(counts.values())}\ttotal")
     return 0
 
