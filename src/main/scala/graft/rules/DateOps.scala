@@ -1,13 +1,15 @@
 package graft.rules
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+
+import graft.functions.ParseCascade
 
 /** Date parsing/formatting with the reference's chrono conventions
   * (transform.rs:5522-5660): rule files carry chrono `%`-patterns; Spark
   * needs JVM DateTimeFormatter patterns, so rule patterns are translated at
-  * COMPILE time (they are literals), and parsing runs a try_to_timestamp
-  * cascade over the reference's default format list.
+  * COMPILE time (they are literals), and parsing tries the reference's
+  * default format list in order, first match wins
+  * ([[graft.functions.ParseCascade]]).
   */
 object DateOps {
 
@@ -85,13 +87,14 @@ object DateOps {
     "%Y-%m-%dT%H:%M:%S%.f", "%Y-%m-%d %H:%M:%S%.f", "%Y/%m/%d %H:%M:%S%.f",
   ).map(chronoToJava)
 
-  /** Parse a string through the cascade: first format that matches wins
-    * (try_to_timestamp returns null on mismatch; coalesce picks the first
-    * success — same first-match-wins as the reference loop). */
+  /** Parse a string through the cascade: the first format that matches
+    * wins, as in the reference loop. The result is that of
+    * `coalesce(try_to_timestamp(s, f)…)` over the formats; a format whose
+    * formatter cannot read the string is skipped without raising. */
   def parseCascade(s: Column, explicitFormats: Seq[String]): Column = {
     val formats = if (explicitFormats.nonEmpty) explicitFormats.map(chronoToJava)
       else defaultFormats
-    coalesce(formats.map(f => try_to_timestamp(s, lit(f))): _*)
+    ParseCascade.firstMatch(s, formats)
   }
 
   /** The reference's timezone-argument detection (looks_like_timezone,

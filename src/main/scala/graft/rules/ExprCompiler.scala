@@ -1,8 +1,12 @@
 package graft.rules
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.rmbridge.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import Model._
 
@@ -100,9 +104,23 @@ object ExprCompiler {
     case JDouble(_) => DoubleType
     case JString(_) => StringType
     case JArray(items) =>
-      ArrayType(items.headOption.map(jvalueType).getOrElse(StringType))
+      ArrayType(items.map(jvalueType).reduceOption(widerType).getOrElse(StringType))
     case JObject(fields) =>
       StructType(fields.map { case (k, fv) => StructField(k, jvalueType(fv)) })
+  }
+
+  /** The element type Spark's `array` coerces two literal element types
+    * to: a null takes the other's type, a long widens to a double, and
+    * objects with the same keys widen key by key. Any other pair keeps the
+    * first type, and analysis rejects the array. */
+  private def widerType(a: DataType, b: DataType): DataType = (a, b) match {
+    case (NullType, t) => t
+    case (t, NullType) => t
+    case (LongType, DoubleType) | (DoubleType, LongType) => DoubleType
+    case (ArrayType(x, _), ArrayType(y, _)) => ArrayType(widerType(x, y))
+    case (StructType(fa), StructType(fb)) if fa.map(_.name).sameElements(fb.map(_.name)) =>
+      StructType(fa.zip(fb).map { case (x, y) => x.copy(dataType = widerType(x.dataType, y.dataType)) })
+    case _ => a
   }
 
   def jvalueColumn(v: JValue): Column = v match {
@@ -254,15 +272,18 @@ object ExprCompiler {
 
   /** value_to_string semantics (reference transform.rs:5903-5923): numbers
     * print canonically — integral doubles lose the ".0", booleans are
-    * true/false. Used by concat, ==, lookup keys, group_by keys. */
+    * true/false. Used by concat, ==, lookup keys, group_by keys. A double
+    * beyond the long range (always integral) keeps Spark's exponent form
+    * with the mantissa's ".0" dropped: 1e30 prints as "1E30". */
   def rmToString(e: CE): CE = {
     val s = e.tpe match {
       case StringType => e.value
       case LongType | IntegerType | ShortType | ByteType => e.value.cast(StringType)
       case DoubleType | FloatType =>
+        val asLong = e.value.try_cast(LongType) // null beyond the long range
         when(e.value.isNull, lit(null).cast(StringType))
-          .when(e.value === e.value.cast(LongType).cast(e.tpe),
-            e.value.cast(LongType).cast(StringType))
+          .when(asLong.isNull, regexp_replace(e.value.cast(StringType), lit("\\.0E"), lit("E")))
+          .when(e.value === asLong.cast(e.tpe), asLong.cast(StringType))
           .otherwise(e.value.cast(StringType))
       case BooleanType =>
         when(e.value.isNull, lit(null).cast(StringType))
@@ -299,6 +320,34 @@ object ExprCompiler {
     case VariantType => CE(e.value.cast(DoubleType), e.missing, DoubleType)
     case t => throw CompileError(s"numeric op: unsupported type $t")
   }
+
+  /** A lookup's table over a constant array `from`: a literal map from
+    * each element's key string to the projections of the elements with
+    * that key, in array order; an element whose key is missing or null is
+    * in no entry. Keys and projections are the lookup's own columns,
+    * evaluated once on the driver, so a key is spelled by [[rmToString]]
+    * exactly as a record's match value is. `project` sets `projT` as it
+    * builds, so `projT` is read after `keyed` is. */
+  private def lookupTable(from: Column, keyOf: Column => Column,
+      project: Column => Column, projT: => DataType): Column = {
+    val keyed = transform(from, x => struct(keyOf(x).as("k"), project(x).as("v")))
+    val t = projT
+    val entries = Bridge.evalConstant(keyed).asInstanceOf[ArrayData]
+    val byKey = scala.collection.mutable.LinkedHashMap.empty[UTF8String,
+      scala.collection.mutable.ArrayBuffer[Any]]
+    for (i <- 0 until entries.numElements()) {
+      val e = entries.getStruct(i, 2)
+      if (!e.isNullAt(0))
+        byKey.getOrElseUpdate(e.getUTF8String(0).clone(),
+          scala.collection.mutable.ArrayBuffer.empty) += e.get(1, t)
+    }
+    val table = new ArrayBasedMapData(new GenericArrayData(byKey.keys.toArray[Any]),
+      new GenericArrayData(byKey.values.map(v => new GenericArrayData(v.toArray)).toArray[Any]))
+    Bridge.column(Literal(table, MapType(StringType, ArrayType(t), valueContainsNull = false)))
+  }
+
+  private def emptyArray(t: DataType): Column =
+    Bridge.column(Literal(new GenericArrayData(Array.empty[Any]), ArrayType(t)))
 
   // ---- compile ----
 
@@ -904,27 +953,38 @@ object ExprCompiler {
         val matchVal = rmToString(arg(2))
         val outPath = litString(3).map(PathParser.parse)
         val et = elemTypeOf(from)
-        val matches = filter(from.value, x => {
+        // an element's key string (null where its key is missing) and its
+        // projection; projT is set when a projection is built
+        def keyOf(x: Column): Column = {
           val k = rmToString(descend(CE.present(x, et), keyPath))
-          !k.missing && coalesce(k.value === matchVal.value, lit(false))
-        })
-        val (arr, projT) = outPath match {
-          case Some(p) =>
-            var t: DataType = NullType
-            val v = transform(matches, x => {
-              val r = descend(CE.present(x, et), p)
-              t = r.tpe
-              r.valueOrNull
-            })
-            (v, t)
-          case None => (matches, et)
+          when(!k.missing, k.value)
         }
-        if (op == "lookup_first")
-          CE(element_at(arr, 1), from.missing || matchVal.missing || size(arr) === 0, projT)
+        var projT: DataType = et
+        def project(x: Column): Column = outPath match {
+          case Some(p) =>
+            val r = descend(CE.present(x, et), p)
+            projT = r.tpe
+            r.valueOrNull
+          case None => x
+        }
+        // the first match, all matches, and whether there is none
+        val (first, all, none) =
+          if (Bridge.isConstant(from.value) && Bridge.isConstant(from.missing)) {
+            // `from` is the same for every record (the @context literal or
+            // a literal array): its matches per key are one plan-time table
+            val hits = element_at(lookupTable(from.value, keyOf, project, projT), matchVal.value)
+            (element_at(hits, 1), coalesce(hits, emptyArray(projT)), hits.isNull)
+          } else {
+            val matches = filter(from.value, x => coalesce(keyOf(x) === matchVal.value, lit(false)))
+            val arr = if (outPath.isDefined) transform(matches, x => project(x)) else matches
+            (element_at(arr, 1), arr, size(arr) === 0)
+          }
+        val miss = from.missing || matchVal.missing
+        if (op == "lookup_first") CE(first, miss || none, projT)
         else if (op == "lookup_all") // v2: no matches = EMPTY ARRAY (tv25)
-          CE(arr, from.missing || matchVal.missing, ArrayType(projT))
+          CE(all, miss, ArrayType(projT))
         else // v1 lookup: no matches = missing (t06, transform.rs results.is_empty)
-          CE(arr, from.missing || matchVal.missing || size(arr) === 0, ArrayType(projT))
+          CE(all, miss || none, ArrayType(projT))
 
       // -- dates (chrono patterns translated at plan time; DateOps)
       case "date_format" =>

@@ -36,11 +36,15 @@ object Sources {
     * client compiler, per transform from document to collected output, for
     * a plain and a string/date-heavy rule: 256 is the largest measured size
     * at which the local side took at least a third less wall time and CPU
-    * than the scan for both rules. At 512 it still led by 18–27% in wall
-    * time; at 1,024 the heavier rule was slower on the wall clock, and at
-    * 2,048 both were. The margin leaves room for rules costlier per record
-    * than the measured ones, whose interpreted evaluation grows with the
-    * record count while a job's fixed cost does not. */
+    * than the scan for both rules. Re-measured with the date parse cascade
+    * ([[graft.functions.ParseCascade]]), three runs of 20–40 rounds: at 256
+    * the local side took 33–39% less wall time than the scan for the plain
+    * rule and 32–34% less for the heavier one (about half the CPU for
+    * both); at 512 it led by only 14–23% in wall time; at 1,024 the heavier
+    * rule was slower on the wall clock, and at 2,048 both were. The margin
+    * leaves room for rules costlier per record than the measured ones,
+    * whose interpreted evaluation grows with the record count while a
+    * job's fixed cost does not. */
   val LocalMaxRecords: Int = 256
 
   def csv(spark: SparkSession, path: String, spec: InputSpec): DataFrame = {

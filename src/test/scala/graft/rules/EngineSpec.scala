@@ -228,6 +228,30 @@ class EngineSpec extends AnyFunSuite {
     assert(rows(2).getSeq[String](1).isEmpty)
   }
 
+  test("a @context lookup is a plan-time table: its optimized plan holds no lambda") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, LambdaFunction}
+    import spark.implicits._
+    // a range, not a local frame: the plan keeps its projection unfolded
+    val input = spark.range(3).select(($"id" * 5).as("user_id"),
+      org.apache.spark.sql.functions.array(
+        org.apache.spark.sql.functions.struct(($"id" * 5).as("id"))).as("users"))
+    val ctx = JObject(Seq("users" -> JArray(Seq(
+      JObject(Seq("id" -> JLong(5), "name" -> JString("Eve"))),
+      JObject(Seq("id" -> JLong(5), "name" -> JString("Eva")))))))
+    def lambdas(expr: String) = run(
+      s"""version: 2
+        |mappings:
+        |  - target: v
+        |    expr: $expr
+        |""".stripMargin, input, ctx).queryExecution.optimizedPlan
+      .exists(_.expressions.exists(_.exists(e =>
+        e.isInstanceOf[ArrayFilter] || e.isInstanceOf[LambdaFunction])))
+    assert(!lambdas("""["@context.users", lookup_first: ["id", "@input.user_id", "name"]]"""))
+    assert(!lambdas("""["@context.users", lookup: ["id", "@input.user_id", "name"]]"""))
+    // a per-record array keeps the element-by-element match
+    assert(lambdas("""["@input.users", lookup_first: ["id", "@input.user_id"]]"""))
+  }
+
   test("missing vs null: default applies only to missing; JSON sink drops missing") {
     import spark.implicits._
     val input = Seq(

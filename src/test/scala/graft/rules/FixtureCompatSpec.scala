@@ -177,7 +177,7 @@ class FixtureCompatSpec extends AnyFunSuite {
 
   /** In-repo cases the reference has no fixture of. */
   val inRepoFixtures = Seq("g01_json_object_absent_keys", "g02_json_object_ops_absent_keys",
-    "g03_json_pick_absent_keys")
+    "g03_json_pick_absent_keys", "g04_number_to_string_beyond_long")
 
   fixtures.foreach { f =>
     test(s"reference golden fixture: $f") { Fixtures.cases(f).foreach(runFixture) }
