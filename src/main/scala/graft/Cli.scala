@@ -187,11 +187,13 @@ object Cli {
         catch { case NonFatal(e) => err.println(s"failed to parse context JSON: ${e.getMessage}"); return Left(1) }
     }
 
+  /** The rule value of a JSON tree; an integer beyond the long range is a
+    * double, as JSON ingest types it. */
   def jsonToJValue(n: JsonNode): JValue = {
     import scala.jdk.CollectionConverters._
     if (n.isNull) JNull
     else if (n.isBoolean) JBool(n.asBoolean)
-    else if (n.isIntegralNumber) JLong(n.asLong)
+    else if (n.isIntegralNumber && n.canConvertToLong) JLong(n.asLong)
     else if (n.isNumber) JDouble(n.asDouble)
     else if (n.isTextual) JString(n.asText)
     else if (n.isArray) JArray(n.elements.asScala.toSeq.map(jsonToJValue))

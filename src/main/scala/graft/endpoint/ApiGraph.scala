@@ -8,6 +8,7 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
+import graft.rules.ExprCompiler.jvalueToNode
 import graft.rules.Model._
 
 /** The rules-directory dependency graph served at `/internal/api-graph`
@@ -230,15 +231,5 @@ object ApiGraph {
     case other => stepLabel(other)
   }
 
-  private def jsonOf(v: JValue): String = v match {
-    case JNull => "null"
-    case JBool(b) => b.toString
-    case JLong(n) => n.toString
-    case JDouble(d) => d.toString
-    case JString(s) => mapper.writeValueAsString(mapper.getNodeFactory.textNode(s))
-    case JArray(items) => items.map(jsonOf).mkString("[", ",", "]")
-    case JObject(fields) => fields.map { case (k, fv) =>
-      mapper.writeValueAsString(mapper.getNodeFactory.textNode(k)) + ":" + jsonOf(fv)
-    }.mkString("{", ",", "}")
-  }
+  private def jsonOf(v: JValue): String = mapper.writeValueAsString(jvalueToNode(v))
 }

@@ -8,6 +8,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import graft.rules.Engine
+import graft.rules.ExprCompiler.jvalueToNode
 import graft.rules.Model._
 
 /** Reference-shaped rich trace for the endpoint engine (reference
@@ -459,22 +460,6 @@ private[endpoint] final class TraceDetail {
     arr.add(renderExpr(l)); arr.add(renderExpr(r))
     o.set[JsonNode](name, arr)
     o
-  }
-
-  def jvalueToNode(v: JValue): JsonNode = v match {
-    case JNull => mapper.nullNode()
-    case JBool(b) => mapper.getNodeFactory.booleanNode(b)
-    case JLong(n) => mapper.getNodeFactory.numberNode(n)
-    case JDouble(n) => mapper.getNodeFactory.numberNode(n)
-    case JString(s) => mapper.getNodeFactory.textNode(s)
-    case JArray(items) =>
-      val arr = mapper.createArrayNode()
-      items.foreach(i => arr.add(jvalueToNode(i)))
-      arr
-    case JObject(fields) =>
-      val o = mapper.createObjectNode()
-      fields.foreach { case (k, fv) => o.set[JsonNode](k, jvalueToNode(fv)) }
-      o
   }
 
   private def startLabel(e: Expr): String = e match {

@@ -560,7 +560,7 @@ object QualityQueries extends QueryFamily {
     * result; the derived doubles run one mirrored IEEE op order; a
     * never-predicted class reports NULL precision/F1 rather than 0/0.
     * Scale shape: two tiny aggregations over the classified holdout
-    * (classes-sized frames) and a broadcast join — the expensive part
+    * (classes-sized frames) and a full outer join — the expensive part
     * is the classify chain itself, already plan-proven. */
   def nbEval(spark: SparkSession, dir: String): DataFrame = {
     // the classify chain (train aggregation + scoring scan) is the
@@ -582,8 +582,9 @@ object QualityQueries extends QueryFamily {
       .otherwise(lit(null).cast(DoubleType))
     // FULL outer: a class predicted for other classes' holdout docs but
     // with no holdout true rows of its own (precision 0) must still
-    // appear — a left join anchored on the true side would hide it
-    byTrue.join(broadcast(byPred), Seq("label"), "full")
+    // appear — a left join anchored on the true side would hide it. No
+    // broadcast hint: a full outer join has no broadcast build side
+    byTrue.join(byPred, Seq("label"), "full")
       .withColumn("n_true", coalesce(col("n_true"), lit(0L)))
       .withColumn("n_correct", coalesce(col("n_correct"), lit(0L)))
       .withColumn("n_pred", coalesce(col("n_pred"), lit(0L)))

@@ -687,7 +687,7 @@ object Engine {
     // (MissingRequired at the mapping path, transform.rs:1007-1030)
     val withDefault = m.default match {
       case Some(d) =>
-        val dc = jvalueCE(d)
+        val dc = constant(d)
         val tpe = if (base.tpe == NullType) dc.tpe else base.tpe
         CE(when(base.missing, dc.value.cast(tpe)).otherwise(base.value.cast(tpe)),
           lit(false), tpe)

@@ -1,7 +1,11 @@
 package graft.rules
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.{JsonToStructs, Literal}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.rmbridge.Bridge
@@ -97,44 +101,42 @@ object ExprCompiler {
 
   // ---- literals ----
 
-  def jvalueType(v: JValue): DataType = v match {
-    case JNull => NullType
-    case JBool(_) => BooleanType
-    case JLong(_) => LongType
-    case JDouble(_) => DoubleType
-    case JString(_) => StringType
+  /** A rule or context constant. A scalar is a plain literal. An array or
+    * object is typed by [[infer]], the one JSON typing records get at
+    * ingest, and parsed from its JSON text by the ingest's own parser
+    * expression (as `Sources.local` parses records), evaluated once on the
+    * driver into a literal of that type: a key some element lacks is an
+    * [[Absentable]] field, mixed values are variants, and [[descend]] reads
+    * the constant's fields as it reads a record's. */
+  def constant(v: JValue): CE = v match {
+    case JNull => CE.present(lit(null), NullType)
+    case JBool(b) => CE.present(lit(b), BooleanType)
+    case JLong(l) => CE.present(lit(l), LongType)
+    case JDouble(d) => CE.present(lit(d), DoubleType)
+    case JString(s) => CE.present(lit(s), StringType)
+    case _ =>
+      val node = jvalueToNode(v)
+      val t = infer(Seq(node))
+      val parsed = JsonToStructs(t, Map.empty, Literal(jsonMapper.writeValueAsString(node)))
+      CE.present(Bridge.column(Literal(Bridge.evalConstant(Bridge.column(parsed)), t)), t)
+  }
+
+  /** The JSON tree of a rule value. */
+  def jvalueToNode(v: JValue): JsonNode = v match {
+    case JNull => JsonNodeFactory.instance.nullNode()
+    case JBool(b) => JsonNodeFactory.instance.booleanNode(b)
+    case JLong(n) => JsonNodeFactory.instance.numberNode(n)
+    case JDouble(n) => JsonNodeFactory.instance.numberNode(n)
+    case JString(s) => JsonNodeFactory.instance.textNode(s)
     case JArray(items) =>
-      ArrayType(items.map(jvalueType).reduceOption(widerType).getOrElse(StringType))
+      val arr = JsonNodeFactory.instance.arrayNode()
+      items.foreach(i => arr.add(jvalueToNode(i)))
+      arr
     case JObject(fields) =>
-      StructType(fields.map { case (k, fv) => StructField(k, jvalueType(fv)) })
+      val o = JsonNodeFactory.instance.objectNode()
+      fields.foreach { case (k, fv) => o.set[JsonNode](k, jvalueToNode(fv)) }
+      o
   }
-
-  /** The element type Spark's `array` coerces two literal element types
-    * to: a null takes the other's type, a long widens to a double, and
-    * objects with the same keys widen key by key. Any other pair keeps the
-    * first type, and analysis rejects the array. */
-  private def widerType(a: DataType, b: DataType): DataType = (a, b) match {
-    case (NullType, t) => t
-    case (t, NullType) => t
-    case (LongType, DoubleType) | (DoubleType, LongType) => DoubleType
-    case (ArrayType(x, _), ArrayType(y, _)) => ArrayType(widerType(x, y))
-    case (StructType(fa), StructType(fb)) if fa.map(_.name).sameElements(fb.map(_.name)) =>
-      StructType(fa.zip(fb).map { case (x, y) => x.copy(dataType = widerType(x.dataType, y.dataType)) })
-    case _ => a
-  }
-
-  def jvalueColumn(v: JValue): Column = v match {
-    case JNull => lit(null)
-    case JBool(b) => lit(b)
-    case JLong(l) => lit(l)
-    case JDouble(d) => lit(d)
-    case JString(s) => lit(s)
-    case JArray(items) => array(items.map(jvalueColumn): _*)
-    case JObject(fields) =>
-      struct(fields.map { case (k, fv) => jvalueColumn(fv).as(k) }: _*)
-  }
-
-  def jvalueCE(v: JValue): CE = CE.present(jvalueColumn(v), jvalueType(v))
 
   /** Static descent into the context literal; absent → missing. */
   def contextLookup(ctx: JValue, path: Seq[String]): CE = {
@@ -150,7 +152,7 @@ object ExprCompiler {
         if (i < items.size) cur = items(i) else return CE.missing
       case _ => return CE.missing
     }
-    jvalueCE(cur)
+    constant(cur)
   }
 
   // ---- object fields that may be absent ----
@@ -188,6 +190,33 @@ object ExprCompiler {
     /** The raw column of a tagged field that holds `ce`: a missing value
       * leaves the field absent, and a SQL null lifts to JSON null. */
     def wrap(ce: CE): Column = when(!ce.missing, toVariant(ce))
+  }
+
+  /** The one JSON typing, of input records (`Sources.jsonNode`) and of
+    * rule and context constants ([[constant]]) alike, over the values one
+    * position holds across `nodes`: objects merge their keys in first-seen
+    * order, and a key that some object lacks or holds as null is an
+    * [[Absentable]] field; arrays type their elements together; an integer
+    * beyond the long range is a double; values of mixed kinds, all-null
+    * and no values are VariantType. */
+  def infer(nodes: Seq[JsonNode]): DataType = {
+    val nn = nodes.filter(n => n != null && !n.isNull)
+    if (nn.isEmpty) VariantType
+    else if (nn.forall(_.isObject)) {
+      val names = scala.collection.mutable.LinkedHashSet.empty[String]
+      nn.foreach(_.fieldNames.asScala.foreach(names += _))
+      StructType(names.toSeq.map { k =>
+        val vs = nn.map(_.get(k))
+        if (vs.exists(v => v == null || v.isNull)) Absentable.field(k, infer(vs))
+        else StructField(k, infer(vs))
+      })
+    } else if (nn.forall(_.isArray))
+      ArrayType(infer(nn.flatMap(_.elements.asScala)))
+    else if (nn.forall(_.isTextual)) StringType
+    else if (nn.forall(_.isBoolean)) BooleanType
+    else if (nn.forall(n => n.isIntegralNumber && n.canConvertToLong)) LongType
+    else if (nn.forall(_.isNumber)) DoubleType
+    else VariantType
   }
 
   /** Step into field `f` of an object whose value is `parent`. A tagged
@@ -242,7 +271,7 @@ object ExprCompiler {
     case st: StructType if Absentable.within(st) =>
       val members = st.fields.toSeq.map { f =>
         val v = c.getField(f.name)
-        val member = concat(lit(jsonKey.writeValueAsString(f.name) + ":"),
+        val member = concat(lit(jsonMapper.writeValueAsString(f.name) + ":"),
           jsonFragment(v, f.dataType))
         if (Absentable.valueType(f).isDefined) when(v.isNotNull, member) else member
       }
@@ -258,7 +287,7 @@ object ExprCompiler {
       wrapped.substr(lit(6), length(wrapped) - 6)
   }
 
-  private val jsonKey = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Lift any typed value into a Variant — the engine's representation for
     * heterogeneous JSON values (mixed arrays, values/entries of objects with
@@ -352,7 +381,7 @@ object ExprCompiler {
   // ---- compile ----
 
   def compile(expr: Expr, env: Env): CE = expr match {
-    case ELit(v) => jvalueCE(v)
+    case ELit(v) => constant(v)
     case ERef(scope, path) => compileRef(scope, path, env)
     case EPipe(start, steps) => compilePipe(start, steps, env)
     case EOp(op, args) => compileOp(op, None, env, args)

@@ -345,7 +345,9 @@ object YamlParser {
     case b: java.lang.Boolean => JBool(b)
     case i: java.lang.Integer => JLong(i.longValue)
     case l: java.lang.Long => JLong(l)
-    case bi: java.math.BigInteger => JLong(bi.longValueExact)
+    // SnakeYAML reads an integer as a BigInteger only beyond the long
+    // range: a double there, as JSON ingest types it
+    case bi: java.math.BigInteger => JDouble(bi.doubleValue)
     case d: java.lang.Double => JDouble(d)
     case f: java.lang.Float => JDouble(f.doubleValue)
     case s: String => JString(s)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.rmbridge.Bridge
 import org.apache.spark.sql.types._
 
-import graft.rules.ExprCompiler.Absentable
+import graft.rules.ExprCompiler
 import graft.rules.Model.InputSpec
 
 /** Input sources with the reference's ingest semantics (SURVEY §2.1).
@@ -60,10 +60,12 @@ object Sources {
   }
 
   /** JSON documents ingest with a Jackson-driven schema instead of Spark's
-    * inference: field order is preserved, empty objects survive as
-    * zero-field structs, fields whose values mix types become VariantType,
-    * integers beyond the range of a long are doubles, and object keys that
-    * some object lacks or holds as an explicit null, at any depth, become
+    * inference, [[graft.rules.ExprCompiler.infer]] — the one JSON typing,
+    * which types the rules' `@context`, literal arrays and defaults too:
+    * field order is preserved, empty objects survive as zero-field structs,
+    * fields whose values mix types become VariantType, integers beyond the
+    * range of a long are doubles, and object keys that some object lacks or
+    * holds as an explicit null, at any depth, become
     * [[graft.rules.ExprCompiler.Absentable]] fields tagged with the type of
     * their values — which preserves the reference's absent-vs-null
     * distinction (absent → SQL null, explicit null → variant null) while
@@ -107,25 +109,6 @@ object Sources {
       else if (target.isObject) Seq(target)
       else throw new IllegalArgumentException("records_path points at a scalar")
 
-    def infer(nodes: Seq[JsonNode]): DataType = {
-      val nn = nodes.filter(n => n != null && !n.isNull)
-      if (nn.isEmpty) VariantType
-      else if (nn.forall(_.isObject)) {
-        val names = scala.collection.mutable.LinkedHashSet.empty[String]
-        nn.foreach(_.fieldNames.asScala.foreach(names += _))
-        StructType(names.toSeq.map { k =>
-          val vs = nn.map(_.get(k))
-          if (vs.exists(v => v == null || v.isNull)) Absentable.field(k, infer(vs))
-          else StructField(k, infer(vs))
-        })
-      } else if (nn.forall(_.isArray))
-        ArrayType(infer(nn.flatMap(_.elements.asScala)))
-      else if (nn.forall(_.isTextual)) StringType
-      else if (nn.forall(_.isBoolean)) BooleanType
-      else if (nn.forall(n => n.isIntegralNumber && n.canConvertToLong)) LongType
-      else if (nn.forall(_.isNumber)) DoubleType
-      else VariantType
-    }
     // An empty records array is a valid input (`[]` → empty record set,
     // reference record iteration over zero records); infer would return
     // VariantType for it, so short-circuit to a zero-column empty frame —
@@ -134,7 +117,7 @@ object Sources {
       return spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         StructType(Nil))
-    val schema = infer(records) match {
+    val schema = ExprCompiler.infer(records) match {
       case st: StructType => st
       case t => throw new IllegalArgumentException(s"records are not objects: $t")
     }

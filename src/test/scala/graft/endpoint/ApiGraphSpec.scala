@@ -74,4 +74,29 @@ class ApiGraphSpec extends AnyFunSuite {
     assert(fin.detail.contains("limit"))
     assert(edges.count(_.kind == "branch") == 2)
   }
+
+  test("value ops show the literal's JSON text: doubles as Double.toString, strings escaped") {
+    val (nodes, _) = graphOf(
+      "rule.yaml" ->
+        """version: 1
+          |mappings:
+          |  - target: half
+          |    value: 0.5
+          |  - target: big
+          |    value: 1.5e+300
+          |  - target: whole
+          |    value: 100.0
+          |  - target: text
+          |    value: "q\"b\\s\nr/é"
+          |  - target: nested
+          |    value: [1, 2.25, "x\ty", {"k\"": null, "b": true}]
+          |""".stripMargin)
+    val details = nodes.find(_.kind == "normal").get.ops
+      .map(o => o.label -> o.detail.getOrElse("")).toMap
+    assert(details("half · value") == "0.5")
+    assert(details("big · value") == "1.5E300")
+    assert(details("whole · value") == "100.0")
+    assert(details("text · value") == "\"q\\\"b\\\\s\\nr/é\"")
+    assert(details("nested · value") == "[1,2.25,\"x\\ty\",{\"k\\\"\":null,\"b\":true}]")
+  }
 }

@@ -19,17 +19,6 @@ class FixtureCompatSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.Sessions.local(4)
 
-  private def jsonNodeToJValue(n: JsonNode): JValue = {
-    import scala.jdk.CollectionConverters._
-    if (n.isNull) JNull
-    else if (n.isBoolean) JBool(n.asBoolean)
-    else if (n.isIntegralNumber) JLong(n.asLong)
-    else if (n.isNumber) JDouble(n.asDouble)
-    else if (n.isTextual) JString(n.asText)
-    else if (n.isArray) JArray(n.elements.asScala.toSeq.map(jsonNodeToJValue))
-    else JObject(n.properties.asScala.toSeq.map(e => e.getKey -> jsonNodeToJValue(e.getValue)))
-  }
-
   /** Tree comparison: object key order ignored, array order significant,
     * numbers compared by value (100 == 100.0 — the reference integerizes
     * integral doubles on output, Spark keeps the declared type). */
@@ -49,7 +38,7 @@ class FixtureCompatSpec extends AnyFunSuite {
   private def loadFixture(c: Fixtures.Case): (graft.rules.Model.RuleFile, DataFrame, JValue) = {
     val rule = YamlParser.parse(c.read("rules.yaml"))
     val context: JValue =
-      if (c.has("context.json")) jsonNodeToJValue(mapper.readTree(c.read("context.json")))
+      if (c.has("context.json")) graft.Cli.jsonToJValue(mapper.readTree(c.read("context.json")))
       else JNull
     (rule, c.input(spark, rule), context)
   }
@@ -177,7 +166,7 @@ class FixtureCompatSpec extends AnyFunSuite {
 
   /** In-repo cases the reference has no fixture of. */
   val inRepoFixtures = Seq("g01_json_object_absent_keys", "g02_json_object_ops_absent_keys",
-    "g03_json_pick_absent_keys", "g04_number_to_string_beyond_long")
+    "g03_json_pick_absent_keys", "g04_number_to_string_beyond_long", "g05_context_heterogeneous")
 
   fixtures.foreach { f =>
     test(s"reference golden fixture: $f") { Fixtures.cases(f).foreach(runFixture) }

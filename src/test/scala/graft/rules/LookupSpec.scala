@@ -9,7 +9,9 @@ import Model._
 /** `lookup`, `lookup_first` and `lookup_all` over a constant array (the
   * `@context` literal, compiled to a plan-time table) give what the same
   * rule gives over the same array fed as an input field (a per-record
-  * array, matched element by element). */
+  * array, matched element by element); and any `@context` read gives what
+  * the same read of an input field gives, since constants and records are
+  * typed by the one JSON inference. */
 class LookupSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.Sessions.local(4)
@@ -88,7 +90,15 @@ class LookupSpec extends AnyFunSuite {
       {"id": true, "name": "again", "meta": {"code": "true", "label": "M"}}]""",
     // 1.0 is spelled "1", 2.5 stays "2.5"; longs and doubles share the type
     "integral-double keys" -> s"""[{"id": 1.0, "name": "one", $meta}, {"id": 2.5, "name": "half", $meta},
-      {"id": 3, "name": "three", $meta}, {"id": 1e30, "name": "big", $meta}]""")
+      {"id": 3, "name": "three", $meta}, {"id": 1e30, "name": "big", $meta}]""",
+    // elements of differing shapes: keys some element lacks, a key of
+    // mixed types, and outputs of mixed types
+    "heterogeneous objects" -> s"""[{"id": 1, "name": "a", $meta}, {"id": 2}, {"name": "c"},
+      {"id": "1", "name": "b", "meta": {"code": 1}}, {"id": true, "meta": {"label": "L2"}},
+      {"id": "t1", "name": ["x", 1], "extra": {}}]""",
+    // values of mixed kinds: objects beside scalars, arrays and a null
+    "mixed elements" -> s"""[{"id": 1, "name": "a", $meta}, 1, "t1", [1, 2], null, true,
+      {"id": "t1", "name": ["x", 1]}, {"id": 2.5, "name": {"n": null}, "meta": "m"}]""")
 
   for ((name, array) <- arrays; (dialect, rule) <- Seq("v2" -> v2Rule, "v1" -> v1Rule))
     test(s"$dialect lookups over $name: the context table equals the per-record array") {
@@ -117,5 +127,45 @@ class LookupSpec extends AnyFunSuite {
     assert(literal == Seq("""{"name":"b"}""", """{"name":"a"}""", "{}"))
     assert(literal == run(rule("""{ ref: "context.users" }"""),
       graft.Cli.jsonToJValue(mapper.readTree(s"""{"users": $users}"""))))
+  }
+
+  test("a @context value reads as the same value fed as an @input field") {
+    // differing shapes, mixed values and an integer beyond the long range,
+    // read whole, by path and as a rule literal
+    val doc = """{"users": [{"id": 1, "name": "a"}, {"id": 2}, {"name": "c", "tags": [1, "x"]}],
+      "vals": [1, "a", true, null, {"x": [2.5, 3]}], "big": 18446744073709551617,
+      "nested": {"big": [18446744073709551617, 1], "none": null, "empty": []}}"""
+    val rule =
+      """version: 2
+        |mappings:
+        |  - target: users
+        |    expr: ["SRC.users"]
+        |  - target: name_1
+        |    expr: ["SRC.users.1.name"]
+        |  - target: tags
+        |    expr: ["SRC.users.2.tags"]
+        |  - target: vals
+        |    expr: ["SRC.vals"]
+        |  - target: n
+        |    expr: ["SRC.vals", len]
+        |  - target: big
+        |    expr: ["SRC.big"]
+        |  - target: nested
+        |    expr: ["SRC.nested"]
+        |  - target: literal_big
+        |    value: 18446744073709551617
+        |""".stripMargin
+    import spark.implicits._
+    def run(src: String, records: String, ctx: JValue) =
+      Engine.toJsonRecords(YamlParser.parse(rule.replace("SRC", src)),
+        graft.sources.Sources.jsonNode(spark, mapper.readTree(records), Nil), ctx,
+        nullAsMissing = true).as[String].collect().toSeq
+    val fromContext = run("@context", """[{"id": 0}]""", graft.Cli.jsonToJValue(mapper.readTree(doc)))
+    val fromInput = run("@input", s"[$doc]", JNull)
+    assert(fromContext == fromInput)
+    val out = mapper.readTree(fromContext.head)
+    assert(out.get("big").isDouble && out.get("big").asDouble == 1.8446744073709552e19)
+    assert(out.get("literal_big") == out.get("big"))
+    assert(!out.has("name_1"))
   }
 }
