@@ -88,7 +88,7 @@ final class BigramLmModel(
 /** Native probe of a [[BigramLmModel]] over a text column: one
   * tokenize-hash-lookup loop per row, inside whole-stage codegen, the
   * model riding in the plan as a reference object. Stateless and
-  * shuffle-free — the streaming-gate shape. */
+  * shuffle-free. */
 case class BigramLmScore(child: Expression, model: BigramLmModel)
     extends UnaryExpression {
 

@@ -12,12 +12,12 @@ import org.apache.spark.util.sketch.BloomFilter
 
 /** Native Catalyst probe of a pre-built Bloom filter over a LONG column.
   *
-  * The serialized bitset travels inside the expression (plan literals —
-  * the [[graft.streaming.StreamOps.decontaminationGate]] InSet treatment
-  * applied to a sketch), so every executor probes a local, cache-resident
-  * bitset: no broadcast variable lifecycle, no per-row hash-relation
-  * lookup, no UDF. Codegen emits a direct `mightContainLong` call via a
-  * plan reference, keeping the probe inside whole-stage codegen.
+  * The serialized bitset travels inside the expression (a plan literal,
+  * as an InSet carries its values), so every executor probes a local,
+  * cache-resident bitset: no broadcast variable lifecycle, no per-row
+  * hash-relation lookup, no UDF. Codegen emits a direct
+  * `mightContainLong` call via a plan reference, keeping the probe
+  * inside whole-stage codegen.
   *
   * Semantics: MAY return true for an absent value (false-positive rate
   * set at build time), NEVER false for a present one — callers must pair

@@ -19,8 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * The signals are per-document, so no corpus aggregation is needed at
   * all — this expression turns the Gopher repetition quality gate
   * (TextAnalysis.repetitionStats) into a completely narrow, shuffle-free
-  * projection that also composes with Structured Streaming (a streaming
-  * DataFrame cannot host the explode+groupBy formulation in append mode).
+  * projection.
   *
   * Selection by (count desc, gram asc) is order-independent, so the
   * in-row hash-map iteration order cannot affect the result — values are

@@ -69,7 +69,7 @@ final class LexiconAutomaton(val terms: Array[String]) extends Serializable {
     out
   }
 
-  /** Total hits across all terms — the scalar a streaming gate filters on. */
+  /** Total hits across all terms — the scalar a badword filter tests. */
   def totalHits(text: UTF8String): Long = {
     val c = counts(text)
     var n = 0L
@@ -179,8 +179,8 @@ object LexiconCounts {
     Bridge.column(LexiconCounts(Bridge.expression(text), lexicon))
 }
 
-/** Total lexicon hits of a text column — the stateless scalar for a
-  * streaming badword gate. */
+/** Total lexicon hits of a text column — the stateless scalar a badword
+  * filter tests. */
 case class LexiconHits(child: Expression, lexicon: LexiconAutomaton)
     extends UnaryExpression {
 

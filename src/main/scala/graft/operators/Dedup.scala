@@ -32,7 +32,7 @@ object Dedup {
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_docs"))
 
   /** Keep-first dedup: one survivor per key set, earliest by the ordering
-    * columns. The streaming-era "exact dedup" shape (row_number = 1). */
+    * columns (row_number = 1). */
   def keepFirst(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
@@ -117,12 +117,6 @@ object Dedup {
     * native expression, one JIT loop per row, no interpreted HOFs. */
   def minhashSignature(shingleHashes: Column, k: Int): Column =
     graft.functions.MinHashSignature.signature(shingleHashes, k)
-
-  /** (doc, sig array<long>[k]) — shingle hashing and the k-min pass are
-    * two native expressions composed in one codegen'd projection. */
-  def minhashSignatures(docs: DataFrame, textCol: String, idCol: String,
-      n: Int, k: Int): DataFrame =
-    minhashSignaturesFrom(shingleTable(docs, textCol, idCol, n), k)
 
   /** Signatures from a precomputed [[shingleTable]] — the k-min pass only. */
   def minhashSignaturesFrom(sh: DataFrame, k: Int): DataFrame =
@@ -556,10 +550,10 @@ object Dedup {
 
   /** (doc_id, h) span-hash instance rows — ONE native pass emits every
     * `n`-token span occurrence ([[graft.functions.ShingleText]]), hashed
-    * to 8 bytes before anything shuffles. The shared projection under
-    * [[spanDupStats]] and [[dupSpanHashes]] ([[spanScrub]] runs the same
-    * pass positionally via posexplode), so the tokenization/hashing
-    * contract lives in one place. */
+    * to 8 bytes before anything shuffles. The projection under
+    * [[spanDupStats]] ([[spanScrub]] runs the same pass positionally via
+    * posexplode), so the tokenization/hashing contract lives in one
+    * place. */
   private def spanHashRows(docs: DataFrame, textCol: String, idCol: String,
       n: Int): DataFrame =
     docs.select(col(idCol).as("doc_id"),
@@ -571,21 +565,11 @@ object Dedup {
     * max(doc_id)` per hash, so ONE map-side-combined aggregate on the
     * 8-byte hash replaces the former distinct-then-count pair — one
     * full exchange of the instance rows FEWER, with the same result
-    * set. Shared by [[dupSpanHashes]] and [[spanScrub]]. */
+    * set. */
   private def dupHashesFrom(hashRows: DataFrame): DataFrame =
     hashRows.select("doc_id", "h")
       .groupBy("h").agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
       .filter(col("d0") =!= col("d1")).select("h")
-
-  /** Hashes of `n`-token span texts occurring in ≥ 2 distinct documents —
-    * the batch-built artifact the streaming
-    * [[graft.streaming.StreamOps.spanDupGate]] bakes into its plan, the
-    * same relationship [[graft.operators.TextAnalysis.boilerplateGrams]]
-    * has to the boilerplate gate. One tokenization pass, everything past
-    * it keyed on the 8-byte hash. */
-  def dupSpanHashes(docs: DataFrame, textCol: String, idCol: String,
-      n: Int): DataFrame =
-    dupHashesFrom(spanHashRows(docs, textCol, idCol, n))
 
   /** Duplicated-span REMOVAL — the transformation [[spanDupStats]] only
     * diagnoses: every token covered by any `n`-token span instance whose
@@ -694,24 +678,6 @@ object Dedup {
       .filter(size(col("kept")) > 0)
       .select(col("doc_id"), concat_ws(" ", col("kept")).as("clean_text"),
         size(col("kept")).cast(LongType).as("n_kept"))
-  }
-
-  /** The benchmark set's distinct shingle hashes — the (tiny, by
-    * construction) batch artifact the streaming decontamination gate
-    * ([[graft.streaming.StreamOps.decontaminationGate]]) bakes into its
-    * plan as an InSet probe. */
-  def benchmarkHashes(benchmark: DataFrame, textCol: String, idCol: String,
-      n: Int): DataFrame =
-    shingleRowsOf(benchmark, textCol, idCol, n).select(col("h")).distinct()
-
-  /** [[benchmarkHashes]] as a compact Bloom bitset — the batch artifact
-    * for [[graft.streaming.StreamOps.bloomDecontaminationGate]] when the
-    * benchmark gram set outgrows InSet literals: size-independent probe
-    * cost, ~1.2 MB per million grams at 1% fpp. */
-  def benchmarkBloom(benchmark: DataFrame, textCol: String, idCol: String,
-      n: Int, fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter = {
-    val benchSh = benchmarkHashes(benchmark, textCol, idCol, n)
-    benchSh.stat.bloomFilter("h", math.max(benchSh.count(), 1L), fpp)
   }
 
   private def shingleRowsOf(docs: DataFrame, textCol: String, idCol: String,

@@ -211,11 +211,6 @@ object Ivf {
       .select("cl", "centroid")
       .collect().map(_.getSeq[Double](1)).toSeq
 
-  /** The persisted (id, cl) corpus assignment of a [[writeIndex]] index. */
-  def readAssignments(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(s"$path/assignments")
-
   /** Root directory for persisted index artifacts (IVF centroids, int8
     * vector indexes): the `spark.graft.index.root` session conf when set —
     * a Hadoop-FS path, so a shared deployment points it at hdfs:///s3://

@@ -29,8 +29,7 @@ object Pca {
 
   /** The trained artifact: per-dim means, the unit top direction, and
     * the eigenvalue estimate ‖(1/n)Σᵢ(xᵢ−m)((xᵢ−m)·v)‖ — 2·dims+1
-    * doubles, the batch-trained model a streaming gate bakes into its
-    * plan ([[graft.streaming.StreamOps.projectionGate]]). */
+    * doubles, small enough to bake into a plan as literals. */
   final case class PcaModel(means: Array[Double], loading: Array[Double],
       eigval: Double) {
     def dims: Int = means.length
@@ -38,9 +37,9 @@ object Pca {
 
   /** The fixed-point centered projection of `raw` onto the model's top
     * direction: Σ_d ⌊1e6·(x_d−m_d)·v_d⌋ / 1e6 — a narrow integer-chain
-    * projection (codegen'd, shuffle-free, stateless), the shared scoring
-    * column of [[projections]] and the streaming gate. */
-  def projection(raw: Column, model: PcaModel): Column =
+    * projection (codegen'd, shuffle-free, stateless), the scoring column
+    * of [[projections]]. */
+  private def projection(raw: Column, model: PcaModel): Column =
     dotFx(raw, model.means, model.loading).cast(DoubleType) / lit(1e6)
 
   private def dotFx(raw: Column, means: Array[Double],
@@ -142,11 +141,6 @@ object Pca {
     }
   }
 
-  /** [[fit]] rendered as the (dim, mean, loading, eigval) report. */
-  def topComponent(emb: DataFrame, idCol: String, vecCol: String,
-      dims: Int, iters: Int): DataFrame =
-    toFrame(emb.sparkSession, fit(emb, idCol, vecCol, dims, iters))
-
   /** A trained model as the (dim, mean, loading, eigval) report frame. */
   def toFrame(spark: org.apache.spark.sql.SparkSession,
       model: PcaModel): DataFrame = {
@@ -184,18 +178,14 @@ object Pca {
       rows.head.getDouble(3))
   }
 
-  /** True when a COMPLETE model artifact exists at `path`. */
-  def modelExists(spark: org.apache.spark.sql.SparkSession,
-      path: String): Boolean = Artifacts.markerExists(spark, path)
-
   /** Per-vector scalar projection onto the model's top direction plus an
     * `outlier` flag at |t| > sigmas·√eigval — the along-dominant-axis
     * outlier report (a vector far out on the corpus's own biggest axis
     * is a different-model embedding or genuinely alien content). One
     * narrow codegen scan against the baked-in model; no join, no
     * shuffle (callers order the output). Rows whose projection nulls
-    * out — null vector or null element — are EXCLUDED (defined,
-    * parity-safe semantics shared with the streaming gate); a
+    * out — null vector or null element — are EXCLUDED (a defined
+    * semantics the oracle restates); a
     * too-short array fails loudly under ANSI element_at. [[fit]]
     * rejects such corpora upstream, so this only matters when
     * projecting a different frame than the one fitted. */

@@ -207,14 +207,10 @@ object Sampling {
   }
 
   /** The mass-parameterized core of [[mixtureResample]] /
-    * [[mixtureResampleTokens]], public so a STREAM can apply rates
-    * derived from a batch profile: per-source mass is a plain Map (from
-    * a dataset card, a batch aggregation, yesterday's manifest), and
-    * what remains is a pure narrow md5-bucket filter — stateless,
-    * shuffle-free, append-safe, the [[graft.streaming.StreamOps]] gate
-    * pattern. Batch and stream evaluate the identical expression, so
-    * the kept sets agree row for row. */
-  def resampleByMass(df: DataFrame, idCol: String, sourceCol: String,
+    * [[mixtureResampleTokens]]: per-source mass is a plain Map (from a
+    * batch aggregation), and what remains is a pure narrow md5-bucket
+    * filter — stateless and shuffle-free. */
+  private def resampleByMass(df: DataFrame, idCol: String, sourceCol: String,
       mass: Map[String, Long], weights: Map[String, Double],
       mod: Int = 1000000): DataFrame = {
     require(weights.nonEmpty && weights.values.forall(_ > 0),

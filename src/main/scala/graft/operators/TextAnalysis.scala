@@ -238,7 +238,7 @@ object TextAnalysis {
     val bi = counts.filter(col("kind") === "b")
       .select(col("gram").as("bigram"), col("c").as("cb"))
     // post-aggregation scalars (vocabulary-sized input — a driver pull of
-    // one row, the benchmarkBloom/count pattern). SUM over zero rows is
+    // one row). SUM over zero rows is
     // null: an empty corpus (or one of sub-bigram docs) must short-circuit
     // to an empty result, not reach the ANSI-mode divisions below, where
     // x / 0.0 is an ERROR in Spark 4, not infinity
@@ -276,8 +276,8 @@ object TextAnalysis {
       idCol: String, charsCol: String): org.apache.spark.sql.DataFrame = {
     // the signals are PER-DOCUMENT, so no corpus aggregation is needed:
     // one native in-row pass per n (graft.functions.GramStats) makes the
-    // whole operator a narrow shuffle-free projection — it composes with
-    // streaming and costs one scan at any corpus size. (The exploded
+    // whole operator a narrow shuffle-free projection that costs one scan
+    // at any corpus size. (The exploded
     // groupBy formulation this replaced shuffled the full gram stream
     // twice; a fused cached variant measured 2.3x slower still.)
     import graft.functions.GramStats.gramStats
@@ -304,17 +304,6 @@ object TextAnalysis {
     docs.select(col(idCol),
       explode(graft.functions.WinnowFingerprints
         .winnowFingerprints(col(textCol), n, w)).as("fp"))
-
-  /** The boilerplate gram set itself — n-grams appearing in ≥ minDf
-    * distinct documents, with their doc frequency: the batch artifact the
-    * streaming gate ([[graft.streaming.StreamOps.boilerplateGate]])
-    * consumes (which needs the STRINGS, hence ngramRows not the hashed
-    * form below). One map-side-combined shuffle on the gram. */
-  def boilerplateGrams(docs: org.apache.spark.sql.DataFrame, textCol: String,
-      idCol: String, n: Int, minDf: Int): org.apache.spark.sql.DataFrame =
-    ngramRows(docs, textCol, idCol, n, distinct = true)
-      .groupBy("gram").agg(count(lit(1)).as("df"))
-      .filter(col("df") >= minDf)
 
   /** Corpus-wide boilerplate: trigrams appearing in ≥ minDf distinct
     * documents are boilerplate; per document, the count and fraction of
@@ -404,6 +393,23 @@ object TextAnalysis {
         coalesce(col("lm_score"), lit(0.0)).as("lm_score"))
   }
 
+  /** The LM-quality filter (CCNet-family perplexity gate): score each
+    * document's bigrams against a trained [[graft.functions.BigramLmModel]]
+    * ([[graft.functions.BigramLmScore.train]] — pruned counts + unseen
+    * 1/V backoff, carried in the plan) and drop documents below
+    * `minScore` (token soup and off-distribution gibberish score near the
+    * 1/V floor; fluent in-distribution text scores an order of magnitude
+    * above it). One native tokenize-hash-lookup pass per row inside
+    * whole-stage codegen: no shuffle, no second corpus scan. Emits
+    * `lm_score`. */
+  def lmGate(docs: org.apache.spark.sql.DataFrame, textCol: String,
+      model: graft.functions.BigramLmModel,
+      minScore: Double): org.apache.spark.sql.DataFrame =
+    docs
+      .withColumn("lm_score",
+        graft.functions.BigramLmScore.score(col(textCol), model))
+      .filter(col("lm_score") >= minScore)
+
   /** The window-free scoring pipeline over a (id, w1, g2) gram-occurrence
     * frame, un-checkpointed — split out so PlanQualitySpec can assert the
     * plan shape (the public [[lmScore]] pins it, which
@@ -454,8 +460,7 @@ object TextAnalysis {
     *
     * Returns (idCol, n_grams, dsir_score); documents with < 2 tokens
     * score 0. Selection (top-k / threshold / Gumbel resampling) composes
-    * downstream — see [[graft.queries.QualityQueries.dsirSelect]] and the
-    * streaming gate [[graft.streaming.StreamOps.dsirGate]]. */
+    * downstream — see [[graft.queries.QualityQueries.dsirSelect]]. */
   def dsirScores(docs: org.apache.spark.sql.DataFrame, textCol: String,
       idCol: String, isTarget: Column,
       buckets: Int = 4096): org.apache.spark.sql.DataFrame = {
@@ -498,36 +503,22 @@ object TextAnalysis {
       count(lit(1)).as("nr"),
       sum(when(col("is_target"), lit(1L)).otherwise(lit(0L))).as("nt"))
 
-  /** Gram-count totals of a (b, nr, nt) table — driver scalars. */
-  private[graft] def dsirTotals(
-      counts: org.apache.spark.sql.DataFrame): (Long, Long) = {
-    val tot = counts
-      .agg(sum(col("nr")).as("nr_tot"), sum(col("nt")).as("nt_tot")).head()
-    // an empty corpus (no doc with >= 2 tokens) sums to null
-    if (tot.isNullAt(0)) (0L, 0L) else (tot.getLong(0), tot.getLong(1))
-  }
-
-  /** The fixed-point smoothed log importance ratio as ONE shared Column
-    * expression — every consumer (the batch table, the streaming model's
-    * per-bucket values AND its unseen-bucket default) evaluates the
-    * identical op sequence, so scores agree bit-for-bit across paths. */
-  private[graft] def dsirLrFx(nr: Column, nt: Column, nrTot: Long,
-      ntTot: Long, buckets: Int): Column = {
-    val pt = (nt + lit(1)).cast(DoubleType) /
-      (lit(ntTot) + lit(buckets)).cast(DoubleType)
-    val pr = (nr + lit(1)).cast(DoubleType) /
-      (lit(nrTot) + lit(buckets)).cast(DoubleType)
-    floor(log(pt / pr) * lit(1e6)).cast(LongType)
-  }
-
   /** (b, lr_fx) — the broadcastable B-row model from a MATERIALIZED
     * count table: totals reduce the tiny table to driver literals, then
     * the fixed-point smoothed log ratio is a narrow projection. */
   private[graft] def dsirLrTable(counts: org.apache.spark.sql.DataFrame,
       buckets: Int): org.apache.spark.sql.DataFrame = {
-    val (nrTot, ntTot) = dsirTotals(counts)
+    val tot = counts
+      .agg(sum(col("nr")).as("nr_tot"), sum(col("nt")).as("nt_tot")).head()
+    // an empty corpus (no doc with >= 2 tokens) sums to null
+    val (nrTot, ntTot) =
+      if (tot.isNullAt(0)) (0L, 0L) else (tot.getLong(0), tot.getLong(1))
+    val pt = (col("nt") + lit(1)).cast(DoubleType) /
+      (lit(ntTot) + lit(buckets)).cast(DoubleType)
+    val pr = (col("nr") + lit(1)).cast(DoubleType) /
+      (lit(nrTot) + lit(buckets)).cast(DoubleType)
     counts.select(col("b"),
-      dsirLrFx(col("nr"), col("nt"), nrTot, ntTot, buckets).as("lr_fx"))
+      floor(log(pt / pr) * lit(1e6)).cast(LongType).as("lr_fx"))
   }
 
   /** Per-doc integer-exact scoring against a (b, lr_fx) table. */
@@ -551,8 +542,7 @@ object TextAnalysis {
     * length(text) minus the n−1 separator spaces — exact for
     * single-space-joined text, and every signal is per-row IEEE
     * arithmetic, so the whole operator is ONE narrow shuffle-free
-    * projection: it runs unchanged on a stream (the repetitionGate
-    * pattern) and at any corpus size. */
+    * projection at any corpus size. */
   def gopherRules(docs: org.apache.spark.sql.DataFrame, textCol: String,
       idCol: String): org.apache.spark.sql.DataFrame = {
     val t = tokens(col(textCol))
@@ -636,15 +626,6 @@ object TextAnalysis {
   def bpeModelExists(spark: org.apache.spark.sql.SparkSession,
       path: String): Boolean =
     Artifacts.markerExists(spark, s"$path/merges")
-
-  /** The learned merge table as a broadcastable
-    * [[graft.functions.BpeMerges]] encoder model. */
-  def bpeMergesModel(docs: org.apache.spark.sql.DataFrame, textCol: String,
-      numMerges: Int = 40,
-      maxWords: Int = 4096): graft.functions.BpeMerges =
-    new graft.functions.BpeMerges(
-      bpeLearn(bpeWordCounts(docs, textCol, maxWords), numMerges)
-        .map(t => (t._1, t._2)))
 
   /** (word, count) top-`maxWords` by (count DESC, word ASC) — one
     * map-side-combined shuffle + distributed top-k; the only corpus

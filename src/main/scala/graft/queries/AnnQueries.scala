@@ -922,8 +922,7 @@ object AnnQueries extends QueryFamily {
 
   /** Per-vector projection onto the shared PCA direction with the
     * |t| > 3·√eigval outlier flag ([[graft.operators.Pca.projections]])
-    * — the along-dominant-axis outlier report, and the batch twin of
-    * [[graft.streaming.StreamOps.projectionGate]]. One narrow codegen
+    * — the along-dominant-axis outlier report. One narrow codegen
     * scan against the baked-in 2·dims+1-double model. */
   def pcaOutliers(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Pca.projections(Tables.embeddings(spark, dir),

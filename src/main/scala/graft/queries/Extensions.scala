@@ -6,11 +6,8 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.operators.Multimodal
-import graft.streaming.StreamOps
 
-/** Event-time windows and multimodal-column queries. The windowed
-  * aggregation is the same plan StreamOps runs under Structured Streaming —
-  * batch here so the driver can oracle it. */
+/** Event-time windows and multimodal-column queries. */
 object Extensions extends QueryFamily {
   /** Tumbling 1-hour windows over events: window().start aligns with
     * date_trunc('hour') so DuckDB can oracle it. Decimal-exact sum. */
@@ -29,8 +26,7 @@ object Extensions extends QueryFamily {
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin))(windowEvents)
 
-  /** Batch inactivity-gap sessionization — the oracle-checked sibling of
-    * the streaming [[StreamOps.sessionize]]: a new session starts when a
+  /** Inactivity-gap sessionization: a new session starts when a
     * user's gap exceeds 30 minutes; session id = running count of session
     * starts per user. Gaps compare FLOOR-second epochs on both engines so
     * the nanosecond parquet timestamps cannot straddle the threshold

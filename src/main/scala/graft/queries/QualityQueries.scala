@@ -135,7 +135,7 @@ object QualityQueries extends QueryFamily {
     * NINE ride one narrow shuffle-free projection of per-row
     * [[graft.functions.GramStats]] natives — never nine exploded gram
     * shuffles (the formulation the in-row native replaced, measured
-    * 2.3× slower at n=2,3 alone); composes with streaming unchanged. */
+    * 2.3× slower at n=2,3 alone). */
   def repetitionProfile(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id") +:
@@ -185,12 +185,9 @@ object QualityQueries extends QueryFamily {
        |ORDER BY d.doc_id""".stripMargin
   }
 
-  /** The nine repetition fractions as ONE shared set of Column trees —
-    * the batch query and the streaming gate
-    * ([[graft.streaming.StreamOps.repetitionGate]]) evaluate the
-    * identical op sequence, so signal values (and keep decisions)
-    * agree bit-for-bit across paths (the ensembleSignals doctrine). */
-  private[graft] def repetitionSignals(text: Column,
+  /** The nine repetition fractions of [[repetitionProfile]] as
+    * (name, Column) pairs, in output order. */
+  private def repetitionSignals(text: Column,
       nChars: Column): Seq[(String, Column)] = {
     import graft.functions.GramStats.gramStats
     RepetitionTopNs.map { n =>
@@ -357,11 +354,10 @@ object QualityQueries extends QueryFamily {
        |ORDER BY d.doc_id""".stripMargin
 
   /** The ONE definition of the entropy-in-nats expression — shared by
-    * [[charEntropy]], [[curationPipeline]]'s gate, and the streaming
-    * [[graft.streaming.StreamOps.entropyGate]], so the fixed-point scale
-    * and the empty-text convention can never drift between them.
+    * [[charEntropy]] and [[curationPipeline]]'s gate, so the fixed-point
+    * scale and the empty-text convention can never drift between them.
     * Codegen CSE collapses the duplicate native subtrees. */
-  private[graft] def entropyNats(text: Column): Column = {
+  private def entropyNats(text: Column): Column = {
     val len = length(text).cast(LongType)
     when(len === 0, lit(0.0))
       .otherwise((graft.functions.CharEntropyFx.entFx(text)
@@ -380,14 +376,14 @@ object QualityQueries extends QueryFamily {
     * above the corpus's gram count — so its scores are lmScore-exact
     * and the DuckDB oracle can restate them; a 100 TB run sets a real
     * topK and the rare-gram tail falls to the same 1/V floor), then
-    * gate the corpus through [[StreamOps.lmGate]] — the identical
-    * batch/stream native filter: one codegen'd tokenize-hash-probe
-    * pass per row, no shuffle, no second corpus scan. The threshold
+    * gate the corpus through [[TA.lmGate]]: one codegen'd
+    * tokenize-hash-probe pass per row, no shuffle, no second corpus
+    * scan. The threshold
     * sits at the corpus median, the "keep the fluent half" shape. */
   def lmGate(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val model = sharedLmModel(spark, dir)
-    graft.streaming.StreamOps.lmGate(docs, "text", model, LmGateThreshold)
+    TA.lmGate(docs, "text", model, LmGateThreshold)
       .select(col("doc_id"), col("lm_score"))
       .orderBy("doc_id")
   }
@@ -1279,10 +1275,9 @@ object QualityQueries extends QueryFamily {
         |ORDER BY signal_a, signal_b""".stripMargin))(signalCorr)
 
   /** The ensemble's three integer-valued quality signals as ONE shared
-    * set of Column trees — the batch query, its oracle restatement, and
-    * the streaming gate ([[graft.streaming.StreamOps.ensembleGate]]) all
-    * evaluate the identical op sequence, so signal values (and so
-    * ranks) agree bit-for-bit across paths. Ratios floor-quantize to
+    * set of Column trees — every query that reads them evaluates the
+    * identical op sequence, so signal values (and so ranks) agree
+    * bit-for-bit across queries. Ratios floor-quantize to
     * 1e-6 fixed point, keeping each signal's value set
     * cardinality-bounded (the histogram-rank precondition). */
   private[graft] def ensembleSignals(text: Column,

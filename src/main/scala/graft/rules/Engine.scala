@@ -84,13 +84,10 @@ object Engine {
       collectWarnings: Boolean = false, trace: Boolean = false): Compiled = {
     // stable input order for finalize's stable sort: monotonically
     // increasing id encodes (partition, offset) = scan order, captured
-    // before any shuffle. Only attached when a finalize sort will consume
-    // it — it is unsupported on streaming inputs and dead weight otherwise.
-    // __order also serializes warning emission (batch only — streams
-    // cannot host monotonically_increasing_id, and the streaming warnings
-    // shape is per-row anyway, no cross-row ordering needed)
-    val needsOrder = (rule.finalizeSpec.exists(_.sort.isDefined) ||
-      collectWarnings || trace) && !input.isStreaming
+    // before any shuffle. Only attached when a finalize sort, warning
+    // emission or a trace will consume it — dead weight otherwise.
+    val needsOrder = rule.finalizeSpec.exists(_.sort.isDefined) ||
+      collectWarnings || trace
     val ordered = input.withColumn("__order",
       if (needsOrder) monotonically_increasing_id() else lit(0L))
     // JSON ingest (Sources.json) tags every object field that holds an
@@ -494,30 +491,6 @@ object Engine {
       case (k, i) if !f.isNullAt(i) => k -> f.getString(i)
     }.toMap).getOrElse(Map.empty[String, String])
     Traced(out.toSeq.map(_.getString(0)), values, c.rec.compiledSubRules)
-  }
-
-  /** Streaming-compatible warnings shape: ONE DataFrame carrying the
-    * typed output columns plus `_kept` (record survived) and `_warnings`
-    * (array<struct<kind,path,message>>, the record's own warnings in
-    * order) — the per-item (output, warnings) pairs of the reference's
-    * transform_stream (transform.rs:87-161), expressible under a
-    * streaming sink where a second side-channel DataFrame cannot exist.
-    * Rows are emitted when kept OR warned; no global sort or collect, so
-    * it composes with readStream. Finalize (banned in stream mode
-    * anyway) is not applied. */
-  def transformWithWarningsColumn(rule: RuleFile, input: DataFrame,
-      context: JValue = JNull, nullAsMissing: Boolean = false,
-      ruleLoader: RuleLoader = noLoader): DataFrame = {
-    require(rule.finalizeSpec.isEmpty,
-      "transformWithWarningsColumn does not apply finalize (stream shape)")
-    val c = compilePlan(rule, input, context, nullAsMissing, ruleLoader,
-      collectWarnings = true)
-    val warnsCol =
-      if (c.warns.isEmpty) array().cast(ArrayType(CaughtCond.warningSchema))
-      else filter(array(c.warns: _*), w => w.isNotNull)
-    val outCols = c.out.map { case (name, ce) => ce.valueOrNull.as(name) }.toSeq
-    c.df.select(outCols ++ Seq(c.keep.as("_kept"), warnsCol.as("_warnings")): _*)
-      .filter(col("_kept") || size(col("_warnings")) > 0)
   }
 
   /** Per-item shape of the reference's transform_stream

@@ -24,26 +24,6 @@ object Sinks {
       mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
 
-  /** Compacting rewrite — the answer to the small-files problem a
-    * streaming ingest or over-partitioned job leaves behind (at 100 TB,
-    * millions of KB-sized files make listing and footer reads the
-    * bottleneck, not the data): rewrite into ~`targetRows`-sized files,
-    * RANGE-partitioned and sorted on `sortCols` so each output file
-    * covers a tight key range — min/max footer stats then prune file
-    * reads for range predicates (the poor man's Z-order for a single
-    * sort dimension). The row count comes from the caller (a catalog
-    * stat or `df.count()`) so the rewrite itself plans no extra job. */
-  def writeCompacted(df: DataFrame, path: String, sortCols: Seq[String],
-      totalRows: Long, targetRows: Long,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    require(sortCols.nonEmpty && targetRows > 0)
-    val files = math.max(1L, (totalRows + targetRows - 1) / targetRows).toInt
-    val order = sortCols.map(org.apache.spark.sql.functions.col(_).asc)
-    df.repartitionByRange(files, order: _*)
-      .sortWithinPartitions(order: _*)
-      .write.mode(mode).parquet(path)
-  }
-
   /** Bucketed (and optionally sorted) parquet table in the session
     * catalog. Joins/aggregations on the bucket key between tables with
     * the same bucketing skip the shuffle entirely; sortBy additionally

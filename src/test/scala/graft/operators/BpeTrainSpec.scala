@@ -19,6 +19,13 @@ class BpeTrainSpec extends AnyFunSuite {
     rows.toDF("doc_id", "text")
   }
 
+  /** The learned merge table as a [[graft.functions.BpeMerges]] encoder. */
+  private def mergesModel(d: org.apache.spark.sql.DataFrame, numMerges: Int,
+      maxWords: Int): graft.functions.BpeMerges =
+    new graft.functions.BpeMerges(TextAnalysis.bpeLearn(
+      TextAnalysis.bpeWordCounts(d, "text", maxWords), numMerges)
+      .map(t => (t._1, t._2)))
+
   test("hand corpus learns the expected merges with deterministic tie-breaks") {
     // words: low ×3, lower ×1. pair counts: (l,o)=4, (o,w)=4, (w,e)=1,
     // (e,r)=1 → tie at 4 breaks lexicographically to (l,o); then
@@ -75,7 +82,7 @@ class BpeTrainSpec extends AnyFunSuite {
 
   test("encoder replays training segmentations and degrades on unseen words") {
     val d = docs(1L -> "low low low", 2L -> "lower")
-    val m = TextAnalysis.bpeMergesModel(d, "text", numMerges = 10, maxWords = 100)
+    val m = mergesModel(d, numMerges = 10, maxWords = 100)
     assert(m.segment("low").toSeq == Seq("low"))
     assert(m.segment("lower").toSeq == Seq("lower"))
     // unseen word: (l,o) then (lo,w) apply, the rest stay characters
@@ -118,7 +125,7 @@ class BpeTrainSpec extends AnyFunSuite {
     val clef = new String(Character.toChars(0x1D11E)) // 𝄞, two UTF-16 units
     val d = docs(1L -> s"ab ${clef}b ab")
     // pair counts: (a,b)=2, ($clef,b)=1 → the one merge is (a,b)
-    val m = TextAnalysis.bpeMergesModel(d, "text", numMerges = 1, maxWords = 10)
+    val m = mergesModel(d, numMerges = 1, maxWords = 10)
     assert(m.segment(clef + "b").toSeq == Seq(clef, "b"),
       "surrogate pair split into UTF-16 halves")
     assert(m.segment("ab").toSeq == Seq("ab"))
@@ -169,8 +176,7 @@ class BpeTrainSpec extends AnyFunSuite {
       // produces — the artifact-read path of curationPipeline/bpeEncode
       // is bit-identical to the train path
       val reread = TextAnalysis.readBpeModel(spark, path)
-      val fresh = TextAnalysis.bpeMergesModel(
-        graft.Tables.documents(spark, dir), "text",
+      val fresh = mergesModel(graft.Tables.documents(spark, dir),
         numMerges = 40, maxWords = 4096)
       assert(shared.pairs.toSeq == fresh.pairs.toSeq,
         "shared model must equal a fresh train")

@@ -76,7 +76,7 @@ class IvfSpec extends AnyFunSuite {
       val reread = Ivf.readCentroids(spark, idx)
       assert(reread == cents)
       // assignments: the persisted corpus map equals a fresh assignment
-      val persisted = Ivf.readAssignments(spark, idx)
+      val persisted = spark.read.parquet(s"$idx/assignments")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val fresh = Ivf.assign(b, cents)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -42,15 +42,26 @@ class NbClassifySpec extends AnyFunSuite {
       Seq((10L, true), (11L, true), (12L, false)))
   }
 
-  /** Independent scalar reference: same md5 bucketing (via
-    * [[graft.functions.DsirModel.bucketOf]]), same add-1 smoothing, same
-    * floor(ln·1e6) fixed-point quantization, integer sums, (score DESC,
-    * class ASC) argmax. */
+  /** The engine's `conv(substring(md5(tok), 1, 15), 16, 10) % buckets`
+    * in JVM bytes: the first 15 hex nibbles of the UTF-8 md5 folded into
+    * a 60-bit long. */
+  private def md5Bucket(md: java.security.MessageDigest, tok: String,
+      buckets: Int): Int = {
+    val d = md.digest(tok.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val v = (0 until 15).foldLeft(0L) { (acc, i) =>
+      val b = d(i / 2)
+      (acc << 4) | (if (i % 2 == 0) (b >> 4) & 0xf else b & 0xf).toLong
+    }
+    (v % buckets).toInt
+  }
+
+  /** Independent scalar reference: same md5 bucketing ([[md5Bucket]]),
+    * same add-1 smoothing, same floor(ln·1e6) fixed-point quantization,
+    * integer sums, (score DESC, class ASC) argmax. */
   private def reference(rows: Seq[(Long, String, String)],
       buckets: Int): Map[Long, (String, Long)] = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    def bucket(tok: String): Int =
-      graft.functions.DsirModel.bucketOf(md, tok, buckets).toInt
+    def bucket(tok: String): Int = md5Bucket(md, tok, buckets)
     val train = rows.filter(_._1 < 10)
     val hold = rows.filter(_._1 >= 10)
     val classes = train.map(_._3).distinct.sorted
@@ -107,27 +118,6 @@ class NbClassifySpec extends AnyFunSuite {
     val out = run(d)
     assert(Set("A", "B").contains(out.head._3))
     assert(!out.head._4)
-  }
-
-  test("native NbModel replicates the batch operator on real documents") {
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val isT = col("doc_id") % 10 < 8
-    val model = graft.functions.NbPredict.train(
-      docs, "text", "doc_id", "lang", isT, buckets = 512)
-    val batch = TextAnalysis.nbClassify(
-        docs, "text", "doc_id", "lang", isT, buckets = 512)
-      .collect().map(r => r.getLong(0) -> (r.getString(2), r.getDouble(4)))
-      .toMap
-    val native = docs.filter(!isT).select(col("doc_id"),
-        graft.functions.NbPredict.predict(col("text"), model),
-        graft.functions.NbPredict.score(col("text"), model))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-    assert(native.nonEmpty && native.length == batch.size)
-    native.foreach { case (id, p, s) =>
-      val (bp, bs) = batch(id)
-      assert(p == bp && s == bs,
-        s"doc $id: native ($p, $s) != batch ($bp, $bs)")
-    }
   }
 
   test("output is invariant under repartitioning") {

@@ -12,7 +12,14 @@ class PcaSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
-  /** The exact arithmetic of [[Pca.topComponent]] on plain arrays. */
+  /** [[Pca.fit]] as the (dim, mean, loading, eigval) report rows. */
+  private def fitRows(emb: org.apache.spark.sql.DataFrame, dims: Int,
+      iters: Int): Array[(Long, Double, Double, Double)] =
+    Pca.toFrame(spark, Pca.fit(emb, "vec_id", "embedding", dims, iters))
+      .collect().map(r =>
+        (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+
+  /** The exact arithmetic of [[Pca.fit]] on plain arrays. */
   private def brute(vecs: Array[Array[Double]], iters: Int)
       : (Array[Double], Array[Double], Double) = {
     val dims = vecs.head.length
@@ -39,15 +46,13 @@ class PcaSpec extends AnyFunSuite {
     (means, v, nrm)
   }
 
-  test("topComponent equals the driver-side brute force on sf0.001") {
+  test("Pca.fit equals the driver-side brute force on sf0.001") {
     val emb = graft.Tables.embeddings(spark, dir)
     val vecs = emb.select("vec_id", "embedding").collect()
       .sortBy(_.getLong(0))
       .map(_.getSeq[Float](1).map(_.toDouble).toArray)
     val (means, v, eig) = brute(vecs, iters = 3)
-    val got = Pca.topComponent(emb, "vec_id", "embedding", dims = 64, iters = 3)
-      .collect().map(r =>
-        (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+    val got = fitRows(emb, dims = 64, iters = 3)
     assert(got.length == 64)
     got.foreach { case (d, m, l, e) =>
       assert(m == means(d.toInt), s"mean at dim $d")
@@ -59,12 +64,10 @@ class PcaSpec extends AnyFunSuite {
     assert(eig > 0.0)
   }
 
-  test("topComponent is bit-equal under repartitioning") {
+  test("Pca.fit is bit-equal under repartitioning") {
     val emb = graft.Tables.embeddings(spark, dir)
-    val a = Pca.topComponent(emb, "vec_id", "embedding", 64, 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-    val b = Pca.topComponent(emb.repartition(7), "vec_id", "embedding", 64, 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+    val a = fitRows(emb, 64, 3)
+    val b = fitRows(emb.repartition(7), 64, 3)
     assert(a.toSeq == b.toSeq)
   }
 
@@ -93,9 +96,9 @@ class PcaSpec extends AnyFunSuite {
     val m = Pca.fit(emb, "vec_id", "embedding", 64, 3)
     val path = java.nio.file.Files
       .createTempDirectory("pca_model").toString + "/model"
-    assert(!Pca.modelExists(spark, path))
+    assert(!Artifacts.markerExists(spark, path))
     Pca.writeModel(spark, m, path)
-    assert(Pca.modelExists(spark, path))
+    assert(Artifacts.markerExists(spark, path))
     val back = Pca.readModel(spark, path, 64)
     assert(back.means.toSeq == m.means.toSeq)
     assert(back.loading.toSeq == m.loading.toSeq)
@@ -105,7 +108,7 @@ class PcaSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { Pca.readModel(spark, path, 32) }
   }
 
-  test("topComponent recovers a planted dominant direction") {
+  test("Pca.fit recovers a planted dominant direction") {
     import spark.implicits._
     val dims = 8
     // planted unit direction (1,1,0,...)/√2 with deterministic spread t
@@ -118,8 +121,7 @@ class PcaSpec extends AnyFunSuite {
       (i.toLong, vec.toSeq)
     }
     val df = rows.toDF("vec_id", "embedding")
-    val loading = Pca.topComponent(df, "vec_id", "embedding", dims, iters = 8)
-      .collect().sortBy(_.getLong(0)).map(_.getDouble(2))
+    val loading = Pca.fit(df, "vec_id", "embedding", dims, iters = 8).loading
     val cos = math.abs(loading.zip(target).map { case (a, b) => a * b }.sum)
     assert(cos > 0.99, s"|cos(loading, planted)| = $cos")
   }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-9 additions: the shared survivor-labeling terminal step
-  * ([[Dedup.keepRepresentatives]]) and the corpus bigram-LM quality
-  * score ([[TextAnalysis.lmScore]]). */
+  * ([[Dedup.keepRepresentatives]]), the corpus bigram-LM quality
+  * score ([[TextAnalysis.lmScore]]) and its filter
+  * ([[TextAnalysis.lmGate]]). */
 class SurvivorLmSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.Sessions.local(4)
@@ -82,87 +83,28 @@ class SurvivorLmSpec extends AnyFunSuite {
     assert(s(100L) > s(101L))
   }
 
-  test("lmGate filters a real stream; kept set equals the batch filter") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  test("lmGate keeps exactly the documents scoring at or above minScore") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val corpus = (1L to 40L)
       .map(i => (i, Seq.tabulate(15)(j => s"t${(i + j) % 7}").mkString(" ")))
       .toDF("doc_id", "text")
     val model = graft.functions.BigramLmScore.train(corpus, "text", topK = 1000)
-    val batch = Seq(
+    val docs = Seq(
       (10L, "t1 t2 t3 t4 t5 t6"),
       (11L, "junk zzz yyy xxx www vvv"),
-      (12L, "t0 t1 t2 t3 t4"))
+      (12L, "t0 t1 t2 t3 t4")).toDF("doc_id", "text")
     // tiny 7-token vocabulary => the unseen floor 1/V ~ 0.14 is high;
     // in-distribution bigrams score ~(c+1)/(c+7) ~ 0.9
     val minScore = 0.5
-    val wantKept = graft.streaming.StreamOps
-      .lmGate(batch.toDF("doc_id", "text"), "text", model, minScore)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(wantKept.contains(10L) && !wantKept.contains(11L))
-
-    val input = MemoryStream[(Long, String)]
-    val gated = graft.streaming.StreamOps.lmGate(
-      input.toDF.toDF("doc_id", "text"), "text", model, minScore)
-    val q = gated.select("doc_id", "lm_score").writeStream
-      .format("memory").queryName("lm_gate_out").outputMode("append").start()
-    input.addData(batch: _*)
-    q.processAllAvailable(); q.stop()
-    val kept = spark.table("lm_gate_out").select("doc_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(kept == wantKept, s"stream kept $kept, batch kept $wantKept")
-    assert(q.lastProgress.stateOperators.isEmpty)
-  }
-
-  test("lmBucket on a stream: per-language thresholds assign batch-identically") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions.{col, lit, percentile}
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val corpus = (1L to 60L)
-      .map { i =>
-        // ~10% junk per language: unseen-token soup scores at the 1/V
-        // floor, guaranteeing a sub-q25 tail exists on both sides
-        val text =
-          if (i % 10 == 7) s"junk${i}a junk${i}b junk${i}c junk${i}d"
-          else Seq.tabulate(12)(j => s"t${(i * 7 + j) % 9}").mkString(" ")
-        (i, if (i % 3 == 0) "de" else "en", text)
-      }
-      .toDF("doc_id", "lang", "text")
-    // unpruned model scores ≡ lmScore (the exactness contract above), so
-    // per-language quartiles of lmScore ARE the bucket thresholds
-    val model = graft.functions.BigramLmScore.train(corpus, "text", topK = 10000)
-    val scored = TextAnalysis.lmScore(corpus, "text", "doc_id")
-      .join(corpus.select("doc_id", "lang"), "doc_id")
-    val th = scored.groupBy("lang")
-      .agg(percentile(col("lm_score"), lit(0.25)).as("q25"),
-        percentile(col("lm_score"), lit(0.75)).as("q75"))
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val batchBuckets = graft.streaming.StreamOps
-      .lmBucket(corpus, "text", "lang", model, th)
-      .select("doc_id", "bucket").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    // sanity: thresholds split each language three ways
-    assert(batchBuckets.values.toSet == Set("head", "middle", "tail"))
-
-    val input = MemoryStream[(Long, String, String)]
-    val bucketed = graft.streaming.StreamOps.lmBucket(
-      input.toDF.toDF("doc_id", "lang", "text"), "text", "lang", model, th)
-    val q = bucketed.select("doc_id", "bucket").writeStream
-      .format("memory").queryName("lm_bucket_out").outputMode("append").start()
-    input.addData(corpus.collect().map(r =>
-      (r.getLong(0), r.getString(1), r.getString(2))).toSeq: _*)
-    q.processAllAvailable(); q.stop()
-    val streamBuckets = spark.table("lm_bucket_out")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(streamBuckets == batchBuckets)
-    assert(q.lastProgress.stateOperators.isEmpty) // stateless gate
-    // unknown language routes to tail
-    val odd = graft.streaming.StreamOps.lmBucket(
-      Seq((99L, "xx", "t1 t2 t3")).toDF("doc_id", "lang", "text"),
-      "text", "lang", model, th)
-    assert(odd.select("bucket").collect()(0).getString(0) == "tail")
+    val kept = TextAnalysis.lmGate(docs, "text", model, minScore)
+      .select("doc_id", "lm_score").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(kept.contains(10L) && !kept.contains(11L))
+    val scores = docs.select(col("doc_id"),
+        graft.functions.BigramLmScore.score(col("text"), model))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(kept == scores.filter(_._2 >= minScore),
+      s"gate kept $kept, scores $scores")
   }
 
   test("lmScore is partitioning-independent (fixed-point sum)") {

@@ -347,7 +347,8 @@ class PlanQualitySpec extends AnyFunSuite {
     // the interpreted-HOF formulations these replaced sat OUTSIDE codegen;
     // pin both the operator name and its codegen placement
     val docs = graft.Tables.documents(spark, dir)
-    val sigPlan = planOf(graft.operators.Dedup.minhashSignatures(docs, "text", "doc_id", 3, 64))
+    val sigPlan = planOf(graft.operators.Dedup.minhashSignaturesFrom(
+      graft.operators.Dedup.shingleTable(docs, "text", "doc_id", 3), 64))
     assert(sigPlan.contains("rm_shingle_hashes") && sigPlan.contains("rm_minhash_signature"),
       s"expected native shingle+minhash expressions in:\n$sigPlan")
     // "*(n)" prefixes mark whole-stage-codegen stages in plan toString
@@ -465,7 +466,7 @@ class PlanQualitySpec extends AnyFunSuite {
   test("bigram-LM gate is a narrow native filter inside WholeStageCodegen") {
     val docs = graft.Tables.documents(spark, dir)
     val model = graft.functions.BigramLmScore.train(docs, "text", topK = 1000)
-    val plan = planOf(graft.streaming.StreamOps.lmGate(docs, "text", model, 0.01))
+    val plan = planOf(graft.operators.TextAnalysis.lmGate(docs, "text", model, 0.01))
     assert(plan.contains("rm_bigram_lm_score"),
       s"expected the native LM probe in:\n$plan")
     assert(!plan.contains("Exchange"),
@@ -609,31 +610,22 @@ class PlanQualitySpec extends AnyFunSuite {
       s"no cartesian anywhere in NB scoring:\n$plan")
   }
 
-  test("model-gate natives (NB, rank, BPE) run inside WholeStageCodegen, shuffle-free") {
+  test("BPE count native runs inside WholeStageCodegen, shuffle-free") {
     import org.apache.spark.sql.functions.col
     val docs = graft.Tables.documents(spark, dir)
-    val isTrain = col("doc_id") % 10 < 8
-    val nb = graft.functions.NbPredict.train(
-      docs, "text", "doc_id", "lang", isTrain, buckets = 128)
-    val sigs = docs.select(col("doc_id"),
-      graft.operators.TextAnalysis.tokenCount(col("text")).as("s"))
-    val rt = graft.functions.RankLookup.train(sigs, "s")
-    val bpe = graft.operators.TextAnalysis
-      .bpeMergesModel(docs, "text", numMerges = 10, maxWords = 256)
-    val gate = docs.select(col("doc_id"),
-      graft.functions.NbPredict.predict(col("text"), nb).as("nb_label"),
-      graft.functions.RankLookup.rank(
-        graft.operators.TextAnalysis.tokenCount(col("text")).cast("long"), rt)
-        .as("len_rank"),
-      graft.functions.BpeEncodeCount.count(col("text"), bpe).as("bpe_tokens"))
-    val plan = planOf(gate)
-    for (fn <- Seq("rm_nb_predict", "rm_rank_lookup", "rm_bpe_encode_count"))
-      assert(plan.contains(fn), s"expected $fn in:\n$plan")
+    val TA = graft.operators.TextAnalysis
+    val bpe = new graft.functions.BpeMerges(TA.bpeLearn(
+      TA.bpeWordCounts(docs, "text", maxWords = 256), numMerges = 10)
+      .map(t => (t._1, t._2)))
+    val plan = planOf(docs.select(col("doc_id"),
+      graft.functions.BpeEncodeCount.count(col("text"), bpe).as("bpe_tokens")))
+    assert(plan.contains("rm_bpe_encode_count"),
+      s"expected rm_bpe_encode_count in:\n$plan")
     assert(!plan.contains("Exchange"),
-      s"the composed model gate must be a narrow projection:\n$plan")
+      s"the BPE count must be a narrow projection:\n$plan")
     assert(plan.linesIterator.exists(l =>
       l.contains("Project") && l.trim.startsWith("*(")),
-      s"model probes fell out of whole-stage codegen:\n$plan")
+      s"the BPE probe fell out of whole-stage codegen:\n$plan")
   }
 
   test("q_bpe_encode: one native codegen scan — only the orderBy exchanges") {

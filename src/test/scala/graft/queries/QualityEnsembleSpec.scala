@@ -51,45 +51,6 @@ class QualityEnsembleSpec extends AnyFunSuite {
     }
   }
 
-  test("RankTable replicates rankBySignal on profile values and interpolates unseen ones") {
-    import spark.implicits._
-    val sigs = Seq(10L, 10L, 20L, 30L, 30L, 30L, 40L).zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }.toDF("doc_id", "s")
-    val table = graft.functions.RankLookup.train(sigs, "s")
-    // on-profile values: exactly the batch histogram rank
-    val expected = QualityQueries.rankBySignal(sigs, "s", "r")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    expected.foreach { case (v, r) =>
-      assert(table.rank(v) == r, s"value $v: table ${table.rank(v)} != batch $r")
-    }
-    // unseen values rank between their neighbors: strictly-below count
-    // over N-1 — 25 is below 3 of 7 docs (two 10s, one 20)
-    assert(table.rank(25L) == 3.0 / 6.0)
-    assert(table.rank(5L) == 0.0) // below the profile floor
-    assert(table.rank(99L) == 1.0) // above the ceiling: all 7 below, 6/6
-  }
-
-  test("property: RankTable matches the naive strictly-below rank on random multisets") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(20260814L)
-    for (_ <- 1 to 30) {
-      val n = 1 + rnd.nextInt(200)
-      val vals = Seq.fill(n)(rnd.nextInt(40).toLong) // dense values force ties
-      val sigs = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-        .toDF("doc_id", "s")
-      val table = graft.functions.RankLookup.train(sigs, "s")
-      // probes: every on-profile value plus off-profile ones (below,
-      // between, above)
-      val probes = (vals ++ Seq(-5L, 17L, 41L, 1000L)).distinct
-      probes.foreach { p =>
-        val below = math.min(vals.count(_ < p).toLong, (n - 1).toLong)
-        val expected = if (n <= 1) 0.0 else below.toDouble / (n - 1).toDouble
-        assert(table.rank(p) == expected,
-          s"n=$n probe=$p: table ${table.rank(p)} != naive $expected")
-      }
-    }
-  }
-
   test("single-row corpus degenerates to rank 0.0, not 0/0") {
     import spark.implicits._
     val one = Seq((7L, "only doc here", 13L)).toDF("doc_id", "text", "n_chars")

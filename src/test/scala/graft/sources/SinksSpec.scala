@@ -65,34 +65,4 @@ class SinksSpec extends AnyFunSuite {
       assert(agg.count() == 500)
     } finally spark.sql("DROP TABLE IF EXISTS sinks_agg")
   }
-
-  test("writeCompacted: file count tracks targetRows; files cover disjoint sorted ranges") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // a "small files" mess: 64 partitions of 2000 rows, unsorted keys
-    val rows = (0L until 2000L).map(i => ((i * 48271L) % 2000L, i)).toDF("k", "v")
-      .repartition(64)
-    val out = java.nio.file.Files.createTempDirectory("compacted").toString
-    Sinks.writeCompacted(rows, out, Seq("k"), totalRows = 2000L, targetRows = 500L)
-    val files = new java.io.File(out).listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).sortBy(_.getName)
-    assert(files.length == 4, s"2000/500 rows => 4 files, got ${files.length}")
-    // nothing lost, and each file's key range is disjoint from the next:
-    // range partitioning + in-file sort give footer min/max stats that
-    // prune range predicates file-by-file
-    val back = spark.read.parquet(out)
-    assert(back.count() == 2000)
-    val ranges = files.map { f =>
-      val d = spark.read.parquet(f.getAbsolutePath).agg(min("k"), max("k")).head
-      (d.getLong(0), d.getLong(1))
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo, _)) =>
-        assert(hi <= lo, s"file ranges overlap: ${ranges.toSeq}")
-      case _ =>
-    }
-    // 48271 is coprime to 2000, so k is a permutation of 0..1999: a
-    // k<100 range predicate matches exactly 100 rows, all in one file
-    assert(back.filter(col("k") < 100).count() == 100)
-  }
 }
