@@ -538,36 +538,20 @@ object Mcp {
       result
     }
 
+  /** The op table's groups ([[ExprCompiler.listed]]). `expr_ops` lists
+    * the string ops, the ops listed there alone, then those of the other
+    * four categories, each name once. */
   private lazy val listOpsTool: JsonNode = {
-    val stringOps = Seq("concat", "to_string", "trim", "lowercase", "uppercase",
-      "replace", "split", "pad_start", "pad_end")
-    val jsonOps = Seq("merge", "deep_merge", "get", "pick", "omit", "keys", "values",
-      "entries", "len", "from_entries", "object_flatten", "object_unflatten")
-    val arrayOps = Seq("map", "filter", "flat_map", "flatten", "take", "drop", "slice",
-      "chunk", "zip", "zip_with", "unzip", "group_by", "key_by", "partition", "unique",
-      "distinct_by", "sort_by", "find", "find_index", "index_of", "contains", "sum",
-      "avg", "min", "max", "reduce", "fold")
-    val numericOps = Seq("+", "-", "*", "/", "round", "to_base", "sum", "avg", "min", "max")
-    val dateOps = Seq("date_format", "to_unixtime")
+    import ExprCompiler.Op._
+    def names(groups: String*): ArrayNode =
+      arr(groups.flatMap(ExprCompiler.listed).distinct.map(text): _*)
+    val grouped = Seq(Strings, Json, Arrays, Numeric, Dates)
     val ops = obj()
-    val exprOps = mapper.createArrayNode()
-    (stringOps ++ Seq("coalesce", "lookup", "lookup_first") ++ jsonOps ++ arrayOps ++
-      Seq("+", "-", "*", "/", "round", "to_base") ++ dateOps)
-      .distinct.foreach(exprOps.add)
-    ops.set[JsonNode]("expr_ops", exprOps)
+    ops.set[JsonNode](Other, names(Strings +: Other +: grouped.tail: _*))
     val categories = obj()
-    def strArr(items: Seq[String]): ArrayNode = {
-      val a = mapper.createArrayNode(); items.foreach(a.add); a
-    }
-    categories.set[JsonNode]("string_ops", strArr(stringOps))
-    categories.set[JsonNode]("json_ops", strArr(jsonOps))
-    categories.set[JsonNode]("array_ops", strArr(arrayOps))
-    categories.set[JsonNode]("numeric_ops", strArr(numericOps))
-    categories.set[JsonNode]("date_ops", strArr(dateOps))
+    grouped.foreach(g => categories.set[JsonNode](g, names(g)))
     ops.set[JsonNode]("categories", categories)
-    ops.set[JsonNode]("logical_ops", strArr(Seq("and", "or", "not")))
-    ops.set[JsonNode]("comparison_ops", strArr(Seq("==", "!=", "<", "<=", ">", ">=", "~=")))
-    ops.set[JsonNode]("type_casts", strArr(Seq("string", "int", "float", "bool")))
+    Seq(Logical, Comparison, Casts).foreach(g => ops.set[JsonNode](g, names(g)))
     val result = contentResult(
       mapper.writerWithDefaultPrettyPrinter().writeValueAsString(ops))
     val meta = obj(); meta.set[JsonNode]("ops", ops)

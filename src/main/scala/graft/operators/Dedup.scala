@@ -78,12 +78,8 @@ object Dedup {
     * prunes inside the join, and the exact intersection is ONE native
     * `array_intersect` per surviving candidate pair. Still exact, still
     * worst-case quadratic on adversarial data — at extreme scale run it
-    * behind LSH candidates ([[minhashDupPairsFrom]]). */
-  def jaccardPairs(docs: DataFrame, textCol: String, idCol: String,
-      n: Int, threshold: Double): DataFrame =
-    jaccardPairsFrom(shingleTable(docs, textCol, idCol, n), threshold)
-
-  /** [[jaccardPairs]] over a precomputed (and persistable) [[shingleTable]]. */
+    * behind LSH candidates ([[minhashDupPairsFrom]]). Takes a precomputed
+    * (and persistable) [[shingleTable]]. */
   def jaccardPairsFrom(sh: DataFrame, threshold: Double): DataFrame = {
     val sorted = sh.select(col("doc"), array_sort(col("shh")).as("shh"),
       size(col("shh")).as("n_sh"))

@@ -363,14 +363,8 @@ object Ivf {
 
   /** SemDeDup: cosine-similar pairs scored only within a cluster — the
     * self-join is n²/nlist instead of n², and at scale each cluster's
-    * members co-locate under one shuffle key. */
-  def semDedupPairs(emb: DataFrame, idCol: String, vecCol: String, nlist: Int,
-      iters: Int, threshold: Double): DataFrame = {
-    val b = base(emb, idCol, vecCol)
-    semDedupPairsWith(b, centroids(b, nlist, iters), threshold)
-  }
-
-  /** [[semDedupPairs]] with pre-trained centroids (see [[topKWith]]). */
+    * members co-locate under one shuffle key. Takes [[base]] rows and
+    * pre-trained [[centroids]] (see [[topKWith]]). */
   def semDedupPairsWith(b: DataFrame, cents: Seq[Seq[Double]],
       threshold: Double): DataFrame = {
     val withCl = b.withColumn("cl", nearestCluster(col("e"), cents))

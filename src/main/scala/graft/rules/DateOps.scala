@@ -1,8 +1,13 @@
 package graft.rules
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.ParseCascade
+
+import ExprCompiler._
+import ExprCompiler.Op._
 
 /** Date parsing/formatting with the reference's chrono conventions
   * (transform.rs:5522-5660): rule files carry chrono `%`-patterns; Spark
@@ -126,4 +131,54 @@ object DateOps {
       f"$sign$h%02d:$m%02d"
     }
   }
+
+  /** `date_format` and `to_unixtime`: chrono patterns translated at plan
+    * time. */
+  val ops: Seq[Op] = Seq(
+    Op(Seq("date_format"), Seq(Dates)) { c => import c._
+      // [value, out_fmt, in_fmt|tz?, tz?] — arg 2 is a timezone when it
+      // "looks like" one (transform.rs:5674-5679), else input format(s);
+      // the tz is a fixed offset the result is converted into
+      val outFmtRaw = litString(1)
+        .getOrElse(throw CompileError("date_format needs literal format"))
+      val (inFmts, tz2) = litString(2) match {
+        case Some(s) if looksLikeTimezone(s) => (Nil, Some(s))
+        case Some(s) => (Seq(s), None)
+        case None => (Nil, None)
+      }
+      val offset = litString(3).orElse(tz2).map(normalizeOffset)
+      val ts0 = parseCascade(rmToString(a0).value, inFmts)
+      val ts = offset.map(o => from_utc_timestamp(ts0, o)).getOrElse(ts0)
+      // with a fixed offset the zone tokens are compile-time constants:
+      // substitute them as literals (the shifted timestamp would
+      // otherwise print the session offset)
+      val outFmt = chronoToJava(offset match {
+        case Some(o) => outFmtRaw.replace("%:z", o).replace("%z", o.replace(":", ""))
+        case None => outFmtRaw
+      })
+      CE(date_format(ts, outFmt), a0.missing, StringType)
+    },
+    Op(Seq("to_unixtime"), Seq(Dates)) { c => import c._
+      // [value, unit|tz?, tz?] — with three args the middle one MUST be a
+      // unit; with two it may be a unit or a timezone offset the naive
+      // input is interpreted in (eval_to_unixtime, transform.rs:2653-2734)
+      val nArgs = allArgs.size
+      val (unit, tz1) = litString(1) match {
+        case Some(u @ ("s" | "ms")) => (u, None)
+        case Some(s) if nArgs == 2 && looksLikeTimezone(s) => ("s", Some(s))
+        case Some(_) => throw RmError("ExprError", argPathStr(1), "unit must be s or ms")
+        case None => ("s", None)
+      }
+      val offset = litString(2).orElse(tz1).map(normalizeOffset)
+      val ts0 = parseCascade(rmToString(a0).value, Nil)
+      // naive wall-clock read in the offset zone → UTC instant; the
+      // reference leaves tz-carrying inputs on their own offset, which
+      // rules express by omitting the tz arg
+      val ts = offset.map(o => to_utc_timestamp(ts0, o)).getOrElse(ts0)
+      val v = unit match {
+        case "ms" => unix_millis(ts)
+        case _ => unix_timestamp(ts)
+      }
+      CE(v, a0.missing, LongType)
+    })
 }

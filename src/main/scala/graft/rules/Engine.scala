@@ -353,8 +353,8 @@ object Engine {
           // user.name next to the existing user.id); rows where the branch
           // produced nothing keep the old object in the merged shape: its
           // merge with a missing one
-          val m = ExprCompiler.mergeStructs(old, b, deep = true)
-          val kept = ExprCompiler.mergeStructs(old,
+          val m = ObjectOps.mergeStructs(old, b, deep = true)
+          val kept = ObjectOps.mergeStructs(old,
             CE(lit(null).cast(b.tpe), lit(true), b.tpe), deep = true)
           CE(when(!b.missing, m.value).otherwise(kept.value),
             b.missing && old.missing, m.tpe)
@@ -678,7 +678,7 @@ object Engine {
     // type cast: string|int|float|bool, strict (cast_value
     // transform.rs:5925-6002): TypeCastFailed at "<mapping>.type"
     val casted = m.castTo match {
-      case Some(t) => ExprCompiler.strictCast(withDefault, t, s"$pathBase.type")
+      case Some(t) => ScalarOps.strictCast(withDefault, t, s"$pathBase.type")
       case None => withDefault
     }
     // the value the mapping writes when its gate is open

@@ -18,28 +18,15 @@ object Validator {
     def text: String = if (message.nonEmpty) message else code
   }
 
-  /** Ops the engine compiles (ExprCompiler) — the unknown-op check. */
-  val knownOps: Set[String] = Set(
-    "concat", "to_string", "trim", "lowercase", "uppercase", "replace",
-    "split", "pad_start", "pad_end",
-    "add", "+", "subtract", "-", "multiply", "*", "divide", "/", "round", "to_base",
-    "and", "or", "not", "==", "!=", "<", "<=", ">", ">=", "~=",
-    "string", "int", "float", "bool", "coalesce", "get", "len",
-    "map", "filter", "flat_map", "flatten", "take", "drop", "slice", "chunk",
-    "first", "last", "find", "find_index", "contains", "index_of", "unique",
-    "partition", "unzip", "zip", "zip_with",
-    "sum", "avg", "min", "max", "reduce", "fold", "sort_by",
-    "lookup", "lookup_all", "lookup_first",
-    "merge", "deep_merge", "pick", "omit", "keys", "values", "entries",
-    "from_entries", "object_flatten", "object_unflatten",
-    "group_by", "key_by", "distinct_by",
-    "date_format", "to_unixtime")
+  /** Every op name the engine compiles (the op table, [[ExprCompiler.ops]],
+    * aliases too) — the unknown-op check. */
+  val knownOps: Set[String] = ExprCompiler.opNames(_ => true)
 
   private val refNamespaces = Set("input", "context", "out", "item", "acc")
   /** ops that bind @item / @acc scopes for their lambda argument */
-  private val scopeOps = Set("map", "filter", "flat_map", "find", "find_index",
-    "sort_by", "zip_with", "reduce", "fold", "group_by", "key_by", "distinct_by",
-    "partition")
+  private val scopeOps = ExprCompiler.opNames(_.binds)
+  /** ops that yield a boolean: a branch `when` may be one */
+  private val boolOps = ExprCompiler.opNames(_.bool)
 
   def validate(yamlText: String): Seq[ValidationError] = {
     val root = new Yaml().load[Any](yamlText) match {
@@ -134,8 +121,6 @@ object Validator {
                   val wm = mapOf(w)
                   val condKeys = Set("all", "any", "not", "eq", "ne", "gt", "gte",
                     "lt", "lte", "match")
-                  val boolOps = Set("and", "or", "not", "==", "!=", "<", "<=", ">",
-                    ">=", "~=", "contains", "bool")
                   val isCond = wm.size == 1 && condKeys.contains(wm.keys.head)
                   val isBoolOp = wm.get("op").exists(o => boolOps.contains(o.toString))
                   if (!isCond && !isBoolOp)
@@ -206,8 +191,7 @@ object Validator {
                   checkExpr(v, s"$p.map", inItemScope = true, definedOut, errors, asPipe = true)
                 case ("lit", _) => ()
                 case (op, v) =>
-                  val opName = if (op == "lookup") "lookup_all" else op
-                  if (!knownOps.contains(opName))
+                  if (!knownOps.contains(op))
                     errors += ValidationError("UnknownOp", p, "expr.op is not supported")
                   val scoped = inItemScope || scopeOps.contains(op)
                   v match {

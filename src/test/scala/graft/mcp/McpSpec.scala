@@ -114,14 +114,27 @@ class McpSpec extends AnyFunSuite {
   }
 
   test("list_ops reports ops, comparisons, and casts") {
+    // the whole result, pinned: `meta.ops` and the content text that
+    // pretty-prints it. `first`, `last`, `lookup_all` and the spelled-out
+    // arithmetic names (`add`, `subtract`, `multiply`, `divide`) compile
+    // but are not listed.
+    val want =
+      """{
+         |  "expr_ops" : [ "concat", "to_string", "trim", "lowercase", "uppercase", "replace", "split", "pad_start", "pad_end", "coalesce", "lookup", "lookup_first", "merge", "deep_merge", "get", "pick", "omit", "keys", "values", "entries", "len", "from_entries", "object_flatten", "object_unflatten", "map", "filter", "flat_map", "flatten", "take", "drop", "slice", "chunk", "zip", "zip_with", "unzip", "group_by", "key_by", "partition", "unique", "distinct_by", "sort_by", "find", "find_index", "index_of", "contains", "sum", "avg", "min", "max", "reduce", "fold", "+", "-", "*", "/", "round", "to_base", "date_format", "to_unixtime" ],
+         |  "categories" : {
+         |    "string_ops" : [ "concat", "to_string", "trim", "lowercase", "uppercase", "replace", "split", "pad_start", "pad_end" ],
+         |    "json_ops" : [ "merge", "deep_merge", "get", "pick", "omit", "keys", "values", "entries", "len", "from_entries", "object_flatten", "object_unflatten" ],
+         |    "array_ops" : [ "map", "filter", "flat_map", "flatten", "take", "drop", "slice", "chunk", "zip", "zip_with", "unzip", "group_by", "key_by", "partition", "unique", "distinct_by", "sort_by", "find", "find_index", "index_of", "contains", "sum", "avg", "min", "max", "reduce", "fold" ],
+         |    "numeric_ops" : [ "+", "-", "*", "/", "round", "to_base", "sum", "avg", "min", "max" ],
+         |    "date_ops" : [ "date_format", "to_unixtime" ]
+         |  },
+         |  "logical_ops" : [ "and", "or", "not" ],
+         |  "comparison_ops" : [ "==", "!=", "<", "<=", ">", ">=", "~=" ],
+         |  "type_casts" : [ "string", "int", "float", "bool" ]
+         |}""".stripMargin
     val result = toolCall("list_ops", "{}")
-    val meta = result.path("meta").path("ops")
-    val exprOps = meta.path("expr_ops").elements.asScala.map(_.asText).toSet
-    assert(exprOps.contains("object_flatten") && exprOps.contains("date_format"))
-    assert(meta.path("comparison_ops").elements.asScala.map(_.asText).toSeq ==
-      Seq("==", "!=", "<", "<=", ">", ">=", "~="))
-    assert(meta.path("type_casts").elements.asScala.map(_.asText).toSeq ==
-      Seq("string", "int", "float", "bool"))
+    assert(result.path("content").get(0).path("text").asText == want)
+    assert(result.path("meta").path("ops") == mapper.readTree(want))
   }
 
   test("analyze_input: path stats with types, counts, and examples") {

@@ -180,13 +180,13 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("SemDeDup pairs are within-cluster, above threshold, and deduplicated") {
-    val pairs = Ivf.semDedupPairs(emb, "vec_id", "embedding",
-      nlist = 10, iters = 2, threshold = 0.35).collect()
+    val b = Ivf.base(emb, "vec_id", "embedding")
+    val pairs = Ivf.semDedupPairsWith(b, Ivf.centroids(b, nlist = 10, iters = 2),
+      threshold = 0.35).collect()
     assert(pairs.nonEmpty)
     assert(pairs.forall(r => r.getLong(0) < r.getLong(1)))
     assert(pairs.forall(_.getDouble(2) >= 0.35))
     // every reported pair really shares a cluster
-    val b = Ivf.base(emb, "vec_id", "embedding")
     val cl = Ivf.assign(b, Ivf.centroids(b, nlist = 10, iters = 2))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(pairs.forall(r => cl(r.getLong(0)) == cl(r.getLong(1))))

@@ -136,8 +136,9 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("SemDeDup pairs join only on the cluster id — never all-pairs") {
     val emb = graft.Tables.embeddings(spark, dir)
-    val plan = planOf(graft.operators.Ivf.semDedupPairs(
-      emb, "vec_id", "embedding", nlist = 10, iters = 1, threshold = 0.35))
+    val b = graft.operators.Ivf.base(emb, "vec_id", "embedding")
+    val plan = planOf(graft.operators.Ivf.semDedupPairsWith(
+      b, graft.operators.Ivf.centroids(b, nlist = 10, iters = 1), threshold = 0.35))
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"SemDeDup must not build an all-pairs join:\n$plan")
