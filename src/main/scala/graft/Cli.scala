@@ -9,6 +9,7 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.ScalarJson.quote
 import graft.rules._
 import graft.rules.Model._
 
@@ -378,23 +379,12 @@ object Cli {
 
   // -- error emitters (main.rs:572-701) -----------------------------------
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   private def emitValidationErrors(errors: Seq[Validator.ValidationError],
       format: String, err: PrintStream): Unit = format match {
     case "json" =>
       val items = errors.map { e =>
-        val path = if (e.path.nonEmpty) s""","path":${jsonStr(e.path)}""" else ""
-        s"""{"type":"validation","code":${jsonStr(e.code)},"message":${jsonStr(e.text)}$path}"""
+        val path = if (e.path.nonEmpty) s""","path":${quote(e.path)}""" else ""
+        s"""{"type":"validation","code":${quote(e.code)},"message":${quote(e.text)}$path}"""
       }
       err.println(items.mkString("[", ",", "]"))
     case _ =>
@@ -412,8 +402,8 @@ object Cli {
       err: PrintStream): Unit = if (ws.nonEmpty) format match {
     case "json" =>
       val items = ws.map { w =>
-        val path = if (w.path.nonEmpty) s""","path":${jsonStr(w.path)}""" else ""
-        s"""{"type":"warning","kind":${jsonStr(w.kind)},"message":${jsonStr(w.message)}$path}"""
+        val path = if (w.path.nonEmpty) s""","path":${quote(w.path)}""" else ""
+        s"""{"type":"warning","kind":${quote(w.kind)},"message":${quote(w.message)}$path}"""
       }
       err.println(items.mkString("[", ",", "]"))
     case _ =>
@@ -426,8 +416,8 @@ object Cli {
   private def emitTransformError(e: ExprCompiler.RmError, format: String,
       err: PrintStream): Unit = format match {
     case "json" =>
-      val path = if (e.path.nonEmpty) s""","path":${jsonStr(e.path)}""" else ""
-      err.println(s"""[{"type":"transform","kind":${jsonStr(e.kind)},"message":${jsonStr(e.message)}$path}]""")
+      val path = if (e.path.nonEmpty) s""","path":${quote(e.path)}""" else ""
+      err.println(s"""[{"type":"transform","kind":${quote(e.kind)},"message":${quote(e.message)}$path}]""")
     case _ =>
       val path = if (e.path.nonEmpty) s" path=${e.path}" else ""
       err.println(s"E ${e.kind}$path msg=\"${e.message}\"")

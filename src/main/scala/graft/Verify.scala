@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.functions.ScalarJson
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -47,24 +49,13 @@ object Verify {
         Files.writeString(Paths.get(s"$outDir/$name.error"), msg.take(4000))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // a focused run (3rd arg) dumps only the matching oracles so the
     // checker's denominator equals the dumped set — the full driver run
     // (two args) still writes every oracle
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => names(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${ScalarJson.quote(k)}: ${ScalarJson.quote(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // artifact ledger (stderr, print-only — Bench prints the same)
     PruneArtifacts.ledger(spark, "[verify] ")

@@ -12,6 +12,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.ScalarJson
 import graft.rules._
 import graft.rules.Model._
 import EndpointModel._
@@ -238,7 +239,7 @@ class EndpointEngine(
       case Some(err) =>
         trace.error(err.toJson)
         HttpResult(500, Seq("content-type" -> "application/json"),
-          s"""{"error":${quote(err.message)}}""")
+          s"""{"error":${ScalarJson.quote(err.message)}}""")
       case None =>
         try buildReply(endpoint, current)
         catch {
@@ -251,12 +252,12 @@ class EndpointEngine(
                   case NonFatal(e2) =>
                     trace.error(err.toJson)
                     HttpResult(500, Seq("content-type" -> "application/json"),
-                      s"""{"error":${quote(rootMessage(e2))}}""")
+                      s"""{"error":${ScalarJson.quote(rootMessage(e2))}}""")
                 }
               case None =>
                 trace.error(err.toJson)
                 HttpResult(500, Seq("content-type" -> "application/json"),
-                  s"""{"error":${quote(err.message)}}""")
+                  s"""{"error":${ScalarJson.quote(err.message)}}""")
             }
         }
     }
@@ -550,15 +551,6 @@ class EndpointEngine(
     while (cur.getCause != null && cur.getCause != cur) cur = cur.getCause
     Option(cur.getMessage).getOrElse(cur.getClass.getSimpleName)
   }
-
-  private def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }
 
 object EndpointEngine {

@@ -11,6 +11,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.ScalarJson
+
 /** The reference's `ui` server (rulemorph_server/src/server.rs): the
   * /api rules surface plus the UI's internal API —
   *
@@ -79,7 +81,7 @@ object UiServer {
       override def handle(x: HttpExchange): Unit =
         try route(x)
         catch { case NonFatal(e) =>
-          try sendJson(x, 500, s"""{"error":${quote(e.getMessage)}}""")
+          try sendJson(x, 500, s"""{"error":${ScalarJson.quote(Option(e.getMessage).getOrElse(""))}}""")
           catch { case NonFatal(_) => () }
         } finally {
           if (!isSse(x)) x.close()
@@ -282,12 +284,4 @@ object UiServer {
     x.sendResponseHeaders(status, if (bytes.isEmpty) -1 else bytes.length)
     if (bytes.nonEmpty) x.getResponseBody.write(bytes)
   }
-
-  private def quote(s: String): String =
-    "\"" + Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.ScalarJson
+
 import Model._
 import ExprCompiler._
 
@@ -62,7 +64,7 @@ object Engine {
     def json(key: String, c: => Column): Unit =
       if (on) columns += (prefix + key) -> CaughtCond.value(c)
     def apply(key: String, ce: CE): Unit =
-      json(key, when(!ce.missing, jsonEncode(ce.valueOrNull, ce.tpe)))
+      json(key, when(!ce.missing, jsonFragment(ce.valueOrNull, ce.tpe)))
     def flag(key: String, c: Column): Unit = apply(key, CE.present(c, BooleanType))
     /** A [[CaughtCond]] outcome: absent when the condition raised. */
     def caught(key: String, cc: Column): Unit =
@@ -525,9 +527,9 @@ object Engine {
       c.out.map { case (name, ce) => ce.missing.as(s"__miss_$name") }.toSeq
     val projected = applyFinalize(rule, c.df.select(cols :+ col("__order"): _*), c.out, context)
     val frags = c.out.toSeq.map { case (name, ce) =>
-      val enc = jsonEncode(column(name), ce.tpe)
+      val enc = jsonFragment(column(name), ce.tpe)
       when(column(s"__miss_$name"), lit(null).cast(StringType))
-        .otherwise(concat(lit("\"" + name + "\":"), enc))
+        .otherwise(concat(lit(ScalarJson.quote(name) + ":"), enc))
     }
     val recordJson = concat(lit("{"), concat_ws(",", frags: _*), lit("}"))
     rule.finalizeSpec.filter(_.wrap.nonEmpty) match {
@@ -546,14 +548,14 @@ object Engine {
             concat(lit("["), array_join(col("__alljson"), ","), lit("]"))
           case WExpr(e) =>
             val ce = ExprCompiler.compile(e, wenv)
-            jsonEncode(ce.valueOrNull, ce.tpe)
+            jsonFragment(ce.valueOrNull, ce.tpe)
           case WObject(fields) =>
             concat(lit("{"), concat_ws(",", fields.map { case (n, v) =>
-              concat(lit("\"" + n + "\":"), wrapJson(v))
+              concat(lit(ScalarJson.quote(n) + ":"), wrapJson(v))
             }: _*), lit("}"))
         }
         val objFrags = fin.wrap.map { case (n, wv) =>
-          concat(lit("\"" + n + "\":"), wrapJson(wv))
+          concat(lit(ScalarJson.quote(n) + ":"), wrapJson(wv))
         }
         single.select(
           concat(lit("{"), concat_ws(",", objFrags: _*), lit("}")).as("json"))
@@ -565,16 +567,12 @@ object Engine {
     * reads a dotted name (t08 escaped keys) as a nested field path. */
   private def column(name: String): Column = col(s"`${name.replace("`", "``")}`")
 
-  /** JSON-encode one value column (variant-aware; ExprCompiler owns the
-    * encoding so op-level fragments and the sink agree byte-for-byte). */
-  private def jsonEncode(c: Column, t: DataType): Column =
-    ExprCompiler.jsonFragment(c, t)
-
   /** One JSON object from (field, value) pairs: missing fields are absent. */
   private def objectJson(out: scala.collection.immutable.ListMap[String, CE]): Column =
     concat(lit("{"), concat_ws(",", out.toSeq.map { case (name, ce) =>
       when(ce.missing, lit(null).cast(StringType))
-        .otherwise(concat(lit("\"" + name + "\":"), jsonEncode(ce.valueOrNull, ce.tpe)))
+        .otherwise(concat(lit(ScalarJson.quote(name) + ":"),
+          jsonFragment(ce.valueOrNull, ce.tpe)))
     }: _*), lit("}"))
 
   /** The (kind, path, message) warning of a [[CaughtCond]] outcome. */

@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.rmbridge.Bridge
 import org.apache.spark.sql.types._
 
+import graft.functions.ScalarJson
+
 import Model._
 
 /** Compiles the unified rule-expression IR to Catalyst `Column` trees.
@@ -237,20 +239,23 @@ object ExprCompiler {
 
   // ---- JSON fragments and variants ----
 
-  /** JSON-encode one typed value column to a fragment string. Non-variant
-    * types ride the to_json(struct) wrapper with a fixed 1-char key so the
-    * envelope offsets are constant (`{"v":X}` ⇒ X = substr(6, len-6));
-    * variants serialize natively. ignoreNullFields=false keeps explicit
-    * nulls inside structs. Objects that hold [[Absentable]] fields are
-    * assembled field by field, leaving the absent ones out. */
+  /** JSON-encode one typed value column to a fragment string. Strings,
+    * longs, ints, doubles, booleans and arrays of one of these go through
+    * the [[ScalarJson]] kernel, which writes what the wrapper below writes
+    * for them; other non-variant types ride the to_json(struct) wrapper with
+    * a fixed 1-char key so the envelope offsets are constant (`{"v":X}` ⇒
+    * X = substr(6, len-6)); variants serialize natively.
+    * ignoreNullFields=false keeps explicit nulls inside structs. Objects
+    * that hold [[Absentable]] fields are assembled field by field, leaving
+    * the absent ones out. */
   def jsonFragment(c: Column, t: DataType): Column = t match {
     case VariantType => when(c.isNull, lit("null")).otherwise(to_json(c))
     case NullType => lit("null")
+    case _ if ScalarJson.supports(t) => ScalarJson.encode(c)
     case st: StructType if Absentable.within(st) =>
       val members = st.fields.toSeq.map { f =>
         val v = c.getField(f.name)
-        val member = concat(lit(jsonMapper.writeValueAsString(f.name) + ":"),
-          jsonFragment(v, f.dataType))
+        val member = concat(lit(ScalarJson.quote(f.name) + ":"), jsonFragment(v, f.dataType))
         if (Absentable.valueType(f).isDefined) when(v.isNotNull, member) else member
       }
       when(c.isNull, lit("null"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.ScalarJson
+
 import ExprCompiler._
 import ExprCompiler.Op._
 import Model._
@@ -425,7 +427,6 @@ object ObjectOps {
   private def dynPickOmit(base: CE, pathsCol: Column, isPick: Boolean): CE = {
     val st = base.tpe.asInstanceOf[StructType]
     def render(prefix: Seq[String]): String = PathParser.formatTokens(prefix.map(PKey(_)))
-    def escKey(k: String): String = k.replace("\\", "\\\\").replace("\"", "\\\"")
     def objFrag(cur: Column, t: StructType, prefix: Seq[String]): Column = {
       val parts = t.fields.toSeq.map { f =>
         val p = prefix :+ f.name
@@ -441,7 +442,7 @@ object ObjectOps {
             if (isPick) when(exact, whole).otherwise(lit(null).cast(StringType))
             else when(exact, lit(null).cast(StringType)).otherwise(whole)
         }
-        when(content.isNotNull, concat(lit("\"" + escKey(f.name) + "\":"), content))
+        when(content.isNotNull, concat(lit(ScalarJson.quote(f.name) + ":"), content))
           .otherwise(lit(null).cast(StringType))
       }
       val joined = array_join(filter(array(parts: _*), c => c.isNotNull), ",")

@@ -34,17 +34,21 @@ object Sources {
     * thread, so the local side's lead shrinks as records grow. Measured by
     * `graft.sources.LocalCutover` (test sources) at `local[4]` with the
     * client compiler, per transform from document to collected output, for
-    * a plain and a string/date-heavy rule: 256 is the largest measured size
-    * at which the local side took at least a third less wall time and CPU
-    * than the scan for both rules. Re-measured with the date parse cascade
-    * ([[graft.functions.ParseCascade]]), three runs of 20–40 rounds: at 256
-    * the local side took 33–39% less wall time than the scan for the plain
-    * rule and 32–34% less for the heavier one (about half the CPU for
-    * both); at 512 it led by only 14–23% in wall time; at 1,024 the heavier
-    * rule was slower on the wall clock, and at 2,048 both were. The margin
-    * leaves room for rules costlier per record than the measured ones,
-    * whose interpreted evaluation grows with the record count while a
-    * job's fixed cost does not. */
+    * a plain and a string/date-heavy rule. 256 was chosen as the largest
+    * measured size at which the local side took at least a third less wall
+    * time and CPU than the scan for both rules. Re-measured with the rule
+    * kernels in generated code ([[graft.functions.ParseCascade]],
+    * [[graft.functions.ScalarJson]]), one run of 20 rounds and one of 40:
+    * at 256 the local side took 36–38% less wall time than the scan for the
+    * plain rule and 20–23% less for the heavier one, and 40–50% less CPU
+    * for both; the heavier rule's lead was 11% at 384 and gone at 512, the
+    * plain rule's 21–23% at 512 and gone by 2,048. Generated code made the
+    * scan of the heavier rule cheaper, so its wall-time lead at 256 is now
+    * below a third; 256 is kept because the local side still leads there
+    * for both rules on wall time and CPU. The margin leaves room for rules
+    * costlier per record than the measured ones, whose interpreted
+    * evaluation grows with the record count while a job's fixed cost does
+    * not. */
   val LocalMaxRecords: Int = 256
 
   def csv(spark: SparkSession, path: String, spec: InputSpec): DataFrame = {

@@ -252,6 +252,61 @@ class EngineSpec extends AnyFunSuite {
     assert(lambdas("""["@input.users", lookup_first: ["id", "@input.user_id"]]"""))
   }
 
+  test("the benchmark's extended rule maps in whole-stage codegen, in methods the JIT compiles") {
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    // perfbench's `extended` shape: string, regex, pad, math, base, date
+    // and unixtime ops over one record each
+    val rule = YamlParser.parse(
+      """version: 2
+        |input: { format: json, json: {} }
+        |mappings:
+        |  - target: id
+        |    source: id
+        |  - target: replaced
+        |    expr: ["@input.text", replace: ["-", "_", "all"]]
+        |  - target: masked
+        |    expr: ["@input.regex_text", replace: ["[0-9]", "#", "regex_all"]]
+        |  - target: parts
+        |    expr: ["@input.csv", split: [","]]
+        |  - target: padded
+        |    expr: ["@input.pad", pad_start: [5, "0"]]
+        |  - target: sum
+        |    expr: ["@input.num_a", add: ["@input.num_b"]]
+        |  - target: rounded
+        |    expr: ["@input.num_a", multiply: [3], round: [2]]
+        |  - target: hex
+        |    expr: ["@input.base_value", to_base: [16]]
+        |  - target: day
+        |    expr: ["@input.date_simple", date_format: ["%Y/%m/%d %H:%M"]]
+        |  - target: epoch_s
+        |    expr: ["@input.unix_s", to_unixtime: ["s"]]
+        |  - target: epoch_ms
+        |    expr: ["@input.unix_ms", to_unixtime: ["ms"]]
+        |""".stripMargin)
+    val records = (1 to graft.sources.Sources.LocalMaxRecords + 1).map(i =>
+      s"""{"id":$i,"text":"ab-cd-$i","regex_text":"a1b2c$i","csv":"x,y,$i","pad":"$i",""" +
+        s""""num_a":$i.25,"num_b":"$i.5","base_value":$i,"date_simple":"2024-01-02 03:04:05",""" +
+        """"unix_s":"2024-01-02T03:04:05Z","unix_ms":"2024-01-02T03:04:05.123Z"}""")
+    val input = graft.sources.Sources.jsonNode(spark,
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(records.mkString("[", ",", "]")), Nil)
+    assert(!graft.sources.Sources.isLocal(input))
+    val plan = Engine.toJsonRecords(rule, input, JNull, nullAsMissing = true)
+      .queryExecution.executedPlan
+    // the projects each stage fuses (an InputAdapter's child is outside it)
+    def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case pe: ProjectExec => pe +: pe.children.flatMap(fused)
+      case o => o.children.flatMap(fused)
+    }
+    val inStages = plan.collect { case w: WholeStageCodegenExec => fused(w.child) }.flatten
+    val projects = plan.collect { case p: ProjectExec => p }
+    assert(projects.nonEmpty && projects.forall(p => inStages.exists(_ eq p)), plan.treeString)
+    // HotSpot compiles no method above 8,000 bytes of bytecode (HugeMethodLimit)
+    val stats = codegenStringSeq(plan).map(_._3)
+    assert(stats.nonEmpty && stats.forall(_.maxMethodCodeSize <= 8000), stats)
+  }
+
   test("missing vs null: default applies only to missing; JSON sink drops missing") {
     import spark.implicits._
     val input = Seq(

@@ -166,7 +166,8 @@ class FixtureCompatSpec extends AnyFunSuite {
 
   /** In-repo cases the reference has no fixture of. */
   val inRepoFixtures = Seq("g01_json_object_absent_keys", "g02_json_object_ops_absent_keys",
-    "g03_json_pick_absent_keys", "g04_number_to_string_beyond_long", "g05_context_heterogeneous")
+    "g03_json_pick_absent_keys", "g04_number_to_string_beyond_long", "g05_context_heterogeneous",
+    "g06_json_escaped_keys")
 
   fixtures.foreach { f =>
     test(s"reference golden fixture: $f") { Fixtures.cases(f).foreach(runFixture) }
@@ -176,5 +177,13 @@ class FixtureCompatSpec extends AnyFunSuite {
   }
   inRepoFixtures.foreach { f =>
     test(s"in-repo golden fixture: $f") { runFixture(Fixtures.inRepo(f)) }
+  }
+
+  test("in-repo fixture g06: each record's JSON text is its expected line, byte for byte") {
+    val c = Fixtures.inRepo("g06_json_escaped_keys")
+    val (rule, input, context) = loadFixture(c)
+    val got = Engine.toJsonRecords(rule, input, context, nullAsMissing = true)
+      .collect().map(_.getString(0)).toSeq
+    assert(got == c.read("expected.ndjson").split("\n").toSeq)
   }
 }

@@ -119,25 +119,59 @@ class OpTableSpec extends AnyFunSuite {
     assert(validate("""{ op: "nope", args: [] }""", 1).map(_.code) == Seq("UnknownOp"))
   }
 
+  /** The minimal rule of op `n`: one mapping of it over [[record]]. */
+  private def ruleOf(n: String): RuleFile = YamlParser.parse(
+    s"""version: 1
+       |input:
+       |  format: json
+       |  json: {}
+       |mappings:
+       |  - target: out
+       |    expr: { op: "$n", args: [ ${args(n)} ] }
+       |""".stripMargin)
+
   test("every name compiles and evaluates to a present value over one record") {
     assert(args.keySet == names.toSet)
     val input: DataFrame =
       graft.sources.Sources.jsonNode(spark, mapper.readTree(s"[$record]"), Nil)
     for (n <- names) {
-      val rule = YamlParser.parse(
-        s"""version: 1
-           |input:
-           |  format: json
-           |  json: {}
-           |mappings:
-           |  - target: out
-           |    expr: { op: "$n", args: [ ${args(n)} ] }
-           |""".stripMargin)
-      val out = Engine.toJsonRecords(rule, input, JNull, nullAsMissing = true)
+      val out = Engine.toJsonRecords(ruleOf(n), input, JNull, nullAsMissing = true)
         .collect().map(r => mapper.readTree(r.getString(0)))
       assert(out.length == 1, n)
       assert(out(0).has("out"), s"$n: ${out(0)}")
     }
+  }
+
+  test("census: the ops whose plan still holds an expression without generated code") {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, NamedLambdaVariable}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    // enough records for the distributed scan, whose plan keeps the mapping
+    val many = Seq.fill(graft.sources.Sources.LocalMaxRecords + 1)(record).mkString("[", ",", "]")
+    val input = graft.sources.Sources.jsonNode(spark, mapper.readTree(many), Nil)
+    assert(!graft.sources.Sources.isLocal(input))
+    // a CodegenFallback keeps its whole Project out of whole-stage codegen;
+    // a lambda's parts are left out, since they come only with a
+    // higher-order function. (CaughtCond wraps a `when` that can raise,
+    // which no op's minimal rule has.)
+    val census = names.map { n =>
+      val plan = Engine.toJsonRecords(ruleOf(n), input, JNull, nullAsMissing = true)
+        .queryExecution.executedPlan
+      n -> plan.flatMap(_.expressions.flatMap(_.collect {
+        case _: LambdaFunction | _: NamedLambdaVariable => ""
+        case e: CodegenFallback => e.getClass.getSimpleName
+      })).toSet.filter(_.nonEmpty)
+    }.filter(_._2.nonEmpty).toMap
+    def each(fallbacks: String*)(ops: String*) = ops.map(_ -> fallbacks.toSet)
+    assert(census == (
+      each("ArrayAggregate")("fold", "reduce") ++
+      each("ArrayAggregate", "ArrayTransform")("avg", "sum") ++
+      each("ArrayFilter")("entries", "filter", "find", "partition") ++
+      each("ArrayFilter", "ArrayTransform")("find_index", "flat_map", "from_entries", "group_by",
+        "key_by", "lookup", "lookup_all", "lookup_first", "map") ++
+      each("ArraySort", "ArrayTransform")("sort_by") ++
+      each("ArrayTransform")("chunk", "contains", "index_of", "max", "min", "unzip") ++
+      each("ArrayTransform", "DistinctByKey")("distinct_by") ++
+      each("ZipWith")("zip", "zip_with")).toMap)
   }
 
   test("@item is in scope exactly in the lambda of an op that binds it") {
