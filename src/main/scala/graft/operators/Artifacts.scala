@@ -51,15 +51,6 @@ object Artifacts {
       fsFor(spark, p).exists(p)
     } catch { case scala.util.control.NonFatal(_) => false }
 
-  /** Delete `dir/_SUCCESS` if present — decertify an artifact up front
-    * so a crash mid-overwrite reads as "missing", not as the OLD
-    * marker certifying NEW half-written data. */
-  def deleteMarker(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")
-    val fs = fsFor(spark, p)
-    if (fs.exists(p)) fs.delete(p, false)
-  }
-
   /** Provenance sidecar every [[atomicCommit]] leaves inside the
     * artifact directory: `key=value` lines (sorted). Underscore-prefixed
     * so parquet readers ignore it, exactly like `_SUCCESS`. */

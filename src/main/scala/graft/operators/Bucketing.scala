@@ -50,7 +50,7 @@ object Bucketing {
     * table (the data is re-derivable, so "exists in catalog" is the cache
     * test — a fresh session rewrites rather than trusting files another
     * JVM may have half-written, the same crash-consistency posture as
-    * [[Ivf.writeIndex]]'s marker dance but with zero marker bookkeeping,
+    * [[Ivf.indexExists]]'s marker probe but with zero marker bookkeeping,
     * because unlike a trained index the bucketed copy costs one scan).
     * Idempotent per session; safe to call from every query that wants
     * the bucketed layout.

@@ -14,9 +14,8 @@ import org.apache.spark.sql.types._
   * Scale notes:
   *   - exact/fingerprint dedup is one hash-aggregate shuffle on the digest —
   *     the digest (16 bytes) is the shuffle key, never the document body.
-  *   - exact Jaccard self-joins on shared shingles; fine for verification,
-  *     quadratic in the worst case — at scale it runs ONLY on LSH candidate
-  *     pairs (candidateJaccardPairs), never all-pairs.
+  *   - exact Jaccard runs ONLY on candidate pairs (LSH or shared
+  *     fingerprints, [[jaccardVerifiedPairs]]), never all-pairs.
   *   - MinHash: the whole shingles → signature → band-keys build is one
   *     codegen'd projection of native expressions (graft.functions) —
   *     O(shingles + k·shingles) primitive long ops per doc, no interpreted
@@ -67,45 +66,6 @@ object Dedup {
         (col("inter").cast(DoubleType) /
           (col("n_a") + col("n_b") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-
-  /** Exact pairwise Jaccard over shingle sets with PREFIX filtering (the
-    * all-pairs similarity-join prefix filter, as in PPJoin/SSJoin-family
-    * systems): under any global total order on shingle hashes, two sets
-    * with J ≥ t must share an element among each set's first
-    * `n − ⌈t·n⌉ + 1` smallest hashes — so only the prefix hashes enter
-    * the candidate self-join (≈ (1−t)·n rows/doc instead of n, i.e.
-    * ~25× fewer collision pairs at t = 0.8), the size-ratio filter
-    * prunes inside the join, and the exact intersection is ONE native
-    * `array_intersect` per surviving candidate pair. Still exact, still
-    * worst-case quadratic on adversarial data — at extreme scale run it
-    * behind LSH candidates ([[minhashDupPairsFrom]]). Takes a precomputed
-    * (and persistable) [[shingleTable]]. */
-  def jaccardPairsFrom(sh: DataFrame, threshold: Double): DataFrame = {
-    val sorted = sh.select(col("doc"), array_sort(col("shh")).as("shh"),
-      size(col("shh")).as("n_sh"))
-    val plen = (col("n_sh") - ceil(lit(threshold) * col("n_sh")) + 1)
-      .cast(IntegerType)
-    val pr = sorted.select(col("doc"), col("n_sh"),
-      explode(slice(col("shh"), lit(1), greatest(plen, lit(0)))).as("h"))
-    val sizeOk =
-      col("x.n_sh").cast(DoubleType) >= lit(threshold) * col("y.n_sh") &&
-        col("y.n_sh").cast(DoubleType) >= lit(threshold) * col("x.n_sh")
-    val cand = pr.as("x").join(pr.as("y"),
-        col("x.h") === col("y.h") && col("x.doc") < col("y.doc") && sizeOk)
-      .select(col("x.doc").as("da"), col("y.doc").as("db")).distinct()
-    val full = sorted.select(col("doc"), col("shh"), col("n_sh"))
-    cand
-      .join(full.select(col("doc").as("da"), col("shh").as("sha"),
-        col("n_sh").as("na")), Seq("da"))
-      .join(full.select(col("doc").as("db"), col("shh").as("shb"),
-        col("n_sh").as("nb")), Seq("db"))
-      .withColumn("inter",
-        size(array_intersect(col("sha"), col("shb"))).cast(LongType))
-      .select(col("da"), col("db"), col("inter"),
-        (col("inter").cast(DoubleType) /
-          (col("na") + col("nb") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
 
   /** MinHash signature of length k over the shingle array: each shingle
     * string is hashed ONCE (xxhash64, codegen'd), then the k-permutation
@@ -504,6 +464,10 @@ object Dedup {
     * (doc_id, n_spans, n_dup_spans, dup_ratio); documents shorter than
     * `n` tokens have no spans and are absent.
     *
+    * Takes span-hash instance rows — any frame carrying (doc_id, h) one
+    * row per span OCCURRENCE, typically [[spanPositionRows]] (extra
+    * columns are projected away); the caller owns materialization.
+    *
     * Scale shape — the suffix-array-free formulation that stays linear
     * in corpus tokens: one native pass emits span strings
     * ([[graft.functions.ShingleText]], every occurrence), hashed to
@@ -511,23 +475,6 @@ object Dedup {
     * the hash; the flag join is an equi-join on the same 8-byte key.
     * Nothing is quadratic and no span string survives past the hash
     * projection. */
-  def spanDupStats(docs: DataFrame, textCol: String, idCol: String,
-      n: Int, materialize: Boolean = true): DataFrame = {
-    val gramsRaw = spanHashRows(docs, textCol, idCol, n)
-    // materialize=false returns the raw plan (plan-quality assertions);
-    // the default holds the one tokenization for its two consumers and
-    // pins the (tiny, per-doc) result. Pinning the corpus-sized instance
-    // rows instead was measured slower (r17: span_dedup 0.49 → 0.53 s,
-    // span_scrub 0.55 → 0.56 s).
-    if (!materialize) spanDupStatsFrom(gramsRaw)
-    else Materialize.during(gramsRaw)(g => Materialize.pin(spanDupStatsFrom(g)))
-  }
-
-  /** [[spanDupStats]] over precomputed (and persistable) span-hash
-    * instance rows — any frame carrying (doc_id, h) one row per span
-    * OCCURRENCE works, including the positional [[spanPositionRows]]
-    * (extra columns are projected away). The caller owns
-    * materialization. */
   def spanDupStatsFrom(spanRows: DataFrame): DataFrame = {
     val grams = spanRows.select("doc_id", "h")
     // only the "in ≥ 2 distinct docs" FLAG is consumed, and that is
@@ -544,18 +491,6 @@ object Dedup {
         col("n_dup_spans").cast(DoubleType) / col("n_spans"))
   }
 
-  /** (doc_id, h) span-hash instance rows — ONE native pass emits every
-    * `n`-token span occurrence ([[graft.functions.ShingleText]]), hashed
-    * to 8 bytes before anything shuffles. The projection under
-    * [[spanDupStats]] ([[spanScrub]] runs the same pass positionally via
-    * posexplode), so the tokenization/hashing contract lives in one
-    * place. */
-  private def spanHashRows(docs: DataFrame, textCol: String, idCol: String,
-      n: Int): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        explode(graft.functions.ShingleText.shingleText(col(textCol), n)).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("h"))
-
   /** Span hashes occurring in ≥ 2 distinct documents, from (doc_id, h)
     * instance rows. "≥ 2 distinct docs" is exactly `min(doc_id) ≠
     * max(doc_id)` per hash, so ONE map-side-combined aggregate on the
@@ -566,33 +501,6 @@ object Dedup {
     hashRows.select("doc_id", "h")
       .groupBy("h").agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
       .filter(col("d0") =!= col("d1")).select("h")
-
-  /** Duplicated-span REMOVAL — the transformation [[spanDupStats]] only
-    * diagnoses: every token covered by any `n`-token span instance whose
-    * text occurs in ≥ 2 distinct documents is cut, and the survivors are
-    * re-joined in order. Documents whose every token is covered (pure
-    * duplication) drop entirely; documents shorter than `n` tokens have
-    * no spans and pass through whole. Returns
-    * (doc_id, clean_text, n_kept).
-    *
-    * Scale shape: span starts come positionally from the same native
-    * one-pass emission (array index = start token), so coverage is
-    * `explode(sequence(pos, pos+n-1))` — no re-tokenization; duplicated
-    * spans are found on the 8-byte hash (one map-side-combined shuffle),
-    * coverage joins back per (doc, token-position) as an equi-anti-join,
-    * and the rebuild is one per-doc aggregation (O(T log T) in the doc's
-    * own length). Everything keys on (doc_id, position) or an 8-byte
-    * hash; nothing is quadratic in either the corpus or a document. */
-  def spanScrub(docs: DataFrame, textCol: String, idCol: String,
-      n: Int, materialize: Boolean = true): DataFrame = {
-    val spansRaw = spanPositionRows(docs, textCol, idCol, n)
-    // materialize=false returns the raw plan (plan-quality assertions)
-    if (!materialize) return spanScrubStages(docs, textCol, idCol, n, spansRaw)
-    // pinning the positional instance frame was measured slower here too
-    // (see spanDupStats); the pinned result is per-doc rows
-    Materialize.during(spansRaw)(spans =>
-      Materialize.pin(spanScrubStages(docs, textCol, idCol, n, spans)))
-  }
 
   /** (doc_id, pos, h) POSITIONAL span-hash rows — every `n`-token span
     * occurrence with its start-token index: the one tokenization product
@@ -609,14 +517,26 @@ object Dedup {
       .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
         xxhash64(col("s")).as("h"))
 
-  /** [[spanScrub]] over precomputed (and persistable)
-    * [[spanPositionRows]]. The caller owns persist/checkpoint. */
+  /** Duplicated-span REMOVAL — the transformation [[spanDupStatsFrom]] only
+    * diagnoses: every token covered by any `n`-token span instance whose
+    * text occurs in ≥ 2 distinct documents is cut, and the survivors are
+    * re-joined in order. Documents whose every token is covered (pure
+    * duplication) drop entirely; documents shorter than `n` tokens have
+    * no spans and pass through whole. Returns
+    * (doc_id, clean_text, n_kept). Takes the documents and their
+    * [[spanPositionRows]]; the caller owns materialization.
+    *
+    * Scale shape: span starts come positionally from the same native
+    * one-pass emission (array index = start token), so coverage is
+    * `explode(sequence(pos, pos+n-1))` — no re-tokenization; duplicated
+    * spans are found on the 8-byte hash (one map-side-combined shuffle),
+    * their start positions collapse to one per-doc set that joins the
+    * corpus once by doc_id, and the rebuild is an in-row positional
+    * filter over the doc's own tokens. Everything keys on doc_id or an
+    * 8-byte hash; nothing is quadratic in either the corpus or a
+    * document. */
   def spanScrubFrom(docs: DataFrame, textCol: String, idCol: String,
-      n: Int, spans: DataFrame): DataFrame =
-    spanScrubStages(docs, textCol, idCol, n, spans)
-
-  private def spanScrubStages(docs: DataFrame, textCol: String,
-      idCol: String, n: Int, spans: DataFrame): DataFrame = {
+      n: Int, spans: DataFrame): DataFrame = {
     val dup = dupHashesFrom(spans)
     // flag join on the 8-byte hash: dup is the (usually small) df ≥ 2
     // fraction, so AQE converts this to a broadcast at runtime when it
@@ -828,7 +748,7 @@ object Dedup {
 
   /** Band keys for a simhash signature: `bands` rows of
     * (band index, band-sized bit slice). The candidate-generation key for
-    * [[simhashPairs]] — two signatures within Hamming radius < `bands`
+    * [[simhashPairsFrom]] — two signatures within Hamming radius < `bands`
     * MUST agree on at least one slice (pigeonhole: r differing bits can
     * touch at most r < bands of the slices), so an equi-join on
     * (band, key) is EXACT candidate generation for that radius, not a
@@ -862,14 +782,8 @@ object Dedup {
     * — the Google web-crawl dedup design) key on exactly this slice
     * scheme. At 100 TB the shuffle moves bands × 16 bytes per document,
     * and a hot slice value (all-zero slices from short docs) salts like
-    * any skewed equi-key. */
-  def simhashPairs(docs: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, bits: Int = 60, bands: Int = 4): DataFrame =
-    simhashPairsFrom(simhashAgg(docs, textCol, idCol, bits),
-      maxHamming, bits, bands)
-
-  /** [[simhashPairs]] over a precomputed (doc, simhash) signature table
-    * — the persisted-index form. */
+    * any skewed equi-key. Takes a (doc, simhash) signature table
+    * ([[simhashAgg]]), typically the persisted one. */
   def simhashPairsFrom(sig: DataFrame, maxHamming: Int, bits: Int,
       bands: Int): DataFrame = {
     require(maxHamming < bands,

@@ -164,32 +164,14 @@ object Ivf {
   def assign(b: DataFrame, cents: Seq[Seq[Double]]): DataFrame =
     b.select(col("id"), nearestCluster(col("e"), cents).as("cl"))
 
-  /** Persist a trained index as parquet — the [[Dedup.signatureIndex]]
-    * treatment applied to ANN: `path/centroids` holds (cl, centroid
-    * array<double>) and `path/assignments` the full-corpus (id, cl) map.
-    * Doubles round-trip parquet bit-exactly, so a search served from a
-    * re-read index is bit-identical to one served from the freshly
-    * trained centroids — "train once, reuse" survives JVM restarts, not
-    * just JVM lifetime. The centroid table is nlist rows (coalesced to
-    * one file); assignments are one narrow scan of the corpus. */
-  def writeIndex(b: DataFrame, cents: Seq[Seq[Double]], path: String): Unit = {
-    // assignments FIRST: [[indexExists]] probes the centroid marker, so
-    // writing centroids last makes that marker certify the WHOLE index —
-    // a crash between the two phases reads as "missing", not as a
-    // complete index with a husk assignments table. On an OVERWRITE the
-    // ordering alone is not enough: the OLD index's marker would certify
-    // the NEW assignments if the crash lands between the phases — so the
-    // stale marker is deleted up front, making a mid-overwrite crash read
-    // as "missing" too (fresh write and overwrite share one crash story).
-    Artifacts.deleteMarker(b.sparkSession, s"$path/centroids")
-    writeAssignments(b, cents, path)
-    writeCentroids(b.sparkSession, cents, path)
-  }
-
-  /** Centroids only — nlist tiny rows, no corpus scan. The right call for
-    * a cache that only ever reads centroids back ([[readCentroids]]):
-    * persisting the assignment map too would cost a full corpus scan and
-    * a corpus-sized parquet write for nothing. */
+  /** Persist trained centroids as parquet: `path/centroids` holds (cl,
+    * centroid array<double>), nlist tiny rows coalesced to one file, no
+    * corpus scan. Doubles round-trip parquet bit-exactly, so a search
+    * served from re-read centroids ([[readCentroids]]) is bit-identical
+    * to one served from the freshly trained ones — "train once, reuse"
+    * survives JVM restarts, not just JVM lifetime. Assignments are not
+    * persisted: they are one narrow projection over the corpus
+    * ([[assign]]). */
   def writeCentroids(spark: org.apache.spark.sql.SparkSession,
       cents: Seq[Seq[Double]], path: String): Unit = {
     import spark.implicits._
@@ -199,11 +181,7 @@ object Ivf {
       .write.mode("overwrite").parquet(s"$path/centroids")
   }
 
-  /** The full-corpus (id, cl) assignment map — one narrow corpus scan. */
-  def writeAssignments(b: DataFrame, cents: Seq[Seq[Double]], path: String): Unit =
-    assign(b, cents).write.mode("overwrite").parquet(s"$path/assignments")
-
-  /** Centroids back from a [[writeIndex]] parquet index, in cluster
+  /** Centroids back from a [[writeCentroids]] index, in cluster
     * order — bit-identical to the trained values. */
   def readCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Seq[Double]] =
@@ -220,7 +198,7 @@ object Ivf {
     spark.conf.getOption("spark.graft.index.root")
       .getOrElse(sys.props("java.io.tmpdir"))
 
-  /** True when a [[writeIndex]] index exists at `path`. Probes the
+  /** True when a [[writeCentroids]] index exists at `path`. Probes the
     * centroid write's job-success marker, not the bare directory, so a
     * write that died mid-job (directory present, data incomplete) reads
     * as "missing" and the overwrite-mode retrain heals it instead of a
@@ -231,18 +209,11 @@ object Ivf {
       path: String): Boolean =
     Artifacts.markerExists(spark, s"$path/centroids")
 
-  /** IVF top-k: queries probe their `nprobe` nearest clusters, candidates
-    * are those clusters' members, exact cosine (native codegen expression)
-    * reranks. The only join is an equi-join on the cluster id. */
-  def topK(emb: DataFrame, idCol: String, vecCol: String, nlist: Int,
-      iters: Int, nQueries: Int, k: Int, nprobe: Int): DataFrame = {
-    val b = base(emb, idCol, vecCol)
-    topKWith(b, centroids(b, nlist, iters), nQueries, k, nprobe)
-  }
-
-  /** [[topK]] with pre-trained centroids — the share-the-training form:
-    * train once ([[centroids]]), reuse for both ANN search and
-    * [[semDedupPairsWith]] instead of running k-means per query. */
+  /** IVF top-k: queries probe their `nprobe` nearest clusters,
+    * candidates are those clusters' members, exact cosine (native codegen
+    * expression) reranks. The only join is an equi-join on the cluster
+    * id. Takes pre-trained centroids ([[centroids]]), so one training
+    * serves both ANN search and [[semDedupPairsWith]]. */
   def topKWith(b: DataFrame, cents: Seq[Seq[Double]], nQueries: Int, k: Int,
       nprobe: Int): DataFrame =
     rankTopK(scorePairs(probedCandidates(b, cents, nQueries, nprobe),
@@ -312,8 +283,8 @@ object Ivf {
     // measured idle 7-rep mins, q_ivf_rerank 0.63s → 0.84s with the pin;
     // AQE's byte-coalesced few-task shape is the faster one (r17's
     // full-suite re-adjudication reached the same verdict for the dedup
-    // pins and reverted them too — spanScrub's h-join-adjacent pin is
-    // the one survivor, see Dedup.spanScrubStages)
+    // pins and reverted them too — spanScrubFrom's h-join-adjacent pin
+    // is the one survivor)
     val approx = scorePairs(probedCandidates(b, cents, nQueries, nprobe),
       dq.select(col("id"), col("dq").as("v")))
     val wA = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)

@@ -62,36 +62,21 @@ object Pq {
     }: _*)
   }
 
-  /** Codeword lookup per block, flattened back to a dims-length vector —
-    * the ADC reconstruction, from stored `codes`. */
-  def reconstructFromCodes(codesCol: Column, books: Seq[Seq[Seq[Double]]]): Column =
+  /** Encode + decode in one projection: each block's codeword id
+    * ([[codes]]) looked up in its codebook, flattened back to a
+    * dims-length vector — the ADC reconstruction. */
+  def reconstruct(e: Column, books: Seq[Seq[Seq[Double]]]): Column = {
+    val codesCol = codes(e, books)
     flatten(array(books.zipWithIndex.map { case (bk, j) =>
       element_at(typedLit(bk.map(_.toIndexedSeq).toIndexedSeq),
         (element_at(codesCol, j + 1) + lit(1L)).cast(IntegerType))
     }: _*))
-
-  /** Encode + decode in one projection (no stored codes needed). */
-  def reconstruct(e: Column, books: Seq[Seq[Seq[Double]]]): Column =
-    reconstructFromCodes(codes(e, books), books)
-
-  /** Persist the PQ index: codes as array<tinyint> — m bytes per vector
-    * (k ≤ 128), genuinely 32× smaller than the raw floats at the default
-    * geometry. The codebooks themselves persist beside the codes
-    * (m·k·dims/m doubles — tiny), so a reader reconstructs without
-    * retraining. */
-  def writeIndex(b: DataFrame, books: Seq[Seq[Seq[Double]]], path: String): Unit = {
-    require(books.forall(_.size <= 128), "tinyint codes need k <= 128")
-    b.select(col("id"),
-        codes(col("e"), books).cast(ArrayType(ByteType)).as("codes"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    writeBooks(b.sparkSession, books, path)
   }
 
-  /** Codebooks ONLY — m·k tiny rows, no corpus scan: the right write for
-    * a cache that never reads the code table back (the
+  /** Persist the codebooks — m·k tiny rows, no corpus scan (the
     * [[Ivf.writeCentroids]] story applied to PQ). Reconstruction from
-    * baked-in books is a narrow projection, so persisting the corpus
-    * codes here would buy nothing. */
+    * baked-in books is a narrow projection ([[reconstruct]]), so
+    * persisting the corpus codes would buy nothing. */
   def writeBooks(spark: org.apache.spark.sql.SparkSession,
       books: Seq[Seq[Seq[Double]]], path: String): Unit = {
     import spark.implicits._
@@ -110,7 +95,7 @@ object Pq {
       path: String): Boolean =
     Artifacts.markerExists(spark, s"$path/books")
 
-  /** Codebooks back from a [[writeIndex]] index — bit-identical to the
+  /** Codebooks back from a [[writeBooks]] table — bit-identical to the
     * trained values (doubles round-trip parquet exactly). */
   def readBooks(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Seq[Seq[Double]]] =
@@ -118,14 +103,4 @@ object Pq {
       .collect()
       .groupBy(_.getLong(0)).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_.getLong(1)).map(_.getSeq[Double](2)).toSeq)
-
-  /** The (id, dq) reconstructed-vector view of a persisted index — the
-    * compressed side for [[Ivf.sq8RerankWith]], built from m bytes per
-    * row instead of the raw floats. */
-  def readIndexVectors(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val books = readBooks(spark, path)
-    spark.read.parquet(s"$path/codes").select(col("id"),
-      reconstructFromCodes(col("codes").cast(ArrayType(LongType)), books).as("dq"))
-  }
 }

@@ -21,8 +21,8 @@ import graft.functions.Int8Quantize
   * (O(d) per row, codegen'd); `scale` and `q` are fields of its single
   * struct, so Catalyst's subexpression elimination computes the vector
   * once even when a projection selects both. The previous Column-HOF
-  * formulation ([[int8Lambda]], kept for parity testing) re-evaluated the
-  * max-abs sub-expression per element — O(d²) per row, interpreted.
+  * formulation (a spec's parity reference now) re-evaluated the max-abs
+  * sub-expression per element — O(d²) per row, interpreted.
   * Everything stays narrow: no shuffle anywhere in this file.
   */
 object Quantize {
@@ -32,24 +32,8 @@ object Quantize {
   private def quant(vec: Column): Column =
     Int8Quantize.int8Quantize(asDouble(vec))
 
-  /** Per-vector max-abs. */
-  def maxAbs(vec: Column): Column =
-    array_max(transform(asDouble(vec), x => abs(x)))
-
   /** 127 / max|x| (0.0 for the zero vector). */
   def int8Scale(vec: Column): Column = quant(vec).getField("scale")
-
-  /** Quantized components as a long array. */
-  def int8(vec: Column): Column = quant(vec).getField("q")
-
-  /** Reference Column-HOF formulation of [[int8]] — O(d²) per row and
-    * interpreted, retained ONLY as the parity oracle for the native
-    * expression (TextOpsSpec asserts both produce identical arrays). */
-  def int8Lambda(vec: Column): Column = {
-    val ma = maxAbs(vec)
-    val scale = when(ma === 0.0, lit(0.0)).otherwise(lit(127.0) / ma)
-    transform(asDouble(vec), x => floor(x * scale + lit(0.5)).cast(LongType))
-  }
 
   /** Comma-joined string form (array columns do not survive the driver's
     * hash comparator; the CSV string is bit-stable). A struct field of the
@@ -57,18 +41,6 @@ object Quantize {
     * would be a higher-order function and drop the projection out of
     * whole-stage codegen. */
   def int8Csv(vec: Column): Column = quant(vec).getField("csv")
-
-  /** Dequantized vector from MATERIALIZED q/scale columns (a persisted
-    * int8 index read back from parquet) — there the lambda body is a plain
-    * column reference, so the interpreted transform is O(d). Do NOT feed
-    * it [[int8]]/[[int8Scale]] expressions directly: the lambda would
-    * re-evaluate the whole quantization per element (use [[roundTrip]],
-    * which the native expression emits in the same pass). */
-  def dequantize(q: Column, scale: Column): Column =
-    // scale 0 marks the zero vector (every q is 0): round-trip to zeros
-    // rather than tripping ANSI's divide-by-zero
-    transform(q, v => when(scale === 0.0, lit(0.0))
-      .otherwise(v.cast(DoubleType) / scale))
 
   /** quantize→dequantize round trip of a vector in the native pass —
     * the approximate vectors a quantized-index search scores against. */

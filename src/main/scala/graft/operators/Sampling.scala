@@ -26,10 +26,6 @@ object Sampling {
       .withColumn("split",
         when(col("bucket") < trainPct, lit("train")).otherwise(lit("test")))
 
-  /** Deterministic pct% subsample. */
-  def sample(df: DataFrame, idCol: String, pct: Int): DataFrame =
-    df.filter(hashBucket(col(idCol), 100) < pct)
-
   /** Stratified subsample: a different deterministic percentage per
     * stratum (e.g. downsample dominant languages, keep the tail whole).
     * Strata absent from `pcts` fall back to `defaultPct`. Still a narrow

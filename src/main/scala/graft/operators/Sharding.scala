@@ -1,24 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Deterministic training-shard layout — the "publish the corpus" step a
-  * pipeline runs after cleaning/dedup/mixing: every document gets a
-  * content-stable shard in [0, nShards), the corpus lands as one
-  * directory per shard, and a manifest states what each shard holds
-  * (the numbers a dataset card and a training-loader config both need).
+/** Deterministic training-shard assignment — the "publish the corpus"
+  * step a pipeline runs after cleaning/dedup/mixing: every document gets
+  * a content-stable shard in [0, nShards), and a manifest states what
+  * each shard holds (the numbers a dataset card and a training-loader
+  * config both need).
   *
   * The assignment is [[Sampling.hashBucket]] (md5 of the id), NOT
   * `spark_partition_id`/`rand`: re-running the job, changing the input
   * partitioning, or regenerating one shard cannot move a document — the
   * property that makes shard-level resume/retry of a training run safe.
   * At 100 TB, nShards is chosen for the loader (shard count ≫ data-
-  * parallel workers, shard size ~1–10 GB), never for Spark — the write
-  * repartitions ON the shard id so writer tasks and shard dirs coincide
-  * (one file per shard, no small-files debris), while everything before
-  * the write keeps the natural partitioning. */
+  * parallel workers, shard size ~1–10 GB), never for Spark. */
 object Sharding {
 
   /** `df` plus a deterministic `shard` column in [0, nShards). Narrow. */
@@ -40,18 +37,4 @@ object Sharding {
         count(lit(1)).as("n_docs"),
         sum(size(split(col(textCol), " ")).cast(LongType)).as("n_tokens"),
         sum(length(col(textCol)).cast(LongType)).as("n_chars"))
-
-  /** Materialize the sharded layout: `path/shard=<i>/` with ONE parquet
-    * file per shard. `repartition(nShards, shard)` places each shard's
-    * rows in exactly one task (same murmur3-mod placement as the
-    * partitioned write's directory fan-out is irrelevant — what matters
-    * is each task holds whole shards), so each `shard=` directory gets
-    * exactly one file instead of one per upstream task. Readers prune by
-    * shard via PartitionFilters ([[graft.sources.Sinks.writePartitioned]]
-    * semantics); a training loader just lists the directories. */
-  def writeShards(df: DataFrame, idCol: String, nShards: Int, path: String,
-      mode: SaveMode = SaveMode.Overwrite): Unit =
-    assignShards(df, idCol, nShards)
-      .repartition(nShards, col("shard"))
-      .write.mode(mode).partitionBy("shard").parquet(path)
 }

@@ -89,11 +89,6 @@ object Similarity {
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
       cols: _*)
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorOps.cosineSimilarity(a, b)
 
@@ -141,7 +136,7 @@ object Similarity {
     * a partitioned cartesian (both sides shuffled, each reducer scoring a
     * query-block × corpus-block tile) — the operator stays total instead
     * of failing, at the all-pairs cost that is inherent to exact k-NN with
-    * a corpus-scale query set. Prefer lshTopK/Ivf.topK there: they never
+    * a corpus-scale query set. Prefer lshTopK/Ivf.topKWith there: they never
     * broadcast vectors and never go all-pairs. Deciding the shape is
     * usually FREE: when the optimizer's size estimate of the query side
     * (file bytes at the leaves — the same statistic Spark's own
@@ -194,17 +189,6 @@ object Similarity {
     if ((z & 1L) == 1L) 1.0 else -1.0
   }
 
-  /** LSH bucket for one table: `planes` sign bits of dot(v, r_p) for ±1
-    * hyperplanes r_p (SimHash for real vectors). `table` offsets the plane
-    * seeds so tables are independent. */
-  def hyperplaneBucket(vec: Column, planes: Int, table: Int, dims: Int): Column =
-    (0 until planes).map { p =>
-      val weights = typedLit((0 until dims).map(d => planeWeight(table * planes + p, d)))
-      val proj = aggregate(zip_with(vec, weights, (x, w) => x * w),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
   /** Multi-table bucketed ANN top-k (OR-amplified LSH): `tables` independent
     * hash tables of `planes` sign bits each; candidates are corpus vectors
     * sharing ANY table's bucket with the query; exact cosine ranks the
@@ -214,8 +198,8 @@ object Similarity {
   def lshTopK(emb: DataFrame, idCol: String, vecCol: String,
       nQueries: Int, k: Int, planes: Int, tables: Int, dims: Int): DataFrame = {
     val base = emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec"))
-    // all table buckets in ONE native pass per vector (same ±1 weights and
-    // accumulation order as hyperplaneBucket — the oracle SQL is unchanged)
+    // all table buckets in ONE native pass per vector (±1 weights from
+    // planeWeight, accumulated in dimension order like the oracle SQL)
     val buckets = graft.functions.VectorOps.hyperplaneBuckets(col("vec"), planes, tables)
     val withBucket = base.select(col("id"), col("vec"),
       posexplode(buckets).as(Seq("tbl", "bucket")))

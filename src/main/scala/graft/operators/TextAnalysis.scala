@@ -159,38 +159,20 @@ object TextAnalysis {
     * high-novelty one is genuinely new material (the same min-owner
     * attribution SemDeDup-style pipelines use to pick survivors).
     *
-    * Scale shape: one tokenization pass emits per-document-distinct
-    * (id, gram) rows (native [[graft.functions.ShingleText]], no
-    * shuffle), grams collapse to 8-byte xxhash64 before anything moves,
-    * a map-side-combined `min(id)` per hash computes first owners, and
-    * the instance stream re-joins that table on the hash — two
-    * shuffles, both keyed on the 8-byte gram hash, then one per-doc
-    * aggregate. Novelty compares hashes, not gram text, so a 64-bit
-    * collision could mis-attribute a first owner — the accepted
-    * q_decontaminate trade. The tokenization feeds both the owner
-    * aggregate and the re-join, so the default materializes it once
-    * (the spanDupStats recipe); `materialize = false` returns the raw
-    * plan for plan-quality assertions.
+    * Takes per-document-DISTINCT (id, h) gram rows — typically the
+    * persisted shingle table exploded ([[Dedup.shingleTable]]:
+    * ShingleHashes, distinct word-n-gram xxhash64 per doc), so the
+    * caller pays no tokenization and needs no persist (artifact re-reads
+    * are cheap). Scale shape: a map-side-combined `min(id)` per hash
+    * computes first owners, and the instance stream re-joins that table
+    * on the hash — two shuffles, both keyed on the 8-byte gram hash,
+    * then one per-doc aggregate. Novelty compares hashes, not gram text,
+    * so a 64-bit collision could mis-attribute a first owner — the
+    * accepted q_decontaminate trade.
     *
     * Documents with fewer than n tokens produce no grams and are absent
     * from the output, mirroring the reference's span semantics
     * (rulemorph tests/fixtures span family). */
-  def gramNovelty(docs: org.apache.spark.sql.DataFrame, textCol: String,
-      idCol: String, n: Int,
-      materialize: Boolean = true): org.apache.spark.sql.DataFrame = {
-    val gramsRaw = ngramRows(docs, textCol, idCol, n, distinct = true)
-      .select(col(idCol), xxhash64(col("gram")).as("h"))
-    if (!materialize) gramNoveltyFrom(gramsRaw, idCol)
-    else Materialize.during(gramsRaw)(g =>
-      Materialize.pin(gramNoveltyFrom(g, idCol)))
-  }
-
-  /** [[gramNovelty]] over precomputed per-document-DISTINCT (id, h) gram
-    * rows — the artifact-backed form: the persisted shingle table
-    * (ShingleHashes = distinct word-n-gram xxhash64/seed-42 per doc,
-    * hash-identical to the inline tokenization above) explodes straight
-    * into the owner aggregate and the re-join, so the caller pays no
-    * tokenization and needs no persist (artifact re-reads are cheap). */
   def gramNoveltyFrom(grams: org.apache.spark.sql.DataFrame,
       idCol: String): org.apache.spark.sql.DataFrame = {
     val first = grams.groupBy("h").agg(min(col(idCol)).as("first_owner"))
@@ -600,7 +582,7 @@ object TextAnalysis {
 
   /** Persist a trained merge table ([[bpeTrain]]'s output shape) as a
     * parquet artifact — the "train once, deploy" treatment the IVF index
-    * gets ([[Ivf.writeIndex]]): a tokenizer is trained on one corpus
+    * gets ([[Ivf.writeCentroids]]): a tokenizer is trained on one corpus
     * snapshot and then reused verbatim by every downstream job, so the
     * merge table must survive JVM restarts bit-exactly (strings
     * round-trip parquet exactly). `path/merges` holds (rank, lhs, rhs,

@@ -80,8 +80,7 @@ object AuditQueries extends QueryFamily {
   /** The publish-step manifest: 16 deterministic training shards over the
     * cleaned corpus — per shard, docs/tokens/chars. md5-stable shard
     * membership (re-runs can't move a document), one map-side-combined
-    * aggregation; [[graft.operators.Sharding.writeShards]] materializes
-    * the matching one-file-per-shard layout (ShardingSpec). */
+    * aggregation ([[graft.operators.Sharding.shardManifest]]). */
   def shardManifest(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Sharding.shardManifest(
         Tables.documents(spark, dir), "text", "doc_id", nShards = 16)
@@ -291,7 +290,7 @@ object AuditQueries extends QueryFamily {
     * per-source set sizes fall out of the same table — no gram-table
     * self-join, no second corpus pass; sizes attach as broadcast joins.
     * The per-gram table feeds the sizes and pair aggregates, so it
-    * materializes once (the spanDupStats recipe). Spark compares
+    * materializes once, as a persisted artifact. Spark compares
     * hashes, the oracle literal gram text — counts coincide absent a
     * 64-bit collision (the proven q_decontaminate argument). */
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame =

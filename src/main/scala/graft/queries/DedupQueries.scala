@@ -57,9 +57,9 @@ object DedupQueries extends QueryFamily {
     * candidates only. Same oracle as the all-pairs formulation (the SQL
     * IS exact Jaccard); the difference is the plan — candidate-join on
     * 8-byte band keys instead of the prefix-filtered shingle self-join,
-    * the shape that stays sub-quadratic on adversarial corpora. The pure
-    * exact path ([[Dedup.jaccardPairsFrom]]) remains the verification
-    * tool; TextOpsSpec asserts both produce the same pair set. */
+    * the shape that stays sub-quadratic on adversarial corpora.
+    * TextOpsSpec asserts the same pair set as the prefix-filtered exact
+    * all-pairs self-join it keeps as a reference. */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     // no persist/localCheckpoint scaffolding (r16, the winnowPairs
     // rationale): the 4 self-join consumers re-read the PERSISTED shingle
@@ -74,8 +74,7 @@ object DedupQueries extends QueryFamily {
   // per-pair false-NEGATIVE probability for pairs barely above j=0.8 —
   // a theoretical oracle mismatch on adversarial corpora. Deterministic
   // and green on the bench corpora (TextOpsSpec asserts pair-set
-  // equality vs the pure exact path, Dedup.jaccardPairsFrom, which
-  // remains available as the exact fallback); q_winnow_pairs includes
+  // equality vs the exact all-pairs reference); q_winnow_pairs includes
   // its recall mechanism IN the oracle and has no such gap.
   query("q_ngram_jaccard", Oracle(jaccardSql))(ngramJaccard)
 
@@ -652,7 +651,7 @@ object DedupQueries extends QueryFamily {
     // side is consumed once, and the native ShingleHashes pass over the
     // text column measured CHEAPER than decoding + exploding the
     // persisted array column (idle 5-rep mins 0.28 vs 0.37 s) — the
-    // artifact only wins multi-consumption shapes (gramNovelty)
+    // artifact only wins multi-consumption shapes (q_gram_novelty)
     val docs = Tables.documents(spark, dir)
     Dedup.contaminatedDocs(
         corpus = docs.filter(col("doc_id") >= 10),
@@ -860,7 +859,7 @@ object DedupQueries extends QueryFamily {
        |FROM w JOIN sagg ON sagg.doc_id = w.doc_id
        |ORDER BY w.doc_id""".stripMargin
 
-  /** Exact duplicated-span statistics ([[Dedup.spanDupStats]], n = 5):
+  /** Exact duplicated-span statistics ([[Dedup.spanDupStatsFrom]], n = 5):
     * per document, how many of its 5-token span instances occur verbatim
     * in at least one other document. The Spark side groups on the 8-byte
     * xxhash64 of the span while the oracle groups on the literal span
@@ -886,7 +885,7 @@ object DedupQueries extends QueryFamily {
         |FROM g JOIN df USING (s)
         |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin))(spanDedup)
 
-  /** Duplicated-span REMOVAL ([[Dedup.spanScrub]], n = 5) — the cleaning
+  /** Duplicated-span REMOVAL ([[Dedup.spanScrubFrom]], n = 5) — the cleaning
     * transformation behind [[spanDedup]]'s diagnostic: tokens covered by
     * any cross-document duplicated 5-token span are cut and the text
     * rebuilt; fully-covered documents drop. Same hash-vs-literal oracle

@@ -29,8 +29,8 @@ object Extensions extends QueryFamily {
   /** Inactivity-gap sessionization: a new session starts when a
     * user's gap exceeds 30 minutes; session id = running count of session
     * starts per user. Gaps compare FLOOR-second epochs on both engines so
-    * the nanosecond parquet timestamps cannot straddle the threshold
-    * differently (Spark sees µs, DuckDB ns). One shuffle on user_id
+    * sub-second precision cannot straddle the threshold differently on
+    * the two engines. One shuffle on user_id
     * serves both windows and the final aggregation — sessions never cross
     * users, so the plan reuses the partitioning. */
   def sessionizeBatch(spark: SparkSession, dir: String): DataFrame = {
@@ -110,7 +110,7 @@ object Extensions extends QueryFamily {
     * recent purchase at or before it ([[graft.operators.AsofJoin]] —
     * union-window, ONE shuffle on user_id, no range-join explosion).
     * Times compare at floor-second granularity on both engines (the
-    * proven q_sessionize recipe for the nanosecond parquet timestamps);
+    * proven q_sessionize recipe);
     * ties inside one second break to the highest purchase event_id.
     * Clicks before any purchase keep NULL payload — the left-outer
     * as-of. */
@@ -188,7 +188,7 @@ object Extensions extends QueryFamily {
     * single-row global aggregate and a 3-row explode; the ratio math
     * happens on the 1-row frame. No windows anywhere. Times compare at
     * floor-second granularity on both engines (the proven q_sessionize
-    * recipe for nanosecond parquet timestamps); equal-second stage
+    * recipe); equal-second stage
     * arrivals count as reached (>=), deterministic on both engines. */
   def eventFunnel(spark: SparkSession, dir: String): DataFrame = {
     val firsts = Tables.events(spark, dir)

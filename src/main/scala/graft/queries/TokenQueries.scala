@@ -157,7 +157,7 @@ object TokenQueries extends QueryFamily {
          |FROM toks t LEFT JOIN vocab v ON t.tok = v.tok
          |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin))(oovRate)
 
-  /** Per-document 3-gram novelty ([[TA.gramNovelty]]): the fraction of
+  /** Per-document 3-gram novelty ([[TA.gramNoveltyFrom]]): the fraction of
     * a document's distinct grams first introduced by it — the
     * incremental-crawl signal for "does this document add anything".
     * Documents under 3 tokens carry no grams and are absent, matching

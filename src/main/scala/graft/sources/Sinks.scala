@@ -3,26 +3,16 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Scale-oriented parquet sinks beyond the reference's CSV/JSON/NDJSON
-  * surface: Hive-style partitioned layouts (partition pruning turns a
-  * 100 TB scan into a per-partition read) and bucketed tables (two tables
-  * bucketed on the same key with the same bucket count join with ZERO
-  * shuffle — the physical layout replaces the exchange).
+  * surface: bucketed tables (two tables bucketed on the same key with the
+  * same bucket count join with ZERO shuffle — the physical layout
+  * replaces the exchange).
   *
   * At 100 TB the write-side choices dominate every later read: a corpus
-  * partitioned by (lang, dt) and bucketed by doc_id makes the daily
+  * bucketed by doc_id makes the daily
   * incremental-dedup join ([[graft.operators.Dedup.dedupAgainstIndex]])
   * and any per-doc enrichment join co-located by construction.
   */
 object Sinks {
-
-  /** Hive-style partitioned parquet: one directory level per partition
-    * column. Readers filtering on partition columns scan only matching
-    * directories (PartitionFilters in the scan — checked by SinksSpec).
-    * Choose low-cardinality columns (lang, dt, source); high-cardinality
-    * partitioning creates a small-files problem instead. */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
-      mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
 
   /** Bucketed (and optionally sorted) parquet table in the session
     * catalog. Joins/aggregations on the bucket key between tables with

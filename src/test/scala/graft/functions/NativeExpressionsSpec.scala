@@ -127,7 +127,7 @@ class NativeExpressionsSpec extends AnyFunSuite {
     val df = Seq.fill(10)(Seq.fill(64)(rnd.nextDouble() * 2 - 1)).toDF("vec")
     val planes = 4; val tables = 8; val dims = 64
     val legacy = array((0 until tables).map(t =>
-      graft.operators.Similarity.hyperplaneBucket(col("vec"), planes, t, dims)): _*)
+      graft.operators.Reference.hyperplaneBucket(col("vec"), planes, t, dims)): _*)
     val rows = df.select(
       VectorOps.hyperplaneBuckets(col("vec"), planes, tables).as("native"),
       legacy.as("legacy")).collect()
@@ -185,12 +185,12 @@ class NativeExpressionsSpec extends AnyFunSuite {
     val rows = df.select(
       graft.operators.Quantize.int8Scale(col("v")).as("ns"),
       legacyScale.as("ls"),
-      graft.operators.Quantize.int8(col("v")).as("nq"),
-      graft.operators.Quantize.int8Lambda(col("v")).as("lq"),
+      Int8Quantize.int8Quantize(col("v")).getField("q").as("nq"),
+      graft.operators.Reference.int8Lambda(col("v")).as("lq"),
       graft.operators.Quantize.roundTrip(col("v")).as("ndq"),
       // ANSI mode throws on x/0.0, so the legacy restatement guards the
       // zero vector the same way the native pass defines it: dq = 0.0
-      transform(graft.operators.Quantize.int8Lambda(col("v")),
+      transform(graft.operators.Reference.int8Lambda(col("v")),
         q => when(legacyScale === 0.0, lit(0.0))
           .otherwise(q.cast(org.apache.spark.sql.types.DoubleType) / legacyScale))
         .as("ldq")).collect()

@@ -133,7 +133,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       4L -> text("c"), 5L -> text("q"),
       7L -> text("q", edits = Seq(20)), 9L -> text("z"))
     val docs = rows.toDF("doc_id", "text")
-    val pairs = Dedup.jaccardPairsFrom(Dedup.shingleTable(docs, "text", "doc_id", N), T)
+    val pairs = Reference.jaccardPairsFrom(Dedup.shingleTable(docs, "text", "doc_id", N), T)
       .select("da", "db").collect().map(r => (r.getLong(0), r.getLong(1)))
     val qualifying = pairs.flatMap { case (a, b) =>
       // (new, partner) with partner indexed (even) or an earlier odd

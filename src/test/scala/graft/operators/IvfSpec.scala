@@ -51,7 +51,8 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("IVF top-k recall vs brute force is well above the probe fraction") {
-    val ivf = Ivf.topK(emb, "vec_id", "embedding", nlist = 10, iters = 2,
+    val b = Ivf.base(emb, "vec_id", "embedding")
+    val ivf = Ivf.topKWith(b, Ivf.centroids(b, nlist = 10, iters = 2),
         nQueries = 50, k = 5, nprobe = 5)
       .select("qid", "cid")
     val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
@@ -70,17 +71,11 @@ class IvfSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("ivf_idx").toString
     try {
       assert(!Ivf.indexExists(spark, idx))
-      Ivf.writeIndex(b, cents, idx)
+      Ivf.writeCentroids(spark, cents, idx)
       assert(Ivf.indexExists(spark, idx))
       // centroids: bit-identical after the parquet round trip
       val reread = Ivf.readCentroids(spark, idx)
       assert(reread == cents)
-      // assignments: the persisted corpus map equals a fresh assignment
-      val persisted = spark.read.parquet(s"$idx/assignments")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val fresh = Ivf.assign(b, cents)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(persisted == fresh)
       // the search served from the re-read index is bit-identical to one
       // served from the trained centroids — no retraining required
       def run(c: Seq[Seq[Double]]) =
@@ -108,31 +103,6 @@ class IvfSpec extends AnyFunSuite {
     Ivf.writeCentroids(spark, cents, idx)
     assert(Ivf.indexExists(spark, idx), "completed write carries the marker")
     assert(Ivf.readCentroids(spark, idx) == cents)
-  }
-
-  test("a crash while OVERWRITING an index reads as missing, not as a mixed index") {
-    // writeIndex on an EXISTING index: the old centroids/_SUCCESS marker
-    // must not survive into the overwrite window, or a crash between the
-    // assignments and centroids phases would leave OLD centroids
-    // certifying NEW assignments — a silently mixed index
-    val b = Ivf.base(emb, "vec_id", "embedding")
-    val centsA = Ivf.centroids(b, nlist = 10, iters = 1)
-    val centsB = Ivf.centroids(b, nlist = 10, iters = 2)
-    val idx = java.nio.file.Files.createTempDirectory("ivf_overwrite").toString
-    Ivf.writeIndex(b, centsA, idx)
-    assert(Ivf.indexExists(spark, idx))
-    // replay writeIndex's crash window by hand: marker cleared, new
-    // assignments written, death before writeCentroids
-    val marker = new org.apache.hadoop.fs.Path(s"$idx/centroids/_SUCCESS")
-    marker.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(marker, false)
-    Ivf.writeAssignments(b, centsB, idx)
-    assert(!Ivf.indexExists(spark, idx),
-      "mid-overwrite crash state must read as missing")
-    // the retrain path heals it into a consistent index
-    Ivf.writeIndex(b, centsB, idx)
-    assert(Ivf.indexExists(spark, idx))
-    assert(Ivf.readCentroids(spark, idx) == centsB)
   }
 
   test("index root resolves from spark conf; centroid-only writes; queries follow it") {

@@ -90,8 +90,8 @@ class JoinPropertySpec extends AnyFunSuite {
           bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("h"))
         .filter(col("h") <= 3)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      val banded = Dedup.simhashPairs(docs, "text", "doc_id",
-          maxHamming = 3, bits = 60, bands = 4)
+      val banded = Dedup.simhashPairsFrom(sig, maxHamming = 3, bits = 60,
+          bands = 4)
         .select("da", "db")
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(banded == naive, s"seed $seed: banded != naive Hamming join")

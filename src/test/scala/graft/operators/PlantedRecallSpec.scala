@@ -99,8 +99,9 @@ class PlantedRecallSpec extends AnyFunSuite {
   }
 
   test("IVF top-k on the planted set: >=90% planted-dup hits, recall@5 >= 0.8") {
-    val ivf = topKMap(Ivf.topK(planted, "vec_id", "embedding",
-      nlist = Clusters, iters = 2, nQueries = NQueries, k = K, nprobe = 4))
+    val b = Ivf.base(planted, "vec_id", "embedding")
+    val ivf = topKMap(Ivf.topKWith(b, Ivf.centroids(b, nlist = Clusters, iters = 2),
+      nQueries = NQueries, k = K, nprobe = 4))
     val hit = plantedHitRate(ivf)
     val rec = recallAtK(ivf)
     assert(hit >= 0.9, s"planted-dup hit rate = $hit")

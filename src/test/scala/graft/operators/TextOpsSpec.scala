@@ -40,13 +40,18 @@ class TextOpsSpec extends AnyFunSuite {
     assert(mwl1 == 196.0 / 50.0)
   }
 
+  /** The q_span_dedup composition over crafted docs: positional 5-token
+    * span rows, then the per-document statistics. */
+  private def spanDupStats(d: org.apache.spark.sql.DataFrame) =
+    Dedup.spanDupStatsFrom(Dedup.spanPositionRows(d, "text", "doc_id", n = 5))
+
   test("spanDupStats: flags span instances shared across documents") {
     val d = docs(
       1L -> "a b c d e f", // spans "a b c d e" (shared with 2), "b c d e f"
       2L -> "a b c d e x", // spans "a b c d e" (shared with 1), "b c d e x"
       3L -> "z z z z z",   // unique span, also REPEATED within no other doc
       4L -> "too short")   // < 5 tokens: no spans, absent from the output
-    val out = Dedup.spanDupStats(d, "text", "doc_id", n = 5)
+    val out = spanDupStats(d)
       .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(out.toSeq == Seq(
@@ -59,11 +64,11 @@ class TextOpsSpec extends AnyFunSuite {
     // doc 5 repeats its own span twice; doc-frequency is DISTINCT docs,
     // so neither instance is flagged until another doc shares it
     val alone = docs(5L -> "p q r s t u p q r s t")
-    val a = Dedup.spanDupStats(alone, "text", "doc_id", n = 5)
+    val a = spanDupStats(alone)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(a.toSeq == Seq((5L, 7L, 0L)))
     val pair = docs(5L -> "p q r s t u p q r s t", 6L -> "p q r s t")
-    val p = Dedup.spanDupStats(pair, "text", "doc_id", n = 5)
+    val p = spanDupStats(pair)
       .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // "p q r s t" occurs at positions 0 and 6 of doc 5 — both instances flag
@@ -77,7 +82,8 @@ class TextOpsSpec extends AnyFunSuite {
       3L -> "z y x w v u", // unique spans → untouched
       4L -> "a b c d e",   // every token covered → dropped
       5L -> "tiny doc")    // < 5 tokens: no spans, passes through whole
-    val out = Dedup.spanScrub(d, "text", "doc_id", n = 5)
+    val out = Dedup.spanScrubFrom(d, "text", "doc_id", n = 5,
+        Dedup.spanPositionRows(d, "text", "doc_id", n = 5))
       .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(out.toSeq == Seq(
@@ -210,7 +216,7 @@ class TextOpsSpec extends AnyFunSuite {
       df.select("da", "db", "inter", "jaccard").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .sortBy(p => (p._1, p._2)).toSeq
-    val exact = pairs(Dedup.jaccardPairsFrom(sh, threshold = 0.8))
+    val exact = pairs(Reference.jaccardPairsFrom(sh, threshold = 0.8))
     val viaLsh = pairs(Dedup.minhashDupPairsFrom(sh, k = 64, bands = 16, threshold = 0.8))
     assert(exact.nonEmpty, "test corpus must contain near-duplicates")
     assert(viaLsh == exact)
@@ -228,7 +234,7 @@ class TextOpsSpec extends AnyFunSuite {
       df.select("da", "db", "inter", "jaccard").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .sortBy(p => (p._1, p._2)).toSeq
-    val exact = pairs(Dedup.jaccardPairsFrom(sh, threshold = 0.8))
+    val exact = pairs(Reference.jaccardPairsFrom(sh, threshold = 0.8))
     val fps = TextAnalysis.winnowFingerprints(docs, "text", "doc_id", n = 3, w = 4)
     // the same ≥2-shared-fingerprints confidence filter the query runs
     val cand = fps.as("x").join(fps.as("y"),
@@ -256,7 +262,8 @@ class TextOpsSpec extends AnyFunSuite {
       .filter(col("hamming") <= 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(p => (p._1, p._2)).toSeq
-    val banded = Dedup.simhashPairs(docs, "text", "doc_id",
+    val banded = Dedup.simhashPairsFrom(
+        Dedup.simhashAgg(docs, "text", "doc_id", bits = 60),
         maxHamming = 3, bits = 60, bands = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(p => (p._1, p._2)).toSeq
@@ -267,7 +274,8 @@ class TextOpsSpec extends AnyFunSuite {
   test("simhashPairs: radius >= bands is rejected (banding would lose pairs)") {
     val d = docs(1L -> "a b c", 2L -> "a b d")
     assertThrows[IllegalArgumentException] {
-      Dedup.simhashPairs(d, "text", "doc_id", maxHamming = 4, bands = 4)
+      Dedup.simhashPairsFrom(Dedup.simhashAgg(d, "text", "doc_id", bits = 60),
+        maxHamming = 4, bits = 60, bands = 4)
     }
   }
 
@@ -365,8 +373,9 @@ class TextOpsSpec extends AnyFunSuite {
       (2L, Seq(0.0f, 0.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
     val r = d.select(col("vec_id"),
         Quantize.int8Scale(col("embedding")).as("scale"),
-        Quantize.int8(col("embedding")).as("q"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getSeq[Long](2)))
+        Quantize.int8Csv(col("embedding")).as("q"))
+      .collect().map(r => (r.getLong(0), r.getDouble(1),
+        r.getString(2).split(",").map(_.toLong).toSeq))
       .sortBy(_._1)
     val (_, scale, q) = r(0)
     assert(scale == 127.0) // max|x| = 1.0

@@ -22,14 +22,22 @@ class CorpusAuditSpec extends AnyFunSuite {
     rows.toDF("doc_id", "text")
   }
 
+  /** The q_gram_novelty composition over crafted docs: each document's
+    * distinct 3-gram hashes (the shingle table), exploded into the
+    * first-owner attribution. */
+  private def gramNovelty(d: org.apache.spark.sql.DataFrame) =
+    TA.gramNoveltyFrom(
+      graft.operators.Dedup.shingleTable(d, "text", "doc_id", n = 3)
+        .select(col("doc").as("doc_id"), explode(col("shh")).as("h")),
+      "doc_id")
+
   test("gramNovelty: hand-checked attribution on crafted docs") {
     val d = docs(
       1L -> "a b c d",   // grams: "a b c", "b c d" — both novel (first doc)
       2L -> "a b c x",   // "a b c" seen (doc 1), "b c x" novel
       3L -> "a b c d",   // both grams seen
       4L -> "q r")       // < 3 tokens: absent
-    val out = TA.gramNovelty(d, "text", "doc_id", n = 3)
-      .orderBy("doc_id").collect()
+    val out = gramNovelty(d).orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(out.toSeq == Seq(
       (1L, 2L, 2L, 1.0),
@@ -41,8 +49,7 @@ class CorpusAuditSpec extends AnyFunSuite {
     val d = docs(
       1L -> "a b c a b c a b c", // distinct grams: a b c / b c a / c a b
       2L -> "a b c z z z")       // "a b c" seen; "b c z", "c z z", "z z z" novel
-    val out = TA.gramNovelty(d, "text", "doc_id", n = 3)
-      .orderBy("doc_id").collect()
+    val out = gramNovelty(d).orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.toSeq == Seq((1L, 3L, 3L), (2L, 4L, 3L)))
     // conservation: every distinct gram in the corpus is novel exactly once

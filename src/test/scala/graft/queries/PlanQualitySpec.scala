@@ -221,7 +221,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // struct-valued expression in a plain projection
     val narrow = planOf(graft.Tables.embeddings(spark, dir).select(
       graft.operators.Quantize.int8Scale(col("embedding")),
-      graft.operators.Quantize.int8(col("embedding"))))
+      graft.operators.Quantize.int8Csv(col("embedding"))))
     assert(!narrow.contains("Exchange"), s"quantize must not shuffle:\n$narrow")
   }
 
@@ -311,9 +311,10 @@ class PlanQualitySpec extends AnyFunSuite {
     // the span-dup flag join must be an equi-join on the 8-byte span
     // hash — never a nested-loop or cartesian product — and the span
     // emission must be the native one-pass expression
-    val sd = planOf(graft.operators.Dedup.spanDupStats(
-      graft.Tables.documents(spark, dir), "text", "doc_id", n = 5,
-      materialize = false).limit(1))
+    val docs = graft.Tables.documents(spark, dir)
+    val spans = graft.operators.Dedup.spanPositionRows(docs, "text",
+      "doc_id", n = 5)
+    val sd = planOf(graft.operators.Dedup.spanDupStatsFrom(spans).limit(1))
     assert(sd.contains("rm_shingle_text"),
       s"expected the native span pass in:\n$sd")
     assert(!sd.contains("CartesianProduct") &&
@@ -327,9 +328,8 @@ class PlanQualitySpec extends AnyFunSuite {
     // through a (doc, position) anti-join + a collect_list regroup), and
     // the rebuild is an in-row positional filter — never a nested-loop
     // product or a token-level shuffle
-    val ss = planOf(graft.operators.Dedup.spanScrub(
-      graft.Tables.documents(spark, dir), "text", "doc_id", n = 5,
-      materialize = false).limit(1))
+    val ss = planOf(graft.operators.Dedup.spanScrubFrom(docs, "text",
+      "doc_id", n = 5, spans).limit(1))
     assert(ss.contains("LeftOuter") && ss.contains("collect_set"),
       s"span scrub must attach per-doc covered sets via a left join:\n$ss")
     assert(!ss.contains("CartesianProduct") &&
@@ -880,9 +880,12 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_gram_novelty: gram hashes shuffle, gram text never does") {
-    val plan = planOf(graft.operators.TextAnalysis.gramNovelty(
-      graft.Tables.documents(spark, dir).select("doc_id", "text"),
-      "text", "doc_id", n = 3, materialize = false))
+    import org.apache.spark.sql.functions.{col, explode}
+    val plan = planOf(graft.operators.TextAnalysis.gramNoveltyFrom(
+      graft.operators.Dedup.shingleTable(graft.Tables.documents(spark, dir),
+          "text", "doc_id", n = 3)
+        .select(col("doc").as("doc_id"), explode(col("shh")).as("h")),
+      "doc_id"))
     assert(!plan.contains("CartesianProduct") &&
         !plan.contains("BroadcastNestedLoopJoin"),
       s"first-owner attribution must be a hash equi-join:\n$plan")
@@ -984,7 +987,7 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(smj <= 1, s"more than the pairing join shuffles:\n$plan")
   }
 
-  test("fleet invariant: no query plan contains a partition-less Window (unbounded frame)") {
+  test("fleet invariant: no query plan contains a partition-less Window") {
     val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, q) =>
         val plan = q(spark, dir).queryExecution.executedPlan

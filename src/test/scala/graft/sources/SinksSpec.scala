@@ -1,32 +1,14 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The write-side scale claims, checked against real physical plans:
-  * partitioned layouts prune at the scan, bucketed tables join with zero
-  * shuffle. */
+/** The write-side scale claim, checked against real physical plans:
+  * bucketed tables join and aggregate with zero shuffle. */
 class SinksSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.Sessions.local(4)
-
-  test("writePartitioned: partition filter prunes the scan") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("sinks_part").toString
-    val df = (0L until 100L).map(i => (i, if (i % 2 == 0) "en" else "de", s"doc $i"))
-      .toDF("doc_id", "lang", "text")
-    Sinks.writePartitioned(df, dir, Seq("lang"))
-    val back = spark.read.parquet(dir).filter(col("lang") === "en")
-    assert(back.count() == 50)
-    val plan = back.queryExecution.executedPlan.toString
-    val scanLine = plan.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(scanLine.contains("lang"), s"expected lang partition filter in:\n$plan")
-    // the pruned partition's directory is never listed in the scan
-    assert(!plan.contains("lang=de"), "pruned partition should not appear in the scan")
-  }
 
   test("writeBucketed: same-bucket join runs with zero Exchange") {
     import spark.implicits._
