@@ -9,7 +9,6 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 
-import graft.functions.ScalarJson.quote
 import graft.rules._
 import graft.rules.Model._
 
@@ -21,9 +20,10 @@ import graft.rules.Model._
   * 0 ok, 1 I/O or parse failure, 2 validation errors, 3 transform errors
   * (main.rs:152-165).
   *
-  * `transform` runs the same single Catalyst plan as the library API —
-  * the CLI is a thin shell over Engine/Preflight/DtoGenerator, exactly as
-  * the reference CLI wraps its library crate.
+  * `transform` and `preflight` are [[Engine.FileRun]], the run MCP's
+  * transform tool makes too, under [[ExprCompiler.RmError.recover]]: the
+  * CLI parses flags and writes the reference's replies, as the reference
+  * CLI wraps its library crate.
   */
 object Cli {
 
@@ -207,10 +207,6 @@ object Cli {
   private lazy val session: SparkSession =
     Sessions.local(4, "ERROR", sys.env.get("SPARK_GRAFT_MASTER"))
 
-  private def readInput(rule: RuleFile, inputPath: String) =
-    if (rule.input.format == "csv") sources.Sources.csv(session, inputPath, rule.input)
-    else sources.Sources.json(session, inputPath, rule.input.recordsPath)
-
   // -- subcommands --------------------------------------------------------
 
   private def runValidate(f: Flags, err: PrintStream): Int =
@@ -219,82 +215,58 @@ object Cli {
       case Right((_, yaml, _)) =>
         val errors = Validator.validate(yaml)
         if (errors.isEmpty) 0
-        else { emitValidationErrors(errors, errorFormat(f), err); 2 }
+        else { emit(errors, f, err); 2 }
     }
 
-  private def runPreflight(f: Flags, err: PrintStream): Int = {
-    loadRule(f, err) match {
-      case Left(code) => code
-      case Right((rule, _, rulesPath)) =>
-        val inputPath = f.opts.get("--input") match {
-          case Some(p) => p
-          case None => err.println("failed to read input: --input is required"); return 1
-        }
-        if (!Files.exists(Paths.get(inputPath))) {
-          err.println(s"failed to read input: $inputPath not found"); return 1
-        }
-        val context = loadContext(f, err) match {
-          case Left(code) => return code
-          case Right(v) => v
-        }
-        try {
-          val ws = Preflight.validate(rule, readInput(rule, inputPath), context,
-            nullAsMissing = rule.input.format != "csv",
-            ruleLoader = Engine.fileLoader(baseDir(rulesPath)))
-          emitTransformWarnings(ws, errorFormat(f), err)
-          0
-        } catch {
-          case e: ExprCompiler.RmError => emitTransformError(e, errorFormat(f), err); 3
-          case NonFatal(e) => err.println(s"preflight failed: ${e.getMessage}"); 3
-        }
+  private def runPreflight(f: Flags, err: PrintStream): Int =
+    running(f, err, "preflight", validate = false) { run =>
+      emit(run.preflight(), f, err)
+      0
     }
-  }
 
-  private def runTransform(f: Flags, out: PrintStream, err: PrintStream): Int = {
-    loadRule(f, err) match {
-      case Left(code) => code
-      case Right((rule, yaml, rulesPath)) =>
-        if (f.bools.contains("--validate")) {
-          val errors = Validator.validate(yaml)
-          if (errors.nonEmpty) { emitValidationErrors(errors, errorFormat(f), err); return 2 }
-        }
-        val inputPath = f.opts.get("--input") match {
-          case Some(p) => p
-          case None => err.println("failed to read input: --input is required"); return 1
-        }
-        if (!Files.exists(Paths.get(inputPath))) {
-          err.println(s"failed to read input: $inputPath not found"); return 1
-        }
-        val context = loadContext(f, err) match {
-          case Left(code) => return code
-          case Right(v) => v
-        }
-        if (f.bools.contains("--ndjson"))
-          return runTransformNdjson(rule, inputPath, context, rulesPath, f, out, err)
-        val (records, warnings) =
-          try {
-            val jw = Engine.toJsonRecordsWithWarnings(rule,
-              readInput(rule, inputPath), context,
-              nullAsMissing = rule.input.format != "csv",
-              ruleLoader = Engine.fileLoader(baseDir(rulesPath)))
-            (jw.output.collect().map(_.getString(0)),
-              Engine.collectWarnings(jw.warnings))
-          } catch {
-            case e: ExprCompiler.RmError => emitTransformError(e, errorFormat(f), err); return 3
-            case NonFatal(e) =>
-              ExprCompiler.RmError.fromThrowable(e) match {
-                case Some(rm) => emitTransformError(rm, errorFormat(f), err); return 3
-                case None => err.println(s"transform failed: ${e.getMessage}"); return 3
-              }
-          }
-        val wrapped = rule.finalizeSpec.exists(_.wrap.nonEmpty)
-        val text =
-          if (wrapped) records.headOption.getOrElse("{}") // wrap ⇒ one object
-          else records.mkString("[", ",", "]")
+  private def runTransform(f: Flags, out: PrintStream, err: PrintStream): Int =
+    running(f, err, "transform", validate = f.bools.contains("--validate")) { run =>
+      if (f.bools.contains("--ndjson")) writeNdjson(run, f, out, err)
+      else {
+        val batch = run.batch()
         // reference emission order (main.rs:288-305): warnings on stderr
         // BEFORE the output write
-        emitTransformWarnings(warnings, errorFormat(f), err)
-        writeOut(text, f, out, err)
+        emit(batch.warnings, f, err)
+        writeOut(batch.text, f, out, err)
+      }
+    }
+
+  /** The run of `-r` over `-i` with `-c` (validated first when `validate`),
+    * passed to `body` under [[ExprCompiler.RmError.recover]]: a rule error
+    * prints its diagnostic, any other failure `<what> failed: <message>`,
+    * both exit 3. A flag or file that fails before the run exits 1, and
+    * validation errors exit 2. */
+  private def running(f: Flags, err: PrintStream, what: String, validate: Boolean)(
+      body: Engine.FileRun => Int): Int = {
+    val (rule, yaml, rulesPath) = loadRule(f, err) match {
+      case Left(code) => return code
+      case Right(loaded) => loaded
+    }
+    if (validate) {
+      val errors = Validator.validate(yaml)
+      if (errors.nonEmpty) { emit(errors, f, err); return 2 }
+    }
+    val inputPath = f.opts.get("--input") match {
+      case Some(p) => p
+      case None => err.println("failed to read input: --input is required"); return 1
+    }
+    if (!Files.exists(Paths.get(inputPath))) {
+      err.println(s"failed to read input: $inputPath not found"); return 1
+    }
+    val context = loadContext(f, err) match {
+      case Left(code) => return code
+      case Right(v) => v
+    }
+    val run = Engine.FileRun(session, rule, inputPath, context, Engine.loaderBeside(rulesPath))
+    try ExprCompiler.RmError.recover(body(run))
+    catch {
+      case e: ExprCompiler.RmError => emit(Seq(e), f, err); 3
+      case NonFatal(e) => err.println(s"$what failed: ${e.getMessage}"); 3
     }
   }
 
@@ -302,15 +274,10 @@ object Cli {
     * stream shape — each item's warnings hit stderr before its output
     * line (dropped items emit warnings only), so json error format
     * produces one array PER warned item, not one combined array.
-    * finalize is rejected up front (transform.rs:168-173). */
-  private def runTransformNdjson(rule: RuleFile,
-      inputPath: String, context: JValue, rulesPath: Path,
-      f: Flags, out: PrintStream, err: PrintStream): Int = {
-    if (rule.finalizeSpec.nonEmpty) {
-      emitTransformError(ExprCompiler.RmError("InvalidInput", "",
-        "finalize is not supported in stream mode"), errorFormat(f), err)
-      return 3
-    }
+    * finalize is rejected before the output file opens. */
+  private def writeNdjson(run: Engine.FileRun, f: Flags, out: PrintStream,
+      err: PrintStream): Int = {
+    val items = run.ndjson()
     // each line is written the moment it is produced — the point of the
     // toLocalIterator stream shape (one sorted partition resident at a
     // time, never the whole output), and the reference's mid-stream-error
@@ -322,30 +289,15 @@ object Cli {
         Option(path.getParent).foreach(Files.createDirectories(_))
         Files.newBufferedWriter(path)
       } catch { case NonFatal(e) => err.println(s"failed to write output: $e"); return 1 }
-    def writeLine(line: String): Unit = fileWriter match {
-      case Some(w) => w.write(line); w.newLine()
-      case None => out.println(line)
-    }
     try {
-      val rows = Engine.ndjsonWithWarnings(rule, readInput(rule, inputPath),
-        context, nullAsMissing = rule.input.format != "csv",
-        ruleLoader = Engine.fileLoader(baseDir(rulesPath))).toLocalIterator()
-      import scala.jdk.CollectionConverters._
-      rows.asScala.foreach { r =>
-        val ws = r.getSeq[org.apache.spark.sql.Row](1)
-        emitTransformWarnings(
-          ws.map(w => Engine.Warning(w.getString(0), w.getString(1), w.getString(2))),
-          errorFormat(f), err)
-        if (!r.isNullAt(0)) writeLine(r.getString(0))
+      items.foreach { case (line, warnings) =>
+        emit(warnings, f, err)
+        line.foreach(l => fileWriter match {
+          case Some(w) => w.write(l); w.newLine()
+          case None => out.println(l)
+        })
       }
       0
-    } catch {
-      case e: ExprCompiler.RmError => emitTransformError(e, errorFormat(f), err); 3
-      case NonFatal(e) =>
-        ExprCompiler.RmError.fromThrowable(e) match {
-          case Some(rm) => emitTransformError(rm, errorFormat(f), err); 3
-          case None => err.println(s"transform failed: ${e.getMessage}"); 3
-        }
     } finally fileWriter.foreach(w =>
       try w.close() catch { case NonFatal(e) => err.println(s"failed to write output: $e") })
   }
@@ -374,52 +326,11 @@ object Cli {
       case None => out.println(text); 0
     }
 
-  private def baseDir(rulesPath: Path): String =
-    Option(rulesPath.getParent).map(_.toString).getOrElse(".")
-
-  // -- error emitters (main.rs:572-701) -----------------------------------
-
-  private def emitValidationErrors(errors: Seq[Validator.ValidationError],
-      format: String, err: PrintStream): Unit = format match {
-    case "json" =>
-      val items = errors.map { e =>
-        val path = if (e.path.nonEmpty) s""","path":${quote(e.path)}""" else ""
-        s"""{"type":"validation","code":${quote(e.code)},"message":${quote(e.text)}$path}"""
-      }
-      err.println(items.mkString("[", ",", "]"))
-    case _ =>
-      errors.foreach { e =>
-        val path = if (e.path.nonEmpty) s" path=${e.path}" else ""
-        err.println(s"E ${e.code}$path msg=\"${e.text}\"")
-      }
-  }
-
-  /** Reference emit_transform_warnings (rulemorph_cli main.rs:652-678):
-    * text `W <Kind> path=<p> msg="<m>"` per warning; json one array of
-    * {"type":"warning","kind","message","path"} — both to stderr, nothing
-    * when there are no warnings. */
-  private def emitTransformWarnings(ws: Seq[Engine.Warning], format: String,
-      err: PrintStream): Unit = if (ws.nonEmpty) format match {
-    case "json" =>
-      val items = ws.map { w =>
-        val path = if (w.path.nonEmpty) s""","path":${quote(w.path)}""" else ""
-        s"""{"type":"warning","kind":${quote(w.kind)},"message":${quote(w.message)}$path}"""
-      }
-      err.println(items.mkString("[", ",", "]"))
-    case _ =>
-      ws.foreach { w =>
-        val path = if (w.path.nonEmpty) s" path=${w.path}" else ""
-        err.println(s"W ${w.kind}$path msg=\"${w.message}\"")
-      }
-  }
-
-  private def emitTransformError(e: ExprCompiler.RmError, format: String,
-      err: PrintStream): Unit = format match {
-    case "json" =>
-      val path = if (e.path.nonEmpty) s""","path":${quote(e.path)}""" else ""
-      err.println(s"""[{"type":"transform","kind":${quote(e.kind)},"message":${quote(e.message)}$path}]""")
-    case _ =>
-      val path = if (e.path.nonEmpty) s" path=${e.path}" else ""
-      err.println(s"E ${e.kind}$path msg=\"${e.message}\"")
-  }
+  /** Diagnostics on stderr (main.rs:572-701): with `-e json` one array of
+    * their JSON objects, else one text line each; nothing when empty. */
+  private def emit(ds: Seq[Diagnostic], f: Flags, err: PrintStream): Unit =
+    if (ds.nonEmpty) {
+      if (errorFormat(f) == "json") err.println(ds.map(_.json).mkString("[", ",", "]"))
+      else ds.foreach(d => err.println(d.line))
+    }
 }

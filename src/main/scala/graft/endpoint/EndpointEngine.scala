@@ -134,7 +134,7 @@ class EndpointEngine(
       val t0 = System.nanoTime()
       var inputRun: Option[Engine.Traced] = None
       try {
-        val ran = transformValue(inputRule, current, configContext(None, None), baseDir,
+        val ran = transformValue(inputRule, current, configContext(None, None), inlineLoader,
           traceDetail)
         current = ran.value
         inputRun = ran.traced
@@ -326,23 +326,27 @@ class EndpointEngine(
     loadRule(rulePath) match {
       case NormalRule(rule) =>
         transformValue(rule, input, configContext(withParams, None),
-          Option(baseDir.resolve(rulePath).normalize().getParent).getOrElse(baseDir),
-          traced)
+          Engine.loaderBeside(baseDir.resolve(rulePath).normalize()), traced)
       case NetworkRule(spec) =>
         executeNetwork(spec, input, configContext(withParams, None), traced)
       case EndpointRule(_) =>
         throw EndpointFailure(EndpointError.invalid("step rule must be normal or network"))
     }
 
+  /** Branch paths of the rules written inline in the endpoint file (input
+    * mappings, a request's body_map) resolve against its directory. */
+  private val inlineLoader: Engine.RuleLoader = Engine.fileLoader(baseDir.toString)
+
   /** Run a normal rule over the running record (object = one record,
-    * array = the record set); finalize makes the output an array.
+    * array = the record set): one object in, one object out, unless
+    * finalize makes it the rule's output text ([[Engine.outputText]]).
     * `traced` runs it through [[Engine.toJsonRecordsTraced]]: the same
     * output from one job, plus the values its plan recorded. */
   private def transformValue(rule: RuleFile, value: JsonNode, context: JValue,
-      ruleBaseDir: Path, traced: Boolean = false): Ran = {
+      loader: Engine.RuleLoader, traced: Boolean = false): Ran = {
     val (json, run) =
-      try {
-        val (df, loader) = (recordDf(value), Engine.fileLoader(ruleBaseDir.toString))
+      try ExprCompiler.RmError.recover {
+        val df = recordDf(value)
         if (traced) {
           val run = Engine.toJsonRecordsTraced(rule, df, context, nullAsMissing = true, loader)
           (run.output, Some(run))
@@ -351,20 +355,12 @@ class EndpointEngine(
       } catch {
         case e: ExprCompiler.RmError =>
           throw EndpointFailure(EndpointError.transform(e.getMessage))
-        case NonFatal(e) =>
-          val rm = ExprCompiler.RmError.fromThrowable(e)
-          throw EndpointFailure(EndpointError.transform(
-            rm.map(_.getMessage).getOrElse(rootMessage(e))))
+        case NonFatal(e) => throw EndpointFailure(EndpointError.transform(rootMessage(e)))
       }
-    val outputs = json.map(mapper.readTree)
     val result =
-      if (rule.finalizeSpec.exists(_.wrap.nonEmpty))
-        outputs.headOption.getOrElse(mapper.createObjectNode())
-      else if (rule.finalizeSpec.isDefined || value.isArray) {
-        val arr = mapper.createArrayNode()
-        outputs.foreach(arr.add)
-        arr
-      } else outputs.headOption.getOrElse(mapper.createObjectNode())
+      if (rule.finalizeSpec.isEmpty && !value.isArray)
+        json.headOption.map(mapper.readTree).getOrElse(mapper.createObjectNode())
+      else mapper.readTree(Engine.outputText(rule, json))
     Ran(result, run)
   }
 
@@ -417,7 +413,7 @@ class EndpointEngine(
       loadRule(target) match {
         case NormalRule(rule) =>
           transformValue(rule, input, configContext(params, Some(err)),
-            Option(baseDir.resolve(target).normalize().getParent).getOrElse(baseDir)).value
+            Engine.loaderBeside(baseDir.resolve(target).normalize())).value
         case _ => throw EndpointFailure(EndpointError.invalid("catch rule must be normal"))
       }
     }
@@ -448,7 +444,7 @@ class EndpointEngine(
           evalJson(spec.body.get, input, context) // missing ⇒ no body
         else if (spec.bodyMap.nonEmpty) {
           val ran = transformValue(RuleFile(version = 2, mappings = spec.bodyMap), input,
-            context, baseDir, traced)
+            context, inlineLoader, traced)
           bodyMapRun = ran.traced
           Some(mapper.writeValueAsString(ran.value))
         } else spec.bodyRule.map { rp =>

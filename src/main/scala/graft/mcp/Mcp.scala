@@ -12,15 +12,20 @@ import org.apache.spark.sql.SparkSession
 import graft.rules._
 
 /** MCP (Model Context Protocol) stdio server with the reference server's
-  * surface (crates/rulemorph_mcp/src/main.rs): JSON-RPC 2.0 over stdin/
-  * stdout (one JSON object per line), methods initialize, tools/list,
-  * tools/call, resources, prompts, ping, shutdown, and the seven
-  * tools — transform, validate_rules, generate_dto, list_ops,
-  * analyze_input, generate_rules_from_base, generate_rules_from_dto.
+  * surface (crates/rulemorph_mcp/src/main.rs): a JSON-RPC 2.0 front-end
+  * over stdin/stdout (one JSON object per line, or Content-Length framed)
+  * with methods initialize, tools/list, tools/call, resources, prompts,
+  * ping, shutdown, and the seven tools — transform, validate_rules,
+  * generate_dto, list_ops, analyze_input, generate_rules_from_base,
+  * generate_rules_from_dto.
   *
-  * The transform tool runs the same single Catalyst plan as the library
-  * and CLI; everything else (analysis, candidate matching, DTO schema
-  * parsing, YAML synthesis) is driver-side JVM work on small samples.
+  * The transform tool is the CLI's transform run ([[Engine.FileRun]]: the
+  * batch shape, or the NDJSON shape for `ndjson: true`) under the same
+  * error recovery; this object only parses the tool's arguments and
+  * writes its reply, with the run's diagnostics as `meta.errors` and
+  * `meta.warnings`. Everything else (analysis, candidate matching, DTO
+  * schema parsing, YAML synthesis) is driver-side JVM work on small
+  * samples.
   */
 object Mcp {
 
@@ -147,6 +152,7 @@ object Mcp {
   }
 
   private def obj(): ObjectNode = mapper.createObjectNode()
+  private def typed(tpe: String): ObjectNode = obj().put("type", tpe)
   private def arr(items: JsonNode*): ArrayNode = {
     val a = mapper.createArrayNode(); items.foreach(a.add); a
   }
@@ -218,11 +224,10 @@ object Mcp {
       val t = obj()
       t.put("name", name)
       t.put("description", desc)
-      val schema = obj()
-      schema.put("type", "object")
+      val schema = typed("object")
       val props = obj()
       toolParams(name).foreach { case (p, tpe) =>
-        val prop = obj(); prop.put("type", tpe.split("\\|")(0)); props.set[JsonNode](p, prop)
+        props.set[JsonNode](p, typed(tpe.split("\\|")(0)))
       }
       schema.set[JsonNode]("properties", props)
       t.set[JsonNode]("inputSchema", schema)
@@ -256,9 +261,7 @@ object Mcp {
   }
 
   private def toolErrorResult(message: String, errors: Option[ArrayNode]): JsonNode = {
-    val o = obj()
-    val content = obj(); content.put("type", "text"); content.put("text", message)
-    o.set[JsonNode]("content", arr(content))
+    val o = contentResult(message)
     o.put("isError", true)
     errors.foreach { e =>
       val meta = obj(); meta.set[JsonNode]("errors", e); o.set[JsonNode]("meta", meta)
@@ -268,10 +271,13 @@ object Mcp {
 
   private def contentResult(textBody: String): ObjectNode = {
     val o = obj()
-    val content = obj(); content.put("type", "text"); content.put("text", textBody)
-    o.set[JsonNode]("content", arr(content))
+    o.set[JsonNode]("content", arr(typed("text").put("text", textBody)))
     o
   }
+
+  /** The diagnostics' own JSON objects ([[Diagnostic.json]]), as an array. */
+  private def diagnostics(ds: Seq[Diagnostic]): ArrayNode =
+    arr(ds.map(d => mapper.readTree(d.json)): _*)
 
   // -- argument helpers ---------------------------------------------------
 
@@ -299,7 +305,8 @@ object Mcp {
       case Some(_) => Left(InvalidParams(s"$key must be a non-negative integer"))
     }
 
-  private def loadRuleSource(args: JsonNode): Either[CallError, (RuleFileWithYaml, Option[String])] = {
+  /** rules_path | rules_text → the rules YAML, plus the path it was read from. */
+  private def loadRulesYaml(args: JsonNode): Either[CallError, (String, Option[String])] =
     for {
       rulesPath <- optString(args, "rules_path")
       rulesText <- optString(args, "rules_text")
@@ -315,19 +322,33 @@ object Mcp {
             Left(ToolError(s"failed to read rules: $e", None)) }
         case None => Right(rulesText.get)
       }
+    } yield (yaml, rulesPath)
+
+  private def loadRuleSource(args: JsonNode): Either[CallError, (RuleFileWithYaml, Option[String])] =
+    for {
+      loaded <- loadRulesYaml(args)
+      (yaml, rulesPath) = loaded
       rule <-
         try Right(YamlParser.parse(yaml))
         catch { case NonFatal(e) =>
           Left(ToolError(s"failed to parse rules: ${e.getMessage}", None)) }
     } yield (RuleFileWithYaml(rule, yaml), rulesPath)
-  }
 
   private case class RuleFileWithYaml(rule: Model.RuleFile, yaml: String)
 
-  /** input_path | input_text | input_json → raw text plus the parsed JSON
-    * node when the caller passed structured input. */
-  private def loadInputSource(args: JsonNode)
-      : Either[CallError, (String, Option[JsonNode], Option[String])] = {
+  /** The one of input_path, input_text and input_json the caller passed. */
+  private final case class InputSource(path: Option[String], text: Option[String],
+      json: Option[JsonNode]) {
+    /** The input as text: the file at `path` read, or the text or JSON given. */
+    def readText: Either[CallError, String] = path match {
+      case Some(p) =>
+        try Right(Files.readString(Paths.get(p)))
+        catch { case NonFatal(e) => Left(ToolError(s"failed to read input: $e", None)) }
+      case None => Right(text.orElse(json.map(mapper.writeValueAsString)).getOrElse(""))
+    }
+  }
+
+  private def loadInputSource(args: JsonNode): Either[CallError, InputSource] =
     for {
       inputPath <- optString(args, "input_path")
       inputText <- optString(args, "input_text")
@@ -336,14 +357,7 @@ object Mcp {
       _ <- if (n == 0) Left(InvalidParams("input_path, input_text, or input_json is required"))
         else if (n > 1) Left(InvalidParams("input_path, input_text, and input_json are mutually exclusive"))
         else Right(())
-      text <- inputPath match {
-        case Some(p) =>
-          try Right(Files.readString(Paths.get(p)))
-          catch { case NonFatal(e) => Left(ToolError(s"failed to read input: $e", None)) }
-        case None => Right(inputText.orElse(inputJson.map(mapper.writeValueAsString)).getOrElse(""))
-      }
-    } yield (text, inputJson, inputPath)
-  }
+    } yield InputSource(inputPath, inputText, inputJson)
 
   private def checkFormat(args: JsonNode, hasInputJson: Boolean)
       : Either[CallError, Option[String]] =
@@ -362,8 +376,13 @@ object Mcp {
       loaded <- loadRuleSource(args)
       (rwy, rulesPath) = loaded
       input <- loadInputSource(args)
-      (inputText, inputJson, _) = input
-      format <- checkFormat(args, inputJson.isDefined)
+      // the run reads input_path itself; an unreadable one fails here with
+      // the `failed to read input` reply
+      _ <- input.path.fold[Either[CallError, Unit]](Right(())) { p =>
+        try Right(Files.newInputStream(Paths.get(p)).close())
+        catch { case NonFatal(e) => Left(ToolError(s"failed to read input: $e", None)) }
+      }
+      format <- checkFormat(args, input.json.isDefined)
       ndjson <- optBool(args, "ndjson")
       validate <- optBool(args, "validate")
       outputPath <- optString(args, "output_path")
@@ -380,79 +399,50 @@ object Mcp {
           catch { case NonFatal(e) => Left(ToolError(s"failed to read context: $e", None)) }
         case None => Right(contextJson.map(graft.Cli.jsonToJValue).getOrElse(Model.JNull))
       }
-      result <- runTransform(rwy, rulesPath, inputText, inputJson.isDefined, format,
+      result <- runTransform(rwy, rulesPath, input, format,
         validate, ndjson, outputPath, maxBytes, previewRows, returnJson, context)
     } yield result
   }
 
   private def runTransform(rwy: RuleFileWithYaml, rulesPath: Option[String],
-      inputText: String, hasInputJson: Boolean, format: Option[String],
+      input: InputSource, format: Option[String],
       validate: Boolean, ndjson: Boolean, outputPath: Option[String],
       maxBytes: Option[Int], previewRows: Option[Int], returnJson: Boolean,
       context: Model.JValue): Either[CallError, JsonNode] = {
-    val fmt = if (hasInputJson) Some("json") else format
+    val fmt = if (input.json.isDefined) Some("json") else format
     val rule = fmt match {
       case Some(f) => rwy.rule.copy(input = rwy.rule.input.copy(format = f))
       case None => rwy.rule
     }
     if (validate) {
       val errors = Validator.validate(rwy.yaml)
-      if (errors.nonEmpty) {
-        val arr = mapper.createArrayNode()
-        errors.foreach { e =>
-          val o = obj(); o.put("type", "validation"); o.put("code", e.code)
-          o.put("message", e.text)
-          if (e.path.nonEmpty) o.put("path", e.path)
-          arr.add(o)
-        }
+      if (errors.nonEmpty)
         return Left(ToolError(
-          errors.map(e => s"E ${e.code} path=${e.path}").mkString("\n"), Some(arr)))
-      }
+          errors.map(e => s"E ${e.code} path=${e.path}").mkString("\n"), Some(diagnostics(errors))))
     }
-    // ndjson goes through the stream shape (reference transform_to_ndjson
-    // → transform_stream, main.rs:4576-4601), which refuses finalize
-    if (ndjson && rule.finalizeSpec.nonEmpty) {
-      val r = ExprCompiler.RmError("InvalidInput", "",
-        "finalize is not supported in stream mode")
-      val o = obj(); o.put("type", "transform"); o.put("kind", r.kind)
-      o.put("message", r.message); o.put("path", r.path)
-      return Left(ToolError(
-        s"E ${r.kind} path=${r.path} msg=\"${r.message}\"", Some(arr(o))))
-    }
-    // stage the sample through a temp file so the standard sources read it
-    val suffix = if (rule.input.format == "csv") ".csv" else ".json"
-    val tmp = Files.createTempFile("mcp_input", suffix)
+    // given text is staged through a temp file, since the CSV reader needs
+    // a path: Spark's csv(Dataset[String]) drops every line equal to the
+    // header, and the reference drops only the first
+    val staged = if (input.path.isDefined) None else Some(Files.createTempFile("mcp_input", null))
     try {
-      Files.writeString(tmp, inputText)
-      val df =
-        if (rule.input.format == "csv") graft.sources.Sources.csv(session, tmp.toString, rule.input)
-        else graft.sources.Sources.json(session, tmp.toString, rule.input.recordsPath)
-      val loader = rulesPath.map(p =>
-        Engine.fileLoader(Option(Paths.get(p).getParent).map(_.toString).getOrElse(".")))
-        .getOrElse(Engine.noLoader)
-      val (records, warnings) =
-        try {
-          val jw = Engine.toJsonRecordsWithWarnings(rule, df, context,
-            nullAsMissing = rule.input.format != "csv", loader)
-          (jw.output.collect().map(_.getString(0)),
-            Engine.collectWarnings(jw.warnings))
+      staged.foreach(Files.writeString(_, input.readText.getOrElse("")))
+      val run = Engine.FileRun(session, rule, input.path.getOrElse(staged.get.toString), context,
+        rulesPath.map(p => Engine.loaderBeside(Paths.get(p))).getOrElse(Engine.noLoader))
+      val (outputText, warnings) =
+        try ExprCompiler.RmError.recover {
+          if (ndjson) {
+            val items = run.ndjson().toVector
+            (items.flatMap(_._1).mkString("\n"), items.flatMap(_._2))
+          } else {
+            val batch = run.batch()
+            (batch.text, batch.warnings)
+          }
         } catch {
-          case NonFatal(e) =>
-            val rm = ExprCompiler.RmError.fromThrowable(e)
-            val msg = rm.map(r => s"E ${r.kind} path=${r.path} msg=\"${r.message}\"")
-              .getOrElse(s"transform failed: ${e.getMessage}")
-            val errs = rm.map { r =>
-              val o = obj(); o.put("type", "transform"); o.put("kind", r.kind)
-              o.put("message", r.message); o.put("path", r.path)
-              arr(o)
-            }
-            return Left(ToolError(msg, errs))
+          case e: ExprCompiler.RmError =>
+            return Left(ToolError(s"E ${e.kind} path=${e.path} msg=\"${e.message}\"",
+              Some(diagnostics(Seq(e)))))
+          case NonFatal(e) => return Left(ToolError(s"transform failed: ${e.getMessage}", None))
         }
-      val wrapped = rule.finalizeSpec.exists(_.wrap.nonEmpty)
-      val outputText =
-        if (ndjson) records.mkString("\n")
-        else if (wrapped) records.headOption.getOrElse("{}")
-        else records.mkString("[", ",", "]")
       outputPath.foreach { p =>
         val path = Paths.get(p)
         Option(path.getParent).foreach(Files.createDirectories(_))
@@ -474,16 +464,7 @@ object Mcp {
       val meta = obj()
       // meta.warnings mirrors the reference's warnings_to_json
       // (rulemorph_mcp main.rs:974-976, :4830-4845)
-      if (warnings.nonEmpty) {
-        val warr = mapper.createArrayNode()
-        warnings.foreach { w =>
-          val o = obj(); o.put("type", "warning"); o.put("kind", w.kind)
-          o.put("message", w.message)
-          if (w.path.nonEmpty) o.put("path", w.path)
-          warr.add(o)
-        }
-        meta.set[JsonNode]("warnings", warr)
-      }
+      if (warnings.nonEmpty) meta.set[JsonNode]("warnings", diagnostics(warnings))
       outputPath.foreach(meta.put("output_path", _))
       if (truncated) { meta.put("output_bytes", outputBytes); meta.put("truncated", true) }
       val exceeds = maxBytes.exists(outputBytes > _)
@@ -491,7 +472,7 @@ object Mcp {
         meta.set[JsonNode]("output", mapper.readTree(outputText))
       if (meta.size > 0) result.set[JsonNode]("meta", meta)
       Right(result)
-    } finally Files.deleteIfExists(tmp)
+    } finally staged.foreach(Files.deleteIfExists)
   }
 
   // -- validate_rules / generate_dto / list_ops ---------------------------
@@ -500,20 +481,7 @@ object Mcp {
     loadRuleSource(args).map { case (rwy, _) =>
       val errors = Validator.validate(rwy.yaml)
       if (errors.isEmpty) contentResult("ok")
-      else {
-        val result = contentResult("validation failed")
-        result.put("isError", true)
-        val errArr = mapper.createArrayNode()
-        errors.foreach { e =>
-          val o = obj(); o.put("type", "validation"); o.put("code", e.code)
-          o.put("message", e.text)
-          if (e.path.nonEmpty) o.put("path", e.path)
-          errArr.add(o)
-        }
-        val meta = obj(); meta.set[JsonNode]("errors", errArr)
-        result.set[JsonNode]("meta", meta)
-        result
-      }
+      else toolErrorResult("validation failed", Some(diagnostics(errors)))
     }
 
   private def generateDtoTool(args: JsonNode): Either[CallError, JsonNode] =
@@ -584,7 +552,8 @@ object Mcp {
   private def analyzeInputTool(args: JsonNode): Either[CallError, JsonNode] =
     for {
       input <- loadInputSource(args)
-      (inputText, inputJson, _) = input
+      inputText <- input.readText
+      inputJson = input.json
       format <- checkFormat(args, inputJson.isDefined)
       recordsPath <- optString(args, "records_path")
       maxPaths <- optInt(args, "max_paths")
@@ -605,25 +574,20 @@ object Mcp {
 
   // -- generate_rules_from_base -------------------------------------------
 
+  private def candidatesJson(candidates: Seq[InputAnalysis.Candidate]): ArrayNode =
+    arr(candidates.map { c =>
+      obj().put("source", c.source).put("score", c.score)
+        .put("reason", c.reason).put("confidence", c.confidence): JsonNode
+    }: _*)
+
   /** The base rules may legitimately hold target-only mappings (the whole
     * point is to fill their sources in), which the strict rule parser
     * rejects — so this tool works directly on the YAML tree. */
   private def loadYamlTree(args: JsonNode)
       : Either[CallError, (java.util.Map[String, Any], String)] =
     for {
-      rulesPath <- optString(args, "rules_path")
-      rulesText <- optString(args, "rules_text")
-      _ <- (rulesPath, rulesText) match {
-        case (None, None) => Left(InvalidParams("rules_path or rules_text is required"))
-        case (Some(_), Some(_)) => Left(InvalidParams("rules_path and rules_text are mutually exclusive"))
-        case _ => Right(())
-      }
-      yaml <- rulesPath match {
-        case Some(p) =>
-          try Right(Files.readString(Paths.get(p)))
-          catch { case NonFatal(e) => Left(ToolError(s"failed to read rules: $e", None)) }
-        case None => Right(rulesText.get)
-      }
+      loaded <- loadRulesYaml(args)
+      (yaml, _) = loaded
       root <-
         try yamlIo.load[Any](yaml) match {
           case m: java.util.Map[_, _] => Right(m.asInstanceOf[java.util.Map[String, Any]])
@@ -638,7 +602,8 @@ object Mcp {
       loaded <- loadYamlTree(args)
       (yamlRoot, _) = loaded
       input <- loadInputSource(args)
-      (inputText, inputJson, _) = input
+      inputText <- input.readText
+      inputJson = input.json
       format <- checkFormat(args, inputJson.isDefined)
       recordsPathArg <- optString(args, "records_path")
       maxCandidates <- optInt(args, "max_candidates").map(_.getOrElse(3))
@@ -687,13 +652,7 @@ object Mcp {
               Option(mm.get("type")).map(_.toString), inputPaths, maxCandidates)
             val entry = obj()
             entry.put("target", target)
-            val candArr = mapper.createArrayNode()
-            candidates.foreach { c =>
-              val o = obj(); o.put("source", c.source); o.put("score", c.score)
-              o.put("reason", c.reason); o.put("confidence", c.confidence)
-              candArr.add(o)
-            }
-            entry.set[JsonNode]("candidates", candArr)
+            entry.set[JsonNode]("candidates", candidatesJson(candidates))
             candidates.headOption match {
               case Some(best) =>
                 mapped += 1
@@ -736,7 +695,8 @@ object Mcp {
       dtoLanguage <- optString(args, "dto_language").flatMap(
         _.toRight(InvalidParams("dto_language is required")))
       input <- loadInputSource(args)
-      (inputText, inputJson, _) = input
+      inputText <- input.readText
+      inputJson = input.json
       format <- checkFormat(args, inputJson.isDefined)
       recordsPath <- optString(args, "records_path")
       maxCandidates <- optInt(args, "max_candidates").map(_.getOrElse(3))
@@ -763,13 +723,7 @@ object Mcp {
         g.valueType.foreach(m.put("type", _))
         val entry = obj()
         entry.put("target", g.target)
-        val candArr = mapper.createArrayNode()
-        candidates.foreach { c =>
-          val o = obj(); o.put("source", c.source); o.put("score", c.score)
-          o.put("reason", c.reason); o.put("confidence", c.confidence)
-          candArr.add(o)
-        }
-        entry.set[JsonNode]("candidates", candArr)
+        entry.set[JsonNode]("candidates", candidatesJson(candidates))
         candidates.headOption match {
           case Some(best) =>
             mapped += 1

@@ -1,10 +1,15 @@
 package graft.rules
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.file.Path
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.ScalarJson
+import graft.sources.Sources
 
 import Model._
 import ExprCompiler._
@@ -30,6 +35,11 @@ object Engine {
     * condition errors at eval time — the mapping or record is skipped and
     * the run continues (transform.rs:1041-1091). */
   final case class Warning(kind: String, path: String, message: String)
+      extends Diagnostic {
+    protected def diagnosticType: String = "warning"
+    protected def name: String = kind
+    protected def text: String = message
+  }
 
   /** Loads branch sub-rule files by the path string written in the rule. */
   type RuleLoader = String => RuleFile
@@ -41,6 +51,59 @@ object Engine {
     val path = java.nio.file.Paths.get(baseDir).resolve(p)
     YamlParser.parse(java.nio.file.Files.readString(path))
   }
+
+  /** [[fileLoader]] for the branch paths of the rule file at `rulePath`:
+    * they resolve against its directory. */
+  def loaderBeside(rulePath: Path): RuleLoader =
+    fileLoader(Option(rulePath.getParent).map(_.toString).getOrElse("."))
+
+  /** A rule's run over an input file, the one run behind the CLI's
+    * `transform` and `preflight` and MCP's `transform` tool. Each shape
+    * reads the file by the rule's input format when it runs: CSV cells
+    * ([[Sources.csv]]) or a JSON document ([[Sources.json]]). A SQL null
+    * reads as missing in JSON ingest, where it means an absent key, and
+    * stays null in a CSV cell. A rule error raised in Spark arrives in
+    * Spark's exception chain: callers run a shape under
+    * [[ExprCompiler.RmError.recover]]. */
+  final case class FileRun(spark: SparkSession, rule: RuleFile, inputPath: String,
+      context: JValue, ruleLoader: RuleLoader) {
+    private val nullAsMissing = rule.input.format != "csv"
+    private def input: DataFrame =
+      if (nullAsMissing) Sources.json(spark, inputPath, rule.input.recordsPath)
+      else Sources.csv(spark, inputPath, rule.input)
+
+    /** The rule compiled once with warnings; the records and then the
+      * warnings collected. */
+    def batch(): Batch = {
+      val jw = toJsonRecordsWithWarnings(rule, input, context, nullAsMissing, ruleLoader)
+      Batch(outputText(rule, jw.output.collect().toSeq.map(_.getString(0))),
+        collectWarnings(jw.warnings))
+    }
+
+    /** [[ndjsonWithWarnings]]'s items in record order, one partition at a
+      * time: each item's output line (none for a dropped record) and its
+      * own warnings. The plan is built, and finalize rejected, before the
+      * first item is asked for. */
+    def ndjson(): Iterator[(Option[String], Seq[Warning])] =
+      ndjsonWithWarnings(rule, input, context, nullAsMissing, ruleLoader)
+        .toLocalIterator().asScala.map { r =>
+          (Option(r.getString(0)), r.getSeq[Row](1).map(w =>
+            Warning(w.getString(0), w.getString(1), w.getString(2))))
+        }
+
+    /** [[Preflight.validate]] over the file. */
+    def preflight(): Seq[Warning] =
+      Preflight.validate(rule, input, context, nullAsMissing, ruleLoader)
+  }
+
+  /** A collected batch run: its output text and its warnings. */
+  final case class Batch(text: String, warnings: Seq[Warning])
+
+  /** The output text of a rule's records: under `finalize.wrap` the one
+    * object it makes (`{}` without one), else an array of the records. */
+  def outputText(rule: RuleFile, records: Seq[String]): String =
+    if (rule.finalizeSpec.exists(_.wrap.nonEmpty)) records.headOption.getOrElse("{}")
+    else records.mkString("[", ",", "]")
 
   /** Compiled rule: the filtered input (with a stable __order column), the
     * ordered map of top-level output fields as (value, missing) pairs, and
@@ -481,7 +544,7 @@ object Engine {
     val recorded = struct(cols.zipWithIndex.map { case (v, i) => v.as(s"v$i") }: _*)
     def sink(df: DataFrame): DataFrame = jsonSink(rule, c.copy(df = df.filter(c.keep)), context)
     val (out, first) =
-      if (graft.sources.Sources.isLocal(input))
+      if (Sources.isLocal(input))
         (sink(c.df).collect(), c.df.filter(col("__order") === 0L).select(recorded)
           .collect().headOption.map(_.getStruct(0)))
       else {
@@ -502,11 +565,13 @@ object Engine {
     * `output: None`) and `warnings` (the record's own warnings in
     * emission order). The CLI interleaves: each item's warnings go to
     * stderr before that item's output line (main.rs:350-377). Finalize
-    * is banned in stream mode; callers reject it before compiling. */
+    * is banned in stream mode (transform.rs:168-173): a rule that has one
+    * raises `InvalidInput` before compiling. */
   def ndjsonWithWarnings(rule: RuleFile, input: DataFrame,
       context: JValue = JNull, nullAsMissing: Boolean = false,
       ruleLoader: RuleLoader = noLoader): DataFrame = {
-    require(rule.finalizeSpec.isEmpty, "finalize is not supported in stream mode")
+    if (rule.finalizeSpec.nonEmpty)
+      throw RmError("InvalidInput", "", "finalize is not supported in stream mode")
     val c = compilePlan(rule, input, context, nullAsMissing, ruleLoader,
       collectWarnings = true)
     val recordJson = objectJson(c.out)
@@ -594,7 +659,9 @@ object Engine {
       fin.filter.foreach { cond =>
         // @item.index = 0-based output-record index (tv39): a window over
         // the stable __order — materialized as a column since window
-        // expressions cannot live inside a WHERE clause
+        // expressions cannot live inside a WHERE clause. A filter that does
+        // not read the index plans no window: Catalyst's ColumnPruning drops
+        // the unread column and its window (EngineSpec pins both cases)
         val w = org.apache.spark.sql.expressions.Window.orderBy(col("__order"))
         val withIdx = result.withColumn("__idx",
           row_number().over(w).cast(org.apache.spark.sql.types.LongType) - 1L)

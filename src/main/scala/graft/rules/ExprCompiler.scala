@@ -41,9 +41,13 @@ object ExprCompiler {
     * (TransformErrorKind + path, transform.rs error model). Statically
     * detectable errors throw this during compilation; data-dependent errors
     * raise it from the executor through a marker message that
-    * [[RmError.fromThrowable]] recovers. */
+    * [[RmError.recover]] re-raises. */
   final case class RmError(kind: String, path: String, message: String)
-    extends RuntimeException(s"$kind at $path: $message")
+      extends RuntimeException(s"$kind at $path: $message") with Diagnostic {
+    protected def diagnosticType: String = "transform"
+    protected def name: String = kind
+    protected def text: String = message
+  }
 
   object RmError {
     private val marker = "RMERR|"
@@ -51,6 +55,17 @@ object ExprCompiler {
     /** Column that raises a parseable engine error when evaluated. */
     def raiseCol(kind: String, path: String, message: String): Column =
       raise_error(lit(s"$marker$kind|$path|$message"))
+
+    /** Runs `body`, re-raising a rule error found in the chain of what it
+      * throws as that [[RmError]]; every other error passes unchanged.
+      * Every surface that runs a rule (CLI, MCP, preflight, the endpoint
+      * engine) runs it under this and keeps only its own reply. */
+    def recover[A](body: => A): A =
+      try body
+      catch {
+        case e: RmError => throw e
+        case scala.util.control.NonFatal(t) => throw fromThrowable(t).getOrElse(t)
+      }
 
     /** Recover a raised engine error from an executor exception chain. */
     def fromThrowable(t: Throwable): Option[RmError] = {

@@ -27,15 +27,11 @@ object Preflight {
     * reference's (kind, path) on the first failure. */
   def validate(rule: RuleFile, input: DataFrame, context: JValue = JNull,
       nullAsMissing: Boolean = false,
-      ruleLoader: Engine.RuleLoader = Engine.noLoader): Seq[Engine.Warning] = {
-    try {
+      ruleLoader: Engine.RuleLoader = Engine.noLoader): Seq[Engine.Warning] =
+    ExprCompiler.RmError.recover {
       val jw = Engine.toJsonRecordsWithWarnings(rule, input, context,
         nullAsMissing, ruleLoader)
       jw.output.foreach(_ => ())
       Engine.collectWarnings(jw.warnings)
-    } catch {
-      case e: ExprCompiler.RmError => throw e
-      case t: Throwable => throw ExprCompiler.RmError.fromThrowable(t).getOrElse(t)
     }
-  }
 }

@@ -14,8 +14,11 @@ object Validator {
   /** `message` carries the reference's human-readable wording
     * (validator.rs / v2_validator.rs emit sites) alongside the code —
     * CLI `-e json`/text and MCP meta errors surface it distinctly. */
-  case class ValidationError(code: String, path: String, message: String = "") {
+  case class ValidationError(code: String, path: String, message: String = "")
+      extends Diagnostic {
     def text: String = if (message.nonEmpty) message else code
+    protected def diagnosticType: String = "validation"
+    protected def name: String = code
   }
 
   /** Every op name the engine compiles (the op table, [[ExprCompiler.ops]],

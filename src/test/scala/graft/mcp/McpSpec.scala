@@ -78,11 +78,86 @@ class McpSpec extends AnyFunSuite {
     val e = result.path("meta").path("errors").get(0)
     assert(e.path("kind").asText == "InvalidInput")
     assert(e.path("message").asText == "finalize is not supported in stream mode")
+    assert(!e.has("path"), e) // an empty path is left out, as the CLI does
     // without ndjson the same rule applies finalize normally
     val ok = toolCall("transform",
       """{"rules_text": "version: 1\ninput:\n  format: json\n  json: {}\nmappings:\n  - target: \"id\"\n    source: \"id\"\nfinalize:\n  limit: 1\n",
         | "input_text": "[{\"id\": 1}, {\"id\": 2}]"}""".stripMargin)
     assert(ok.path("content").get(0).path("text").asText == """[{"id":1}]""")
+  }
+
+  test("transform tool: the CLI's output, warnings and errors for input_path and input_text") {
+    // the same rule and input through `Cli.run transform -e json` and the
+    // MCP tool: the same output text, the same warning objects, the same
+    // error object
+    def cli(args: String*): (Int, String, String) = {
+      val out = new java.io.ByteArrayOutputStream(); val err = new java.io.ByteArrayOutputStream()
+      val code = graft.Cli.run(Seq("transform", "-e", "json") ++ args,
+        new java.io.PrintStream(out, true), new java.io.PrintStream(err, true))
+      (code, out.toString, err.toString)
+    }
+    // the CLI's diagnostic arrays (one per NDJSON item) as one array
+    def cliDiagnostics(err: String): JsonNode = {
+      val all = mapper.createArrayNode()
+      err.linesIterator.filter(_.nonEmpty).foreach(l => mapper.readTree(l).elements.asScala.foreach(all.add))
+      all
+    }
+    def parity(rules: java.nio.file.Path, input: java.nio.file.Path, ndjson: Boolean): Unit = {
+      val (code, out, err) = cli(Seq("-r", rules.toString, "-i", input.toString) ++
+        (if (ndjson) Seq("--ndjson") else Nil): _*)
+      val flag = if (ndjson) ""","ndjson":true""" else ""
+      for (source <- Seq(
+          s""""input_path":${mapper.writeValueAsString(input.toString)}""",
+          s""""input_text":${mapper.writeValueAsString(Files.readString(input))}""")) {
+        val result = toolCall("transform",
+          s"""{"rules_path":${mapper.writeValueAsString(rules.toString)},$source$flag}""")
+        val label = s"$rules $source ndjson=$ndjson"
+        if (code == 0) {
+          assert(!result.path("isError").asBoolean(false), label)
+          assert(result.path("content").get(0).path("text").asText == out.stripSuffix("\n"), label)
+          val warnings = result.path("meta").path("warnings")
+          assert((if (warnings.isMissingNode) mapper.createArrayNode() else warnings) ==
+            cliDiagnostics(err), label)
+        } else {
+          assert(code == 3 && result.path("isError").asBoolean, s"$label: $code $err")
+          assert(result.path("meta").path("errors") == mapper.readTree(err), label)
+        }
+      }
+    }
+    val t01 = graft.rules.Fixtures.inRepo("t01_csv_basic")
+    parity(t01.path("rules.yaml"), t01.path("input.csv"), ndjson = false)
+    val t12 = graft.rules.Fixtures.inRepo("t12_ndjson_csv")
+    parity(t12.path("rules.yaml"), t12.path("input.csv"), ndjson = true)
+
+    val dir = Files.createTempDirectory("mcp_parity")
+    val warnRule = Files.writeString(dir.resolve("warn.yaml"),
+      """version: 1
+        |input: { format: json }
+        |mappings:
+        |  - target: "flag"
+        |    value: "big"
+        |    when:
+        |      op: ">"
+        |      args: [ { op: "int", args: [ { ref: "input.n" } ] }, 5 ]
+        |""".stripMargin)
+    val warnInput = Files.writeString(dir.resolve("warn.json"),
+      """[{"n": "abc"}, {"n": "10"}, {"n": "xyz"}]""")
+    parity(warnRule, warnInput, ndjson = false)
+    parity(warnRule, warnInput, ndjson = true)
+    val castRule = Files.writeString(dir.resolve("cast.yaml"),
+      """version: 1
+        |input: { format: json }
+        |mappings:
+        |  - target: "v"
+        |    source: "v"
+        |    type: int
+        |""".stripMargin)
+    val castInput = Files.writeString(dir.resolve("cast.json"), """[{"v": "1"}, {"v": "abc"}]""")
+    assert(cli("-r", castRule.toString, "-i", castInput.toString)._3.contains("TypeCastFailed"))
+    parity(castRule, castInput, ndjson = false)
+    // a rule error raised while compiling, not from a task
+    val p05 = graft.rules.Fixtures.inRepo("p05_preflight_finalize_sort_missing")
+    parity(p05.path("rules.yaml"), p05.path("input.json"), ndjson = false)
   }
 
   test("transform tool: missing input params is invalid params (-32602)") {

@@ -431,4 +431,19 @@ class EngineSpec extends AnyFunSuite {
         |""".stripMargin, input)
     assert(out.collect().map(_.getString(0)).toSeq == Seq("b"))
   }
+
+  test("finalize filter: an unread @item.index plans no Window, a read one exactly one") {
+    // the index is a partition-less row_number window; Catalyst's
+    // ColumnPruning drops it when the filter does not read it (tv38) and
+    // keeps the one window when it does (tv39)
+    def windows(name: String): Int = {
+      val c = Fixtures.inRepo(name)
+      val rule = YamlParser.parse(c.read("rules.yaml"))
+      val plan = Engine.toJsonRecords(rule, c.input(spark, rule), nullAsMissing = true)
+        .queryExecution.optimizedPlan
+      plan.collect { case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.size
+    }
+    assert(windows("tv38_finalize_filter_offset") == 0)
+    assert(windows("tv39_finalize_filter_index") == 1)
+  }
 }
