@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.ScalarJson
@@ -78,7 +78,7 @@ class EndpointEngine(
       case None => HttpResult(404, Seq("content-type" -> "application/json"),
         """{"error":"no endpoint matched"}""")
       case Some((endpoint, pathParams)) =>
-        val trace = new TraceBuilder(method, path, endpointYamlPath)
+        val trace = new TraceBuilder(method, path, endpointYamlPath, detail)
         val result = runEndpoint(endpoint, pathParams, query, headers, body, trace)
         traces.append(trace.finish(result.status, (System.nanoTime() - started) / 1000))
         result
@@ -108,14 +108,8 @@ class EndpointEngine(
         stepIndex: Option[Int], status: String, before: JsonNode,
         durationUs: Long)(enrich: ObjectNode => Unit): Unit =
       if (traceDetail) {
-        val n = mapper.createObjectNode()
-        n.put("id", id)
-        n.put("kind", "endpoint")
-        n.put("label", label)
-        n.put("status", status)
-        n.set[JsonNode]("input", before)
-        n.set[JsonNode]("output",
-          if (status == "ok") current.deepCopy[JsonNode]() else mapper.nullNode())
+        val n = detail.stageNode(id, "endpoint", label, status, before,
+          if (status == "ok") Some(current.deepCopy[JsonNode]()) else None, mapper.createArrayNode())
         n.put("duration_us", durationUs)
         val meta = mapper.createObjectNode()
         rulePath.foreach(p => meta.put("rule_ref", p))
@@ -379,18 +373,13 @@ class EndpointEngine(
     * the record; arrays (a finalized record set) are wrapped so bare
     * `@input` resolves to the whole array. */
   private def evalJson(e: Expr, value: JsonNode, ctx: JValue): Option[String] =
-    if (value.isArray) {
-      val obj = mapper.createObjectNode()
-      obj.set[JsonNode]("__v", value)
-      Engine.evalExprJson(e, recordDf(obj), ctx, prefix = Seq("__v"))
-    } else Engine.evalExprJson(e, recordDf(value), ctx)
+    if (value.isArray)
+      Engine.evalExprJson(e, recordDf(mapper.createObjectNode().set[JsonNode]("__v", value)), ctx,
+        Seq("__v"))
+    else Engine.evalExprJson(e, recordDf(value), ctx, Nil)
 
   private def evalCond(c: Cond, value: JsonNode, ctx: JValue): Boolean =
-    if (value.isArray) {
-      val obj = mapper.createObjectNode()
-      obj.set[JsonNode]("__v", value)
-      Engine.evalCondOnce(c, recordDf(obj), ctx, prefix = Seq("__v"))
-    } else Engine.evalCondOnce(c, recordDf(value), ctx)
+    evalJson(ECond(c), value, ctx).contains("true")
 
   // -- catch --------------------------------------------------------------
 
@@ -627,7 +616,8 @@ final class TraceStore(capacity: Int = 1000,
   }
 }
 
-private final class TraceBuilder(method: String, path: String, rulePath: String) {
+private final class TraceBuilder(method: String, path: String, rulePath: String,
+    shape: TraceDetail) {
   private val mapper = new ObjectMapper()
   private val node = mapper.createObjectNode()
   private val steps = mapper.createArrayNode()
@@ -636,7 +626,7 @@ private final class TraceBuilder(method: String, path: String, rulePath: String)
   node.put("status", "ok")
 
   // reference-shaped record detail (records[0].nodes), set by runEndpoint
-  private var detailTriple: Option[(JsonNode, JsonNode, JsonNode)] = None
+  private var detailTriple: Option[(JsonNode, JsonNode, ArrayNode)] = None
 
   def input(v: JsonNode): Unit = node.set[JsonNode]("input", v.deepCopy[JsonNode]())
 
@@ -653,7 +643,7 @@ private final class TraceBuilder(method: String, path: String, rulePath: String)
     node.set[JsonNode]("error", err)
   }
 
-  def detail(input: JsonNode, output: JsonNode, nodes: JsonNode): Unit =
+  def detail(input: JsonNode, output: JsonNode, nodes: ArrayNode): Unit =
     detailTriple = Some((input.deepCopy[JsonNode](),
       output.deepCopy[JsonNode](), nodes))
 
@@ -665,29 +655,9 @@ private final class TraceBuilder(method: String, path: String, rulePath: String)
     // records/rule/summary shape so the UI's record navigation, op chains,
     // and inspector views light up on real served traffic
     detailTriple.foreach { case (in, out, nodes) =>
-      val status = node.path("status").asText("ok")
-      val record = mapper.createObjectNode()
-      record.put("index", 0)
-      record.put("status", status)
-      record.put("duration_us", durationUs)
-      record.set[JsonNode]("input", in)
-      record.set[JsonNode]("output", out)
-      record.set[JsonNode]("nodes", nodes)
-      if (node.has("error")) record.set[JsonNode]("error", node.get("error").deepCopy[JsonNode]())
-      val records = mapper.createArrayNode(); records.add(record)
-      node.set[JsonNode]("records", records)
-      val rule = mapper.createObjectNode()
-      rule.put("type", "endpoint")
-      rule.put("name", s"$method $path")
-      rule.put("path", rulePath)
-      rule.put("version", 2)
-      node.set[JsonNode]("rule", rule)
-      val summary = mapper.createObjectNode()
-      summary.put("record_total", 1)
-      summary.put("record_success", if (status == "ok") 1 else 0)
-      summary.put("record_failed", if (status == "ok") 0 else 1)
-      summary.put("duration_us", durationUs)
-      node.set[JsonNode]("summary", summary)
+      shape.traceDoc(node, "endpoint", s"$method $path", rulePath, 2,
+        node.path("status").asText("ok"), in, Some(out), nodes, Some(durationUs),
+        Option(node.get("error")))
     }
     node
   }

@@ -47,8 +47,8 @@ private[endpoint] final class TraceDetail {
       output: Option[JsonNode], run: Engine.Traced, durationUs: Option[Long],
       scope: String = ""): ObjectNode = {
     val (nodes, status) = ruleNodes(rule, input, run, scope)
-    traceDoc("normal", name, refPath, rule.version, status, input, output, nodes,
-      durationUs)
+    traceDoc(childDoc(), "normal", name, refPath, rule.version, status, input, output, nodes,
+      durationUs, None)
   }
 
   /** Per-step nodes of one traced rule execution over its first record:
@@ -61,34 +61,18 @@ private[endpoint] final class TraceDetail {
     def value(key: String): Option[JsonNode] = recorded(run, scope + key)
     def flag(key: String): Option[Boolean] = value(key).map(_.asBoolean)
     val nodes = mapper.createArrayNode()
-    def stageNode(id: String, kind: String, label: String, status: String,
-        stageInput: JsonNode, output: Option[JsonNode], ops: => ArrayNode): ObjectNode = {
-      val node = mapper.createObjectNode()
-      node.put("id", id)
-      node.put("kind", kind)
-      node.put("label", label)
-      node.put("status", status)
-      node.set[JsonNode]("input", stageInput.deepCopy[JsonNode]())
-      node.set[JsonNode]("output", output.getOrElse(mapper.nullNode()))
-      if (status == "ok") {
-        val children = ops
-        if (children.size() > 0) node.set[JsonNode]("children", children)
-      }
-      nodes.add(node)
-      node
-    }
     // the engine applies TOP-LEVEL mappings before steps, so they surface
     // as their own node and their output is step 0's input
     val base = value("mappings")
     var alive = flag("mappings.kept").contains(true)
     if (rule.steps.isEmpty)
-      stageNode("step-0", "mapping", "mappings", if (alive) "ok" else "skipped",
-        input, base, mappingOps(rule.mappings, run, s"${scope}mappings", 0))
+      nodes.add(stageNode("step-0", "mapping", "mappings", if (alive) "ok" else "skipped",
+        input, base, mappingOps(rule.mappings, run, s"${scope}mappings", 0)))
     else if (rule.mappings.nonEmpty)
       // op ids use one-past-the-last step index — unique against every
       // real step's "op-<step>-<i>" children in the same record tree
-      stageNode("mappings", "mapping", "mappings", if (alive) "ok" else "skipped",
-        input, base, mappingOps(rule.mappings, run, s"${scope}mappings", rule.steps.length))
+      nodes.add(stageNode("mappings", "mapping", "mappings", if (alive) "ok" else "skipped",
+        input, base, mappingOps(rule.mappings, run, s"${scope}mappings", rule.steps.length)))
     var stepInput = base.getOrElse(mapper.createObjectNode())
     rule.steps.zipWithIndex.foreach { case (step, i) =>
       val at = s"steps[$i]"
@@ -109,6 +93,7 @@ private[endpoint] final class TraceDetail {
           case StepMappings(ms) => mappingOps(ms, run, s"$scope$at.mappings", i)
           case _ => mapper.createArrayNode()
         })
+      nodes.add(node)
       val meta = mapper.createObjectNode()
       if (ran) step match {
         case StepRecordWhen(_) =>
@@ -328,13 +313,39 @@ private[endpoint] final class TraceDetail {
     }
     node.set[JsonNode]("children", children)
     val nodes = mapper.createArrayNode(); nodes.add(node)
-    traceDoc("network", name, refPath, 2, "ok", input, output, nodes, Some(durationUs))
+    traceDoc(childDoc(), "network", name, refPath, 2, "ok", input, output, nodes,
+      Some(durationUs), None)
   }
 
-  /** A `child_trace` document: rule header, one record, summary. */
-  private def traceDoc(kind: String, name: String, refPath: String,
+  /** One stage node of a record's trace: its input and, unless skipped,
+    * its output and the op children it ran. */
+  def stageNode(id: String, kind: String, label: String, status: String,
+      stageInput: JsonNode, output: Option[JsonNode], ops: => ArrayNode): ObjectNode = {
+    val node = mapper.createObjectNode()
+    node.put("id", id)
+    node.put("kind", kind)
+    node.put("label", label)
+    node.put("status", status)
+    node.set[JsonNode]("input", stageInput.deepCopy[JsonNode]())
+    node.set[JsonNode]("output", output.getOrElse(mapper.nullNode()))
+    if (status == "ok") {
+      val children = ops
+      if (children.size() > 0) node.set[JsonNode]("children", children)
+    }
+    node
+  }
+
+  /** A fresh `child_trace` document, holding only its id. */
+  private def childDoc(): ObjectNode =
+    mapper.createObjectNode().put("trace_id", s"child-${traceSeq.incrementAndGet()}")
+
+  /** The trace document shape, set on `doc`: rule header, one record and
+    * the reference's summary block. A served request that failed carries
+    * its `error` on the record and counts it failed; a run that failed
+    * leaves no child trace, so no child record failed. */
+  def traceDoc(doc: ObjectNode, kind: String, name: String, refPath: String,
       version: Int, status: String, input: JsonNode, output: Option[JsonNode],
-      nodes: ArrayNode, durationUs: Option[Long]): ObjectNode = {
+      nodes: ArrayNode, durationUs: Option[Long], error: Option[JsonNode]): ObjectNode = {
     val record = mapper.createObjectNode()
     record.put("index", 0)
     record.put("status", status)
@@ -343,24 +354,22 @@ private[endpoint] final class TraceDetail {
     record.set[JsonNode]("output",
       output.map(_.deepCopy[JsonNode]()).getOrElse(mapper.nullNode()))
     record.set[JsonNode]("nodes", nodes)
-    val t = mapper.createObjectNode()
-    t.put("trace_id", s"child-${traceSeq.incrementAndGet()}")
+    error.foreach(e => record.set[JsonNode]("error", e.deepCopy[JsonNode]()))
     val ruleObj = mapper.createObjectNode()
     ruleObj.put("type", kind)
     ruleObj.put("name", name)
     ruleObj.put("path", refPath)
     ruleObj.put("version", version)
-    t.set[JsonNode]("rule", ruleObj)
+    doc.set[JsonNode]("rule", ruleObj)
     val records = mapper.createArrayNode(); records.add(record)
-    t.set[JsonNode]("records", records)
+    doc.set[JsonNode]("records", records)
     val summary = mapper.createObjectNode()
     summary.put("record_total", 1)
     summary.put("record_success", if (status == "ok") 1 else 0)
-    // a run that failed leaves no child trace, so no record here failed
-    summary.put("record_failed", 0)
+    summary.put("record_failed", if (error.isDefined) 1 else 0)
     durationUs.foreach(d => summary.put("duration_us", d))
-    t.set[JsonNode]("summary", summary)
-    t
+    doc.set[JsonNode]("summary", summary)
+    doc
   }
 
   // -- expr rendering (trace display form, v2-flavored) --------------------

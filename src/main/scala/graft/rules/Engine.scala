@@ -2,6 +2,7 @@ package graft.rules
 
 import java.nio.file.Path
 
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -27,6 +28,8 @@ import ExprCompiler._
   * offset/limit.
   */
 object Engine {
+
+  private type Fields = ListMap[String, CE]
 
   final case class EngineError(message: String) extends RuntimeException(message)
 
@@ -110,9 +113,8 @@ object Engine {
     * — in warnings mode — the per-row keep predicate (record-level drops
     * are NOT filtered out of `df` so dropped records' warnings survive)
     * plus the per-row warning struct columns in reference emission order. */
-  private case class Compiled(df: DataFrame,
-      out: scala.collection.immutable.ListMap[String, CE], env: Env,
-      keep: Column, warns: Seq[Column], rec: Recorder)
+  private case class Compiled(df: DataFrame, out: Fields, keep: Column, warns: Seq[Column],
+      rec: Recorder)
 
   /** Trace-mode side channel of [[compilePlan]]: (key, JSON text) columns
     * evaluated in the same plan as the output, keyed by the rule's error
@@ -159,7 +161,7 @@ object Engine {
     // explicit null (ExprCompiler.Absentable), so for such sources a SQL
     // null in a plain field is an ABSENT field, i.e. MISSING (the
     // reference's JSON ingest distinguishes them, transform.rs:902-941)
-    var env = Env(input = resolveFromSchema(input.schema.fields.toSeq, nullAsMissing),
+    val env = Env(input = resolveFromSchema(input.schema.fields.toSeq, nullAsMissing),
       context = context)
 
     var df = ordered
@@ -170,63 +172,42 @@ object Engine {
     var keepCol: Column = lit(true)
     val warns = scala.collection.mutable.ArrayBuffer.empty[Column]
     val rec = Recorder(trace)
+    // the warning of a record-level condition that raised, for a record
+    // still alive
+    val warnAlive: (Column, Column) => Unit = (raised, w) =>
+      if (collectWarnings) warns += when(keepCol && raised, w)
+    // a warning of mappings (or a branch side) that run where `alive`
+    // holds: a record dropped before them never evaluates them
+    def warnWhile(alive: Column): Column => Unit =
+      if (collectWarnings) w => warns += when(alive, w) else _ => ()
 
-    /** Apply a record-level keep predicate. A predicate that can raise is
-      * wrapped in [[CaughtCond]] so an eval error drops the record (plus a
-      * warning in warnings mode) instead of aborting the job —
-      * eval_record_when semantics (transform.rs:1065-1091). Pure
-      * predicates keep their plain, pushdown-friendly filter form —
-      * even in warnings mode, as long as no warning site precedes the
-      * drop: a record dropped by a pure predicate carries no warning of
-      * its own, so filtering it away is only wrong if it might already
-      * hold earlier warnings (then the drop must become keep-state so
-      * those warnings still reach the side channel). Trace mode keeps
-      * every drop as keep-state: a dropped record is traced too. */
-    def applyRecordPred(raw: Column, path: String): Unit =
-      if (CaughtCond.canRaise(raw)) {
-        val cc = CaughtCond(raw, path)
-        rec.caught(path, cc)
-        if (collectWarnings)
-          warns += when(keepCol && cc.getField("kind").isNotNull, caughtWarning(cc))
-        if (collectWarnings || trace) keepCol = keepCol && cc.getField("ok")
-        else df = df.filter(cc.getField("ok"))
-      } else {
-        rec.flag(path, coalesce(raw, lit(false)))
-        if (trace || (collectWarnings && warns.nonEmpty))
-          keepCol = keepCol && coalesce(raw, lit(false))
-        else df = df.filter(raw) // filter drops null = false; no coalesce (it blocks pushdown)
-      }
-
-    // record_when: false or error ⇒ record dropped (transform.rs:1065-1091)
-    rule.recordWhen.foreach { cond =>
-      val c = compileCond(cond, env.copy(errPath = "record_when"))
-      applyRecordPred(c.value && !c.missing, "record_when")
-    }
+    /** Drop the records where `pass` fails. Pure predicates filter in place
+      * and push into the scan — even in warnings mode, as long as no
+      * warning site precedes the drop: filtering a record away is only
+      * wrong if it might already hold warnings (then the drop becomes
+      * keep-state so those warnings still reach the side channel). Trace
+      * mode keeps every drop as keep-state: a dropped record is traced
+      * too. */
+    def drop(pass: Column): Unit =
+      if (trace || (collectWarnings && warns.nonEmpty)) keepCol = keepCol && coalesce(pass, lit(false))
+      else df = df.filter(pass) // filter drops null = false; no coalesce (it blocks pushdown)
 
     // ordered mappings + steps IN ORDER: later steps see @out as built so
     // far (mappings after a branch read the branch's merged fields —
     // transform.rs:431-531). No per-record interpretation anywhere.
     // pathPrefix threads the reference's error-path identity
     // (mappings[i] / steps[i].mappings[j]) into raised errors.
-    var out = scala.collection.immutable.ListMap.empty[String, CE]
-    def applyMappings(ms: Seq[Mapping], pathPrefix: String): Unit = {
-      // snapshot: a mapping's when-warning only fires on records still
-      // alive when the mapping runs (dropped records never evaluate it)
-      val alive = keepCol
-      for ((m, mi) <- ms.zipWithIndex) {
-        val onWarn: Column => Unit =
-          if (collectWarnings) w => warns += when(alive, w) else _ => ()
-        val mapped = compileMapping(m, env.copy(out = out), s"$pathPrefix[$mi]", onWarn, rec)
-        val key = m.target.head
-        val merged = if (m.target.size == 1) mapped
-          else nest(out.get(key), m.target.tail, mapped)
-        out = out + (key -> merged)
-      }
+    var out: Fields = ListMap.empty
+    // record_when: false or error ⇒ record dropped (transform.rs:1065-1091)
+    def recordWhen(cond: Cond, path: String): Unit = {
+      val c = compileCond(cond, env.copy(out = out, errPath = path))
+      drop(guarded(c.value && !c.missing, path, rec, warnAlive))
     }
-    applyMappings(rule.mappings, "mappings")
+    rule.recordWhen.foreach(recordWhen(_, "record_when"))
+    out = foldMappings(rule.mappings, out, env, "mappings", warnWhile(keepCol), rec)
     // each stage's cumulative @out and whether the record is still alive
     def recordStage(stage: String): Unit = {
-      rec.json(stage, objectJson(out))
+      rec.json(stage, objectJson(projected(out)))
       rec.flag(s"$stage.kept", keepCol)
     }
     recordStage("mappings")
@@ -234,11 +215,9 @@ object Engine {
     var replaced = false // branch return:true ends step processing
     for ((s, si) <- rule.steps.zipWithIndex if !replaced) {
       s match {
-        case StepMappings(ms) => applyMappings(ms, s"steps[$si].mappings")
-        case StepRecordWhen(cond) =>
-          val c = compileCond(cond,
-            env.copy(out = out, errPath = s"steps[$si].record_when"))
-          applyRecordPred(c.value && !c.missing, s"steps[$si].record_when")
+        case StepMappings(ms) =>
+          out = foldMappings(ms, out, env, s"steps[$si].mappings", warnWhile(keepCol), rec)
+        case StepRecordWhen(cond) => recordWhen(cond, s"steps[$si].record_when")
         case StepAsserts(asserts) =>
           // asserts are hard errors (AssertionFailed aborts the transform),
           // but only for records still alive — in warnings mode dead rows
@@ -254,52 +233,75 @@ object Engine {
                 .otherwise(lit(true)))
           }
         case StepBranch(cond, thenPath, elsePath, ret) =>
-          val c = compileCond(cond, env.copy(out = out, errPath = s"steps[$si].when"))
-          val rawKeep = coalesce(c.value, lit(false)) && !c.missing
           // a branch condition that errors routes to the else side plus a
           // warning, like any other when (eval_when, transform.rs:1041-1063)
-          val keep =
-            if (CaughtCond.canRaise(rawKeep)) {
-              val cc = CaughtCond(rawKeep, s"steps[$si].when")
-              rec.caught(s"steps[$si].when", cc)
-              if (collectWarnings)
-                warns += when(keepCol && cc.getField("kind").isNotNull, caughtWarning(cc))
-              cc.getField("ok")
-            } else { rec.flag(s"steps[$si].when", rawKeep); rawKeep }
+          val c = compileCond(cond, env.copy(out = out, errPath = s"steps[$si].when"))
+          val keep = guarded(coalesce(c.value, lit(false)) && !c.missing, s"steps[$si].when",
+            rec, warnAlive)
           val alive = keepCol
-          val onThenWarn: Column => Unit =
-            if (collectWarnings) w => warns += when(alive && keep, w) else _ => ()
-          val onElseWarn: Column => Unit =
-            if (collectWarnings) w => warns += when(alive && !keep, w) else _ => ()
-          val thenC = compileSubRule(ruleLoader(thenPath), out, env, onThenWarn,
-            rec, s"steps[$si].then/")
-          val elseC = elsePath.map(p => compileSubRule(ruleLoader(p), out, env, onElseWarn,
-            rec, s"steps[$si].else/"))
+          val thenC = compileSubRule(ruleLoader(thenPath), out, env,
+            warnWhile(alive && keep), rec, s"steps[$si].then/")
+          val elseC = elsePath.map(p => compileSubRule(ruleLoader(p), out, env,
+            warnWhile(alive && !keep), rec, s"steps[$si].else/"))
           // sub-rule record_when / per-record finalize drops apply only to
           // the records routed to that side
-          val rowKeep = when(keep, thenC.keep.getOrElse(lit(true)))
-            .otherwise(elseC.flatMap(_.keep).getOrElse(lit(true)))
-          // same pure-drop rule as applyRecordPred: only records that might
-          // already carry warnings (or are traced) must survive their drop
-          if (trace || (collectWarnings && warns.nonEmpty))
-            keepCol = keepCol && coalesce(rowKeep, lit(false))
-          else df = df.filter(rowKeep)
+          drop(when(keep, thenC.keep.getOrElse(lit(true)))
+            .otherwise(elseC.flatMap(_.keep).getOrElse(lit(true))))
           val branchOut = mergeBranchOutputs(keep, thenC.out,
-            elseC.map(_.out).getOrElse(scala.collection.immutable.ListMap.empty[String, CE]))
+            elseC.map(_.out).getOrElse(ListMap.empty))
           if (ret) { out = branchOut; replaced = true } // output replaced, stop
           else out = deepMergeOut(out, branchOut)
       }
       recordStage(s"steps[$si]")
     }
-    env = env.copy(out = out)
-    Compiled(df, out, env, keepCol, warns.toSeq, rec)
+    Compiled(df, out, keepCol, warns.toSeq, rec)
   }
+
+  /** A condition that decides a record's path at `path` (a `record_when`,
+    * a branch or mapping `when`), recorded for the trace. One that can
+    * raise is wrapped in [[CaughtCond]], so an eval error makes it false and
+    * hands `warn` whether it raised and its warning, instead of aborting the
+    * job (eval_when / eval_record_when, transform.rs:1041-1091). One that
+    * cannot is returned as it is, so a filter on it pushes into the scan. */
+  private def guarded(raw: Column, path: String, rec: Recorder,
+      warn: (Column, Column) => Unit): Column =
+    if (CaughtCond.canRaise(raw)) {
+      val cc = CaughtCond(raw, path)
+      rec.caught(path, cc)
+      warn(cc.getField("kind").isNotNull, caughtWarning(cc))
+      cc.getField("ok")
+    } else { rec.flag(path, coalesce(raw, lit(false))); raw }
+
+  /** `ms` compiled in order into `out`: each mapping sees the fields
+    * before it as `@out`, and a nested target merges into its top-level
+    * field. `pathPrefix` is the mappings' error path. */
+  private def foldMappings(ms: Seq[Mapping], out: Fields, env: Env, pathPrefix: String,
+      onWarn: Column => Unit, rec: Recorder): Fields =
+    ms.zipWithIndex.foldLeft(out) { case (acc, (m, mi)) =>
+      val mapped = compileMapping(m, env.copy(out = acc), s"$pathPrefix[$mi]", onWarn, rec)
+      val key = m.target.head
+      acc + (key -> (if (m.target.size == 1) mapped else nest(acc.get(key), m.target.tail, mapped)))
+    }
+
+  /** A record of the fields `out` as one struct. */
+  private def recordOf(out: Fields): CE = CE.present(struct(valueColumns(out): _*), recordType(out))
+
+  /** The type of a record of the fields `out`. */
+  private def recordType(out: Fields): StructType =
+    StructType(out.map { case (n, ce) => StructField(n, ce.tpe) }.toSeq)
+
+  /** The fields `out` as a sink projects them: each value null where it is
+    * missing. */
+  private def projected(out: Fields): Seq[(String, CE)] =
+    out.toSeq.map { case (n, ce) => n -> ce.copy(value = ce.valueOrNull) }
+
+  /** One column per field of `out`, named by it. */
+  private def valueColumns(out: Fields): Seq[Column] =
+    projected(out).map { case (n, ce) => ce.value.as(n) }
 
   /** A compiled branch sub-rule: its output fields plus an optional
     * per-record keep predicate (record_when / per-record finalize drops). */
-  private case class SubCompiled(
-      out: scala.collection.immutable.ListMap[String, CE],
-      keep: Option[Column])
+  private case class SubCompiled(out: Fields, keep: Option[Column])
 
   /** Compile a branch sub-rule: its @input is the CURRENT @out
     * (transform.rs:491-527). The sub-transform runs PER RECORD — its whole
@@ -307,49 +309,31 @@ object Engine {
     * finalize compile to per-record predicates and projections: filter/
     * record_when gate the record, offset≥1 or limit=0 drop it, sort is a
     * no-op, and wrap sees @out as the one-record array (tv40/tv41). */
-  private def compileSubRule(sub: RuleFile,
-      out: scala.collection.immutable.ListMap[String, CE], outer: Env,
+  private def compileSubRule(sub: RuleFile, out: Fields, outer: Env,
       onWarn: Column => Unit, outerRec: Recorder, scope: String): SubCompiled = {
     val ms = sub.mappings ++ sub.steps.collect { case StepMappings(m) => m }.flatten
     // the trace renders the sub-rule as compiled: steps other than
     // mappings are not part of a branch target's plan
     val rec = outerRec.subRule(scope, sub.copy(mappings = ms, steps = Nil))
     val subInput: Seq[String] => CE = {
-      case Seq() =>
-        CE.present(struct(out.map { case (n, ce) => ce.valueOrNull.as(n) }.toSeq: _*),
-          StructType(out.map { case (n, ce) => StructField(n, ce.tpe) }.toSeq))
+      case Seq() => recordOf(out)
       case Seq(head, rest @ _*) =>
         out.get(head).map(descend(_, rest)).getOrElse(CE.missing)
     }
     val subEnv = Env(input = subInput, context = outer.context)
     var keep: Option[Column] = sub.recordWhen.map { cond =>
       val c = compileCond(cond, subEnv.copy(errPath = "record_when"))
-      val raw = coalesce(c.value, lit(false)) && !c.missing
-      if (CaughtCond.canRaise(raw)) {
-        val cc = CaughtCond(raw, "record_when")
-        rec.caught("record_when", cc)
-        onWarn(when(cc.getField("kind").isNotNull, caughtWarning(cc)))
-        cc.getField("ok")
-      } else { rec.flag("record_when", raw); raw }
+      guarded(coalesce(c.value, lit(false)) && !c.missing, "record_when", rec,
+        (raised, w) => onWarn(when(raised, w)))
     }
     // a record the sub-rule's record_when dropped never evaluates the
     // sub-rule's mappings, so its when-warnings are gated on the keep
     val subAlive = keep.getOrElse(lit(true))
-    val onSubWarn: Column => Unit = w => onWarn(when(subAlive, w))
-    var subOut = scala.collection.immutable.ListMap.empty[String, CE]
-    for ((m, mi) <- ms.zipWithIndex) {
-      val mapped = compileMapping(m, subEnv.copy(out = subOut), s"mappings[$mi]",
-        onSubWarn, rec)
-      val key = m.target.head
-      val merged = if (m.target.size == 1) mapped
-        else nest(subOut.get(key), m.target.tail, mapped)
-      subOut = subOut + (key -> merged)
-    }
-    rec.json("mappings", objectJson(subOut))
+    var subOut = foldMappings(ms, ListMap.empty, subEnv, "mappings",
+      w => onWarn(when(subAlive, w)), rec)
+    rec.json("mappings", objectJson(projected(subOut)))
     sub.finalizeSpec.foreach { fin =>
-      val recType = StructType(subOut.map { case (n, ce) => StructField(n, ce.tpe) }.toSeq)
-      val rec = struct(subOut.map { case (n, ce) => ce.valueOrNull.as(n) }.toSeq: _*)
-      val itemCE = CE.present(rec, recType)
+      val itemCE = recordOf(subOut)
       val finEnv = Env(
         input = { path => path.headOption.flatMap(subOut.get)
           .map(ce => descend(ce, path.tail)).getOrElse(CE.missing) },
@@ -367,68 +351,48 @@ object Engine {
       }
       if (fin.wrap.nonEmpty) {
         val wenv = Env(input = _ => CE.missing, context = outer.context,
-          outWhole = Some(CE.present(array(rec), ArrayType(recType))))
-        subOut = scala.collection.immutable.ListMap(
-          fin.wrap.map { case (n, wv) => n -> compileWrap(wv, wenv) }: _*)
+          outWhole = Some(CE.present(array(itemCE.value), ArrayType(itemCE.tpe))))
+        subOut = ListMap(fin.wrap.map { case (n, wv) => n -> compileWrap(wv, wenv) }: _*)
       }
     }
     val kept = keep.getOrElse(lit(true))
     rec.flag("mappings.kept", kept)
-    rec.json("out", when(kept, objectJson(subOut)))
+    rec.json("out", when(kept, objectJson(projected(subOut))))
     SubCompiled(subOut, keep)
   }
 
   /** Route each record's branch outputs by the condition: a field produced
-    * only by one side is missing on the other side's records. */
-  private def mergeBranchOutputs(keep: Column,
-      thenOut: scala.collection.immutable.ListMap[String, CE],
-      elseOut: scala.collection.immutable.ListMap[String, CE])
-      : scala.collection.immutable.ListMap[String, CE] = {
-    val keys = (thenOut.keys ++ elseOut.keys.filterNot(thenOut.contains)).toSeq
-    scala.collection.immutable.ListMap(keys.map { k =>
-      val ce = (thenOut.get(k), elseOut.get(k)) match {
-        case (Some(t), Some(e)) =>
-          CE(when(keep, t.value).otherwise(e.value.cast(t.tpe)),
-            when(keep, t.missing).otherwise(e.missing), t.tpe)
-        case (Some(t), None) =>
-          CE(when(keep, t.value), !keep || t.missing, t.tpe)
-        case (None, Some(e)) =>
-          CE(when(!keep, e.value), keep || e.missing, e.tpe)
+    * only by one side is missing on the other side's records, and a field
+    * both sides produce is their per-record choice. */
+  private def mergeBranchOutputs(keep: Column, thenOut: Fields, elseOut: Fields): Fields =
+    ListMap((thenOut.keys ++ elseOut.keys.filterNot(thenOut.contains)).toSeq.map { k =>
+      k -> ((thenOut.get(k), elseOut.get(k)) match {
+        case (Some(t), Some(e)) => choose(Seq(keep -> t), e, when(keep, t.missing).otherwise(e.missing))
+        case (Some(t), None) => CE(when(keep, t.value), !keep || t.missing, t.tpe)
+        case (None, Some(e)) => CE(when(!keep, e.value), keep || e.missing, e.tpe)
         case (None, None) => CE.missing
-      }
-      k -> ce
+      })
     }: _*)
-  }
 
   /** deep-merge branch output into @out (return:false): produced fields
     * overwrite per row; fields the branch didn't produce (missing on that
-    * row) keep their existing value (merge semantics transform.rs:533-564). */
-  private def deepMergeOut(
-      out: scala.collection.immutable.ListMap[String, CE],
-      branch: scala.collection.immutable.ListMap[String, CE])
-      : scala.collection.immutable.ListMap[String, CE] = {
-    var result = out
-    for ((k, b) <- branch) {
-      val merged = out.get(k) match {
-        case Some(old) if old.tpe == b.tpe =>
-          CE(when(!b.missing, b.value).otherwise(old.value),
-            b.missing && old.missing, b.tpe)
-        case Some(old) if old.tpe.isInstanceOf[StructType] && b.tpe.isInstanceOf[StructType] =>
-          // differently-shaped objects DEEP-merge (tv42: branch adds
-          // user.name next to the existing user.id); rows where the branch
-          // produced nothing keep the old object in the merged shape: its
-          // merge with a missing one
-          val m = ObjectOps.mergeStructs(old, b, deep = true)
-          val kept = ObjectOps.mergeStructs(old,
-            CE(lit(null).cast(b.tpe), lit(true), b.tpe), deep = true)
-          CE(when(!b.missing, m.value).otherwise(kept.value),
-            b.missing && old.missing, m.tpe)
-        case _ => b // new field, or scalar type change ⇒ overwrite
+    * row) keep their existing value, whatever its type (merge semantics
+    * transform.rs:533-564). Differently-shaped objects DEEP-merge (tv42:
+    * branch adds user.name next to the existing user.id); rows where the
+    * branch produced nothing keep the old object in the merged shape: its
+    * merge with a missing one. */
+  private def deepMergeOut(out: Fields, branch: Fields): Fields =
+    out ++ branch.map { case (k, b) =>
+      k -> out.get(k).fold(b) { old =>
+        val (kept, merged) = (old.tpe, b.tpe) match {
+          case (ot: StructType, bt: StructType) if ot != bt =>
+            (ObjectOps.mergeStructs(old, CE(lit(null).cast(b.tpe), lit(true), b.tpe), deep = true),
+              ObjectOps.mergeStructs(old, b, deep = true))
+          case _ => (old, b)
+        }
+        choose(Seq(!b.missing -> merged), kept, b.missing && old.missing)
       }
-      result = result + (k -> merged)
     }
-    result
-  }
 
   /** Typed-DataFrame sink: one column per top-level target; missing
     * collapses to null at this typed boundary. With finalize.wrap the
@@ -438,39 +402,33 @@ object Engine {
   def transform(rule: RuleFile, input: DataFrame, context: JValue = JNull,
       nullAsMissing: Boolean = false, ruleLoader: RuleLoader = noLoader): DataFrame = {
     val c = compilePlan(rule, input, context, nullAsMissing, ruleLoader)
-    val outCols = c.out.map { case (name, ce) => ce.valueOrNull.as(name) }.toSeq
-    val projected = applyFinalize(rule, c.df.select(outCols :+ col("__order"): _*), c.out,
+    val projected = applyFinalize(rule, c.df.select(valueColumns(c.out) :+ col("__order"): _*), c.out,
       context).drop("__order")
     rule.finalizeSpec.filter(_.wrap.nonEmpty) match {
       case Some(fin) =>
         val (single, wenv) = wrapScope(projected, c.out, context)
-        val wrapped = fin.wrap.map { case (n, wv) => n -> compileWrap(wv, wenv) }
-        single.select(wrapped.map { case (n, ce) => ce.valueOrNull.as(n) }: _*)
+        single.select(valueColumns(ListMap(fin.wrap.map { case (n, wv) => n -> compileWrap(wv, wenv) }: _*)): _*)
       case None => projected
     }
   }
 
   /** Collect the (finalized, ordered) output into one row and build the
-    * wrap evaluation scope where bare @out is the whole record array. */
-  private def wrapScope(projected: DataFrame,
-      out: scala.collection.immutable.ListMap[String, CE], context: JValue)
-      : (DataFrame, Env) = {
-    val recType = StructType(out.map { case (n, ce) => StructField(n, ce.tpe) }.toSeq)
-    val rec = struct(out.keys.map(column).toSeq: _*)
+    * wrap evaluation scope where bare @out is the whole record array.
+    * `more` are further aggregates of the same row. */
+  private def wrapScope(projected: DataFrame, out: Fields, context: JValue,
+      more: Column*): (DataFrame, Env) = {
     // coalesce(1) after the finalize sort keeps global order in the single
     // partition, so collect_list preserves the output array order
-    val single = projected.coalesce(1).agg(collect_list(rec).as("__all"))
+    val single = projected.coalesce(1).agg(
+      collect_list(struct(out.keys.map(column).toSeq: _*)).as("__all"), more: _*)
     val wenv = Env(input = _ => CE.missing, context = context,
-      outWhole = Some(CE.present(col("__all"), ArrayType(recType))))
+      outWhole = Some(CE.present(col("__all"), ArrayType(recordType(out)))))
     (single, wenv)
   }
 
   private def compileWrap(w: WrapValue, env: Env): CE = w match {
     case WExpr(e) => ExprCompiler.compile(e, env)
-    case WObject(fields) =>
-      val cs = fields.map { case (n, v) => n -> compileWrap(v, env) }
-      CE(struct(cs.map { case (n, ce) => ce.valueOrNull.as(n) }: _*), lit(false),
-        StructType(cs.map { case (n, ce) => StructField(n, ce.tpe) }))
+    case WObject(fields) => recordOf(ListMap(fields.map { case (n, v) => n -> compileWrap(v, env) }: _*))
   }
 
   /** Reference-exact JSON sink: missing fields are ABSENT from the output
@@ -574,7 +532,7 @@ object Engine {
       throw RmError("InvalidInput", "", "finalize is not supported in stream mode")
     val c = compilePlan(rule, input, context, nullAsMissing, ruleLoader,
       collectWarnings = true)
-    val recordJson = objectJson(c.out)
+    val recordJson = objectJson(projected(c.out))
     val warnsCol =
       if (c.warns.isEmpty) array().cast(ArrayType(CaughtCond.warningSchema))
       else filter(array(c.warns: _*), w => w.isNotNull)
@@ -588,42 +546,27 @@ object Engine {
   }
 
   private def jsonSink(rule: RuleFile, c: Compiled, context: JValue): DataFrame = {
-    val cols = c.out.map { case (name, ce) => ce.valueOrNull.as(name) }.toSeq ++
-      c.out.map { case (name, ce) => ce.missing.as(s"__miss_$name") }.toSeq
+    val cols = valueColumns(c.out) ++ c.out.map { case (name, ce) => ce.missing.as(s"__miss_$name") }
     val projected = applyFinalize(rule, c.df.select(cols :+ col("__order"): _*), c.out, context)
-    val frags = c.out.toSeq.map { case (name, ce) =>
-      val enc = jsonFragment(column(name), ce.tpe)
-      when(column(s"__miss_$name"), lit(null).cast(StringType))
-        .otherwise(concat(lit(ScalarJson.quote(name) + ":"), enc))
-    }
-    val recordJson = concat(lit("{"), concat_ws(",", frags: _*), lit("}"))
+    val recordJson = objectJson(c.out.toSeq.map { case (name, ce) =>
+      name -> CE(column(name), column(s"__miss_$name"), ce.tpe)
+    })
     rule.finalizeSpec.filter(_.wrap.nonEmpty) match {
       case Some(fin) =>
         // wrap ⇒ output is ONE JSON object. A wrap value that is exactly
         // `@out` renders the pre-built per-record JSON (missing fields stay
         // absent inside records); other exprs evaluate over the value array.
-        val recType = StructType(c.out.map { case (n, ce) => StructField(n, ce.tpe) }.toSeq)
-        val rec = struct(c.out.keys.map(column).toSeq: _*)
-        val single = projected.coalesce(1).agg(
-          collect_list(rec).as("__all"), collect_list(recordJson).as("__alljson"))
-        val wenv = Env(input = _ => CE.missing, context = context,
-          outWhole = Some(CE.present(col("__all"), ArrayType(recType))))
+        val (single, wenv) = wrapScope(projected, c.out, context,
+          collect_list(recordJson).as("__alljson"))
         def wrapJson(w: WrapValue): Column = w match {
           case WExpr(ERef(ROut, Seq())) =>
             concat(lit("["), array_join(col("__alljson"), ","), lit("]"))
           case WExpr(e) =>
             val ce = ExprCompiler.compile(e, wenv)
             jsonFragment(ce.valueOrNull, ce.tpe)
-          case WObject(fields) =>
-            concat(lit("{"), concat_ws(",", fields.map { case (n, v) =>
-              concat(lit(ScalarJson.quote(n) + ":"), wrapJson(v))
-            }: _*), lit("}"))
+          case WObject(fields) => braced(fields.map { case (n, v) => member(n, wrapJson(v)) })
         }
-        val objFrags = fin.wrap.map { case (n, wv) =>
-          concat(lit(ScalarJson.quote(n) + ":"), wrapJson(wv))
-        }
-        single.select(
-          concat(lit("{"), concat_ws(",", objFrags: _*), lit("}")).as("json"))
+        single.select(wrapJson(WObject(fin.wrap)).as("json"))
       case None => projected.select(recordJson.as("json"))
     }
   }
@@ -632,13 +575,21 @@ object Engine {
     * reads a dotted name (t08 escaped keys) as a nested field path. */
   private def column(name: String): Column = col(s"`${name.replace("`", "``")}`")
 
-  /** One JSON object from (field, value) pairs: missing fields are absent. */
-  private def objectJson(out: scala.collection.immutable.ListMap[String, CE]): Column =
-    concat(lit("{"), concat_ws(",", out.toSeq.map { case (name, ce) =>
-      when(ce.missing, lit(null).cast(StringType))
-        .otherwise(concat(lit(ScalarJson.quote(name) + ":"),
-          jsonFragment(ce.valueOrNull, ce.tpe)))
-    }: _*), lit("}"))
+  /** The one JSON object of a record's fields, in order: a field whose
+    * missing flag holds is absent. Each value is encoded as it is given, so
+    * callers pass the value a sink projects: [[projected]], or the
+    * projected columns themselves. */
+  private def objectJson(fields: Seq[(String, CE)]): Column =
+    braced(fields.map { case (name, ce) =>
+      when(ce.missing, lit(null).cast(StringType)).otherwise(member(name, jsonFragment(ce.value, ce.tpe)))
+    })
+
+  /** A JSON object of `"key":value` member texts; a null member is left out. */
+  private def braced(members: Seq[Column]): Column =
+    concat(lit("{"), concat_ws(",", members: _*), lit("}"))
+
+  private def member(name: String, json: Column): Column =
+    concat(lit(ScalarJson.quote(name) + ":"), json)
 
   /** The (kind, path, message) warning of a [[CaughtCond]] outcome. */
   private def caughtWarning(cc: Column): Column =
@@ -646,13 +597,13 @@ object Engine {
       cc.getField("message").as("message"))
 
   // finalize (transform.rs:603-714): filter → stable sort → offset → limit
-  private def applyFinalize(rule: RuleFile, dfIn: DataFrame,
-      out: scala.collection.immutable.ListMap[String, CE], context: JValue): DataFrame = {
+  private def applyFinalize(rule: RuleFile, dfIn: DataFrame, out: Fields,
+      context: JValue): DataFrame = {
     var result = dfIn
     rule.finalizeSpec.foreach { fin =>
       // the output fields with their compiled types (the frame's own schema
       // does not keep the tags of Absentable fields inside values)
-      val outSchema = out.toSeq.map { case (n, ce) => StructField(n, ce.tpe) }
+      val outSchema = recordType(out).fields.toSeq
       // @item in finalize = the whole output record (docs/rules_spec: the
       // finalize filter runs over each output record)
       val itemCE = resolveFromSchema(outSchema)(Nil)
@@ -708,27 +659,16 @@ object Engine {
     // when gate FIRST (eval_when, transform.rs:1041-1063): a skipped mapping
     // never evaluates default/required — the required-error below must be
     // guarded by `keep` or skipped records would raise it
-    val keep: Column = m.when match {
-      case Some(cond) =>
-        val c = compileCond(cond, env.copy(errPath = s"$pathBase.when"))
-        val raw = coalesce(c.value, lit(false)) && !c.missing
-        if (CaughtCond.canRaise(raw)) {
-          val cc = CaughtCond(raw, s"$pathBase.when")
-          rec.caught(s"$pathBase.when", cc)
-          onWarn(when(cc.getField("kind").isNotNull, caughtWarning(cc)))
-          cc.getField("ok")
-        } else { rec.flag(s"$pathBase.when", raw); raw }
-      case None => lit(true)
+    val keep: Column = m.when.fold(lit(true)) { cond =>
+      val c = compileCond(cond, env.copy(errPath = s"$pathBase.when"))
+      guarded(coalesce(c.value, lit(false)) && !c.missing, s"$pathBase.when", rec,
+        (raised, w) => onWarn(when(raised, w)))
     }
 
     // default: missing → default value; required+missing/null → error
     // (MissingRequired at the mapping path, transform.rs:1007-1030)
     val withDefault = m.default match {
-      case Some(d) =>
-        val dc = constant(d)
-        val tpe = if (base.tpe == NullType) dc.tpe else base.tpe
-        CE(when(base.missing, dc.value.cast(tpe)).otherwise(base.value.cast(tpe)),
-          lit(false), tpe)
+      case Some(d) => choose(Seq(base.missing -> constant(d)), base, missing = lit(false))
       case None if m.required =>
         // a statically-missing required ref has NullType, whose JSON
         // encoding is a constant — widen so the raising column is actually
@@ -796,42 +736,21 @@ object Engine {
     }
   }
 
-  /** A missing flag that is the literal `false`: the value is always there. */
-  private def isStaticFalse(c: Column): Boolean =
-    org.apache.spark.sql.rmbridge.Bridge.isLiteral(c, false)
-
-  /** Single-record expression evaluation for the serving edge (endpoint
-    * reply status/body, network url/body): the SAME compiled Column the
-    * batch plans use, driven over a one-row DataFrame. Returns the JSON
-    * encoding of the value, or None when the expression is missing. */
-  /** `prefix` re-roots `@input` below a wrapper column — the serving edge
-    * wraps non-object pipeline values (arrays) as {"__v": value} so the
-    * same schema-driven resolver applies. */
-  private def singleRecordEnv(input: DataFrame, context: JValue,
-      prefix: Seq[String]): ExprCompiler.Env = {
-    val base = resolveFromSchema(input.schema.fields.toSeq)
-    ExprCompiler.Env(
-      input = if (prefix.isEmpty) base else (path => base(prefix ++ path)),
-      context = context)
-  }
-
+  /** Single-record evaluation for the serving edge (endpoint reply
+    * status/body, network url/body, step `when`): the SAME compiled Column
+    * the batch plans use, driven over a one-row DataFrame. `prefix`
+    * re-roots `@input` below a wrapper column — the serving edge wraps
+    * non-object pipeline values (arrays) as {"__v": value} so the same
+    * schema-driven resolver applies. Returns the JSON encoding of the
+    * value, or None when the expression is missing. */
   def evalExprJson(e: Expr, input: DataFrame, context: JValue,
-      prefix: Seq[String] = Nil): Option[String] = {
-    val ce = ExprCompiler.compile(e, singleRecordEnv(input, context, prefix))
+      prefix: Seq[String]): Option[String] = {
+    val fields = resolveFromSchema(input.schema.fields.toSeq)
+    val ce = ExprCompiler.compile(e, Env(input = path => fields(prefix ++ path), context = context))
     val row = input.limit(1)
-      .select(ExprCompiler.jsonFragment(ce.valueOrNull, ce.tpe).as("v"),
-        coalesce(ce.missing, lit(false)).as("m"))
+      .select(jsonFragment(ce.valueOrNull, ce.tpe).as("v"), coalesce(ce.missing, lit(false)).as("m"))
       .collect()(0)
     if (row.getBoolean(1) || row.isNullAt(0)) None else Some(row.getString(0))
-  }
-
-  /** Single-record condition evaluation (endpoint step `when`). */
-  def evalCondOnce(c: Cond, input: DataFrame, context: JValue,
-      prefix: Seq[String] = Nil): Boolean = {
-    val ce = compileCond(c, singleRecordEnv(input, context, prefix))
-    val row = input.limit(1)
-      .select((coalesce(ce.value, lit(false)) && !ce.missing).as("v")).collect()(0)
-    row.getBoolean(0)
   }
 
   /** Resolver over a record's ordered top-level fields; deeper path

@@ -215,7 +215,9 @@ object ExprCompiler {
     * order, and a key that some object lacks or holds as null is an
     * [[Absentable]] field; arrays type their elements together; an integer
     * beyond the long range is a double; values of mixed kinds, all-null
-    * and no values are VariantType. */
+    * and no values are VariantType. A compiled value chosen per record
+    * takes its type by the same rule, but for an integer beside a decimal
+    * ([[commonType]]). */
   def infer(nodes: Seq[JsonNode]): DataType = {
     val nn = nodes.filter(n => n != null && !n.isNull)
     if (nn.isEmpty) VariantType
@@ -294,6 +296,42 @@ object ExprCompiler {
     case VariantType => coalesce(ce.valueOrNull, parse_json(lit("null")))
     case _ => parse_json(jsonFragment(ce.valueOrNull, ce.tpe))
   }
+
+  // ---- per-record choices ----
+
+  /** The one type of a per-record choice among `ces` — an `if`, a
+    * `coalesce`, a mapping `default`, the two sides of a branch, a branch's
+    * field over the one already in `@out` — by [[infer]]'s rule for the
+    * values one JSON position holds, but for numbers: equal types stay;
+    * NullType takes the others' type; integers widen to a long; any other
+    * mix, an integer beside a decimal included, is VariantType, each value
+    * lifted by [[toVariant]], so each record keeps its own number (a double
+    * would write the integer 3 as `3.0`). */
+  def commonType(ces: Seq[CE]): DataType = ces.map(_.tpe).filter(_ != NullType).distinct match {
+    case Seq() => NullType
+    case Seq(t) => t
+    case ts if ts.forall(isIntegral) => LongType
+    case _ => VariantType
+  }
+
+  /** A per-record choice: the first of `cases` whose condition holds,
+    * else `otherwise`, in the [[commonType]] of the values it can take
+    * (a case whose condition is the literal `false` is dropped), with the
+    * missing flag `missing`. A value of that type, or of none, is taken as
+    * it is. */
+  def choose(cases: Seq[(Column, CE)], otherwise: CE, missing: Column): CE = {
+    val live = cases.filterNot { case (c, _) => isStaticFalse(c) }
+    val t = commonType(live.map(_._2) :+ otherwise)
+    def as(ce: CE): Column =
+      if (ce.tpe == t || ce.tpe == NullType) ce.value
+      else if (t == VariantType) toVariant(ce) else ce.value.cast(t)
+    CE(live.foldRight(as(otherwise)) { case ((c, ce), rest) => when(c, as(ce)).otherwise(rest) },
+      missing, t)
+  }
+
+  /** Whether `c` is the literal `false`: a missing flag whose value is
+    * always there, or a choice's case that never holds. */
+  private[rules] def isStaticFalse(c: Column): Boolean = Bridge.isLiteral(c, false)
 
   // ---- reference-faithful scalar coercions ----
 
@@ -448,11 +486,8 @@ object ExprCompiler {
           val c = compileCond(cond, scoped)
           val t = thenP.map(compile(_, scoped)).getOrElse(cur)
           val f = elseP.map(compile(_, scoped)).getOrElse(cur)
-          val tpe = if (t.tpe == NullType) f.tpe else t.tpe
-          curOpt = Some(CE(
-            when(c.value && !c.missing, t.value).otherwise(f.value),
-            when(c.value && !c.missing, t.missing).otherwise(f.missing),
-            tpe))
+          val k = c.value && !c.missing
+          curOpt = Some(choose(Seq(k -> t), f, when(k, t.missing).otherwise(f.missing)))
         case SMap(body) =>
           curOpt = Some(mapArray(cur, body, e))
         case SValue(expr) =>
@@ -511,40 +546,77 @@ object ExprCompiler {
   }
 
   /** v2-condition equality: strict JSON equality, with missing==missing and
-    * missing==null both true (v2_eval.rs:1140-1147). */
+    * missing==null both true (v2_eval.rs:1140-1147). A variant compares by
+    * each record's own kind ([[byKind]]). */
   private def strictEq(l: CE, r: CE): Column = {
-    val lNone = l.missing || l.value.isNull
-    val rNone = r.missing || r.value.isNull
+    val lNone = l.missing || isJsonNull(l)
+    val rNone = r.missing || isJsonNull(r)
+    val (lk, rk) = (byKind(l, r.tpe), byKind(r, l.tpe))
     val bothVals =
-      if (l.tpe == r.tpe) l.value === r.value
-      else if (isNum(l.tpe) && isNum(r.tpe)) l.value.cast(DoubleType) === r.value.cast(DoubleType)
+      if (lk.tpe == rk.tpe) lk.value === rk.value
+      else if (isNum(lk.tpe) && isNum(rk.tpe)) lk.value.cast(DoubleType) === rk.value.cast(DoubleType)
       else lit(false)
     (lNone && rNone) || (!lNone && !rNone && coalesce(bothVals, lit(false)))
   }
 
   /** v2-condition ordering: numeric-first (numbers or numeric strings),
-    * else lexicographic string compare (v2_eval.rs:1150-1179). */
+    * else lexicographic string compare (v2_eval.rs:1150-1179). A variant
+    * takes each record's own kind: two strings compare as text, numbers
+    * and strings beside a number as numbers, anything else as text. */
   private def orderCmp(l: CE, r: CE, op: (Column, Column) => Column): Column = {
     val ok = !l.missing && !r.missing && l.value.isNotNull && r.value.isNotNull
+    val asText = op(rmToString(l).value, rmToString(r).value)
     val cmp =
       if (isNum(l.tpe) && isNum(r.tpe))
         op(l.value.cast(DoubleType), r.value.cast(DoubleType))
       else if (l.tpe == StringType && r.tpe == StringType) op(l.value, r.value)
       else if ((isNum(l.tpe) && r.tpe == StringType) || (l.tpe == StringType && isNum(r.tpe)))
         op(l.value.cast(DoubleType), r.value.cast(DoubleType))
-      else op(rmToString(l).value, rmToString(r).value)
+      else if (l.tpe == VariantType || r.tpe == VariantType) {
+        def number(e: CE): Column =
+          if (e.tpe == VariantType) try_variant_get(e.value, "$", "double") else e.value.try_cast(DoubleType)
+        val (lNum, rNum) = (isKind(l, DoubleType), isKind(r, DoubleType))
+        val (lStr, rStr) = (isKind(l, StringType), isKind(r, StringType))
+        when((lNum && (rNum || rStr)) || (lStr && rNum), op(number(l), number(r))).otherwise(asText)
+      } else asText
     // no coalesce around cmp: `ok` already guards the null operands, and a
     // coalesce wrapper would block parquet predicate pushdown of the
     // comparison (observed: only IsNotNull reached PushedFilters)
     ok && cmp
   }
 
+  /** A variant operand `e` of a condition beside an operand of type
+    * `other`, read by each record's own JSON kind: as a string, a boolean
+    * or a double where it holds one of `other`'s kind, else SQL null (a
+    * value of another kind is unequal). Any other operand is taken as it
+    * is. */
+  private def byKind(e: CE, other: DataType): CE = other match {
+    case _ if e.tpe != VariantType => e
+    case StringType | BooleanType =>
+      CE(when(isKind(e, other), try_variant_get(e.value, "$", other.sql)), e.missing, other)
+    case t if isNum(t) => CE(when(isKind(e, t), try_variant_get(e.value, "$", "double")), e.missing, DoubleType)
+    case _ => e
+  }
+
+  /** Whether `e` holds a value of `t`'s JSON kind — a string, a boolean,
+    * or a number for a numeric `t` — in each record: by its type, or, for a
+    * variant, by the kind each record's value holds. */
+  private def isKind(e: CE, t: DataType): Column =
+    if (e.tpe != VariantType) lit(e.tpe == t || (isNum(e.tpe) && isNum(t)))
+    else schema_of_variant(e.value).rlike(t match {
+      case StringType => "^STRING$"
+      case BooleanType => "^BOOLEAN$"
+      case _ => "^(TINYINT|SMALLINT|INT|BIGINT|FLOAT|DOUBLE|DECIMAL)"
+    })
+
   /** Whether a predicate's result holds: present and true. */
   private[rules] def holds(r: CE): Column =
     !r.missing && coalesce(r.value.cast(BooleanType), lit(false))
 
-  private def isNum(t: DataType): Boolean = t match {
-    case LongType | IntegerType | DoubleType | FloatType | ShortType | ByteType => true
+  private def isNum(t: DataType): Boolean = isIntegral(t) || t == DoubleType || t == FloatType
+
+  private def isIntegral(t: DataType): Boolean = t match {
+    case LongType | IntegerType | ShortType | ByteType => true
     case _ => false
   }
 

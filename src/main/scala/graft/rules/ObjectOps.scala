@@ -499,11 +499,11 @@ object ObjectOps {
             val rTagged = Absentable.valueType(rf).isDefined
             val ce = (lv.tpe, rv.tpe) match {
               case (_: StructType, _: StructType) if deep => mergeStructs(lv, rv, deep = true)
-              case (lt, rt) if lt == rt =>
-                CE(when(!rv.missing, rv.value).otherwise(lv.value), lv.missing && rv.missing, rt)
-              case _ if rTagged =>
-                CE(when(!rv.missing, toVariant(rv)).otherwise(toVariant(lv)),
-                  lv.missing && rv.missing, VariantType)
+              case (lt, rt) if lt == rt || rTagged =>
+                choose(Seq(!rv.missing -> rv), lv, lv.missing && rv.missing)
+              // an untagged right key of another type replaces the left
+              // one and keeps its type: a shallow merge replaces an object
+              // by one of another shape as that object (t17)
               case _ => rv
             }
             member(n, ce, rTagged && Absentable.valueType(lf).isDefined)

@@ -75,12 +75,8 @@ object ScalarOps {
 
     // first non-null, missing skipped (transform.rs:1434-1458)
     Op(Seq("coalesce"), Seq(Other)) { c => import c._
-      val args = allArgs
-      val tpe = args.map(_.tpe).find(_ != NullType).getOrElse(NullType)
-      val v = args.foldRight(lit(null).cast(tpe)) { (e, rest) =>
-        when(!e.missing && !isJsonNull(e), e.value.cast(tpe)).otherwise(rest)
-      }
-      CE(v, lit(false), tpe)
+      choose(allArgs.map(e => (!e.missing && !isJsonNull(e)) -> e), CE.present(lit(null), NullType),
+        missing = lit(false))
     },
 
     Op(Seq("and", "or"), Seq(Logical), bool = true) { c => import c._

@@ -43,15 +43,35 @@ class FixtureCompatSpec extends AnyFunSuite {
     (rule, c.input(spark, rule), context)
   }
 
+  /** The fixture's records through each sink a surface runs, as JSON
+    * text: `toJsonRecords`, the CLI's `toJsonRecordsWithWarnings`, the
+    * endpoint's `toJsonRecordsTraced` and — for a rule without finalize,
+    * which stream mode rejects — the kept lines of `--ndjson`'s
+    * `ndjsonWithWarnings`. Each is run when asked for. JSON-sourced
+    * fixtures: a SQL null in a plain input field is an absent field
+    * (fields that hold explicit nulls ingest tagged, see
+    * ExprCompiler.Absentable). */
+  private def sinks(c: Fixtures.Case): Seq[(String, () => Seq[String])] = {
+    lazy val (rule, input, context) = loadFixture(c)
+    def nullAsMissing = rule.input.format != "csv"
+    def texts(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.getString(0))
+    val finalized = YamlParser.parse(c.read("rules.yaml")).finalizeSpec.nonEmpty
+    Seq(
+      "toJsonRecords" -> (() =>
+        texts(Engine.toJsonRecords(rule, input, context, nullAsMissing, c.loader))),
+      "toJsonRecordsWithWarnings" -> (() =>
+        texts(Engine.toJsonRecordsWithWarnings(rule, input, context, nullAsMissing, c.loader).output)),
+      "toJsonRecordsTraced" -> (() =>
+        Engine.toJsonRecordsTraced(rule, input, context, nullAsMissing, c.loader).output)) ++
+      (if (finalized) Nil else Seq("ndjsonWithWarnings" -> (() =>
+        Engine.ndjsonWithWarnings(rule, input, context, nullAsMissing, c.loader)
+          .collect().toSeq.flatMap(r => Option(r.getString(0))))))
+  }
+
+  /** Every sink's output is the expected output, and the same text as
+    * `toJsonRecords`' (NDJSON lines where the rule has no finalize). */
   private def runFixture(c: Fixtures.Case): Unit = {
-    val name = c.label
-    val (rule, input, context) = loadFixture(c)
-    // JSON-sourced fixtures: a SQL null in a plain input field is an
-    // absent field (fields that hold explicit nulls ingest tagged, see
-    // ExprCompiler.Absentable)
-    val nullAsMissing = rule.input.format != "csv"
-    val got = Engine.toJsonRecords(rule, input, context, nullAsMissing, c.loader)
-      .collect().map(r => mapper.readTree(r.getString(0)))
+    val outputs = sinks(c).map { case (sink, run) => sink -> run() }
     // golden output: expected.json (array / wrapped object) or
     // expected.ndjson (one record per line, the streaming CSV fixtures)
     val expected =
@@ -62,44 +82,48 @@ class FixtureCompatSpec extends AnyFunSuite {
           .filter(_.nonEmpty).foreach(l => arr.add(mapper.readTree(l)))
         arr
       }
-    if (expected.isArray) {
-      assert(got.length == expected.size,
-        s"$name: ${got.length} records, expected ${expected.size}\n got: ${got.mkString("\n")}")
-      got.zipWithIndex.foreach { case (g, i) =>
-        assert(sameJson(g, expected.get(i)),
-          s"$name record $i:\n  got      $g\n  expected ${expected.get(i)}")
+    outputs.foreach { case (sink, texts) =>
+      val name = s"${c.label} $sink"
+      val got = texts.map(mapper.readTree)
+      if (expected.isArray) {
+        assert(got.length == expected.size,
+          s"$name: ${got.length} records, expected ${expected.size}\n got: ${got.mkString("\n")}")
+        got.zipWithIndex.foreach { case (g, i) =>
+          assert(sameJson(g, expected.get(i)),
+            s"$name record $i:\n  got      $g\n  expected ${expected.get(i)}")
+        }
+      } else {
+        // finalize.wrap ⇒ a single wrapped object
+        assert(got.length == 1, s"$name: wrap output should be one object, got ${got.length}")
+        assert(sameJson(got(0), expected),
+          s"$name wrap:\n  got      ${got(0)}\n  expected $expected")
       }
-    } else {
-      // finalize.wrap ⇒ a single wrapped object
-      assert(got.length == 1, s"$name: wrap output should be one object, got ${got.length}")
-      assert(sameJson(got(0), expected),
-        s"$name wrap:\n  got      ${got(0)}\n  expected $expected")
+      assert(texts == outputs.head._2, s"$name: text differs from ${outputs.head._1}'s")
     }
   }
 
-  /** Error fixtures: the transform must fail with the expected
+  /** Error fixtures: every sink must fail with the expected
     * TransformErrorKind and path — either a compile-time RmError (schema-
     * static errors) or a raised executor error recovered from the marker. */
   private def runErrorFixture(c: Fixtures.Case): Unit = {
-    val name = c.label
     val expected = mapper.readTree(c.read("expected_error.json"))
-    val err =
-      try {
-        val (rule, input, context) = loadFixture(c)
-        val nullAsMissing = rule.input.format != "csv"
-        val got = Engine.toJsonRecords(rule, input, context, nullAsMissing, c.loader)
-          .collect()
-        fail(s"$name: expected an error, got ${got.length} records: ${got.mkString(" ")}")
-      } catch {
-        case e: ExprCompiler.RmError => e
-        case e: org.scalatest.exceptions.TestFailedException => throw e
-        case e: Throwable => ExprCompiler.RmError.fromThrowable(e).getOrElse(throw e)
-      }
-    assert(err.kind == expected.get("kind").asText,
-      s"$name: kind ${err.kind} != ${expected.get("kind").asText} (${err.message})")
-    if (expected.has("path") && !expected.get("path").isNull)
-      assert(err.path == expected.get("path").asText,
-        s"$name: path ${err.path} != ${expected.get("path").asText}")
+    sinks(c).foreach { case (sink, run) =>
+      val name = s"${c.label} $sink"
+      val err =
+        try {
+          val got = run()
+          fail(s"$name: expected an error, got ${got.length} records: ${got.mkString(" ")}")
+        } catch {
+          case e: ExprCompiler.RmError => e
+          case e: org.scalatest.exceptions.TestFailedException => throw e
+          case e: Throwable => ExprCompiler.RmError.fromThrowable(e).getOrElse(throw e)
+        }
+      assert(err.kind == expected.get("kind").asText,
+        s"$name: kind ${err.kind} != ${expected.get("kind").asText} (${err.message})")
+      if (expected.has("path") && !expected.get("path").isNull)
+        assert(err.path == expected.get("path").asText,
+          s"$name: path ${err.path} != ${expected.get("path").asText}")
+    }
   }
 
   val fixtures = Seq(
@@ -167,7 +191,8 @@ class FixtureCompatSpec extends AnyFunSuite {
   /** In-repo cases the reference has no fixture of. */
   val inRepoFixtures = Seq("g01_json_object_absent_keys", "g02_json_object_ops_absent_keys",
     "g03_json_pick_absent_keys", "g04_number_to_string_beyond_long", "g05_context_heterogeneous",
-    "g06_json_escaped_keys")
+    "g06_json_escaped_keys", "g07_mixed_type_choices", "g08_branch_mixed_types",
+    "g09_branch_return_objects", "g10_csv_number_fallback")
 
   fixtures.foreach { f =>
     test(s"reference golden fixture: $f") { Fixtures.cases(f).foreach(runFixture) }
@@ -179,11 +204,13 @@ class FixtureCompatSpec extends AnyFunSuite {
     test(s"in-repo golden fixture: $f") { runFixture(Fixtures.inRepo(f)) }
   }
 
-  test("in-repo fixture g06: each record's JSON text is its expected line, byte for byte") {
-    val c = Fixtures.inRepo("g06_json_escaped_keys")
-    val (rule, input, context) = loadFixture(c)
-    val got = Engine.toJsonRecords(rule, input, context, nullAsMissing = true)
-      .collect().map(_.getString(0)).toSeq
-    assert(got == c.read("expected.ndjson").split("\n").toSeq)
+  Seq("g06_json_escaped_keys", "g07_mixed_type_choices").foreach { f =>
+    test(s"in-repo fixture ${f.take(3)}: each record's JSON text is its expected line, byte for byte") {
+      val c = Fixtures.inRepo(f)
+      val (rule, input, context) = loadFixture(c)
+      val got = Engine.toJsonRecords(rule, input, context, nullAsMissing = true)
+        .collect().map(_.getString(0)).toSeq
+      assert(got == c.read("expected.ndjson").split("\n").toSeq)
+    }
   }
 }

@@ -42,6 +42,23 @@ class ObjectOpsSpec extends AnyFunSuite {
     assert(deepNested.getAs[Long]("r") == 30L)
   }
 
+  test("merge: a decimal right key some records lack over an integer keeps each record's number") {
+    // b.k is a tagged field (absent in the second record); where it is
+    // absent the left integer stays, written as the integer it is
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val input = graft.sources.Sources.jsonNode(spark, mapper.readTree(
+      """[{"a":{"k":1},"b":{"k":2.5}},{"a":{"k":3},"b":{}}]"""), Nil)
+    val rule = YamlParser.parse(
+      """version: 2
+        |mappings:
+        |  - target: m
+        |    expr: ["@input.a", merge: ["@input.b"]]
+        |""".stripMargin)
+    val got = Engine.toJsonRecords(rule, input, JNull, nullAsMissing = true)
+      .collect().map(_.getString(0)).toSeq
+    assert(got == Seq("""{"m":{"k":2.5}}""", """{"m":{"k":3}}"""))
+  }
+
   test("pick and omit re-project static fields (t19/t20 shape)") {
     import spark.implicits._
     val input = Seq(Tuple1(1L)).toDF("id")
